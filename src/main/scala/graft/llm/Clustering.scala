@@ -91,7 +91,7 @@ object Clustering {
     * element 1 is the kmeans argmin (first-min tie-break, identical to
     * [[scoresFor]]+array_position) and the first p elements are the p
     * NEAREST centroids — the trained-IVF probe list
-    * ([[Similarity.ivfTrainedTopK]]). */
+    * ([[IvfIndex.Trained]]). */
   private[graft] def scoreStructs(w: Column,
       centroids: IndexedSeq[Array[Double]]): Column =
     array(centroids.zipWithIndex.map { case (c, j) =>
@@ -100,18 +100,32 @@ object Clustering {
         .as("s"), lit(j).as("j"))
     }: _*)
 
+  /** The undersized-training contract of every Lloyd init here (the
+    * k-means coarse quantizer and the PQ codebooks): `k` centroids need
+    * at least `k` distinct seed vectors, so fewer rows fail up front with
+    * a named error — FAISS's refusal — instead of an analysis-time type
+    * error on an empty centroid array deep in the plan. `rows` is the
+    * size of the ≤ k-row init the caller already collected. */
+  private[graft] def requireTrainingRows(rows: Int, k: Int, dim: Int): Unit =
+    if (rows < k) throw new IllegalArgumentException(
+      s"cannot train k=$k centroids of dim=$dim from $rows training " +
+        s"row(s): need at least k=$k vectors of the training dimension")
+
   /** Lloyd's update loop shared by [[kmeansScored]] and [[silhouette]]:
     * deterministic init (the k lowest-id quantized vectors — k rows to
     * the driver, the only data that ever leaves the executors), then
     * `iters`−1 assignment/update rounds. Component sums are exact
     * (dyadic inputs), so map-side partial aggregation order is
     * irrelevant; k×dim rows collect per round. Expects `base` as
-    * (__id, __w-quantized). */
+    * (__id, __w-quantized). Fewer than `k` rows is refused up front
+    * ([[requireTrainingRows]]), counted on the init rows already
+    * collected. */
   private[graft] def trainCentroids(base: DataFrame, k: Int, iters: Int,
                                     dim: Int): IndexedSeq[Array[Double]] = {
     var centroids: IndexedSeq[Array[Double]] =
       base.orderBy(col("__id")).limit(k).collect()
         .map(_.getSeq[Double](1).toArray).toIndexedSeq
+    requireTrainingRows(centroids.length, k, dim)
     // argmin with first-index tie-break via array_position(scores, min) —
     // 1-based, so −1
     def assignCol: Column = {

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables.spread
@@ -60,23 +59,23 @@ object Pq {
     * pins old-vs-new equality on the fixture corpus). The oracle is
     * untouched: it replays the codebook VALUES, which this kernel embeds
     * unchanged. */
-  private def codesCol(vec: Column, m: Int, k: Int, subDim: Int,
-                       cbs: IndexedSeq[IndexedSeq[Array[Double]]]): Column =
+  private[llm] def codesCol(vec: Column,
+      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.PqEncode(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(vec),
-        m, k, subDim, flatCb(cbs)))
+        cbs.length, cbs.head.length, cbs.head.head.length, flatCb(cbs)))
 
   /** Encode + reconstruct fused ([[graft.functions.PqEncodeRecon]]) —
     * the ADC corpus side scores against this m·subDim concatenation and
     * never needs the intermediate codes array. Same codes as
     * [[codesCol]], same codeword doubles as [[reconCol]]. */
-  private def encodeReconCol(vec: Column, m: Int, k: Int, subDim: Int,
+  private[llm] def encodeReconCol(vec: Column,
       cbs: IndexedSeq[IndexedSeq[Array[Double]]]): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.PqEncodeRecon(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(vec),
-        m, k, subDim, flatCb(cbs)))
+        cbs.length, cbs.head.length, cbs.head.head.length, flatCb(cbs)))
 
   /** ‖v‖² as the exact sequential left-fold both engines' dot uses. */
   private[graft] def selfDot(v: Array[Double]): Double = {
@@ -100,7 +99,7 @@ object Pq {
     require(m > 0 && k > 1 && subDim > 0, s"m=$m k=$k subDim=$subDim")
     spread(df).filter(size(col(vecCol)) >= m * subDim)
       .select(col(idCol),
-        codesCol(col(vecCol), m, k, subDim, cbs).as("codes"))
+        codesCol(col(vecCol), cbs).as("codes"))
   }
 
   /** Per-subspace Lloyd-trained codebooks — the REAL quantizer (the
@@ -147,10 +146,13 @@ object Pq {
     val base = spread(df).filter(size(col(vecCol)) >= m * subDim)
       .select(col(idCol).as("__id"),
         Clustering.quantize(col(vecCol)).as("__w"))
-    // init: the k lowest-id vectors' subvectors, per subspace
+    // init: the k lowest-id vectors' subvectors, per subspace; fewer
+    // than k vectors cannot seed k codewords (FAISS's refusal), and the
+    // count comes from the init rows already collected — no extra job
     var cbs: IndexedSeq[IndexedSeq[Array[Double]]] = {
       val first = base.orderBy(col("__id")).limit(k).collect()
         .map(_.getSeq[Double](1).toArray)
+      Clustering.requireTrainingRows(first.length, k, m * subDim)
       (0 until m).map(j => first.toIndexedSeq.map(
         _.slice(j * subDim, (j + 1) * subDim)))
     }
@@ -172,7 +174,7 @@ object Pq {
       // exact-length vectors every current caller passes, slice is the
       // identity, so sums are bit-identical).
       val sums = base
-        .select(codesCol(col("__w"), m, k, subDim, cbs).as("__codes"),
+        .select(codesCol(col("__w"), cbs).as("__codes"),
           posexplode(slice(col("__w"), 1, m * subDim)))
         .select(
           (col("pos") / lit(subDim)).cast("int").as("__j"),
@@ -205,24 +207,17 @@ object Pq {
     * subvectors score against the corpus' RECONSTRUCTED vectors
     * (codeword concatenation), ranked by squared L2 distance. The
     * per-query constant ‖q‖² is dropped (it cannot reorder one query's
-    * ranking), leaving `dot(recon,recon) − 2·dot(q,recon)` — two
-    * sequential-fold dots on literal-derived doubles, bit-identical in
-    * any IEEE engine; ties break on neighbor id.
+    * ranking), leaving [[l2Score]] — two sequential-fold dots on
+    * literal-derived doubles, bit-identical in any IEEE engine; ties
+    * break on neighbor id.
     *
     * Scale shape: the corpus side is a map-only encode+reconstruct scan
     * (no shuffle); queries broadcast and the per-query top-k is a rank
     * window over the blocked pairs — the [[Similarity.bruteForceTopK]]
     * posture. At 100 TB the production composition is IVF-then-PQ
-    * ([[Similarity.ivfTopK]]'s coarse quantizer bucketing this scan down
-    * to `probes/m` of the corpus); the ADC kernel is unchanged there. */
-  /** Codeword reconstruction of an encoded vector — the m·subDim array
-    * ADC scores against. Literal-derived doubles throughout. */
-  private def reconCol(codes: Column, m: Int,
-                       cbs: IndexedSeq[IndexedSeq[Array[Double]]]): Column =
-    flatten(array((0 until m).map { j =>
-      element_at(typedlit(cbs(j).map(_.toSeq)), element_at(codes, j + 1) + 1)
-    }: _*))
-
+    * ([[IvfIndex]] with a [[IvfIndex.SeededPq]] or
+    * [[IvfIndex.ResidualPq]] codec: the coarse quantizer buckets this
+    * scan down to the probed cells); the ADC kernel is unchanged there. */
   def adcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, topK: Int, m: Int, k: Int, subDim: Int,
               seed: Long = Similarity.DefaultSeed): DataFrame =
@@ -234,26 +229,37 @@ object Pq {
                   vecCol: String, topK: Int, subDim: Int,
                   cbs: IndexedSeq[IndexedSeq[Array[Double]]]): DataFrame = {
     require(topK > 0, s"topK=$topK")
-    val m = cbs.length
-    val k = cbs.head.length
-    val recon = encodeReconCol(col(vecCol), m, k, subDim, cbs)
-    val enc = spread(corpus).filter(size(col(vecCol)) >= m * subDim)
-      .select(col(idCol).as("neighbor_id"), recon.as("__recon"))
-    val q = queries.filter(size(col(vecCol)) >= m * subDim)
+    val enc = spread(corpus).filter(size(col(vecCol)) >= cbs.length * subDim)
+      .select(col(idCol).as("neighbor_id"),
+        encodeReconCol(col(vecCol), cbs).as("__recon"))
+    val q = queries.filter(size(col(vecCol)) >= cbs.length * subDim)
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("__qv"))
-    val scored = enc.join(broadcast(q),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("__d",
-        Similarity.dot(col("__recon"), col("__recon")) -
-          lit(2.0) * Similarity.dot(col("__qv"), col("__recon")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    rankAsc(enc.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+      .withColumn("__d", l2Score(col("__recon"), col("__qv"))), topK)
+  }
+
+  /** Codeword reconstruction of stored codes — the m·subDim array ADC
+    * scores against. Literal-derived doubles throughout. */
+  private[llm] def reconCol(codes: Column,
+      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): Column =
+    flatten(array(cbs.indices.map { j =>
+      element_at(typedlit(cbs(j).map(_.toSeq)), element_at(codes, j + 1) + 1)
+    }: _*))
+
+  /** Squared L2 from `q` to `x` with ‖q‖² dropped:
+    * dot(x,x) − 2·dot(q,x), the idiom every L2 ranking here shares. */
+  private[llm] def l2Score(x: Column, q: Column): Column =
+    Similarity.dot(x, x) - lit(2.0) * Similarity.dot(q, x)
+
+  /** The shared per-query ascending-distance rank window (ties on
+    * neighbor id) — one copy for every L2 finisher. Expects
+    * (query_id, neighbor_id, __d); emits (query_id, rank: long,
+    * neighbor_id). */
+  private[llm] def rankAsc(scored: DataFrame, topK: Int): DataFrame =
+    Similarity.rankWithin(scored, topK, col("__d"))
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"))
-  }
 
   /** [[encode]] with the codebooks as a TABLE instead of plan literals —
     * the trained-model path for codebook sets too large to inline (the
@@ -290,9 +296,7 @@ object Pq {
       .select(col(idCol), col("pos").as("__j"), col("col").as("__sub"))
     val scored = subs.join(cb, Seq("__j"))
       .select(col(idCol), col("__j"),
-        struct(
-          (Similarity.dot(col("__cw"), col("__cw")) -
-            lit(2.0) * Similarity.dot(col("__sub"), col("__cw"))).as("s"),
+        struct(l2Score(col("__cw"), col("__sub")).as("s"),
           col("__c").as("c")).as("__sc"))
       .groupBy(col(idCol), col("__j"))
       .agg(min(col("__sc")).getField("c").as("__code"))
@@ -303,12 +307,13 @@ object Pq {
         transform(col("__jc"), e => e.getField("__code")).as("codes"))
   }
 
-  /** Exact squared-L2 top-k — the ground truth [[adcTopK]]/[[ivfAdcTopK]]
-    * approximate, for recall measurement ([[Similarity.recallAtK]] on a
-    * query sample is what sizes m/k/probes for a corpus, the same
-    * measure-don't-guess loop as `ann_recall_eval`). Same comparison
-    * idiom on the RAW vectors (‖q‖² dropped), so the three rankings are
-    * mutually comparable. Corpus never shuffles; queries broadcast. */
+  /** Exact squared-L2 top-k — the ground truth [[adcTopK]] and the
+    * IVF+PQ paths approximate, for recall measurement
+    * ([[Similarity.recallAtK]] on a query sample is what sizes m/k/probes
+    * for a corpus, the same measure-don't-guess loop as
+    * `ann_recall_eval`). Same comparison idiom on the RAW vectors (‖q‖²
+    * dropped), so the rankings are mutually comparable. Corpus never
+    * shuffles; queries broadcast. */
   def exactL2TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                   vecCol: String, topK: Int): DataFrame = {
     require(topK > 0, s"topK=$topK")
@@ -316,536 +321,7 @@ object Pq {
       col(vecCol).cast("array<double>").as("__cv"))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("__qv"))
-    val scored = c.join(broadcast(q),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("__d",
-        Similarity.dot(col("__cv"), col("__cv")) -
-          lit(2.0) * Similarity.dot(col("__qv"), col("__cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"))
-  }
-
-  /** IVF-then-PQ — the FAISS `IVFx,PQy` architecture and the actual
-    * billion-vector serving shape: [[Similarity.axisCells]]' coarse
-    * quantizer prunes the scan to the query's `probes` cells, and the
-    * ADC kernel ranks only within them. Same determinism argument as
-    * [[adcTopK]] (cell selection compares exact doubles; scores are
-    * sequential-fold dots on literal-derived values).
-    *
-    * Scale shape: the corpus is bucketed by its ONE home cell at write
-    * time (partition/bucket by `cell` — a query batch then reads only
-    * probed buckets); queries broadcast with `probes` rows each. Nothing
-    * here is query×corpus: the join is an equi-join on `cell`, cutting
-    * ADC work to ~probes/cells of the corpus, and swapping the axis
-    * cells for trained k-means centroids changes one expression. */
-  def ivfAdcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, topK: Int, m: Int, k: Int, subDim: Int,
-                 cellsM: Int = 4, probes: Int = 2,
-                 seed: Long = Similarity.DefaultSeed): DataFrame = {
-    require(topK > 0, s"topK=$topK")
-    require(probes >= 1 && probes <= 2, s"probes=$probes not in 1..2")
-    val cbs = codebooks(m, k, subDim, seed)
-    val (cw, cr) = Similarity.axisCells(col(vecCol), cellsM)
-    val okLen = size(col(vecCol)) >= math.max(m * subDim, cellsM)
-    val enc = spread(corpus).filter(okLen)
-      .select(col(idCol).as("neighbor_id"), cw.as("cell"),
-        encodeReconCol(col(vecCol), m, k, subDim, cbs).as("__recon"))
-    val q = queries.filter(okLen)
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("__qv"),
-        explode(array(Seq(cw, cr).take(probes): _*)).as("cell"))
-    cellAdcRank(enc, q, topK)
-  }
-
-  /** The shared cell-join ADC ranker behind both IVF+PQ variants — ONE
-    * copy of the join/self-exclusion/distance/window body, so the axis
-    * and trained coarse quantizers can never diverge on scoring or
-    * tie-break semantics. `enc` carries (neighbor_id, cell, __recon);
-    * `q` carries (query_id, __qv, cell) and broadcasts (sampled query
-    * sets — the eval posture of both callers). */
-  private def cellAdcRank(enc: DataFrame, q: DataFrame,
-                          topK: Int): DataFrame =
-    rankAsc(enc.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__d",
-        Similarity.dot(col("__recon"), col("__recon")) -
-          lit(2.0) * Similarity.dot(col("__qv"), col("__recon"))),
-      topK)
-
-  /** The shared per-query ascending-distance rank window (ties on
-    * neighbor id) — one copy for every ADC variant's finisher. Expects
-    * (query_id, neighbor_id, __d). */
-  private def rankAsc(scored: DataFrame, topK: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"))
-  }
-
-  /** [[ivfAdcTopK]] with the TRAINED coarse quantizer — the sentence in
-    * that scaladoc ("swapping the axis cells for trained k-means
-    * centroids changes one expression") made code: cells come from
-    * [[Similarity.trainIvfCentroids]]' kmeans (the `ann_ivft_*`
-    * family), so probes rank by real quantizer distance and `probes`
-    * is a free knob up to the cell count — this is FAISS `IVFx,PQy`
-    * with both stages as they're actually deployed (trained coarse
-    * cells pruning the scan, PQ codes ranking within). Same ADC
-    * determinism as [[adcTopK]]; the kmeans len-== dim universe
-    * applies to both sides (training, cells and probes share it). */
-  def ivfAdcTopKTrained(corpus: DataFrame, queries: DataFrame,
-                        idCol: String, vecCol: String, topK: Int,
-                        m: Int, k: Int, subDim: Int,
-                        centroids: IndexedSeq[Array[Double]],
-                        probes: Int, dim: Int,
-                        seed: Long = Similarity.DefaultSeed): DataFrame = {
-    require(topK > 0, s"topK=$topK")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    require(dim >= m * subDim,
-      s"dim=$dim shorter than the $m×$subDim PQ layout")
-    val cbs = codebooks(m, k, subDim, seed)
-    val okLen = size(col(vecCol)) === dim
-    val enc = spread(corpus).filter(okLen)
-      .select(col(idCol).as("neighbor_id"),
-        element_at(
-          Similarity.trainedProbeCells(col(vecCol), centroids, 1), 1)
-          .as("cell"),
-        encodeReconCol(col(vecCol), m, k, subDim, cbs).as("__recon"))
-    val q = queries.filter(okLen)
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("__qv"),
-        explode(Similarity.trainedProbeCells(col(vecCol), centroids,
-          probes)).as("cell"))
-    cellAdcRank(enc, q, topK)
-  }
-
-  // ------------------------------------- trained RESIDUAL IVF+PQ (full)
-
-  /** Each vector's residual against its assigned trained cell —
-    * `__res = quantize(quantize(v) − centroid[cell])` — plus the cell
-    * itself: the frame both residual-PQ training and encoding run on.
-    * Row-local throughout (centroids are plan literals; zip_with
-    * subtraction is one IEEE op per component; the re-quantize snaps
-    * the residual back onto the dyadic 2⁻²⁰ grid so training's
-    * component sums stay EXACT and order-free — the [[Clustering]]
-    * discipline). Map-only: no shuffle; recomputed from the scan per
-    * action by default. `private[graft]` so an eval-suite caller that
-    * derives MANY consumers from the identical frame (every Lloyd
-    * round, the m/k grid, the ten residual-family rows) can materialize
-    * it once and share it (r18, guide §1.2) — at full corpus scale a
-    * checkpointed full-width residual copy is the bigger cost, so the
-    * one-consumer serving paths keep the recompute posture. */
-  private[graft] def residualFrame(df: DataFrame, idCol: String,
-      vecCol: String,
-      centroids: IndexedSeq[Array[Double]], dim: Int): DataFrame = {
-    val centLit = typedlit(centroids.map(_.toSeq))
-    spread(df).filter(size(col(vecCol)) === dim)
-      .select(col(idCol),
-        Clustering.quantize(col(vecCol)).as("__w"),
-        element_at(
-          Similarity.trainedProbeCells(col(vecCol), centroids, 1), 1)
-          .as("cell"))
-      .withColumn("__res", Clustering.quantize(zip_with(col("__w"),
-        element_at(centLit, col("cell") + 1), (a, b) => a - b)))
-      .drop("__w")
-  }
-
-  /** Train the per-subspace codebooks on CELL RESIDUALS (v −
-    * centroid[cell]) — the fine quantizer of the deployed FAISS
-    * `IVFx,PQy` (Jégou et al. 2011 §IV: PQ encodes the residual of the
-    * coarse quantizer, not the raw vector, because residuals have far
-    * lower variance than vectors — the same codebook budget buys a much
-    * finer grid). One codebook set is shared across cells (the FAISS
-    * default). Same determinism as [[trainCodebooks]]: residuals are
-    * dyadic-grid values, so every training sum is exact and the oracle
-    * replays the round bit for bit. */
-  def trainResidualCodebooks(corpus: DataFrame, idCol: String,
-      vecCol: String, centroids: IndexedSeq[Array[Double]],
-      m: Int, k: Int, subDim: Int, dim: Int,
-      iters: Int = 1): IndexedSeq[IndexedSeq[Array[Double]]] = {
-    require(dim == m * subDim,
-      s"residual PQ must cover the vector: dim=$dim != $m×$subDim")
-    trainCodebooks(residualFrame(corpus, idCol, vecCol, centroids, dim),
-      idCol, "__res", m, k, subDim, iters)
-  }
-
-  /** [[trainResidualCodebooks]] at several training depths from ONE
-    * Lloyd run ([[trainCodebooksSnapshots]] — nesting makes each
-    * snapshot bit-identical to an independent run at that depth). */
-  def trainResidualCodebooksSnapshots(corpus: DataFrame, idCol: String,
-      vecCol: String, centroids: IndexedSeq[Array[Double]],
-      m: Int, k: Int, subDim: Int, dim: Int, snapshots: Seq[Int])
-      : Map[Int, IndexedSeq[IndexedSeq[Array[Double]]]] = {
-    require(dim == m * subDim,
-      s"residual PQ must cover the vector: dim=$dim != $m×$subDim")
-    trainCodebooksSnapshots(
-      residualFrame(corpus, idCol, vecCol, centroids, dim),
-      idCol, "__res", m, k, subDim, snapshots)
-  }
-
-  /** The FULL FAISS `IVFx,PQy`: trained coarse cells prune the scan,
-    * trained codebooks encode RESIDUALS (v − centroid[cell]), and ADC
-    * ranks within the probed cells. Against [[ivfAdcTopKTrained]] (the
-    * seeded-raw fine stage) this is the step the recall measurement
-    * demanded — on the fixture the seeded quantizer dominated the loss.
-    *
-    * The distance keeps the per-(query, cell) ‖q − c‖² term:
-    * `d = dot(recon,recon) − 2·dot(qr,recon) + dot(qr,qr)` where
-    * `qr = quantize(quantize(q) − centroid[cell])`. Unlike the raw-ADC
-    * variants the third term CANNOT be dropped — a query probing p > 1
-    * cells has a different residual in each, so the "constant per
-    * query" argument no longer holds; dropping it would misorder
-    * candidates ACROSS cells. All three terms are sequential-fold dots
-    * on dyadic/literal-derived doubles — engine-exact.
-    *
-    * Scale shape unchanged from [[ivfAdcTopKTrained]]: corpus side is
-    * one map-only residual-encode scan, queries broadcast with `probes`
-    * rows each, the join is cell-equi. Training adds `iters` bounded
-    * aggregation passes (m·k·subDim doubles to the driver per pass). */
-  def ivfPqResidualTopKWith(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, subDim: Int,
-      centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      probes: Int, dim: Int): DataFrame =
-    ivfPqResidualTopKOn(
-      residualFrame(corpus, idCol, vecCol, centroids, dim),
-      queries, idCol, vecCol, topK, subDim, centroids, cbs, probes, dim)
-
-  /** [[ivfPqResidualTopKWith]] over a PRE-COMPUTED residual frame in
-    * [[residualFrame]]'s exact shape (idCol, cell, __res) — the r18
-    * sharing hook (guide §1.2): ten eval rows and every Lloyd round
-    * derive the identical (quantize → cell-assign → residual) frame
-    * from the same corpus/centroids, so a caller can materialize it
-    * once (localCheckpoint) and feed every consumer. The residual
-    * values are what they are regardless of where they were computed,
-    * so results are bit-identical to the corpus-scan path (LlmSpec
-    * pins it). */
-  def ivfPqResidualTopKOn(res: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, subDim: Int,
-      centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      probes: Int, dim: Int): DataFrame = {
-    val m = cbs.length
-    val k = cbs.head.length
-    require(topK > 0, s"topK=$topK")
-    require(dim == m * subDim,
-      s"residual PQ must cover the vector: dim=$dim != $m×$subDim")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    val centLit = typedlit(centroids.map(_.toSeq))
-    val enc = res.select(col(idCol).as("neighbor_id"), col("cell"),
-      encodeReconCol(col("__res"), m, k, subDim, cbs).as("__recon"))
-    val q = queries.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("query_id"),
-        Clustering.quantize(col(vecCol)).as("__qw"),
-        explode(Similarity.trainedProbeCells(col(vecCol), centroids,
-          probes)).as("cell"))
-      .withColumn("__qr", Clustering.quantize(zip_with(col("__qw"),
-        element_at(centLit, col("cell") + 1), (a, b) => a - b)))
-      .drop("__qw")
-    val scored = enc.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__d",
-        Similarity.dot(col("__recon"), col("__recon")) -
-          lit(2.0) * Similarity.dot(col("__qr"), col("__recon")) +
-          Similarity.dot(col("__qr"), col("__qr")))
-    rankAsc(scored, topK)
-  }
-
-  /** [[ivfPqResidualTopKWith]] with the codebooks trained in place —
-    * the one-call form for ad-hoc use; serving paths share the trained
-    * books across queries instead (the `ann_ivfpqt2_*` memoization). */
-  def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, m: Int, k: Int,
-      subDim: Int, centroids: IndexedSeq[Array[Double]],
-      probes: Int, dim: Int, trainIters: Int = 1): DataFrame =
-    ivfPqResidualTopKWith(corpus, queries, idCol, vecCol, topK, subDim,
-      centroids,
-      trainResidualCodebooks(corpus, idCol, vecCol, centroids, m, k,
-        subDim, dim, trainIters),
-      probes, dim)
-
-  /** The deployed serving COMPOSITION (FAISS `IVFx,PQy,RFlat`): trained
-    * cells prune the scan, residual codes shortlist `candK` candidates
-    * per query, and an EXACT-L2 refine re-ranks ONLY the shortlist down
-    * to `topK` — the float kernel touches |queries|·candK rows, never
-    * the corpus (the [[Similarity.hammingRerankTopK]] posture in the PQ
-    * regime). This is how a compressed index actually serves at high
-    * recall: the codes' quantization loss caps their own top-k ordering
-    * (the `ann_ivfpqt2_probes` plateau), and the refine stage buys it
-    * back at shortlist-bounded cost. ‖q‖² is dropped in the refine
-    * distance — constant per query here, since refine ranks WITHIN one
-    * query's shortlist. Same determinism discipline throughout. */
-  def ivfPqRefineTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, candK: Int, subDim: Int,
-      centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      probes: Int, dim: Int): DataFrame = {
-    require(candK >= topK && topK >= 1,
-      s"need candK=$candK >= topK=$topK >= 1")
-    val cand = ivfPqResidualTopKWith(corpus, queries, idCol, vecCol,
-      candK, subDim, centroids, cbs, probes, dim)
-    refineShortlist(cand, corpus, queries, idCol, vecCol, topK, dim)
-  }
-
-  /** [[ivfPqRefineTopK]] with the shortlist stage fed from a
-    * pre-computed residual frame ([[ivfPqResidualTopKOn]]); the exact
-    * refine still reads the FLOAT corpus — that is the point of the
-    * composition. Bit-identical rows. */
-  def ivfPqRefineTopKOn(res: DataFrame, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String,
-      topK: Int, candK: Int, subDim: Int,
-      centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      probes: Int, dim: Int): DataFrame = {
-    require(candK >= topK && topK >= 1,
-      s"need candK=$candK >= topK=$topK >= 1")
-    val cand = ivfPqResidualTopKOn(res, queries, idCol, vecCol,
-      candK, subDim, centroids, cbs, probes, dim)
-    refineShortlist(cand, corpus, queries, idCol, vecCol, topK, dim)
-  }
-
-  /** The exact-L2 refine finisher shared by both `RFlat` variants (the
-    * unmaterialized [[ivfPqRefineTopK]] and the cold
-    * [[ivfPqRefineTopKIndexed]] — one copy, so the two cannot diverge
-    * on refine semantics): the shortlist equi-joins back to corpus
-    * vectors on neighbor_id, queries broadcast, and the exact kernel
-    * touches |Q|·candK rows, never the corpus scan. ‖q‖² dropped —
-    * constant per query, since refine ranks within one query's
-    * shortlist.
-    *
-    * PUBLIC because the shortlist is a legitimate caller input: the
-    * codes ranking is deterministic, so its top-ck prefix IS the
-    * candK=ck shortlist — a refine-depth sweep (`ann_ivfpq_candk`)
-    * ranks ONCE at the deepest candK and refines each leg from a
-    * `rank <= ck` filter of the same frame, paying one ADC scan
-    * instead of one per leg. `cand` needs `query_id`/`neighbor_id`
-    * columns (extra columns are ignored). */
-  def refineShortlist(cand: DataFrame, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String,
-      topK: Int, dim: Int): DataFrame = {
-    val okLen = size(col(vecCol)) === dim
-    val cv = spread(corpus).filter(okLen)
-      .select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("__cv"))
-    val qv = queries.filter(okLen)
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("__qv"))
-    val scored = cand.select(col("query_id"), col("neighbor_id"))
-      .join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("__d",
-        Similarity.dot(col("__cv"), col("__cv")) -
-          lit(2.0) * Similarity.dot(col("__qv"), col("__cv")))
-    rankAsc(scored, topK)
-  }
-
-  /** The COLD deployed composition end to end — FAISS `IVFx,PQy,RFlat`
-    * served FROM the [[writeIvfPqIndex]] store: the shortlist comes
-    * from the compressed codes behind a `PartitionFilters` probe
-    * ([[ivfPqTopKIndexed]] — both quantizers from the store's own
-    * sidecars), and ONLY the |Q|·candK shortlist rows touch the float
-    * corpus (the id-equi-join in [[refineShortlist]]). This is the
-    * production read path of a compressed index at high recall: the
-    * page-cache-resident code store prunes and shortlists; the float
-    * vectors are read per-candidate, never scanned. Row-identical to
-    * [[ivfPqRefineTopK]] on the same corpus/quantizers (the code
-    * shortlist is row-identical by the store contract; the refine
-    * finisher is the same copy). */
-  def ivfPqRefineTopKIndexed(indexed: DataFrame, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String,
-      topK: Int, candK: Int, subDim: Int,
-      centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      probes: Int, dim: Int): DataFrame = {
-    require(candK >= topK && topK >= 1,
-      s"need candK=$candK >= topK=$topK >= 1")
-    val cand = ivfPqTopKIndexed(indexed, queries, idCol, vecCol,
-      candK, subDim, centroids, cbs, probes, dim)
-    refineShortlist(cand, corpus, queries, idCol, vecCol, topK, dim)
-  }
-
-  /** Materialize the COMPRESSED serving artifact FAISS actually ships:
-    * (neighbor_id, codes) written PARTITIONED BY the trained cell —
-    * m code bytes per vector instead of dim floats (8 vs 512 here, the
-    * RAM-bound index shape), probe reads partition-pruned exactly like
-    * [[Similarity.writeIvfTrainedIndex]]'s float store. Self-describing
-    * like that store: the coarse quantizer rides as the `_quantizer/`
-    * sidecar and the fine codebooks as `_codebooks/`, so a cold session
-    * reconstructs and ranks without retraining EITHER stage
-    * ([[loadPqCodebooks]] + [[Similarity.loadIvfQuantizer]] +
-    * [[ivfPqTopKIndexed]]). One map-only encode pass; the write
-    * shuffles nothing. */
-  def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]], subDim: Int,
-      dim: Int): Unit =
-    writeIvfPqIndexOn(residualFrame(corpus, idCol, vecCol, centroids, dim),
-      idCol, path, centroids, cbs, subDim, dim)
-
-  /** [[writeIvfPqIndex]] from a pre-computed residual frame
-    * ([[residualFrame]] shape) — same store bytes, one less corpus
-    * scan when the caller already materialized the residuals. */
-  def writeIvfPqIndexOn(res: DataFrame, idCol: String,
-      path: String, centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]], subDim: Int,
-      dim: Int): Unit = {
-    val m = cbs.length
-    val k = cbs.head.length
-    require(dim == m * subDim,
-      s"residual PQ must cover the vector: dim=$dim != $m×$subDim")
-    res
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        codesCol(col("__res"), m, k, subDim, cbs).as("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    // AFTER the store write: overwrite mode clears the root directory.
-    // Crash between the two commits leaves a sidecar-less store — an
-    // interrupted write, not corruption; see writeIvfQuantizer's
-    // crash-window note (loaders fail loudly; re-run the write).
-    Similarity.writeIvfQuantizer(res.sparkSession, path, centroids)
-    writePqCodebooks(res.sparkSession, path, cbs)
-  }
-
-  /** Persist the fine codebooks as the `_codebooks/` parquet sidecar —
-    * (subspace, code, codeword) rows, hidden from store reads by the
-    * leading underscore (the [[Similarity.writeIvfQuantizer]]
-    * convention). m·k·subDim doubles; parquet round-trips them
-    * bit-exactly. */
-  def writePqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): Unit = {
-    import spark.implicits._
-    (for { (book, j) <- cbs.zipWithIndex; (cw, c) <- book.zipWithIndex }
-      yield (j, c, cw.toSeq))
-      .toDF("subspace", "code", "codeword")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "/_codebooks")
-  }
-
-  /** Rehydrate the [[writePqCodebooks]] sidecar — the cold-session
-    * loader for the compressed store's fine stage. Validates the
-    * (subspace, code) grid is complete and contiguous: a damaged
-    * sidecar must fail loudly, not silently mis-reconstruct. */
-  def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): IndexedSeq[IndexedSeq[Array[Double]]] = {
-    Similarity.requireSidecar(spark, path, "_codebooks")
-    val rows = spark.read.parquet(path + "/_codebooks")
-      .select(col("subspace").cast("int"), col("code").cast("int"),
-        col("codeword"))
-      .orderBy("subspace", "code").collect()
-    require(rows.nonEmpty, s"empty codebook sidecar at $path/_codebooks")
-    val m = rows.last.getInt(0) + 1
-    val k = rows.last.getInt(1) + 1
-    require(rows.length == m * k,
-      s"codebook sidecar at $path is not a full $m×$k grid " +
-        s"(${rows.length} rows)")
-    rows.zipWithIndex.foreach { case (r, i) =>
-      require(r.getInt(0) == i / k && r.getInt(1) == i % k,
-        s"codebook sidecar at $path is not contiguous at row $i")
-    }
-    // width check (r14 advice): a damaged sidecar whose codeword arrays
-    // have the wrong or inconsistent length would pass the grid check
-    // and then silently reconstruct vectors of the wrong dimension —
-    // mis-ranking instead of failing loudly. All m·k codewords must
-    // share one subDim; callers verify m·subDim == dim against their
-    // own layout.
-    val subDim = rows.head.getSeq[Double](2).length
-    require(subDim > 0, s"codebook sidecar at $path has empty codewords")
-    rows.zipWithIndex.foreach { case (r, i) =>
-      require(r.getSeq[Double](2).length == subDim,
-        s"codebook sidecar at $path has inconsistent codeword widths: " +
-          s"row $i is ${r.getSeq[Double](2).length}-dim, expected $subDim")
-    }
-    rows.map(_.getSeq[Double](2).toArray).grouped(k)
-      .map(_.toIndexedSeq).toIndexedSeq
-  }
-
-  /** [[Similarity.ivfAppendRows]] for the COMPRESSED code store: the
-    * append frame in [[writeIvfPqIndex]]'s exact row shape
-    * (neighbor_id, cell, codes), with BOTH stages bound to the TARGET
-    * store's own sidecars — the coarse cells from `_quantizer/` (via
-    * the shared [[Similarity.boundQuantizer]] preamble, same loud
-    * refusal of a conflicting caller quantizer) and the residual
-    * fine-encode from `_codebooks/`. A streamer must never encode with
-    * retrained codebooks against an existing store: the cells would
-    * still be right but the CODES would decode against the store's
-    * books to wrong reconstructions — silent mis-ranking, no error —
-    * so the codebooks are not even a parameter here. Map-only
-    * (residual + argmin per subspace are row-local); streaming or
-    * batch frames both work, `foreachBatch { _.write.mode("append")
-    * .partitionBy("cell").parquet(store) }` completes the recipe. */
-  def ivfPqAppendRows(df: DataFrame, idCol: String, vecCol: String,
-                      storePath: String, dim: Int,
-                      expected: Option[IndexedSeq[Array[Double]]] = None)
-      : DataFrame = {
-    val cents = Similarity.boundQuantizer(df, storePath, dim, expected)
-    val cbs = loadPqCodebooks(df.sparkSession, storePath)
-    val m = cbs.length
-    val k = cbs.head.length
-    val subDim = cbs.head.head.length
-    require(m * subDim == dim,
-      s"codebook sidecar at $storePath is $m×$k×$subDim " +
-        s"(covers ${m * subDim} dims) but the store holds $dim-dim " +
-        "vectors — wrong or damaged _codebooks sidecar?")
-    residualFrame(df, idCol, vecCol, cents, dim)
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        codesCol(col("__res"), m, k, subDim, cbs).as("codes"))
-  }
-
-  /** [[ivfPqResidualTopKWith]] served from a [[writeIvfPqIndex]] store:
-    * the probed cells arrive as a LITERAL IN-list → `PartitionFilters`
-    * on the code scan (the [[Similarity.probedStore]] preamble — probe
-    * collect bounded by the cell domain), reconstruction happens from
-    * the stored CODES against the plan-literal codebooks (the scan
-    * reads m small ints per candidate, never a float vector), and the
-    * three-term residual ADC ranks within. Row-identical to the
-    * unmaterialized path on the same corpus/quantizers
-    * (`ann_ivfpqt_indexed` shares `ann_ivfpqt2_topk`'s oracle).
-    * Hint-free join (AQE sizes the probe batch), EAGER at construction
-    * like the other `*TopKIndexed` paths. */
-  def ivfPqTopKIndexed(indexed: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, topK: Int, subDim: Int,
-      centroids: IndexedSeq[Array[Double]],
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      probes: Int, dim: Int): DataFrame = {
-    val m = cbs.length
-    require(topK > 0, s"topK=$topK")
-    require(dim == m * subDim,
-      s"residual PQ must cover the vector: dim=$dim != $m×$subDim")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    // sidecar-vs-layout guards (loaders pin width UNIFORMITY; the match
-    // against THIS store's declared layout happens here, where dim is known)
-    require(cbs.head.head.length == subDim,
-      s"codebooks are ${cbs.head.head.length}-dim but the layout says " +
-        s"subDim=$subDim — wrong or damaged _codebooks sidecar?")
-    require(centroids.head.length == dim,
-      s"centroids are ${centroids.head.length}-dim but the layout says " +
-        s"dim=$dim — wrong or damaged _quantizer sidecar?")
-    val centLit = typedlit(centroids.map(_.toSeq))
-    val q0 = queries.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("query_id"),
-        Clustering.quantize(col(vecCol)).as("__qw"),
-        explode(Similarity.trainedProbeCells(col(vecCol), centroids,
-          probes)).as("cell"))
-      .withColumn("__qr", Clustering.quantize(zip_with(col("__qw"),
-        element_at(centLit, col("cell") + 1), (a, b) => a - b)))
-      .drop("__qw")
-    val (q, c) = Similarity.probedStore(indexed, q0, "cell")
-    val enc = c.select(col("neighbor_id"), col("cell"),
-      reconCol(col("codes"), m, cbs).as("__recon"))
-    val scored = enc.join(q, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__d",
-        Similarity.dot(col("__recon"), col("__recon")) -
-          lit(2.0) * Similarity.dot(col("__qr"), col("__recon")) +
-          Similarity.dot(col("__qr"), col("__qr")))
-    rankAsc(scored, topK)
+    rankAsc(c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+      .withColumn("__d", l2Score(col("__cv"), col("__qv"))), topK)
   }
 }

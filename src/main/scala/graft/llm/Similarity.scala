@@ -58,16 +58,36 @@ object Similarity {
       normalize(col(vecCol)).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       normalize(col(vecCol)).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
+    rankDesc(c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", dot(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+      .withColumn("score", dot(col("qv"), col("cv"))), k, roundScore)
+  }
+
+  /** The per-query top-`k` window every ranked ANN output shares: rank by
+    * `order`, ties on neighbor id (deterministic), keep rank ≤ k. Expects
+    * (query_id, neighbor_id, …); adds `rank`. */
+  private[llm] def rankWithin(scored: DataFrame, k: Int,
+                              order: Column): DataFrame =
+    scored.withColumn("rank", row_number().over(Window
+        .partitionBy(col("query_id")).orderBy(order, col("neighbor_id"))))
       .filter(col("rank") <= k)
+
+  /** [[rankWithin]] by cosine `score` descending, emitting the cosine
+    * contract (query_id, rank, neighbor_id, score rounded to
+    * `roundScore`). */
+  private[llm] def rankDesc(scored: DataFrame, k: Int,
+                            roundScore: Int): DataFrame =
+    rankWithin(scored, k, col("score").desc)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("score"), roundScore).as("score"))
-  }
+
+  /** [[rankWithin]] by Hamming distance ascending — the binary family's
+    * (query_id, rank, neighbor_id, hamming) contract. */
+  private def rankHamming(scored: DataFrame, k: Int): DataFrame =
+    rankWithin(scored.withColumn("hamming",
+        expr("cast(bit_count(cw ^ qw) as bigint)")), k, col("hamming").asc)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col("hamming"))
 
   /** Maximal-marginal-relevance diversified top-`selectK` (Carbonell &
     * Goldstein 1998): from each query's `candK` highest-cosine candidates,
@@ -103,7 +123,7 @@ object Similarity {
 
   /** MMR over ANY candidate slate: `cand0` is a (query_id, rank,
     * neighbor_id, score) frame from whichever retrieval leg fits the
-    * scale — [[bruteForceTopK]] (oracle-exact) or the [[ivfTopK]] /
+    * scale — [[bruteForceTopK]] (oracle-exact) or the [[IvfIndex]] /
     * [[signLshTopK]] / graph-walk legs (the 100 TB paths; the
     * `search_mmr_ivf` query is the IVF instantiation). Same
     * generator/re-ranker split as [[hardNegativesFrom]]: the greedy
@@ -186,7 +206,7 @@ object Similarity {
 
   /** Hard-negative re-rank over ANY candidate slate: `cand` is a
     * (query_id, …, neighbor_id, score) frame from whichever retrieval leg
-    * fits the scale — [[bruteForceTopK]] (oracle-exact), [[ivfTopK]] /
+    * fits the scale — [[bruteForceTopK]] (oracle-exact), [[IvfIndex]] /
     * [[signLshTopK]] / [[graphSearchTopKSeeded]] (the 100 TB paths). The
     * generator/re-ranker split is the point: mining quality is measured
     * by [[recallAtK]] of the ANN-mined slate against the brute-mined one
@@ -260,7 +280,7 @@ object Similarity {
     *
     * Map-side only: `dimOut` codegen'd dot products against FOLDABLE
     * literal planes, no shuffle at any scale. Vectors shorter than
-    * `dimIn` degrade OUT (same posture as [[signLshTopK]]/[[ivfTopK]]).
+    * `dimIn` degrade OUT (same posture as [[signLshTopK]]/[[IvfIndex]]).
     * Components round to 6 dp — the fold order and the √dimOut scale
     * constant are identical in any IEEE engine. */
   def randomProjection(df: DataFrame, idCol: String, vecCol: String,
@@ -325,7 +345,7 @@ object Similarity {
     * (e.g. their high 16 bits) into an equi-join first — same trade as
     * every blocking leg. Output: (query_id, rank, neighbor_id,
     * hamming). Vectors shorter than `dim` degrade out (the
-    * [[ivfTopK]]/[[signLshTopK]] posture). */
+    * [[IvfIndex]]/[[signLshTopK]] posture). */
   def hammingTopK(corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, dim: Int,
                   bits: Int = 48, seed: Long = DefaultSeed): DataFrame = {
@@ -335,16 +355,8 @@ object Similarity {
       hammingWord(col(vecCol), dim, bits, seed).as("qw"))
     val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
       hammingWord(col(vecCol), dim, bits, seed).as("cw"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("hamming",
-        expr("cast(bit_count(cw ^ qw) as bigint)"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("hamming"))
+    rankHamming(c.crossJoin(broadcast(q))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** BLOCKED Hamming top-k — the corpus-scale shape of [[hammingTopK]]:
@@ -384,16 +396,8 @@ object Similarity {
     val q = queries.filter(okLen).select(col(idCol).as("query_id"),
         hammingWord(col(vecCol), dim, bits, seed).as("qw"))
       .withColumn("bucket", explode(array(probes: _*)))
-    val scored = c.join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("hamming",
-        expr("cast(bit_count(cw ^ qw) as bigint)"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("hamming"))
+    rankHamming(c.join(q, Seq("bucket"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** Materialize the binary-ANN index [[hammingTopKBlocked]]'s scaladoc
@@ -547,22 +551,14 @@ object Similarity {
     val shift = bits - prefixBits
     val probes = expr(s"qw >> $shift") +:
       (0 until prefixBits).map(i => expr(s"(qw >> $shift) ^ ${1L << i}"))
-    val (q, c) = probedStore(indexed,
+    val (q, c) = IvfIndex.probedStore(indexed,
       queries.filter(size(col(vecCol)) >= dim)
         .select(col(idCol).as("query_id"),
           hammingWord(col(vecCol), dim, bits, seed).as("qw"))
         .withColumn("bucket", explode(array(probes: _*))),
       "bucket")
-    val scored = c.join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("hamming",
-        expr("cast(bit_count(cw ^ qw) as bigint)"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("hamming"))
+    rankHamming(c.join(q, Seq("bucket"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** The standard two-stage binary serving path: a `candK` Hamming
@@ -585,16 +581,10 @@ object Similarity {
       normalize(col(vecCol)).as("cv"))
     val qv = queries.filter(size(col(vecCol)) >= dim)
       .select(col(idCol).as("query_id"), normalize(col(vecCol)).as("qv"))
-    val scored = cand.select(col("query_id"), col("neighbor_id"))
+    rankDesc(cand.select(col("query_id"), col("neighbor_id"))
       .join(cv, Seq("neighbor_id"))
       .join(broadcast(qv), Seq("query_id"))
-      .withColumn("score", dot(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 6).as("score"))
+      .withColumn("score", dot(col("qv"), col("cv"))), k, 6)
   }
 
   /** ANN via sign-LSH: candidates share the query's bucket; top-k within.
@@ -625,7 +615,7 @@ object Similarity {
       concat(bs.map(bt => when(bt, lit("1")).otherwise(lit("0"))): _*)
     // the axis family indexes components 1..b (ANSI: out-of-bounds kills
     // the job); the rotated family would silently prefix-bucket a short
-    // vector. Same posture as ivfTopK: too-short vectors degrade OUT of
+    // vector. Same posture as IvfIndex: too-short vectors degrade OUT of
     // the index on both sides rather than crashing or mis-bucketing.
     val okLen = size(col(vecCol)) >= rotatedDim.getOrElse(b)
     val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
@@ -646,15 +636,9 @@ object Similarity {
     // probe set keeps the bucket join from emitting duplicate neighbors
     val q = q0.select(col("query_id"), col("qv"),
       explode(array_distinct(array(probes: _*))).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
+    rankDesc(c.join(broadcast(q), Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", dot(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), roundScore).as("score"))
+      .withColumn("score", dot(col("qv"), col("cv"))), k, roundScore)
   }
 
   /** IVF-style coarse quantization over the first `m` components: cell =
@@ -681,527 +665,6 @@ object Similarity {
         when(win === w, c).otherwise(acc)
       }
     (cellOf(win), cellOf(runner))
-  }
-
-  /** ANN via IVF probing: each corpus vector lives in exactly ONE cell of
-    * the coarse quantizer; a query scores candidates in its own cell plus
-    * its runner-up cell (`probes` ∈ {1,2}).
-    *
-    * The 100 TB plan: bucket/partition the corpus by `cell` once at write
-    * time; a query batch shuffles only the (broadcast) queries, each query
-    * reads `probes` partitions, and the per-cell top-k is a bounded
-    * partial-aggregation. Same output shape as [[bruteForceTopK]].
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              m: Int = 4, probes: Int = 2,
-              roundScore: Int = 6): DataFrame = {
-    require(probes >= 1 && probes <= 2, s"probes=$probes not in 1..2")
-    val (cw, cr) = axisCells(col(vecCol), m)
-    // axisCells indexes components 1..m; under ANSI mode a shorter vector
-    // would fail the whole job with ARRAY_INDEX_OUT_OF_BOUNDS. Validate
-    // up front: too-short vectors degrade out of the index instead of
-    // killing it (callers wanting them ranked should impute/pad first).
-    val okLen = size(col(vecCol)) >= m
-    val q = queries.filter(okLen).select(col(idCol).as("query_id"),
-      normalize(col(vecCol)).as("qv"),
-      explode(array(Seq(cw, cr).take(probes): _*)).as("cell"))
-    val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
-      normalize(col(vecCol)).as("cv"), cw.as("cell"))
-    cellCosineRank(c, broadcast(q), k, roundScore)
-  }
-
-  /** The shared cell-join cosine ranker behind the IVF family — ONE
-    * copy of the join/self-exclusion/score/window body, so the axis
-    * and trained quantizers (and their materialized-store variants)
-    * can never diverge on scoring or tie-break semantics. `c` carries
-    * (neighbor_id, cv, cell); `q` carries (query_id, qv, cell) —
-    * pre-wrapped in `broadcast()` by the eval legs with sampled query
-    * sets, hint-free from the indexed serving paths (AQE sizes those,
-    * the [[hammingTopKBlocked]] posture). */
-  private def cellCosineRank(c: DataFrame, q: DataFrame, k: Int,
-                             roundScore: Int): DataFrame = {
-    val scored = c.join(q, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", dot(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), roundScore).as("score"))
-  }
-
-  /** Materialize [[ivfTopK]]'s "partition the corpus by cell at write
-    * time" plan: the normalized-vector table written PARTITIONED BY the
-    * coarse cell — one map-only pass (normalize + argmax cell are
-    * row-local, the write shuffles nothing), at most 2m directories.
-    * The float-regime sibling of [[writeHammingIndex]]. */
-  def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    path: String, m: Int = 4): Unit = {
-    val (cw, _) = axisCells(col(vecCol), m)
-    corpus.filter(size(col(vecCol)) >= m)
-      .select(col(idCol).as("neighbor_id"),
-        normalize(col(vecCol)).as("cv"), cw.as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-  }
-
-  /** [[ivfTopK]] served from a [[writeIvfIndex]] store: identical
-    * probing, scoring and ranking, but the corpus side is the
-    * partitioned table restricted by a LITERAL cell IN-list — the
-    * probed cells become `PartitionFilters` on the scan, so a query
-    * batch reads `probes` partitions per query and never lists the
-    * rest. The IN-list collect is bounded by the CELL DOMAIN (≤ 2m
-    * ints — 8 at the default), independent of batch and corpus size.
-    * Hint-free join (the [[hammingTopKIndexed]] posture): AQE
-    * broadcasts a small probe batch, shuffles a corpus-scale one.
-    * Row-identical to [[ivfTopK]] on the same corpus
-    * (`ann_ivf_indexed` shares `ann_ivf_topk`'s oracle).
-    *
-    * EAGER at construction time, like [[hammingTopKIndexed]]: the query
-    * cells are localCheckpointed and the probe IN-list collected before
-    * this returns — the returned frame is partially executed and its
-    * partition-filter set frozen at build time. */
-  def ivfTopKIndexed(indexed: DataFrame, queries: DataFrame,
-                     idCol: String, vecCol: String, k: Int,
-                     m: Int = 4, probes: Int = 2,
-                     roundScore: Int = 6): DataFrame = {
-    require(probes >= 1 && probes <= 2, s"probes=$probes not in 1..2")
-    val (cw, cr) = axisCells(col(vecCol), m)
-    val (q, c) = probedStore(indexed,
-      queries.filter(size(col(vecCol)) >= m)
-        .select(col(idCol).as("query_id"),
-          normalize(col(vecCol)).as("qv"),
-          explode(array(Seq(cw, cr).take(probes): _*)).as("cell")),
-      "cell")
-    cellCosineRank(c, q, k, roundScore)
-  }
-
-  // ------------------------------------------------ trained-centroid IVF
-
-  /** Train the coarse quantizer for the REAL IVF family (the FAISS
-    * `IVFx` coarse stage): k-means centroids over the corpus via
-    * [[Clustering.trainCentroids]]'s dyadic-grid Lloyd loop — engine-
-    * exact (exact component sums in any order, first-min argmin, the
-    * `embed_kmeans` discipline), so an oracle replays the training
-    * round for round. Returns the k×dim centroid table; it rides as
-    * plan literals in the cell/probe expressions (k×dim doubles — the
-    * same driver-footprint class as the PQ codebooks).
-    *
-    * This lifts the axis-cell scheme's `probes ≤ 2` cap: axis cells
-    * have no distance ranking beyond winner/runner-up, but trained
-    * centroids rank by the actual quantizer distance, so a query can
-    * probe its p nearest cells for any p ≤ k. */
-  def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                        k: Int, iters: Int,
-                        dim: Int): IndexedSeq[Array[Double]] = {
-    require(k >= 2 && iters >= 1, s"k=$k, iters=$iters out of range")
-    val base = corpus.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("__id"), Clustering.quantize(col(vecCol)).as("__w"))
-    Clustering.trainCentroids(base, k, iters, dim)
-  }
-
-  /** The query's `probes` nearest trained cells, as an array of cell
-    * ids: sort the (score, index) structs — struct comparison is
-    * field-by-field, so ties break on the LOWEST index, matching the
-    * kmeans argmin — and take the first p. Cell scoring runs on the
-    * dyadic-quantized vector exactly like the kmeans assignment, so
-    * the probe ranking replays in the oracle. */
-  private[graft] def trainedProbeCells(vec: Column,
-      centroids: IndexedSeq[Array[Double]], probes: Int): Column =
-    transform(
-      slice(array_sort(Clustering.scoreStructs(
-        Clustering.quantize(vec), centroids)), 1, probes),
-      x => x.getField("j").cast("int"))
-
-  /** ANN via TRAINED-centroid IVF probing: each corpus vector lives in
-    * its argmin-centroid cell; a query scores candidates in its
-    * `probes` NEAREST cells (ranked by the quantizer distance — the
-    * ranking axis cells don't have). Same output shape, determinism
-    * and join posture as [[ivfTopK]]; the eval leg that
-    * `ann_ivft_recall` compares against the axis-cell path at equal
-    * probes. Vectors not exactly `dim` long degrade out (the kmeans
-    * universe — training, cells and probes all share it). */
-  def ivfTrainedTopK(corpus: DataFrame, queries: DataFrame,
-                     idCol: String, vecCol: String,
-                     centroids: IndexedSeq[Array[Double]], k: Int,
-                     probes: Int, dim: Int,
-                     roundScore: Int = 6): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    val okLen = size(col(vecCol)) === dim
-    val q = queries.filter(okLen).select(col(idCol).as("query_id"),
-      normalize(col(vecCol)).as("qv"),
-      explode(trainedProbeCells(col(vecCol), centroids, probes)).as("cell"))
-    val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
-      normalize(col(vecCol)).as("cv"),
-      element_at(trainedProbeCells(col(vecCol), centroids, 1), 1).as("cell"))
-    cellCosineRank(c, broadcast(q), k, roundScore)
-  }
-
-  /** Materialize the trained-IVF layout: normalized vectors written
-    * PARTITIONED BY the argmin-centroid cell — the [[writeIvfIndex]]
-    * pattern with kmeans cells instead of axis cells. One map-only
-    * pass (the centroids are plan literals, cell assignment is
-    * row-local), at most k directories, the write shuffles nothing.
-    *
-    * The store is SELF-DESCRIBING: the quantizer that defines the cell
-    * partitions is persisted alongside them ([[writeIvfQuantizer]] —
-    * the `_quantizer/` sidecar), so a cold session can serve the store
-    * with [[loadIvfQuantizer]] + [[ivfTrainedTopKIndexed]] without
-    * retraining. Retraining against a drifted corpus would assign
-    * probes from DIFFERENT centroids than the partitions were written
-    * under — silent recall loss, no error — which is why the quantizer
-    * must travel with the data (the FAISS index file ships its coarse
-    * quantizer for the same reason). */
-  def writeIvfTrainedIndex(corpus: DataFrame, idCol: String,
-                           vecCol: String, path: String,
-                           centroids: IndexedSeq[Array[Double]],
-                           dim: Int): Unit = {
-    corpus.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("neighbor_id"),
-        normalize(col(vecCol)).as("cv"),
-        element_at(trainedProbeCells(col(vecCol), centroids, 1), 1)
-          .as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    // AFTER the store write: overwrite mode clears the root directory.
-    // Crash between the two commits leaves a sidecar-less store — an
-    // interrupted write, not corruption; see writeIvfQuantizer's
-    // crash-window note (loaders fail loudly; re-run the write).
-    writeIvfQuantizer(corpus.sparkSession, path, centroids)
-  }
-
-  /** Persist the coarse quantizer INSIDE the store directory as a
-    * `_quantizer/` parquet sidecar of (cell, centroid) rows — the
-    * leading underscore keeps it invisible to `spark.read.parquet(
-    * store)` and to partition discovery (the `_metadata`/`_SUCCESS`
-    * hidden-path convention), so serving reads are unchanged; only a
-    * deliberate [[loadIvfQuantizer]] sees it. k×dim doubles — one
-    * file, one row group; parquet round-trips doubles bit-exactly.
-    * [[compactIndex]]'s dynamic overwrite touches only `cell=` dirs,
-    * so compaction preserves the sidecar.
-    *
-    * WRITE-ORDER CRASH WINDOW (r14 advice, documented at every store
-    * write site): the data partitions are written FIRST — overwrite
-    * mode clears the root, so the sidecar cannot precede them — and a
-    * driver/JVM failure between the data commit and this sidecar write
-    * leaves a data-complete store with NO sidecar. That state is an
-    * INTERRUPTED WRITE, not corruption: the cold loaders fail loudly on
-    * the missing path (by design — serving with a guessed quantizer
-    * would be the silent failure), and the remedy is to re-run the
-    * store write (or just the sidecar write, if the quantizer is still
-    * in hand). A Delta/Iceberg-backed store closes the window with an
-    * atomic log commit — the same USAGE.md lakehouse swap that closes
-    * [[compactIndex]]'s delete/rename window. */
-  def writeIvfQuantizer(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        centroids: IndexedSeq[Array[Double]]): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, j) => (j, c.toSeq) }.toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "/_quantizer")
-  }
-
-  /** Rehydrate the [[writeIvfQuantizer]] sidecar into the literal
-    * centroid table the probe expressions ride on — the cold-session
-    * loader that makes a [[writeIvfTrainedIndex]] store servable
-    * without retraining (`ann_ivft_served`). Validates the cell ids
-    * are exactly 0..k−1: a damaged sidecar must fail loudly here, not
-    * silently mis-probe. k×dim doubles to the driver — the same
-    * footprint class as training's own collect. */
-  def loadIvfQuantizer(spark: org.apache.spark.sql.SparkSession,
-                       path: String): IndexedSeq[Array[Double]] = {
-    requireSidecar(spark, path, "_quantizer")
-    val rows = spark.read.parquet(path + "/_quantizer")
-      .select(col("cell").cast("int"), col("centroid"))
-      .orderBy("cell").collect()
-    require(rows.nonEmpty, s"empty quantizer sidecar at $path/_quantizer")
-    rows.zipWithIndex.foreach { case (r, i) =>
-      require(r.getInt(0) == i,
-        s"quantizer sidecar at $path is not contiguous: " +
-          s"expected cell $i, found ${r.getInt(0)}")
-    }
-    // width check (r14 advice): inconsistent centroid lengths would pass
-    // the contiguity check and then silently mis-score probe distances;
-    // all k centroids must share one dim (callers verify it equals their
-    // own `dim`).
-    val dim = rows.head.getSeq[Double](1).length
-    require(dim > 0, s"quantizer sidecar at $path has empty centroids")
-    rows.zipWithIndex.foreach { case (r, i) =>
-      require(r.getSeq[Double](1).length == dim,
-        s"quantizer sidecar at $path has inconsistent centroid widths: " +
-          s"cell $i is ${r.getSeq[Double](1).length}-dim, expected $dim")
-    }
-    rows.map(_.getSeq[Double](1).toArray).toIndexedSeq
-  }
-
-  /** Cell-assignment frame for APPENDING into an existing
-    * [[writeIvfTrainedIndex]] store, bound to the STORE'S OWN quantizer:
-    * the centroids come from the target's `_quantizer/` sidecar
-    * ([[loadIvfQuantizer]] — loaded once, at frame-construction time),
-    * never from the caller, so a misconfigured streamer cannot assign
-    * arriving vectors from DIFFERENT centroids than the partitions were
-    * written under — that failure writes rows into wrong `cell=`
-    * directories with no error and serves them with silent recall loss,
-    * which is exactly the failure mode the sidecar exists to kill; the
-    * r14 append recipe reintroduced it at the ingest boundary by passing
-    * centroids as a parameter. Callers that hold their own copy may pass
-    * it via `expected` as a cross-check: any mismatch with the sidecar
-    * (count, width, or any component — parquet round-trips doubles
-    * bit-exactly, so equality is exact) fails loudly BEFORE any row is
-    * assigned.
-    *
-    * Works on a streaming or batch frame (everything here is map-only:
-    * literal-centroid argmin, row-local normalize). The streaming-ingest
-    * recipe: build this frame over `readStream`, then
-    * `foreachBatch { _.write.mode("append").partitionBy("cell")
-    * .parquet(store) }` — byte-identical to the batch write (pinned in
-    * StreamingSpec, with the mismatch refusal). */
-  def ivfAppendRows(df: DataFrame, idCol: String, vecCol: String,
-                    storePath: String, dim: Int,
-                    expected: Option[IndexedSeq[Array[Double]]] = None)
-      : DataFrame = {
-    val stored = boundQuantizer(df, storePath, dim, expected)
-    df.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("neighbor_id"),
-        normalize(col(vecCol)).as("cv"),
-        element_at(trainedProbeCells(col(vecCol), stored, 1), 1)
-          .as("cell"))
-  }
-
-  /** [[ivfAppendRows]] for the `IVFx,SQ8` store: the append frame in
-    * [[writeIvfSqIndex]]'s exact row shape (neighbor_id, scale, codes,
-    * cell), with the cell assignment bound to the TARGET's own
-    * `_quantizer/` sidecar — same contract, refusal semantics and
-    * streaming recipe as the float-store helper; the int8 encode is the
-    * same row-local absmax grid the store was written with, so a
-    * streamed append is byte-identical to the batch write. */
-  def ivfSqAppendRows(df: DataFrame, idCol: String, vecCol: String,
-                      storePath: String, dim: Int,
-                      expected: Option[IndexedSeq[Array[Double]]] = None)
-      : DataFrame = {
-    val stored = boundQuantizer(df, storePath, dim, expected)
-    df.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("neighbor_id"),
-        (Quantize.absMax(col(vecCol)) / 127.0).as("scale"),
-        Quantize.int8Codes(col(vecCol)).as("codes"),
-        element_at(trainedProbeCells(col(vecCol), stored, 1), 1)
-          .as("cell"))
-  }
-
-  /** The shared sidecar-load-and-cross-check preamble of every
-    * `*AppendRows` helper — one copy, so the append-binding discipline
-    * (store's own quantizer, loud conflict refusal, dim check) can
-    * never diverge across the float/SQ8/PQ stores. */
-  private[llm] def boundQuantizer(df: DataFrame, storePath: String,
-      dim: Int, expected: Option[IndexedSeq[Array[Double]]])
-      : IndexedSeq[Array[Double]] = {
-    val stored = loadIvfQuantizer(df.sparkSession, storePath)
-    require(stored.head.length == dim,
-      s"store at $storePath was written for ${stored.head.length}-dim " +
-        s"vectors, not dim=$dim")
-    expected.foreach { c =>
-      val same = c.length == stored.length &&
-        c.zip(stored).forall { case (a, b) =>
-          java.util.Arrays.equals(a, b) }
-      require(same,
-        s"supplied centroids conflict with the quantizer sidecar at " +
-          s"$storePath/_quantizer (${c.length} vs ${stored.length} " +
-          "cells, or differing components) — appending with them would " +
-          "place rows in wrong cell partitions silently; pass " +
-          "expected=None to use the store's own quantizer, or rebuild " +
-          "the store if retraining was intended")
-    }
-    stored
-  }
-
-  /** [[ivfTrainedTopK]] served from a [[writeIvfTrainedIndex]] store:
-    * the probed cells arrive as a LITERAL IN-list → `PartitionFilters`
-    * on the scan (pinned in BucketingSpec), IN-list bounded by the
-    * CELL DOMAIN (≤ k ints). Row-identical to [[ivfTrainedTopK]] on
-    * the same corpus (`ann_ivft_indexed` shares the oracle algebra).
-    *
-    * EAGER at construction time, like [[hammingTopKIndexed]]: the
-    * query cells are localCheckpointed and the probe IN-list collected
-    * before this returns. */
-  def ivfTrainedTopKIndexed(indexed: DataFrame, queries: DataFrame,
-                            idCol: String, vecCol: String,
-                            centroids: IndexedSeq[Array[Double]], k: Int,
-                            probes: Int, dim: Int,
-                            roundScore: Int = 6): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    require(centroids.head.length == dim,
-      s"centroids are ${centroids.head.length}-dim but the layout says " +
-        s"dim=$dim — wrong or damaged _quantizer sidecar?")
-    val (q, c) = probedStore(indexed,
-      queries.filter(size(col(vecCol)) === dim)
-        .select(col(idCol).as("query_id"),
-          normalize(col(vecCol)).as("qv"),
-          explode(trainedProbeCells(col(vecCol), centroids, probes))
-            .as("cell")),
-      "cell")
-    cellCosineRank(c, q, k, roundScore)
-  }
-
-  /** Materialize the IVF,SQ8 layout (FAISS `IVFx,SQ8`): per-vector
-    * int8 codes + their dequantization scale written PARTITIONED BY
-    * the trained cell — 4× smaller payload than the float store
-    * ([[writeIvfTrainedIndex]]) at near-exact recall, the middle point
-    * of the serving-regime triad (binary 8 B / PQ m B / SQ8 dim B /
-    * float 4·dim B per vector). Same one-map-only-pass write, same
-    * `_quantizer/` sidecar, same pruned-probe serving. The
-    * quantization grid is [[Quantize.int8Codes]]' per-vector absmax
-    * scheme — the `ann_int8_topk` discipline, oracle-replayable. */
-  def writeIvfSqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                      path: String,
-                      centroids: IndexedSeq[Array[Double]],
-                      dim: Int): Unit = {
-    corpus.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("neighbor_id"),
-        (Quantize.absMax(col(vecCol)) / 127.0).as("scale"),
-        Quantize.int8Codes(col(vecCol)).as("codes"),
-        element_at(trainedProbeCells(col(vecCol), centroids, 1), 1)
-          .as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    // AFTER the store write: overwrite mode clears the root directory.
-    // Crash between the two commits leaves a sidecar-less store — an
-    // interrupted write, not corruption; see writeIvfQuantizer's
-    // crash-window note (loaders fail loudly; re-run the write).
-    writeIvfQuantizer(corpus.sparkSession, path, centroids)
-  }
-
-  /** The unmaterialized sibling of [[ivfSqTopKIndexed]] (every indexed
-    * path here has one — the row-identity reference): cells from the
-    * RAW vectors (the store's write-time assignment), scores on the
-    * int8 grid via [[Quantize.snap]] on both sides. Queries broadcast
-    * (the eval posture). */
-  def ivfSqTopK(corpus: DataFrame, queries: DataFrame,
-                idCol: String, vecCol: String,
-                centroids: IndexedSeq[Array[Double]], k: Int,
-                probes: Int, dim: Int,
-                roundScore: Int = 6): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    val okLen = size(col(vecCol)) === dim
-    val q = queries.filter(okLen)
-      .select(col(idCol).as("query_id"),
-        normalize(Quantize.snap(col(vecCol))).as("qv"),
-        explode(trainedProbeCells(col(vecCol), centroids, probes))
-          .as("cell"))
-    val c = corpus.filter(okLen)
-      .select(col(idCol).as("neighbor_id"),
-        normalize(Quantize.snap(col(vecCol))).as("cv"),
-        element_at(trainedProbeCells(col(vecCol), centroids, 1), 1)
-          .as("cell"))
-    cellCosineRank(c, broadcast(q), k, roundScore)
-  }
-
-  /** Serve a [[writeIvfSqIndex]] store: probed cells arrive as the
-    * usual domain-bounded literal IN-list → `PartitionFilters`, the
-    * candidate side dequantizes its stored codes
-    * ([[Quantize.dequantize]] — `codes[i]·scale`, exact double ops on
-    * stored values), the query side snaps through the SAME int8 grid
-    * ([[Quantize.snap]], bit-identical to encode→decode by property
-    * pin), and cosine ranks within — so both sides score on the grid,
-    * the `ann_int8_topk` discipline under cell pruning. Row-identical
-    * to a full int8 scan restricted to the probed cells (the oracle
-    * replays grid, cells and ranking). EAGER at construction like the
-    * other `*TopKIndexed` paths. */
-  def ivfSqTopKIndexed(indexed: DataFrame, queries: DataFrame,
-                       idCol: String, vecCol: String,
-                       centroids: IndexedSeq[Array[Double]], k: Int,
-                       probes: Int, dim: Int,
-                       roundScore: Int = 6): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(probes >= 1 && probes <= centroids.length,
-      s"probes=$probes out of [1, ${centroids.length}]")
-    require(centroids.head.length == dim,
-      s"centroids are ${centroids.head.length}-dim but the layout says " +
-        s"dim=$dim — wrong or damaged _quantizer sidecar?")
-    val (q, c0) = probedStore(indexed,
-      queries.filter(size(col(vecCol)) === dim)
-        .select(col(idCol).as("query_id"),
-          normalize(Quantize.snap(col(vecCol))).as("qv"),
-          explode(trainedProbeCells(col(vecCol), centroids, probes))
-            .as("cell")),
-      "cell")
-    val c = c0.select(col("neighbor_id"),
-      normalize(Quantize.dequantize(col("codes"), col("scale")))
-        .as("cv"),
-      col("cell"))
-    cellCosineRank(c, q, k, roundScore)
-  }
-
-  /** Loud, diagnosable failure when a store is missing its sidecar —
-    * shared by every sidecar loader. A data-complete store with no
-    * sidecar means the write was interrupted between the data commit
-    * and the sidecar commit (see [[writeIvfQuantizer]]'s crash-window
-    * note), and the error should say so instead of a bare
-    * path-does-not-exist. */
-  private[llm] def requireSidecar(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"store at $path has no $name/ sidecar — if the data partitions " +
-        "are present, the store write was interrupted between the data " +
-        "commit and the sidecar commit (data is written first); re-run " +
-        "the store write, or re-write just the sidecar if the trained " +
-        "quantizer is still in hand")
-  }
-
-  /** Shared probe preamble for EVERY `*TopKIndexed` serving path
-    * (hamming, axis-IVF, trained-IVF, SQ8, and [[Pq.ivfPqTopKIndexed]]
-    * — one copy, so the paths can never diverge on the probe-collect
-    * discipline): localCheckpoint the exploded query frame (it is
-    * consumed twice — the IN-list collect and the join), collect the
-    * DISTINCT probe keys (bounded by the key DOMAIN — bucket/cell
-    * counts, never the batch or corpus size), and restrict the store by
-    * the typed literal IN-list so the probed keys become
-    * `PartitionFilters` on the scan. Returns (checkpointed queries,
-    * pruned store). Eager by design — the callers' documented
-    * construction-time contract. */
-  private[llm] def probedStore(indexed: DataFrame, q: DataFrame,
-                               keyCol: String): (DataFrame, DataFrame) = {
-    val qc = q.localCheckpoint()
-    val probed = qc.select(keyCol).distinct().collect()
-      .map(_.get(0) match {
-        case l: java.lang.Long => l.longValue
-        case i: java.lang.Integer => i.toLong
-        // before the catch-all: `other.getClass` on a null key (e.g. a
-        // null vector element propagating through the cell expression)
-        // would NPE and mask the diagnostic (r14 advice)
-        case null => throw new IllegalArgumentException(
-          s"null probe key in $keyCol — a query row produced no " +
-            "bucket/cell (null vector element upstream?)")
-        case other => throw new IllegalArgumentException(
-          s"probe key $other (${other.getClass.getSimpleName}) is not integral")
-      }).sorted.toSeq
-    (qc, indexed.filter(col(keyCol).isin(
-      typedKeys(probed, indexed.schema(keyCol).dataType): _*)))
-  }
-
-  /** Coerce probe-key literals to the store column's ACTUAL dtype.
-    * Partition-column type inference hands the written LONG/INT back as
-    * whatever it infers (and a catalog-registered store may carry a
-    * STRING partition column, or inference may be disabled entirely) —
-    * an IN-list of mismatched literals would wrap the partition COLUMN
-    * in a cast, which under those configs stops unwrapping into
-    * `PartitionFilters` and silently voids the pruned-read contract.
-    * Matching the literal type keeps pruning config-independent. */
-  private def typedKeys(values: Seq[Long],
-                        dt: org.apache.spark.sql.types.DataType)
-      : Seq[Any] = dt match {
-    case org.apache.spark.sql.types.LongType => values
-    case org.apache.spark.sql.types.IntegerType => values.map(_.toInt)
-    case org.apache.spark.sql.types.ShortType => values.map(_.toShort)
-    case org.apache.spark.sql.types.StringType => values.map(_.toString)
-    case _ => values
   }
 
   /** Recall@k of an approximate ANN result against the exact baseline:
@@ -1445,7 +908,7 @@ object Similarity {
     require(k >= 1, s"k=$k must be >= 1")
     require(bands >= 1, s"bands=$bands must be >= 1")
     // too-short vectors degrade OUT of the graph (same posture as
-    // signLshTopK/ivfTopK) rather than killing the job under ANSI mode
+    // signLshTopK/IvfIndex) rather than killing the job under ANSI mode
     val ok = corpus.filter(size(col(vecCol)) >= dim)
     // bucket on the RAW vector (sign is scale-invariant, and the raw
     // dot avoids any ulp-level sign flip vs the normalized one); score
@@ -1599,7 +1062,7 @@ object Similarity {
     * Cost over the unseeded walk: one ≤ 2m-row cell-representative
     * aggregate, broadcast into a map-side seed join — nothing else
     * changes; determinism and the hop-unrolled oracle replay carry over
-    * (the cell derivation is the [[ivfTopK]] expression, already
+    * (the cell derivation is the [[axisCells]] expression, already
     * oracle-pinned). */
   def graphSearchTopKSeeded(corpus: DataFrame, idCol: String,
                             vecCol: String, queries: DataFrame,

@@ -120,9 +120,17 @@ object Reconcile {
     // SAME row on every run/partitioning — dropDuplicates and an
     // untiebroken row_number are both partition-order-dependent. Identical
     // rows hash identically (either is fine); distinct payloads order by
-    // hash, deterministically.
+    // hash, deterministically. xxhash64 rejects MapType (a map has no
+    // canonical order), so a map column — the resource_metadata map —
+    // hashes as its key-sorted entry array: deterministic, and
+    // independent of the map's insertion order.
     import org.apache.spark.sql.expressions.Window
-    val contentHash = xxhash64(incoming.columns.map(col): _*)
+    val contentHash = xxhash64(incoming.schema.fields.map(f =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.MapType =>
+          array_sort(map_entries(col(f.name)))
+        case _ => col(f.name)
+      }): _*)
     val incOrder = incomingTsCol match {
       case Some(ts) => Seq(col(ts).desc, contentHash)
       case None     => Seq(contentHash)

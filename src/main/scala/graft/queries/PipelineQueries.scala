@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.llm.{Clustering, Contamination, Corpus, Dedup, Multimodal, Pii, QualityModel, Quantize, Sampling, Similarity, TextAnalysis}
+import graft.llm.{Clustering, Contamination, Corpus, Dedup, IvfIndex, Multimodal, Pii, QualityModel, Quantize, Sampling, Similarity, TextAnalysis}
+import graft.llm.IvfIndex.{Flat, ResidualPq, SeededPq, Sq8, Trained}
 import graft.operators.{AsofJoin, Cohorts, RangeJoin, Sessionize, Skew, TimeSeries}
 import graft.streaming.{SessionEvent, StreamingSessionize, StreamingZscore, ZscoreEvent}
 
@@ -537,22 +538,6 @@ object PipelineQueries {
           .mkString("\n  UNION ALL\n")}
        |)""".stripMargin
 
-  /** The MinHash-LSH candidate-pair stage is consumed by THREE queries
-    * (`dedup_minhash_lsh`, `dedup_clusters`, `dedup_keep`). Each query must
-    * stay independently runnable (driver contract), but when they run in the
-    * same session over the same table dir — which is exactly what Verify and
-    * Bench do — recomputing the signature pipeline three times is pure
-    * waste. Memoize the `localCheckpoint`ed pair frame per (session, dir):
-    * the first consumer pays for the pipeline, the rest reuse the
-    * materialized (tiny: one row per candidate pair) result.
-    *
-    * Lifecycle, honestly: entries are STRONG references held for the JVM
-    * lifetime unless [[clearCaches]] runs — `maxCacheEntries` bounds the
-    * leak for long-lived drivers cycling sessions/dirs. A caller that
-    * rewrites the parquet under a cached dir mid-session must
-    * [[clearCaches]] or the dedup queries serve stale pairs (same
-    * contract as any materialized view).
-    */
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The candK sweep points of `ann_hamming_sizing` — shared by the
@@ -587,40 +572,59 @@ object PipelineQueries {
 
   private val maxCacheEntries = 8
 
-  private val lshPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  /** ONE memo for every shared substrate, keyed by (substrate name,
+    * session, dir, kind). Each query stays independently runnable
+    * (the `SparkEntry.queries` contract), but when several run in the
+    * same session over the same table dir — exactly what Verify and
+    * Bench do — a shared intermediate is built by the first consumer and
+    * reused by the rest.
+    *
+    * Lifecycle, honestly: entries are STRONG references held for the JVM
+    * lifetime unless [[clearCaches]] runs; a memo that already holds
+    * `maxCacheEntries` distinct (session, dir) pairs clears itself before
+    * admitting a new one, which bounds the leak for long-lived drivers
+    * cycling sessions/dirs. A caller that rewrites the parquet under a
+    * cached dir mid-session must [[clearCaches]] or the queries serve
+    * stale substrates (same contract as any materialized view).
+    *
+    * `getOrElseUpdate` on a TrieMap is non-blocking: the build runs
+    * outside any lock and the first finished value wins, so a build may
+    * itself read other substrates through this same map (the clusters
+    * read the LSH pairs; the residual codebooks read the residual frame,
+    * which reads the trained quantizer) — `ConcurrentHashMap
+    * .computeIfAbsent` would throw `Recursive update` there. */
+  private val substrates = scala.collection.concurrent.TrieMap
+    .empty[(String, SparkSession, String, String), Any]
 
-  private def sharedLshPairs(s: SparkSession, d: String): DataFrame = {
-    if (lshPairCache.size >= maxCacheEntries) clearCaches()
-    lshPairCache.getOrElseUpdate((s, d),
+  private def memo[T](name: String, s: SparkSession, d: String,
+                      kind: String = "")(build: => T): T = {
+    val dirs = substrates.keySet.map(k => (k._2, k._3))
+    if (!dirs((s, d)) && dirs.size >= maxCacheEntries) clearCaches()
+    substrates.getOrElseUpdate((name, s, d, kind), build).asInstanceOf[T]
+  }
+
+  /** Drop memoized intermediates. Checkpoint BLOCKS are reclaimed by the
+    * ContextCleaner once the dropped frames' RDDs are unreachable (an
+    * explicit unpersist would be a no-op — localCheckpoint data is not in
+    * the CacheManager). Bench calls this between passes so every pass
+    * pays the shared pipeline exactly once — timings stay honest. */
+  def clearCaches(): Unit = substrates.clear()
+
+  /** The MinHash-LSH candidate-pair stage, consumed by THREE queries
+    * (`dedup_minhash_lsh`, `dedup_clusters`, `dedup_keep`): the first
+    * consumer pays for the signature pipeline, the rest reuse the
+    * materialized (tiny: one row per candidate pair) result. */
+  private def sharedLshPairs(s: SparkSession, d: String): DataFrame =
+    memo("lshPairs", s, d)(
       Dedup.minhashLsh(Tables.documents(s, d), "text", "doc_id",
         shingleN = 3, k = 8, bands = 4).localCheckpoint())
-  }
 
   /** Same sharing for the iterative connected-components stage: both
     * `dedup_clusters` and `dedup_keep` need the full label frame. The
     * final labels are localCheckpointed by [[Dedup.clusters]]'s loop
     * already, so memoizing the frame costs nothing extra. */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedClusters(s: SparkSession, d: String): DataFrame = {
-    if (clusterCache.size >= maxCacheEntries) clearCaches()
-    clusterCache.getOrElseUpdate((s, d), Dedup.clusters(sharedLshPairs(s, d)))
-  }
-
-  /** Materialized-index store paths, memoized per (session, dir, kind).
-    * The r12 split: the store builds ONCE per pass — the `ann_*_build`
-    * rows time the write — and the `ann_*_indexed` probe rows then time
-    * ONLY the pruned read the layout exists for (Bench's name-sorted
-    * order runs `*_build` first; a standalone probe invocation still
-    * builds on first use, so Verify's per-query contract holds). The
-    * path carries the JVM pid plus a digest of the dataset dir, so two
-    * concurrent bench/verify JVMs (e.g. sf0.1 and sf1) can never
-    * overwrite each other's store mid-query (r12 advice — the fixed
-    * `graft_*_idx_q` paths were a cross-process clobber hazard). */
-  private val indexStoreCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
+  private def sharedClusters(s: SparkSession, d: String): DataFrame =
+    memo("clusters", s, d)(Dedup.clusters(sharedLshPairs(s, d)))
 
   /** Store dirs created by THIS JVM, deleted by a shutdown hook: the
     * pid-suffixed paths fix the r12 cross-process clobber but would
@@ -628,7 +632,7 @@ object PipelineQueries {
     * temp dir forever — repeated bench/verify runs would eventually
     * fill it (the hazard the old fixed-path scheme bounded by
     * overwriting). In-JVM reuse is unaffected: the hook runs at exit,
-    * and within a run the memo map (or a rebuild into the same path
+    * and within a run the memo (or a rebuild into the same path
     * after clearCaches) serves reads. */
   private val createdStoreDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -652,50 +656,55 @@ object PipelineQueries {
     p
   }
 
+  /** Materialized-index store paths, memoized per (session, dir, kind).
+    * The r12 split: the store builds ONCE per pass — the `ann_*_build`
+    * rows time the write — and the `ann_*_indexed` probe rows then time
+    * ONLY the pruned read the layout exists for (Bench's name-sorted
+    * order runs `*_build` first; a standalone probe invocation still
+    * builds on first use, so Verify's per-query contract holds). The
+    * path carries the JVM pid plus a digest of the dataset dir, so two
+    * concurrent bench/verify JVMs (e.g. sf0.1 and sf1) can never
+    * overwrite each other's store mid-query (r12 advice — the fixed
+    * `graft_*_idx_q` paths were a cross-process clobber hazard). */
   private def sharedIndex(s: SparkSession, d: String, kind: String)(
-      build: String => Unit): String = {
-    if (indexStoreCache.size >= maxCacheEntries) clearCaches()
-    indexStoreCache.getOrElseUpdate((s, d, kind), {
+      build: String => Unit): String =
+    memo("index", s, d, kind) {
       val p = indexStorePath(kind, d)
       build(p)
       p
-    })
-  }
+    }
 
   private def sharedHammingIndex(s: SparkSession, d: String): String =
     sharedIndex(s, d, "hamming")(p =>
       Similarity.writeHammingIndex(Tables.embeddings(s, d), "vec_id",
         "embedding", p, dim = 64, prefixBits = 6))
 
+  /** The axis-cell IVF over the first 4 components — the untrained
+    * coarse stage of ann_ivf_* / ann_ivfpq_topk / search_mmr_ivf. */
+  private val AxisIvf = IvfIndex.Axis(m = 4)
+
   private def sharedIvfIndex(s: SparkSession, d: String): String =
     sharedIndex(s, d, "ivf")(p =>
-      Similarity.writeIvfIndex(Tables.embeddings(s, d), "vec_id",
-        "embedding", p, m = 4))
+      IvfIndex(AxisIvf, Flat).write(Tables.embeddings(s, d), "vec_id",
+        "embedding", p))
 
   /** Trained-IVF coarse quantizer (k=8 cells, 2 Lloyd rounds — the
     * embed_kmeans configuration, so the oracle's kmeansCtes replay
     * serves the cell assignment verbatim), memoized per (session, dir):
-    * three queries (build / indexed probe / recall) share one training
-    * run, the [[sharedLshPairs]] economics. */
-  private val ivfTrainedCentroidCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IndexedSeq[Array[Double]]]
-
-  private def sharedIvfTrainedCentroids(s: SparkSession,
-      d: String): IndexedSeq[Array[Double]] = {
-    if (ivfTrainedCentroidCache.size >= maxCacheEntries) clearCaches()
-    ivfTrainedCentroidCache.getOrElseUpdate((s, d),
-      Similarity.trainIvfCentroids(Tables.embeddings(s, d), "vec_id",
-        "embedding", k = 8, iters = 2, dim = 64))
-  }
+    * every trained-cell query shares one training run. */
+  private def sharedIvfTrained(s: SparkSession, d: String): Trained =
+    memo("ivfTrained", s, d)(
+      Trained.train(Tables.embeddings(s, d), "vec_id", "embedding",
+        k = 8, iters = 2, dim = 64))
 
   private def sharedIvfTrainedIndex(s: SparkSession, d: String): String =
     sharedIndex(s, d, "ivft")(p =>
-      Similarity.writeIvfTrainedIndex(Tables.embeddings(s, d), "vec_id",
-        "embedding", p, sharedIvfTrainedCentroids(s, d), dim = 64))
+      IvfIndex(sharedIvfTrained(s, d), Flat).write(Tables.embeddings(s, d),
+        "vec_id", "embedding", p))
 
   /** The (vec_id, cell, __res) residual frame every residual-PQ row
-    * derives from — quantize → trained-cell assign → residual, the
-    * [[graft.llm.Pq.residualFrame]] shape against the ONE shared coarse
+    * derives from — quantize → trained-cell assign → residual
+    * ([[IvfIndex.Trained.residuals]]) against the ONE shared coarse
     * quantizer — memoized as a localCheckpoint per (session, dir).
     * r18 (guide §1.2/§5, VERDICT #2): ten eval rows
     * (ann_ivfpqt2_topk/recall/rerank/probes, ann_ivfpq_mk's six grid
@@ -703,43 +712,34 @@ object PipelineQueries {
     * build) and EVERY Lloyd training round re-derived this identical
     * frame from the parquet scan — each re-paying the scan + quantize +
     * 8-cell assignment + residual zip. Materializing it once feeds all
-    * of them; the residual VALUES are unchanged (LlmSpec pins training
-    * + topK bit-identity against the corpus-scan path), and
+    * of them; the residual VALUES are unchanged (PqKernelsSpec pins
+    * training + topK bit-identity against the corpus-scan path), and
     * clearCaches between bench passes keeps every pass paying the
     * build exactly once. */
-  private val residualFrameCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedResidualFrame(s: SparkSession, d: String): DataFrame = {
-    if (residualFrameCache.size >= maxCacheEntries) clearCaches()
-    residualFrameCache.getOrElseUpdate((s, d),
-      graft.llm.Pq.residualFrame(Tables.embeddings(s, d), "vec_id",
-        "embedding", sharedIvfTrainedCentroids(s, d), dim = 64)
-        .localCheckpoint())
-  }
+  private def sharedResidualFrame(s: SparkSession, d: String): DataFrame =
+    memo("residuals", s, d)(
+      sharedIvfTrained(s, d).residuals(Tables.embeddings(s, d), "vec_id",
+        "embedding").localCheckpoint())
 
   /** Residual-PQ codebooks (m=8, k=16, subDim=8, two Lloyd rounds) over
     * the trained coarse cells — the FULL `IVFx,PQy` fine quantizer,
     * memoized per (session, dir): the topk/recall rows and the
-    * compressed store share one training run (the
-    * [[sharedIvfTrainedCentroids]] economics). Trains FROM the shared
-    * residual checkpoint (bit-identical to the direct
-    * `trainResidualCodebooks` path — same rows, same exact dyadic
-    * sums; LlmSpec pins it). */
-  private val residualCbCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), IndexedSeq[IndexedSeq[Array[Double]]]]
-
-  private def sharedResidualCodebooks(s: SparkSession, d: String)
-      : IndexedSeq[IndexedSeq[Array[Double]]] = {
-    if (residualCbCache.size >= maxCacheEntries) clearCaches()
-    residualCbCache.getOrElseUpdate((s, d),
+    * compressed store share one training run. Trains FROM the shared
+    * residual checkpoint (bit-identical to [[IvfIndex.ResidualPq.train]]
+    * on the corpus — same rows, same exact dyadic sums; PqKernelsSpec
+    * pins it). */
+  private def sharedResidualPq(s: SparkSession, d: String): ResidualPq =
+    memo("residualCodebooks", s, d)(ResidualPq(
       graft.llm.Pq.trainCodebooks(sharedResidualFrame(s, d),
         "vec_id", "__res",
         // 2 Lloyd rounds: the sizing probe measured recall@3 0.167 →
         // 0.300 going 1 → 2 (seeded baseline 0.100); the oracle unrolls
         // the same 2 rounds (pqTrainBodyCtes iters = 2)
-        m = 8, k = 16, subDim = 8, iters = 2))
-  }
+        m = 8, k = 16, subDim = 8, iters = 2)))
+
+  /** The full residual `IVF8,PQ8` index over the shared quantizers. */
+  private def sharedIvfPq(s: SparkSession, d: String): IvfIndex =
+    IvfIndex(sharedIvfTrained(s, d), sharedResidualPq(s, d))
 
   /** The compressed `IVF8,PQ8` store — (neighbor_id, codes) partitioned
     * by trained cell plus both quantizer sidecars — memoized like the
@@ -747,16 +747,15 @@ object PipelineQueries {
     * times the pruned read. */
   private def sharedIvfPqIndex(s: SparkSession, d: String): String =
     sharedIndex(s, d, "ivfpq")(p =>
-      graft.llm.Pq.writeIvfPqIndexOn(sharedResidualFrame(s, d), "vec_id",
-        p, sharedIvfTrainedCentroids(s, d),
-        sharedResidualCodebooks(s, d), subDim = 8, dim = 64))
+      sharedIvfPq(s, d).write(Tables.embeddings(s, d), "vec_id",
+        "embedding", p, residuals = Some(sharedResidualFrame(s, d))))
 
   /** The `IVF8,SQ8` store — int8 codes + scale partitioned by trained
     * cell, the serving-regime triad's middle point. */
   private def sharedIvfSqIndex(s: SparkSession, d: String): String =
     sharedIndex(s, d, "ivfsq")(p =>
-      Similarity.writeIvfSqIndex(Tables.embeddings(s, d), "vec_id",
-        "embedding", p, sharedIvfTrainedCentroids(s, d), dim = 64))
+      IvfIndex(sharedIvfTrained(s, d), Sq8).write(Tables.embeddings(s, d),
+        "vec_id", "embedding", p))
 
   /** The corpus kNN graph — every graph-family query's substrate. r16
     * measured FOURTEEN queries (knn_graph, knn_graph_mutual,
@@ -773,12 +772,8 @@ object PipelineQueries {
     * builds its own copy inside a child session scoped to 8 shuffle
     * partitions — a frame checkpointed under the parent session's plan
     * would drag its 32-partition rounds back in.) */
-  private val knnGraphCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedKnnGraph(s: SparkSession, d: String): DataFrame = {
-    if (knnGraphCache.size >= maxCacheEntries) clearCaches()
-    knnGraphCache.getOrElseUpdate((s, d), {
+  private def sharedKnnGraph(s: SparkSession, d: String): DataFrame =
+    memo("knnGraph", s, d) {
       val e = Tables.embeddings(s, d)
       // size the buckets on the frame knnGraph actually buckets — the
       // size >= 64 survivors (r17 advice: the unfiltered count could
@@ -788,8 +783,7 @@ object PipelineQueries {
       Similarity.knnGraph(e, "vec_id", "embedding",
         k = 3, b = knnBucketBits(e.filter(size(col("embedding")) >= 64)),
         dim = 64, bands = 2).localCheckpoint()
-    })
-  }
+    }
 
   /** The brute exact-L2 baseline leg of the residual-PQ eval family —
     * SEVEN queries (ann_ivfpqt_recall, ann_ivfpqt2_recall/rerank/probes,
@@ -799,18 +793,13 @@ object PipelineQueries {
     * (session, dir) makes the sweep family pay the |Q|×N brute scan
     * once per pass instead of seven times. Deterministic ranking, so
     * every consumer sees bit-identical rows. */
-  private val exactL2LegCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedExactL2Leg(s: SparkSession, d: String): DataFrame = {
-    if (exactL2LegCache.size >= maxCacheEntries) clearCaches()
-    exactL2LegCache.getOrElseUpdate((s, d), {
+  private def sharedExactL2Leg(s: SparkSession, d: String): DataFrame =
+    memo("exactL2Leg", s, d) {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       graft.llm.Pq.exactL2TopK(e, e.filter(col("vec_id") < 10),
         "vec_id", "embedding", topK = 3).localCheckpoint()
-    })
-  }
+    }
 
   /** The 6-merge BPE tokenizer shared by its three surfaces (r18, guide
     * §1.2): `bpe_train` (the merge table itself), `bpe_segment` and
@@ -819,20 +808,15 @@ object PipelineQueries {
     * sequential rounds each at sf0.1). One memoized training serves all
     * three — [[graft.llm.Bpe.train]] returns a driver-local merge
     * table, so memoizing the frame is memoizing the model object, the
-    * [[sharedIvfTrainedCentroids]] economics. `bpe_train_deep` keeps
+    * [[sharedIvfTrained]] economics. `bpe_train_deep` keeps
     * its OWN 500-budget training (its result is the deeper table;
     * merge sequences nest, but serving the 6-row surfaces from the
     * deep run would re-attribute its ~12 s to whichever bpe row runs
     * first — measured and declined, see OPTIMIZATION_r18.md). Cleared
     * between bench passes like every substrate. */
-  private val bpeTrainCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedBpeTrain6(s: SparkSession, d: String): DataFrame = {
-    if (bpeTrainCache.size >= maxCacheEntries) clearCaches()
-    bpeTrainCache.getOrElseUpdate((s, d),
+  private def sharedBpeTrain6(s: SparkSession, d: String): DataFrame =
+    memo("bpeTrain6", s, d)(
       graft.llm.Bpe.train(Tables.documents(s, d), "text", merges = 6))
-  }
 
   /** [[sharedBpeTrain6]] collected to the round-ordered (left, right)
     * serving form ([[graft.llm.Bpe.mergeTable]]'s contract; the frame
@@ -850,51 +834,20 @@ object PipelineQueries {
     * like every other substrate and cleared between bench passes. The
     * value — and hence every sentinel and every query result — is
     * unchanged. */
-  private val replayClockCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Long]
-
-  private def sharedMaxTsUs(s: SparkSession, d: String): Long = {
-    if (replayClockCache.size >= maxCacheEntries) clearCaches()
-    replayClockCache.getOrElseUpdate((s, d, "events.ts_us"),
+  private def sharedMaxTsUs(s: SparkSession, d: String): Long =
+    memo("replayClock", s, d, "events.ts_us")(
       Tables.eventsUs(s, d).agg(max(col("ts_us"))).head.getLong(0))
-  }
 
-  private def sharedMaxDocId(s: SparkSession, d: String): Long = {
-    if (replayClockCache.size >= maxCacheEntries) clearCaches()
-    replayClockCache.getOrElseUpdate((s, d, "documents.doc_id"),
+  private def sharedMaxDocId(s: SparkSession, d: String): Long =
+    memo("replayClock", s, d, "documents.doc_id")(
       Tables.documents(s, d).agg(max(col("doc_id"))).head.getLong(0))
-  }
 
   /** Same sharing for the exact-overlap candidate join: the Jaccard and
     * containment gates are finishers over one blocking-join frame. */
-  private val overlapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def sharedOverlapCandidates(s: SparkSession, d: String): DataFrame = {
-    if (overlapCache.size >= maxCacheEntries) clearCaches()
-    overlapCache.getOrElseUpdate((s, d),
+  private def sharedOverlapCandidates(s: SparkSession, d: String): DataFrame =
+    memo("overlap", s, d)(
       Dedup.overlapCandidates(Tables.documents(s, d), "text", "doc_id",
         n = 3, maxDocsPerShingle = 50).localCheckpoint())
-  }
-
-  /** Drop memoized intermediates. Checkpoint BLOCKS are reclaimed by the
-    * ContextCleaner once the dropped frames' RDDs are unreachable (an
-    * explicit unpersist would be a no-op — localCheckpoint data is not in
-    * the CacheManager). Bench calls this between passes so every pass
-    * pays the shared pipeline exactly once — timings stay honest. */
-  def clearCaches(): Unit = {
-    lshPairCache.clear()
-    clusterCache.clear()
-    overlapCache.clear()
-    indexStoreCache.clear()
-    ivfTrainedCentroidCache.clear()
-    bpeTrainCache.clear()
-    replayClockCache.clear()
-    residualFrameCache.clear()
-    residualCbCache.clear()
-    knnGraphCache.clear()
-    exactL2LegCache.clear()
-  }
 
   val queries: Map[String, Q] = Map(
     // --- exact dedup -----------------------------------------------------
@@ -1100,8 +1053,8 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < 8)
       Similarity.mmrRerankFrom(
-        Similarity.ivfTopK(e, q, "vec_id", "embedding", k = MmrCandK,
-          m = 4, probes = 2),
+        IvfIndex(AxisIvf, Flat).topK(e, q, "vec_id", "embedding",
+          k = MmrCandK, probes = 2),
         e, "vec_id", "embedding", selectK = MmrSelectK,
         lambda = MmrLambda)
     }),
@@ -1496,8 +1449,8 @@ object PipelineQueries {
     // --- ANN: IVF coarse-quantizer probing (the bucketed-corpus scale path) --
     "ann_ivf_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      Similarity.ivfTopK(e, e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", k = 3, m = 4, probes = 2)
+      IvfIndex(AxisIvf, Flat).topK(e, e.filter(col("vec_id") < 50),
+        "vec_id", "embedding", k = 3, probes = 2)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
@@ -1511,9 +1464,9 @@ object PipelineQueries {
       // the memoized store (built by ann_ivf_build or on first use), so
       // this row times the pruned READ — the layout's serving cost
       val idx = sharedIvfIndex(s, d)
-      Similarity.ivfTopKIndexed(s.read.parquet(idx),
+      IvfIndex(AxisIvf, Flat).probe(s.read.parquet(idx),
         e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", k = 3, m = 4, probes = 2)
+        "vec_id", "embedding", k = 3, probes = 2)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
@@ -1543,15 +1496,15 @@ object PipelineQueries {
     "ann_ivft_indexed" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val idx = sharedIvfTrainedIndex(s, d)
-      Similarity.ivfTrainedTopKIndexed(s.read.parquet(idx),
+      IvfIndex(sharedIvfTrained(s, d), Flat).probe(s.read.parquet(idx),
         e.filter(col("vec_id") < 50), "vec_id", "embedding",
-        sharedIvfTrainedCentroids(s, d), k = 3, probes = 2, dim = 64)
+        k = 3, probes = 2)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
 
     // --- COLD-SESSION serving of the trained-IVF store: the quantizer
-    // comes from the store's OWN _quantizer/ sidecar (loadIvfQuantizer),
+    // comes from the store's OWN _quantizer/ sidecar (IvfIndex.load),
     // not the session cache — proving the store is self-describing: a
     // new JVM opening the directory probes the partitions with the
     // centroids they were written under (retraining on a drifted corpus
@@ -1560,10 +1513,9 @@ object PipelineQueries {
     "ann_ivft_served" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val idx = sharedIvfTrainedIndex(s, d)
-      val cents = Similarity.loadIvfQuantizer(s, idx) // sidecar, NOT cache
-      Similarity.ivfTrainedTopKIndexed(s.read.parquet(idx),
-        e.filter(col("vec_id") < 50), "vec_id", "embedding",
-        cents, k = 3, probes = 2, dim = 64)
+      IvfIndex.load(s, idx, dim = 64) // sidecar, NOT cache
+        .probe(s.read.parquet(idx), e.filter(col("vec_id") < 50),
+          "vec_id", "embedding", k = 3, probes = 2)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
@@ -1578,13 +1530,13 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val coarse = sharedIvfTrained(s, d)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves both methods
-      val trained = Similarity.ivfTrainedTopK(e, q, "vec_id", "embedding",
-        cents, k = 5, probes = 2, dim = 64)
-      val axis = Similarity.ivfTopK(e, q, "vec_id", "embedding",
-        k = 5, m = 4, probes = 2)
+      val trained = IvfIndex(coarse, Flat).topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 2)
+      val axis = IvfIndex(AxisIvf, Flat).topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 2)
       Similarity.recallAtK(exact, trained, k = 5)
         .select(lit("ivf_trained").as("method"), col("query_id"),
           col("n_hits"), col("recall"))
@@ -1712,12 +1664,12 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64) // the kmeans universe
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val ivf = IvfIndex(sharedIvfTrained(s, d), Flat)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves the sweep
       ivftProbeSweep.map { p =>
-        val approx = Similarity.ivfTrainedTopK(e, q, "vec_id",
-          "embedding", cents, k = 5, probes = p, dim = 64)
+        val approx = ivf.topK(e, q, "vec_id", "embedding", k = 5,
+          probes = p)
         Similarity.recallAtK(exact, approx, k = 5)
           .select(lit(p.toLong).as("probes"), col("query_id"),
             col("n_hits"), col("recall"))
@@ -1810,8 +1762,9 @@ object PipelineQueries {
     // the FAISS IVFx,PQy architecture (the true billion-vector shape) ----
     "ann_ivfpq_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      graft.llm.Pq.ivfAdcTopK(e, e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", topK = 3, m = 8, k = 16, subDim = 8)
+      IvfIndex(AxisIvf, SeededPq(m = 8, k = 16, subDim = 8)).topK(e,
+        e.filter(col("vec_id") < 50), "vec_id", "embedding", k = 3,
+        probes = 2)
     }),
 
     // --- IVF-then-PQ with the TRAINED coarse quantizer: the deployed
@@ -1820,9 +1773,9 @@ object PipelineQueries {
     // within; shares the trained-centroid cache with the ivft family ----
     "ann_ivfpqt_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      graft.llm.Pq.ivfAdcTopKTrained(e, e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", topK = 3, m = 8, k = 16, subDim = 8,
-        sharedIvfTrainedCentroids(s, d), probes = 2, dim = 64)
+      IvfIndex(sharedIvfTrained(s, d), SeededPq(m = 8, k = 16, subDim = 8))
+        .topK(e, e.filter(col("vec_id") < 50), "vec_id", "embedding",
+          k = 3, probes = 2)
     }),
 
     // --- recall@3 of the trained vs axis coarse stage UNDER the ADC
@@ -1834,13 +1787,12 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val pq = SeededPq(m = 8, k = 16, subDim = 8)
       val exact = sharedExactL2Leg(s, d) // one exact leg serves both methods (and the whole eval family — memoized)
-      val trained = graft.llm.Pq.ivfAdcTopKTrained(e, q, "vec_id",
-        "embedding", topK = 3, m = 8, k = 16, subDim = 8, cents,
-        probes = 2, dim = 64)
-      val axis = graft.llm.Pq.ivfAdcTopK(e, q, "vec_id", "embedding",
-        topK = 3, m = 8, k = 16, subDim = 8, cellsM = 4, probes = 2)
+      val trained = IvfIndex(sharedIvfTrained(s, d), pq).topK(e, q,
+        "vec_id", "embedding", k = 3, probes = 2)
+      val axis = IvfIndex(AxisIvf, pq).topK(e, q, "vec_id", "embedding",
+        k = 3, probes = 2)
       Similarity.recallAtK(exact, trained, k = 3)
         .select(lit("ivfpq_trained").as("method"), col("query_id"),
           col("n_hits"), col("recall"))
@@ -1857,11 +1809,9 @@ object PipelineQueries {
     // argument no longer holds across cells -----------------------------
     "ann_ivfpqt2_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      graft.llm.Pq.ivfPqResidualTopKOn(sharedResidualFrame(s, d),
-        e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", topK = 3, subDim = 8,
-        sharedIvfTrainedCentroids(s, d), sharedResidualCodebooks(s, d),
-        probes = 2, dim = 64)
+      sharedIvfPq(s, d).topK(e, e.filter(col("vec_id") < 50),
+        "vec_id", "embedding", k = 3, probes = 2,
+        residuals = Some(sharedResidualFrame(s, d)))
     }),
 
     // --- the compressed store BUILD as its own timed row (the r12
@@ -1877,19 +1827,17 @@ object PipelineQueries {
     }),
 
     // --- COLD-SESSION serving of the compressed store: BOTH quantizer
-    // stages come from the store's own sidecars (loadIvfQuantizer +
-    // loadPqCodebooks, not the session caches), candidates reconstruct
+    // stages come from the store's own sidecars (IvfIndex.load with
+    // ResidualPq.Stored, not the session caches), candidates reconstruct
     // from the stored m-byte codes, probes arrive as PartitionFilters.
     // Row-identical to ann_ivfpqt2_topk (same oracle): the store
     // changes WHERE codes are read from, not what they decode to --------
     "ann_ivfpqt_indexed" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val idx = sharedIvfPqIndex(s, d)
-      val cents = Similarity.loadIvfQuantizer(s, idx) // sidecar, NOT cache
-      val cbs = graft.llm.Pq.loadPqCodebooks(s, idx)
-      graft.llm.Pq.ivfPqTopKIndexed(s.read.parquet(idx),
-        e.filter(col("vec_id") < 50), "vec_id", "embedding",
-        topK = 3, subDim = 8, cents, cbs, probes = 2, dim = 64)
+      IvfIndex.load(s, idx, dim = 64, ResidualPq.Stored) // sidecars, NOT cache
+        .probe(s.read.parquet(idx), e.filter(col("vec_id") < 50),
+          "vec_id", "embedding", k = 3, probes = 2)
     }),
 
     // --- probes-axis sizing for the FULL residual index: recall@3 at
@@ -1902,14 +1850,11 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64) // the kmeans universe
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
-      val cbs = sharedResidualCodebooks(s, d)
+      val ivf = sharedIvfPq(s, d)
       val exact = sharedExactL2Leg(s, d) // one exact leg serves the sweep (and the whole eval family — memoized)
       ivftProbeSweep.map { p =>
-        val approx = graft.llm.Pq.ivfPqResidualTopKOn(
-          sharedResidualFrame(s, d), q, "vec_id",
-          "embedding", topK = 3, subDim = 8, cents, cbs, probes = p,
-          dim = 64)
+        val approx = ivf.topK(e, q, "vec_id", "embedding", k = 3,
+          probes = p, residuals = Some(sharedResidualFrame(s, d)))
         Similarity.recallAtK(exact, approx, k = 3)
           .select(lit(p.toLong).as("probes"), col("query_id"),
             col("n_hits"), col("recall"))
@@ -1933,10 +1878,9 @@ object PipelineQueries {
     "ann_ivfsq_indexed" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val idx = sharedIvfSqIndex(s, d)
-      val cents = Similarity.loadIvfQuantizer(s, idx) // sidecar, NOT cache
-      Similarity.ivfSqTopKIndexed(s.read.parquet(idx),
-        e.filter(col("vec_id") < 50), "vec_id", "embedding",
-        cents, k = 3, probes = 2, dim = 64)
+      IvfIndex.load(s, idx, dim = 64, Sq8) // sidecar, NOT cache
+        .probe(s.read.parquet(idx), e.filter(col("vec_id") < 50),
+          "vec_id", "embedding", k = 3, probes = 2)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
@@ -1950,13 +1894,13 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val coarse = sharedIvfTrained(s, d)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one exact leg serves both methods
-      val sq = Similarity.ivfSqTopK(e, q, "vec_id", "embedding",
-        cents, k = 5, probes = 2, dim = 64)
-      val fl = Similarity.ivfTrainedTopK(e, q, "vec_id", "embedding",
-        cents, k = 5, probes = 2, dim = 64)
+      val sq = IvfIndex(coarse, Sq8).topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 2)
+      val fl = IvfIndex(coarse, Flat).topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 2)
       Similarity.recallAtK(exact, sq, k = 5)
         .select(lit("ivf_sq8").as("method"), col("query_id"),
           col("n_hits"), col("recall"))
@@ -1974,17 +1918,14 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
-      val cbs = sharedResidualCodebooks(s, d)
+      val ivf = sharedIvfPq(s, d)
+      val res = Some(sharedResidualFrame(s, d))
       val exact = sharedExactL2Leg(s, d) // one exact leg serves both methods (and the whole eval family — memoized)
-      val refined = graft.llm.Pq.ivfPqRefineTopKOn(
-        sharedResidualFrame(s, d), e, q, "vec_id",
-        "embedding", topK = 3, candK = 25, subDim = 8, cents, cbs,
-        probes = 2, dim = 64)
-      val codes = graft.llm.Pq.ivfPqResidualTopKOn(
-        sharedResidualFrame(s, d), q, "vec_id",
-        "embedding", topK = 3, subDim = 8, cents, cbs, probes = 2,
-        dim = 64)
+      val refined = ivf.refine(ivf.topK(e, q, "vec_id", "embedding",
+          k = 25, probes = 2, residuals = res), // the candK = 25 shortlist
+        e, q, "vec_id", "embedding", k = 3)
+      val codes = ivf.topK(e, q, "vec_id", "embedding", k = 3, probes = 2,
+        residuals = res)
       Similarity.recallAtK(exact, refined, k = 3)
         .select(lit("ivfpq_refined").as("method"), col("query_id"),
           col("n_hits"), col("recall"))
@@ -2014,13 +1955,12 @@ object PipelineQueries {
     // the budget point in ann_ivfpqt2_rerank.
     "ann_ivfpqt_served" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
+      val q = e.filter(col("vec_id") < 10)
       val idx = sharedIvfPqIndex(s, d)
-      val cents = Similarity.loadIvfQuantizer(s, idx) // sidecar, NOT cache
-      val cbs = graft.llm.Pq.loadPqCodebooks(s, idx)
-      graft.llm.Pq.ivfPqRefineTopKIndexed(s.read.parquet(idx), e,
-        e.filter(col("vec_id") < 10), "vec_id", "embedding",
-        topK = 3, candK = 50, subDim = 8, cents, cbs, probes = 2,
-        dim = 64)
+      val ivf = IvfIndex.load(s, idx, dim = 64, ResidualPq.Stored) // sidecars, NOT cache
+      ivf.refine(ivf.probe(s.read.parquet(idx), q, "vec_id", "embedding",
+          k = 50, probes = 2), // the candK = 50 shortlist
+        e, q, "vec_id", "embedding", k = 3)
     }),
 
     // --- the measurement that motivated the residual stage: recall@3
@@ -2032,15 +1972,12 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
       val exact = sharedExactL2Leg(s, d) // one exact leg serves both methods (and the whole eval family — memoized)
-      val resid = graft.llm.Pq.ivfPqResidualTopKOn(
-        sharedResidualFrame(s, d), q, "vec_id",
-        "embedding", topK = 3, subDim = 8, cents,
-        sharedResidualCodebooks(s, d), probes = 2, dim = 64)
-      val seeded = graft.llm.Pq.ivfAdcTopKTrained(e, q, "vec_id",
-        "embedding", topK = 3, m = 8, k = 16, subDim = 8, cents,
-        probes = 2, dim = 64)
+      val resid = sharedIvfPq(s, d).topK(e, q, "vec_id", "embedding",
+        k = 3, probes = 2, residuals = Some(sharedResidualFrame(s, d)))
+      val seeded = IvfIndex(sharedIvfTrained(s, d),
+          SeededPq(m = 8, k = 16, subDim = 8))
+        .topK(e, q, "vec_id", "embedding", k = 3, probes = 2)
       Similarity.recallAtK(exact, resid, k = 3)
         .select(lit("ivfpq_residual").as("method"), col("query_id"),
           col("n_hits"), col("recall"))
@@ -2062,23 +1999,22 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64) // the kmeans universe
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val coarse = sharedIvfTrained(s, d)
       val exact = sharedExactL2Leg(s, d) // one exact leg serves the sweep (and the whole eval family — memoized)
       // r18: every grid leg trains from — and ADC-scans against — the
       // ONE shared residual checkpoint: the (quantize → cell-assign →
       // residual) frame is m/k-independent (dim = 64 throughout), so
       // the legs genuinely differ only in their Lloyd runs and codebook
-      // layouts. Bit-identical trainings (LlmSpec pins the shared-frame
-      // path against trainResidualCodebooks).
+      // layouts. Bit-identical trainings (PqKernelsSpec pins the
+      // shared-frame path against ResidualPq.train).
       val resFrame = sharedResidualFrame(s, d)
       ivfPqMkSweep.map { case (m, k) =>
-        val cbs =
-          if (m == 8 && k == 16) sharedResidualCodebooks(s, d)
-          else graft.llm.Pq.trainCodebooks(resFrame,
-            "vec_id", "__res", m = m, k = k, subDim = 64 / m, iters = 2)
-        val approx = graft.llm.Pq.ivfPqResidualTopKOn(resFrame, q, "vec_id",
-          "embedding", topK = 3, subDim = 64 / m, cents, cbs, probes = 2,
-          dim = 64)
+        val pq =
+          if (m == 8 && k == 16) sharedResidualPq(s, d)
+          else ResidualPq(graft.llm.Pq.trainCodebooks(resFrame,
+            "vec_id", "__res", m = m, k = k, subDim = 64 / m, iters = 2))
+        val approx = IvfIndex(coarse, pq).topK(e, q, "vec_id", "embedding",
+          k = 3, probes = 2, residuals = Some(resFrame))
         Similarity.recallAtK(exact, approx, k = 3)
           .select(lit(m.toLong).as("m"), lit(k.toLong).as("k"),
             col("query_id"), col("n_hits"), col("recall"))
@@ -2093,7 +2029,7 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val coarse = sharedIvfTrained(s, d)
       val exact = sharedExactL2Leg(s, d) // memoized across the eval family
       // r17: Lloyd rounds nest, so ONE training run to max(iters)
       // snapshots every leg's books (bit-identical to the per-leg
@@ -2109,9 +2045,9 @@ object PipelineQueries {
         resFrame, "vec_id", "__res",
         m = 8, k = 16, subDim = 8, snapshots = ivfPqItersSweep)
       ivfPqItersSweep.map { i =>
-        val approx = graft.llm.Pq.ivfPqResidualTopKOn(resFrame, q, "vec_id",
-          "embedding", topK = 3, subDim = 8, cents, snaps(i), probes = 2,
-          dim = 64)
+        val approx = IvfIndex(coarse, ResidualPq(snaps(i))).topK(e, q,
+          "vec_id", "embedding", k = 3, probes = 2,
+          residuals = Some(resFrame))
         Similarity.recallAtK(exact, approx, k = 3)
           .select(lit(i.toLong).as("iters"), col("query_id"),
             col("n_hits"), col("recall"))
@@ -2134,18 +2070,15 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
         .filter(size(col("embedding")) === 64)
       val q = e.filter(col("vec_id") < 10)
-      val cents = sharedIvfTrainedCentroids(s, d)
-      val cbs = sharedResidualCodebooks(s, d)
+      val ivf = sharedIvfPq(s, d)
       val exact = sharedExactL2Leg(s, d) // one exact leg serves the sweep (and the whole eval family — memoized)
-      val ranked = graft.llm.Pq.ivfPqResidualTopKOn(
-        sharedResidualFrame(s, d), q, "vec_id",
-        "embedding", topK = ivfPqCandKSweep.max, subDim = 8, cents, cbs,
-        probes = 2, dim = 64)
+      val ranked = ivf.topK(e, q, "vec_id", "embedding",
+          k = ivfPqCandKSweep.max, probes = 2,
+          residuals = Some(sharedResidualFrame(s, d)))
         .localCheckpoint() // one ADC scan serves every leg
       ivfPqCandKSweep.map { candK =>
-        val refined = graft.llm.Pq.refineShortlist(
-          ranked.filter(col("rank") <= candK), e, q, "vec_id",
-          "embedding", topK = 3, dim = 64)
+        val refined = ivf.refine(ranked.filter(col("rank") <= candK), e, q,
+          "vec_id", "embedding", k = 3)
         Similarity.recallAtK(exact, refined, k = 3)
           .select(lit(candK.toLong).as("cand_k"), col("query_id"),
             col("n_hits"), col("recall"))
@@ -2159,8 +2092,8 @@ object PipelineQueries {
       val q = e.filter(col("vec_id") < 50)
       val exact = graft.llm.Pq.exactL2TopK(e, q, "vec_id", "embedding",
         topK = 3)
-      val approx = graft.llm.Pq.ivfAdcTopK(e, q, "vec_id", "embedding",
-        topK = 3, m = 8, k = 16, subDim = 8)
+      val approx = IvfIndex(AxisIvf, SeededPq(m = 8, k = 16, subDim = 8))
+        .topK(e, q, "vec_id", "embedding", k = 3, probes = 2)
       Similarity.recallAtK(exact, approx, k = 3)
         .select(col("query_id"), col("n_hits"), col("recall"))
     }),
@@ -2253,8 +2186,8 @@ object PipelineQueries {
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < 50)
       val ivfHn = Similarity.hardNegativesFrom(
-        Similarity.ivfTopK(e, q, "vec_id", "embedding", k = 25,
-          m = 4, probes = 2),
+        IvfIndex(AxisIvf, Flat).topK(e, q, "vec_id", "embedding", k = 25,
+          probes = 2),
         e, q, "vec_id", "label", k = 5)
       val bruteHn = Similarity.hardNegatives(e, q,
         "vec_id", "embedding", "label", candK = 25, k = 5)
@@ -2770,8 +2703,12 @@ object PipelineQueries {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxUs = sharedMaxTsUs(s, d)
-      graft.streaming.FileReplay.twoBatch(ss, s"$d/events.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_window_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+        val stream = source()
+        stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("event_type"),
             col("value").cast("double").as("value"))
           .withColumn("ts", timestamp_micros(col("ts_us")))
@@ -2781,9 +2718,8 @@ object PipelineQueries {
             sum(col("value").cast("decimal(18,2)")).cast("double")
               .as("value_sum"))
           .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("event_type"), col("n_events"), col("value_sum")),
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L),
-        "stream_window_" + streamSeq.incrementAndGet())
+            col("event_type"), col("n_events"), col("value_sum"))
+      }
         .filter(col("event_type") =!= "__wm__")
     }),
 
@@ -2801,8 +2737,12 @@ object PipelineQueries {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxUs = sharedMaxTsUs(s, d)
-      val reg = graft.streaming.FileReplay.twoBatch(ss, s"$d/events.parquet",
-        stream => stream
+      val reg = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_distinct_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+        val stream = source()
+        stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"))
           .filter(col("ts_us") >= 0L)
           .withColumn("ts", timestamp_micros(col("ts_us")))
@@ -2813,9 +2753,8 @@ object PipelineQueries {
           .groupBy(window(col("ts"), "6 hours"), col("idx"))
           .agg(max(col("rho")).as("m"))
           .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("idx"), col("m")),
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L),
-        "stream_distinct_" + streamSeq.incrementAndGet())
+            col("idx"), col("m"))
+      }
         // the sentinel's far-future window flushes the real ones and is
         // dropped here (every real window starts at or before maxUs)
         .filter(col("window_start_us") <= maxUs)
@@ -2833,9 +2772,11 @@ object PipelineQueries {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxUs = sharedMaxTsUs(s, d)
-      val sink = graft.streaming.FileReplay.twoBatch(ss,
-        s"$d/events.parquet",
-        stream => {
+      val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_quantiles_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+        val stream = source()
           val (lo, hi) = graft.llm.Sketches.bucketBounds(col("value"), 1000L)
           stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("value"))
@@ -2848,9 +2789,7 @@ object PipelineQueries {
             .agg(count(lit(1)).as("__cnt"))
             .select(unix_micros(col("window.start")).as("window_start_us"),
               col("__lo"), col("__hi"), col("__cnt"))
-        },
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L),
-        "stream_quantiles_" + streamSeq.incrementAndGet())
+      }
         .filter(col("window_start_us") <= maxUs)
       val merged = sink
         .groupBy(col("window_start_us"), col("__lo"), col("__hi"))
@@ -2871,9 +2810,11 @@ object PipelineQueries {
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxUs = sharedMaxTsUs(s, d)
       val (depth, width) = (3, 256)
-      val sink = graft.streaming.FileReplay.twoBatch(ss,
-        s"$d/events.parquet",
-        stream => {
+      val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_cms_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+        val stream = source()
           val keys = (0 until depth).map(i => struct(lit(i).as("row"),
             graft.llm.CountMin.bucket(col("item"), i, width).as("bucket")))
           stream
@@ -2888,9 +2829,7 @@ object PipelineQueries {
             .agg(count(lit(1)).as("cnt"))
             .select(unix_micros(col("window.start")).as("window_start_us"),
               col("row"), col("bucket"), col("cnt"))
-        },
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L),
-        "stream_cms_" + streamSeq.incrementAndGet())
+      }
         .filter(col("window_start_us") <= maxUs)
       val merged = sink.groupBy(col("row"), col("bucket"))
         .agg(sum(col("cnt")).as("cnt"))
@@ -2928,8 +2867,12 @@ object PipelineQueries {
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxUs = sharedMaxTsUs(s, d)
       val v = col("value")
-      graft.streaming.FileReplay.twoBatch(ss, s"$d/events.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_ohlc_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+        val stream = source()
+        stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
             col("event_type"), col("event_id"),
             col("value").cast("double").as("value"))
@@ -2950,9 +2893,8 @@ object PipelineQueries {
             col("open"), col("high"), col("low"), col("close"),
             col("n_events"), col("__vsum").cast("double").as("vsum"),
             round(col("__vsum").cast("double") /
-              col("n_events").cast("double"), 6).as("vavg")),
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L),
-        "stream_ohlc_" + streamSeq.incrementAndGet())
+              col("n_events").cast("double"), 6).as("vavg"))
+      }
         .filter(col("event_type") =!= "__wm__")
     }),
 
@@ -2965,8 +2907,12 @@ object PipelineQueries {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxUs = sharedMaxTsUs(s, d)
-      graft.streaming.FileReplay.twoBatch(ss, s"$d/events.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_window_sliding_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+        val stream = source()
+        stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("event_type"),
             col("value").cast("double").as("value"))
           .withColumn("ts", timestamp_micros(col("ts_us")))
@@ -2977,9 +2923,8 @@ object PipelineQueries {
             sum(col("value").cast("decimal(18,2)")).cast("double")
               .as("value_sum"))
           .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("event_type"), col("n_events"), col("value_sum")),
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L),
-        "stream_window_sliding_" + streamSeq.incrementAndGet())
+            col("event_type"), col("n_events"), col("value_sum"))
+      }
         .filter(col("event_type") =!= "__wm__")
     }),
 
@@ -3224,8 +3169,9 @@ object PipelineQueries {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/events.parquet",
-        stream => {
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_dedup_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
           val base = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("event_id"),
               col("event_type"), col("value").cast("double").as("value"),
@@ -3239,8 +3185,7 @@ object PipelineQueries {
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), col("ts_us"), col("event_type"),
               col("value"))
-        },
-        "stream_dedup_" + streamSeq.incrementAndGet())
+      }
     }),
 
     // --- streaming URL-frontier compaction: crawl records dedup on the
@@ -3258,8 +3203,12 @@ object PipelineQueries {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val maxId = sharedMaxDocId(s, d)
-      graft.streaming.FileReplay.twoBatch(ss, s"$d/documents.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
+        "stream_urldedup_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          docsSentinel(ss, d, maxId + 90L * 86400L))) { source =>
+        val stream = source()
+        stream
           .select(col("doc_id"),
             TextAnalysis.urlNormalize(synthUrl).as("url_norm"))
           // synthetic event time: one record per second of crawl clock
@@ -3268,9 +3217,8 @@ object PipelineQueries {
           .groupBy(window(col("ts"), "30 days"), col("url_norm"))
           .agg(min(col("doc_id")).as("keep_doc"),
             count(lit(1)).as("n_records"))
-          .select("url_norm", "keep_doc", "n_records"),
-        docsSentinel(ss, d, maxId + 90L * 86400L),
-        "stream_urldedup_" + streamSeq.incrementAndGet())
+          .select("url_norm", "keep_doc", "n_records")
+      }
         .filter(col("keep_doc") <= maxId)
     }),
 
@@ -3292,8 +3240,11 @@ object PipelineQueries {
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       import ss.implicits._
       val maxUs = sharedMaxTsUs(s, d)
-      graft.streaming.FileReplay.twoBatch(ss, s"$d/events.parquet",
-        stream => {
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_sessionize_" + streamSeq.incrementAndGet(),
+        sentinel = Some(
+          eventsSentinel(ss, d, maxUs + 30L * 86400000000L, userId = -1L))) { source =>
+        val stream = source()
           val evs = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
               col("event_id"), col("event_type"),
@@ -3308,9 +3259,7 @@ object PipelineQueries {
               col("value_cents").as("valueCents"))
             .as[SessionEvent]
           StreamingSessionize(evs, gapMicros = 86400L * 1000000L).toDF()
-        },
-        eventsSentinel(ss, d, maxUs + 30L * 86400000000L, userId = -1L),
-        "stream_sessionize_" + streamSeq.incrementAndGet())
+      }
         .filter(col("user_id") >= 0)
     }),
 
@@ -3329,8 +3278,9 @@ object PipelineQueries {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       import ss.implicits._
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/events.parquet",
-        stream => {
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_zscore_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
           val evs = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
               col("event_id"), col("value").cast("double").as("value"),
@@ -3342,8 +3292,7 @@ object PipelineQueries {
               col("value_cents").as("valueCents"))
             .as[ZscoreEvent]
           StreamingZscore(evs, threshold = 2.0).toDF()
-        },
-        "stream_zscore_" + streamSeq.incrementAndGet())
+      }
     }),
 
     // --- stream-stream interval join ----------------------------------------
@@ -3357,7 +3306,7 @@ object PipelineQueries {
     "stream_join" -> ((s, d) => {
       // Two independent file-source streams over the same table, both
       // complete in one micro-batch → every interval match emits, no
-      // sentinel (see FileReplay.oneBatchTwoSources)
+      // sentinel (see FileReplay.replay)
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
@@ -3366,28 +3315,27 @@ object PipelineQueries {
           col("event_id"), col("event_type"))
         .filter(col("user_id") < 30 && col("event_type") === tp)
         .drop("event_type")
-      graft.streaming.FileReplay.oneBatchTwoSources(ss,
-        s"$d/events.parquet",
-        (s1, s2) => {
-          val v = slice(s1, "view")
-            .withColumnRenamed("ts_us", "view_ts_us")
-            .withColumnRenamed("event_id", "view_id")
-            .withColumn("vts", timestamp_micros(col("view_ts_us")))
-            .withWatermark("vts", "1 hour")
-          val p = slice(s2, "purchase")
-            .withColumnRenamed("ts_us", "purchase_ts_us")
-            .withColumnRenamed("event_id", "purchase_id")
-            .withColumnRenamed("user_id", "p_user_id")
-            .withColumn("pts", timestamp_micros(col("purchase_ts_us")))
-            .withWatermark("pts", "1 hour")
-          v.join(p,
-            col("user_id") === col("p_user_id") &&
-              col("pts") >= col("vts") &&
-              col("pts") <= col("vts") + expr("INTERVAL 24 HOURS"))
-            .select(col("view_id"), col("purchase_id"), col("user_id"),
-              col("view_ts_us"), col("purchase_ts_us"))
-        },
-        "stream_join_" + streamSeq.incrementAndGet())
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_join_" + streamSeq.incrementAndGet()) { source =>
+        val (s1, s2) = (source(), source())
+        val v = slice(s1, "view")
+          .withColumnRenamed("ts_us", "view_ts_us")
+          .withColumnRenamed("event_id", "view_id")
+          .withColumn("vts", timestamp_micros(col("view_ts_us")))
+          .withWatermark("vts", "1 hour")
+        val p = slice(s2, "purchase")
+          .withColumnRenamed("ts_us", "purchase_ts_us")
+          .withColumnRenamed("event_id", "purchase_id")
+          .withColumnRenamed("user_id", "p_user_id")
+          .withColumn("pts", timestamp_micros(col("purchase_ts_us")))
+          .withWatermark("pts", "1 hour")
+        v.join(p,
+          col("user_id") === col("p_user_id") &&
+            col("pts") >= col("vts") &&
+            col("pts") <= col("vts") + expr("INTERVAL 24 HOURS"))
+          .select(col("view_id"), col("purchase_id"), col("user_id"),
+            col("view_ts_us"), col("purchase_ts_us"))
+      }
     }),
 
 
@@ -4102,14 +4050,16 @@ object PipelineQueries {
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val dim = Tables.events(ss, d).select(col("user_id")).distinct()
         .withColumn("tier", col("user_id") % 5)
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/events.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_enrich_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        stream
           .select(col("event_id"), col("user_id"),
             col("value").cast("double").as("value"))
           .filter(col("user_id") < 40)
           .join(broadcast(dim), Seq("user_id"))
-          .select("event_id", "user_id", "tier", "value"),
-        "stream_enrich_" + streamSeq.incrementAndGet())
+          .select("event_id", "user_id", "tier", "value")
+      }
     }),
 
     // --- streaming ingest quality gate: the Gopher rule conjunction
@@ -4123,12 +4073,14 @@ object PipelineQueries {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/documents.parquet",
-        stream => TextAnalysis.gopherRules(
+      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
+        "stream_quality_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        TextAnalysis.gopherRules(
             stream.select(col("doc_id"), col("text"), col("source")), "text")
           .filter(col("pass_gopher"))
-          .select("doc_id", "source", "n_words", "stop_hits"),
-        "stream_quality_" + streamSeq.incrementAndGet())
+          .select("doc_id", "source", "n_words", "stop_hits")
+      }
     }),
 
     // --- streaming PQ encode: compress vectors to codes AT INGEST (the
@@ -4140,15 +4092,17 @@ object PipelineQueries {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/embeddings.parquet",
-        stream => graft.llm.Pq.encode(
+      graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
+        "stream_pq_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        graft.llm.Pq.encode(
             stream.select(col("vec_id"),
               col("embedding").cast("array<float>").as("embedding")),
             "vec_id", "embedding", m = 8, k = 16, subDim = 8)
           .select(col("vec_id"), posexplode(col("codes")))
           .select(col("vec_id"), col("pos").cast("long").as("subspace"),
-            col("col").cast("long").as("code")),
-        "stream_pq_" + streamSeq.incrementAndGet())
+            col("col").cast("long").as("code"))
+      }
     }),
 
     // --- streaming chunk segmentation: chunkDocs AT INGEST (map-only
@@ -4158,11 +4112,13 @@ object PipelineQueries {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/documents.parquet",
-        stream => TextAnalysis.chunkDocs(
+      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
+        "stream_chunks_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        TextAnalysis.chunkDocs(
           stream.select(col("doc_id"), col("text")), "text", "doc_id",
-          budget = 64, overlap = 16),
-        "stream_chunks_" + streamSeq.incrementAndGet())
+          budget = 64, overlap = 16)
+      }
     }),
 
     // --- streaming binary-fingerprint encode: the 48-bit Hamming word
@@ -4175,36 +4131,39 @@ object PipelineQueries {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/embeddings.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
+        "stream_hamming_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        stream
           .select(col("vec_id"),
             col("embedding").cast("array<float>").as("embedding"))
           .filter(size(col("embedding")) >= 64)
           .select(col("vec_id"),
             Similarity.hammingWord(col("embedding"), dim = 64)
-              .as("fingerprint")),
-        "stream_hamming_" + streamSeq.incrementAndGet())
+              .as("fingerprint"))
+      }
     }),
 
     // --- streaming trained-IVF cell assignment AT INGEST: the float
     // store's sibling of stream_hamming — cell = argmin over the
     // plan-literal trained centroids (map-only, stateless: the
     // streaming plan IS the batch plan under a micro-batch trigger), so
-    // arriving vectors append straight into writeIvfTrainedIndex's
+    // arriving vectors append straight into the trained Flat IVF store's
     // cell-partitioned layout (byte-identical append pinned in
     // StreamingSpec, the stream_hamming discipline) ----------------------
     "stream_ivf" -> ((s, d) => {
-      val cents = sharedIvfTrainedCentroids(s, d)
+      val ivf = sharedIvfTrained(s, d)
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/embeddings.parquet",
-        stream => stream
+      graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
+        "stream_ivf_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        stream
           .filter(size(col("embedding")) === 64)
           .select(col("vec_id"),
-            element_at(Similarity.trainedProbeCells(col("embedding"),
-              cents, 1), 1).cast("long").as("cell")),
-        "stream_ivf_" + streamSeq.incrementAndGet())
+            ivf.home(col("embedding")).cast("long").as("cell"))
+      }
     }),
 
     // --- streaming cross-corpus dedup: continuous ingest anti-joined
@@ -4219,13 +4178,15 @@ object PipelineQueries {
       ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       val srcNum = expr("cast(substring(source, 4) as int)")
       val ref = Tables.documents(ss, d).filter(srcNum < 10)
-      graft.streaming.FileReplay.oneBatch(ss, s"$d/documents.parquet",
-        stream => Dedup.crossCorpusKeepBroadcast(
+      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
+        "stream_crossdedup_" + streamSeq.incrementAndGet()) { source =>
+        val stream = source()
+        Dedup.crossCorpusKeepBroadcast(
           stream.filter(srcNum >= 10)
             .select(col("doc_id"), col("text"), col("source")),
           ref, "text", "doc_id", shingleN = 3, k = 8, bands = 4)
-          .select("doc_id", "source"),
-        "stream_crossdedup_" + streamSeq.incrementAndGet())
+          .select("doc_id", "source")
+      }
     })
   )
 
@@ -5390,7 +5351,7 @@ object PipelineQueries {
     * [[kmeansCtes]]' unrolled coarse training: `res` is each len-64
     * vector's dyadic-requantized residual against its a2 cell's c1
     * centroid (the centroid table the final assignment scored against —
-    * what the engine's trainIvfCentroids returns); `rqr` the query's
+    * what the engine's Trained.train returns); `rqr` the query's
     * full quantizer-distance cell ranking, `rqp` its first `probes`
     * cells, `qres` the per-(query, probed-cell) residual. Everything a
     * fine-stage replay needs, whatever its m/k/iters — shared so the
@@ -5543,7 +5504,7 @@ object PipelineQueries {
     * fine stage ([[residualCtes]] — the same `rsc` ADC scoring every
     * `ann_ivfpqt2_*` oracle ranks, so the sweep cannot desynchronize
     * from serving) and one materialized exact leg; per candK a
-    * shortlist (`rank <= candK` over `rsc` — [[Pq.ivfPqRefineTopK]]'s
+    * shortlist (`rank <= candK` over `rsc` — [[IvfIndex.refine]]'s
     * candidate stage verbatim), the exact-L2 re-rank of ONLY the
     * shortlist (the rerank oracle's `rref` chain, parameterized), and a
     * recall block labeled by the BIGINT cand_k. */
@@ -7526,7 +7487,7 @@ c$i AS (SELECT p.j, coalesce(n.c, p.c) AS c
       "ann_ivft_probes" -> ivfTrainedProbesSql(ivftProbeSweep),
 
       // the IVF store BUILD's layout check: per-cell vector counts via
-      // the shared axis-cell fragment (writeIvfIndex keeps vectors with
+      // the shared axis-cell fragment (the axis IVF store keeps vectors with
       // len ≥ m = 4)
       "ann_ivf_build" ->
         (s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Distributed two-batch replay of a parquet table through the FILE
-  * streaming source — the replay harness for streaming queries whose
-  * input is too big to round-trip through the driver.
+/** Distributed replay of a parquet table through the FILE streaming
+  * source — the replay harness for streaming queries whose input is too
+  * big to round-trip through the driver.
   *
   * The MemoryStream harness (stream_rate etc.) pulls every row to the
   * driver (`toLocalIterator` → `addData`) — fine for scoped slices, but
@@ -18,13 +18,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reads the parquet DISTRIBUTED, exactly like the batch scan, with the
   * driver handling only file listing.
   *
-  * Two batches, same contract as the MemoryStream harness:
+  * One or two batches, same contract as the MemoryStream harness:
   *   1. the symlinked table — everything in one micro-batch (the
   *      watermark is still initial, so nothing emits early and arrival
   *      order inside the batch cannot matter);
-  *   2. a one-row SENTINEL file written into the directory afterwards —
-  *      its far-future event time advances the watermark past every real
-  *      window, flushing append-mode state deterministically.
+  *   2. optionally, a one-row SENTINEL file written into the directory
+  *      afterwards — its far-future event time advances the watermark
+  *      past every real window, flushing append-mode state
+  *      deterministically.
   * Callers filter the sentinel marker row out of the sink table.
   *
   * This is also the more production-shaped harness: file-arrival
@@ -33,78 +34,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object FileReplay {
 
-  /** One-batch replay for STATELESS streaming transforms (no watermark,
-    * no state to flush): the whole table arrives as one micro-batch and
-    * every output row emits in it — no sentinel needed. */
-  def oneBatch(ss: SparkSession, parquetFile: String,
-               transform: DataFrame => DataFrame,
-               queryName: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_replay_")
-    Files.createSymbolicLink(dir.resolve("batch0.parquet"),
-      Paths.get(parquetFile).toAbsolutePath)
-    val schema = ss.read.parquet(parquetFile).schema
-    val stream = ss.readStream.schema(schema).parquet(dir.toString)
-    val q = transform(stream).writeStream.format("memory")
-      .queryName(queryName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    ss.table(queryName)
-  }
-
-  /** One-batch replay feeding TWO independent file-source streams over
-    * the same table — the stream-stream join harness (each side filters
-    * its own slice; both are complete in the single micro-batch, so an
-    * inner interval join emits every match with no sentinel). */
-  def oneBatchTwoSources(ss: SparkSession, parquetFile: String,
-                         transform: (DataFrame, DataFrame) => DataFrame,
-                         queryName: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft_replay_")
-    Files.createSymbolicLink(dir.resolve("batch0.parquet"),
-      Paths.get(parquetFile).toAbsolutePath)
-    val schema = ss.read.parquet(parquetFile).schema
-    def src = ss.readStream.schema(schema).parquet(dir.toString)
-    val q = transform(src, src).writeStream.format("memory")
-      .queryName(queryName).outputMode("append").start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    ss.table(queryName)
-  }
-
-  /** Run `transform` over a two-batch file-source replay of
-    * `parquetFile` and return the collected sink rows.
+  /** Replay `parquetFile` through the file source into the in-memory
+    * sink `queryName` and return the sink table.
     *
-    * @param transform  streaming DataFrame (raw file schema) → windowed
-    *                   aggregation (append-mode compatible)
-    * @param sentinel   ONE raw-schema row carrying the far-future event
-    *                   time (and a marker value the caller filters out)
-    * @param queryName  unique in-memory sink name */
-  def twoBatch(ss: SparkSession, parquetFile: String,
-               transform: DataFrame => DataFrame,
-               sentinel: DataFrame, queryName: String): DataFrame = {
+    * `transform` builds the streaming query from `source`, which opens a
+    * NEW file-source stream over the replayed table on each call: call it
+    * once for a plain transform, twice for a stream-stream join (each
+    * side filters its own slice; both are complete in the first
+    * micro-batch, so an inner interval join emits every match).
+    *
+    * Without a `sentinel` the whole table is ONE micro-batch — right for
+    * stateless transforms, where every output row emits in it. With one
+    * (ONE raw-schema row carrying a far-future event time and a marker
+    * the caller filters out), it is written as a second batch that
+    * advances the watermark past every real window, flushing append-mode
+    * state deterministically. */
+  def replay(ss: SparkSession, parquetFile: String, queryName: String,
+             sentinel: Option[DataFrame] = None)(
+      transform: (() => DataFrame) => DataFrame): DataFrame = {
     val dir = Files.createTempDirectory("graft_replay_")
     Files.createSymbolicLink(dir.resolve("batch0.parquet"),
       Paths.get(parquetFile).toAbsolutePath)
     val schema = ss.read.parquet(parquetFile).schema
-    val stream = ss.readStream.schema(schema).parquet(dir.toString)
-    val q = transform(stream).writeStream.format("memory")
+    val q = transform(() => ss.readStream.schema(schema).parquet(dir.toString))
+      .writeStream.format("memory")
       .queryName(queryName).outputMode("append").start()
     try {
       q.processAllAvailable()
       // the sentinel must be a NEW file for the source to see a second
       // batch; one row → one part file (plus _-prefixed bookkeeping
       // files the source ignores)
-      sentinel.coalesce(1).write.mode("append").parquet(dir.toString)
-      q.processAllAvailable()
+      sentinel.foreach { row =>
+        row.coalesce(1).write.mode("append").parquet(dir.toString)
+        q.processAllAvailable()
+      }
     } finally {
       q.stop()
       // the sink table is in memory; nothing reads the replay dir after

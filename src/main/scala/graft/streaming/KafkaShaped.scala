@@ -43,6 +43,24 @@ object KafkaShaped {
       to_json(payload).as("value"))
   }
 
+  /** The key allow-list predicate, or None without a list. A null key
+    * never passes: `None not in keys` is True in the reference, i.e. a
+    * null key IS dropped by the filter — coalesce keeps three-valued
+    * logic from losing such records from BOTH [[decodeAndValidate]] and
+    * [[invalidRecords]]. */
+  private def keyAllowed(allowedKeys: Seq[String]): Option[Column] =
+    if (allowedKeys.isEmpty) None
+    else Some(coalesce(col("key").cast("string").isin(allowedKeys: _*),
+      lit(false)))
+
+  /** The `parsed` struct holds ≥1 schema field. PERMISSIVE from_json
+    * yields an all-null struct for malformed input (not a null struct) —
+    * treat both as invalid. */
+  private def parsedOk(schema: StructType): Column =
+    col("parsed").isNotNull && schema.fields
+      .map(f => col("parsed").getField(f.name).isNotNull)
+      .reduce(_ || _)
+
   /** S5/P7/P8 — decode + validate: parse the JSON `value` against `schema`
     * (PERMISSIVE → corrupt rows become null structs), drop invalid records,
     * optionally drop records whose key is not in `allowedKeys`.
@@ -54,18 +72,9 @@ object KafkaShaped {
       df: DataFrame,
       schema: StructType,
       allowedKeys: Seq[String] = Nil): DataFrame = {
-    val keyFiltered =
-      if (allowedKeys.isEmpty) df
-      else df.filter(
-        coalesce(col("key").cast("string").isin(allowedKeys: _*), lit(false)))
-    // PERMISSIVE from_json yields an all-null struct for malformed input
-    // (not a null struct) — treat both as invalid.
-    val anyFieldSet = schema.fields
-      .map(f => col(s"parsed.${f.name}").isNotNull)
-      .reduce(_ || _)
-    keyFiltered
+    keyAllowed(allowedKeys).fold(df)(df.filter)
       .withColumn("parsed", from_json(col("value").cast("string"), schema))
-      .filter(col("parsed").isNotNull && anyFieldSet)
+      .filter(parsedOk(schema))
       .select(col("key").cast("string").as("key"), col("parsed.*"))
   }
 
@@ -79,17 +88,9 @@ object KafkaShaped {
       df: DataFrame,
       schema: StructType,
       allowedKeys: Seq[String] = Nil): DataFrame = {
-    val anyFieldSet = schema.fields
-      .map(f => col(s"parsed.${f.name}").isNotNull)
-      .reduce(_ || _)
-    // null keys: `None not in keys` is True in the reference, i.e. a null
-    // key IS dropped by the filter — coalesce keeps three-valued logic
-    // from losing such records from BOTH frames
-    val keyOk =
-      if (allowedKeys.isEmpty) lit(true)
-      else coalesce(col("key").cast("string").isin(allowedKeys: _*), lit(false))
+    val keyOk = keyAllowed(allowedKeys).getOrElse(lit(true))
     df.withColumn("parsed", from_json(col("value").cast("string"), schema))
-      .filter(!keyOk || col("parsed").isNull || !anyFieldSet)
+      .filter(!keyOk || !parsedOk(schema))
       .select(col("key").cast("string").as("key"),
         col("value").cast("string").as("value"),
         (!keyOk).as("dropped_by_key_filter"))
@@ -132,12 +133,6 @@ object KafkaShaped {
       allowedKeys: Seq[String] = Nil,
       enums: Map[String, Seq[String]] = Map.empty,
       observationName: String = "kafka_decode"): DataFrame = {
-    val keyOk =
-      if (allowedKeys.isEmpty) lit(true)
-      else coalesce(col("key").cast("string").isin(allowedKeys: _*), lit(false))
-    val anyFieldSet = schema.fields
-      .map(f => col("parsed").getField(f.name).isNotNull)
-      .reduce(_ || _)
     val reqOk = requiredFields
       .map(f => col("parsed").getField(f).isNotNull)
       .foldLeft(lit(true))(_ && _)
@@ -148,8 +143,8 @@ object KafkaShaped {
       }
       .foldLeft(lit(true))(_ && _)
     df.withColumn("parsed", from_json(col("value").cast("string"), schema))
-      .withColumn("__key_ok", keyOk)
-      .withColumn("__parse_ok", col("parsed").isNotNull && anyFieldSet)
+      .withColumn("__key_ok", keyAllowed(allowedKeys).getOrElse(lit(true)))
+      .withColumn("__parse_ok", parsedOk(schema))
       .withColumn("__schema_ok", reqOk && enumOk)
       .observe(observationName,
         count(when(!col("__key_ok"), 1)).as("dropped_key"),

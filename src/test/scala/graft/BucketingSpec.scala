@@ -92,7 +92,7 @@ class BucketingSpec extends SparkSpec {
 
   test("ivf index: probe cells arrive as PartitionFilters and results " +
     "are row-identical to the un-materialized ivf scan") {
-    import graft.llm.Similarity
+    import graft.llm.{IvfIndex, Similarity}
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -100,9 +100,10 @@ class BucketingSpec extends SparkSpec {
     val q = e.filter($"vec_id" < 10)
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_ivf_idx_spec").getPath
-    Similarity.writeIvfIndex(e, "vec_id", "embedding", dir, m = 4)
-    val out = Similarity.ivfTopKIndexed(spark.read.parquet(dir), q,
-      "vec_id", "embedding", k = 3, m = 4, probes = 2)
+    val ivf = IvfIndex(IvfIndex.Axis(m = 4), IvfIndex.Flat)
+    ivf.write(e, "vec_id", "embedding", dir)
+    val out = ivf.probe(spark.read.parquet(dir), q,
+      "vec_id", "embedding", k = 3, probes = 2)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"),
       s"no partition pruning:\n$plan")
@@ -121,8 +122,7 @@ class BucketingSpec extends SparkSpec {
     // the fixture they probe a strict subset
     assert(probed.nonEmpty && probed.get > 0 && probed.get <= written,
       s"probed=$probed written=$written")
-    val base = Similarity.ivfTopK(e, q, "vec_id", "embedding",
-      k = 3, m = 4, probes = 2)
+    val base = ivf.topK(e, q, "vec_id", "embedding", k = 3, probes = 2)
     val a = out.collect().map(_.toSeq).sortBy(_.toString).toSeq
     val b = base.collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(a == b && a.nonEmpty, "indexed ≠ base ivf")
@@ -182,14 +182,15 @@ class BucketingSpec extends SparkSpec {
   test("trained-ivf index: probe cells arrive as PartitionFilters, " +
     "results row-identical to the un-materialized trained scan, and " +
     "trained cells beat axis cells at equal probes") {
-    import graft.llm.Similarity
+    import graft.llm.{IvfIndex, Similarity}
     import org.apache.spark.sql.functions.{avg, col, size}
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val e = graft.core.Tables.embeddings(spark, sf001)
     val q = e.filter($"vec_id" < 10)
-    val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",
+    val cents = IvfIndex.Trained.train(e, "vec_id", "embedding",
       k = 8, iters = 2, dim = 64)
+    val ivf = IvfIndex(cents, IvfIndex.Flat)
     // pid-suffixed: two concurrent test JVMs must not clobber each
     // other's store mid-read (the same hazard the query-side stores fix);
     // deleted in the finally below — pid-unique paths never get reused,
@@ -197,17 +198,16 @@ class BucketingSpec extends SparkSpec {
     val dirFile = freshTmpDir("graft_ivft_idx_spec")
     val dir = dirFile.getPath
     try {
-    Similarity.writeIvfTrainedIndex(e, "vec_id", "embedding", dir,
-      cents, dim = 64)
+    ivf.write(e, "vec_id", "embedding", dir)
     // the sidecar round-trip: the store is SELF-DESCRIBING — a cold
     // session loads bit-equal centroids from _quantizer/ and probes
     // the partitions with the quantizer they were written under
-    val loaded = Similarity.loadIvfQuantizer(spark, dir)
-    assert(loaded.length == cents.length &&
-      loaded.zip(cents).forall { case (a, b) => a.sameElements(b) },
+    val loaded = IvfIndex.Trained.load(spark, dir, dim = 64).centroids
+    assert(loaded.length == cents.centroids.length &&
+      loaded.zip(cents.centroids).forall { case (a, b) => a.sameElements(b) },
       "sidecar centroids != trained centroids")
-    val out = Similarity.ivfTrainedTopKIndexed(spark.read.parquet(dir), q,
-      "vec_id", "embedding", cents, k = 3, probes = 2, dim = 64)
+    val out = ivf.probe(spark.read.parquet(dir), q,
+      "vec_id", "embedding", k = 3, probes = 2)
     // 1. probed cells land in PartitionFilters — unprobed cell
     //    directories are never listed or read
     val plan = out.queryExecution.executedPlan.toString
@@ -228,8 +228,7 @@ class BucketingSpec extends SparkSpec {
       s"probed=$probed written=$written")
     // 2. store semantics unchanged: row-identical to the direct
     //    trained-IVF scan over the same corpus
-    val base = Similarity.ivfTrainedTopK(e, q, "vec_id", "embedding",
-      cents, k = 3, probes = 2, dim = 64)
+    val base = ivf.topK(e, q, "vec_id", "embedding", k = 3, probes = 2)
     val a = out.collect().map(_.toSeq).sortBy(_.toString).toSeq
     val b = base.collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(a == b && a.nonEmpty, "indexed ≠ direct trained ivf")
@@ -241,10 +240,10 @@ class BucketingSpec extends SparkSpec {
     def meanRecall(approx: org.apache.spark.sql.DataFrame): Double =
       Similarity.recallAtK(exact, approx, k = 5)
         .agg(avg(col("recall"))).head.getDouble(0)
-    val trained = meanRecall(Similarity.ivfTrainedTopK(u, q, "vec_id",
-      "embedding", cents, k = 5, probes = 2, dim = 64))
-    val axis = meanRecall(Similarity.ivfTopK(u, q, "vec_id", "embedding",
-      k = 5, m = 4, probes = 2))
+    val trained = meanRecall(ivf.topK(u, q, "vec_id",
+      "embedding", k = 5, probes = 2))
+    val axis = meanRecall(IvfIndex(IvfIndex.Axis(m = 4), IvfIndex.Flat)
+      .topK(u, q, "vec_id", "embedding", k = 5, probes = 2))
     assert(trained >= axis,
       s"trained cells recall $trained < axis cells $axis at p=2")
     } finally rmTree(dirFile)
@@ -253,7 +252,7 @@ class BucketingSpec extends SparkSpec {
   test("damaged or missing sidecars fail LOUDLY: inconsistent widths, " +
     "wrong-layout widths at the serving callers, and the " +
     "interrupted-write diagnosis for a sidecar-less store") {
-    import graft.llm.{Pq, Similarity}
+    import graft.llm.IvfIndex
     val dirFile = freshTmpDir("graft_sidecar_damage_spec")
     val dir = dirFile.getPath
     try {
@@ -263,7 +262,7 @@ class BucketingSpec extends SparkSpec {
         .toDF("cell", "centroid").coalesce(1)
         .write.mode("overwrite").parquet(dir + "/_quantizer")
       val qe = intercept[IllegalArgumentException] {
-        Similarity.loadIvfQuantizer(spark, dir)
+        IvfIndex.Trained.load(spark, dir, dim = 2)
       }
       assert(qe.getMessage.contains("inconsistent centroid widths"),
         qe.getMessage)
@@ -273,7 +272,7 @@ class BucketingSpec extends SparkSpec {
         .toDF("subspace", "code", "codeword").coalesce(1)
         .write.mode("overwrite").parquet(dir + "/_codebooks")
       val ce = intercept[IllegalArgumentException] {
-        Pq.loadPqCodebooks(spark, dir)
+        IvfIndex.ResidualPq.load(spark, dir)
       }
       assert(ce.getMessage.contains("inconsistent codeword widths"),
         ce.getMessage)
@@ -282,10 +281,10 @@ class BucketingSpec extends SparkSpec {
       // against a dim=64 layout must refuse, naming the sidecar
       val narrow = IndexedSeq(Array(0.5, 0.25), Array(0.25, 0.5))
       val se = intercept[IllegalArgumentException] {
-        Similarity.ivfTrainedTopKIndexed(
+        IvfIndex(IvfIndex.Trained(narrow, dim = 64), IvfIndex.Flat).probe(
           spark.read.parquet(dir + "/_quantizer"), // any frame; fails first
           Seq((1L, Array.fill(64)(0.1f))).toDF("vec_id", "embedding"),
-          "vec_id", "embedding", narrow, k = 1, probes = 1, dim = 64)
+          "vec_id", "embedding", k = 1, probes = 1)
       }
       assert(se.getMessage.contains("_quantizer"), se.getMessage)
       // a sidecar-LESS store reads as an interrupted write, not a bare
@@ -293,7 +292,7 @@ class BucketingSpec extends SparkSpec {
       val bare = freshTmpDir("graft_sidecar_missing_spec")
       try {
         val me = intercept[IllegalStateException] {
-          Similarity.loadIvfQuantizer(spark, bare.getPath)
+          IvfIndex.Trained.load(spark, bare.getPath, dim = 64)
         }
         assert(me.getMessage.contains("interrupted"), me.getMessage)
       } finally rmTree(bare)
@@ -303,28 +302,30 @@ class BucketingSpec extends SparkSpec {
   test("compressed IVF,PQ index: probe cells arrive as PartitionFilters " +
     "over the CODE store, sidecars round-trip bit-equal, and cold " +
     "serving is row-identical to the unmaterialized residual path") {
-    import graft.llm.{Pq, Similarity}
+    import graft.llm.IvfIndex
     import org.apache.spark.sql.functions.{col, size}
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val e = graft.core.Tables.embeddings(spark, sf001)
     val q = e.filter($"vec_id" < 10)
-    val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",
+    val cents = IvfIndex.Trained.train(e, "vec_id", "embedding",
       k = 8, iters = 2, dim = 64)
-    val cbs = Pq.trainResidualCodebooks(e, "vec_id", "embedding", cents,
-      m = 8, k = 16, subDim = 8, dim = 64, iters = 1)
+    val pq = IvfIndex.ResidualPq.train(cents, e, "vec_id", "embedding",
+      m = 8, k = 16, subDim = 8, iters = 1)
+    val cbs = pq.codebooks
     val dirFile = freshTmpDir("graft_ivfpq_idx_spec")
     try {
       val dir = dirFile.getPath
-      Pq.writeIvfPqIndex(e, "vec_id", "embedding", dir, cents, cbs,
-        subDim = 8, dim = 64)
+      IvfIndex(cents, pq).write(e, "vec_id", "embedding", dir)
       // 1. both sidecars round-trip bit-equal: the store is fully
       //    self-describing (coarse + fine quantizer)
-      val lc = Similarity.loadIvfQuantizer(spark, dir)
-      assert(lc.length == cents.length &&
-        lc.zip(cents).forall { case (a, b) => a.sameElements(b) },
+      val loaded = IvfIndex.load(spark, dir, dim = 64,
+        IvfIndex.ResidualPq.Stored)
+      val lc = loaded.coarse.asInstanceOf[IvfIndex.Trained].centroids
+      assert(lc.length == cents.centroids.length &&
+        lc.zip(cents.centroids).forall { case (a, b) => a.sameElements(b) },
         "quantizer sidecar != trained centroids")
-      val lcb = Pq.loadPqCodebooks(spark, dir)
+      val lcb = loaded.codec.asInstanceOf[IvfIndex.ResidualPq].codebooks
       assert(lcb.length == cbs.length &&
         lcb.zip(cbs).forall { case (ba, bb) =>
           ba.length == bb.length &&
@@ -333,9 +334,8 @@ class BucketingSpec extends SparkSpec {
       // 2. probed cells land in PartitionFilters over the CODE scan —
       //    the compressed store reads m ints per candidate from only
       //    the probed cell directories
-      val out = Pq.ivfPqTopKIndexed(spark.read.parquet(dir), q,
-        "vec_id", "embedding", topK = 3, subDim = 8, lc, lcb,
-        probes = 2, dim = 64)
+      val out = loaded.probe(spark.read.parquet(dir), q,
+        "vec_id", "embedding", k = 3, probes = 2)
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cell"),
         s"no partition pruning:\n$plan")
@@ -354,8 +354,8 @@ class BucketingSpec extends SparkSpec {
         s"probed=$probed written=$written")
       // 3. cold serving is row-identical to the unmaterialized residual
       //    path on the same corpus and quantizers
-      val base = Pq.ivfPqResidualTopKWith(e, q, "vec_id", "embedding",
-        topK = 3, subDim = 8, cents, cbs, probes = 2, dim = 64)
+      val base = IvfIndex(cents, pq).topK(e, q, "vec_id", "embedding",
+        k = 3, probes = 2)
       val a = out.collect().map(_.toSeq).sortBy(_.toString).toSeq
       val b = base.collect().map(_.toSeq).sortBy(_.toString).toSeq
       assert(a == b && a.nonEmpty, "indexed ≠ unmaterialized residual")
@@ -365,24 +365,24 @@ class BucketingSpec extends SparkSpec {
   test("sq8 index: probe cells arrive as PartitionFilters over the code " +
     "store, sidecar round-trips, and serving is row-identical to the " +
     "unmaterialized snapped scan") {
-    import graft.llm.Similarity
+    import graft.llm.{IvfIndex, Similarity}
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val e = graft.core.Tables.embeddings(spark, sf001)
     val q = e.filter($"vec_id" < 10)
-    val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",
+    val cents = IvfIndex.Trained.train(e, "vec_id", "embedding",
       k = 8, iters = 2, dim = 64)
     val dirFile = freshTmpDir("graft_ivfsq_idx_spec")
     try {
       val dir = dirFile.getPath
-      Similarity.writeIvfSqIndex(e, "vec_id", "embedding", dir, cents,
-        dim = 64)
-      val lc = Similarity.loadIvfQuantizer(spark, dir)
-      assert(lc.zip(cents).forall { case (a, b) => a.sameElements(b) },
+      IvfIndex(cents, IvfIndex.Sq8).write(e, "vec_id", "embedding", dir)
+      val loaded = IvfIndex.load(spark, dir, dim = 64, IvfIndex.Sq8)
+      val lc = loaded.coarse.asInstanceOf[IvfIndex.Trained].centroids
+      assert(lc.zip(cents.centroids).forall { case (a, b) => a.sameElements(b) },
         "quantizer sidecar != trained centroids")
-      val out = Similarity.ivfSqTopKIndexed(spark.read.parquet(dir), q,
-        "vec_id", "embedding", lc, k = 3, probes = 2, dim = 64)
+      val out = loaded.probe(spark.read.parquet(dir), q,
+        "vec_id", "embedding", k = 3, probes = 2)
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cell"),
         s"no partition pruning:\n$plan")
@@ -402,8 +402,8 @@ class BucketingSpec extends SparkSpec {
       // dequantize(stored codes, stored scale) must score identically
       // to snap on the raw vectors (the Int8Snap property, through the
       // store round trip)
-      val base = Similarity.ivfSqTopK(e, q, "vec_id", "embedding",
-        cents, k = 3, probes = 2, dim = 64)
+      val base = IvfIndex(cents, IvfIndex.Sq8).topK(e, q, "vec_id",
+        "embedding", k = 3, probes = 2)
       val a = out.collect().map(_.toSeq).sortBy(_.toString).toSeq
       val b = base.collect().map(_.toSeq).sortBy(_.toString).toSeq
       assert(a == b && a.nonEmpty, "indexed ≠ unmaterialized sq8")

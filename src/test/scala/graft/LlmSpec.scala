@@ -494,12 +494,41 @@ class LlmSpec extends SparkSpec {
     assert(lit_.nonEmpty && tab == lit_)
   }
 
+  test("undersized training fails up front with a named error at both " +
+    "training sites: the k-means coarse quantizer and the PQ codebooks") {
+    import graft.llm.{Clustering, IvfIndex, Pq}
+    def emb(n: Int) = (1 to n).map(i =>
+      (i.toLong, Array.tabulate(64)(j => ((i * j) % 7).toFloat)))
+      .toDF("vec_id", "embedding")
+    def refused(k: Int, rows: Int)(train: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](train)
+      assert(e.getMessage.contains(s"k=$k") &&
+        e.getMessage.contains("dim=64") &&
+        e.getMessage.contains(s"from $rows training row"), e.getMessage)
+    }
+    // 0 rows and k−1 rows: FAISS's refusal, not an analysis-time
+    // NULL_TYPE on an empty centroid array or a short codebook
+    for (n <- Seq(0, 7)) {
+      refused(8, n)(IvfIndex.Trained.train(emb(n), "vec_id", "embedding",
+        k = 8, iters = 2, dim = 64))
+      refused(8, n)(Clustering.kmeans(emb(n), "vec_id", "embedding",
+        k = 8, iters = 2, dim = 64).collect())
+    }
+    for (n <- Seq(0, 15))
+      refused(16, n)(Pq.trainCodebooks(emb(n), "vec_id", "embedding",
+        m = 8, k = 16, subDim = 8))
+    // exactly k rows still trains
+    assert(IvfIndex.Trained.train(emb(8), "vec_id", "embedding", k = 8,
+      iters = 1, dim = 64).centroids.length == 8)
+  }
+
   test("ivf+pq: returns only cell-mates, ranked like the unpruned adc") {
     import graft.llm.Pq
     val e = graft.core.Tables.embeddings(spark, sf001)
     val q = e.filter($"vec_id" < 10)
-    val ivf = Pq.ivfAdcTopK(e, q, "vec_id", "embedding", topK = 3,
-      m = 8, k = 16, subDim = 8)
+    val ivf = graft.llm.IvfIndex(graft.llm.IvfIndex.Axis(m = 4),
+        graft.llm.IvfIndex.SeededPq(m = 8, k = 16, subDim = 8))
+      .topK(e, q, "vec_id", "embedding", k = 3, probes = 2)
       .as[(Long, Long, Long)].collect()
     assert(ivf.nonEmpty)
     // ranks are contiguous from 1 per query

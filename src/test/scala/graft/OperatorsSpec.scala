@@ -49,6 +49,38 @@ class OperatorsSpec extends SparkSpec {
     assert(out.sorted == List(("k1", "update"), ("k9", "add")))
   }
 
+  test("reconcile apply: a Resource inventory carrying the metadata map " +
+    "collapses timestamp-tied duplicate keys deterministically") {
+    // the content-hash tiebreak used to hash the MapType column directly
+    // and fail analysis with DATATYPE_MISMATCH.HASH_MAP_TYPE
+    def inv(rows: (String, String, Double, Map[String, String])*) =
+      rows.toDF("resource_id", "resource_site",
+        "resource_creation_timestamp", "resource_metadata")
+    val stored = inv(("r1", "s1", 100.0, Map("k" -> "a")),
+      ("r2", "s1", 100.0, Map("k" -> "b")))
+    // r1 arrives twice, tied on its timestamp, differing only in metadata
+    val dupA = ("r1", "s1", 200.0, Map("k" -> "x", "z" -> "1"))
+    val dupB = ("r1", "s1", 200.0, Map("k" -> "y"))
+    val add = ("r3", "s1", 200.0, Map("k" -> "c"))
+    def applied(incoming: org.apache.spark.sql.DataFrame) =
+      Reconcile.applied(stored, incoming, Seq("resource_id"),
+        "resource_creation_timestamp", 500.0,
+        Some("resource_creation_timestamp"))
+        .as[(String, String, Double, Map[String, String])]
+        .collect().sortBy(_._1).toSeq
+    val out = applied(inv(dupA, dupB, add))
+    // r1 updated (stored 100 <= 200) to ONE of its duplicates, r2 deleted
+    // (stored 100 <= set ts 500), r3 added
+    assert(out.map(_._1) == Seq("r1", "r3"))
+    assert(Set(dupA._4, dupB._4).contains(out.head._4))
+    assert(out(1) == add)
+    // the winner does not depend on row order, partitioning or the map's
+    // insertion order
+    val reordered = inv(add, dupB,
+      dupA.copy(_4 = Map("z" -> "1", "k" -> "x"))).repartition(3)
+    assert(applied(reordered) == out)
+  }
+
   test("last-write-wins keeps newest with deterministic tie-break") {
     val df = Seq(
       ("k", 10L, 1, "old"), ("k", 20L, 2, "new"), ("k", 20L, 1, "tie-lo"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.core.Tables
 import graft.functions.{PqEncode, PqEncodeRecon}
-import graft.llm.{Clustering, Pq, Similarity}
+import graft.llm.{Clustering, IvfIndex, Pq, Similarity}
 
 /** r17 optimization pin: the fused [[graft.functions.PqEncode]] /
   * [[graft.functions.PqEncodeRecon]] codegen kernels must reproduce the
@@ -167,18 +167,17 @@ class PqKernelsSpec extends SparkSpec {
     // trainResidualCodebooks, at the serving layout AND an off-layout
     // mk-sweep leg, and ivfPqResidualTopKOn against ...With row-for-row.
     val e = Tables.embeddings(spark, sf001)
-    val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",
+    val cents = IvfIndex.Trained.train(e, "vec_id", "embedding",
       k = 8, iters = 2, dim = 64)
-    val res = Pq.residualFrame(e, "vec_id", "embedding", cents, dim = 64)
-      .localCheckpoint()
-    val direct = Pq.trainResidualCodebooks(e, "vec_id", "embedding",
-      cents, m = 8, k = 16, subDim = 8, dim = 64, iters = 2)
+    val res = cents.residuals(e, "vec_id", "embedding").localCheckpoint()
+    val direct = IvfIndex.ResidualPq.train(cents, e, "vec_id", "embedding",
+      m = 8, k = 16, subDim = 8, iters = 2).codebooks
     val shared = Pq.trainCodebooks(res, "vec_id", "__res",
       m = 8, k = 16, subDim = 8, iters = 2)
     assert(direct.flatten.flatten == shared.flatten.flatten,
       "shared-frame training diverged at the (8,16) serving layout")
-    val direct2 = Pq.trainResidualCodebooks(e, "vec_id", "embedding",
-      cents, m = 16, k = 16, subDim = 4, dim = 64, iters = 2)
+    val direct2 = IvfIndex.ResidualPq.train(cents, e, "vec_id",
+      "embedding", m = 16, k = 16, subDim = 4, iters = 2).codebooks
     val shared2 = Pq.trainCodebooks(res, "vec_id", "__res",
       m = 16, k = 16, subDim = 4, iters = 2)
     assert(direct2.flatten.flatten == shared2.flatten.flatten,
@@ -187,12 +186,11 @@ class PqKernelsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy(identity).toSeq
-    val withPath = rows(Pq.ivfPqResidualTopKWith(e, q, "vec_id",
-      "embedding", topK = 3, subDim = 8, cents, direct, probes = 2,
-      dim = 64))
-    val onPath = rows(Pq.ivfPqResidualTopKOn(res, q, "vec_id",
-      "embedding", topK = 3, subDim = 8, cents, shared, probes = 2,
-      dim = 64))
+    val withPath = rows(IvfIndex(cents, IvfIndex.ResidualPq(direct))
+      .topK(e, q, "vec_id", "embedding", k = 3, probes = 2))
+    val onPath = rows(IvfIndex(cents, IvfIndex.ResidualPq(shared))
+      .topK(e, q, "vec_id", "embedding", k = 3, probes = 2,
+        residuals = Some(res)))
     assert(withPath == onPath,
       "ivfPqResidualTopKOn diverged from the corpus-scan path")
   }

@@ -1110,8 +1110,8 @@ class PropertySpec extends SparkSpec {
           df.filter(pmod(col("value"), lit(m)) === 0)
             .select(col("series"),
               (col("value") * lit(m) + length(col("series"))).as("out"))
-        val streamed = FileReplay.oneBatch(spark, part, f,
-            s"frprop_one_$seed")
+        val streamed = FileReplay.replay(spark, part,
+            s"frprop_one_$seed")(source => f(source()))
           .as[(String, Long)].collect().sorted.toSeq
         val batch = f(spark.read.parquet(part))
           .as[(String, Long)].collect().sorted.toSeq
@@ -1146,8 +1146,8 @@ class PropertySpec extends SparkSpec {
           .toDF("series", "ts_sec", "value")
           .select(col("series"), col("ts_sec").cast("timestamp").as("ts"),
             col("value"))
-        val streamed = FileReplay.twoBatch(spark, part, g, sentinel,
-            s"frprop_two_$seed")
+        val streamed = FileReplay.replay(spark, part, s"frprop_two_$seed",
+            Some(sentinel))(source => g(source()))
           .filter(col("series") =!= "__sent__")
           .as[(java.sql.Timestamp, String, Long, Long)]
           .collect().sortBy(r => (r._1.getTime, r._2)).toSeq
@@ -1581,14 +1581,15 @@ class PropertySpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf001)
       .filter(size(col("embedding")) === 64)
     val q = e.filter(col("vec_id") < 8)
-    val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",
-      k = 8, iters = 2, dim = 64)
+    val ivf = graft.llm.IvfIndex(graft.llm.IvfIndex.Trained.train(e,
+      "vec_id", "embedding", k = 8, iters = 2, dim = 64),
+      graft.llm.IvfIndex.Flat)
     val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
       k = 5).localCheckpoint()
     val byP = Seq(1, 3, 8).map { p =>
       p -> Similarity.recallAtK(exact,
-          Similarity.ivfTrainedTopK(e, q, "vec_id", "embedding", cents,
-            k = 5, probes = p, dim = 64), k = 5)
+          ivf.topK(e, q, "vec_id", "embedding", k = 5, probes = p),
+          k = 5)
         .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     }
     byP.sliding(2).foreach { case Seq((p1, r1), (p2, r2)) =>

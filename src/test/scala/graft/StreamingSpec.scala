@@ -506,7 +506,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming cell-encode APPENDs into the trained-IVF store " +
     "through the store's OWN sidecar — equal to the batch-written " +
     "store; a conflicting quantizer is refused loudly") {
-    import graft.llm.Similarity
+    import graft.llm.IvfIndex
     implicit val sqlCtx = spark.sqlContext
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 13 - 6).toFloat).toArray
@@ -514,9 +514,10 @@ class StreamingSpec extends SparkSpec {
     val (b1, b2) = all.splitAt(6)
     // centroids train on the FULL corpus up front (the deployment
     // order: train, then stream against the frozen quantizer)
-    val cents = Similarity.trainIvfCentroids(
+    val cents = IvfIndex.Trained.train(
       all.toDF("vec_id", "embedding"), "vec_id", "embedding",
       k = 4, iters = 2, dim = 64)
+    val ivf = IvfIndex(cents, IvfIndex.Flat)
     val streamDir = freshTmpDir("graft_ivft_stream_idx")
     val batchDir = freshTmpDir("graft_ivft_stream_idx_batch")
     val ckpt = freshTmpDir("graft_ivft_stream_idx_ckpt")
@@ -524,14 +525,14 @@ class StreamingSpec extends SparkSpec {
     try {
       // the store is INITIALIZED by the batch write (first half of the
       // corpus + the _quantizer sidecar); the stream then appends the
-      // second half — the deployment lifecycle ivfAppendRows serves
-      Similarity.writeIvfTrainedIndex(b1.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", streamDir.getPath, cents, dim = 64)
+      // second half — the deployment lifecycle appendRows serves
+      ivf.write(b1.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", streamDir.getPath)
       val input = MemoryStream[(Long, Array[Float])]
       // cell assignment comes from the STORE's sidecar, not a caller
       // parameter — a streamer pointed at this store cannot assign from
       // drifted centroids (the failure the sidecar exists to kill)
-      val rows = Similarity.ivfAppendRows(
+      val rows = IvfIndex.appendRows(
         input.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
         streamDir.getPath, dim = 64)
       val q = rows.writeStream
@@ -549,21 +550,21 @@ class StreamingSpec extends SparkSpec {
       // a RETRAINED (conflicting) quantizer is refused before any row
       // is assigned — and the caller's own matching copy cross-checks
       // cleanly
-      val drifted = Similarity.trainIvfCentroids(
+      val drifted = IvfIndex.Trained.train(
         b2.toDF("vec_id", "embedding"), "vec_id", "embedding",
         k = 4, iters = 1, dim = 64)
       val err = intercept[IllegalArgumentException] {
-        Similarity.ivfAppendRows(all.toDF("vec_id", "embedding"),
+        IvfIndex.appendRows(all.toDF("vec_id", "embedding"),
           "vec_id", "embedding", streamDir.getPath, dim = 64,
-          expected = Some(drifted))
+          expected = Some(drifted.centroids))
       }
       assert(err.getMessage.contains("conflict"), err.getMessage)
-      Similarity.ivfAppendRows(all.toDF("vec_id", "embedding"),
+      IvfIndex.appendRows(all.toDF("vec_id", "embedding"),
         "vec_id", "embedding", streamDir.getPath, dim = 64,
-        expected = Some(cents)) // matching copy: no refusal
+        expected = Some(cents.centroids)) // matching copy: no refusal
       // the batch layout over the union input is the reference store
-      Similarity.writeIvfTrainedIndex(all.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", batchDir.getPath, cents, dim = 64)
+      ivf.write(all.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", batchDir.getPath)
       def readStore(p: String) = spark.read.parquet(p)
         .select(col("neighbor_id"), col("cv"), col("cell").cast("long"))
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -574,10 +575,9 @@ class StreamingSpec extends SparkSpec {
       // ITS OWN sidecar (the append preserved it — only cell= dirs were
       // touched), not the in-memory copy
       val qdf = all.toDF("vec_id", "embedding")
-      def serve(p: String) = Similarity.ivfTrainedTopKIndexed(
+      def serve(p: String) = IvfIndex.load(spark, p, dim = 64).probe(
         spark.read.parquet(p), qdf, "vec_id", "embedding",
-        Similarity.loadIvfQuantizer(spark, p),
-        k = 2, probes = 2, dim = 64).collect()
+        k = 2, probes = 2).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq
       assert(serve(streamDir.getPath) == serve(batchDir.getPath))
     } finally rmAll()
@@ -586,7 +586,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming residual-encode APPENDs into the compressed PQ store " +
     "through BOTH of the store's sidecars — equal to the batch-written " +
     "store, served identically cold; conflicting quantizer refused") {
-    import graft.llm.{Pq, Similarity}
+    import graft.llm.IvfIndex
     implicit val sqlCtx = spark.sqlContext
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 13 - 6).toFloat).toArray
@@ -595,24 +595,24 @@ class StreamingSpec extends SparkSpec {
     val allDf = all.toDF("vec_id", "embedding")
     // deployment order: train BOTH stages on the full corpus up front,
     // write the initial store, then stream against the frozen artifact
-    val cents = Similarity.trainIvfCentroids(allDf, "vec_id",
+    val cents = IvfIndex.Trained.train(allDf, "vec_id",
       "embedding", k = 4, iters = 2, dim = 64)
-    val cbs = Pq.trainResidualCodebooks(allDf, "vec_id", "embedding",
-      cents, m = 8, k = 4, subDim = 8, dim = 64, iters = 1)
+    val ivf = IvfIndex(cents, IvfIndex.ResidualPq.train(cents, allDf,
+      "vec_id", "embedding", m = 8, k = 4, subDim = 8, iters = 1))
     val streamDir = freshTmpDir("graft_ivfpq_stream_idx")
     val batchDir = freshTmpDir("graft_ivfpq_stream_idx_batch")
     val ckpt = freshTmpDir("graft_ivfpq_stream_idx_ckpt")
     def rmAll(): Unit = Seq(streamDir, batchDir, ckpt).foreach(rmTree)
     try {
-      Pq.writeIvfPqIndex(b1.toDF("vec_id", "embedding"), "vec_id",
-        "embedding", streamDir.getPath, cents, cbs, subDim = 8, dim = 64)
+      ivf.write(b1.toDF("vec_id", "embedding"), "vec_id",
+        "embedding", streamDir.getPath)
       val input = MemoryStream[(Long, Array[Float])]
       // cells AND codes come from the store's own sidecars — retrained
       // codebooks can't silently write codes the store's books decode
       // to wrong reconstructions (they aren't even a parameter)
-      val rows = Pq.ivfPqAppendRows(
+      val rows = IvfIndex.appendRows(
         input.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        streamDir.getPath, dim = 64)
+        streamDir.getPath, dim = 64, IvfIndex.ResidualPq.Stored)
       val q = rows.writeStream
         .option("checkpointLocation", ckpt.getPath)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -623,19 +623,19 @@ class StreamingSpec extends SparkSpec {
         input.addData(b2)
         q.processAllAvailable()
       } finally q.stop()
-      // the shared boundQuantizer preamble refuses a drifted quantizer
+      // the shared sidecar binding refuses a drifted quantizer
       // here exactly as in the float helper
-      val drifted = Similarity.trainIvfCentroids(
+      val drifted = IvfIndex.Trained.train(
         b2.toDF("vec_id", "embedding"), "vec_id", "embedding",
         k = 4, iters = 1, dim = 64)
       val err = intercept[IllegalArgumentException] {
-        Pq.ivfPqAppendRows(allDf, "vec_id", "embedding",
-          streamDir.getPath, dim = 64, expected = Some(drifted))
+        IvfIndex.appendRows(allDf, "vec_id", "embedding",
+          streamDir.getPath, dim = 64, IvfIndex.ResidualPq.Stored,
+          expected = Some(drifted.centroids))
       }
       assert(err.getMessage.contains("conflict"), err.getMessage)
       // the batch store over the union input is the reference
-      Pq.writeIvfPqIndex(allDf, "vec_id", "embedding", batchDir.getPath,
-        cents, cbs, subDim = 8, dim = 64)
+      ivf.write(allDf, "vec_id", "embedding", batchDir.getPath)
       def readStore(p: String) = spark.read.parquet(p)
         .select(col("neighbor_id"), col("codes"),
           col("cell").cast("long"))
@@ -645,10 +645,9 @@ class StreamingSpec extends SparkSpec {
         "streamed PQ store diverged from the batch-written reference")
       // cold serving from the streamed store — both sidecars — equals
       // the batch store's
-      def serve(p: String) = Pq.ivfPqTopKIndexed(spark.read.parquet(p),
-        allDf, "vec_id", "embedding", topK = 2, subDim = 8,
-        Similarity.loadIvfQuantizer(spark, p),
-        Pq.loadPqCodebooks(spark, p), probes = 2, dim = 64).collect()
+      def serve(p: String) = IvfIndex.load(spark, p, dim = 64,
+        IvfIndex.ResidualPq.Stored).probe(spark.read.parquet(p),
+        allDf, "vec_id", "embedding", k = 2, probes = 2).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq
       assert(serve(streamDir.getPath) == serve(batchDir.getPath))
     } finally rmAll()
@@ -656,22 +655,22 @@ class StreamingSpec extends SparkSpec {
 
   test("ivfSqAppendRows emits writeIvfSqIndex's exact row shape from " +
     "the store's own sidecar") {
-    import graft.llm.Similarity
+    import graft.llm.IvfIndex
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 13 - 6).toFloat).toArray
     val all = (1 to 10).map(i => (i.toLong, vec(i)))
     val allDf = all.toDF("vec_id", "embedding")
-    val cents = Similarity.trainIvfCentroids(allDf, "vec_id",
+    val cents = IvfIndex.Trained.train(allDf, "vec_id",
       "embedding", k = 4, iters = 2, dim = 64)
     val dir = freshTmpDir("graft_ivfsq_append_spec")
     try {
-      Similarity.writeIvfSqIndex(allDf, "vec_id", "embedding",
-        dir.getPath, cents, dim = 64)
+      IvfIndex(cents, IvfIndex.Sq8).write(allDf, "vec_id", "embedding",
+        dir.getPath)
       // the append frame over the same rows is bit-identical to what
       // the store holds (scale, int8 codes, cell — all row-local, all
       // from the sidecar quantizer), so mode("append") composes
-      val appended = Similarity.ivfSqAppendRows(allDf, "vec_id",
-        "embedding", dir.getPath, dim = 64)
+      val appended = IvfIndex.appendRows(allDf, "vec_id",
+        "embedding", dir.getPath, dim = 64, IvfIndex.Sq8)
         .select(col("neighbor_id"), col("scale"), col("codes"),
           col("cell").cast("long"))
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -773,7 +772,7 @@ class StreamingSpec extends SparkSpec {
     // compaction inside foreachBatch (ingest quiesced between
     // micro-batches) rewrites only cell= partition files and never
     // touches the sidecar dirs the appends and cold serving depend on
-    import graft.llm.{Pq, Similarity}
+    import graft.llm.{IvfIndex, Similarity}
     implicit val sqlCtx = spark.sqlContext
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 9 - 4).toFloat).toArray
@@ -782,24 +781,26 @@ class StreamingSpec extends SparkSpec {
       (1 to 5).map(i => ((b * 5 + i).toLong, vec(b * 5 + i))))
     val all = init ++ batches.flatten
     val allDf = all.toDF("vec_id", "embedding")
-    val cents = Similarity.trainIvfCentroids(allDf, "vec_id",
+    val cents = IvfIndex.Trained.train(allDf, "vec_id",
       "embedding", k = 4, iters = 2, dim = 64)
-    val cbs = Pq.trainResidualCodebooks(allDf, "vec_id", "embedding",
-      cents, m = 8, k = 4, subDim = 8, dim = 64, iters = 1)
+    val ivf = IvfIndex(cents, IvfIndex.ResidualPq.train(cents, allDf,
+      "vec_id", "embedding", m = 8, k = 4, subDim = 8, iters = 1))
     val storeDir = freshTmpDir("graft_pq_compact_live_idx")
     val batchDir = freshTmpDir("graft_pq_compact_live_batch")
     val ckpt = freshTmpDir("graft_pq_compact_live_ckpt")
     def rmAll(): Unit = Seq(storeDir, batchDir, ckpt).foreach(rmTree)
     try {
-      Pq.writeIvfPqIndex(init.toDF("vec_id", "embedding"), "vec_id",
-        "embedding", storeDir.getPath, cents, cbs, subDim = 8, dim = 64)
+      ivf.write(init.toDF("vec_id", "embedding"), "vec_id",
+        "embedding", storeDir.getPath)
       // sidecar state BEFORE the interleave — compaction must not move it
-      val centsBefore = Similarity.loadIvfQuantizer(spark, storeDir.getPath)
-      val cbsBefore = Pq.loadPqCodebooks(spark, storeDir.getPath)
+      val centsBefore = IvfIndex.Trained.load(spark, storeDir.getPath,
+        dim = 64).centroids
+      val cbsBefore = IvfIndex.ResidualPq.load(spark, storeDir.getPath)
+        .codebooks
       val input = MemoryStream[(Long, Array[Float])]
-      val rows = Pq.ivfPqAppendRows(
+      val rows = IvfIndex.appendRows(
         input.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        storeDir.getPath, dim = 64)
+        storeDir.getPath, dim = 64, IvfIndex.ResidualPq.Stored)
       val compactions =
         scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
       val q = rows.writeStream
@@ -823,8 +824,7 @@ class StreamingSpec extends SparkSpec {
         s"fixture never fragmented past the threshold: $compactions")
       // no lost rows: the interleaved store equals the batch-built
       // reference over the union input, row for row (codes included)
-      Pq.writeIvfPqIndex(allDf, "vec_id", "embedding", batchDir.getPath,
-        cents, cbs, subDim = 8, dim = 64)
+      ivf.write(allDf, "vec_id", "embedding", batchDir.getPath)
       def readStore(p: String) = spark.read.parquet(p)
         .select(col("neighbor_id"), col("codes"), col("cell").cast("long"))
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -834,17 +834,16 @@ class StreamingSpec extends SparkSpec {
           s"${s.length}")
       // sidecars bit-intact through every compaction (compactIndex
       // rewrites cell= dirs only)
-      assert(Similarity.loadIvfQuantizer(spark, storeDir.getPath)
-        .map(_.toSeq) == centsBefore.map(_.toSeq))
-      assert(Pq.loadPqCodebooks(spark, storeDir.getPath)
+      assert(IvfIndex.Trained.load(spark, storeDir.getPath, dim = 64)
+        .centroids.map(_.toSeq) == centsBefore.map(_.toSeq))
+      assert(IvfIndex.ResidualPq.load(spark, storeDir.getPath).codebooks
         .map(_.map(_.toSeq)) == cbsBefore.map(_.map(_.toSeq)))
       // a final quiesced compaction bounds files and serving is
       // identical to the batch store through it, from the store's OWN
       // sidecars (the cold path)
-      def serve(p: String) = Pq.ivfPqTopKIndexed(spark.read.parquet(p),
-        allDf, "vec_id", "embedding", topK = 2, subDim = 8,
-        Similarity.loadIvfQuantizer(spark, p),
-        Pq.loadPqCodebooks(spark, p), probes = 2, dim = 64).collect()
+      def serve(p: String) = IvfIndex.load(spark, p, dim = 64,
+        IvfIndex.ResidualPq.Stored).probe(spark.read.parquet(p),
+        allDf, "vec_id", "embedding", k = 2, probes = 2).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq
       val before = serve(storeDir.getPath)
       Similarity.compactIndex(spark, storeDir.getPath, "cell",

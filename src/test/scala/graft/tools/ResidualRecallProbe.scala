@@ -20,28 +20,27 @@ object ResidualRecallProbe {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import graft.llm.{Pq, Similarity}
+    import graft.llm.{IvfIndex, Pq, Similarity}
     val e = graft.core.Tables.embeddings(spark, sfDir)
       .filter(size(col("embedding")) === 64)
     val q = e.filter(col("vec_id") < 10)
-    val cents = Similarity.trainIvfCentroids(e, "vec_id", "embedding",
+    val cents = IvfIndex.Trained.train(e, "vec_id", "embedding",
       k = 8, iters = 2, dim = 64)
-    val cbs = Pq.trainResidualCodebooks(e, "vec_id", "embedding", cents,
-      m = 8, k = 16, subDim = 8, dim = 64, iters = 1)
-    val cbs2 = Pq.trainResidualCodebooks(e, "vec_id", "embedding", cents,
-      m = 8, k = 16, subDim = 8, dim = 64, iters = 2)
+    val pq1 = IvfIndex.ResidualPq.train(cents, e, "vec_id", "embedding",
+      m = 8, k = 16, subDim = 8, iters = 1)
+    val pq2 = IvfIndex.ResidualPq.train(cents, e, "vec_id", "embedding",
+      m = 8, k = 16, subDim = 8, iters = 2)
     val exact = Pq.exactL2TopK(e, q, "vec_id", "embedding", topK = 3)
       .localCheckpoint()
     def mr(df: org.apache.spark.sql.DataFrame): Double =
       Similarity.recallAtK(exact, df, k = 3)
         .agg(avg(col("recall"))).head.getDouble(0)
     for (p <- Seq(2, 4, 8)) {
-      val seeded = mr(Pq.ivfAdcTopKTrained(e, q, "vec_id", "embedding",
-        topK = 3, m = 8, k = 16, subDim = 8, cents, probes = p, dim = 64))
-      val resid = mr(Pq.ivfPqResidualTopKWith(e, q, "vec_id", "embedding",
-        topK = 3, subDim = 8, cents, cbs, probes = p, dim = 64))
-      val resid2 = mr(Pq.ivfPqResidualTopKWith(e, q, "vec_id", "embedding",
-        topK = 3, subDim = 8, cents, cbs2, probes = p, dim = 64))
+      def ivf(codec: IvfIndex.Codec) = mr(IvfIndex(cents, codec)
+        .topK(e, q, "vec_id", "embedding", k = 3, probes = p))
+      val seeded = ivf(IvfIndex.SeededPq(m = 8, k = 16, subDim = 8))
+      val resid = ivf(pq1)
+      val resid2 = ivf(pq2)
       println(f"PROBE p=$p seeded=$seeded%.3f resid(i1)=$resid%.3f resid(i2)=$resid2%.3f")
     }
     spark.stop()
