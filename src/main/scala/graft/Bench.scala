@@ -1,19 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Runs one row: labels its jobs `desc`, times `run`, and returns its
+    * value and seconds — or the exception, so a row that throws is never
+    * read as a (fast) timing. Shared by this board and
+    * `graft.tools.Profile`. */
+  def timeRow[T](spark: SparkSession, desc: String)(
+      run: => T): Either[Throwable, (T, Double)] = {
+    // guide §1.5: label every job with its query so the UI/event log
+    // attributes stages to board rows (diagnostics only)
+    spark.sparkContext.setJobDescription(desc)
+    val t0 = System.nanoTime()
+    try { val v = run; Right((v, (System.nanoTime() - t0) / 1e9)) }
+    catch { case e: Throwable => Left(e) }
+  }
+
+  /** One pass in pinned (name-sorted) order, each row timed on `count()`. */
+  def pass(spark: SparkSession, sfDir: String, queries: Map[String, Query])
+      : Map[String, Either[Throwable, Double]] =
+    queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> timeRow(spark, s"bench:$name")(fn(spark, sfDir).count())
+        .map(_._2)
+    }.toMap
+
+  /** The board: each row's MIN over the passes, and — left out of it —
+    * the names of the rows that threw in any pass. */
+  def board(passes: Seq[Map[String, Either[Throwable, Double]]])
+      : (Map[String, Double], Seq[String]) = {
+    val failed = passes.flatMap(_.collect { case (k, Left(_)) => k })
+      .distinct.sorted
+    val timed = passes.head.keys.filterNot(failed.contains).map(k =>
+      k -> passes.flatMap(_(k).toOption).min).toMap
+    (timed, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Warm-up (uncounted): JVM/codegen paths + parquet footers, so the
     // first timed query doesn't absorb several seconds of session startup.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -43,25 +68,17 @@ object Bench {
     // JIT/GC state its predecessors left behind (round 2's a10_stats "3×
     // regression" was exactly that); min-of-2 measures the steady state the
     // 100 TB deployment would actually run in.
-    def pass(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        // guide §1.5: label every job with its query so the UI/event log
-        // attributes stages to board rows (diagnostics only)
-        spark.sparkContext.setJobDescription(s"bench:$name")
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    val first = pass()
+    val first = pass(spark, sfDir, SparkEntry.queries)
     graft.queries.PipelineQueries.clearCaches()
-    val second = pass()
+    val second = pass(spark, sfDir, SparkEntry.queries)
     val calibEnd = calib()
-    val timed = first.map { case (k, v) => k -> math.min(v, second(k)) }
+    val (timed, failed) = board(Seq(first, second))
     val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (timed.nonEmpty) timed.values.sum else 0.0
     val calibJson = s"""{"start":$calibStart,"end":$calibEnd}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calibJson,"queries":$qs,"sf":"$sfDir"}""")
+    val failedJson = failed.map(Verify.jsonString).mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calibJson,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}""")
     // Repeat the summary AFTER the queries map: the driver's artifact
     // keeps only the TAIL of this program's output, and the main line
     // leads with the calibration object — a long queries map pushes it
@@ -71,7 +88,7 @@ object Bench {
     // its own load measurement). This compact trailer is truncation-proof
     // by position; consumers may read either copy.
     val trailer =
-      s"""{"calibration":$calibJson,"total":$total,"n":${timed.size},"sf":"$sfDir"}"""
+      s"""{"calibration":$calibJson,"total":$total,"n":${timed.size},"failed":$failedJson,"sf":"$sfDir"}"""
     println(trailer)
     // Quiesce streaming state-store maintenance BEFORE spark.stop(): the
     // stream_* rows leave unloaded state-store providers whose async

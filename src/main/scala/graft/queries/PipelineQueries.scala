@@ -540,6 +540,18 @@ object PipelineQueries {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The child session every FileReplay row runs in: it isolates the
+    * scoped-down state-store partition count (see stream_rate) from
+    * concurrent queries on the parent session, and scopes
+    * maxPartitionBytes down so even one rehearsal-scale file splits
+    * across tasks. */
+  private def replaySession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    ss
+  }
+
   /** The candK sweep points of `ann_hamming_sizing` — shared by the
     * Spark query and the oracle builder so the two can never drift. */
   private val hammingSizingCandKs = Seq(5, 10, 25, 50)
@@ -836,11 +848,16 @@ object PipelineQueries {
     * unchanged. */
   private def sharedMaxTsUs(s: SparkSession, d: String): Long =
     memo("replayClock", s, d, "events.ts_us")(
-      Tables.eventsUs(s, d).agg(max(col("ts_us"))).head.getLong(0))
+      maxOrZero(Tables.eventsUs(s, d), "ts_us"))
 
   private def sharedMaxDocId(s: SparkSession, d: String): Long =
     memo("replayClock", s, d, "documents.doc_id")(
-      Tables.documents(s, d).agg(max(col("doc_id"))).head.getLong(0))
+      maxOrZero(Tables.documents(s, d), "doc_id"))
+
+  /** max(`c`), or 0 on an empty table — where no real window exists for
+    * the sentinel to flush, so any clock will do. */
+  private def maxOrZero(df: DataFrame, c: String): Long =
+    df.agg(coalesce(max(col(c)), lit(0L))).head.getLong(0)
 
   /** Same sharing for the exact-overlap candidate join: the Jaccard and
     * containment gates are finishers over one blocking-join frame. */
@@ -2691,17 +2708,12 @@ object PipelineQueries {
     // the equivalent batch GROUP BY — streaming and batch must agree
     // exactly on in-order data.
     "stream_window" -> ((s, d) => {
-      // Child session: isolate the scoped-down state-store partition count
-      // (see stream_rate) from concurrent queries on the parent session.
       // Whole-table replay → the FILE-source harness (FileReplay): the
       // micro-batch reads the parquet DISTRIBUTED instead of round-
       // tripping every event through the driver (the sf1 rehearsal
       // measured the MemoryStream version at 14–35 s, nearly all driver
-      // serialization; this shape holds flat). maxPartitionBytes is
-      // scoped down so even one rehearsal-scale file splits across tasks.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      // serialization; this shape holds flat).
+      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
         "stream_window_" + streamSeq.incrementAndGet(),
@@ -2733,9 +2745,7 @@ object PipelineQueries {
     // (register, rank) derivation is the shared Sketches SQL, every step
     // to the final division exact integer arithmetic. -------------------
     "stream_distinct" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val reg = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
         "stream_distinct_" + streamSeq.incrementAndGet(),
@@ -2768,9 +2778,7 @@ object PipelineQueries {
     // read — the THIRD at-ingest sketch beside stream_distinct's HLL
     // registers and stream_cms's counters ----------------------------------
     "stream_quantiles" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
         "stream_quantiles_" + streamSeq.incrementAndGet(),
@@ -2805,9 +2813,7 @@ object PipelineQueries {
     // user heavy-hitter estimates. The frequency member of the at-ingest
     // sketch pair (stream_distinct is the distinct member). -------------
     "stream_cms" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val (depth, width) = (3, 256)
       val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
@@ -2862,9 +2868,7 @@ object PipelineQueries {
       // predicate runs INSIDE the micro-batch, distributed, and must
       // admit the sentinel (pinned user_id=0, value=0.0, far-future ts)
       // or the flush batch would never reach the watermark operator.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val v = col("value")
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
@@ -2903,9 +2907,7 @@ object PipelineQueries {
     // from the tumbling case (overlapping state entries per key). Same
     // pre-loaded replay + sentinel flush as stream_window. -----------------
     "stream_window_sliding" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
         "stream_window_sliding_" + streamSeq.incrementAndGet(),
@@ -3166,9 +3168,7 @@ object PipelineQueries {
       // arrival, not on watermark); the duplicate injection is a
       // streaming self-union inside the micro-batch — the file source
       // scans twice, both distributed
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
         "stream_dedup_" + streamSeq.incrementAndGet()) { source =>
         val stream = source()
@@ -3199,9 +3199,7 @@ object PipelineQueries {
       // chain runs distributed inside the micro-batch. The sentinel is a
       // far-future doc_id (the crawl clock), whose unique URL forms its
       // own window group — filtered by its out-of-range keep_doc.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val maxId = sharedMaxDocId(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
         "stream_urldedup_" + streamSeq.incrementAndGet(),
@@ -3235,9 +3233,7 @@ object PipelineQueries {
       // fire mid-stream and drop/renumber sessions), the sentinel batch
       // closes every open session. Sentinel keyed user_id = −1 so its
       // own session filters out by sign; real keys are non-negative.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       import ss.implicits._
       val maxUs = sharedMaxTsUs(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
@@ -3274,9 +3270,7 @@ object PipelineQueries {
       // ONE-batch file-source replay: every event emits immediately (the
       // detector keys state per series and sorts within the batch, so
       // file-scan arrival order cannot matter)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       import ss.implicits._
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
         "stream_zscore_" + streamSeq.incrementAndGet()) { source =>
@@ -3307,9 +3301,7 @@ object PipelineQueries {
       // Two independent file-source streams over the same table, both
       // complete in one micro-batch → every interval match emits, no
       // sentinel (see FileReplay.replay)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       def slice(stream: DataFrame, tp: String) = stream
         .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
           col("event_id"), col("event_type"))
@@ -4045,9 +4037,7 @@ object PipelineQueries {
     // per micro-batch). Oracle = the equivalent batch join. --------------
     "stream_enrich" -> ((s, d) => {
       // stateless stream⋈static broadcast enrich → ONE-batch file replay
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val dim = Tables.events(ss, d).select(col("user_id")).distinct()
         .withColumn("tier", col("user_id") % 5)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
@@ -4070,9 +4060,7 @@ object PipelineQueries {
     "stream_quality" -> ((s, d) => {
       // stateless gate → ONE-batch file-source replay: the quality rules
       // run distributed inside the micro-batch, no driver round-trip
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
         "stream_quality_" + streamSeq.incrementAndGet()) { source =>
         val stream = source()
@@ -4089,9 +4077,7 @@ object PipelineQueries {
     // batch-equivalent to embed_pq_codes, same oracle) -------------------
     "stream_pq" -> ((s, d) => {
       // stateless map-only encode → ONE-batch file-source replay
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
         "stream_pq_" + streamSeq.incrementAndGet()) { source =>
         val stream = source()
@@ -4109,9 +4095,7 @@ object PipelineQueries {
     // sequence explode, stateless — the streaming plan IS the batch
     // plan); same oracle as doc_chunks ------------------------------------
     "stream_chunks" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
         "stream_chunks_" + streamSeq.incrementAndGet()) { source =>
         val stream = source()
@@ -4128,9 +4112,7 @@ object PipelineQueries {
     // arriving words append straight into writeHammingIndex's
     // bucket-partitioned layout ------------------------------------------
     "stream_hamming" -> ((s, d) => {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
         "stream_hamming_" + streamSeq.incrementAndGet()) { source =>
         val stream = source()
@@ -4153,9 +4135,7 @@ object PipelineQueries {
     // StreamingSpec, the stream_hamming discipline) ----------------------
     "stream_ivf" -> ((s, d) => {
       val ivf = sharedIvfTrained(s, d)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
         "stream_ivf_" + streamSeq.incrementAndGet()) { source =>
         val stream = source()
@@ -4173,9 +4153,7 @@ object PipelineQueries {
     "stream_crossdedup" -> ((s, d) => {
       // stateless broadcast anti-join → ONE-batch file-source replay;
       // the fresh-side gate runs inside the micro-batch
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+      val ss = replaySession(s)
       val srcNum = expr("cast(substring(source, 4) as int)")
       val ref = Tables.documents(ss, d).filter(srcNum < 10)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",

@@ -5,19 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(cores = "4")
 
   def sf001 = "/root/testdata/sf0.001"
 
   /** The sf0.01 gate fixture, env-overridable like graft.Bench /
-    * graft.tools.BpeBatchProbe so the suite isn't coupled to this
+    * graft.tools.Profile so the suite isn't coupled to this
     * machine's layout (r12 advice). */
   def sf01: String =
     sys.env.getOrElse("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.01")
