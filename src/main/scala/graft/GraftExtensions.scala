@@ -1,26 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.{AllShinglesExpr, CharWindowsExpr, DistinctShingles,
-  DotProduct, HammingDistance, Int8Snap, L2Normalize, MinHashSignature,
-  NfcNormalize, NgramStats, SimHash64, WinnowFingerprints}
+import graft.functions.{AllShingles, CharWindows, MinHashUtil, RepetitionUtil,
+  Shingles, SimHashUtil, TextNorm, VectorOps, Winnow}
 
-/** `SparkSessionExtensions` installer: registers the engine's custom
-  * codegen expressions as SQL functions so `spark.sql` queries (and the
-  * thrift/connect surfaces) can call them directly:
+/** `SparkSessionExtensions` installer: registers the engine's kernels as
+  * SQL functions so `spark.sql` queries (and the thrift/connect surfaces)
+  * can call them directly:
   *
   * {{{
   *   spark.sql("SELECT vec_dot(l2_normalize(a.v), l2_normalize(b.v)) ...")
   * }}}
   *
   * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`.
-  * The DataFrame surface ([[graft.functions.VectorOps]]) works without it.
+  * The DataFrame surface ([[graft.functions.VectorOps]] and the other
+  * Column builders) works without it.
   */
 object GraftExtensions {
   // a wrong-arity SQL call surfaces as the standard WRONG_NUM_ARGS
@@ -29,13 +30,12 @@ object GraftExtensions {
       build: Seq[Expression] => Expression): Seq[Expression] => Expression =
     args => {
       if (args.length != n)
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .wrongNumArgs(name, n, args.length)
+        ColumnBridge.wrongNumArgs(name, n, args.length)
       build(args)
     }
 
-  /** Kernel parameters (shingle n, signature k) are constructor Ints on
-    * the expression, not child expressions — a SQL call must pass them as
+  /** Kernel parameters (shingle n, signature k) are Int parameters of the
+    * Column builders, not child expressions — a SQL call must pass them as
     * INT literals, extracted here at resolution time. */
   private[graft] def litInt(fn: String, argName: String, e: Expression): Int =
     e match {
@@ -50,69 +50,49 @@ object GraftExtensions {
       case other => throw new IllegalArgumentException(
         s"$fn: $argName must be an INT literal, got $other")
     }
+
+  /** Every registered SQL function: (name, arity, builder). Each builder
+    * calls the DataFrame surface's Column builder, so the SQL and
+    * DataFrame surfaces cannot drift. */
+  val functions: Seq[(String, Int, Seq[Expression] => Expression)] = {
+    def fn(name: String, n: Int)(build: Seq[Expression] => Column) =
+      (name, n, (args: Seq[Expression]) =>
+        ColumnBridge.convertedExpression(build(args)))
+    def c(e: Expression): Column = ColumnBridge.column(e)
+    Seq(
+      fn("vec_dot", 2)(a => VectorOps.dot(c(a(0)), c(a(1)))),
+      fn("l2_normalize", 1)(a => VectorOps.l2normalize(c(a(0)))),
+      fn("hamming", 2)(a => VectorOps.hamming(c(a(0)), c(a(1)))),
+      fn("nfc", 1)(a => TextNorm.nfcNormalize(c(a(0)))),
+      fn("shingles", 2)(a => Shingles.distinctShingles(c(a(0)),
+        litInt("shingles", "n", a(1)))),
+      fn("minhash_signature", 2)(a => MinHashUtil.signatures(c(a(0)),
+        litInt("minhash_signature", "k", a(1)))),
+      fn("simhash64", 1)(a => SimHashUtil.simhash64(c(a(0)))),
+      fn("ngram_stats", 2)(a => RepetitionUtil.ngramStats(c(a(0)),
+        litInt("ngram_stats", "n", a(1)))),
+      fn("int8_snap", 1)(a => VectorOps.int8Snap(c(a(0)))),
+      fn("char_windows", 3)(a => CharWindows.charWindows(c(a(0)),
+        litInt("char_windows", "window", a(1)),
+        litInt("char_windows", "stride", a(2)))),
+      fn("all_shingles", 2)(a => AllShingles.allShingles(c(a(0)),
+        litInt("all_shingles", "n", a(1)))),
+      fn("winnow_fingerprints", 3)(a => Winnow.fingerprints(c(a(0)),
+        litInt("winnow_fingerprints", "k", a(1)),
+        litInt("winnow_fingerprints", "w", a(2)))))
+  }
+
+  /** The arity-checked builder the SQL function `name` resolves through. */
+  def builder(name: String): Seq[Expression] => Expression =
+    functions.collectFirst { case (`name`, n, build) => arity(name, n)(build) }
+      .getOrElse(throw new NoSuchElementException(s"no SQL function $name"))
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.arity
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      arity("vec_dot", 2)(args => DotProduct(args(0), args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("l2_normalize"),
-      new ExpressionInfo(classOf[L2Normalize].getName, "l2_normalize"),
-      arity("l2_normalize", 1)(args => L2Normalize(args.head))))
-    ext.injectFunction((
-      FunctionIdentifier("hamming"),
-      new ExpressionInfo(classOf[HammingDistance].getName, "hamming"),
-      arity("hamming", 2)(args => HammingDistance(args(0), args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc"),
-      arity("nfc", 1)(args => NfcNormalize(args.head))))
-    ext.injectFunction((
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[DistinctShingles].getName, "shingles"),
-      arity("shingles", 2)(args => DistinctShingles(args(0),
-        GraftExtensions.litInt("shingles", "n", args(1))))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName,
-        "minhash_signature"),
-      arity("minhash_signature", 2)(args => MinHashSignature(args(0),
-        GraftExtensions.litInt("minhash_signature", "k", args(1))))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      arity("simhash64", 1)(args => SimHash64(args.head))))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_stats"),
-      new ExpressionInfo(classOf[NgramStats].getName, "ngram_stats"),
-      arity("ngram_stats", 2)(args => NgramStats(args(0),
-        GraftExtensions.litInt("ngram_stats", "n", args(1))))))
-    ext.injectFunction((
-      FunctionIdentifier("int8_snap"),
-      new ExpressionInfo(classOf[Int8Snap].getName, "int8_snap"),
-      arity("int8_snap", 1)(args => Int8Snap(args.head))))
-    ext.injectFunction((
-      FunctionIdentifier("char_windows"),
-      new ExpressionInfo(classOf[CharWindowsExpr].getName, "char_windows"),
-      arity("char_windows", 3)(args => CharWindowsExpr(args(0),
-        GraftExtensions.litInt("char_windows", "window", args(1)),
-        GraftExtensions.litInt("char_windows", "stride", args(2))))))
-    ext.injectFunction((
-      FunctionIdentifier("all_shingles"),
-      new ExpressionInfo(classOf[AllShinglesExpr].getName, "all_shingles"),
-      arity("all_shingles", 2)(args => AllShinglesExpr(args(0),
-        GraftExtensions.litInt("all_shingles", "n", args(1))))))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName,
-        "winnow_fingerprints"),
-      arity("winnow_fingerprints", 3)(args => WinnowFingerprints(args(0),
-        GraftExtensions.litInt("winnow_fingerprints", "k", args(1)),
-        GraftExtensions.litInt("winnow_fingerprints", "w", args(2))))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, _, _) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        GraftExtensions.builder(name)))
+    }
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All k MinHash components of a shingle array in one map-side pass.
@@ -73,21 +72,6 @@ object MinHashUtil {
   }
 
   def signatures(shingles: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), k))
-}
-
-case class MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-
-  override protected def nullSafeEval(v: Any): Any =
-    MinHashUtil.signatures(v.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.MinHashUtil.signatures($v, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    ColumnBridge.staticCall(this, "signatures",
+      ArrayType(StringType, containsNull = true))(shingles, lit(k))
 }

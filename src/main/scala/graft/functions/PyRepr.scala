@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Python-`repr` rendering of a double (F9 hard part).
@@ -17,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fractional digit in fixed form (`2.0`, not `2`).
   *
   * Java's `Double.toString` disagrees on both counts (`1.0E16`,
-  * `1.2345678E7`), so byte-identical goldens need this expression. DuckDB's
+  * `1.2345678E7`), so byte-identical goldens need this kernel. DuckDB's
   * `CAST(x AS DOUBLE)::VARCHAR` implements the same shortest-round-trip +
   * threshold rules, which is what makes the result oracle-checkable.
   */
@@ -78,19 +76,5 @@ object PyRepr {
   def reprUtf8(d: Double): UTF8String = UTF8String.fromString(repr(d))
 
   def pyRepr(c: Column): Column =
-    ColumnBridge.column(PyReprDouble(ColumnBridge.expression(c)))
-}
-
-case class PyReprDouble(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(v: Any): Any =
-    PyRepr.reprUtf8(v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.PyRepr.reprUtf8($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    ColumnBridge.staticCall(this, "reprUtf8", StringType)(c)
 }

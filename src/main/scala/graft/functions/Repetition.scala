@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document n-gram frequency statistics in one map-side pass:
@@ -15,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The composable form (transform → group or a sort + run-length
   * aggregate) is 4+ nested higher-order functions evaluated interpreted;
-  * like [[DistinctShingles]]/[[MinHashSignature]] this collapses the work
+  * like [[Shingles]]/[[MinHashUtil]] this collapses the work
   * into a single frequency-map loop callable from whole-stage codegen.
   */
 object RepetitionUtil {
@@ -41,20 +40,6 @@ object RepetitionUtil {
   }
 
   def ngramStats(tokens: Column, n: Int): Column =
-    ColumnBridge.column(NgramStats(ColumnBridge.expression(tokens), n))
-}
-
-case class NgramStats(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(v: Any): Any =
-    RepetitionUtil.ngramStats(v.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.RepetitionUtil.ngramStats($v, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    ColumnBridge.staticCall(this, "ngramStats",
+      ArrayType(IntegerType, containsNull = false))(tokens, lit(n))
 }

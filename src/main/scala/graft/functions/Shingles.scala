@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct word n-gram shingles of a token array, in one pass.
@@ -14,14 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * i => array_join(slice(toks, i+1, n), " ")))` — evaluates four nested
   * higher-order functions per row with a fresh array allocation per
   * shingle; at bench scale that chain alone dominated the dedup pipelines
-  * (~4 s of a 6 s query). This expression does the same work in a single
+  * (~4 s of a 6 s query). This kernel does the same work in a single
   * tight loop (first-occurrence order, exact same strings: tokens joined
   * by one space), invoked as one call per row from inside whole-stage
   * codegen.
   */
 object Shingles {
-  /** Loop body shared by eval and generated code (static forwarder makes
-    * it callable from Janino-compiled Java). */
+  /** The kernel (its static forwarder is what `StaticInvoke` calls). */
   def distinctShingles(toks: ArrayData, n: Int): ArrayData = {
     val len = toks.numElements()
     if (len < n) return new GenericArrayData(Array.empty[Any])
@@ -46,24 +44,11 @@ object Shingles {
 
   val space: UTF8String = UTF8String.fromString(" ")
 
+  /** String arrays of every kernel here: shingles are never null. */
+  private[functions] val strings = ArrayType(StringType, containsNull = false)
+
   def distinctShingles(tokens: Column, n: Int): Column =
-    ColumnBridge.column(DistinctShingles(ColumnBridge.expression(tokens), n))
-}
-
-case class DistinctShingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(v: Any): Any =
-    Shingles.distinctShingles(v.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.Shingles.distinctShingles($v, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    ColumnBridge.staticCall(this, "distinctShingles", strings)(tokens, lit(n))
 }
 
 /** ALL word n-gram shingles of a token array (duplicates kept, position
@@ -91,26 +76,11 @@ object AllShingles {
     new GenericArrayData(out)
   }
 
-  def allShingles(tokens: Column, n: Int): Column =
-    ColumnBridge.column(
-      AllShinglesExpr(ColumnBridge.expression(tokens), n))
-}
-
-case class AllShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n > 0, s"n=$n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(v: Any): Any =
-    AllShingles.allShingles(v.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.AllShingles.allShingles($v, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def allShingles(tokens: Column, n: Int): Column = {
+    require(n > 0, s"n=$n")
+    ColumnBridge.staticCall(this, "allShingles", Shingles.strings)(
+      tokens, lit(n))
+  }
 }
 
 /** Sliding character windows of a string (`window` chars every `stride`),
@@ -134,25 +104,10 @@ object CharWindows {
     new GenericArrayData(out)
   }
 
-  def charWindows(str: Column, window: Int, stride: Int): Column =
-    ColumnBridge.column(
-      CharWindowsExpr(ColumnBridge.expression(str), window, stride))
-}
-
-case class CharWindowsExpr(child: Expression, window: Int, stride: Int)
-    extends UnaryExpression {
-  require(window > 0 && stride > 0 && stride <= window,
-    s"window=$window stride=$stride")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(v: Any): Any =
-    CharWindows.charWindows(v.asInstanceOf[UTF8String], window, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CharWindows.charWindows($v, $window, $stride);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def charWindows(str: Column, window: Int, stride: Int): Column = {
+    require(window > 0 && stride > 0 && stride <= window,
+      s"window=$window stride=$stride")
+    ColumnBridge.staticCall(this, "charWindows", Shingles.strings)(
+      str, lit(window), lit(stride))
+  }
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of a token array as one codegen'd scalar.
@@ -62,19 +60,5 @@ object SimHashUtil {
   }
 
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(v: Any): Any =
-    SimHashUtil.simhash64(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.SimHashUtil.simhash64($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    ColumnBridge.staticCall(this, "simhash64", StringType)(tokens)
 }

@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a Catalyst expression — the canonical first
+/** Unicode NFC normalization as a static kernel — the canonical first
   * step of text cleaning for training corpora (é as one codepoint vs
   * e + combining accent must dedupe/hash identically). Spark has no
   * built-in `normalize`; a Scala UDF would break codegen in the hot path,
@@ -28,19 +26,5 @@ object TextNorm {
 
   /** DataFrame surface: NFC-normalize a string column. */
   def nfcNormalize(c: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
-}
-
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextNorm.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextNorm.nfc($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    ColumnBridge.staticCall(this, "nfc", StringType)(c)
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd vector kernels for the similarity-search operators.
   *
@@ -247,56 +248,6 @@ case class Int8Snap(child: Expression)
     copy(child = newChild)
 }
 
-/** `hamming(a, b)` = number of positions where two equal-length strings
-  * differ (bit-signature distance for SimHash). Codegen'd byte loop —
-  * the `zip_with(split(a, ""), split(b, ""), ...)` formulation allocates
-  * two arrays per comparison inside the O(pairs) candidate join.
-  * Unequal-length inputs yield NULL: a silent min-length prefix distance
-  * (`hamming('1', sig64) = 0`) would be a wrong answer dressed up as a
-  * match — signatures are fixed-width, so a length mismatch is caller
-  * error, surfaced as null (also through the SQL-registered `hamming`). */
-case class HammingDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-    val y = b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-    if (x.length != y.length) return null
-    var d = 0
-    var i = 0
-    while (i < x.length) { if (x(i) != y(i)) d += 1; i += 1 }
-    d
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""
-         |byte[] $x = $a.getBytes();
-         |byte[] $y = $b.getBytes();
-         |if ($x.length != $y.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $d = 0;
-         |  for (int $i = 0; $i < $x.length; $i++) {
-         |    if ($x[$i] != $y[$i]) $d++;
-         |  }
-         |  ${ev.value} = $d;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** `sign_fingerprint(v)`: the FULL packed sign fingerprint — bit b =
   * (⟨v, planes[b]⟩ ≥ 0) — in ONE expression over a plane matrix baked
   * in as a reference object. The composable formulation (`bits`
@@ -399,9 +350,29 @@ object VectorOps {
   def l2normalize(v: Column): Column =
     ColumnBridge.column(L2Normalize(ColumnBridge.expression(v)))
 
+  /** `hamming(a, b)` = number of positions where two equal-length strings
+    * differ (bit-signature distance for SimHash): one byte loop — the
+    * `zip_with(split(a, ""), split(b, ""), ...)` formulation allocates
+    * two arrays per comparison inside the O(pairs) candidate join.
+    * Unequal-length inputs yield NULL: a silent min-length prefix distance
+    * (`hamming('1', sig64) = 0`) would be a wrong answer dressed up as a
+    * match — signatures are fixed-width, so a length mismatch is caller
+    * error, surfaced as null (also through the SQL-registered `hamming`).
+    * The distance is boxed for that null; `Integer.valueOf` caches small
+    * ints, so a 64-bit signature distance allocates nothing. */
+  def hammingDistance(a: UTF8String, b: UTF8String): java.lang.Integer = {
+    val x = a.getBytes
+    val y = b.getBytes
+    if (x.length != y.length) return null
+    var d = 0
+    var i = 0
+    while (i < x.length) { if (x(i) != y(i)) d += 1; i += 1 }
+    Integer.valueOf(d)
+  }
+
   def hamming(a: Column, b: Column): Column =
-    ColumnBridge.column(HammingDistance(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ColumnBridge.staticCall(this, "hammingDistance", IntegerType,
+      returnNullable = true)(a, b)
 
   def int8Snap(v: Column): Column =
     ColumnBridge.column(Int8Snap(ColumnBridge.expression(v)))

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD'03)
@@ -99,28 +97,13 @@ object WinnowUtil {
   }
 }
 
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  // validated here (not only in Dedup.winnowFingerprints) so the SQL
-  // surface rejects bad params at resolution instead of crashing the
-  // kernel inside an executor task
-  require(k >= 1 && w >= 1, s"winnow_fingerprints: k=$k, w=$w must be >= 1")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(v: Any): Any =
-    WinnowUtil.fingerprints(v.asInstanceOf[ArrayData], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.WinnowUtil.fingerprints($v, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Winnow {
   /** Distinct winnowing fingerprints of a token-array column. */
-  def fingerprints(toks: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowFingerprints(ColumnBridge.expression(toks), k, w))
+  def fingerprints(toks: Column, k: Int, w: Int): Column = {
+    // checked here, where the SQL function builds too, so bad params fail
+    // at resolution instead of crashing the kernel inside an executor task
+    require(k >= 1 && w >= 1, s"winnow_fingerprints: k=$k, w=$w must be >= 1")
+    ColumnBridge.staticCall(WinnowUtil, "fingerprints", Shingles.strings)(
+      toks, lit(k), lit(w))
+  }
 }

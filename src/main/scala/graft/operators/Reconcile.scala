@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Set-reconciliation of entity inventories — reference
@@ -23,6 +23,18 @@ import org.apache.spark.sql.functions._
   * (apply with Delta `MERGE` or an overwrite-by-partition).
   */
 object Reconcile {
+
+  /** The action of one joined key, shared by [[changes]] and [[applied]]:
+    * incoming-only → add; stored-only → delete, guarded by the incoming
+    * SNAPSHOT's timestamp (`manager.py:83-87`); both → update, guarded by
+    * the incoming row's timestamp. A guard that does not hold — including
+    * a NULL stored timestamp, which is not provably older — yields NULL:
+    * no action, the stored row stays. */
+  private def action(stAbsent: Column, incAbsent: Column, stTs: Column,
+                     incTs: Column, incomingSetTs: Double): Column =
+    when(stAbsent, lit("add"))
+      .when(incAbsent, when(stTs <= lit(incomingSetTs), lit("delete")))
+      .otherwise(when(stTs <= incTs, lit("update")))
 
   /** @param stored     current inventory
     * @param incoming   newly discovered inventory
@@ -67,18 +79,12 @@ object Reconcile {
       .select(key.map(col) :+ col(storedTsCol).as("__st_ts"): _*)
       .withColumn("__st", lit(true))
 
-    // one full-outer join classifies all three actions: incoming-only →
-    // add; stored-only → delete, guarded by the incoming SNAPSHOT's
-    // timestamp (`manager.py:83-87`); both → update, guarded by the
-    // incoming row's timestamp. Guard-skipped rows yield NULL and drop.
+    // one full-outer join classifies all three actions; guard-skipped
+    // rows yield NULL and drop
     st.join(incKeys, key, "full_outer")
       .select(key.map(col) :+
-        when(col("__st").isNull, lit("add"))
-          .when(col("__inc").isNull,
-            when(col("__st_ts") <= lit(incomingSetTs), lit("delete")))
-          .otherwise(
-            when(col("__st_ts") <= col("__inc_ts"), lit("update")))
-          .as("action"): _*)
+        action(col("__st").isNull, col("__inc").isNull, col("__st_ts"),
+          col("__inc_ts"), incomingSetTs).as("action"): _*)
       .filter(col("action").isNotNull)
   }
 
@@ -152,13 +158,13 @@ object Reconcile {
       case Some(ts) => col("__irow").getField(ts)
       case None     => lit(incomingSetTs)
     }
+    // the action is projected once, then picks the surviving row
     val keep =
-      when(col("__srow").isNull, col("__irow")) // add
-        .when(col("__irow").isNull, // delete — unless the stored row is newer
-          when(stTs > lit(incomingSetTs), col("__srow")))
-        .otherwise(when(stTs <= incTs, col("__irow")) // update takes incoming
-          .otherwise(col("__srow"))) // guard-skipped update keeps stored
+      when(col("__act").isNull, col("__srow")) // no action: stored stays
+        .when(col("__act") =!= lit("delete"), col("__irow")) // add/update
     stS.join(incS, key, "full_outer")
+      .select(col("__srow"), col("__irow"), action(col("__srow").isNull,
+        col("__irow").isNull, stTs, incTs, incomingSetTs).as("__act"))
       .select(keep.as("__row"))
       .filter(col("__row").isNotNull)
       .select(cols.map(c => col("__row").getField(c).as(c)): _*)

@@ -538,8 +538,6 @@ object PipelineQueries {
           .mkString("\n  UNION ALL\n")}
        |)""".stripMargin
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The child session every FileReplay row runs in: it isolates the
     * scoped-down state-store partition count (see stream_rate) from
     * concurrent queries on the parent session, and scopes
@@ -2701,10 +2699,11 @@ object PipelineQueries {
     // --- streaming: watermarked tumbling-window aggregation ----------------
     // The core Structured Streaming shape for event streams (windowed
     // counts/sums with bounded state): 6 h tumbling windows on event time,
-    // 1 h watermark, append mode. Replayed through a chunked MemoryStream in
-    // ts order; a far-future sentinel batch advances the watermark past the
-    // last real window so append mode emits everything (that final window
-    // would otherwise stay open forever on a bounded replay). The oracle is
+    // 1 h watermark, append mode. Replayed through FileReplay: the table
+    // in one batch, then a far-future sentinel batch advances the
+    // watermark past the last real window so append mode emits everything
+    // (that final window would otherwise stay open forever on a bounded
+    // replay). The oracle is
     // the equivalent batch GROUP BY — streaming and batch must agree
     // exactly on in-order data.
     "stream_window" -> ((s, d) => {
@@ -2716,7 +2715,7 @@ object PipelineQueries {
       val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_window_" + streamSeq.incrementAndGet(),
+        "stream_window",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
         val stream = source()
@@ -2748,7 +2747,7 @@ object PipelineQueries {
       val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val reg = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_distinct_" + streamSeq.incrementAndGet(),
+        "stream_distinct",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
         val stream = source()
@@ -2781,7 +2780,7 @@ object PipelineQueries {
       val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_quantiles_" + streamSeq.incrementAndGet(),
+        "stream_quantiles",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
         val stream = source()
@@ -2817,7 +2816,7 @@ object PipelineQueries {
       val maxUs = sharedMaxTsUs(s, d)
       val (depth, width) = (3, 256)
       val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_cms_" + streamSeq.incrementAndGet(),
+        "stream_cms",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
         val stream = source()
@@ -2872,7 +2871,7 @@ object PipelineQueries {
       val maxUs = sharedMaxTsUs(s, d)
       val v = col("value")
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_ohlc_" + streamSeq.incrementAndGet(),
+        "stream_ohlc",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
         val stream = source()
@@ -2910,7 +2909,7 @@ object PipelineQueries {
       val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_window_sliding_" + streamSeq.incrementAndGet(),
+        "stream_window_sliding",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
         val stream = source()
@@ -3170,7 +3169,7 @@ object PipelineQueries {
       // scans twice, both distributed
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_dedup_" + streamSeq.incrementAndGet()) { source =>
+        "stream_dedup") { source =>
         val stream = source()
           val base = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("event_id"),
@@ -3202,7 +3201,7 @@ object PipelineQueries {
       val ss = replaySession(s)
       val maxId = sharedMaxDocId(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        "stream_urldedup_" + streamSeq.incrementAndGet(),
+        "stream_urldedup",
         sentinel = Some(
           docsSentinel(ss, d, maxId + 90L * 86400L))) { source =>
         val stream = source()
@@ -3237,7 +3236,7 @@ object PipelineQueries {
       import ss.implicits._
       val maxUs = sharedMaxTsUs(s, d)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_sessionize_" + streamSeq.incrementAndGet(),
+        "stream_sessionize",
         sentinel = Some(
           eventsSentinel(ss, d, maxUs + 30L * 86400000000L, userId = -1L))) { source =>
         val stream = source()
@@ -3273,7 +3272,7 @@ object PipelineQueries {
       val ss = replaySession(s)
       import ss.implicits._
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_zscore_" + streamSeq.incrementAndGet()) { source =>
+        "stream_zscore") { source =>
         val stream = source()
           val evs = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
@@ -3308,7 +3307,7 @@ object PipelineQueries {
         .filter(col("user_id") < 30 && col("event_type") === tp)
         .drop("event_type")
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_join_" + streamSeq.incrementAndGet()) { source =>
+        "stream_join") { source =>
         val (s1, s2) = (source(), source())
         val v = slice(s1, "view")
           .withColumnRenamed("ts_us", "view_ts_us")
@@ -4041,7 +4040,7 @@ object PipelineQueries {
       val dim = Tables.events(ss, d).select(col("user_id")).distinct()
         .withColumn("tier", col("user_id") % 5)
       graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        "stream_enrich_" + streamSeq.incrementAndGet()) { source =>
+        "stream_enrich") { source =>
         val stream = source()
         stream
           .select(col("event_id"), col("user_id"),
@@ -4062,7 +4061,7 @@ object PipelineQueries {
       // run distributed inside the micro-batch, no driver round-trip
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        "stream_quality_" + streamSeq.incrementAndGet()) { source =>
+        "stream_quality") { source =>
         val stream = source()
         TextAnalysis.gopherRules(
             stream.select(col("doc_id"), col("text"), col("source")), "text")
@@ -4079,7 +4078,7 @@ object PipelineQueries {
       // stateless map-only encode → ONE-batch file-source replay
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
-        "stream_pq_" + streamSeq.incrementAndGet()) { source =>
+        "stream_pq") { source =>
         val stream = source()
         graft.llm.Pq.encode(
             stream.select(col("vec_id"),
@@ -4097,7 +4096,7 @@ object PipelineQueries {
     "stream_chunks" -> ((s, d) => {
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        "stream_chunks_" + streamSeq.incrementAndGet()) { source =>
+        "stream_chunks") { source =>
         val stream = source()
         TextAnalysis.chunkDocs(
           stream.select(col("doc_id"), col("text")), "text", "doc_id",
@@ -4114,7 +4113,7 @@ object PipelineQueries {
     "stream_hamming" -> ((s, d) => {
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
-        "stream_hamming_" + streamSeq.incrementAndGet()) { source =>
+        "stream_hamming") { source =>
         val stream = source()
         stream
           .select(col("vec_id"),
@@ -4137,7 +4136,7 @@ object PipelineQueries {
       val ivf = sharedIvfTrained(s, d)
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
-        "stream_ivf_" + streamSeq.incrementAndGet()) { source =>
+        "stream_ivf") { source =>
         val stream = source()
         stream
           .filter(size(col("embedding")) === 64)
@@ -4157,7 +4156,7 @@ object PipelineQueries {
       val srcNum = expr("cast(substring(source, 4) as int)")
       val ref = Tables.documents(ss, d).filter(srcNum < 10)
       graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        "stream_crossdedup_" + streamSeq.incrementAndGet()) { source =>
+        "stream_crossdedup") { source =>
         val stream = source()
         Dedup.crossCorpusKeepBroadcast(
           stream.filter(srcNum >= 10)

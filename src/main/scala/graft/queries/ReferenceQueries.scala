@@ -28,8 +28,6 @@ object ReferenceQueries {
     df.select("resource_id", "resource_site", "resource_subclass",
       "resource_type")
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   val queries: Map[String, Q] = Map(
     // --- P1-P5: the resource-filter DSL --------------------------------
     "dsl_filter_basic" -> ((s, d) =>
@@ -656,10 +654,11 @@ object ReferenceQueries {
         .select("index", "sensor", "scale")
     }),
 
-    // --- ST1-ST4/A1/J8: the STREAMING rate transform, replayed through a
-    // bounded MemoryStream micro-batch (flatMapGroupsWithState path) — the
-    // same guards as the batch a1_rate, verified against the same windowed
-    // oracle (ts = event_id, unique per series, interval 1000 → TTL 3000).
+    // --- ST1-ST4/A1/J8: the STREAMING rate transform, replayed through the
+    // file-source harness in ONE micro-batch (flatMapGroupsWithState path)
+    // — the same guards as the batch a1_rate, verified against the same
+    // windowed oracle (ts = event_id, unique per series, interval 1000 →
+    // TTL 3000).
     "stream_rate" -> ((s, d) => {
       // A CHILD session (shared SparkContext, isolated SQLConf) scopes the
       // state-store partition override to this replay — the parent session
@@ -668,38 +667,21 @@ object ReferenceQueries {
       // lives in the context conf and is inherited.
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      implicit val sqlCtx = ss.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import ss.implicits._
-      import scala.jdk.CollectionConverters._
-      // Replay in (series, ts) order: state advances on every sample
-      // (getset semantics), so cross-chunk per-series order must match the
-      // oracle's lag() window order.
-      val samples = Tables.events(ss, d).filter(col("user_id") < 30)
-        .select(
-          concat_ws("|", col("user_id"), col("event_type")).as("series"),
-          lit("value").as("metric"),
-          col("value").cast("double").as("value"),
-          col("event_id").cast("double").as("ts"),
-          lit(1000L).as("interval"))
-        .orderBy("series", "ts")
-        .as[MetricSample]
-      val input = MemoryStream[MetricSample]
-      val qname = "stream_rate_" + streamSeq.incrementAndGet()
-      // Chunked feed off toLocalIterator: the driver holds one chunk of
-      // rows at a time instead of collect()ing the whole replay (which
-      // grows linearly with sf). All chunks are added BEFORE start() so
-      // the whole replay is ONE micro-batch — StreamingRate sorts each
-      // group's batch by ts, so a single batch is order-correct, and the
-      // ~12 extra micro-batch spin-ups of feeding a running query go away.
-      samples.toLocalIterator().asScala.grouped(8192)
-        .foreach(chunk => input.addData(chunk))
-      val q = StreamingRate(input.toDS(), stateTtl = false)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      ss.table(qname).select("series", "ts", "rate", "confidence")
+      // One micro-batch in any arrival order: state advances on every
+      // sample (getset semantics), and StreamingRate sorts each group's
+      // batch by ts, matching the oracle's lag() window order.
+      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
+        "stream_rate") { source =>
+        StreamingRate(source().filter(col("user_id") < 30)
+          .select(
+            concat_ws("|", col("user_id"), col("event_type")).as("series"),
+            lit("value").as("metric"),
+            col("value").cast("double").as("value"),
+            col("event_id").cast("double").as("ts"),
+            lit(1000L).as("interval"))
+          .as[MetricSample], stateTtl = false).toDF()
+      }.select("series", "ts", "rate", "confidence")
     }),
 
     // --- Group assembly: DSL output → reference-shaped nested rows with a

@@ -48,16 +48,14 @@ object InfluxSink {
   type Transport = Seq[String] => WriteResult
 
   /** Render rows to line protocol. `fields` must already be the rendered
-    * field set (e.g. `name__gauge=1.5`). Tag KEYS are validated at this
-    * boundary by default (the renderer deliberately does not escape them,
-    * for byte parity with `consumer.py:123-126` — an unsafe key must fail
+    * field set (e.g. `name__gauge=1.5`). Tag KEYS are always validated at
+    * this boundary (the renderer deliberately does not escape them, for
+    * byte parity with `consumer.py:123-126` — an unsafe key must fail
     * loudly rather than corrupt the wire). */
   def toLines(df: DataFrame, measurement: Column, tags: Column,
-              fields: Column, tsSeconds: Column,
-              validateTagKeys: Boolean = true): DataFrame = {
-    val safeTags = if (validateTagKeys) Influx.assertSafeTagKeys(tags) else tags
-    df.select(Influx.line(measurement, safeTags, fields, tsSeconds).as("line"))
-  }
+              fields: Column, tsSeconds: Column): DataFrame =
+    df.select(Influx.line(measurement, Influx.assertSafeTagKeys(tags),
+      fields, tsSeconds).as("line"))
 
   /** Write a (batch or foreachBatch) DataFrame of lines through the
     * transport with the reference's batch/retry/poison-point policy:

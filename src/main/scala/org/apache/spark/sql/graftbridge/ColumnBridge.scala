@@ -2,17 +2,35 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.types.DataType
 
 /** Spark 4.x moved `Column` onto ColumnNode; building a `Column` from a
   * Catalyst `Expression` goes through `classic.ExpressionUtils`, which is
   * `private[sql]` — this tiny shim (in a subpackage of `org.apache.spark.sql`,
-  * the standard extension-library pattern) re-exports just the two
-  * converters the engine needs for its custom codegen expressions.
+  * the standard extension-library pattern) re-exports just the
+  * converters the engine needs for its custom codegen expressions and
+  * static kernels.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `expression` with every nested Column node converted too — what a
+    * Dataset does before analysis. A SQL function builder's result goes
+    * straight to the analyzer, so it must not carry unconverted nodes. */
+  def convertedExpression(c: Column): Expression =
+    ColumnNodeToExpressionConverter(c.node)
+
+  /** A Column that calls the static kernel `obj.fn(args…)` per row —
+    * Spark's own `StaticInvoke`, which forwards from generated and
+    * interpreted code alike. A null argument gives a null result without
+    * calling `fn`; `returnNullable` says whether `fn` may return null. */
+  def staticCall(obj: AnyRef, fn: String, dataType: DataType,
+                 returnNullable: Boolean = false)(args: Column*): Column =
+    column(StaticInvoke(obj.getClass, dataType, fn, args.map(expression),
+      returnNullable = returnNullable))
 
   /** Proper analysis-time arity error for injected SQL functions — the
     * same `WRONG_NUM_ARGS` condition built-in functions raise, instead of

@@ -171,17 +171,14 @@ class ExpressionsSpec extends SparkSpec {
         AttributeReference("x", IntegerType)())
     }
     assert(ex.getMessage.contains("shingles"))
-    // the builders compose with extracted params
-    val b = GraftExtensions.arity("shingles", 2)(args =>
-      graft.functions.DistinctShingles(args(0),
-        GraftExtensions.litInt("shingles", "n", args(1))))
+    // the registered builder composes with extracted params
+    val b = GraftExtensions.builder("shingles")
     b(Seq(L.create(Array("a", "b", "c")), L(2)))
   }
 
   test("wrong-arity function builder raises WRONG_NUM_ARGS analysis error") {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val build = GraftExtensions.arity("vec_dot", 2)(
-      args => graft.functions.DotProduct(args(0), args(1)))
+    val build = GraftExtensions.builder("vec_dot")
     val one = Seq(ColumnBridge.expression(lit(1)))
     val ex = intercept[org.apache.spark.sql.AnalysisException] { build(one) }
     assert(ex.getMessage.contains("vec_dot"))
@@ -205,8 +202,8 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("nfc injects cleanly and nulls propagate") {
-    // injection surface (the shared test session has no extensions conf;
-    // live registration is covered by Verify/Bench sessions)
+    // injection surface into a fresh SparkSessionExtensions instance (the
+    // live registration in every session is covered by SqlFunctionsSpec)
     new GraftExtensions().apply(new SparkSessionExtensions)
     val r = spark.range(1).select(
       graft.functions.TextNorm.nfcNormalize(lit("e\u0301")),

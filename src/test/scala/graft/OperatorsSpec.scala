@@ -49,6 +49,23 @@ class OperatorsSpec extends SparkSpec {
     assert(out.sorted == List(("k1", "update"), ("k9", "add")))
   }
 
+  test("reconcile: a NULL stored timestamp blocks the delete in both " +
+    "changes and applied") {
+    // key 1 is absent from the incoming set, but its stored timestamp is
+    // NULL — not provably older than the set, so it is neither deleted
+    // from the change feed nor dropped from the applied inventory
+    val stored = Seq((1, Option.empty[Double]), (2, Some(10.0)))
+      .toDF("id", "ts_s")
+    val incoming = Seq((2, Option(20.0))).toDF("id", "ts_s")
+    val changes = Reconcile.changes(stored, incoming, Seq("id"), "ts_s",
+      100.0, Some("ts_s")).as[(Int, String)].collect().toSet
+    assert(changes == Set((2, "update")))
+    val applied = Reconcile.applied(stored, incoming, Seq("id"), "ts_s",
+      100.0, Some("ts_s")).as[(Int, Option[Double])].collect()
+      .sortBy(_._1).toSeq
+    assert(applied == Seq((1, None), (2, Some(20.0))))
+  }
+
   test("reconcile apply: a Resource inventory carrying the metadata map " +
     "collapses timestamp-tied duplicate keys deterministically") {
     // the content-hash tiebreak used to hash the MapType column directly

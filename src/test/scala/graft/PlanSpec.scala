@@ -534,24 +534,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("round-7 kernels: SQL builders wire and compute on literals") {
-    // the shared test session predates the extension injection, so the
-    // builders are exercised directly (the ExpressionsSpec precedent)
+    // the registered builders, evaluated directly on literal arguments
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData
-    import graft.functions.{AllShinglesExpr, CharWindowsExpr, Int8Snap}
-    val cw = GraftExtensions.arity("char_windows", 3)(args =>
-      CharWindowsExpr(args(0),
-        GraftExtensions.litInt("char_windows", "window", args(1)),
-        GraftExtensions.litInt("char_windows", "stride", args(2))))(
+    val cw = GraftExtensions.builder("char_windows")(
       Seq(Literal("abcdefgh"), Literal(4), Literal(2)))
     assert(cw.eval(null).asInstanceOf[ArrayData].numElements() == 3)
-    val sh = GraftExtensions.arity("all_shingles", 2)(args =>
-      AllShinglesExpr(args(0),
-        GraftExtensions.litInt("all_shingles", "n", args(1))))(
+    val sh = GraftExtensions.builder("all_shingles")(
       Seq(Literal.create(Array("a", "b", "c")), Literal(2)))
     assert(sh.eval(null).asInstanceOf[ArrayData].numElements() == 2)
-    val sn = GraftExtensions.arity("int8_snap", 1)(args =>
-      Int8Snap(args.head))(Seq(Literal.create(Array(1.0, -2.0, 0.5))))
+    val sn = GraftExtensions.builder("int8_snap")(
+      Seq(Literal.create(Array(1.0, -2.0, 0.5))))
     assert(sn.eval(null).asInstanceOf[ArrayData].numElements() == 3)
   }
 }

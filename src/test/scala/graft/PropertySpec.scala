@@ -94,7 +94,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("DistinctShingles == HOF formulation on random token lists") {
+  test("distinctShingles == HOF formulation on random token lists") {
     val docGen = Gen.listOfN(12, Gen.oneOf("a", "b", "c", "d", "e"))
       .map(_.mkString(" "))
     (1 to 30).foreach { seed =>
@@ -1111,7 +1111,7 @@ class PropertySpec extends SparkSpec {
             .select(col("series"),
               (col("value") * lit(m) + length(col("series"))).as("out"))
         val streamed = FileReplay.replay(spark, part,
-            s"frprop_one_$seed")(source => f(source()))
+            "frprop_one")(source => f(source()))
           .as[(String, Long)].collect().sorted.toSeq
         val batch = f(spark.read.parquet(part))
           .as[(String, Long)].collect().sorted.toSeq
@@ -1146,7 +1146,7 @@ class PropertySpec extends SparkSpec {
           .toDF("series", "ts_sec", "value")
           .select(col("series"), col("ts_sec").cast("timestamp").as("ts"),
             col("value"))
-        val streamed = FileReplay.replay(spark, part, s"frprop_two_$seed",
+        val streamed = FileReplay.replay(spark, part, "frprop_two",
             Some(sentinel))(source => g(source()))
           .filter(col("series") =!= "__sent__")
           .as[(java.sql.Timestamp, String, Long, Long)]

@@ -964,4 +964,29 @@ class StreamingSpec extends SparkSpec {
     assert(out.as[(String, Long, String)].collect().toSeq ==
       Seq(("k", 2L, "ok")))
   }
+
+  test("file replay: a throwing transform or start() leaves no temp dir") {
+    import graft.streaming.FileReplay
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def replayDirs() = Option(tmp.list()).toSeq.flatten
+      .filter(_.startsWith("graft_replay_")).toSet
+    val src = freshTmpDir("graft_leak_src")
+    try {
+      Seq((1L, "a")).toDF("id", "s").coalesce(1).write.parquet(src.getPath)
+      val part = src.listFiles().filter(_.getName.endsWith(".parquet")).head
+      val before = replayDirs()
+      // the transform throws: analysis of a missing column
+      intercept[org.apache.spark.sql.AnalysisException] {
+        FileReplay.replay(spark, part.getPath, "leak_transform")(
+          source => source().select(col("no_such_column")))
+      }
+      // start() throws: a streaming aggregation cannot run in append mode
+      // without a watermark
+      intercept[org.apache.spark.sql.AnalysisException] {
+        FileReplay.replay(spark, part.getPath, "leak_start")(
+          source => source().groupBy(col("s")).count())
+      }
+      assert(replayDirs() == before)
+    } finally rmTree(src)
+  }
 }
