@@ -82,30 +82,27 @@ object Dedup {
     * any (band_index, band_value) are candidate duplicates.
     * Returns (id, band, band_hash). */
   def lshBands(sigs: DataFrame, idCol: String, k: Int,
-               bands: Int): DataFrame = {
+               bands: Int): DataFrame =
+    Blocking.banded(sigs, "band_hash", bandHashes(
+      array((0 until k).map(i => col(s"sig_$i")): _*), k, bands), idCol)
+
+  /** The `bands` band hashes of a k-component signature array: band b
+    * is md5 over the concatenation of components b·rows+1 … (b+1)·rows,
+    * rows = k/bands. */
+  private[graft] def bandHashes(sig: Column, k: Int, bands: Int): Seq[Column] = {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
     val rows = k / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat((0 until rows).map(r => col(s"sig_${b * rows + r}")): _*))
-          .as("band_hash"))
-    }
-    sigs.select(col(idCol), explode(array(bandCols: _*)).as("bh"))
-      .select(col(idCol), col("bh.band"), col("bh.band_hash"))
+    (0 until bands).map(b => md5(concat((0 until rows).map(r =>
+      element_at(sig, b * rows + r + 1)): _*)))
   }
 
   /** Candidate near-duplicate pairs from LSH buckets (id_a < id_b,
     * distinct). The self-join shuffles once on (band, band_hash); bucket
     * sizes bound the pair blowup, which is the point of banding. */
-  def lshCandidatePairs(bandsDf: DataFrame, idCol: String): DataFrame = {
-    val a = bandsDf.select(col("band"), col("band_hash"),
-      col(idCol).as("id_a"))
-    val b = bandsDf.select(col("band"), col("band_hash"),
-      col(idCol).as("id_b"))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
+  def lshCandidatePairs(bandsDf: DataFrame, idCol: String): DataFrame =
+    Blocking.selfJoin(bandsDf.select(col("band"), col("band_hash"),
+        col(idCol).as("id")), Seq("band", "band_hash"), Seq("id"))
       .select("id_a", "id_b").distinct()
-  }
 
   /** End-to-end MinHash-LSH candidate pairs. Signatures come from the
     * one-pass codegen'd [[graft.functions.MinHashUtil]] (same values as
@@ -122,87 +119,51 @@ object Dedup {
     * expensive part — once and re-bands the checkpointed group frame
     * per leg (guide §1.2: don't recompute what the legs share). */
   def minhashSigGroups(df: DataFrame, textCol: String, idCol: String,
-                       shingleN: Int, k: Int): DataFrame = {
-    val ws = TextAnalysis.tokens(col(textCol))
+                       shingleN: Int, k: Int): DataFrame =
     // Canonicalize on the SIGNATURE vector (computed map-side, fixed
     // k×16-char width — unlike grouping by text, this never shuffles
-    // document bytes): duplicated content shares a signature, so a
-    // d-duplicated doc costs one row in the band self-join instead of d,
-    // and d²-fold fewer candidate rows. Same (N/D)² argument as the
-    // cosine near-dup canonicalization (SCALE.md §10a); dup-free corpora
-    // pay one signature-width exchange and nothing else.
-    val sigd = spread(df.filter(size(ws) >= shingleN))
+    // document bytes); dup-free corpora pay one signature-width exchange
+    // and nothing else.
+    Blocking.canonical(signatures(df, textCol, idCol, shingleN, k), idCol,
+      col("__sig"))
+
+  /** (id, __sig): the one-pass codegen'd MinHash signature of every doc
+    * with at least `shingleN` tokens — zero shuffles before banding. */
+  private def signatures(df: DataFrame, textCol: String, idCol: String,
+                         shingleN: Int, k: Int): DataFrame = {
+    val ws = TextAnalysis.tokens(col(textCol))
+    spread(df.filter(size(ws) >= shingleN))
       .select(col(idCol),
         graft.functions.MinHashUtil.signatures(
           graft.functions.Shingles.distinctShingles(ws, shingleN), k)
           .as("__sig"))
-    sigd.groupBy(col("__sig"))
-      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-      .withColumn("__rep", element_at(col("__ids"), 1))
   }
 
   /** [[minhashLsh]]'s banding/pairing suffix over a prebuilt
-    * [[minhashSigGroups]] frame. */
+    * [[minhashSigGroups]] frame: identical signatures collide in every
+    * band, so all within-group pairs are candidates by construction;
+    * distinct signatures band as usual, and candidate GROUP pairs expand
+    * to id pairs map-side. */
   def minhashLshFromGroups(groups: DataFrame, k: Int,
                            bands: Int): DataFrame = {
-    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val rows = k / bands
-    // identical signatures collide in every band: all within-group a<b
-    // pairs are candidates by construction, emitted map-side. Two CHAINED
-    // explodes, not one flattened d²/2-element array: a d-duplicated
-    // group materializes rows of at most d ids each (the d² pair volume
-    // is inherent output; a single in-row array of it is not survivable
-    // for large d)
-    val within = groups.filter(size(col("__ids")) >= 2)
-      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__i") + lit(2),
-          greatest(size(col("__ids")) - col("__i") - 1, lit(0))))
-          .as("id_b"))
-    // distinct signatures band as usual; candidate GROUP pairs expand to
-    // id pairs map-side (groups are disjoint id sets)
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat((0 until rows).map(r =>
-          element_at(col("__sig"), b * rows + r + 1)): _*)).as("band_hash"))
-    }
-    val banded = groups.select(col("__rep"), col("__ids"),
-        explode(array(bandCols: _*)).as("bh"))
-      .select(col("__rep"), col("__ids"),
-        col("bh.band").as("band"), col("bh.band_hash").as("band_hash"))
-    val a = banded.select(col("band"), col("band_hash"),
-      col("__rep").as("__rep_a"), col("__ids").as("__ids_a"))
-    val b2 = banded.select(col("band"), col("band_hash"),
-      col("__rep").as("__rep_b"), col("__ids").as("__ids_b"))
-    val groupPairs = a.join(b2, Seq("band", "band_hash"))
-      .filter(col("__rep_a") < col("__rep_b"))
-      .dropDuplicates("__rep_a", "__rep_b")
-    val cross = groupPairs
-      .select(col("__ids_b"), explode(col("__ids_a")).as("__a"))
-      .select(col("__a"), explode(col("__ids_b")).as("__b"))
-      .select(least(col("__a"), col("__b")).as("id_a"),
-        greatest(col("__a"), col("__b")).as("id_b"))
-    within.unionByName(cross)
+    val within = Blocking.withinPairs(
+      groups.filter(size(col("__ids")) >= 2), "__ids")
+    val banded = Blocking.banded(groups, "band_hash",
+      bandHashes(col("__sig"), k, bands), "__rep", "__ids")
+    within.unionByName(Blocking.crossPairs(Blocking.selfJoin(banded,
+        Seq("band", "band_hash"), Seq("__rep", "__ids"))
+      .dropDuplicates("__rep_a", "__rep_b")))
   }
 
   // ------------------------------------------------- cross-corpus dedup
 
   /** MinHash-LSH band rows for a corpus via the one-pass codegen kernel
     * (same (band, band_hash) values as [[minhashSignatures]]+[[lshBands]]).
-    * Shared by [[minhashLsh]]-style within-corpus pairing and
-    * [[crossCorpusKeep]]. */
+    * Shared by [[bandSet]], [[crossCorpusKeep]] and the split-leak check. */
   private[llm] def bandRows(df: DataFrame, textCol: String, idCol: String,
-                            shingleN: Int, k: Int, bands: Int): DataFrame = {
-    val ws = TextAnalysis.tokens(col(textCol))
-    val sigs = spread(df.filter(size(ws) >= shingleN))
-      .select(col(idCol),
-        graft.functions.MinHashUtil.signatures(
-          graft.functions.Shingles.distinctShingles(ws, shingleN), k)
-          .as("__sig"))
-      .select(col(idCol) +:
-        (0 until k).map(i => element_at(col("__sig"), i + 1).as(s"sig_$i")): _*)
-    lshBands(sigs, idCol, k, bands)
-  }
+                            shingleN: Int, k: Int, bands: Int): DataFrame =
+    Blocking.banded(signatures(df, textCol, idCol, shingleN, k),
+      "band_hash", bandHashes(col("__sig"), k, bands), idCol)
 
   /** Cross-corpus dedup: rows of `df` that do NOT near-duplicate anything
     * in `refDf` — the "dedup the new crawl against the corpus you already
@@ -229,42 +190,32 @@ object Dedup {
                       idCol: String, shingleN: Int = 3, k: Int = 8,
                       bands: Int = 4,
                       confirmJaccard: Option[Double] = None): DataFrame = {
+    if (confirmJaccard.isEmpty) return keepAgainstBandSet(df,
+      bandSet(refDf, textCol, idCol, shingleN, k, bands), textCol, idCol,
+      shingleN, k, bands)
     val newBands = bandRows(df, textCol, idCol, shingleN, k, bands)
     val refBands = bandRows(refDf, textCol, idCol, shingleN, k, bands)
-    val dropIds = confirmJaccard match {
-      case None =>
-        newBands
-          .join(refBands.select("band", "band_hash").distinct(),
-            Seq("band", "band_hash"), "left_semi")
-          .select(col(idCol)).distinct()
-      case Some(t) =>
-        // candidate (new, ref) pairs from band collisions, then exact
-        // Jaccard on hashed shingle sets for JUST those pairs
-        val pairs = newBands.select(col("band"), col("band_hash"),
-            col(idCol).as("__new_id"))
-          .join(refBands.select(col("band"), col("band_hash"),
-            col(idCol).as("__ref_id")), Seq("band", "band_hash"))
-          .select("__new_id", "__ref_id").distinct()
-        def hashedShingles(x: DataFrame, as: String) =
-          shingles(x, textCol, idCol, shingleN)
-            .select(col(idCol).as(as), xxhash64(col("shingle")).as("sh_h"))
-        def sizes(x: DataFrame, as: String, n: String) = {
-          val ws = TextAnalysis.tokens(col(textCol))
-          x.filter(size(ws) >= shingleN).select(col(idCol).as(as),
-            size(graft.functions.Shingles.distinctShingles(ws, shingleN))
-              .cast("long").as(n))
-        }
-        val inter = hashedShingles(df, "__new_id")
-          .join(pairs, Seq("__new_id"))
-          .join(hashedShingles(refDf, "__ref_id"), Seq("__ref_id", "sh_h"))
-          .groupBy("__new_id", "__ref_id").agg(count(lit(1)).as("inter"))
-        inter
-          .join(sizes(df, "__new_id", "na"), Seq("__new_id"))
-          .join(sizes(refDf, "__ref_id", "nb"), Seq("__ref_id"))
-          .filter(col("inter").cast("double") /
-            (col("na") + col("nb") - col("inter")) >= t)
-          .select(col("__new_id").as(idCol)).distinct()
-    }
+    // candidate (new, ref) pairs from band collisions, then exact
+    // Jaccard on hashed shingle sets for JUST those pairs
+    val pairs = newBands.select(col("band"), col("band_hash"),
+        col(idCol).as("__new_id"))
+      .join(refBands.select(col("band"), col("band_hash"),
+        col(idCol).as("__ref_id")), Seq("band", "band_hash"))
+      .select("__new_id", "__ref_id").distinct()
+    def hashedShingles(x: DataFrame, as: String) =
+      shingles(x, textCol, idCol, shingleN)
+        .select(col(idCol).as(as), xxhash64(col("shingle")).as("sh_h"))
+    val dropIds = hashedShingles(df, "__new_id")
+      .join(pairs, Seq("__new_id"))
+      .join(hashedShingles(refDf, "__ref_id"), Seq("__ref_id", "sh_h"))
+      .groupBy("__new_id", "__ref_id").agg(count(lit(1)).as("inter"))
+      .join(shingleCounts(df, textCol, idCol, shingleN, "__new_id", "na"),
+        Seq("__new_id"))
+      .join(shingleCounts(refDf, textCol, idCol, shingleN, "__ref_id", "nb"),
+        Seq("__ref_id"))
+      .filter(col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")) >= confirmJaccard.get)
+      .select(col("__new_id").as(idCol)).distinct()
     df.join(dropIds, Seq(idCol), "left_anti")
   }
 
@@ -325,8 +276,6 @@ object Dedup {
                                textCol: String, idCol: String,
                                shingleN: Int = 3, k: Int = 8,
                                bands: Int = 4): DataFrame = {
-    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val rows = k / bands
     val ws = TextAnalysis.tokens(col(textCol))
     val refSet = bandRows(refDf, textCol, idCol, shingleN, k, bands)
       .select(concat_ws("|", col("band"), col("band_hash")).as("__ref_bh"))
@@ -334,15 +283,12 @@ object Dedup {
     val sig = graft.functions.MinHashUtil.signatures(
       graft.functions.Shingles.distinctShingles(ws, shingleN), k)
     val withSig = df.withColumn("__sig", when(size(ws) >= shingleN, sig))
-    // same band hash as lshBands: md5 over the concatenated row-group
-    // signature components (hex strings), qualified by the band index
-    val banded = (0 until bands).foldLeft(withSig) { (acc, b) =>
-      acc.withColumn(s"__bh$b",
-        when(col("__sig").isNotNull,
-          concat_ws("|", lit(b),
-            md5(concat((0 until rows).map(r =>
-              element_at(col("__sig"), b * rows + r + 1)): _*)))))
-    }
+    // bandRows' band hash, qualified by the band index
+    val banded = bandHashes(col("__sig"), k, bands).zipWithIndex
+      .foldLeft(withSig) { case (acc, (h, b)) =>
+        acc.withColumn(s"__bh$b",
+          when(col("__sig").isNotNull, concat_ws("|", lit(b), h)))
+      }
     val kept = (0 until bands).foldLeft(banded) { (acc, b) =>
       acc.join(broadcast(refSet), acc(s"__bh$b") === col("__ref_bh"),
         "left_anti")
@@ -536,17 +482,10 @@ object Dedup {
     val members = sig.select(col(idCol), col("simhash_bits"))
     val sigs = members.groupBy("simhash_bits")
       .agg(count(lit(1)).as("n_docs"))
-    val raw = sigs.select(col("simhash_bits"), col("n_docs"),
-      explode(array((0 until 4).map(i =>
-        struct(lit(i).as("chunk"),
-          substring(col("simhash_bits"), i * 16 + 1, 16).as("cv"))): _*))
-        .as("c"))
-      .select(col("simhash_bits"), col("n_docs"), col("c.chunk"), col("c.cv"))
-    val hot = raw.groupBy(col("chunk"), col("cv"))
-      .agg(sum(col("n_docs")).as("n"))
-      .filter(col("n") > maxDocsPerBucket)
-      .select(col("chunk"), col("cv"))
-    val chunks = raw.join(broadcast(hot), Seq("chunk", "cv"), "left_anti")
+    val raw = Blocking.banded(sigs, "cv", (0 until 4).map(i =>
+      substring(col("simhash_bits"), i * 16 + 1, 16)), "simhash_bits", "n_docs")
+    val chunks = Blocking.capHot(raw, Seq("band", "cv"), maxDocsPerBucket,
+      sum(col("n_docs")))
     val hamming =
       graft.functions.VectorOps.hamming(col("bits_a"), col("bits_b"))
     // hamming-filter BEFORE the cross-chunk distinct: hamming is a
@@ -554,11 +493,8 @@ object Dedup {
     // distinct∘filter — but filtering first kills the (vast) majority of
     // candidates map-side instead of shuffling them through the dedup
     // exchange.
-    val sigPairs = chunks.select(col("chunk"), col("cv"),
-        col("simhash_bits").as("bits_a"))
-      .join(chunks.select(col("chunk"), col("cv"),
-        col("simhash_bits").as("bits_b")), Seq("chunk", "cv"))
-      .filter(col("bits_a") < col("bits_b"))
+    val sigPairs = Blocking.selfJoin(chunks.select(col("band"), col("cv"),
+        col("simhash_bits").as("bits")), Seq("band", "cv"), Seq("bits"))
       .select(col("bits_a"), col("bits_b"), hamming.as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
@@ -645,32 +581,23 @@ object Dedup {
     // realistic shingle cardinality and only perturb candidate blocking).
     val sh = shingles(spread(df), textCol, idCol, n)
       .select(col(idCol), xxhash64(col("shingle")).as("sh_h"))
-    // Stop-shingle cap WITHOUT a window: a window partitioned on sh_h would
-    // route every row of a hot shingle to one partition before the cap can
-    // drop it — the exact straggler the cap exists to prevent. groupBy gets
-    // map-side partial aggregation (each partition contributes one partial
-    // count per shingle), the over-cap set is tiny by construction, and the
-    // broadcast anti-join removes hot shingles with no skewed exchange.
-    val hot = sh.groupBy(col("sh_h"))
-      .agg(count(lit(1)).as("df_cnt"))
-      .filter(col("df_cnt") > maxDocsPerShingle)
-      .select(col("sh_h"))
-    val filtered = sh.join(broadcast(hot), Seq("sh_h"), "left_anti")
-    // |A| per doc straight off the text — a map-side scalar, no second
-    // explode/shuffle of the shingle set.
-    val ws = TextAnalysis.tokens(col(textCol))
-    val sizes = df.filter(size(ws) >= n)
-      .select(col(idCol),
-        size(graft.functions.Shingles.distinctShingles(ws, n))
-          .cast("long").as("n_sh"))
-    val a = filtered.select(col("sh_h"), col(idCol).as("id_a"))
-    val b = filtered.select(col("sh_h"), col(idCol).as("id_b"))
-    val shared = a.join(b, Seq("sh_h"))
-      .filter(col("id_a") < col("id_b"))
+    val filtered = Blocking.capHot(sh, Seq("sh_h"), maxDocsPerShingle)
+    Blocking.selfJoin(filtered.select(col("sh_h"), col(idCol).as("id")),
+        Seq("sh_h"), Seq("id"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    shared
-      .join(sizes.select(col(idCol).as("id_a"), col("n_sh").as("na")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("n_sh").as("nb")), "id_b")
+      .join(shingleCounts(df, textCol, idCol, n, "id_a", "na"), "id_a")
+      .join(shingleCounts(df, textCol, idCol, n, "id_b", "nb"), "id_b")
+  }
+
+  /** (`as`, `name`): each doc's distinct-shingle count |A| straight off
+    * the text — a map-side scalar, no second explode/shuffle of the
+    * shingle set. Docs shorter than `n` tokens have no shingles. */
+  private def shingleCounts(df: DataFrame, textCol: String, idCol: String,
+                            n: Int, as: String, name: String): DataFrame = {
+    val ws = TextAnalysis.tokens(col(textCol))
+    df.filter(size(ws) >= n).select(col(idCol).as(as),
+      size(graft.functions.Shingles.distinctShingles(ws, n))
+        .cast("long").as(name))
   }
 
   // --------------------------------------------------------- winnowing
@@ -732,24 +659,11 @@ object Dedup {
   def winnowPairs(df: DataFrame, textCol: String, idCol: String,
                   k: Int = 4, w: Int = 5, minShared: Int = 2,
                   maxDocsPerFp: Int = 1000): DataFrame = {
-    val fps = winnowFingerprints(df, textCol, idCol, k, w)
-    val hot = fps.groupBy(col("fp"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxDocsPerFp)
-      .select(col("fp"))
-    val groups = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-    // two chained explodes: per-row arrays stay O(group size), never
-    // O(pairs) — same shape as minhashLsh's within-group expansion
-    val pairs = groups
-      .select(col("ids"), posexplode(col("ids")).as(Seq("__i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("ids"), col("__i") + lit(2),
-          greatest(size(col("ids")) - col("__i") - 1, lit(0))))
-          .as("id_b"))
-    pairs.groupBy("id_a", "id_b").agg(count(lit(1)).as("shared_fps"))
+    val groups = Blocking.canonical(Blocking.capHot(
+        winnowFingerprints(df, textCol, idCol, k, w), Seq("fp"), maxDocsPerFp),
+      idCol, col("fp"))
+    Blocking.withinPairs(groups.filter(size(col("__ids")) >= 2), "__ids")
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
   }
 

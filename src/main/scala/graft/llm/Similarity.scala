@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   *    one shuffle for the per-query top-k. This is the correctness baseline
   *    and also the right 100 TB plan when |queries| is small: corpus is
   *    never shuffled, only (|queries| × k) rows leave the scan stage.
-  *  - [[signLshTopK]]: sign-LSH bucketing (axis-aligned hyperplanes on the
-  *    first `b` dimensions) so the self-/cross-join only touches same-bucket
-  *    rows. The scale path when queries are the whole corpus.
+  *  - [[IvfIndex]]: cell-pruned indexes — axis, trained, sign-LSH
+  *    ([[IvfIndex.Signs]]) or bit-prefix cells over float, SQ8, PQ or
+  *    binary ([[hammingWord]]) payloads — so the join only touches
+  *    same-cell rows; [[cosineNearDupPairs]] and [[knnGraph]] block the
+  *    corpus against itself on the sign-LSH cells.
   *
   * All dot products are computed in double (floats are widened first) so
   * results are reproducible across engines.
@@ -81,14 +83,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("score"), roundScore).as("score"))
 
-  /** [[rankWithin]] by Hamming distance ascending — the binary family's
-    * (query_id, rank, neighbor_id, hamming) contract. */
-  private def rankHamming(scored: DataFrame, k: Int): DataFrame =
-    rankWithin(scored.withColumn("hamming",
-        expr("cast(bit_count(cw ^ qw) as bigint)")), k, col("hamming").asc)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("hamming"))
-
   /** Maximal-marginal-relevance diversified top-`selectK` (Carbonell &
     * Goldstein 1998): from each query's `candK` highest-cosine candidates,
     * greedily pick argmax λ·rel(d) − (1−λ)·max_{s∈S} sim(d, s) — the
@@ -124,7 +118,7 @@ object Similarity {
   /** MMR over ANY candidate slate: `cand0` is a (query_id, rank,
     * neighbor_id, score) frame from whichever retrieval leg fits the
     * scale — [[bruteForceTopK]] (oracle-exact) or the [[IvfIndex]] /
-    * [[signLshTopK]] / graph-walk legs (the 100 TB paths; the
+    * graph-walk legs (the 100 TB paths; the
     * `search_mmr_ivf` query is the IVF instantiation). Same
     * generator/re-ranker split as [[hardNegativesFrom]]: the greedy
     * diversification only reads the slate plus the candidates' vectors.
@@ -207,7 +201,7 @@ object Similarity {
   /** Hard-negative re-rank over ANY candidate slate: `cand` is a
     * (query_id, …, neighbor_id, score) frame from whichever retrieval leg
     * fits the scale — [[bruteForceTopK]] (oracle-exact), [[IvfIndex]] /
-    * [[signLshTopK]] / [[graphSearchTopKSeeded]] (the 100 TB paths). The
+    * [[graphSearchTopKSeeded]] (the 100 TB paths). The
     * generator/re-ranker split is the point: mining quality is measured
     * by [[recallAtK]] of the ANN-mined slate against the brute-mined one
     * (the `ann_hard_negatives_ivf` query), so the cheap leg's recall is
@@ -240,15 +234,6 @@ object Similarity {
         col("score"))
   }
 
-  /** Bucket key from the signs of the first `b` vector components —
-    * axis-aligned hyperplanes. Kept as the zero-multiply fallback; the
-    * DEFAULT family is [[signBucketRotated]], because axis-aligned signs
-    * collapse quietly on embeddings whose leading dimensions are
-    * correlated (most learned embeddings). */
-  def signBucket(vec: Column, b: Int): Column =
-    concat((0 until b).map(i =>
-      when(element_at(vec, i + 1) >= 0, lit("1")).otherwise(lit("0"))): _*)
-
   /** Default seed for the rotation family — any fixed value works; what
     * matters is that corpus and queries hash with the SAME planes. */
   val DefaultSeed: Long = 0x5DEECE66DL
@@ -273,14 +258,14 @@ object Similarity {
 
   /** Johnson–Lindenstrauss-style random projection to `dimOut`
     * dimensions: component j = ⟨vec, plane_j⟩ / √dimOut against the same
-    * seeded deterministic planes as [[signBucketRotated]]. The standard
+    * seeded deterministic planes as [[IvfIndex.Signs]]. The standard
     * cheap dimensionality reduction before clustering/ANN — pairwise
     * distances are preserved in expectation, and a 64→8 projection cuts
     * every downstream distance computation 8×.
     *
     * Map-side only: `dimOut` codegen'd dot products against FOLDABLE
     * literal planes, no shuffle at any scale. Vectors shorter than
-    * `dimIn` degrade OUT (same posture as [[signLshTopK]]/[[IvfIndex]]).
+    * `dimIn` degrade OUT (same posture as [[IvfIndex]]).
     * Components round to 6 dp — the fold order and the √dimOut scale
     * constant are identical in any IEEE engine. */
   def randomProjection(df: DataFrame, idCol: String, vecCol: String,
@@ -295,21 +280,9 @@ object Similarity {
       .select(col(idCol), array(comps: _*).as("projected"))
   }
 
-  /** Sign-LSH bucket from `b` random-rotation hyperplanes: bit i =
-    * sign(⟨vec, plane_i⟩). The dot products run in the codegen'd
-    * [[dot]] kernel against FOLDABLE array literals — map-side only, and
-    * invariant to which dimensions of the embedding carry variance
-    * (the axis-aligned family's failure mode). */
-  def signBucketRotated(vec: Column, b: Int, dim: Int,
-                        seed: Long = DefaultSeed): Column = {
-    val planes = rotationPlanes(b, dim, seed)
-    concat(planes.map(p =>
-      when(dot(vec, typedlit(p.toSeq)) >= 0, lit("1")).otherwise(lit("0"))): _*)
-  }
-
   /** `bits`-bit binary sign fingerprint packed into ONE BIGINT: bit i =
     * sign(⟨vec, plane_i⟩) against the same seeded rotation family as
-    * [[signBucketRotated]] (random-hyperplane LSH, so Hamming distance
+    * [[IvfIndex.Signs]] (random-hyperplane LSH, so Hamming distance
     * between fingerprints estimates angular distance: E[h] =
     * bits·θ/π). The point at 100 TB is the REPRESENTATION: an
     * 8-byte word per vector instead of dim×4 bytes — a billion
@@ -317,7 +290,8 @@ object Similarity {
     * candidate generation into a memory-bandwidth-bound integer scan.
     * ≤ 62 bits so the word stays positive in any engine's signed 64-bit
     * integer (no sign-bit portability hazard). Map-side only; exact
-    * powers of two sum without rounding. */
+    * powers of two sum without rounding. The payload of the
+    * [[IvfIndex.Bits]] codec. */
   def hammingWord(vec: Column, dim: Int, bits: Int = 48,
                   seed: Long = DefaultSeed): Column = {
     require(bits >= 1 && bits <= 62, s"bits=$bits out of [1,62]")
@@ -328,317 +302,6 @@ object Similarity {
     // see [[graft.functions.SignFingerprint]]
     graft.functions.VectorOps.signFingerprint(vec,
       rotationPlanes(bits, dim, seed).toArray)
-  }
-
-  /** ANN over binary fingerprints: per query, the `k` corpus vectors of
-    * smallest Hamming distance bit_count(cw XOR qw) — the binary
-    * serving regime that completes the family (brute float scan →
-    * LSH/IVF pruning → PQ codes → THIS: one codegen'd popcount per
-    * candidate over 8-byte words). All-integer scores, ties on neighbor
-    * id, so ranking replays engine-exactly — no float leg anywhere.
-    *
-    * Plan shape: fingerprints build map-side ([[hammingWord]]); the
-    * scan is a broadcast product of corpus words with the query-sample
-    * words (the [[bruteForceTopK]] posture but 8 bytes/row and an
-    * XOR+popcount instead of a dim-length dot) and a per-query top-k
-    * window. For corpus-scale query sets, prefix-bucket the words
-    * (e.g. their high 16 bits) into an equi-join first — same trade as
-    * every blocking leg. Output: (query_id, rank, neighbor_id,
-    * hamming). Vectors shorter than `dim` degrade out (the
-    * [[IvfIndex]]/[[signLshTopK]] posture). */
-  def hammingTopK(corpus: DataFrame, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int, dim: Int,
-                  bits: Int = 48, seed: Long = DefaultSeed): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    val okLen = size(col(vecCol)) >= dim
-    val q = queries.filter(okLen).select(col(idCol).as("query_id"),
-      hammingWord(col(vecCol), dim, bits, seed).as("qw"))
-    val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
-      hammingWord(col(vecCol), dim, bits, seed).as("cw"))
-    rankHamming(c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id")), k)
-  }
-
-  /** BLOCKED Hamming top-k — the corpus-scale shape of [[hammingTopK]]:
-    * fingerprints bucket by their HIGH `prefixBits` bits (word >>
-    * (bits−prefixBits)), a query probes its own bucket plus the
-    * `prefixBits` buckets at prefix-Hamming distance 1 (multi-probe, the
-    * [[signLshTopK]] idea in fingerprint space), and candidates rank by
-    * popcount within the probed buckets. The full scan touches every
-    * corpus word per query; this touches (prefixBits+1)/2^prefixBits of
-    * the corpus — the blocking recall trade, measured against the
-    * full-scan baseline by `ann_hamming_blocked`. At write time bucket
-    * IS a partition/cluster key, so a query batch reads only its probed
-    * partitions. All-integer end to end; corpus lands in exactly ONE
-    * bucket (plan shape unchanged on the big side).
-    *
-    * The bucket join carries NO broadcast hint — deliberately, unlike
-    * [[hammingTopK]]'s brute eval scan: this is the path meant for
-    * query batches up to corpus scale, where a forced broadcast of the
-    * (prefixBits+1)×-exploded probe frame would blow the driver. AQE
-    * sizes the join at runtime (tiny probe batch → broadcast hash join,
-    * the [[hardNegativesFrom]] posture; corpus-scale batch → shuffled
-    * join on the bucket, both sides already keyed). */
-  def hammingTopKBlocked(corpus: DataFrame, queries: DataFrame,
-                         idCol: String, vecCol: String, k: Int, dim: Int,
-                         bits: Int = 48, prefixBits: Int = 8,
-                         seed: Long = DefaultSeed): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(prefixBits >= 1 && prefixBits < bits,
-      s"prefixBits=$prefixBits out of [1, bits=$bits)")
-    val shift = bits - prefixBits
-    val okLen = size(col(vecCol)) >= dim
-    val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
-        hammingWord(col(vecCol), dim, bits, seed).as("cw"))
-      .withColumn("bucket", expr(s"cw >> $shift"))
-    val probes = expr(s"qw >> $shift") +:
-      (0 until prefixBits).map(i => expr(s"(qw >> $shift) ^ ${1L << i}"))
-    val q = queries.filter(okLen).select(col(idCol).as("query_id"),
-        hammingWord(col(vecCol), dim, bits, seed).as("qw"))
-      .withColumn("bucket", explode(array(probes: _*)))
-    rankHamming(c.join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id")), k)
-  }
-
-  /** Materialize the binary-ANN index [[hammingTopKBlocked]]'s scaladoc
-    * promises: the (neighbor_id, cw) fingerprint table written
-    * PARTITIONED BY the prefix bucket, so the bucket IS a directory key
-    * and a probe batch lists/reads ONLY its probed partitions. One
-    * map-only encode pass over the corpus (8 bytes + id per row); the
-    * `partitionBy` write groups rows into at most 2^prefixBits
-    * directories — at 100 TB each bucket partition is still
-    * multi-file-parallel, and the write shuffles nothing (fingerprint
-    * and bucket are row-local). */
-  def writeHammingIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                        path: String, dim: Int, bits: Int = 48,
-                        prefixBits: Int = 8,
-                        seed: Long = DefaultSeed): Unit = {
-    require(prefixBits >= 1 && prefixBits < bits,
-      s"prefixBits=$prefixBits out of [1, bits=$bits)")
-    val shift = bits - prefixBits
-    corpus.filter(size(col(vecCol)) >= dim)
-      .select(col(idCol).as("neighbor_id"),
-        hammingWord(col(vecCol), dim, bits, seed).as("cw"))
-      .withColumn("bucket", expr(s"cw >> $shift"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-  }
-
-  /** Compact an over-fragmented partitioned index store IN PLACE —
-    * the maintenance half of the streaming-ingest story: every
-    * `stream_hamming` micro-batch appends one file per touched bucket
-    * partition, and at ingest rates the accumulating small files erode
-    * the pruned-read win the layout exists for (listing cost, footer
-    * overhead, task fan-out). This rewrites ONLY the partitions whose
-    * parquet file count exceeds `maxFilesPerBucket`: the read is
-    * partition-pruned to those keys, the rewrite is a DYNAMIC
-    * partition overwrite (untouched partitions keep their files
-    * byte-for-byte), and each rewritten partition lands as one file
-    * per holding task (≤ 1 here: `repartition(partitionCol)` puts a
-    * key's rows in exactly one task). Never a full-store rewrite.
-    *
-    * The over-threshold slice is `localCheckpoint`ed (materialized)
-    * BEFORE the overwrite — the write must not stream from the very
-    * files it is replacing. Serving is byte-identical before/after
-    * (pinned in BucketingSpec: same probe rows, file count bounded).
-    * Works for any of the stores here (`bucket` or `cell` partition
-    * columns, long/int/string keys). Returns the rewritten partition
-    * keys (empty ⇒ nothing exceeded the threshold, nothing written).
-    *
-    * CONCURRENCY CONTRACT — run with ingest quiesced: a plain parquet
-    * directory has no transaction log, so a micro-batch appending into
-    * a partition BETWEEN this function's snapshot read and its
-    * overwrite commit would be silently replaced by the pre-append
-    * snapshot (lost rows, no error). Schedule compaction between
-    * micro-batches (foreachBatch, or a maintenance window on the
-    * ingest trigger) — the standard posture for log-less file stores;
-    * a Delta/Iceberg-backed store lifts the restriction with optimistic
-    * commit conflict detection (the USAGE.md lakehouse swap). Concurrent
-    * READERS are safe at parquet-task granularity but a probe spanning
-    * the swap may see a partition mid-replacement — serve from a
-    * snapshot path or quiesce reads too if that matters.
-    *
-    * CRASH WINDOW — same log-less-store root cause, different victim:
-    * dynamic partition overwrite commits by DELETING each target
-    * partition directory and renaming the staged replacement in; a
-    * driver/JVM failure between the delete and the rename loses that
-    * partition's data (readers see an empty or missing bucket — no
-    * error, no marker). The window is job-commit-sized (small), but
-    * durability-critical stores should either take a directory
-    * snapshot first or use the Delta/Iceberg swap, whose atomic log
-    * commit closes the window outright. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                   partitionCol: String,
-                   maxFilesPerBucket: Int): Seq[String] = {
-    require(maxFilesPerBucket >= 1,
-      s"maxFilesPerBucket=$maxFilesPerBucket must be >= 1")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = partitionCol + "="
-    // directory names are Hive-ESCAPED value strings ('a b' stores as
-    // 'a%20b'): unescape before comparing against column values, and
-    // skip the null partition outright (no literal equals NULL, and
-    // its marker string would crash the numeric coercions below)
-    val over = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .filter(p => fs.listStatus(p.getPath).count(f =>
-        f.isFile && f.getPath.getName.startsWith("part-"))
-        > maxFilesPerBucket)
-      .map(p => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(p.getPath.getName.substring(prefix.length)))
-      .filter(_ != "__HIVE_DEFAULT_PARTITION__").toSeq.sorted
-    if (over.isEmpty) return Nil
-    val store = spark.read.parquet(path)
-    // unescaped names are still strings; coerce to the inferred
-    // partition dtype so the IN-list stays a PartitionFilters prune
-    // (the typedKeys rule)
-    val keys: Seq[Any] = store.schema(partitionCol).dataType match {
-      case org.apache.spark.sql.types.LongType => over.map(_.toLong)
-      case org.apache.spark.sql.types.IntegerType => over.map(_.toInt)
-      case _ => over
-    }
-    val slice = store.filter(col(partitionCol).isin(keys: _*))
-      .repartition(col(partitionCol))
-      .localCheckpoint() // materialize before replacing the source files
-    // report only keys that actually land in the rewrite: a dir whose
-    // unescaped name matches no rows (shouldn't happen, but e.g. a
-    // hand-made directory) is NOT overwritten by the dynamic commit
-    // and must not be claimed as compacted. The comparison runs on the
-    // TYPED key values used in the IN-list (r14 advice) — exact for any
-    // partition dtype the coercion above covers (long/int/string, the
-    // stores' universe); the cast-to-string fallback keeps exotic
-    // inferable types (date/timestamp/decimal) best-effort, where
-    // Spark's string rendering may differ from the directory-name format.
-    val dvals = slice
-      .select(col(partitionCol), col(partitionCol).cast("string"))
-      .distinct().collect()
-    val typedVals = dvals.map(_.get(0)).toSet
-    val strVals = dvals.map(_.getString(1)).toSet
-    slice.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy(partitionCol).parquet(path)
-    keys.zip(over).collect {
-      case (k, name) if typedVals.contains(k) || strVals.contains(name) =>
-        name
-    }
-  }
-
-  /** [[hammingTopKBlocked]] served from a [[writeHammingIndex]] store:
-    * identical probe set, scoring and ranking — but the corpus side is
-    * the PARTITIONED fingerprint table restricted by a LITERAL bucket
-    * IN-list, so the probed buckets become `PartitionFilters` on the
-    * scan and unprobed partitions are never listed or read (pinned in
-    * BucketingSpec). The probe-set collect is bounded by the BUCKET
-    * DOMAIN, not the query count: ≤ min(|Q|·(prefixBits+1),
-    * 2^prefixBits) longs — at the default 8 prefix bits that is ≤ 256
-    * values regardless of corpus or batch size, the same
-    * driver-footprint class as the centroid/codebook collects. Results
-    * are row-identical to [[hammingTopKBlocked]] on the same corpus
-    * (`ann_hamming_indexed` shares `ann_hamming_blocked`'s oracle).
-    *
-    * EAGER at construction time (r12 advice, documented contract): the
-    * query-side fingerprints are localCheckpointed and the probe-bucket
-    * IN-list is collected BEFORE this returns, so the returned frame is
-    * partially executed, its partition-filter set is frozen at build
-    * time (new queries need a new call), and the probe-side cost lands
-    * in plan construction rather than first action — callers timing the
-    * serving read get exactly the pruned scan, which is the point. */
-  def hammingTopKIndexed(indexed: DataFrame, queries: DataFrame,
-                         idCol: String, vecCol: String, k: Int, dim: Int,
-                         bits: Int = 48, prefixBits: Int = 8,
-                         seed: Long = DefaultSeed): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    require(prefixBits >= 1 && prefixBits < bits,
-      s"prefixBits=$prefixBits out of [1, bits=$bits)")
-    val shift = bits - prefixBits
-    val probes = expr(s"qw >> $shift") +:
-      (0 until prefixBits).map(i => expr(s"(qw >> $shift) ^ ${1L << i}"))
-    val (q, c) = IvfIndex.probedStore(indexed,
-      queries.filter(size(col(vecCol)) >= dim)
-        .select(col(idCol).as("query_id"),
-          hammingWord(col(vecCol), dim, bits, seed).as("qw"))
-        .withColumn("bucket", explode(array(probes: _*))),
-      "bucket")
-    rankHamming(c.join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id")), k)
-  }
-
-  /** The standard two-stage binary serving path: a `candK` Hamming
-    * shortlist over the 8-byte fingerprints ([[hammingTopK]]), then an
-    * exact-cosine re-rank of ONLY the shortlist down to `k` — popcount
-    * does the corpus-wide scan, the float kernel touches |queries|×candK
-    * rows. This is how binary signatures are actually deployed (the
-    * fingerprint alone quantizes away most of the top-k ordering;
-    * re-ranking restores it at shortlist-bounded cost — measure with
-    * the `ann_hamming_rerank` recall query). Same output shape and
-    * determinism discipline as [[bruteForceTopK]]. */
-  def hammingRerankTopK(corpus: DataFrame, queries: DataFrame,
-                        idCol: String, vecCol: String, k: Int, candK: Int,
-                        dim: Int, bits: Int = 48,
-                        seed: Long = DefaultSeed): DataFrame = {
-    require(candK >= k && k >= 1, s"need candK=$candK >= k=$k >= 1")
-    val cand = hammingTopK(corpus, queries, idCol, vecCol, candK, dim,
-      bits, seed)
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      normalize(col(vecCol)).as("cv"))
-    val qv = queries.filter(size(col(vecCol)) >= dim)
-      .select(col(idCol).as("query_id"), normalize(col(vecCol)).as("qv"))
-    rankDesc(cand.select(col("query_id"), col("neighbor_id"))
-      .join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("score", dot(col("qv"), col("cv"))), k, 6)
-  }
-
-  /** ANN via sign-LSH: candidates share the query's bucket; top-k within.
-    * Recall is tunable with `b` (fewer bits → bigger buckets → higher
-    * recall, more compute). `rotatedDim = Some(d)` (the default posture for
-    * learned embeddings) buckets with [[signBucketRotated]] over the first
-    * `d` components; `None` falls back to axis-aligned signs.
-    *
-    * `multiProbe = true` additionally probes, per query, every bucket at
-    * hamming distance 1 from its own (multi-probe LSH, Lv et al. VLDB'07):
-    * b+1 probes ⇒ ~(b+1)× candidates on the query side only — the CORPUS
-    * still lands in exactly one bucket each, so the big side's plan shape
-    * is unchanged. On the driver fixture this lifts top-3 recall ~3× over
-    * single-probe regardless of seed. Returns same shape as
-    * [[bruteForceTopK]]. */
-  def signLshTopK(corpus: DataFrame, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int, b: Int,
-                  rotatedDim: Option[Int] = None,
-                  seed: Long = DefaultSeed,
-                  multiProbe: Boolean = false,
-                  roundScore: Int = 6): DataFrame = {
-    def bits(vec: Column): Seq[Column] = rotatedDim match {
-      case Some(dim) =>
-        rotationPlanes(b, dim, seed).map(p => dot(vec, typedlit(p.toSeq)) >= 0)
-      case None => (0 until b).map(i => element_at(vec, i + 1) >= 0)
-    }
-    def render(bs: Seq[Column]): Column =
-      concat(bs.map(bt => when(bt, lit("1")).otherwise(lit("0"))): _*)
-    // the axis family indexes components 1..b (ANSI: out-of-bounds kills
-    // the job); the rotated family would silently prefix-bucket a short
-    // vector. Same posture as IvfIndex: too-short vectors degrade OUT of
-    // the index on both sides rather than crashing or mis-bucketing.
-    val okLen = size(col(vecCol)) >= rotatedDim.getOrElse(b)
-    val c = corpus.filter(okLen).select(col(idCol).as("neighbor_id"),
-      normalize(col(vecCol)).as("cv"),
-      render(bits(col(vecCol))).as("bucket"))
-    // queries: materialize the bit columns once, then explode the probe set
-    val q0 = queries.filter(okLen).select(
-      col(idCol).as("query_id") +: normalize(col(vecCol)).as("qv") +:
-        bits(col(vecCol)).zipWithIndex.map { case (bc, i) => bc.as(s"__b$i") }: _*)
-    val bitRefs = (0 until b).map(i => col(s"__b$i"))
-    def probe(flip: Int): Column = render(
-      bitRefs.zipWithIndex.map { case (bt, i) => if (i == flip) !bt else bt })
-    val probes =
-      if (multiProbe) probe(-1) +: (0 until b).map(probe)
-      else Seq(probe(-1))
-    // array_distinct: a null BIT (null embedding element upstream) makes a
-    // flipped probe render identically to the unflipped one — deduping the
-    // probe set keeps the bucket join from emitting duplicate neighbors
-    val q = q0.select(col("query_id"), col("qv"),
-      explode(array_distinct(array(probes: _*))).as("bucket"))
-    rankDesc(c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", dot(col("qv"), col("cv"))), k, roundScore)
   }
 
   /** IVF-style coarse quantization over the first `m` components: cell =
@@ -776,9 +439,9 @@ object Similarity {
               .cast("int")).cast("double"), 6)).as("ndcg"))
   }
 
-  /** Embedding-cosine near-duplicate pairs above `threshold`, LSH-blocked:
-    * only same-bucket pairs are scored (id_a < id_b). `rotatedDim` selects
-    * the bucket family exactly as in [[signLshTopK]].
+  /** Embedding-cosine near-duplicate pairs above `threshold`, LSH-blocked
+    * on the [[IvfIndex.Signs]] cells of `b` rotated hyperplanes over
+    * `dim` components: only same-bucket pairs are scored (id_a < id_b).
     *
     * `bands` is the scale knob (OR-amplification): band j hashes with an
     * independent seeded plane family, and a pair is a candidate if it
@@ -792,98 +455,55 @@ object Similarity {
     * behavior. Cost is `bands` map-side bucket columns and a
     * candidate-pair dedup before scoring — never an extra corpus scan. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, b: Int,
-                         rotatedDim: Option[Int] = None,
+                         threshold: Double, b: Int, dim: Int,
                          seed: Long = DefaultSeed,
                          roundScore: Int = 6,
                          bands: Int = 1): DataFrame = {
     require(bands >= 1, s"bands=$bands must be >= 1")
-    require(bands == 1 || rotatedDim.isDefined,
-      "multi-band blocking needs the seeded rotated family (rotatedDim)")
-    // Canonicalize on the RAW vector first (the simhashPairs trick,
-    // SCALE.md §10a): a d-duplicated vector costs one row in the bucket
-    // join instead of d², and the win grows as (N/D)² with duplication —
-    // exact duplicates are the norm in crawled embedding corpora. The
-    // ids array is bounded by per-vector duplication (same state bound
-    // argument as the winnow fp groups). Dup-free corpora pay one extra
-    // corpus exchange (the canonicalization aggregate) and nothing else.
-    val ok = df.filter(size(col(vecCol)) >= rotatedDim.getOrElse(b))
-    val groups = ok.groupBy(col(vecCol).as("__v"))
-      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-      .select(col("__v"), col("__ids"),
-        element_at(col("__ids"), 1).as("__rep"),
-        normalize(col("__v")).as("nv"))
+    // Canonicalize on the RAW vector first ([[Blocking.canonical]]): a
+    // d-duplicated vector costs one row in the bucket join instead of
+    // d², and exact duplicates are the norm in crawled embedding
+    // corpora. Dup-free corpora pay one extra corpus exchange (the
+    // canonicalization aggregate) and nothing else.
+    val groups = Blocking.canonical(df.filter(size(col(vecCol)) >= dim),
+        idCol, col(vecCol))
+      .withColumn("nv", normalize(col("__sig")))
     // [within-group] identical vectors share every bucket, so the original
     // bucket join emits all their a<b pairs iff the self-score clears the
     // threshold — reproduce that gate exactly (dot of the normalized
     // vector with itself, rounded, NOT an assumed 1.0)
-    // two chained explodes keep per-row arrays O(d) — the d²/2 pair
-    // volume is inherent output, but a single in-row array of it is not
-    // survivable for heavily duplicated vectors
-    val within = groups.filter(size(col("__ids")) >= 2)
+    val within = Blocking.withinPairs(groups.filter(size(col("__ids")) >= 2)
       .withColumn("score", round(dot(col("nv"), col("nv")), roundScore))
-      .filter(col("score") >= threshold)
-      .select(col("__ids"), col("score"),
-        posexplode(col("__ids")).as(Seq("__i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__i") + lit(2),
-          greatest(size(col("__ids")) - col("__i") - 1, lit(0))))
-          .as("id_b"),
-        col("score"))
-      .select(col("id_a"), col("id_b"), col("score"))
-    // [cross-group] band/bucket the DISTINCT vectors only
-    val bandCols = (0 until bands).map { j =>
-      val bucket = rotatedDim match {
-        case Some(dim) => signBucketRotated(col("__v"), b, dim, seed + j)
-        case None      => signBucket(col("__v"), b)
-      }
-      struct(lit(j).as("band"), bucket.as("bucket"))
-    }
-    val withBucket = groups
-      .select(col("__rep"), col("__ids"), col("nv"),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col("__rep"), col("__ids"), col("nv"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val a = withBucket.select(col("band"), col("bucket"),
-      col("__rep").as("__rep_a"), col("__ids").as("__ids_a"),
-      col("nv").as("va"))
-    val bb = withBucket.select(col("band"), col("bucket"),
-      col("__rep").as("__rep_b"), col("__ids").as("__ids_b"),
-      col("nv").as("vb"))
-    // Score and threshold INSIDE the bucket join, BEFORE any pair dedup:
-    // a vector pair colliding in several bands recomputes its
-    // (deterministic) dot once per band, but only the above-threshold
-    // survivors — thin rows — ever reach a dedup exchange. Deduping first
-    // would shuffle every candidate pair with both dim-wide vectors
-    // attached (the sf1 rehearsal measured that plan at 211 s vs ~bands×
-    // dot cost here).
-    val scoredGroups = a.join(bb, Seq("band", "bucket"))
-      .filter(col("__rep_a") < col("__rep_b"))
-      .withColumn("score", round(dot(col("va"), col("vb")), roundScore))
+      .filter(col("score") >= threshold), "__ids", "score")
+    // [cross-group] band/bucket the DISTINCT vectors only. Score and
+    // threshold INSIDE the bucket join, BEFORE any pair dedup: a vector
+    // pair colliding in several bands recomputes its (deterministic) dot
+    // once per band, but only the above-threshold survivors — thin rows
+    // — ever reach a dedup exchange. Deduping first would shuffle every
+    // candidate pair with both dim-wide vectors attached (the sf1
+    // rehearsal measured that plan at 211 s vs ~bands× dot cost here).
+    val buckets = Blocking.banded(groups, "bucket", (0 until bands).map(j =>
+      IvfIndex.Signs(b, dim, seed + j).home(col("__sig"))),
+      "__rep", "__ids", "nv")
+    val scored = Blocking.selfJoin(buckets, Seq("band", "bucket"),
+        Seq("__rep", "__ids", "nv"))
+      .withColumn("score", round(dot(col("nv_a"), col("nv_b")), roundScore))
       .filter(col("score") >= threshold)
       .select(col("__rep_a"), col("__rep_b"), col("__ids_a"),
         col("__ids_b"), col("score"))
-    val distinctGroups =
-      if (bands == 1) scoredGroups
-      else scoredGroups.dropDuplicates("__rep_a", "__rep_b")
-    // expand group pairs to id pairs map-side; distinct groups are
-    // disjoint id sets, so every (a, b) orders via least/greatest
-    val cross = distinctGroups
-      .select(col("__ids_b"), col("score"),
-        explode(col("__ids_a")).as("__a"))
-      .select(col("__a"), col("score"), explode(col("__ids_b")).as("__b"))
-      .select(least(col("__a"), col("__b")).as("id_a"),
-        greatest(col("__a"), col("__b")).as("id_b"), col("score"))
-    within.unionByName(cross)
+    within.unionByName(Blocking.crossPairs(
+      if (bands == 1) scored else scored.dropDuplicates("__rep_a", "__rep_b"),
+      "score"))
   }
 
   /** k-nearest-neighbor GRAPH over a corpus — every node's top-k cosine
-    * neighbors among its LSH candidates. The all-nodes-are-queries sibling
-    * of [[signLshTopK]], with the plan shape that difference forces:
-    * [[signLshTopK]] broadcasts its (small) query set, but a corpus can't
-    * broadcast against itself, so here both sides of the candidate join
-    * are the SAME bucketed frame and the join is a plain shuffle hash
-    * join on (band, bucket) — the corpus shuffles once per side, never
+    * neighbors among its LSH candidates (the [[IvfIndex.Signs]] cells).
+    * The all-nodes-are-queries sibling of an `IvfIndex(Signs, Flat)`
+    * top-k, with the plan shape that difference forces: the index
+    * broadcasts its (small) query set, but a corpus can't broadcast
+    * against itself, so here both sides of the candidate join are the
+    * SAME bucketed frame and the join is a plain shuffle hash join on
+    * (band, bucket) — the corpus shuffles once per side, never
     * all-pairs. The kNN graph is the substrate for graph-based curation
     * (SemDeDup-style pruning, label propagation, connected-component
     * clustering via [[Dedup.clusters]] over the edge set).
@@ -907,32 +527,22 @@ object Similarity {
                bands: Int = 1, roundScore: Int = 6): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(bands >= 1, s"bands=$bands must be >= 1")
-    // too-short vectors degrade OUT of the graph (same posture as
-    // signLshTopK/IvfIndex) rather than killing the job under ANSI mode
-    val ok = corpus.filter(size(col(vecCol)) >= dim)
-    // bucket on the RAW vector (sign is scale-invariant, and the raw
-    // dot avoids any ulp-level sign flip vs the normalized one); score
-    // on the normalized vector so pair scoring is one dot product
-    val bandCols = (0 until bands).map { j =>
-      struct(lit(j).as("band"),
-        signBucketRotated(col(vecCol), b, dim, seed + j).as("bucket"))
-    }
-    val nodes = ok.select(col(idCol).as("id"),
-        normalize(col(vecCol)).as("nv"),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("nv"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val lhs = nodes.select(col("band"), col("bucket"),
-      col("id").as("src"), col("nv").as("va"))
-    val rhs = nodes.select(col("band"), col("bucket"),
-      col("id").as("dst"), col("nv").as("vb"))
+    // too-short vectors degrade OUT of the graph (the IvfIndex posture)
+    // rather than killing the job under ANSI mode. Bucket on the RAW
+    // vector (sign is scale-invariant, and the raw dot avoids any
+    // ulp-level sign flip vs the normalized one); score on the
+    // normalized vector so pair scoring is one dot product
+    val nodes = Blocking.banded(corpus.filter(size(col(vecCol)) >= dim)
+        .select(col(idCol).as("id"), normalize(col(vecCol)).as("nv"),
+          col(vecCol).as("__v")), "bucket", (0 until bands).map(j =>
+        IvfIndex.Signs(b, dim, seed + j).home(col("__v"))), "id", "nv")
     // score INSIDE the bucket join (deterministic, so the cross-band
     // dedup can key on the thin (src, dst) rows — the vectors never
     // reach the dedup exchange; the cosineNearDupPairs lesson)
-    val scored = lhs.join(rhs, Seq("band", "bucket"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("score", dot(col("va"), col("vb")))
-      .select(col("src"), col("dst"), col("score"))
+    val scored = Blocking.selfJoin(nodes, Seq("band", "bucket"),
+        Seq("id", "nv"), _ =!= _)
+      .select(col("id_a").as("src"), col("id_b").as("dst"),
+        dot(col("nv_a"), col("nv_b")).as("score"))
     val cand = if (bands == 1) scored
                else scored.dropDuplicates("src", "dst")
     val w = Window.partitionBy(col("src"))

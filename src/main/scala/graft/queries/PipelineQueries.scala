@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.llm.{Clustering, Contamination, Corpus, Dedup, IvfIndex, Multimodal, Pii, QualityModel, Quantize, Sampling, Similarity, TextAnalysis}
-import graft.llm.IvfIndex.{Flat, ResidualPq, SeededPq, Sq8, Trained}
+import graft.llm.{Blocking, Clustering, Contamination, Corpus, Dedup, IvfIndex, Multimodal, Pii, QualityModel, Quantize, Sampling, Similarity, TextAnalysis}
+import graft.llm.IvfIndex.{Bits, Flat, OneCell, Prefix, ResidualPq, SeededPq,
+  Signs, Sq8, Trained}
 import graft.operators.{AsofJoin, Cohorts, RangeJoin, Sessionize, Skew, TimeSeries}
 import graft.streaming.{SessionEvent, StreamingSessionize, StreamingZscore, ZscoreEvent}
 
@@ -684,10 +685,23 @@ object PipelineQueries {
       p
     }
 
+  /** The binary indexes over 48-bit sign words of the 64-dim fixture:
+    * the brute Hamming scan (one cell) and the 6-bit prefix-cell store. */
+  private val HammingBrute = IvfIndex(OneCell, Bits(48, 64))
+  private val HammingPrefix = IvfIndex(Prefix(48, 6), Bits(48, 64))
+
   private def sharedHammingIndex(s: SparkSession, d: String): String =
     sharedIndex(s, d, "hamming")(p =>
-      Similarity.writeHammingIndex(Tables.embeddings(s, d), "vec_id",
-        "embedding", p, dim = 64, prefixBits = 6))
+      HammingPrefix.write(Tables.embeddings(s, d), "vec_id", "embedding", p))
+
+  /** The two-stage binary path: a `candK` brute Hamming shortlist over
+    * `bits`-bit words, refined to the exact-cosine top `k`. */
+  private def hammingRerank(e: DataFrame, q: DataFrame, k: Int, candK: Int,
+                            bits: Int = 48): DataFrame = {
+    val ix = IvfIndex(OneCell, Bits(bits, 64))
+    ix.refine(ix.topK(e, q, "vec_id", "embedding", k = candK, probes = 1),
+      e, q, "vec_id", "embedding", k)
+  }
 
   /** The axis-cell IVF over the first 4 components — the untrained
     * coarse stage of ann_ivf_* / ann_ivfpq_topk / search_mmr_ivf. */
@@ -1454,9 +1468,8 @@ object PipelineQueries {
     // hamming-1 multi-probe on the query side) -------------------------------
     "ann_sign_lsh" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      Similarity.signLshTopK(e, e.filter(col("vec_id") < 50),
-        "vec_id", "embedding", k = 3, b = 4, rotatedDim = Some(64),
-        multiProbe = true)
+      IvfIndex(Signs(4, 64), Flat).topK(e, e.filter(col("vec_id") < 50),
+        "vec_id", "embedding", k = 3, probes = 5)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     }),
@@ -1565,8 +1578,8 @@ object PipelineQueries {
     // scores, ties on id, replays engine-exactly ---------------------------
     "ann_hamming_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      Similarity.hammingTopK(e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = 5, dim = 64)
+      HammingBrute.topK(e, e.filter(col("vec_id") < 10),
+        "vec_id", "embedding", k = 5, probes = 1)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), col("hamming"))
     }),
@@ -1582,8 +1595,8 @@ object PipelineQueries {
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5)
-      val approx = Similarity.hammingTopK(e, q, "vec_id", "embedding",
-        k = 5, dim = 64)
+      val approx = HammingBrute.topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 1)
       Similarity.recallAtK(exact, approx, k = 5)
         .select(col("query_id"), col("n_hits"), col("recall"))
     }),
@@ -1596,10 +1609,10 @@ object PipelineQueries {
     "ann_hamming_blocked" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < 10)
-      val full = Similarity.hammingTopK(e, q, "vec_id", "embedding",
-        k = 5, dim = 64)
-      val blocked = Similarity.hammingTopKBlocked(e, q, "vec_id",
-        "embedding", k = 5, dim = 64, prefixBits = 6)
+      val full = HammingBrute.topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 1)
+      val blocked = HammingPrefix.topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 7)
       Similarity.recallAtK(full, blocked, k = 5)
         .select(col("query_id"), col("n_hits"), col("recall"))
     }),
@@ -1613,8 +1626,7 @@ object PipelineQueries {
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5)
-      val approx = Similarity.hammingRerankTopK(e, q, "vec_id",
-        "embedding", k = 5, candK = 50, dim = 64)
+      val approx = hammingRerank(e, q, k = 5, candK = 50)
       Similarity.recallAtK(exact, approx, k = 5)
         .select(col("query_id"), col("n_hits"), col("recall"))
     }),
@@ -1631,10 +1643,10 @@ object PipelineQueries {
       // use): this row times the pruned probe READ + the recall join,
       // not the store write (r12 split)
       val idx = sharedHammingIndex(s, d)
-      val full = Similarity.hammingTopK(e, q, "vec_id", "embedding",
-        k = 5, dim = 64)
-      val blocked = Similarity.hammingTopKIndexed(s.read.parquet(idx), q,
-        "vec_id", "embedding", k = 5, dim = 64, prefixBits = 6)
+      val full = HammingBrute.topK(e, q, "vec_id", "embedding",
+        k = 5, probes = 1)
+      val blocked = HammingPrefix.probe(s.read.parquet(idx), q,
+        "vec_id", "embedding", k = 5, probes = 7)
       Similarity.recallAtK(full, blocked, k = 5)
         .select(col("query_id"), col("n_hits"), col("recall"))
     }),
@@ -1646,7 +1658,7 @@ object PipelineQueries {
     "ann_hamming_build" -> ((s, d) => {
       val idx = sharedHammingIndex(s, d)
       s.read.parquet(idx)
-        .groupBy(col("bucket").cast("long").as("bucket"))
+        .groupBy(col("cell").cast("long").as("bucket"))
         .agg(count(lit(1)).as("n_rows"))
     }),
 
@@ -1662,8 +1674,7 @@ object PipelineQueries {
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves all sweep points
       hammingSizingCandKs.map { ck =>
-        val approx = Similarity.hammingRerankTopK(e, q, "vec_id",
-          "embedding", k = 5, candK = ck, dim = 64)
+        val approx = hammingRerank(e, q, k = 5, candK = ck)
         Similarity.recallAtK(exact, approx, k = 5)
           .select(lit(ck.toLong).as("cand_k"), col("query_id"),
             col("n_hits"), col("recall"))
@@ -1705,8 +1716,8 @@ object PipelineQueries {
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves the sweep
       hammingSizingBits.map { b =>
-        val approx = Similarity.hammingRerankTopK(e, q, "vec_id",
-          "embedding", k = 5, candK = hammingBitsCandK, dim = 64, bits = b)
+        val approx = hammingRerank(e, q, k = 5, candK = hammingBitsCandK,
+          bits = b)
         Similarity.recallAtK(exact, approx, k = 5)
           .select(lit(b.toLong).as("bits"), col("query_id"),
             col("n_hits"), col("recall"))
@@ -2121,8 +2132,8 @@ object PipelineQueries {
       val q = e.filter(col("vec_id") < 50)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 3)
-      val approx = Similarity.signLshTopK(e, q, "vec_id", "embedding",
-        k = 3, b = 4, rotatedDim = Some(64), multiProbe = true)
+      val approx = IvfIndex(Signs(4, 64), Flat).topK(e, q, "vec_id",
+        "embedding", k = 3, probes = 5)
       Similarity.recallAtK(exact, approx, k = 3)
         .select(col("query_id"), col("n_hits"), col("recall"))
     }),
@@ -2215,7 +2226,7 @@ object PipelineQueries {
     // --- embedding-cosine near-dup pairs (rotated sign-LSH blocking) --------
     "embed_cosine_neardup" -> ((s, d) =>
       Similarity.cosineNearDupPairs(Tables.embeddings(s, d),
-        "vec_id", "embedding", threshold = 0.35, b = 2, rotatedDim = Some(64))
+        "vec_id", "embedding", threshold = 0.35, b = 2, dim = 64)
         .select("id_a", "id_b", "score")),
 
     // --- banded (OR-amplified) variant: the 100 TB shape — more bucket
@@ -2223,8 +2234,8 @@ object PipelineQueries {
     // recall that extra bits alone would lose --------------------------------
     "embed_neardup_banded" -> ((s, d) =>
       Similarity.cosineNearDupPairs(Tables.embeddings(s, d),
-        "vec_id", "embedding", threshold = 0.35, b = 4,
-        rotatedDim = Some(64), bands = 2)
+        "vec_id", "embedding", threshold = 0.35, b = 4, dim = 64,
+        bands = 2)
         .select("id_a", "id_b", "score")),
 
     // --- near-dup BLOCKING sizing sweep: partner-recall of the
@@ -2266,10 +2277,8 @@ object PipelineQueries {
       // through the checkpoint instead pinned ~1 GB of blocks at sf1.
       def legFlag(vq: Column, vx: Column, b: Int, bands: Int): Column =
         (0 until bands).map { j =>
-          Similarity.signBucketRotated(vq, b, 64,
-            Similarity.DefaultSeed + j) ===
-            Similarity.signBucketRotated(vx, b, 64,
-              Similarity.DefaultSeed + j)
+          val cells = Signs(b, 64, Similarity.DefaultSeed + j)
+          cells.home(vq) === cells.home(vx)
         }.reduce(_ || _)
       val nv = e.filter(size(col("embedding")) >= 64)
         .select(col("vec_id"), col("embedding").as("__v"),
@@ -2294,8 +2303,9 @@ object PipelineQueries {
           .crossJoin(nTrue)
           .select(lit(b.toLong).as("b"), lit(bands.toLong).as("bands"),
             col("n_true"), col("n_found"),
-            round(col("n_found").cast("double") / col("n_true"), 6)
-              .as("recall"))
+            // NULL on an empty sample, as SQL's 0/0
+            when(col("n_true") > 0, round(
+              col("n_found").cast("double") / col("n_true"), 6)).as("recall"))
       }.reduce(_ unionByName _)
     }),
 
@@ -3674,10 +3684,6 @@ object PipelineQueries {
       //    a truth pair is a candidate iff its two signatures share ≥1
       //    band hash — per-leg flags evaluate in ONE pass over the thin
       //    truth checkpoint, Θ(|truth|) for all legs together.
-      val rowsOf = (b: Int) => 8 / b
-      def bandHash(sig: Column, b: Int, band: Int): Column =
-        md5(concat((0 until rowsOf(b)).map(r =>
-          element_at(sig, band * rowsOf(b) + r + 1)): _*))
       val docSig = groups.select(explode(col("__ids")).as("doc_id"),
         col("__sig"))
       val flagged = truth
@@ -3687,9 +3693,9 @@ object PipelineQueries {
           col("__sig").as("__sig_b")), Seq("id_b"), "left")
       val hitCols = count(lit(1)).as("n_true") +:
         lshSizingBands.map { b =>
-          val collide = (0 until b).map(i =>
-            bandHash(col("__sig_a"), b, i) ===
-              bandHash(col("__sig_b"), b, i)).reduce(_ || _)
+          val collide = Dedup.bandHashes(col("__sig_a"), 8, b)
+            .zip(Dedup.bandHashes(col("__sig_b"), 8, b))
+            .map { case (x, y) => x === y }.reduce(_ || _)
           coalesce(sum(when(coalesce(collide, lit(false)), 1L)), lit(0L))
             .as(s"n_hit_$b")
         }
@@ -3703,19 +3709,11 @@ object PipelineQueries {
         .as("__tw"))
         .select(expr("__tw div 2").as("n_within")).localCheckpoint()
       lshSizingBands.map { b =>
-        val bandCols = (0 until b).map(i => struct(lit(i).as("band"),
-          bandHash(col("__sig"), b, i).as("band_hash")))
-        val banded = groups.select(col("__rep"),
-            size(col("__ids")).cast("long").as("__sz"),
-            explode(array(bandCols: _*)).as("bh"))
-          .select(col("__rep"), col("__sz"), col("bh.band").as("band"),
-            col("bh.band_hash").as("band_hash"))
-        val a = banded.select(col("band"), col("band_hash"),
-          col("__rep").as("__rep_a"), col("__sz").as("__sz_a"))
-        val b2 = banded.select(col("band"), col("band_hash"),
-          col("__rep").as("__rep_b"), col("__sz").as("__sz_b"))
-        val nCross = a.join(b2, Seq("band", "band_hash"))
-          .filter(col("__rep_a") < col("__rep_b"))
+        val banded = Blocking.banded(
+          groups.withColumn("__sz", size(col("__ids")).cast("long")),
+          "band_hash", Dedup.bandHashes(col("__sig"), 8, b), "__rep", "__sz")
+        val nCross = Blocking.selfJoin(banded, Seq("band", "band_hash"),
+            Seq("__rep", "__sz"))
           .dropDuplicates("__rep_a", "__rep_b")
           .agg(coalesce(sum(col("__sz_a") * col("__sz_b")), lit(0L))
             .as("n_cross"))
@@ -4107,21 +4105,17 @@ object PipelineQueries {
     // --- streaming binary-fingerprint encode: the 48-bit Hamming word
     // computed AT INGEST (map-only, stateless — the streaming plan IS
     // the batch plan under a micro-batch trigger), completing the binary
-    // ANN regime's ingest story the way stream_pq completes PQ's; the
-    // arriving words append straight into writeHammingIndex's
-    // bucket-partitioned layout ------------------------------------------
+    // ANN regime's ingest story the way stream_pq completes PQ's: the
+    // store's own encode row, so arriving words append straight into the
+    // prefix-cell store's cell-partitioned layout -------------------------
     "stream_hamming" -> ((s, d) => {
       val ss = replaySession(s)
       graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
         "stream_hamming") { source =>
-        val stream = source()
-        stream
-          .select(col("vec_id"),
-            col("embedding").cast("array<float>").as("embedding"))
-          .filter(size(col("embedding")) >= 64)
-          .select(col("vec_id"),
-            Similarity.hammingWord(col("embedding"), dim = 64)
-              .as("fingerprint"))
+        HammingPrefix.encode(source().select(col("vec_id"),
+            col("embedding").cast("array<float>").as("embedding")),
+          "vec_id", "embedding")
+          .select(col("neighbor_id").as("vec_id"), col("cw").as("fingerprint"))
       }
     }),
 

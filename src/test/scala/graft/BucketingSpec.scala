@@ -39,24 +39,23 @@ class BucketingSpec extends SparkSpec {
   test("hamming index: probe buckets arrive as PartitionFilters (pruned " +
     "listing) and results are row-identical to the un-materialized " +
     "blocked scan") {
-    import graft.llm.Similarity
-    import org.apache.spark.sql.functions.{col, size}
+    import graft.llm.IvfIndex
+    import org.apache.spark.sql.functions.size
     val e = graft.core.Tables.embeddings(spark, sf001)
     val q = e.filter($"vec_id" < 10)
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_hamming_idx_spec").getPath
-    Similarity.writeHammingIndex(e, "vec_id", "embedding", dir,
-      dim = 64, prefixBits = 6)
+    val ix = IvfIndex(IvfIndex.Prefix(48, 6), IvfIndex.Bits(48, 64))
+    ix.write(e, "vec_id", "embedding", dir)
     val idx = spark.read.parquet(dir)
-    val out = Similarity.hammingTopKIndexed(idx, q, "vec_id", "embedding",
-      k = 5, dim = 64, prefixBits = 6)
+    val out = ix.probe(idx, q, "vec_id", "embedding", k = 5, probes = 7)
     // 1. the probed-bucket IN-list lands in PartitionFilters on the
     //    index scan — unprobed bucket directories are never listed/read
     val plan = out.queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator
       .find(l => l.contains("Scan parquet") || l.contains("FileScan"))
     assert(plan.contains("PartitionFilters") &&
-      plan.contains("bucket"), s"no partition pruning:\n$plan")
+      plan.contains("cell"), s"no partition pruning:\n$plan")
     assert(!plan.contains("PartitionFilters: []"),
       s"empty PartitionFilters — probe IN-list not pushed:\n$scanLine")
     // 2. fewer partition dirs read than written: the fixture's 10
@@ -71,7 +70,7 @@ class BucketingSpec extends SparkSpec {
       case other => other.children.flatMap(scans)
     }
     val written = new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("bucket="))
+      .count(_.getName.startsWith("cell="))
     val probed = scans(out.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths
         .exists(_.toString.contains("graft_hamming_idx_spec")))
@@ -81,9 +80,8 @@ class BucketingSpec extends SparkSpec {
       s"pruning read ${probed.get} of $written partitions")
     // 3. candidate semantics unchanged: row-identical to the blocked
     //    scan over the same corpus (both universes len ≥ 64)
-    val blocked = Similarity.hammingTopKBlocked(
-      e.filter(size($"embedding") >= 64), q, "vec_id", "embedding",
-      k = 5, dim = 64, prefixBits = 6)
+    val blocked = ix.topK(e.filter(size($"embedding") >= 64), q, "vec_id",
+      "embedding", k = 5, probes = 7)
     val a = out.collect().map(_.toSeq).sortBy(_.toString)
     val b = blocked.collect().map(_.toSeq).sortBy(_.toString)
     assert(a.toSeq == b.toSeq, "indexed ≠ blocked")
@@ -130,28 +128,23 @@ class BucketingSpec extends SparkSpec {
 
   test("compactIndex bounds per-bucket file counts after streaming-style " +
     "appends and serving stays byte-identical") {
-    import graft.llm.Similarity
-    import org.apache.spark.sql.functions.col
+    import graft.llm.IvfIndex
     val e = graft.core.Tables.embeddings(spark, sf001)
     val q = e.filter($"vec_id" < 10)
     val dir = freshTmpDir("graft_compact_spec")
     val path = dir.getPath
     // base store + 3 micro-batch-style appends (each append lands one
-    // file per touched bucket — the stream_hamming ingest shape)
-    Similarity.writeHammingIndex(e, "vec_id", "embedding", path,
-      dim = 64, prefixBits = 6)
-    val enc = e.filter(org.apache.spark.sql.functions
-        .size($"embedding") >= 64)
-      .select($"vec_id".as("neighbor_id"),
-        Similarity.hammingWord(col("embedding"), dim = 64).as("cw"))
-      .withColumn("bucket", org.apache.spark.sql.functions.expr("cw >> 42"))
+    // file per touched cell — the stream_hamming ingest shape)
+    val ix = IvfIndex(IvfIndex.Prefix(48, 6), IvfIndex.Bits(48, 64))
+    ix.write(e, "vec_id", "embedding", path)
+    val enc = ix.encode(e, "vec_id", "embedding")
     (1 to 3).foreach { _ =>
       enc.limit(40).coalesce(1)
-        .write.mode("append").partitionBy("bucket").parquet(path)
+        .write.mode("append").partitionBy("cell").parquet(path)
     }
     def filesPerBucket(): Map[String, Int] =
       new java.io.File(path).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
         .map(d => d.getName ->
           d.listFiles().count(_.getName.startsWith("part-"))).toMap
     val before = filesPerBucket()
@@ -160,11 +153,10 @@ class BucketingSpec extends SparkSpec {
     // snapshot serving BEFORE compaction (store rows grew by the
     // appends — the snapshot is whatever the fragmented store serves)
     def serve(): Seq[Seq[Any]] =
-      Similarity.hammingTopKIndexed(spark.read.parquet(path), q,
-        "vec_id", "embedding", k = 5, dim = 64, prefixBits = 6)
-        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+      ix.probe(spark.read.parquet(path), q, "vec_id", "embedding", k = 5,
+        probes = 7).collect().map(_.toSeq).sortBy(_.toString).toSeq
     val beforeRows = serve()
-    val rewritten = Similarity.compactIndex(spark, path, "bucket",
+    val rewritten = IvfIndex.compactIndex(spark, path, "cell",
       maxFilesPerBucket = 2)
     assert(rewritten.nonEmpty, "nothing compacted")
     val after = filesPerBucket()
@@ -176,7 +168,7 @@ class BucketingSpec extends SparkSpec {
     // serving is byte-identical across the rewrite
     assert(serve() == beforeRows && beforeRows.nonEmpty)
     // idempotent: a second pass finds nothing over threshold
-    assert(Similarity.compactIndex(spark, path, "bucket", 2).isEmpty)
+    assert(IvfIndex.compactIndex(spark, path, "cell", 2).isEmpty)
   }
 
   test("trained-ivf index: probe cells arrive as PartitionFilters, " +

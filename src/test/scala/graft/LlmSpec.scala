@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.llm.{Clustering, Contamination, Dedup, Multimodal, Pii, Similarity, TextAnalysis}
+import graft.llm.{Clustering, Contamination, Dedup, IvfIndex, Multimodal, Pii, Similarity, TextAnalysis}
 
 class LlmSpec extends SparkSpec {
   import spark.implicits._
@@ -552,34 +552,16 @@ class LlmSpec extends SparkSpec {
   }
 
   test("sign-LSH only pairs same-bucket vectors") {
+    // cells under Signs(2, 2)'s two seeded planes, bit i = sign of
+    // ⟨v, plane_i⟩ with planes ≈ (0.563, −0.372) and (−0.099, 0.080)
     val vecs = Seq(
-      (0L, Array(1.0f, 1.0f)), (1L, Array(2.0f, 3.0f)),   // bucket 11
+      (0L, Array(1.0f, 1.0f)), (1L, Array(1.0f, -1.0f)),  // bucket 10
       (2L, Array(-1.0f, 1.0f))                            // bucket 01
     ).toDF("vec_id", "embedding")
-    val out = Similarity.signLshTopK(vecs, vecs, "vec_id", "embedding",
-      k = 5, b = 2)
+    val out = IvfIndex(IvfIndex.Signs(2, 2), IvfIndex.Flat).topK(vecs, vecs,
+        "vec_id", "embedding", k = 5, probes = 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(out == Set((0L, 1L), (1L, 0L))) // vec 2 alone in its bucket
-  }
-
-  test("rotated sign-LSH recall >= axis-aligned recall on real embeddings") {
-    // top-3 recall vs exact brute force, over the driver's embedding
-    // fixture (64-dim learned-ish vectors — exactly the domain where
-    // axis-aligned signs can collapse onto correlated leading dims)
-    val e = spark.read.parquet(s"$sf001/embeddings.parquet")
-    val q = e.filter($"vec_id" < 40)
-    def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exact = topSet(Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 3))
-    val axis = topSet(Similarity.signLshTopK(e, q, "vec_id", "embedding",
-      k = 3, b = 4, rotatedDim = None))
-    val rot = topSet(Similarity.signLshTopK(e, q, "vec_id", "embedding",
-      k = 3, b = 4, rotatedDim = Some(64), multiProbe = true))
-    val axisRecall = (axis & exact).size.toDouble / exact.size
-    val rotRecall = (rot & exact).size.toDouble / exact.size
-    info(s"recall vs brute force: axis=$axisRecall rotated=$rotRecall")
-    assert(rotRecall >= axisRecall)
-    assert(rotRecall > 0.0)
   }
 
   test("blockedNameMatches: name-grain collapse, block + length gates, " +
@@ -690,8 +672,7 @@ class LlmSpec extends SparkSpec {
     val e = spark.read.parquet(s"$sf001/embeddings.parquet")
     def pairs(bands: Int, seed: Long = Similarity.DefaultSeed) =
       Similarity.cosineNearDupPairs(e, "vec_id", "embedding",
-        threshold = 0.35, b = 4, rotatedDim = Some(64),
-        seed = seed, bands = bands)
+        threshold = 0.35, b = 4, dim = 64, seed = seed, bands = bands)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val banded = pairs(bands = 2)
     val band0 = pairs(bands = 1)
@@ -1573,8 +1554,8 @@ class LlmSpec extends SparkSpec {
       3L -> base.clone                  // second copy: tie, id breaks
     ).toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" === 0)
-    val out = Similarity.hammingTopK(vecs, q, "vec_id", "embedding",
-        k = 3, dim = 64, bits = 48)
+    val out = IvfIndex(IvfIndex.OneCell, IvfIndex.Bits(48, 64)).topK(vecs, q,
+        "vec_id", "embedding", k = 3, probes = 1)
       .collect().map(r => (r.getInt(1), r.getLong(2), r.getLong(3))).sorted
     assert(out.toSeq == Seq((1, 1L, 0L), (2, 3L, 0L), (3, 2L, 48L)),
       out.mkString(","))
@@ -1590,10 +1571,20 @@ class LlmSpec extends SparkSpec {
     // (distance 0 — found); the negated vector's prefix is the
     // complement (prefix distance 4 at prefixBits = 4, outside the
     // 1-flip probe set — correctly missed: that's the blocking trade)
-    val blocked = Similarity.hammingTopKBlocked(vecs, q, "vec_id",
-        "embedding", k = 3, dim = 64, prefixBits = 4)
+    val blocked = IvfIndex(IvfIndex.Prefix(48, 4), IvfIndex.Bits(48, 64))
+      .topK(vecs, q, "vec_id", "embedding", k = 3, probes = 5)
       .collect().map(r => (r.getLong(2), r.getLong(3))).sorted
     assert(blocked.toSeq == Seq((1L, 0L), (3L, 0L)), blocked.mkString(","))
+    // a prefix cell reads the codec's own word: no other pairing
+    // composes; sign cells are strings, so a Signs index has no store
+    import IvfIndex._
+    val signs = IvfIndex(Signs(2, 64), Flat)
+    Seq(() => IvfIndex(Prefix(48, 4), Flat), () => IvfIndex(Prefix(32, 4),
+      Bits(48, 64)), () => IvfIndex(Signs(4, 64), Bits(48, 64)),
+      () => IvfIndex(OneCell, ResidualPq(IndexedSeq(IndexedSeq(Array(0.0))))),
+      () => signs.encode(vecs, "vec_id", "embedding"),
+      () => signs.probe(vecs, q, "vec_id", "embedding", k = 3, probes = 1))
+      .foreach(ix => intercept[IllegalArgumentException](ix()))
   }
 
   test("tokenEntropy: hand-computed nats, boilerplate scores low, " +

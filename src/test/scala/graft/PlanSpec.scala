@@ -83,7 +83,7 @@ class PlanSpec extends SparkSpec {
       "ann_hamming_topk", "ann_hamming_recall", "ann_hamming_rerank",
       "ann_hamming_blocked", "ann_hamming_indexed", "ann_hamming_sizing",
       // the bits sweep reuses the same brute exact-cosine baseline leg
-      // (its per-bits shortlists are the hammingTopK broadcast scan)
+      // (its per-bits shortlists are the one-cell Hamming broadcast scan)
       "ann_hamming_bits",
       // the trained-vs-axis recall eval's exact leg is the brute-force
       // scorer by design; both IVF legs are cell-pruned equi-joins
@@ -477,15 +477,17 @@ class PlanSpec extends SparkSpec {
   test("blocked hamming: hint-free bucket equi-join — AQE broadcasts a " +
     "small probe batch at runtime, never a sort or nested loop") {
     import graft.core.Tables
-    import graft.llm.Similarity
+    import graft.llm.IvfIndex
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sf001)
-    val df = Similarity.hammingTopKBlocked(e, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, dim = 64, prefixBits = 6)
+    val df = IvfIndex(IvfIndex.Prefix(48, 6), IvfIndex.Bits(48, 64)).topK(e,
+      e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, probes = 7)
     // the join carries NO broadcast hint (a corpus-scale query batch must
-    // be free to shuffle on the bucket) — execute, then read the FINAL
+    // be free to shuffle on the cell) — execute, then read the FINAL
     // adaptive plan: a tiny probe batch must land on a broadcast hash
     // join at runtime, and the corpus side must never sort or nest
+    val opt = df.queryExecution.optimizedPlan.toString
+    assert(!opt.contains("strategy=broadcast"), opt)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p)

@@ -54,5 +54,10 @@ class ProfileSpec extends SparkSpec {
     def dump() = Profile.normalize(Profile.plan(spark, sf001, "q1_pricing"))
     val a = dump()
     assert(a.contains("#N") && a == dump())
+    // a lambda's class id depends on class-load order, not on the plan
+    def lambda(id: Int, addr: String, hash: String) = Profile.normalize(
+      s"Invoke graft.llm.Multimodal$$$$$$Lambda$$$id/0x$addr@$hash, apply")
+    assert(lambda(7037, "00007f3c0c4e1a30", "5b2f1c") ==
+      lambda(7015, "00007f3c0c4d9c48", "1e9a77"))
   }
 }

@@ -428,14 +428,14 @@ class PropertySpec extends SparkSpec {
       val df = vecs.toDF("vec_id", "embedding")
       val b = 2; val dim = 8; val threshold = 0.2
       val canonical = Similarity.cosineNearDupPairs(df, "vec_id",
-        "embedding", threshold, b, rotatedDim = Some(dim))
+        "embedding", threshold, b, dim)
         .as[(Long, Long, Double)].collect().toSet
       // reference: per-id bucket + pairwise score (the pre-round-5 shape)
       val withB = df.filter(size(col("embedding")) >= dim)
         .select(col("vec_id"),
           Similarity.normalize(col("embedding")).as("nv"),
-          Similarity.signBucketRotated(col("embedding"), b, dim,
-            Similarity.DefaultSeed).as("bucket"))
+          graft.llm.IvfIndex.Signs(b, dim).home(col("embedding"))
+            .as("bucket"))
       val ref = withB.select(col("bucket"), col("vec_id").as("id_a"),
           col("nv").as("va"))
         .join(withB.select(col("bucket"), col("vec_id").as("id_b"),
@@ -1321,7 +1321,7 @@ class PropertySpec extends SparkSpec {
       val df = Seq((1L, v)).toDF("id", "vec")
       val (word, s) = df.select(
         Similarity.hammingWord(col("vec"), dim = 16, bits = 20),
-        Similarity.signBucketRotated(col("vec"), b = 20, dim = 16))
+        graft.llm.IvfIndex.Signs(20, 16).home(col("vec")))
         .as[(Long, String)].collect().head
       assert(word == java.lang.Long.parseLong(s.reverse, 2),
         s"seed=$seed word=$word bucket=$s")
@@ -1426,7 +1426,7 @@ class PropertySpec extends SparkSpec {
 
   test("hamming index store serves EXACTLY the blocked scan's rows on " +
     "random corpora (write → pruned read ≡ in-memory blocking)") {
-    import graft.llm.Similarity
+    import graft.llm.IvfIndex
     val vecGen = Gen.listOfN(64, Gen.chooseNum(-100, 100).map(_ / 16.0f))
     val corpusGen = Gen.chooseNum(20, 60).flatMap(n =>
       Gen.listOfN(n, vecGen)).map(_.zipWithIndex
@@ -1437,13 +1437,12 @@ class PropertySpec extends SparkSpec {
       val q = df.filter(col("vec_id") < 5)
       val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
         s"graft_hamming_prop_$seed").getPath
-      Similarity.writeHammingIndex(df, "vec_id", "embedding", dir,
-        dim = 64, prefixBits = 6)
-      val indexed = Similarity.hammingTopKIndexed(spark.read.parquet(dir),
-          q, "vec_id", "embedding", k = 3, dim = 64, prefixBits = 6)
+      val ix = IvfIndex(IvfIndex.Prefix(48, 6), IvfIndex.Bits(48, 64))
+      ix.write(df, "vec_id", "embedding", dir)
+      val indexed = ix.probe(spark.read.parquet(dir), q, "vec_id",
+          "embedding", k = 3, probes = 7)
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
-      val blocked = Similarity.hammingTopKBlocked(df, q,
-          "vec_id", "embedding", k = 3, dim = 64, prefixBits = 6)
+      val blocked = ix.topK(df, q, "vec_id", "embedding", k = 3, probes = 7)
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
       assert(indexed == blocked, s"seed=$seed")
     }
@@ -1555,10 +1554,12 @@ class PropertySpec extends SparkSpec {
     val q = e.filter(col("vec_id") < 8)
     val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
       k = 5).localCheckpoint()
+    val ix = graft.llm.IvfIndex(graft.llm.IvfIndex.OneCell,
+      graft.llm.IvfIndex.Bits(48, 64))
     val byCk = Seq(5, 15, 40).map { ck =>
-      ck -> Similarity.recallAtK(exact,
-          Similarity.hammingRerankTopK(e, q, "vec_id", "embedding",
-            k = 5, candK = ck, dim = 64), k = 5)
+      ck -> Similarity.recallAtK(exact, ix.refine(ix.topK(e, q, "vec_id",
+          "embedding", k = ck, probes = 1), e, q, "vec_id", "embedding", 5),
+          k = 5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     byCk.sliding(2).foreach { case Seq((c1, r1), (c2, r2)) =>

@@ -46,35 +46,37 @@ class StreamingSpec extends SparkSpec {
     // state store was recovered, not rebuilt empty.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[MetricSample]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_rate_ckpt").toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Double, Option[Long], Option[Double])]()
-    // foreachBatch is the recovery-capable sink (the memory sink refuses
-    // to resume from a checkpoint); committed batches do not re-fire
-    def start() = StreamingRate(input.toDS(), stateTtl = false)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[graft.streaming.RateResult], _: Long) =>
-        df.collect().foreach(r => seen.add((r.ts, r.rate, r.confidence)))
-      }.start()
-    input.addData(MetricSample("s", "bits_in", 100.0, 1000.0, 60))
-    val q1 = start()
-    q1.processAllAvailable()
-    q1.stop()
-    input.addData(MetricSample("s", "bits_in", 160.0, 1060.0, 60))
-    val q2 = start()
+    val ckptDir = freshTmpDir("graft_rate_ckpt")
+    val ckpt = ckptDir.getPath
     try {
-      q2.processAllAvailable()
-      // the batch-2 rate proves the recovered state store:
-      // (160-100)/60 = 1, confidence 60/60 = 1.0 — a query restarted with
-      // empty state would emit rate = None for its first sample
-      import scala.jdk.CollectionConverters._
-      assert(seen.asScala.toSet == Set(
-        (1000.0, None, None),
-        (1060.0, Some(1L), Some(1.0))), seen.asScala.toSet)
-    } finally q2.stop()
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Double, Option[Long], Option[Double])]()
+      // foreachBatch is the recovery-capable sink (the memory sink refuses
+      // to resume from a checkpoint); committed batches do not re-fire
+      def start() = StreamingRate(input.toDS(), stateTtl = false)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[graft.streaming.RateResult], _: Long) =>
+          df.collect().foreach(r => seen.add((r.ts, r.rate, r.confidence)))
+        }.start()
+      input.addData(MetricSample("s", "bits_in", 100.0, 1000.0, 60))
+      val q1 = start()
+      q1.processAllAvailable()
+      q1.stop()
+      input.addData(MetricSample("s", "bits_in", 160.0, 1060.0, 60))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        // the batch-2 rate proves the recovered state store:
+        // (160-100)/60 = 1, confidence 60/60 = 1.0 — a query restarted with
+        // empty state would emit rate = None for its first sample
+        import scala.jdk.CollectionConverters._
+        assert(seen.asScala.toSet == Set(
+          (1000.0, None, None),
+          (1060.0, Some(1L), Some(1.0))), seen.asScala.toSet)
+      } finally q2.stop()
+    } finally rmTree(ckptDir)
   }
 
   test("multiple samples within one micro-batch process in ts order") {
@@ -237,34 +239,36 @@ class StreamingSpec extends SparkSpec {
   test("zscore moments survive a query RESTART from checkpoint (ST1)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ZscoreEvent]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_zscore_ckpt").toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Long, Option[Double])]()
-    def start() = StreamingZscore(input.toDS(), threshold = 2.0)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[ZscoreOut], _: Long) =>
-        df.collect().foreach(o => seen.add((o.event_id, o.n_prior, o.zscore)))
-      }.start()
-    def ev(id: Long, ts: Long, v: Double) =
-      ZscoreEvent(1L, ts, id, v, math.round(v * 100))
-    input.addData(ev(1, 10, 10.0), ev(2, 20, 12.0), ev(3, 30, 11.0))
-    val q1 = start()
-    q1.processAllAvailable()
-    q1.stop()
-    input.addData(ev(4, 40, 50.0))
-    val q2 = start()
+    val ckptDir = freshTmpDir("graft_zscore_ckpt")
+    val ckpt = ckptDir.getPath
     try {
-      q2.processAllAvailable()
-      import scala.jdk.CollectionConverters._
-      val byId = seen.asScala.map(t => t._1 -> ((t._2, t._3))).toMap
-      // event 4 scores against the RECOVERED moments {10,12,11}:
-      // mean 11, var 1 → z = 39. A restart with empty state would
-      // report n_prior = 0 and no z.
-      assert(byId(4L) == ((3L, Some(39.0))), byId)
-    } finally q2.stop()
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Long, Long, Option[Double])]()
+      def start() = StreamingZscore(input.toDS(), threshold = 2.0)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[ZscoreOut], _: Long) =>
+          df.collect().foreach(o => seen.add((o.event_id, o.n_prior, o.zscore)))
+        }.start()
+      def ev(id: Long, ts: Long, v: Double) =
+        ZscoreEvent(1L, ts, id, v, math.round(v * 100))
+      input.addData(ev(1, 10, 10.0), ev(2, 20, 12.0), ev(3, 30, 11.0))
+      val q1 = start()
+      q1.processAllAvailable()
+      q1.stop()
+      input.addData(ev(4, 40, 50.0))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        import scala.jdk.CollectionConverters._
+        val byId = seen.asScala.map(t => t._1 -> ((t._2, t._3))).toMap
+        // event 4 scores against the RECOVERED moments {10,12,11}:
+        // mean 11, var 1 → z = 39. A restart with empty state would
+        // report n_prior = 0 and no z.
+        assert(byId(4L) == ((3L, Some(39.0))), byId)
+      } finally q2.stop()
+    } finally rmTree(ckptDir)
   }
 
   test("keyed state is provider-portable: RocksDB state store produces " +
@@ -453,7 +457,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming fingerprints APPEND into the bucket-partitioned index " +
     "store — the streamed store equals the batch-written one") {
-    import graft.llm.Similarity
+    import graft.llm.IvfIndex
     implicit val sqlCtx = spark.sqlContext
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 11 - 5).toFloat).toArray
@@ -462,17 +466,14 @@ class StreamingSpec extends SparkSpec {
     val streamDir = freshTmpDir("graft_hamming_stream_idx")
     val batchDir = freshTmpDir("graft_hamming_stream_idx_batch")
     val ckpt = freshTmpDir("graft_hamming_stream_idx_ckpt")
-    val shift = 48 - 6
+    val ix = IvfIndex(IvfIndex.Prefix(48, 6), IvfIndex.Bits(48, 64))
     val input = MemoryStream[(Long, Array[Float])]
-    val words = input.toDS().toDF("vec_id", "embedding")
-      .filter(size(col("embedding")) >= 64)
-      .select(col("vec_id").as("neighbor_id"),
-        Similarity.hammingWord(col("embedding"), dim = 64).as("cw"))
-      .withColumn("bucket", expr(s"cw >> $shift"))
+    val words = ix.encode(input.toDS().toDF("vec_id", "embedding"),
+      "vec_id", "embedding")
     val q = words.writeStream
       .option("checkpointLocation", ckpt.getPath)
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.write.mode("append").partitionBy("bucket")
+        df.write.mode("append").partitionBy("cell")
           .parquet(streamDir.getPath)
       }.start()
     try {
@@ -482,24 +483,21 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     // the batch layout over the union input is the reference store
-    Similarity.writeHammingIndex((b1 ++ b2).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", batchDir.getPath, dim = 64, prefixBits = 6)
+    ix.write((b1 ++ b2).toDF("vec_id", "embedding"), "vec_id", "embedding",
+      batchDir.getPath)
     def readStore(p: String) = spark.read.parquet(p)
-      .select(col("neighbor_id"), col("cw"), col("bucket").cast("long"))
+      .select(col("neighbor_id"), col("cw"), col("cell").cast("long"))
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     val s = readStore(streamDir.getPath)
     val b = readStore(batchDir.getPath)
     assert(s == b && s.length == 6, s"streamed store diverged: $s vs $b")
     // and the streamed store serves queries identically
     val qdf = (b1 ++ b2).toDF("vec_id", "embedding")
-    val fromStream = Similarity.hammingTopKIndexed(
-      spark.read.parquet(streamDir.getPath), qdf, "vec_id", "embedding",
-      k = 2, dim = 64, prefixBits = 6).collect()
+    def serve(p: String) = ix.probe(spark.read.parquet(p), qdf, "vec_id",
+      "embedding", k = 2, probes = 7).collect()
       .map(_.toSeq).sortBy(_.toString).toSeq
-    val fromBatch = Similarity.hammingTopKIndexed(
-      spark.read.parquet(batchDir.getPath), qdf, "vec_id", "embedding",
-      k = 2, dim = 64, prefixBits = 6).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
+    val fromStream = serve(streamDir.getPath)
+    val fromBatch = serve(batchDir.getPath)
     assert(fromStream == fromBatch)
   }
 
@@ -685,7 +683,7 @@ class StreamingSpec extends SparkSpec {
   test("compactIndex runs INSIDE foreachBatch between micro-batch " +
     "appends: no lost rows across the interleave, file counts bounded, " +
     "serving identical to the batch-built store") {
-    import graft.llm.Similarity
+    import graft.llm.IvfIndex
     implicit val sqlCtx = spark.sqlContext
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 9 - 4).toFloat).toArray
@@ -697,27 +695,24 @@ class StreamingSpec extends SparkSpec {
     val ckpt = freshTmpDir("graft_compact_live_ckpt")
     def rmAll(): Unit = Seq(storeDir, ckpt).foreach(rmTree)
     try {
-      val shift = 48 - 4
+      val ix = IvfIndex(IvfIndex.Prefix(48, 4), IvfIndex.Bits(48, 64))
       val input = MemoryStream[(Long, Array[Float])]
-      val words = input.toDS().toDF("vec_id", "embedding")
-        .filter(size(col("embedding")) >= 64)
-        .select(col("vec_id").as("neighbor_id"),
-          Similarity.hammingWord(col("embedding"), dim = 64).as("cw"))
-        .withColumn("bucket", expr(s"cw >> $shift"))
+      val words = ix.encode(input.toDS().toDF("vec_id", "embedding"),
+        "vec_id", "embedding")
       val compactions =
         scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-      // THE RECOMMENDED MAINTENANCE POSTURE (Similarity.compactIndex's
+      // THE RECOMMENDED MAINTENANCE POSTURE (IvfIndex.compactIndex's
       // concurrency contract, demonstrated): compaction runs inside
       // foreachBatch — i.e. BETWEEN micro-batches, with ingest
       // quiesced by construction — every 3rd batch
       val q = words.writeStream
         .option("checkpointLocation", ckpt.getPath)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-          df.write.mode("append").partitionBy("bucket")
+          df.write.mode("append").partitionBy("cell")
             .parquet(storeDir.getPath)
           if (id % 3 == 2) {
-            compactions += Similarity.compactIndex(df.sparkSession,
-              storeDir.getPath, "bucket", maxFilesPerBucket = 2)
+            compactions += IvfIndex.compactIndex(df.sparkSession,
+              storeDir.getPath, "cell", maxFilesPerBucket = 2)
             ()
           }
         }.start()
@@ -734,28 +729,26 @@ class StreamingSpec extends SparkSpec {
       // contract's whole point: every ingested row is still served
       val all = batches.flatten
       val stored = spark.read.parquet(storeDir.getPath)
-        .select(col("neighbor_id"), col("cw"), col("bucket").cast("long"))
+        .select(col("neighbor_id"), col("cw"), col("cell").cast("long"))
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
-      val reference = all.toDF("vec_id", "embedding")
-        .select(col("vec_id").as("neighbor_id"),
-          Similarity.hammingWord(col("embedding"), dim = 64).as("cw"))
-        .withColumn("bucket", expr(s"cw >> $shift"))
+      val reference = ix.encode(all.toDF("vec_id", "embedding"), "vec_id",
+          "embedding")
+        .select(col("neighbor_id"), col("cw"), col("cell").cast("long"))
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
       assert(stored == reference && stored.length == 40,
         s"rows lost or mutated across the interleave: " +
           s"${stored.length} vs ${reference.length}")
       // a final quiesced compaction bounds every bucket ≤ threshold and
       // serving stays identical through it
-      def serve() = Similarity.hammingTopKIndexed(
-        spark.read.parquet(storeDir.getPath),
+      def serve() = ix.probe(spark.read.parquet(storeDir.getPath),
         all.toDF("vec_id", "embedding"), "vec_id", "embedding",
-        k = 2, dim = 64, prefixBits = 4).collect()
+        k = 2, probes = 5).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq
       val before = serve()
-      Similarity.compactIndex(spark, storeDir.getPath, "bucket",
+      IvfIndex.compactIndex(spark, storeDir.getPath, "cell",
         maxFilesPerBucket = 2)
       val files = storeDir.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
         .map(d => d.getName ->
           d.listFiles().count(_.getName.startsWith("part-"))).toMap
       assert(files.values.forall(_ <= 2), s"still fragmented: $files")
@@ -772,7 +765,7 @@ class StreamingSpec extends SparkSpec {
     // compaction inside foreachBatch (ingest quiesced between
     // micro-batches) rewrites only cell= partition files and never
     // touches the sidecar dirs the appends and cold serving depend on
-    import graft.llm.{IvfIndex, Similarity}
+    import graft.llm.IvfIndex
     implicit val sqlCtx = spark.sqlContext
     def vec(i: Int): Array[Float] =
       (1 to 64).map(j => ((i * j) % 9 - 4).toFloat).toArray
@@ -809,7 +802,7 @@ class StreamingSpec extends SparkSpec {
           df.write.mode("append").partitionBy("cell")
             .parquet(storeDir.getPath)
           if (id % 3 == 2) {
-            compactions += Similarity.compactIndex(df.sparkSession,
+            compactions += IvfIndex.compactIndex(df.sparkSession,
               storeDir.getPath, "cell", maxFilesPerBucket = 2)
             ()
           }
@@ -846,7 +839,7 @@ class StreamingSpec extends SparkSpec {
         allDf, "vec_id", "embedding", k = 2, probes = 2).collect()
         .map(_.toSeq).sortBy(_.toString).toSeq
       val before = serve(storeDir.getPath)
-      Similarity.compactIndex(spark, storeDir.getPath, "cell",
+      IvfIndex.compactIndex(spark, storeDir.getPath, "cell",
         maxFilesPerBucket = 2)
       val files = storeDir.listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell="))

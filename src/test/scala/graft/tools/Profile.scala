@@ -29,8 +29,8 @@ import graft.Verify.jsonString
   * `Profile --explain <regex…>` dumps formatted physical plans instead.
   * With `PLAN_DIR` set, each plan goes to `<PLAN_DIR>/<query>.txt` with
   * the run-specific parts normalized away (expression, lambda, RDD and
-  * plan ids, call sites, object hashes, store-path pids), so two trees'
-  * dumps compare with a plain `diff -r`. Otherwise plans print to
+  * plan ids, call sites, lambda class ids, object hashes, store-path
+  * pids), so two trees' dumps compare with a plain `diff -r`. Otherwise plans print to
   * stdout.
   *
   * Usage: `sbt "Test/runMain graft.tools.Profile dedup_.* q1_pricing"` */
@@ -157,6 +157,7 @@ object Profile {
     .replaceAll("#\\d+", "#N").replaceAll("id=\\d+", "id=N")
     .replaceAll("lambda (\\w+?)_\\d+#", "lambda $1_N#")
     .replaceAll("RDD\\[\\d+\\] at (\\w+) at [\\w.$]+:\\d+", "RDD[N] at $1")
+    .replaceAll("Lambda\\$\\d*/0x[0-9a-f]+", "Lambda\\$N")
     .replaceAll("@[0-9a-f]+", "@H")
     .replaceAll("_idx_\\d+_[0-9a-f]+", "_idx_P")
 
