@@ -17,7 +17,8 @@ import graft.functions.Influx
   * batch and finally returns False to the Kafka consumer so the offset is
   * not committed (`:377-386`) — redelivery, at-least-once.
   *
-  * The line formatting (F7-F9/W3) is pure column work and fuses with the
+  * The line formatting (F7-F9/W3) is static kernels called from
+  * whole-stage codegen ([[graft.functions.Influx]]) and fuses with the
   * scan; only the transport runs in `foreachPartition`, so each executor
   * streams its partition in `batchSize` chunks — no driver collect, no
   * per-row round-trips. Use from streaming via

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
 /** Kafka-boundary transforms, expressed as plain DataFrame ops so they work
@@ -47,17 +48,21 @@ object KafkaShaped {
     * never passes: `None not in keys` is True in the reference, i.e. a
     * null key IS dropped by the filter — coalesce keeps three-valued
     * logic from losing such records from BOTH [[decodeAndValidate]] and
-    * [[invalidRecords]]. */
+    * [[invalidRecords]]. The list is one hashed set in the plan, not one
+    * literal per key for every micro-batch to coerce and rewrite. */
   private def keyAllowed(allowedKeys: Seq[String]): Option[Column] =
     if (allowedKeys.isEmpty) None
-    else Some(coalesce(col("key").cast("string").isin(allowedKeys: _*),
+    else Some(coalesce(
+      ColumnBridge.inStringSet(col("key").cast("string"), allowedKeys),
       lit(false)))
 
   /** The `parsed` struct holds ≥1 schema field. PERMISSIVE from_json
     * yields an all-null struct for malformed input (not a null struct) —
-    * treat both as invalid. */
+    * treat both as invalid. A null struct has no non-null field, so no
+    * separate struct test: the optimizer pushes this predicate below the
+    * projection as `from_json` calls, and each term costs a parse. */
   private def parsedOk(schema: StructType): Column =
-    col("parsed").isNotNull && schema.fields
+    schema.fields
       .map(f => col("parsed").getField(f.name).isNotNull)
       .reduce(_ || _)
 
@@ -71,12 +76,19 @@ object KafkaShaped {
   def decodeAndValidate(
       df: DataFrame,
       schema: StructType,
-      allowedKeys: Seq[String] = Nil): DataFrame = {
-    keyAllowed(allowedKeys).fold(df)(df.filter)
-      .withColumn("parsed", from_json(col("value").cast("string"), schema))
-      .filter(parsedOk(schema))
-      .select(col("key").cast("string").as("key"), col("parsed.*"))
-  }
+      allowedKeys: Seq[String] = Nil): DataFrame =
+    validParsed(df, schema, allowedKeys).select(col("key"), col("parsed.*"))
+
+  /** [[decodeAndValidate]]'s records before the struct is flattened: the
+    * string `key` and the `parsed` struct, in two Dataset operations (a
+    * micro-batch analyzes its whole plan once per operation). */
+  private[streaming] def validParsed(
+      df: DataFrame,
+      schema: StructType,
+      allowedKeys: Seq[String]): DataFrame =
+    df.select(col("key").cast("string").as("key"),
+        from_json(col("value").cast("string"), schema).as("parsed"))
+      .filter(keyAllowed(allowedKeys).fold(parsedOk(schema))(_ && parsedOk(schema)))
 
   /** The records [[decodeAndValidate]] would DROP — a dead-letter frame.
     * The reference counts skipped records

@@ -47,7 +47,7 @@ object Pipelines {
                      stateTtl: Boolean = true): DataFrame =
     KafkaShaped.encodeFanout(
       StreamingRate(samples, stateTtl).toDF(),
-      siteCol = split(col("series"), "\\|").getItem(0),
+      siteCol = substring_index(col("series"), "|", 1),
       topicSuffix = "processed",
       keyCol = concat_ws("|", col("series"), col("metric")),
       payload = struct(col("series"), col("metric"), col("value"),
@@ -69,18 +69,18 @@ object Pipelines {
     */
   def kafkaToInfluxLines(kafka: DataFrame,
                          allowedKeys: Seq[String] = Nil): DataFrame = {
-    val decoded = KafkaShaped.decodeAndValidate(kafka, processedSchema,
-      allowedKeys)
+    val decoded = KafkaShaped.validParsed(kafka, processedSchema, allowedKeys)
+    def parsed(field: String) = col("parsed").getField(field)
     val fields = concat_ws(",",
-      concat(col("metric"), lit("__counter="),
-        graft.functions.PyRepr.pyRepr(col("value"))),
-      when(col("rate").isNotNull,
-        concat(col("metric"), lit("__gauge="), col("rate").cast("string"))))
+      concat(parsed("metric"), lit("__counter="),
+        graft.functions.PyRepr.pyRepr(parsed("value"))),
+      when(parsed("rate").isNotNull,
+        concat(parsed("metric"), lit("__gauge="), parsed("rate").cast("string"))))
     InfluxSink.toLines(decoded,
-      measurement = col("metric"),
-      tags = map(lit("series"), col("series")),
+      measurement = parsed("metric"),
+      tags = map(lit("series"), parsed("series")),
       fields = fields,
-      tsSeconds = col("ts"))
+      tsSeconds = parsed("ts"))
   }
 
   /** Discovery dataflow (`discovery_plugin_agent.py:94-168` →

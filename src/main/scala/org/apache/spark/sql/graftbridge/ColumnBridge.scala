@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkRuntimeException
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark 4.x moved `Column` onto ColumnNode; building a `Column` from a
   * Catalyst `Expression` goes through `classic.ExpressionUtils`, which is
@@ -25,12 +27,28 @@ object ColumnBridge {
 
   /** A Column that calls the static kernel `obj.fn(args…)` per row —
     * Spark's own `StaticInvoke`, which forwards from generated and
-    * interpreted code alike. A null argument gives a null result without
-    * calling `fn`; `returnNullable` says whether `fn` may return null. */
+    * interpreted code alike. By default a null argument gives a null
+    * result without calling `fn`; with `propagateNull = false` the kernel
+    * receives the nulls itself. `returnNullable` says whether `fn` may
+    * return null. */
   def staticCall(obj: AnyRef, fn: String, dataType: DataType,
-                 returnNullable: Boolean = false)(args: Column*): Column =
+                 returnNullable: Boolean = false,
+                 propagateNull: Boolean = true)(args: Column*): Column =
     column(StaticInvoke(obj.getClass, dataType, fn, args.map(expression),
-      returnNullable = returnNullable))
+      propagateNull = propagateNull, returnNullable = returnNullable))
+
+  /** `c IN (values…)` on a string column as the one hashed `InSet` node
+    * the optimizer's `OptimizeIn` would produce from `isin` — built once,
+    * so a long list costs the analyzer no per-literal coercion and the
+    * optimizer no rewrite. Null when `c` is null, as `isin` is. */
+  def inStringSet(c: Column, values: Iterable[String]): Column =
+    column(InSet(expression(c), values.iterator.map(UTF8String.fromString).toSet[Any]))
+
+  /** The error `assert_true`/`raise_error` throw for a user message, for
+    * a static kernel that enforces the same condition. */
+  def userRaisedError(message: String): RuntimeException =
+    new SparkRuntimeException("USER_RAISED_EXCEPTION",
+      Map("errorMessage" -> message))
 
   /** Proper analysis-time arity error for injected SQL functions — the
     * same `WRONG_NUM_ARGS` condition built-in functions raise, instead of

@@ -64,6 +64,23 @@ class PipelinesSpec extends SparkSpec {
     assert(sent.value.size() == 2)
   }
 
+  test("site topic is the series' first `|` component, as the regex " +
+    "split gave it") {
+    val series = Seq(null, "", "nopipe", "|lead", "dc1|r1|if")
+    val wire = Pipelines.pollingToKafka(
+      series.map(s => MetricSample(s, "m", 1.0, 100.0, 60)).toDS(),
+      stateTtl = false)
+    val split0 = concat(
+      split(get_json_object(col("value"), "$.series"), "\\|").getItem(0),
+      lit("-processed"))
+    val got = wire.select(col("topic"), split0, col("key"))
+      .as[(String, String, String)].collect().toSet
+    assert(got == Set((null, null, "m"), ("-processed", "-processed", "|m"),
+      ("nopipe-processed", "nopipe-processed", "nopipe|m"),
+      ("-processed", "-processed", "|lead|m"),
+      ("dc1-processed", "dc1-processed", "dc1|r1|if|m")))
+  }
+
   test("influx sink: HTTP 400 falls back to point-by-point, drops poison") {
     val lines = Seq("good_a v=1 1", "poison v=x 2", "good_b v=3 3")
       .toDF("line")

@@ -907,13 +907,15 @@ class StreamingSpec extends SparkSpec {
       ("k1", """{"a": 1, "b": "x"}"""),
       ("k1", """not json"""),
       ("k2", """{"a": 2, "b": "y"}"""),                 // filtered by key
-      (null.asInstanceOf[String], """{"a": 3, "b": "z"}""")) // null key
+      (null.asInstanceOf[String], """{"a": 3, "b": "z"}"""), // null key
+      ("k1", null.asInstanceOf[String]))                // null value
       .toDF("key", "value")
     val valid = KafkaShaped.decodeAndValidate(df, schema, Seq("k1"))
     val dead = KafkaShaped.invalidRecords(df, schema, Seq("k1"))
     // exact partition, including the null-key record (None ∉ keys in the
     // reference → key-filtered, NOT lost to three-valued logic)
-    assert(valid.count() + dead.count() == 4)
+    assert(valid.count() == 1)
+    assert(valid.count() + dead.count() == 5)
     assert(dead.select("key", "dropped_by_key_filter")
       .as[(Option[String], Boolean)].collect().toSet ==
       Set((Some("k1"), false), (Some("k2"), true), (None, true)))
