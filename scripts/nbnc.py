@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment lines per source file and in total.
 
-Usage: python3 scripts/nbnc.py <path>...   (directories are walked for
-*.scala, *.java and *.py files)
+Usage: python3 scripts/nbnc.py [--max-file-lines N] <path>...
+(directories are walked for *.scala, *.java and *.py files)
 
 A line is not counted when it is blank, when it starts with `//` (or `#`
 in a Python file), or when it lies inside a `/* ... */` or `/** ... */`
 block that opens at the start of a line. A code line with a trailing
 comment counts.
+
+With --max-file-lines N, every file longer than N physical lines is
+named on stderr and the exit status is 1.
 """
 import os
 import sys
@@ -49,14 +52,27 @@ def files(paths):
 
 
 def main(argv):
+    max_lines = None
+    if argv[:1] == ["--max-file-lines"] and len(argv) > 1:
+        max_lines, argv = int(argv[1]), argv[2:]
     if not argv:
         sys.exit(__doc__)
     total = 0
+    too_long = []
     for path in files(argv):
         n = count(path)
         total += n
         print(f"{n:8d}  {path}")
+        if max_lines is not None:
+            with open(path, encoding="utf-8") as f:
+                physical = sum(1 for _ in f)
+            if physical > max_lines:
+                too_long.append((path, physical))
     print(f"{total:8d}  total")
+    for path, physical in too_long:
+        print(f"{path}: {physical} lines > {max_lines}", file=sys.stderr)
+    if too_long:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

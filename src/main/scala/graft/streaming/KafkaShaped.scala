@@ -59,8 +59,7 @@ object KafkaShaped {
   /** The `parsed` struct holds ≥1 schema field. PERMISSIVE from_json
     * yields an all-null struct for malformed input (not a null struct) —
     * treat both as invalid. A null struct has no non-null field, so no
-    * separate struct test: the optimizer pushes this predicate below the
-    * projection as `from_json` calls, and each term costs a parse. */
+    * separate struct test. */
   private def parsedOk(schema: StructType): Column =
     schema.fields
       .map(f => col("parsed").getField(f.name).isNotNull)
@@ -81,13 +80,17 @@ object KafkaShaped {
 
   /** [[decodeAndValidate]]'s records before the struct is flattened: the
     * string `key` and the `parsed` struct, in two Dataset operations (a
-    * micro-batch analyzes its whole plan once per operation). */
+    * micro-batch analyzes its whole plan once per operation). Each record
+    * is parsed once: `parsed` comes out of a one-element `explode`, so
+    * the optimizer cannot push [[parsedOk]] below it and copy `from_json`
+    * into every `OR` term; the key test still runs before the parse. */
   private[streaming] def validParsed(
       df: DataFrame,
       schema: StructType,
       allowedKeys: Seq[String]): DataFrame =
     df.select(col("key").cast("string").as("key"),
-        from_json(col("value").cast("string"), schema).as("parsed"))
+        explode(array(from_json(col("value").cast("string"), schema)))
+          .as("parsed"))
       .filter(keyAllowed(allowedKeys).fold(parsedOk(schema))(_ && parsedOk(schema)))
 
   /** The records [[decodeAndValidate]] would DROP — a dead-letter frame.

@@ -540,7 +540,7 @@ class CorpusQuantizeSpec extends SparkSpec {
   }
 
   test("quality ensemble: keep is the auditable conjunction of its legs") {
-    val q = graft.queries.PipelineQueries.queries("quality_ensemble")
+    val q = SparkEntry.queries("quality_ensemble")
     val out = q(spark, "/root/testdata/sf0.001")
       .as[(Long, Boolean, Double, Option[Double], Boolean)].collect()
     assert(out.nonEmpty)
@@ -559,7 +559,7 @@ class CorpusQuantizeSpec extends SparkSpec {
   }
 
   test("ccnet buckets: heads are the most fluent docs of their language") {
-    val q = graft.queries.PipelineQueries.queries("ccnet_buckets")
+    val q = SparkEntry.queries("ccnet_buckets")
     val out = q(spark, "/root/testdata/sf0.001")
       .as[(Long, String, Double, String)].collect()
     assert(out.nonEmpty)

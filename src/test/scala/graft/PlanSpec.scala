@@ -511,6 +511,7 @@ class PlanSpec extends SparkSpec {
       p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     val optimized = exprs(qe.optimizedPlan)
     assert(optimized.count(_.isInstanceOf[InSet]) == 1, qe.optimizedPlan)
+    assert(optimized.count(_.isInstanceOf[JsonToStructs]) == 1, qe.optimizedPlan)
     for (e <- exprs(qe.analyzed) ++ optimized) e match {
       case _: In | IsNotNull(_: JsonToStructs) | _: RegExpReplace |
            _: ArraySort | _: ArrayTransform | _: ArrayExists =>
