@@ -361,11 +361,12 @@ object Clustering {
   def pcaTopComponent(df: DataFrame, vecCol: String, dim: Int,
                       iters: Int = 2): DataFrame = {
     val spark = df.sparkSession
-    val (_, v, eigen) = powerDirection(df, vecCol, dim, iters)
     import spark.implicits._
-    v.zipWithIndex.map { case (c, j) =>
-      (j.toLong, c, BigDecimal(eigen).setScale(6,
-        BigDecimal.RoundingMode.HALF_UP).toDouble)
+    powerDirection(df, vecCol, dim, iters).toSeq.flatMap {
+      case (_, v, eigen) => v.zipWithIndex.map { case (c, j) =>
+        (j.toLong, c, BigDecimal(eigen).setScale(6,
+          BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
     }.toDF("pos", "component", "eigenvalue")
   }
 
@@ -376,7 +377,9 @@ object Clustering {
     * to rank-one whitening. One extra corpus scan past training. */
   def pcaProject(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                  iters: Int = 2): DataFrame = {
-    val (meanQ, v, _) = powerDirection(df, vecCol, dim, iters)
+    // no training rows: nothing to project, any direction will do
+    val (meanQ, v, _) = powerDirection(df, vecCol, dim, iters).getOrElse(
+      (new Array[Double](dim), IndexedSeq.fill(dim)(0.0), 0.0))
     val xc = zip_with(col("__w"), typedlit(meanQ.toSeq), (a, b) => a - b)
     df.filter(size(col(vecCol)) === dim)
       .select(col(idCol), quantize(col(vecCol)).as("__w"))
@@ -385,32 +388,38 @@ object Clustering {
   }
 
   /** The shared power-iteration loop: returns (quantized centering mean,
-    * final unit direction on the 2⁻²⁰ grid, final ‖u‖). See
-    * [[pcaTopComponent]] for the determinism argument. */
+    * final unit direction on the 2⁻²⁰ grid, final ‖u‖), or None when no
+    * vector has `dim` components. See [[pcaTopComponent]] for the
+    * determinism argument. */
   private def powerDirection(df: DataFrame, vecCol: String, dim: Int,
-      iters: Int): (Array[Double], IndexedSeq[Double], Double) = {
+      iters: Int): Option[(Array[Double], IndexedSeq[Double], Double)] = {
     require(iters >= 1 && iters <= 10, s"iters=$iters out of [1,10]")
     val base = df.filter(size(col(vecCol)) === dim)
       .select(quantize(col(vecCol)).as("__w"))
-    val meanQ = centeringMean(base, dim)
-    val xc = zip_with(col("__w"), typedlit(meanQ.toSeq),
-      (a, b) => a - b)
-    val (v, eigen) = powerLoop(base.select(xc.as("__xc")), dim, iters)
-    (meanQ, v, eigen)
+    centeringMean(base, dim).map { meanQ =>
+      val xc = zip_with(col("__w"), typedlit(meanQ.toSeq),
+        (a, b) => a - b)
+      val (v, eigen) = powerLoop(base.select(xc.as("__xc")), dim, iters)
+      (meanQ, v, eigen)
+    }
   }
 
   /** Per-component quantized centering mean of a (__w) frame — one
-    * map-side-combined aggregate to dim rows. */
-  private def centeringMean(base: DataFrame, dim: Int): Array[Double] = {
+    * map-side-combined aggregate to dim rows; None when the frame has
+    * no rows. */
+  private def centeringMean(base: DataFrame,
+                            dim: Int): Option[Array[Double]] = {
     val meanRows = base.select(posexplode(col("__w")))
       .groupBy("pos").agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
       .collect()
-    val meanQ = new Array[Double](dim)
-    meanRows.foreach { r =>
-      meanQ(r.getInt(0)) =
-        math.floor(r.getDouble(1) / r.getLong(2) * Q) / Q
+    Option.when(meanRows.nonEmpty) {
+      val meanQ = new Array[Double](dim)
+      meanRows.foreach { r =>
+        meanQ(r.getInt(0)) =
+          math.floor(r.getDouble(1) / r.getLong(2) * Q) / Q
+      }
+      meanQ
     }
-    meanQ
   }
 
   /** `iters` power-iteration rounds over a centered (__xc) frame:
@@ -478,8 +487,9 @@ object Clustering {
     val spark = df.sparkSession
     val base = df.filter(size(col(vecCol)) === dim)
       .select(quantize(col(vecCol)).as("__w"))
-    val meanQ = centeringMean(base, dim)
-    val comps = deflatedComponents(base, dim, nComponents, iters, meanQ)
+    // no training rows: no components (the SQL's empty result)
+    val comps = centeringMean(base, dim).toSeq.flatMap(meanQ =>
+      deflatedComponents(base, dim, nComponents, iters, meanQ))
     val out = comps.zipWithIndex.flatMap { case ((v, eigen), ci) =>
       val e6 = BigDecimal(eigen)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -547,7 +557,7 @@ object Clustering {
     val withId = df.filter(size(col(vecCol)) === dim)
       .select(col(idCol), quantize(col(vecCol)).as("__w"))
     val base = withId.select(col("__w"))
-    val meanQ = centeringMean(base, dim)
+    val meanQ = centeringMean(base, dim).getOrElse(new Array[Double](dim))
     val comps = deflatedComponents(base, dim, nComponents, iters, meanQ)
     val xcId = withId.select(col(idCol),
       zip_with(col("__w"), typedlit(meanQ.toSeq),

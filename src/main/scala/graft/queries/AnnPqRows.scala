@@ -84,54 +84,66 @@ object AnnPqRows {
         "vec_id", "embedding", topK = 3).localCheckpoint()
     }
 
-  /** [[pqEncodeCtes]] plus the IVF+PQ candidate stage: `recon`
-    * (codeword reconstructions), the axis-cell derivation over `e`
-    * (mirrors Similarity.axisCells at m=4), `q` (queries vec_id < 50,
-    * both probed cells), `c` (corpus home cell × reconstruction), and
-    * `sc` (ADC scores of cell-mates). */
-  private def pqIvfCtes(m: Int, k: Int, subDim: Int): String =
+  /** [[pqEncodeCtes]] plus `recon`, each vector's codeword
+    * reconstruction. */
+  private def pqReconCtes(m: Int, k: Int, subDim: Int): String =
     s"${pqEncodeCtes(m, k, subDim)},\n" +
       """recon AS (SELECT vec_id, flatten(list(cv ORDER BY a.j)) AS rv
         |          FROM a JOIN cb ON cb.j = a.j AND cb.c = a.c
-        |          GROUP BY vec_id),
-        |x0 AS (SELECT vec_id, v,
-        |        abs(v[1]) AS a0, abs(v[2]) AS a1,
-        |        abs(v[3]) AS a2, abs(v[4]) AS a3
-        |      FROM e),
-        |w2 AS (
-        |  SELECT *, CASE WHEN a0 >= a1 AND a0 >= a2 AND a0 >= a3 THEN 0
-        |                 WHEN a1 >= a2 AND a1 >= a3 THEN 1
-        |                 WHEN a2 >= a3 THEN 2 ELSE 3 END AS win
-        |  FROM x0),
-        |r2 AS (
-        |  SELECT *, CASE win
-        |    WHEN 0 THEN (CASE WHEN a1 >= a2 AND a1 >= a3 THEN 1
-        |                      WHEN a2 >= a3 THEN 2 ELSE 3 END)
-        |    WHEN 1 THEN (CASE WHEN a0 >= a2 AND a0 >= a3 THEN 0
-        |                      WHEN a2 >= a3 THEN 2 ELSE 3 END)
-        |    WHEN 2 THEN (CASE WHEN a0 >= a1 AND a0 >= a3 THEN 0
-        |                      WHEN a1 >= a3 THEN 1 ELSE 3 END)
-        |    ELSE (CASE WHEN a0 >= a1 AND a0 >= a2 THEN 0
-        |               WHEN a1 >= a2 THEN 1 ELSE 2 END)
-        |  END AS run
-        |  FROM w2),
-        |cells AS (
-        |  SELECT vec_id, v,
-        |         2 * win + CASE WHEN v[win + 1] >= 0 THEN 1 ELSE 0 END
-        |           AS cell_w,
-        |         2 * run + CASE WHEN v[run + 1] >= 0 THEN 1 ELSE 0 END
-        |           AS cell_r
-        |  FROM r2),
-        |q AS (SELECT vec_id AS query_id, v AS qv,
-        |             unnest([cell_w, cell_r]) AS cell
-        |      FROM cells WHERE vec_id < 50),
-        |c AS (SELECT cells.vec_id AS neighbor_id, cell_w AS cell, rv
-        |      FROM cells JOIN recon ON recon.vec_id = cells.vec_id),
-        |sc AS (SELECT q.query_id, c.neighbor_id,
-        |         list_dot_product(rv, rv)
-        |           - 2.0 * list_dot_product(qv, rv) AS d
-        |       FROM c JOIN q ON c.cell = q.cell
-        |                    AND c.neighbor_id <> q.query_id)""".stripMargin
+        |          GROUP BY vec_id)""".stripMargin
+
+  /** [[pqReconCtes]] plus the IVF+PQ candidate stage: the shared axis
+    * cells ([[ivfCellCtes]]) over `e`, `q` (queries vec_id < 50, both
+    * probed cells), `c` (corpus home cell × reconstruction), and `sc`
+    * (ADC scores of cell-mates). */
+  private def pqIvfCtes(m: Int, k: Int, subDim: Int): String =
+    s"""${pqReconCtes(m, k, subDim)},
+       |${ivfCellCtes("e")},
+       |q AS (SELECT vec_id AS query_id, e.v AS qv,
+       |             unnest([cell_w, cell_r]) AS cell
+       |      FROM ivcell JOIN e USING (vec_id) WHERE vec_id < 50),
+       |c AS (SELECT ivcell.vec_id AS neighbor_id, cell_w AS cell, rv
+       |      FROM ivcell JOIN recon ON recon.vec_id = ivcell.vec_id),
+       |sc AS (SELECT q.query_id, c.neighbor_id,
+       |         list_dot_product(rv, rv)
+       |           - 2.0 * list_dot_product(qv, rv) AS d
+       |       FROM c JOIN q ON c.cell = q.cell
+       |                    AND c.neighbor_id <> q.query_id)""".stripMargin
+
+  /** The seeded-codebook ADC leg under the trained cells: `tc` (corpus
+    * a2 cell × [[pqReconCtes]]' reconstruction) and `tsc`, the scores of
+    * each query (read from `vecs(vec_id, v)`) against the rows of its
+    * [[ivfTrainedCtes]] probed cells. */
+  private def seededTrainedScoresSql(vecs: String): String =
+    s"""tc AS (SELECT a2.vec_id AS neighbor_id, a2.cluster AS cell, rv
+       |       FROM a2 JOIN recon ON recon.vec_id = a2.vec_id),
+       |tsc AS (SELECT tqp.query_id, tc.neighbor_id,
+       |          list_dot_product(rv, rv)
+       |            - 2.0 * list_dot_product(q.v, rv) AS d
+       |        FROM tc JOIN tqp USING (cell)
+       |        JOIN $vecs q ON q.vec_id = tqp.query_id
+       |        WHERE tc.neighbor_id <> tqp.query_id)""".stripMargin
+
+  /** The SQ8 grid of the `ann_ivfsq_*` rows: `snv(vec_id, nv)`, each
+    * len-64 vector snapped to ann_int8_topk's int8 grid and normalized. */
+  private val sq8GridCtes =
+    """sq0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |          list_max(list_transform(embedding,
+      |            x -> abs(CAST(x AS DOUBLE)))) AS amax
+      |        FROM embeddings WHERE len(embedding) = 64),
+      |sdq AS (SELECT vec_id,
+      |          CASE WHEN amax IS NULL OR amax = 0
+      |               THEN list_transform(v, x -> 0.0)
+      |               ELSE list_transform(v, x ->
+      |                 greatest(-127.0, least(127.0,
+      |                     round(x * 127.0 / amax)))
+      |                   * (amax / 127.0))
+      |          END AS v
+      |        FROM sq0),
+      |snv AS (SELECT vec_id,
+      |          list_transform(v,
+      |            x -> x / sqrt(list_dot_product(v, v))) AS nv
+      |        FROM sdq)""".stripMargin
 
   /** Mirror of [[graft.llm.Pq.trainCodebooks]] (iters = 1) + ADC: the
     * per-subspace Lloyd round on the dyadic grid, replayed in SQL —
@@ -219,10 +231,10 @@ object AnnPqRows {
     * [[kmeansCtes]]' unrolled coarse training: `res` is each len-64
     * vector's dyadic-requantized residual against its a2 cell's c1
     * centroid (the centroid table the final assignment scored against —
-    * what the engine's Trained.train returns); `rqr` the query's
-    * full quantizer-distance cell ranking, `rqp` its first `probes`
-    * cells, `qres` the per-(query, probed-cell) residual. Everything a
-    * fine-stage replay needs, whatever its m/k/iters — shared so the
+    * what the engine's Trained.train returns); [[ivfTrainedCtes]]'
+    * `tqr` the query's full quantizer-distance cell ranking, `tqp` its
+    * first `probes` cells; `qres` the per-(query, probed-cell) residual.
+    * Everything a fine-stage replay needs, whatever its m/k/iters — shared so the
     * sweep oracles (`ann_ivfpq_mk`, `ann_ivfpq_iters`) and the serving
     * oracle can never diverge on the coarse stage. */
   private def residualBaseCtes(maxQueryId: Int, probes: Int): String =
@@ -233,16 +245,12 @@ object AnnPqRows {
        |              (SELECT unnest(generate_series(1, 64)) AS i) idx),
        |res AS (SELECT vec_id, cell, list(rv ORDER BY pos) AS r
        |        FROM resc GROUP BY 1, 2),
-       |rqr AS (SELECT vec_id AS query_id, j AS cell,
-       |               row_number() OVER (
-       |                   PARTITION BY vec_id ORDER BY s, j) AS rn
-       |        FROM s2 WHERE vec_id < $maxQueryId),
-       |rqp AS (SELECT query_id, cell FROM rqr WHERE rn <= $probes),
-       |qrc AS (SELECT rqp.query_id, rqp.cell, idx.i AS pos,
+       |${ivfTrainedCtes(maxQueryId, probes)},
+       |qrc AS (SELECT tqp.query_id, tqp.cell, idx.i AS pos,
        |          floor((w.w[idx.i] - c.c[idx.i]) * 1048576.0)
        |            / 1048576.0 AS rv
-       |        FROM rqp JOIN wq w ON w.vec_id = rqp.query_id
-       |        JOIN c1 c ON c.j = rqp.cell,
+       |        FROM tqp JOIN wq w ON w.vec_id = tqp.query_id
+       |        JOIN c1 c ON c.j = tqp.cell,
        |             (SELECT unnest(generate_series(1, 64)) AS i) idx),
        |qres AS (SELECT query_id, cell, list(rv ORDER BY pos) AS qrv
        |         FROM qrc GROUP BY 1, 2)""".stripMargin
@@ -283,31 +291,28 @@ object AnnPqRows {
     * decode to. */
   private lazy val ivfPqResidualTopKSql: String =
     s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-      residualCtes(maxQueryId = 50, probes = 2) + """
-        |SELECT query_id, rank, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |                                 ORDER BY d, neighbor_id)
-        |           AS BIGINT) AS rank
-        |  FROM rsc) WHERE rank <= 3""".stripMargin
+      residualCtes(maxQueryId = 50, probes = 2) + "\n" +
+      topKSql("rsc", "d", 3)
 
-  /** The shared exact-L2 truth leg (len-64 universe, queries
-    * `vec_id < maxQueryId`, MATERIALIZED so one evaluation serves every
-    * sweep leg) — CTEs `e0`/`xq`/`x`/`ex`. Single-sourced for the
-    * residual sweep oracles. */
-  private def exactL2LegSql(maxQueryId: Int, topK: Int): String =
-    s"""e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |       FROM embeddings WHERE len(embedding) = 64),
-       |xq AS (SELECT vec_id AS query_id, v AS qv FROM e0
-       |       WHERE vec_id < $maxQueryId),
-       |x AS (SELECT xq.query_id, c.vec_id AS neighbor_id,
-       |        list_dot_product(c.v, c.v)
-       |          - 2.0 * list_dot_product(qv, c.v) AS d
-       |      FROM e0 c, xq WHERE c.vec_id <> xq.query_id),
-       |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-       |  FROM x) WHERE rank <= $topK)""".stripMargin
+  /** The prefix of the residual recall oracles: the k-means replay, the
+    * residual `stage` over it ([[residualBaseCtes]] or [[residualCtes]]
+    * at maxQueryId 10), the len-64 universe `e0` and the materialized
+    * exact-L2 top-3 leg. */
+  private def residualSweepPrefix(stage: String): Seq[String] =
+    Seq(kmeansCtes(8, 2, 64), stage, len64Cte,
+      exactL2LegSql("e0", maxQueryId = 10, k = 3))
+
+  /** The refine stage of `IVFx,PQy,RFlat` under name prefix `p`: the
+    * `candK` shortlist of the serving ADC ranking `rsc` ([[residualCtes]])
+    * and its exact-L2 scores over `e0` ([[len64Cte]]) in `${p}ref`. */
+  private def refineCtes(p: String, candK: Int): String =
+    s"""${rankedSql(s"${p}cand", "rsc", "d", candK)},
+       |${p}ref AS (SELECT c0.query_id, c0.neighbor_id,
+       |           list_dot_product(c.v, c.v)
+       |             - 2.0 * list_dot_product(q.v, c.v) AS d
+       |         FROM ${p}cand c0
+       |         JOIN e0 c ON c.vec_id = c0.neighbor_id
+       |         JOIN e0 q ON q.vec_id = c0.query_id)""".stripMargin
 
   /** Generic residual-fine-stage SWEEP oracle: one coarse stage
     * ([[kmeansCtes]] + [[residualBaseCtes]]) and one materialized exact
@@ -318,34 +323,13 @@ object AnnPqRows {
     * `ann_ivfpq_iters` sizing rows ride this one generator, so a change
     * to the replay algebra cannot desynchronize them. */
   private def residualSweepSql(
-      legs: Seq[(String, Int, Int, Int, String)]): String = {
-    val shared =
-      s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        residualBaseCtes(maxQueryId = 10, probes = 2) + ",\n" +
-        exactL2LegSql(maxQueryId = 10, topK = 3)
-    val per = legs.map { case (p, m, k, iters, _) =>
-      s""",
-         |${residualAdcCtes(m, k, iters, p)},
-         |${p}apx AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-         |  FROM ${p}sc) WHERE rank <= 3)""".stripMargin
-    }.mkString
-    val selects = legs.map { case (p, _, _, _, labelSql) =>
-      s"""SELECT $labelSql, query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN ${p}apx a
-         |    ON a.query_id = ex.query_id
-         |   AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    shared + per + "\n" + selects
-  }
+      legs: Seq[(String, Int, Int, Int, String)]): String =
+    sweepSql(residualSweepPrefix(
+      residualBaseCtes(maxQueryId = 10, probes = 2)),
+      legs.map { case (p, m, k, iters, labelSql) =>
+        Leg(labelSql, s"${p}apx", residualAdcCtes(m, k, iters, p) + ",\n" +
+          rankedSql(s"${p}apx", s"${p}sc", "d", 3))
+      })
 
   /** The m/k sweep points (shared by the engine query and its oracle so
     * the two enumerate identical legs): dim=64 constrains subDim=64/m. */
@@ -364,110 +348,38 @@ object AnnPqRows {
   /** `ann_ivfpq_candk`'s oracle: ONE shared coarse stage + serving-depth
     * fine stage ([[residualCtes]] — the same `rsc` ADC scoring every
     * `ann_ivfpqt2_*` oracle ranks, so the sweep cannot desynchronize
-    * from serving) and one materialized exact leg; per candK a
-    * shortlist (`rank <= candK` over `rsc` — [[IvfIndex.refine]]'s
-    * candidate stage verbatim), the exact-L2 re-rank of ONLY the
-    * shortlist (the rerank oracle's `rref` chain, parameterized), and a
-    * recall block labeled by the BIGINT cand_k. */
-  private def refineCandKSweepSql(candKs: Seq[Int]): String = {
-    val shared =
-      s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        residualCtes(maxQueryId = 10, probes = 2) + ",\n" +
-        exactL2LegSql(maxQueryId = 10, topK = 3)
-    val per = candKs.map { ck =>
-      s""",
-         |ck${ck}cand AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-         |  FROM rsc) WHERE rank <= $ck),
-         |ck${ck}ref AS (SELECT c0.query_id, c0.neighbor_id,
-         |           list_dot_product(c.v, c.v)
-         |             - 2.0 * list_dot_product(q.v, c.v) AS d
-         |         FROM ck${ck}cand c0
-         |         JOIN e0 c ON c.vec_id = c0.neighbor_id
-         |         JOIN e0 q ON q.vec_id = c0.query_id),
-         |ck${ck}apx AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-         |  FROM ck${ck}ref) WHERE rank <= 3)""".stripMargin
-    }.mkString
-    val selects = candKs.map { ck =>
-      s"""SELECT CAST($ck AS BIGINT) AS cand_k, query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN ck${ck}apx a
-         |    ON a.query_id = ex.query_id
-         |   AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    shared + per + "\n" + selects
-  }
-
-  /** One recall-aggregation SELECT block — `method`-labeled recall of
-    * approximate CTE `apx` against the MATERIALIZED exact CTE `ex` —
-    * so the denominator/rounding algebra lives in one place for the
-    * round-14 recall oracles (the older recall oracles inline the same
-    * block; a change to recallAtK's algebra must update those too). */
-  private def recallSelectSql(method: String, apx: String): String =
-    s"""SELECT '$method' AS method, query_id, n_hits,
-       |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-       |FROM (
-       |  SELECT ex.query_id,
-       |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-       |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |         COUNT(*) AS n_exact
-       |  FROM ex LEFT JOIN $apx a
-       |    ON a.query_id = ex.query_id
-       |   AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1)""".stripMargin
+    * from serving) and one materialized exact leg; per candK the
+    * [[refineCtes]] shortlist and re-rank, and a recall block labeled
+    * by the BIGINT cand_k. */
+  private def refineCandKSweepSql(candKs: Seq[Int]): String =
+    sweepSql(residualSweepPrefix(residualCtes(maxQueryId = 10, probes = 2)),
+      candKs.map { ck =>
+        Leg(bigint("cand_k", ck), s"ck${ck}apx", refineCtes(s"ck$ck", ck) +
+          ",\n" + rankedSql(s"ck${ck}apx", s"ck${ck}ref", "d", 3))
+      })
 
   /** `ann_ivfpqt2_probes`' oracle: [[residualCtes]] at probes = cells
-    * (so `qres` carries every (query, cell) residual and `rqr` the full
+    * (so `qres` carries every (query, cell) residual and `tqr` the full
     * cell ranking), one MATERIALIZED exact-L2 leg, then per probe depth
     * a three-term-ADC candidate/rank/recall block over `rn <= p` —
     * generated from the same [[ivftProbeSweep]] the trained-IVF sweep
     * uses. */
-  private def ivfPqResidualProbesSql(probesList: Seq[Int]): String = {
-    val shared =
-      s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        residualCtes(maxQueryId = 10, probes = 8) + ",\n" +
-        exactL2LegSql(maxQueryId = 10, topK = 3)
-    val perP = probesList.map { p =>
-      s""",
-         |ps$p AS (SELECT r.query_id, rtc.neighbor_id,
-         |           list_dot_product(rv, rv)
-         |             - 2.0 * list_dot_product(qrv, rv)
-         |             + list_dot_product(qrv, qrv) AS d
-         |         FROM rtc
-         |         JOIN (SELECT query_id, cell FROM rqr WHERE rn <= $p) r
-         |           USING (cell)
-         |         JOIN qres q ON q.query_id = r.query_id
-         |                    AND q.cell = r.cell
-         |         WHERE rtc.neighbor_id <> r.query_id),
-         |papx$p AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-         |  FROM ps$p) WHERE rank <= 3)""".stripMargin
-    }.mkString
-    val selects = probesList.map { p =>
-      s"""SELECT CAST($p AS BIGINT) AS probes, query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN papx$p a
-         |    ON a.query_id = ex.query_id
-         |   AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    shared + perP + "\n" + selects
-  }
+  private def ivfPqResidualProbesSql(probesList: Seq[Int]): String =
+    sweepSql(residualSweepPrefix(residualCtes(maxQueryId = 10, probes = 8)),
+      probesList.map { p =>
+        Leg(bigint("probes", p), s"papx$p",
+          s"""ps$p AS (SELECT r.query_id, rtc.neighbor_id,
+             |           list_dot_product(rv, rv)
+             |             - 2.0 * list_dot_product(qrv, rv)
+             |             + list_dot_product(qrv, qrv) AS d
+             |         FROM rtc
+             |         JOIN (SELECT query_id, cell FROM tqr WHERE rn <= $p) r
+             |           USING (cell)
+             |         JOIN qres q ON q.query_id = r.query_id
+             |                    AND q.cell = r.cell
+             |         WHERE rtc.neighbor_id <> r.query_id),
+             |${rankedSql(s"papx$p", s"ps$p", "d", 3)}""".stripMargin)
+      })
 
   val rows: Seq[Row] = Seq(
     // --- ANN over the int8-quantized corpus: the memory-bound serving
@@ -506,11 +418,7 @@ object AnnPqRows {
         |  SELECT q.query_id, e.vec_id AS neighbor_id,
         |         list_dot_product(qv, e.v) AS score
         |  FROM e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, rank, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |                                 ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 5""".stripMargin),
+        |""".stripMargin + topKSql("s", "score DESC", 5)),
 
     // --- product quantization: 64 floats → 8 codes (32×), map-only encode
     // against seeded literal codebooks (Jégou et al. 2011) ----------------
@@ -537,11 +445,8 @@ object AnnPqRows {
       // ADC: dot(recon,recon) − 2·dot(q,recon) — both the shared
       // sequential-fold dot on literal-derived doubles, so the ranking
       // (and the sample) is bit-identical across engines
-      (s"WITH ${pqEncodeCtes(8, 16, 8)},\n" +
-        """recon AS (SELECT vec_id, flatten(list(cv ORDER BY a.j)) AS rv
-          |          FROM a JOIN cb ON cb.j = a.j AND cb.c = a.c
-          |          GROUP BY vec_id),
-          |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[])
+      (s"WITH ${pqReconCtes(8, 16, 8)},\n" +
+        """q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[])
           |        AS qv
           |      FROM embeddings WHERE vec_id < 20
           |        AND len(embedding) >= 64),
@@ -549,12 +454,7 @@ object AnnPqRows {
           |         list_dot_product(rv, rv)
           |           - 2.0 * list_dot_product(qv, rv) AS d
           |       FROM recon r, q WHERE r.vec_id <> q.query_id)
-          |SELECT query_id, rank, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         CAST(row_number() OVER (PARTITION BY query_id
-          |                                 ORDER BY d, neighbor_id)
-          |           AS BIGINT) AS rank
-          |  FROM sc) WHERE rank <= 5""".stripMargin)),
+          |""".stripMargin + topKSql("sc", "d", 5))),
 
     // --- the same encode with codebooks as a broadcast TABLE — the
     // trained-codebook path for sets too large to ride as plan
@@ -600,12 +500,7 @@ object AnnPqRows {
           |          list_dot_product(rv, rv)
           |            - 2.0 * list_dot_product(qv, rv) AS d
           |        FROM reconT r, qt WHERE r.vec_id <> qt.query_id)
-          |SELECT query_id, rank, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         CAST(row_number() OVER (PARTITION BY query_id
-          |                                 ORDER BY d, neighbor_id)
-          |           AS BIGINT) AS rank
-          |  FROM sct) WHERE rank <= 5""".stripMargin)),
+          |""".stripMargin + topKSql("sct", "d", 5))),
 
     // --- IVF-then-PQ: coarse cells prune the scan, ADC ranks within —
     // the FAISS IVFx,PQy architecture (the true billion-vector shape) ----
@@ -617,13 +512,7 @@ object AnnPqRows {
     },
       // the ann_ivf_topk cell derivation (axis argmax/runner-up, raw
       // component sign) over the PQ reconstructions; ADC as in ann_pq_topk
-      (s"WITH ${pqIvfCtes(8, 16, 8)}\n" +
-        """SELECT query_id, rank, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         CAST(row_number() OVER (PARTITION BY query_id
-          |                                 ORDER BY d, neighbor_id)
-          |           AS BIGINT) AS rank
-          |  FROM sc) WHERE rank <= 3""".stripMargin)),
+      (s"WITH ${pqIvfCtes(8, 16, 8)}\n" + topKSql("sc", "d", 3))),
 
     // --- IVF-then-PQ with the TRAINED coarse quantizer: the deployed
     // FAISS IVFx,PQy shape with both stages real — kmeans cells prune
@@ -640,30 +529,9 @@ object AnnPqRows {
       // nearest trained cells (s2 ranked), ADC over the seeded-codebook
       // reconstructions exactly as in ann_ivfpq_topk
       (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        s"${pqEncodeCtes(8, 16, 8)},\n" +
-        """recon AS (SELECT vec_id, flatten(list(cv ORDER BY a.j)) AS rv
-          |          FROM a JOIN cb ON cb.j = a.j AND cb.c = a.c
-          |          GROUP BY vec_id),
-          |tqp AS (SELECT vec_id AS query_id, j AS cell FROM (
-          |          SELECT vec_id, j, row_number() OVER (
-          |              PARTITION BY vec_id ORDER BY s2.s, j) AS rn
-          |          FROM s2 WHERE vec_id < 50) WHERE rn <= 2),
-          |tc AS (SELECT a2.vec_id AS neighbor_id, a2.cluster AS cell,
-          |              rv
-          |       FROM a2 JOIN recon ON recon.vec_id = a2.vec_id),
-          |tq AS (SELECT tqp.query_id, tqp.cell, e.v AS qv
-          |       FROM tqp JOIN e ON e.vec_id = tqp.query_id),
-          |tsc AS (SELECT tq.query_id, tc.neighbor_id,
-          |          list_dot_product(rv, rv)
-          |            - 2.0 * list_dot_product(qv, rv) AS d
-          |        FROM tc JOIN tq USING (cell)
-          |        WHERE tc.neighbor_id <> tq.query_id)
-          |SELECT query_id, rank, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         CAST(row_number() OVER (PARTITION BY query_id
-          |                                 ORDER BY d, neighbor_id)
-          |           AS BIGINT) AS rank
-          |  FROM tsc) WHERE rank <= 3""".stripMargin)),
+        s"${pqReconCtes(8, 16, 8)},\n" +
+        s"${ivfTrainedCtes(maxQueryId = 50, probes = 2)},\n" +
+        s"${seededTrainedScoresSql("e")}\n" + topKSql("tsc", "d", 3))),
 
     // --- recall@3 of the trained vs axis coarse stage UNDER the ADC
     // kernel, at equal probes (p=2) against one exact-L2 leg — the
@@ -680,90 +548,33 @@ object AnnPqRows {
         "vec_id", "embedding", k = 3, probes = 2)
       val axis = IvfIndex(AxisIvf, pq).topK(e, q, "vec_id", "embedding",
         k = 3, probes = 2)
-      Similarity.recallAtK(exact, trained, k = 3)
-        .select(lit("ivfpq_trained").as("method"), col("query_id"),
-          col("n_hits"), col("recall"))
-        .unionByName(Similarity.recallAtK(exact, axis, k = 3)
-          .select(lit("ivfpq_axis").as("method"), col("query_id"),
-            col("n_hits"), col("recall")))
+      recallLegs(exact, k = 3, Seq(
+        Seq(lit("ivfpq_trained").as("method")) -> trained,
+        Seq(lit("ivfpq_axis").as("method")) -> axis))
     },
       // trained vs axis coarse cells under ADC, one exact-L2 leg over
       // the shared len=64 universe; the trained fragments come from
       // kmeansCtes (a2 cells, s2-ranked probes), the axis cells from
       // the shared ivfCellCtes, reconstructions from pqEncodeCtes
-      (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        s"${pqEncodeCtes(8, 16, 8)},\n" +
-        """recon AS (SELECT vec_id, flatten(list(cv ORDER BY a.j)) AS rv
-          |          FROM a JOIN cb ON cb.j = a.j AND cb.c = a.c
-          |          GROUP BY vec_id),
-          |e64 AS (SELECT e.vec_id, e.v FROM e JOIN wq USING (vec_id)),
-          |""".stripMargin +
-        ivfCellCtes("e64") + """,
-          |xq AS (SELECT vec_id AS query_id, v AS qv FROM e64
-          |       WHERE vec_id < 10),
-          |x AS (SELECT xq.query_id, c.vec_id AS neighbor_id,
-          |        list_dot_product(c.v, c.v)
-          |          - 2.0 * list_dot_product(qv, c.v) AS d
-          |      FROM e64 c, xq WHERE c.vec_id <> xq.query_id),
-          |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM x) WHERE rank <= 3),
-          |tqp AS (SELECT vec_id AS query_id, j AS cell FROM (
-          |          SELECT vec_id, j, row_number() OVER (
-          |              PARTITION BY vec_id ORDER BY s2.s, j) AS rn
-          |          FROM s2 WHERE vec_id < 10) WHERE rn <= 2),
-          |tc AS (SELECT a2.vec_id AS neighbor_id, a2.cluster AS cell,
-          |              rv
-          |       FROM a2 JOIN recon ON recon.vec_id = a2.vec_id),
-          |tsc AS (SELECT tqp.query_id, tc.neighbor_id,
-          |          list_dot_product(rv, rv)
-          |            - 2.0 * list_dot_product(q.v, rv) AS d
-          |        FROM tc JOIN tqp USING (cell)
-          |        JOIN e64 q ON q.vec_id = tqp.query_id
-          |        WHERE tc.neighbor_id <> tqp.query_id),
-          |tapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM tsc) WHERE rank <= 3),
-          |aq AS (SELECT cc.vec_id AS query_id,
-          |              unnest([cell_w, cell_r]) AS cell
-          |       FROM ivcell cc WHERE cc.vec_id < 10),
-          |ac AS (SELECT cc.vec_id AS neighbor_id, cell_w AS cell, rv
-          |       FROM ivcell cc JOIN recon ON recon.vec_id = cc.vec_id),
-          |asx AS (SELECT aq.query_id, ac.neighbor_id,
-          |          list_dot_product(rv, rv)
-          |            - 2.0 * list_dot_product(q.v, rv) AS d
-          |        FROM ac JOIN aq USING (cell)
-          |        JOIN e64 q ON q.vec_id = aq.query_id
-          |        WHERE ac.neighbor_id <> aq.query_id),
-          |aapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM asx) WHERE rank <= 3)
-          |SELECT 'ivfpq_trained' AS method, query_id, n_hits,
-          |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-          |FROM (
-          |  SELECT ex.query_id,
-          |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-          |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-          |         COUNT(*) AS n_exact
-          |  FROM ex LEFT JOIN tapx a
-          |    ON a.query_id = ex.query_id
-          |   AND a.neighbor_id = ex.neighbor_id
-          |  GROUP BY 1)
-          |UNION ALL
-          |SELECT 'ivfpq_axis' AS method, query_id, n_hits,
-          |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-          |FROM (
-          |  SELECT ex.query_id,
-          |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-          |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-          |         COUNT(*) AS n_exact
-          |  FROM ex LEFT JOIN aapx a
-          |    ON a.query_id = ex.query_id
-          |   AND a.neighbor_id = ex.neighbor_id
-          |  GROUP BY 1)""".stripMargin)),
+      sweepSql(Seq(kmeansCtes(8, 2, 64), pqReconCtes(8, 16, 8), len64Cte,
+        ivfCellCtes("e0"), exactL2LegSql("e0", maxQueryId = 10, k = 3),
+        ivfTrainedCtes(maxQueryId = 10, probes = 2)), Seq(
+        Leg("'ivfpq_trained' AS method", "tapx",
+          seededTrainedScoresSql("e0") + ",\n" +
+            rankedSql("tapx", "tsc", "d", 3)),
+        Leg("'ivfpq_axis' AS method", "aapx",
+          """aq AS (SELECT cc.vec_id AS query_id,
+            |              unnest([cell_w, cell_r]) AS cell
+            |       FROM ivcell cc WHERE cc.vec_id < 10),
+            |ac AS (SELECT cc.vec_id AS neighbor_id, cell_w AS cell, rv
+            |       FROM ivcell cc JOIN recon ON recon.vec_id = cc.vec_id),
+            |asx AS (SELECT aq.query_id, ac.neighbor_id,
+            |          list_dot_product(rv, rv)
+            |            - 2.0 * list_dot_product(q.v, rv) AS d
+            |        FROM ac JOIN aq USING (cell)
+            |        JOIN e0 q ON q.vec_id = aq.query_id
+            |        WHERE ac.neighbor_id <> aq.query_id),
+            |""".stripMargin + rankedSql("aapx", "asx", "d", 3))))),
 
     // --- the FULL FAISS IVFx,PQy: trained coarse cells prune the scan
     // AND trained codebooks encode RESIDUALS (v − centroid[cell]) — the
@@ -831,13 +642,11 @@ object AnnPqRows {
       val q = e.filter(col("vec_id") < 10)
       val ivf = sharedIvfPq(s, d)
       val exact = sharedExactL2Leg(s, d) // one exact leg serves the sweep (and the whole eval family — memoized)
-      ivftProbeSweep.map { p =>
+      recallLegs(exact, k = 3, ivftProbeSweep.map { p =>
         val approx = ivf.topK(e, q, "vec_id", "embedding", k = 3,
           probes = p, residuals = Some(sharedResidualFrame(s, d)))
-        Similarity.recallAtK(exact, approx, k = 3)
-          .select(lit(p.toLong).as("probes"), col("query_id"),
-            col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(p.toLong).as("probes")) -> approx
+      })
     },
       // the probes sweep over the full residual index: per-depth
       // candidate blocks from the full cell ranking, one exact-L2 leg
@@ -876,42 +685,9 @@ object AnnPqRows {
       // to the 2 probed trained cells, cosine top-3 — grid, cells and
       // ranking all replayed
       (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        """sq0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-          |          list_max(list_transform(embedding,
-          |            x -> abs(CAST(x AS DOUBLE)))) AS amax
-          |        FROM embeddings WHERE len(embedding) = 64),
-          |sdq AS (SELECT vec_id,
-          |          CASE WHEN amax IS NULL OR amax = 0
-          |               THEN list_transform(v, x -> 0.0)
-          |               ELSE list_transform(v, x ->
-          |                 greatest(-127.0, least(127.0,
-          |                     round(x * 127.0 / amax)))
-          |                   * (amax / 127.0))
-          |          END AS v
-          |        FROM sq0),
-          |snv AS (SELECT vec_id,
-          |          list_transform(v,
-          |            x -> x / sqrt(list_dot_product(v, v))) AS nv
-          |        FROM sdq),
-          |stqp AS (SELECT query_id, cell FROM (
-          |           SELECT vec_id AS query_id, j AS cell,
-          |                  row_number() OVER (
-          |                      PARTITION BY vec_id ORDER BY s, j) AS rn
-          |           FROM s2 WHERE vec_id < 50) WHERE rn <= 2),
-          |scc AS (SELECT vec_id AS neighbor_id, cluster AS cell
-          |        FROM a2),
-          |ssc AS (SELECT stqp.query_id, scc.neighbor_id,
-          |          list_dot_product(q.nv, c.nv) AS score
-          |        FROM scc JOIN stqp USING (cell)
-          |        JOIN snv q ON q.vec_id = stqp.query_id
-          |        JOIN snv c ON c.vec_id = scc.neighbor_id
-          |        WHERE scc.neighbor_id <> stqp.query_id)
-          |SELECT query_id, rank, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         CAST(row_number() OVER (PARTITION BY query_id
-          |             ORDER BY score DESC, neighbor_id)
-          |           AS BIGINT) AS rank
-          |  FROM ssc) WHERE rank <= 3""".stripMargin)),
+        s"${ivfTrainedCtes(maxQueryId = 50, probes = 2)},\n$sq8GridCtes,\n" +
+        trainedCellScoresSql("ssc", "snv") + "\n" +
+        topKSql("ssc", "score DESC", 3))),
 
     // --- recall@5 of SQ8 vs the FLOAT trained-IVF path at equal
     // probes against one exact-cosine leg — the measurement that
@@ -929,71 +705,22 @@ object AnnPqRows {
         k = 5, probes = 2)
       val fl = IvfIndex(coarse, Flat).topK(e, q, "vec_id", "embedding",
         k = 5, probes = 2)
-      Similarity.recallAtK(exact, sq, k = 5)
-        .select(lit("ivf_sq8").as("method"), col("query_id"),
-          col("n_hits"), col("recall"))
-        .unionByName(Similarity.recallAtK(exact, fl, k = 5)
-          .select(lit("ivf_float").as("method"), col("query_id"),
-            col("n_hits"), col("recall")))
+      recallLegs(exact, k = 5, Seq(
+        Seq(lit("ivf_sq8").as("method")) -> sq,
+        Seq(lit("ivf_float").as("method")) -> fl))
     },
       // SQ8 vs float trained-IVF at equal probes: the snap grid (sq0/
       // sdq/snv — the ann_ivfsq_indexed fragments at maxQueryId=10) and
       // the raw-normalized tnv/tcc/tqp fragments share the kmeans
       // cells; one exact-cosine leg over tnv serves both recall blocks
-      (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        ivfTrainedCtes(maxQueryId = 10, probes = 2) + """,
-          |sq0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-          |          list_max(list_transform(embedding,
-          |            x -> abs(CAST(x AS DOUBLE)))) AS amax
-          |        FROM embeddings WHERE len(embedding) = 64),
-          |sdq AS (SELECT vec_id,
-          |          CASE WHEN amax IS NULL OR amax = 0
-          |               THEN list_transform(v, x -> 0.0)
-          |               ELSE list_transform(v, x ->
-          |                 greatest(-127.0, least(127.0,
-          |                     round(x * 127.0 / amax)))
-          |                   * (amax / 127.0))
-          |          END AS v
-          |        FROM sq0),
-          |snv AS (SELECT vec_id,
-          |          list_transform(v,
-          |            x -> x / sqrt(list_dot_product(v, v))) AS nv
-          |        FROM sdq),
-          |xq AS (SELECT vec_id AS query_id, nv AS qv FROM tnv
-          |       WHERE vec_id < 10),
-          |x AS (SELECT xq.query_id, tnv.vec_id AS neighbor_id,
-          |             list_dot_product(qv, tnv.nv) AS score
-          |      FROM tnv, xq WHERE tnv.vec_id <> xq.query_id),
-          |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-          |      AS rank
-          |  FROM x) WHERE rank <= 5),
-          |tsq AS (SELECT tqp.query_id, tcc.neighbor_id,
-          |          list_dot_product(q.nv, c.nv) AS score
-          |        FROM tcc JOIN tqp USING (cell)
-          |        JOIN snv q ON q.vec_id = tqp.query_id
-          |        JOIN snv c ON c.vec_id = tcc.neighbor_id
-          |        WHERE tcc.neighbor_id <> tqp.query_id),
-          |sqapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-          |      AS rank
-          |  FROM tsq) WHERE rank <= 5),
-          |tfl AS (SELECT tqp.query_id, tcc.neighbor_id,
-          |          list_dot_product(q.nv, c.nv) AS score
-          |        FROM tcc JOIN tqp USING (cell)
-          |        JOIN tnv q ON q.vec_id = tqp.query_id
-          |        JOIN tnv c ON c.vec_id = tcc.neighbor_id
-          |        WHERE tcc.neighbor_id <> tqp.query_id),
-          |flapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-          |      AS rank
-          |  FROM tfl) WHERE rank <= 5)
-          |""".stripMargin +
-        recallSelectSql("ivf_sq8", "sqapx") + "\nUNION ALL\n" +
-        recallSelectSql("ivf_float", "flapx"))),
+      sweepSql(Seq(kmeansCtes(8, 2, 64),
+        ivfTrainedCtes(maxQueryId = 10, probes = 2), sq8GridCtes,
+        exactCosineLegSql("tnv", "nv", maxQueryId = 10, k = 5,
+          materialized = true)), Seq(
+        Leg("'ivf_sq8' AS method", "sqapx", trainedCellScoresSql("tsq",
+          "snv") + ",\n" + rankedSql("sqapx", "tsq", "score DESC", 5)),
+        Leg("'ivf_float' AS method", "flapx", trainedCellScoresSql("tfl",
+          "tnv") + ",\n" + rankedSql("flapx", "tfl", "score DESC", 5))))),
 
     // --- the deployed composition (FAISS IVFx,PQy,RFlat): codes
     // shortlist candK=25, exact-L2 refine re-ranks ONLY the shortlist —
@@ -1012,51 +739,19 @@ object AnnPqRows {
         e, q, "vec_id", "embedding", k = 3)
       val codes = ivf.topK(e, q, "vec_id", "embedding", k = 3, probes = 2,
         residuals = res)
-      Similarity.recallAtK(exact, refined, k = 3)
-        .select(lit("ivfpq_refined").as("method"), col("query_id"),
-          col("n_hits"), col("recall"))
-        .unionByName(Similarity.recallAtK(exact, codes, k = 3)
-          .select(lit("ivfpq_codes").as("method"), col("query_id"),
-            col("n_hits"), col("recall")))
+      recallLegs(exact, k = 3, Seq(
+        Seq(lit("ivfpq_refined").as("method")) -> refined,
+        Seq(lit("ivfpq_codes").as("method")) -> codes))
     },
       // the refine composition: rsc ranked to candK=25, exact-L2
       // re-rank of only the shortlist, recall vs the same exact leg —
       // codes-only apx included for the side-by-side lift
-      (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        residualCtes(maxQueryId = 10, probes = 2) + """,
-          |e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |       FROM embeddings WHERE len(embedding) = 64),
-          |xq AS (SELECT vec_id AS query_id, v AS qv FROM e0
-          |       WHERE vec_id < 10),
-          |x AS (SELECT xq.query_id, c.vec_id AS neighbor_id,
-          |        list_dot_product(c.v, c.v)
-          |          - 2.0 * list_dot_product(qv, c.v) AS d
-          |      FROM e0 c, xq WHERE c.vec_id <> xq.query_id),
-          |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM x) WHERE rank <= 3),
-          |rapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM rsc) WHERE rank <= 3),
-          |rcand AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM rsc) WHERE rank <= 25),
-          |rref AS (SELECT rcand.query_id, rcand.neighbor_id,
-          |           list_dot_product(c.v, c.v)
-          |             - 2.0 * list_dot_product(q.v, c.v) AS d
-          |         FROM rcand
-          |         JOIN e0 c ON c.vec_id = rcand.neighbor_id
-          |         JOIN e0 q ON q.vec_id = rcand.query_id),
-          |rfapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM rref) WHERE rank <= 3)
-          |""".stripMargin +
-        recallSelectSql("ivfpq_refined", "rfapx") + "\nUNION ALL\n" +
-        recallSelectSql("ivfpq_codes", "rapx"))),
+      sweepSql(residualSweepPrefix(residualCtes(maxQueryId = 10,
+        probes = 2)), Seq(
+        Leg("'ivfpq_refined' AS method", "rfapx", refineCtes("r", 25) +
+          ",\n" + rankedSql("rfapx", "rref", "d", 3)),
+        Leg("'ivfpq_codes' AS method", "rapx",
+          rankedSql("rapx", "rsc", "d", 3))))),
 
     // --- the COLD deployed composition end to end (IVFx,PQy,RFlat
     // from the store): both quantizers from the store's own sidecars,
@@ -1092,25 +787,8 @@ object AnnPqRows {
       // row-identical to the unmaterialized refine; candK = 50, the
       // sweep's named operating point (the engine row ships it)
       (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        residualCtes(maxQueryId = 10, probes = 2) + """,
-          |e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          |       FROM embeddings WHERE len(embedding) = 64),
-          |rcand AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM rsc) WHERE rank <= 50),
-          |rref AS (SELECT rcand.query_id, rcand.neighbor_id,
-          |           list_dot_product(c.v, c.v)
-          |             - 2.0 * list_dot_product(q.v, c.v) AS d
-          |         FROM rcand
-          |         JOIN e0 c ON c.vec_id = rcand.neighbor_id
-          |         JOIN e0 q ON q.vec_id = rcand.query_id)
-          |SELECT query_id, rank, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         CAST(row_number() OVER (PARTITION BY query_id
-          |                                 ORDER BY d, neighbor_id)
-          |           AS BIGINT) AS rank
-          |  FROM rref) WHERE rank <= 3""".stripMargin)),
+        residualCtes(maxQueryId = 10, probes = 2) + s",\n$len64Cte,\n" +
+        refineCtes("r", 50) + "\n" + topKSql("rref", "d", 3))),
 
     // --- the measurement that motivated the residual stage: recall@3
     // of trained-codebook RESIDUAL ADC vs seeded-raw ADC at equal
@@ -1127,58 +805,21 @@ object AnnPqRows {
       val seeded = IvfIndex(sharedIvfTrained(s, d),
           SeededPq(m = 8, k = 16, subDim = 8))
         .topK(e, q, "vec_id", "embedding", k = 3, probes = 2)
-      Similarity.recallAtK(exact, resid, k = 3)
-        .select(lit("ivfpq_residual").as("method"), col("query_id"),
-          col("n_hits"), col("recall"))
-        .unionByName(Similarity.recallAtK(exact, seeded, k = 3)
-          .select(lit("ivfpq_seeded").as("method"), col("query_id"),
-            col("n_hits"), col("recall")))
+      recallLegs(exact, k = 3, Seq(
+        Seq(lit("ivfpq_residual").as("method")) -> resid,
+        Seq(lit("ivfpq_seeded").as("method")) -> seeded))
     },
       // residual-trained vs seeded-raw fine quantizer under the SAME
       // trained coarse cells, one exact-L2 leg over the len-64
       // universe; seeded fragments mirror ann_ivfpqt_recall's trained
       // leg (pqEncodeCtes reconstructions over a2 cells)
-      (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        residualCtes(maxQueryId = 10, probes = 2) + ",\n" +
-        pqEncodeCtes(8, 16, 8) + """,
-          |recon AS (SELECT vec_id, flatten(list(cv ORDER BY a.j)) AS rv
-          |          FROM a JOIN cb ON cb.j = a.j AND cb.c = a.c
-          |          GROUP BY vec_id),
-          |e64 AS (SELECT e.vec_id, e.v FROM e JOIN wq USING (vec_id)),
-          |xq AS (SELECT vec_id AS query_id, v AS qv FROM e64
-          |       WHERE vec_id < 10),
-          |x AS (SELECT xq.query_id, c.vec_id AS neighbor_id,
-          |        list_dot_product(c.v, c.v)
-          |          - 2.0 * list_dot_product(qv, c.v) AS d
-          |      FROM e64 c, xq WHERE c.vec_id <> xq.query_id),
-          |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM x) WHERE rank <= 3),
-          |rapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM rsc) WHERE rank <= 3),
-          |tqp AS (SELECT vec_id AS query_id, j AS cell FROM (
-          |          SELECT vec_id, j, row_number() OVER (
-          |              PARTITION BY vec_id ORDER BY s2.s, j) AS rn
-          |          FROM s2 WHERE vec_id < 10) WHERE rn <= 2),
-          |tc AS (SELECT a2.vec_id AS neighbor_id, a2.cluster AS cell,
-          |              rv
-          |       FROM a2 JOIN recon ON recon.vec_id = a2.vec_id),
-          |tsc AS (SELECT tqp.query_id, tc.neighbor_id,
-          |          list_dot_product(rv, rv)
-          |            - 2.0 * list_dot_product(q.v, rv) AS d
-          |        FROM tc JOIN tqp USING (cell)
-          |        JOIN e64 q ON q.vec_id = tqp.query_id
-          |        WHERE tc.neighbor_id <> tqp.query_id),
-          |tapx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY d, neighbor_id) AS rank
-          |  FROM tsc) WHERE rank <= 3)
-          |""".stripMargin +
-        recallSelectSql("ivfpq_residual", "rapx") + "\nUNION ALL\n" +
-        recallSelectSql("ivfpq_seeded", "tapx"))),
+      sweepSql(residualSweepPrefix(residualCtes(maxQueryId = 10,
+        probes = 2)) :+ pqReconCtes(8, 16, 8), Seq(
+        Leg("'ivfpq_residual' AS method", "rapx",
+          rankedSql("rapx", "rsc", "d", 3)),
+        Leg("'ivfpq_seeded' AS method", "tapx",
+          seededTrainedScoresSql("e0") + ",\n" +
+            rankedSql("tapx", "tsc", "d", 3))))),
 
     // --- the m/k CODEBOOK-BUDGET sweep: recall@3 at fixed p=2 across
     // (m,k) ∈ {(8,16),(8,64),(16,16)} against one exact-L2 leg — the
@@ -1202,17 +843,15 @@ object AnnPqRows {
       // layouts. Bit-identical trainings (PqKernelsSpec pins the
       // shared-frame path against ResidualPq.train).
       val resFrame = sharedResidualFrame(s, d)
-      ivfPqMkSweep.map { case (m, k) =>
+      recallLegs(exact, k = 3, ivfPqMkSweep.map { case (m, k) =>
         val pq =
           if (m == 8 && k == 16) sharedResidualPq(s, d)
           else ResidualPq(graft.llm.Pq.trainCodebooks(resFrame,
             "vec_id", "__res", m = m, k = k, subDim = 64 / m, iters = 2))
         val approx = IvfIndex(coarse, pq).topK(e, q, "vec_id", "embedding",
           k = 3, probes = 2, residuals = Some(resFrame))
-        Similarity.recallAtK(exact, approx, k = 3)
-          .select(lit(m.toLong).as("m"), lit(k.toLong).as("k"),
-            col("query_id"), col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(m.toLong).as("m"), lit(k.toLong).as("k")) -> approx
+      })
     },
       // the m/k budget sweep: per leg a FULL fine-stage training replay
       // at that (m, k) over the shared coarse stage + one materialized
@@ -1245,14 +884,12 @@ object AnnPqRows {
       val snaps = graft.llm.Pq.trainCodebooksSnapshots(
         resFrame, "vec_id", "__res",
         m = 8, k = 16, subDim = 8, snapshots = ivfPqItersSweep)
-      ivfPqItersSweep.map { i =>
+      recallLegs(exact, k = 3, ivfPqItersSweep.map { i =>
         val approx = IvfIndex(coarse, ResidualPq(snaps(i))).topK(e, q,
           "vec_id", "embedding", k = 3, probes = 2,
           residuals = Some(resFrame))
-        Similarity.recallAtK(exact, approx, k = 3)
-          .select(lit(i.toLong).as("iters"), col("query_id"),
-            col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(i.toLong).as("iters")) -> approx
+      })
     },
       // the training-depth sweep: per leg the SAME replay unrolled to
       // that leg's Lloyd-round count at the serving m/k
@@ -1282,13 +919,11 @@ object AnnPqRows {
           k = ivfPqCandKSweep.max, probes = 2,
           residuals = Some(sharedResidualFrame(s, d)))
         .localCheckpoint() // one ADC scan serves every leg
-      ivfPqCandKSweep.map { candK =>
+      recallLegs(exact, k = 3, ivfPqCandKSweep.map { candK =>
         val refined = ivf.refine(ranked.filter(col("rank") <= candK), e, q,
           "vec_id", "embedding", k = 3)
-        Similarity.recallAtK(exact, refined, k = 3)
-          .select(lit(candK.toLong).as("cand_k"), col("query_id"),
-            col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(candK.toLong).as("cand_k")) -> refined
+      })
     },
       // the refine-depth sweep: one coarse+fine replay at the serving
       // configuration, per candK a shortlist + exact-L2 re-rank block
@@ -1309,33 +944,8 @@ object AnnPqRows {
       // approximate = the IVF+PQ ranking above; exact = raw-vector L2
       // via the same comparison idiom; hits aggregated per query with
       // the actual exact-result size as the denominator
-      (s"WITH ${pqIvfCtes(8, 16, 8)},\n" +
-        """apx AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         row_number() OVER (PARTITION BY query_id
-          |                            ORDER BY d, neighbor_id) AS rank
-          |  FROM sc) WHERE rank <= 3),
-          |xq AS (SELECT vec_id AS query_id, v AS qv FROM e
-          |       WHERE vec_id < 50),
-          |x AS (SELECT xq.query_id, e.vec_id AS neighbor_id,
-          |        list_dot_product(e.v, e.v)
-          |          - 2.0 * list_dot_product(xq.qv, e.v) AS d
-          |      FROM e, xq WHERE e.vec_id <> xq.query_id),
-          |ex AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id,
-          |         row_number() OVER (PARTITION BY query_id
-          |                            ORDER BY d, neighbor_id) AS rank
-          |  FROM x) WHERE rank <= 3)
-          |SELECT query_id, n_hits,
-          |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-          |FROM (
-          |  SELECT ex.query_id,
-          |         CAST(sum(CASE WHEN apx.neighbor_id IS NOT NULL
-          |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-          |         COUNT(*) AS n_exact
-          |  FROM ex LEFT JOIN apx
-          |    ON apx.query_id = ex.query_id
-          |   AND apx.neighbor_id = ex.neighbor_id
-          |  GROUP BY 1)""".stripMargin))
+      sweepSql(Seq(pqIvfCtes(8, 16, 8), rankedSql("apx", "sc", "d", 3),
+        exactL2LegSql("e", maxQueryId = 50, k = 3, materialized = false)),
+        Seq(Leg("", "apx"))))
   )
 }

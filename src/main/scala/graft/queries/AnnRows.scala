@@ -77,149 +77,98 @@ object AnnRows {
        |s AS (SELECT q.query_id, c.neighbor_id,
        |             list_dot_product(qv, cv) AS score
        |      FROM c JOIN q USING (cell) WHERE c.neighbor_id <> q.query_id)
-       |SELECT query_id, rank, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM s) WHERE rank <= 3""".stripMargin
+       |""".stripMargin + topKSql("s", "score DESC", 3)
 
   /** ann_ivft_indexed's oracle: training replayed round for round, the
     * store's cell partitions = the a2 assignment, probes = the 2
     * nearest trained cells, cosine top-3 within the probed cells. */
   private lazy val ivfTrainedTopKSql: String =
     s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-      ivfTrainedCtes(maxQueryId = 50, probes = 2) + """,
-      |ts AS (SELECT tqp.query_id, tcc.neighbor_id,
-      |              list_dot_product(q.nv, c.nv) AS score
-      |       FROM tcc JOIN tqp USING (cell)
-      |       JOIN tnv q ON q.vec_id = tqp.query_id
-      |       JOIN tnv c ON c.vec_id = tcc.neighbor_id
-      |       WHERE tcc.neighbor_id <> tqp.query_id)
-      |SELECT query_id, rank, neighbor_id FROM (
-      |  SELECT query_id, neighbor_id,
-      |         CAST(row_number() OVER (PARTITION BY query_id
-      |             ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
-      |  FROM ts) WHERE rank <= 3""".stripMargin
+      ivfTrainedCtes(maxQueryId = 50, probes = 2) + ",\n" +
+      trainedCellScoresSql("ts", "tnv") + "\n" +
+      topKSql("ts", "score DESC", 3)
+
+  /** The trained-IVF recall prefix: k-means replay, the cells probed at
+    * `probes` for queries vec_id < 10, and the materialized exact cosine
+    * top-5 over `tnv`. */
+  private def ivfTrainedRecallPrefix(probes: Int): Seq[String] =
+    Seq(kmeansCtes(8, 2, 64), ivfTrainedCtes(maxQueryId = 10, probes),
+      exactCosineLegSql("tnv", "nv", maxQueryId = 10, k = 5,
+        materialized = true))
 
   /** ann_ivft_recall's oracle: one MATERIALIZED exact top-5 leg, the
     * trained leg (kmeans cells) and the axis leg ([[ivfCellCtes]]) both
     * probed at p=2 over the SAME len=64 universe, each recall-joined
     * against the exact leg and tagged with its method. */
   private lazy val ivfTrainedRecallSql: String =
-    s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-      ivfTrainedCtes(maxQueryId = 10, probes = 2) + s""",
-      |e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      |       FROM embeddings WHERE len(embedding) = 64),
-      |${ivfCellCtes("e0")},
-      |xq AS (SELECT vec_id AS query_id, nv AS qv FROM tnv
-      |       WHERE vec_id < 10),
-      |x AS (SELECT xq.query_id, tnv.vec_id AS neighbor_id,
-      |             list_dot_product(qv, tnv.nv) AS score
-      |      FROM tnv, xq WHERE tnv.vec_id <> xq.query_id),
-      |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-      |  SELECT query_id, neighbor_id, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-      |      AS rank
-      |  FROM x) WHERE rank <= 5),
-      |ts AS (SELECT tqp.query_id, tcc.neighbor_id,
-      |              list_dot_product(q.nv, c.nv) AS score
-      |       FROM tcc JOIN tqp USING (cell)
-      |       JOIN tnv q ON q.vec_id = tqp.query_id
-      |       JOIN tnv c ON c.vec_id = tcc.neighbor_id
-      |       WHERE tcc.neighbor_id <> tqp.query_id),
-      |tapx AS (SELECT query_id, neighbor_id FROM (
-      |  SELECT query_id, neighbor_id, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-      |      AS rank
-      |  FROM ts) WHERE rank <= 5),
-      |aq AS (SELECT cc.vec_id AS query_id,
-      |              unnest([cell_w, cell_r]) AS cell
-      |       FROM ivcell cc WHERE cc.vec_id < 10),
-      |ac AS (SELECT vec_id AS neighbor_id, cell_w AS cell FROM ivcell),
-      |asx AS (SELECT aq.query_id, ac.neighbor_id,
-      |               list_dot_product(q.nv, c.nv) AS score
-      |        FROM ac JOIN aq USING (cell)
-      |        JOIN tnv q ON q.vec_id = aq.query_id
-      |        JOIN tnv c ON c.vec_id = ac.neighbor_id
-      |        WHERE ac.neighbor_id <> aq.query_id),
-      |aapx AS (SELECT query_id, neighbor_id FROM (
-      |  SELECT query_id, neighbor_id, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-      |      AS rank
-      |  FROM asx) WHERE rank <= 5)
-      |SELECT 'ivf_trained' AS method, query_id, n_hits,
-      |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-      |FROM (
-      |  SELECT ex.query_id,
-      |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-      |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |         COUNT(*) AS n_exact
-      |  FROM ex LEFT JOIN tapx a
-      |    ON a.query_id = ex.query_id
-      |   AND a.neighbor_id = ex.neighbor_id
-      |  GROUP BY 1)
-      |UNION ALL
-      |SELECT 'ivf_axis' AS method, query_id, n_hits,
-      |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-      |FROM (
-      |  SELECT ex.query_id,
-      |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-      |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |         COUNT(*) AS n_exact
-      |  FROM ex LEFT JOIN aapx a
-      |    ON a.query_id = ex.query_id
-      |   AND a.neighbor_id = ex.neighbor_id
-      |  GROUP BY 1)""".stripMargin
+    sweepSql(ivfTrainedRecallPrefix(probes = 2) ++
+      Seq(len64Cte, ivfCellCtes("e0")), Seq(
+      Leg("'ivf_trained' AS method", "tapx", trainedCellScoresSql("ts",
+        "tnv") + ",\n" + rankedSql("tapx", "ts", "score DESC", 5)),
+      Leg("'ivf_axis' AS method", "aapx",
+        """aq AS (SELECT cc.vec_id AS query_id,
+          |              unnest([cell_w, cell_r]) AS cell
+          |       FROM ivcell cc WHERE cc.vec_id < 10),
+          |ac AS (SELECT vec_id AS neighbor_id, cell_w AS cell FROM ivcell),
+          |asx AS (SELECT aq.query_id, ac.neighbor_id,
+          |               list_dot_product(q.nv, c.nv) AS score
+          |        FROM ac JOIN aq USING (cell)
+          |        JOIN tnv q ON q.vec_id = aq.query_id
+          |        JOIN tnv c ON c.vec_id = ac.neighbor_id
+          |        WHERE ac.neighbor_id <> aq.query_id),
+          |""".stripMargin + rankedSql("aapx", "asx", "score DESC", 5))))
 
   /** ann_ivft_probes' oracle: the trained-IVF fragments (ranked cells
     * in `tqr`), one MATERIALIZED exact leg, then per probe depth a
     * candidate/rank/recall block over `rn <= p`, UNION ALL'd with the
     * depth as `probes` — generated from the same [[ivftProbeSweep]]. */
-  private def ivfTrainedProbesSql(probesList: Seq[Int]): String = {
-    val shared =
-      s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        ivfTrainedCtes(maxQueryId = 10, probes = 1) + """,
-        |xq AS (SELECT vec_id AS query_id, nv AS qv FROM tnv
-        |       WHERE vec_id < 10),
-        |x AS (SELECT xq.query_id, tnv.vec_id AS neighbor_id,
-        |             list_dot_product(qv, tnv.nv) AS score
-        |      FROM tnv, xq WHERE tnv.vec_id <> xq.query_id),
-        |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-        |      AS rank
-        |  FROM x) WHERE rank <= 5)""".stripMargin
-    val perP = probesList.map { p =>
-      s""",
-         |ps$p AS (SELECT qp.query_id, tcc.neighbor_id,
-         |              list_dot_product(q.nv, c.nv) AS score
-         |       FROM tcc
-         |       JOIN (SELECT query_id, cell FROM tqr WHERE rn <= $p) qp
-         |         USING (cell)
-         |       JOIN tnv q ON q.vec_id = qp.query_id
-         |       JOIN tnv c ON c.vec_id = tcc.neighbor_id
-         |       WHERE tcc.neighbor_id <> qp.query_id),
-         |papx$p AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM ps$p) WHERE rank <= 5)""".stripMargin
-    }.mkString
-    val selects = probesList.map { p =>
-      s"""SELECT CAST($p AS BIGINT) AS probes, query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN papx$p a
-         |    ON a.query_id = ex.query_id
-         |   AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    shared + perP + "\n" + selects
-  }
+  private def ivfTrainedProbesSql(probesList: Seq[Int]): String =
+    sweepSql(ivfTrainedRecallPrefix(probes = 1), probesList.map { p =>
+      Leg(bigint("probes", p), s"papx$p", trainedCellScoresSql(s"ps$p",
+        "tnv", s"(SELECT query_id, cell FROM tqr WHERE rn <= $p)") +
+        ",\n" + rankedSql(s"papx$p", s"ps$p", "score DESC", 5))
+    })
+
+  /** The brute 48-bit Hamming scan: `e` (len ≥ 64), the sign words `w`,
+    * queries `hq` (vec_id < 10) and every (query, corpus) distance in
+    * `hs`. */
+  private val hammingScanCtes: String =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+       |      FROM embeddings WHERE len(embedding) >= 64),
+       |w AS (SELECT vec_id, ${hammingWordSql("v", 48, 64)} AS word
+       |      FROM e),
+       |hq AS (SELECT vec_id AS query_id, word AS qw FROM w
+       |       WHERE vec_id < 10),
+       |hs AS ${hammingDistSql("w", "hq")}""".stripMargin
+
+  /** Every (query, corpus) Hamming distance between the query words
+    * `hq(query_id, qw)` and the corpus words `w(vec_id, word)`. */
+  private def hammingDistSql(w: String, hq: String): String =
+    s"""(SELECT $hq.query_id, c.vec_id AS neighbor_id,
+       |        bit_count(xor(c.word, $hq.qw)) AS hamming
+       |      FROM $w c, $hq WHERE c.vec_id <> $hq.query_id)""".stripMargin
+
+  /** `nv(vec_id, nv)`: the vectors of `e`, normalized. */
+  private def nvCte(materialized: Boolean = false): String =
+    s"""nv AS ${if (materialized) "MATERIALIZED " else ""}(SELECT vec_id,
+       |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+       |           AS nv
+       |       FROM e)""".stripMargin
+
+  /** The exact-cosine re-rank of a Hamming shortlist `sl(query_id,
+    * neighbor_id)` over [[nvCte]]: scores in `${p}rs`, top 5 in
+    * `${p}apx`. */
+  private def cosineRerankCtes(p: String, sl: String): String =
+    s"""${p}rs AS (SELECT sl.query_id, sl.neighbor_id,
+       |              list_dot_product(q.nv, c.nv) AS score
+       |       FROM $sl sl
+       |       JOIN nv q ON q.vec_id = sl.query_id
+       |       JOIN nv c ON c.vec_id = sl.neighbor_id),
+       |${rankedSql(s"${p}apx", s"${p}rs", "score DESC", 5)}""".stripMargin
+
+  /** The exact cosine top-5 of queries vec_id < 10 over [[nvCte]]. */
+  private def nvExactLegSql(materialized: Boolean): String =
+    exactCosineLegSql("nv", "nv", maxQueryId = 10, k = 5, materialized)
 
   /** The blocked-Hamming recall oracle: corpus words in ONE top-6-bit
     * bucket, each query probing its own prefix plus the 6 at
@@ -234,44 +183,19 @@ object AnnRows {
     val probeList = (Seq(s"hq.qw >> $shift") ++
       (0 until 6).map(i => s"xor(hq.qw >> $shift, ${1L << i})"))
       .mkString("[", ", ", "]")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |           FROM embeddings WHERE len(embedding) >= 64),
-       |w AS (SELECT vec_id, ${hammingWordSql("v", 48, 64)} AS word
-       |      FROM e),
-       |hq AS (SELECT vec_id AS query_id, word AS qw FROM w
-       |       WHERE vec_id < 10),
-       |cb AS (SELECT vec_id AS neighbor_id, word,
-       |              word >> $shift AS bucket
-       |       FROM w),
-       |qp AS (SELECT hq.query_id, hq.qw,
-       |              unnest($probeList) AS bucket
-       |       FROM hq),
-       |bs AS (SELECT qp.query_id, cb.neighbor_id,
-       |              bit_count(xor(cb.word, qp.qw)) AS hamming
-       |       FROM cb JOIN qp USING (bucket)
-       |       WHERE cb.neighbor_id <> qp.query_id),
-       |apx AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rank
-       |  FROM bs) WHERE rank <= 5),
-       |hs AS (SELECT hq.query_id, c.vec_id AS neighbor_id,
-       |              bit_count(xor(c.word, hq.qw)) AS hamming
-       |       FROM w c, hq WHERE c.vec_id <> hq.query_id),
-       |ex AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rank
-       |  FROM hs) WHERE rank <= 5)
-       |SELECT query_id, n_hits,
-       |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-       |FROM (
-       |  SELECT ex.query_id,
-       |         CAST(sum(CASE WHEN apx.neighbor_id IS NOT NULL
-       |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |         COUNT(*) AS n_exact
-       |  FROM ex LEFT JOIN apx
-       |    ON apx.query_id = ex.query_id
-       |   AND apx.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1)""".stripMargin
+    sweepSql(Seq(hammingScanCtes,
+      s"""cb AS (SELECT vec_id AS neighbor_id, word,
+         |              word >> $shift AS bucket
+         |       FROM w),
+         |qp AS (SELECT hq.query_id, hq.qw,
+         |              unnest($probeList) AS bucket
+         |       FROM hq),
+         |bs AS (SELECT qp.query_id, cb.neighbor_id,
+         |              bit_count(xor(cb.word, qp.qw)) AS hamming
+         |       FROM cb JOIN qp USING (bucket)
+         |       WHERE cb.neighbor_id <> qp.query_id)""".stripMargin,
+      rankedSql("apx", "bs", "hamming", 5),
+      rankedSql("ex", "hs", "hamming", 5)), Seq(Leg("", "apx")))
   }
 
   /** ann_hamming_sizing's oracle: ONE ranked Hamming candidate list and
@@ -281,67 +205,22 @@ object AnnRows {
     * cosine-rerank → recall block, UNION ALL'd with the depth as
     * `cand_k`. Generated from the same [[hammingSizingCandKs]] the
     * Spark sweep uses, so the two can never drift. */
-  private def hammingSizingSql(candKs: Seq[Int]): String = {
-    val shared =
-      s"""WITH e AS MATERIALIZED (
+  private def hammingSizingSql(candKs: Seq[Int]): String =
+    sweepSql(Seq(
+      s"""e AS MATERIALIZED (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |  FROM embeddings WHERE len(embedding) >= 64),
-         |nv AS MATERIALIZED (
-         |  SELECT vec_id,
-         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-         |           AS nv
-         |  FROM e),
+         |${nvCte(materialized = true)},
          |w AS MATERIALIZED (
          |  SELECT vec_id, ${hammingWordSql("v", 48, 64)} AS word FROM e),
          |hq AS (SELECT vec_id AS query_id, word AS qw FROM w
-         |       WHERE vec_id < 10),
-         |hs AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id, ham_rank FROM (
-         |    SELECT hq.query_id, c.vec_id AS neighbor_id,
-         |           row_number() OVER (PARTITION BY hq.query_id
-         |             ORDER BY bit_count(xor(c.word, hq.qw)), c.vec_id)
-         |             AS ham_rank
-         |    FROM w c, hq WHERE c.vec_id <> hq.query_id)
-         |  WHERE ham_rank <= ${candKs.max}),
-         |xq AS (SELECT vec_id AS query_id, nv AS qv FROM nv
-         |       WHERE vec_id < 10),
-         |x AS (SELECT xq.query_id, nv.vec_id AS neighbor_id,
-         |        list_dot_product(qv, nv.nv) AS score
-         |      FROM nv, xq WHERE nv.vec_id <> xq.query_id),
-         |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM x) WHERE rank <= 5)""".stripMargin
-    val perCk = candKs.map { ck =>
-      s""",
-         |rs$ck AS (SELECT sl.query_id, sl.neighbor_id,
-         |              list_dot_product(q.nv, c.nv) AS score
-         |       FROM (SELECT query_id, neighbor_id FROM hs
-         |             WHERE ham_rank <= $ck) sl
-         |       JOIN nv q ON q.vec_id = sl.query_id
-         |       JOIN nv c ON c.vec_id = sl.neighbor_id),
-         |apx$ck AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM rs$ck) WHERE rank <= 5)""".stripMargin
-    }.mkString
-    val selects = candKs.map { ck =>
-      s"""SELECT CAST($ck AS BIGINT) AS cand_k, query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN apx$ck a
-         |    ON a.query_id = ex.query_id
-         |   AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    shared + perCk + "\n" + selects
-  }
+         |       WHERE vec_id < 10)""".stripMargin,
+      rankedSql("hs", hammingDistSql("w", "hq"), "hamming", candKs.max,
+        materialized = true),
+      nvExactLegSql(materialized = true)), candKs.map { ck =>
+      Leg(bigint("cand_k", ck), s"ck${ck}apx", cosineRerankCtes(s"ck$ck",
+        s"(SELECT query_id, neighbor_id FROM hs WHERE rank <= $ck)"))
+    })
 
   /** ann_hamming_bits' oracle — [[hammingSizingSql]] transposed to the
     * bits axis: ONE exact-cosine leg and shared normalized vectors
@@ -350,65 +229,22 @@ object AnnRows {
     * candK, a cosine rerank and a recall block, UNION ALL'd with the
     * width as `bits`. Generated from the same [[hammingSizingBits]] /
     * [[hammingBitsCandK]] the Spark sweep uses. */
-  private def hammingBitsSql(bitsList: Seq[Int], candK: Int): String = {
-    val shared =
-      s"""WITH e AS MATERIALIZED (
+  private def hammingBitsSql(bitsList: Seq[Int], candK: Int): String =
+    sweepSql(Seq(
+      s"""e AS MATERIALIZED (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |  FROM embeddings WHERE len(embedding) >= 64),
-         |nv AS MATERIALIZED (
-         |  SELECT vec_id,
-         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-         |           AS nv
-         |  FROM e),
-         |xq AS (SELECT vec_id AS query_id, nv AS qv FROM nv
-         |       WHERE vec_id < 10),
-         |x AS (SELECT xq.query_id, nv.vec_id AS neighbor_id,
-         |        list_dot_product(qv, nv.nv) AS score
-         |      FROM nv, xq WHERE nv.vec_id <> xq.query_id),
-         |ex AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM x) WHERE rank <= 5)""".stripMargin
-    val perBits = bitsList.map { b =>
-      s""",
-         |w$b AS MATERIALIZED (
-         |  SELECT vec_id, ${hammingWordSql("v", b, 64)} AS word FROM e),
-         |hq$b AS (SELECT vec_id AS query_id, word AS qw FROM w$b
-         |         WHERE vec_id < 10),
-         |sl$b AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT hq$b.query_id, c.vec_id AS neighbor_id,
-         |           row_number() OVER (PARTITION BY hq$b.query_id
-         |             ORDER BY bit_count(xor(c.word, hq$b.qw)), c.vec_id)
-         |             AS ham_rank
-         |    FROM w$b c, hq$b WHERE c.vec_id <> hq$b.query_id)
-         |  WHERE ham_rank <= $candK),
-         |rs$b AS (SELECT sl$b.query_id, sl$b.neighbor_id,
-         |              list_dot_product(q.nv, c.nv) AS score
-         |       FROM sl$b
-         |       JOIN nv q ON q.vec_id = sl$b.query_id
-         |       JOIN nv c ON c.vec_id = sl$b.neighbor_id),
-         |apx$b AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM rs$b) WHERE rank <= 5)""".stripMargin
-    }.mkString
-    val selects = bitsList.map { b =>
-      s"""SELECT CAST($b AS BIGINT) AS bits, query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN apx$b a
-         |    ON a.query_id = ex.query_id
-         |   AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    shared + perBits + "\n" + selects
-  }
+         |${nvCte(materialized = true)}""".stripMargin,
+      nvExactLegSql(materialized = true)), bitsList.map { b =>
+      Leg(bigint("bits", b), s"b${b}apx",
+        s"""w$b AS MATERIALIZED (
+           |  SELECT vec_id, ${hammingWordSql("v", b, 64)} AS word FROM e),
+           |hq$b AS (SELECT vec_id AS query_id, word AS qw FROM w$b
+           |         WHERE vec_id < 10),
+           |${rankedSql(s"sl$b", hammingDistSql(s"w$b", s"hq$b"), "hamming",
+             candK)},
+           |${cosineRerankCtes(s"b$b", s"sl$b")}""".stripMargin)
+    })
 
   /** Same planes as 0/1 INT select items (`b0..b{b-1}`), for oracle
     * queries that need to derive the hamming-1 multi-probe bucket set. */
@@ -423,6 +259,56 @@ object AnnRows {
     (0 until b).map(i =>
       if (i == flip) s"CAST(1 - b$i AS VARCHAR)" else s"CAST(b$i AS VARCHAR)")
       .mkString(" || ")
+
+  /** The brute hard-negative candidates of `ann_hard_negatives*`: the
+    * normalized labelled corpus `e0`/`e`, queries vec_id < 50 and every
+    * (query, corpus) cosine `score0` with both labels in `s`. */
+  private val hardNegBruteCtes: String =
+    """e0 AS (SELECT vec_id, label,
+      |              CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |e AS (SELECT vec_id, label,
+      |        list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+      |          AS v
+      |      FROM e0),
+      |q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv
+      |      FROM e WHERE vec_id < 50),
+      |s AS (SELECT q.query_id, q.qlab, e.vec_id AS neighbor_id,
+      |             e.label AS nlab,
+      |             list_dot_product(qv, e.v) AS score0
+      |      FROM e, q WHERE e.vec_id <> q.query_id)""".stripMargin
+
+  /** [[Similarity.hardNegativesFrom]] over `scored(query_id, qlab,
+    * neighbor_id, nlab, score0)`: the top-25 slate `${name}c`, its
+    * 6-dp scores, the different-label candidates re-ranked to 5 as
+    * `name`. */
+  private def hardNegSql(name: String, scored: String): String =
+    rankedSql(s"${name}c", scored, "score0 DESC", 25) + ",\n" +
+      rankedSql(name, s"(SELECT query_id, neighbor_id, round(score0, 6) " +
+        s"AS score FROM ${name}c WHERE nlab <> qlab)", "score DESC", 5)
+
+  /** The sign-LSH leg of `ann_sign_lsh` and `ann_recall_eval`: 4 rotated
+    * planes bucket the normalized corpus `e(vec_id, v, bucket)`; each
+    * query (vec_id < 50) probes its bucket and the 4 at Hamming
+    * distance 1, cosine scores in `s`. */
+  private val signLshCtes: String =
+    s"""ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+       |       FROM embeddings),
+       |bt AS (
+       |  SELECT vec_id, v,
+       |       ${rotatedBitsSql("v", 4, 64)}
+       |  FROM ec),
+       |e AS (SELECT vec_id,
+       |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v,
+       |        ${bucketFromBitsSql(4, -1)} AS bucket
+       |      FROM bt),
+       |q AS (SELECT vec_id AS query_id,
+       |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS qv,
+       |        unnest([${(-1 to 3).map(bucketFromBitsSql(4, _)).mkString(",\n                ")}]) AS bucket
+       |      FROM bt WHERE vec_id < 50),
+       |s AS (
+       |  SELECT q.query_id, e.vec_id AS neighbor_id,
+       |         list_dot_product(qv, e.v) AS score
+       |  FROM e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id)""".stripMargin
 
   val rows: Seq[Row] = Seq(
     // --- ANN: brute-force cosine top-k ------------------------------------------------
@@ -442,11 +328,7 @@ object AnnRows {
         |  SELECT q.query_id, e.vec_id AS neighbor_id,
         |         list_dot_product(qv, e.v) AS score
         |  FROM e, q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, rank, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |                                 ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 5""".stripMargin),
+        |""".stripMargin + topKSql("s", "score DESC", 5)),
 
     // --- ANN: sign-LSH bucketed top-k (random-rotation hyperplanes +
     // hamming-1 multi-probe on the query side) -------------------------------
@@ -457,29 +339,7 @@ object AnnRows {
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     },
-      (s"""WITH ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |            FROM embeddings),
-         |bt AS (
-         |  SELECT vec_id, v,
-         |       ${rotatedBitsSql("v", 4, 64)}
-         |  FROM ec),
-         |e AS (SELECT vec_id,
-         |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v,
-         |        ${bucketFromBitsSql(4, -1)} AS bucket
-         |      FROM bt),
-         |q AS (SELECT vec_id AS query_id,
-         |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS qv,
-         |        unnest([${(-1 to 3).map(bucketFromBitsSql(4, _)).mkString(",\n                ")}]) AS bucket
-         |      FROM bt WHERE vec_id < 50),""".stripMargin + "\n" +
-      """s AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |         list_dot_product(qv, e.v) AS score
-        |  FROM e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id)
-        |SELECT query_id, rank, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |                                 ORDER BY score DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin)),
+      s"WITH $signLshCtes\n" + topKSql("s", "score DESC", 3)),
 
     // --- ANN: IVF coarse-quantizer probing (the bucketed-corpus scale path) --
     Row("ann_ivf_topk", (s, d) => {
@@ -600,12 +460,9 @@ object AnnRows {
         k = 5, probes = 2)
       val axis = IvfIndex(AxisIvf, Flat).topK(e, q, "vec_id", "embedding",
         k = 5, probes = 2)
-      Similarity.recallAtK(exact, trained, k = 5)
-        .select(lit("ivf_trained").as("method"), col("query_id"),
-          col("n_hits"), col("recall"))
-        .unionByName(Similarity.recallAtK(exact, axis, k = 5)
-          .select(lit("ivf_axis").as("method"), col("query_id"),
-            col("n_hits"), col("recall")))
+      recallLegs(exact, k = 5, Seq(
+        Seq(lit("ivf_trained").as("method")) -> trained,
+        Seq(lit("ivf_axis").as("method")) -> axis))
     },
       // trained vs axis cells at equal probes, one exact leg
       ivfTrainedRecallSql),
@@ -623,21 +480,9 @@ object AnnRows {
       // the packed sign fingerprint rebuilt from the verbatim plane
       // literals (hammingWordSql), then integer XOR+popcount ranking —
       // every score an exact BIGINT, no float leg
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings WHERE len(embedding) >= 64),
-         |w AS (SELECT vec_id, ${hammingWordSql("v", 48, 64)} AS word
-         |      FROM e),
-         |q AS (SELECT vec_id AS query_id, word AS qw FROM w
-         |      WHERE vec_id < 10),
-         |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-         |             CAST(bit_count(xor(c.word, q.qw)) AS BIGINT)
-         |               AS hamming
-         |      FROM w c, q WHERE c.vec_id <> q.query_id)
-         |SELECT query_id, rank, neighbor_id, hamming FROM (
-         |  SELECT query_id, neighbor_id, hamming,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |              ORDER BY hamming, neighbor_id) AS BIGINT) AS rank
-         |  FROM s) WHERE rank <= 5""".stripMargin),
+      s"WITH $hammingScanCtes\n" + topKSql(
+        "(SELECT query_id, neighbor_id, CAST(hamming AS BIGINT) AS hamming " +
+          "FROM hs)", "hamming", 5, ", hamming")),
 
     // --- recall@5 of the Hamming leg vs the exact cosine baseline: the
     // family's eval pattern — how much the 8-byte representation costs.
@@ -658,44 +503,9 @@ object AnnRows {
       // the Hamming slate joined against the exact cosine top-5 (the
       // ann_graph_recall eval shape): denominator = the exact slate's
       // actual per-query size
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings WHERE len(embedding) >= 64),
-         |nv AS (SELECT vec_id,
-         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-         |           AS nv, v
-         |       FROM e),
-         |w AS (SELECT vec_id, ${hammingWordSql("v", 48, 64)} AS word
-         |      FROM e),
-         |hq AS (SELECT vec_id AS query_id, word AS qw FROM w
-         |       WHERE vec_id < 10),
-         |hs AS (SELECT hq.query_id, c.vec_id AS neighbor_id,
-         |              bit_count(xor(c.word, hq.qw)) AS hamming
-         |       FROM w c, hq WHERE c.vec_id <> hq.query_id),
-         |apx AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rank
-         |  FROM hs) WHERE rank <= 5),
-         |xq AS (SELECT vec_id AS query_id, nv AS qv FROM nv
-         |       WHERE vec_id < 10),
-         |x AS (SELECT xq.query_id, nv.vec_id AS neighbor_id,
-         |        list_dot_product(qv, nv.nv) AS score
-         |      FROM nv, xq WHERE nv.vec_id <> xq.query_id),
-         |ex AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM x) WHERE rank <= 5)
-         |SELECT query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN apx.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN apx
-         |    ON apx.query_id = ex.query_id
-         |   AND apx.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin),
+      sweepSql(Seq(hammingScanCtes, nvCte(),
+        rankedSql("apx", "hs", "hamming", 5),
+        nvExactLegSql(materialized = false)), Seq(Leg("", "apx")))),
 
     // --- blocked Hamming: prefix-bucketed fingerprints + multi-probe —
     // the corpus-scale shape (touch (prefixBits+1)/2^prefixBits of the
@@ -732,53 +542,9 @@ object AnnRows {
     },
       // Hamming shortlist (rank ≤ 50 by integer distance) → exact-cosine
       // rerank of only the shortlist → recall join vs the exact top-5
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings WHERE len(embedding) >= 64),
-         |nv AS (SELECT vec_id,
-         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-         |           AS nv, v
-         |       FROM e),
-         |w AS (SELECT vec_id, ${hammingWordSql("v", 48, 64)} AS word
-         |      FROM e),
-         |hq AS (SELECT vec_id AS query_id, word AS qw FROM w
-         |       WHERE vec_id < 10),
-         |hs AS (SELECT hq.query_id, c.vec_id AS neighbor_id,
-         |              bit_count(xor(c.word, hq.qw)) AS hamming
-         |       FROM w c, hq WHERE c.vec_id <> hq.query_id),
-         |sl AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rank
-         |  FROM hs) WHERE rank <= 50),
-         |rs AS (SELECT sl.query_id, sl.neighbor_id,
-         |              list_dot_product(q.nv, c.nv) AS score
-         |       FROM sl JOIN nv q ON q.vec_id = sl.query_id
-         |               JOIN nv c ON c.vec_id = sl.neighbor_id),
-         |apx AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM rs) WHERE rank <= 5),
-         |xq AS (SELECT vec_id AS query_id, nv AS qv FROM nv
-         |       WHERE vec_id < 10),
-         |x AS (SELECT xq.query_id, nv.vec_id AS neighbor_id,
-         |        list_dot_product(qv, nv.nv) AS score
-         |      FROM nv, xq WHERE nv.vec_id <> xq.query_id),
-         |ex AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-         |      AS rank
-         |  FROM x) WHERE rank <= 5)
-         |SELECT query_id, n_hits,
-         |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-         |FROM (
-         |  SELECT ex.query_id,
-         |         CAST(sum(CASE WHEN apx.neighbor_id IS NOT NULL
-         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |         COUNT(*) AS n_exact
-         |  FROM ex LEFT JOIN apx
-         |    ON apx.query_id = ex.query_id
-         |   AND apx.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1)""".stripMargin),
+      sweepSql(Seq(hammingScanCtes, nvCte(),
+        rankedSql("sl", "hs", "hamming", 50), cosineRerankCtes("", "sl"),
+        nvExactLegSql(materialized = false)), Seq(Leg("", "apx")))),
 
     // --- the MATERIALIZED blocked-Hamming layout: fingerprints written
     // PARTITIONED BY prefix bucket, probes arrive as PartitionFilters
@@ -836,12 +602,10 @@ object AnnRows {
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves all sweep points
-      hammingSizingCandKs.map { ck =>
+      recallLegs(exact, k = 5, hammingSizingCandKs.map { ck =>
         val approx = hammingRerank(e, q, k = 5, candK = ck)
-        Similarity.recallAtK(exact, approx, k = 5)
-          .select(lit(ck.toLong).as("cand_k"), col("query_id"),
-            col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(ck.toLong).as("cand_k")) -> approx
+      })
     },
       // one ranked Hamming list + one exact leg, then a shortlist→
       // rerank→recall block per candK — generated from the SAME sweep
@@ -860,13 +624,11 @@ object AnnRows {
       val ivf = IvfIndex(sharedIvfTrained(s, d), Flat)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves the sweep
-      ivftProbeSweep.map { p =>
+      recallLegs(exact, k = 5, ivftProbeSweep.map { p =>
         val approx = ivf.topK(e, q, "vec_id", "embedding", k = 5,
           probes = p)
-        Similarity.recallAtK(exact, approx, k = 5)
-          .select(lit(p.toLong).as("probes"), col("query_id"),
-            col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(p.toLong).as("probes")) -> approx
+      })
     },
       // recall along the probes axis the trained quantizer unlocks;
       // p = 8 probes every cell (recall 1.0 anchor)
@@ -885,13 +647,11 @@ object AnnRows {
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
         k = 5).localCheckpoint() // one brute leg serves the sweep
-      hammingSizingBits.map { b =>
+      recallLegs(exact, k = 5, hammingSizingBits.map { b =>
         val approx = hammingRerank(e, q, k = 5, candK = hammingBitsCandK,
           bits = b)
-        Similarity.recallAtK(exact, approx, k = 5)
-          .select(lit(b.toLong).as("bits"), col("query_id"),
-            col("n_hits"), col("recall"))
-      }.reduce(_ unionByName _)
+        Seq(lit(b.toLong).as("bits")) -> approx
+      })
     },
       // the sizing sweep transposed to the BITS axis: per signature
       // width its own plane-literal word CTE, shortlist at the fixed
@@ -914,51 +674,9 @@ object AnnRows {
     },
       // the LSH CTEs are ann_sign_lsh's verbatim; the exact side reuses the
       // normalized corpus e and ranks without the bucket gate
-      (s"""WITH ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |            FROM embeddings),
-         |bt AS (
-         |  SELECT vec_id, v,
-         |       ${rotatedBitsSql("v", 4, 64)}
-         |  FROM ec),
-         |e AS (SELECT vec_id,
-         |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v,
-         |        ${bucketFromBitsSql(4, -1)} AS bucket
-         |      FROM bt),
-         |q AS (SELECT vec_id AS query_id,
-         |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS qv,
-         |        unnest([${(-1 to 3).map(bucketFromBitsSql(4, _)).mkString(",\n                ")}]) AS bucket
-         |      FROM bt WHERE vec_id < 50),""".stripMargin + "\n" +
-      """s AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |         list_dot_product(qv, e.v) AS score
-        |  FROM e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id),
-        |lsh AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM s) WHERE rank <= 3),
-        |q2 AS (SELECT vec_id AS query_id,
-        |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS qv
-        |       FROM ec WHERE vec_id < 50),
-        |x AS (
-        |  SELECT q2.query_id, e.vec_id AS neighbor_id,
-        |         list_dot_product(q2.qv, e.v) AS score
-        |  FROM e, q2 WHERE e.vec_id <> q2.query_id),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM x) WHERE rank <= 3)
-        |SELECT query_id, n_hits,
-        |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall FROM (
-        |  SELECT ex.query_id,
-        |         CAST(sum(CASE WHEN lsh.neighbor_id IS NOT NULL
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |         COUNT(*) AS n_exact
-        |  FROM ex LEFT JOIN lsh
-        |    ON lsh.query_id = ex.query_id
-        |   AND lsh.neighbor_id = ex.neighbor_id
-        |  GROUP BY 1)""".stripMargin)),
+      sweepSql(Seq(signLshCtes, rankedSql("lsh", "s", "score DESC", 3),
+        exactCosineLegSql("e", "v", maxQueryId = 50, k = 3,
+          materialized = false)), Seq(Leg("", "lsh")))),
 
     // --- graded ranking metrics: nDCG@5 + MRR of the exact retrieval
     // leg against same-label relevance — the order-aware complement of
@@ -976,6 +694,10 @@ object AnnRows {
       Similarity.rankMetrics(ranked, rel, k = 5)
         .select("query_id", "n_rel", "mrr", "dcg", "ndcg")
     },
+      // ann_brute_topk's ranking CTEs at k=5 over the query sample, the
+      // same-label relevance join, and the SHARED 9-dp discount-weight
+      // literals (Similarity.ndcgWeights — libm log2 never runs in either
+      // engine); DCG sums are exact DECIMAL(28,9)
       {
       val ws = Similarity.ndcgWeights(5)
       val wCase = ws.zipWithIndex.map { case (w, i) =>
@@ -995,11 +717,7 @@ object AnnRows {
          |s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
          |             list_dot_product(qv, e.v) AS score
          |      FROM e, q WHERE e.vec_id <> q.query_id),
-         |ranked AS (SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT query_id, neighbor_id,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY score DESC, neighbor_id) AS rank
-         |  FROM s) WHERE rank <= 5),
+         |${rankedSql("ranked", "s", "score DESC", 5)},
          |rel AS (SELECT q.query_id, e.vec_id AS neighbor_id
          |        FROM q JOIN e ON q.label = e.label
          |        WHERE e.vec_id <> q.query_id),
@@ -1033,36 +751,12 @@ object AnnRows {
       Similarity.hardNegatives(e, e.filter(col("vec_id") < 50),
         "vec_id", "embedding", "label", candK = 25, k = 5)
     },
-      // ann_brute_topk's ranking CTEs at k=5 over the query sample, the
-      // same-label relevance join, and the SHARED 9-dp discount-weight
-      // literals (Similarity.ndcgWeights — libm log2 never runs in either
-      // engine); DCG sums are exact DECIMAL(28,9)
       // the brute fragment at candK=25, labels joined on both sides,
       // same-label candidates dropped, per-query re-rank to 5
-      """WITH e0 AS (SELECT vec_id, label,
-        |              CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |e AS (SELECT vec_id, label,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-        |          AS v
-        |      FROM e0),
-        |q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv
-        |      FROM e WHERE vec_id < 50),
-        |s AS (SELECT q.query_id, q.qlab, e.vec_id AS neighbor_id,
-        |             e.label AS nlab,
-        |             list_dot_product(qv, e.v) AS score0
-        |      FROM e, q WHERE e.vec_id <> q.query_id),
-        |cand AS (SELECT query_id, qlab, neighbor_id, nlab,
-        |                round(score0, 6) AS score FROM (
-        |           SELECT *, row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score0 DESC, neighbor_id) AS rnk
-        |           FROM s) WHERE rnk <= 25)
-        |SELECT query_id, CAST(hn_rank AS BIGINT) AS hn_rank,
-        |       neighbor_id, score FROM (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |           ORDER BY score DESC, neighbor_id) AS hn_rank
-        |  FROM cand WHERE nlab <> qlab)
-        |WHERE hn_rank <= 5""".stripMargin),
+      s"WITH $hardNegBruteCtes,\n${hardNegSql("hn", "s")}\n" +
+        """SELECT query_id, CAST(rank AS BIGINT) AS hn_rank, neighbor_id,
+          |       score
+          |FROM hn""".stripMargin),
 
     // --- ANN-leg hard negatives + recall eval: the 100 TB mining shape —
     // the slate comes from the IVF cell-pruned leg (corpus never
@@ -1086,62 +780,18 @@ object AnnRows {
       // the exact baseline, the IVF cell-pruned slate (the ann_ivf_topk
       // cell CTEs at candK=25) as the mining leg, recallAtK's join:
       // denominator = the brute slate's ACTUAL per-query size
-      (s"""WITH e0 AS (SELECT vec_id, label,
-        |              CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings),
-        |e AS (SELECT vec_id, label,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-        |          AS v
-        |      FROM e0),
-        |q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv
-        |      FROM e WHERE vec_id < 50),
-        |s AS (SELECT q.query_id, q.qlab, e.vec_id AS neighbor_id,
-        |             e.label AS nlab,
-        |             list_dot_product(qv, e.v) AS score0
-        |      FROM e, q WHERE e.vec_id <> q.query_id),
-        |bcand AS (SELECT query_id, qlab, neighbor_id, nlab,
-        |                 round(score0, 6) AS score FROM (
-        |            SELECT *, row_number() OVER (PARTITION BY query_id
-        |                        ORDER BY score0 DESC, neighbor_id) AS rnk
-        |            FROM s) WHERE rnk <= 25),
-        |bhn AS (SELECT query_id, neighbor_id FROM (
-        |          SELECT query_id, neighbor_id,
-        |                 row_number() OVER (PARTITION BY query_id
-        |                   ORDER BY score DESC, neighbor_id) AS hn_rank
-        |          FROM bcand WHERE nlab <> qlab)
-        |        WHERE hn_rank <= 5),
-        |""".stripMargin +
-        ivfCellCtes("e0") + """,
-        |iq AS (SELECT vec_id AS query_id, unnest([cell_w, cell_r]) AS cell
-        |       FROM ivcell WHERE vec_id < 50),
-        |ic AS (SELECT vec_id AS neighbor_id, cell_w AS cell FROM ivcell),
-        |iscore AS (SELECT iq.query_id, qe.label AS qlab,
-        |                  ic.neighbor_id, ne.label AS nlab,
-        |                  list_dot_product(qe.v, ne.v) AS score0
-        |           FROM ic JOIN iq USING (cell)
-        |           JOIN e qe ON qe.vec_id = iq.query_id
-        |           JOIN e ne ON ne.vec_id = ic.neighbor_id
-        |           WHERE ic.neighbor_id <> iq.query_id),
-        |icand AS (SELECT query_id, qlab, neighbor_id, nlab,
-        |                 round(score0, 6) AS score FROM (
-        |            SELECT *, row_number() OVER (PARTITION BY query_id
-        |                        ORDER BY score0 DESC, neighbor_id) AS rnk
-        |            FROM iscore) WHERE rnk <= 25),
-        |ihn AS (SELECT DISTINCT query_id, neighbor_id FROM (
-        |          SELECT query_id, neighbor_id,
-        |                 row_number() OVER (PARTITION BY query_id
-        |                   ORDER BY score DESC, neighbor_id) AS hn_rank
-        |          FROM icand WHERE nlab <> qlab)
-        |        WHERE hn_rank <= 5)
-        |SELECT bhn.query_id,
-        |       CAST(sum(CASE WHEN ihn.neighbor_id IS NOT NULL
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |       round(CAST(sum(CASE WHEN ihn.neighbor_id IS NOT NULL
-        |                          THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE), 6) AS recall
-        |FROM bhn LEFT JOIN ihn
-        |  ON ihn.query_id = bhn.query_id
-        | AND ihn.neighbor_id = bhn.neighbor_id
-        |GROUP BY 1""".stripMargin))
+      sweepSql(Seq(hardNegBruteCtes, hardNegSql("ex", "s"), ivfCellCtes("e0"),
+        """iq AS (SELECT vec_id AS query_id, unnest([cell_w, cell_r]) AS cell
+          |       FROM ivcell WHERE vec_id < 50),
+          |ic AS (SELECT vec_id AS neighbor_id, cell_w AS cell FROM ivcell),
+          |iscore AS (SELECT iq.query_id, qe.label AS qlab,
+          |                  ic.neighbor_id, ne.label AS nlab,
+          |                  list_dot_product(qe.v, ne.v) AS score0
+          |           FROM ic JOIN iq USING (cell)
+          |           JOIN e qe ON qe.vec_id = iq.query_id
+          |           JOIN e ne ON ne.vec_id = ic.neighbor_id
+          |           WHERE ic.neighbor_id <> iq.query_id)""".stripMargin,
+        hardNegSql("ihn", "iscore")),
+        Seq(Leg("", "(SELECT DISTINCT query_id, neighbor_id FROM ihn)"))))
   )
 }

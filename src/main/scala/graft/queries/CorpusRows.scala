@@ -261,19 +261,34 @@ object CorpusRows {
     // hash aggregate (map-side partials per set), no self-union of
     // per-dimension scans. Coalesced labels + GROUPING flags keep the
     // output unambiguous when a dimension value could literally be
-    // 'ALL'. Exact aggregates only (count, long sum) — nothing float. --
-    Row("corpus_rollup", (s, d) =>
-      Tables.documents(s, d)
+    // 'ALL'. Exact aggregates only (count, long sum) — nothing float.
+    // A grouping-sets aggregate emits nothing without input rows, where
+    // SQL's GROUP BY CUBE still returns its grand total; one marker row
+    // with NULL dimensions and measures gives the grand total an input
+    // row, counts in no group, and the groups only it creates (docs 0)
+    // are dropped ------------------------------------------------------
+    Row("corpus_rollup", (s, d) => {
+      val docs = Tables.documents(s, d)
+        .select(col("source"), col("lang"), col("n_chars"),
+          lit(false).as("marker"))
+      val marker = s.range(0, 1, 1, 1).select(
+        lit(null).cast("string").as("source"),
+        lit(null).cast("string").as("lang"),
+        lit(null).cast("long").as("n_chars"), lit(true).as("marker"))
+      docs.unionByName(marker)
         .cube(col("source"), col("lang"))
         .agg(
           grouping(col("source")).cast("int").as("g_source"),
           grouping(col("lang")).cast("int").as("g_lang"),
-          count(lit(1)).as("docs"),
+          count(when(!col("marker"), lit(1))).as("docs"),
           sum(col("n_chars")).as("chars"))
+        .filter(col("docs") > 0 ||
+          (col("g_source") === 1 && col("g_lang") === 1))
         .select(
           coalesce(col("source"), lit("ALL")).as("source"),
           coalesce(col("lang"), lit("ALL")).as("lang"),
-          col("g_source"), col("g_lang"), col("docs"), col("chars")),
+          col("g_source"), col("g_lang"), col("docs"), col("chars"))
+    },
       // DuckDB sums BIGINT into HUGEINT — cast back to Spark's long
       """SELECT coalesce(source, 'ALL') AS source,
         |       coalesce(lang, 'ALL') AS lang,

@@ -194,7 +194,8 @@ object EmbedRows {
     },
       // two exact rankings (full 64 dims vs the 16-dim prefix), the
       // shared recall join; normalize-after-slice matches the engine
-      """WITH ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      sweepSql(Seq(
+      """ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |            FROM embeddings WHERE len(embedding) >= 64),
         |ef AS (SELECT vec_id,
         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
@@ -203,34 +204,13 @@ object EmbedRows {
         |et AS (SELECT vec_id,
         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
         |       FROM et0),
-        |qf AS (SELECT vec_id AS query_id, v AS qv FROM ef WHERE vec_id < 30),
         |qt AS (SELECT vec_id AS query_id, v AS qv FROM et WHERE vec_id < 30),
-        |xf AS (SELECT qf.query_id, ef.vec_id AS neighbor_id,
-        |              list_dot_product(qf.qv, ef.v) AS score
-        |       FROM ef, qf WHERE ef.vec_id <> qf.query_id),
-        |exa AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM xf) WHERE rank <= 5),
         |xt AS (SELECT qt.query_id, et.vec_id AS neighbor_id,
         |              list_dot_product(qt.qv, et.v) AS score
-        |       FROM et, qt WHERE et.vec_id <> qt.query_id),
-        |apx AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM xt) WHERE rank <= 5)
-        |SELECT query_id, n_hits,
-        |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall FROM (
-        |  SELECT exa.query_id,
-        |         CAST(sum(CASE WHEN apx.neighbor_id IS NOT NULL
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |         COUNT(*) AS n_exact
-        |  FROM exa LEFT JOIN apx
-        |    ON apx.query_id = exa.query_id
-        |   AND apx.neighbor_id = exa.neighbor_id
-        |  GROUP BY 1)""".stripMargin),
+        |       FROM et, qt WHERE et.vec_id <> qt.query_id)""".stripMargin,
+        exactCosineLegSql("ef", "v", maxQueryId = 30, k = 5,
+          materialized = false),
+        rankedSql("apx", "xt", "score DESC", 5)), Seq(Leg("", "apx")))),
 
     // --- embedding-cosine near-dup pairs (rotated sign-LSH blocking) --------
     Row("embed_cosine_neardup", (s, d) =>

@@ -54,9 +54,8 @@ object GraphRows {
         dim = 64, bands = 2).localCheckpoint()
     }
 
-  /** The knn_graph oracle's CTE chain up to `g` (the rank≤3 directed edge
-    * set) — shared by the graph_pagerank / graph_degree oracles, verbatim
-    * the knn_graph fragment. */
+  /** The knn_graph oracle's CTE chain up to `g(src, dst, score, rank)`
+    * (the rank≤3 directed edge set) — shared by every graph oracle. */
   private def knnEdgeCtes: String =
     s"""ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
        |            FROM embeddings WHERE len(embedding) >= 64),
@@ -74,8 +73,8 @@ object GraphRows {
         |      FROM e a JOIN e b
         |        ON a.vec_id <> b.vec_id
         |       AND (a.bk0 = b.bk0 OR a.bk1 = b.bk1)),
-        |g AS (SELECT src, dst FROM (
-        |  SELECT src, dst,
+        |g AS (SELECT * FROM (
+        |  SELECT src, dst, score,
         |         row_number() OVER (PARTITION BY src
         |                            ORDER BY score DESC, dst) AS rank
         |  FROM s) WHERE rank <= 3)""".stripMargin
@@ -233,11 +232,16 @@ object GraphRows {
          |        JOIN q ON q.query_id = c.query_id),
          |v$h AS MATERIALIZED (
          |  SELECT * FROM v${h - 1} UNION ALL SELECT * FROM s$h),
-         |f$h AS (SELECT query_id, id FROM (
-         |  SELECT query_id, id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, id) AS r
-         |  FROM v$h) WHERE r <= $beam)""".stripMargin
+         |f$h AS (SELECT query_id, neighbor_id AS id FROM (${slateSql(
+             s"(SELECT query_id, id AS neighbor_id, score FROM v$h)",
+             "score DESC", beam)}))""".stripMargin
     }
+
+  /** The walk's result after `hops` hops: every visited node but the
+    * query itself, as a (query_id, neighbor_id, score) slate source. */
+  private def walkResultSql(hops: Int): String =
+    s"(SELECT query_id, id AS neighbor_id, score FROM v$hops " +
+      "WHERE id <> query_id)"
 
   /** [[graphSearchCtes]] with PER-QUERY entries seeded from the axis-cell
     * coarse quantizer, mirroring
@@ -310,27 +314,10 @@ object GraphRows {
       // the banded-OR join emits one row per colliding pair (SQL join
       // semantics — no dedup needed, unlike the Spark side's per-band
       // explode); rank on the unrounded score, round only in the output
-      (s"""WITH ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |            FROM embeddings WHERE len(embedding) >= 64),
-         |e0 AS (
-         |  SELECT vec_id, v,
-         |         ${rotatedBucketSql("v", 4, 64)} AS bk0,
-         |         ${rotatedBucketSql("v", 4, 64, Similarity.DefaultSeed + 1)} AS bk1
-         |  FROM ec),""".stripMargin + "\n" +
-      """e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv,
-        |        bk0, bk1
-        |      FROM e0),
-        |s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-        |             list_dot_product(a.nv, b.nv) AS score
-        |      FROM e a JOIN e b
-        |        ON a.vec_id <> b.vec_id
-        |       AND (a.bk0 = b.bk0 OR a.bk1 = b.bk1))
-        |SELECT src, rank, dst, round(score, 6) AS score FROM (
-        |  SELECT src, dst, score,
-        |         CAST(row_number() OVER (PARTITION BY src
-        |                                 ORDER BY score DESC, dst) AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin)),
+      (s"WITH $knnEdgeCtes\n" +
+        """SELECT src, CAST(rank AS BIGINT) AS rank, dst,
+          |       round(score, 6) AS score
+          |FROM g""".stripMargin)),
 
     // --- mutual-kNN edges: pairs ranking EACH OTHER top-k — the standard
     // sparsifier before clustering the graph (hub nodes drop out) ---------
@@ -339,32 +326,12 @@ object GraphRows {
       Similarity.mutualKnnEdges(sharedKnnGraph(s, d))
         .select("id_a", "id_b", "score")
     },
-      // knn_graph's CTEs verbatim + the mutuality self-join on the
-      // rank-truncated edge set
-      (s"""WITH ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |            FROM embeddings WHERE len(embedding) >= 64),
-         |e0 AS (
-         |  SELECT vec_id, v,
-         |         ${rotatedBucketSql("v", 4, 64)} AS bk0,
-         |         ${rotatedBucketSql("v", 4, 64, Similarity.DefaultSeed + 1)} AS bk1
-         |  FROM ec),""".stripMargin + "\n" +
-      """e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv,
-        |        bk0, bk1
-        |      FROM e0),
-        |s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-        |             list_dot_product(a.nv, b.nv) AS score
-        |      FROM e a JOIN e b
-        |        ON a.vec_id <> b.vec_id
-        |       AND (a.bk0 = b.bk0 OR a.bk1 = b.bk1)),
-        |g AS (SELECT src, dst, score FROM (
-        |  SELECT src, dst, score,
-        |         row_number() OVER (PARTITION BY src
-        |                            ORDER BY score DESC, dst) AS rank
-        |  FROM s) WHERE rank <= 3)
-        |SELECT a.src AS id_a, a.dst AS id_b, round(a.score, 6) AS score
-        |FROM g a JOIN g b ON a.src = b.dst AND a.dst = b.src
-        |WHERE a.src < a.dst""".stripMargin)),
+      // knn_graph's CTEs + the mutuality self-join on the rank-truncated
+      // edge set
+      (s"WITH $knnEdgeCtes\n" +
+        """SELECT a.src AS id_a, a.dst AS id_b, round(a.score, 6) AS score
+          |FROM g a JOIN g b ON a.src = b.dst AND a.dst = b.src
+          |WHERE a.src < a.dst""".stripMargin)),
 
     // --- greedy best-first graph ANN search: the HNSW-family serving
     // walk, batched — shared lowest-id entry, beam-ranked expansion of
@@ -378,15 +345,9 @@ object GraphRows {
     },
       // knn edge CTEs + the hop-unrolled greedy walk
       (s"WITH $knnEdgeCtes,\n" +
-        graphSearchCtes(beam = 8, hops = 3, nQueries = 10) +
-        """
-          |SELECT query_id, CAST(rank AS BIGINT) AS rank,
-          |       id AS neighbor_id, round(score, 6) AS score
-          |FROM (SELECT query_id, id, score, row_number() OVER (
-          |        PARTITION BY query_id
-          |        ORDER BY score DESC, id) AS rank
-          |      FROM v3 WHERE id <> query_id)
-          |WHERE rank <= 5""".stripMargin)),
+        graphSearchCtes(beam = 8, hops = 3, nQueries = 10) + "\n" +
+        topKSql(walkResultSql(3), "score DESC", 5,
+          ", round(score, 6) AS score"))),
 
     // --- recall@5 of the IVF-SEEDED graph walk vs the exact baseline:
     // each query enters the graph at the lowest-id corpus vector of its
@@ -406,34 +367,11 @@ object GraphRows {
       // the seeded walk's hop unroll + the shared recall idiom: exact =
       // brute-force cosine over the normalized corpus, approx = v3's
       // top-5, denominator the actual exact-result size
-      (s"WITH $knnEdgeCtes,\n" +
-        graphSearchSeededCtes(beam = 8, hops = 3, nQueries = 10) +
-        """,
-          |apx AS (SELECT query_id, id AS neighbor_id FROM (
-          |  SELECT query_id, id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY score DESC, id) AS rank
-          |  FROM v3 WHERE id <> query_id) WHERE rank <= 5),
-          |xq AS (SELECT vec_id AS query_id, nv AS qv FROM e
-          |       WHERE vec_id < 10),
-          |x AS (SELECT xq.query_id, e.vec_id AS neighbor_id,
-          |        list_dot_product(qv, e.nv) AS score
-          |      FROM e, xq WHERE e.vec_id <> xq.query_id),
-          |ex AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT query_id, neighbor_id, row_number() OVER (
-          |    PARTITION BY query_id ORDER BY score DESC, neighbor_id)
-          |      AS rank
-          |  FROM x) WHERE rank <= 5)
-          |SELECT query_id, n_hits,
-          |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
-          |FROM (
-          |  SELECT ex.query_id,
-          |         CAST(sum(CASE WHEN apx.neighbor_id IS NOT NULL
-          |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-          |         COUNT(*) AS n_exact
-          |  FROM ex LEFT JOIN apx
-          |    ON apx.query_id = ex.query_id
-          |   AND apx.neighbor_id = ex.neighbor_id
-          |  GROUP BY 1)""".stripMargin)),
+      sweepSql(Seq(knnEdgeCtes,
+        graphSearchSeededCtes(beam = 8, hops = 3, nQueries = 10),
+        rankedSql("apx", walkResultSql(3), "score DESC", 5),
+        exactCosineLegSql("e", "nv", maxQueryId = 10, k = 5,
+          materialized = false)), Seq(Leg("", "apx")))),
 
     // --- fixed-point PageRank over the kNN graph: the graph-centrality
     // curation signal (dense-neighborhood = over-represented content).
@@ -470,17 +408,15 @@ object GraphRows {
       graft.operators.Graph.pagerankWeighted(nodes, edges, "vec_id",
         iters = 3)
     },
-      // the same knn candidates re-ranked WITH their 6dp score kept,
-      // integer-scaled to the weight grid exactly as the engine does
+      // the knn edges WITH their 6dp score kept, integer-scaled to the
+      // weight grid exactly as the engine does
       // (round6 → ×10⁶ → round0 → BIGINT, w > 0)
       (s"WITH $knnEdgeCtes,\n" +
         """gw AS (SELECT src, dst, w FROM (
           |  SELECT src, dst,
           |         CAST(round(round(score, 6) * 1000000.0, 0) AS BIGINT)
-          |           AS w,
-          |         row_number() OVER (PARTITION BY src
-          |                            ORDER BY score DESC, dst) AS rank
-          |  FROM s) WHERE rank <= 3 AND w > 0),
+          |           AS w
+          |  FROM g) WHERE w > 0),
           |nodes AS (SELECT vec_id AS id FROM ec),
           |""".stripMargin +
         pagerankWeightedCtes(iters = 3, dampPct = 85,

@@ -47,15 +47,13 @@ object SearchRows {
          |    ON s.query_id = p.query_id AND s.nid = p.idb
          |  GROUP BY 1, 2),
          |pick$r AS (
-         |  SELECT query_id, nid, $r AS pick FROM (
-         |    SELECT r.query_id, r.nid,
-         |           row_number() OVER (PARTITION BY r.query_id
-         |             ORDER BY $lam * r.rel
-         |                      - $oneMinus * CAST(m.maxsim AS DOUBLE) DESC,
-         |                      r.nid) AS rn
-         |    FROM rem${r - 1} r JOIN ms$r m
-         |      ON m.query_id = r.query_id AND m.nid = r.nid)
-         |  WHERE rn = 1),
+         |  SELECT query_id, neighbor_id AS nid, $r AS pick FROM (${slateSql(
+               s"""(SELECT r.query_id, r.nid AS neighbor_id,
+                  |        $lam * r.rel
+                  |          - $oneMinus * CAST(m.maxsim AS DOUBLE) AS mmr
+                  |      FROM rem${r - 1} r JOIN ms$r m
+                  |        ON m.query_id = r.query_id AND m.nid = r.nid)""".stripMargin,
+               "mmr DESC", 1)})),
          |sel$r AS (SELECT * FROM sel${r - 1} UNION ALL
          |          SELECT * FROM pick$r),
          |rem$r AS (
@@ -83,17 +81,22 @@ object SearchRows {
        |FROM sel$MmrSelectK""".stripMargin
   }
 
+  /** The top-[[MmrCandK]] cosine candidates of each query in
+    * `scored(query_id, neighbor_id, score0)` as `cand(query_id, nid, rel,
+    * rnk)`, `rel` rounded to 6 dp. */
+  private def mmrCandSql(scored: String): String =
+    s"""${rankedSql("cr", scored, "score0 DESC", MmrCandK)},
+       |cand AS (SELECT query_id, neighbor_id AS nid, round(score0, 6) AS rel,
+       |                rank AS rnk
+       |         FROM cr)""".stripMargin
+
   /** The brute-force MMR candidate fragment (ann_brute_topk's scorer). */
   private def mmrBruteCandCtes: String =
     s"""q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
-       |s AS (SELECT q.query_id, e.vec_id AS nid,
+       |s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
        |             list_dot_product(qv, e.v) AS score0
        |      FROM e, q WHERE e.vec_id <> q.query_id),
-       |cand AS (SELECT query_id, nid, round(score0, 6) AS rel, rnk FROM (
-       |           SELECT query_id, nid, score0,
-       |                  row_number() OVER (PARTITION BY query_id
-       |                    ORDER BY score0 DESC, nid) AS rnk
-       |           FROM s) WHERE rnk <= $MmrCandK)""".stripMargin
+       |${mmrCandSql("s")}""".stripMargin
 
   /** The IVF MMR candidate fragment: the SHARED [[ivfCellCtes]] axis
     * cells (m=4, probes=2) over the raw e0 vectors, scored on the
@@ -103,17 +106,13 @@ object SearchRows {
        |iq AS (SELECT vec_id AS query_id, unnest([cell_w, cell_r]) AS cell
        |       FROM ivcell WHERE vec_id < 8),
        |ic AS (SELECT vec_id AS neighbor_id, cell_w AS cell FROM ivcell),
-       |iscore AS (SELECT iq.query_id, ic.neighbor_id AS nid,
+       |iscore AS (SELECT iq.query_id, ic.neighbor_id,
        |                  list_dot_product(qe.v, ne.v) AS score0
        |           FROM ic JOIN iq USING (cell)
        |           JOIN e qe ON qe.vec_id = iq.query_id
        |           JOIN e ne ON ne.vec_id = ic.neighbor_id
        |           WHERE ic.neighbor_id <> iq.query_id),
-       |cand AS (SELECT query_id, nid, round(score0, 6) AS rel, rnk FROM (
-       |           SELECT query_id, nid, score0,
-       |                  row_number() OVER (PARTITION BY query_id
-       |                    ORDER BY score0 DESC, nid) AS rnk
-       |           FROM iscore) WHERE rnk <= $MmrCandK)""".stripMargin
+       |${mmrCandSql("iscore")}""".stripMargin
 
   private val Bm25K1 = 1.2
 

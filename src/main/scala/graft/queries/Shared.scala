@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -181,6 +181,105 @@ object Shared {
           .mkString("\n  UNION ALL\n")}
        |)""".stripMargin
 
+  /** The top-`k` slate per `query_id` over `from` (a CTE name or a
+    * parenthesized subquery with `query_id` and `neighbor_id`): every
+    * column of `from` plus its 1-based `rank` by `order`, ties broken on
+    * `neighbor_id` — the order [[Similarity.rankWithin]] ranks by. */
+  private[queries] def slateSql(from: String, order: String, k: Int): String =
+    s"""SELECT * FROM (
+       |  SELECT *, row_number() OVER (
+       |    PARTITION BY query_id ORDER BY $order, neighbor_id) AS rank
+       |  FROM $from) WHERE rank <= $k""".stripMargin
+
+  /** [[slateSql]] as CTE `name`; `materialized` when several legs read
+    * it, so DuckDB evaluates it once. */
+  private[queries] def rankedSql(name: String, from: String,
+                                 order: String, k: Int,
+                                 materialized: Boolean = false): String =
+    s"$name AS ${if (materialized) "MATERIALIZED " else ""}(" +
+      slateSql(from, order, k) + ")"
+
+  /** The top-k output shape of the ANN rows: `query_id`, the BIGINT
+    * `rank`, `neighbor_id`, then the select items in `extra`. */
+  private[queries] def topKSql(from: String, order: String, k: Int,
+                               extra: String = ""): String =
+    s"SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id$extra " +
+      s"FROM (${slateSql(from, order, k)})"
+
+  /** The recall block of [[Similarity.recallAtK]]: hits of the
+    * approximate slate `apx` against the exact slate CTE `ex`, over the
+    * exact slate's actual per-query size, rounded to 6 dp; `label` is
+    * the leading select items ("" for none). */
+  private[queries] def recallSql(label: String, apx: String): String =
+    s"""SELECT ${if (label.isEmpty) "" else label + ", "}query_id, n_hits,
+       |       round(n_hits / CAST(n_exact AS DOUBLE), 6) AS recall
+       |FROM (
+       |  SELECT ex.query_id,
+       |         CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL
+       |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+       |         COUNT(*) AS n_exact
+       |  FROM ex LEFT JOIN $apx a
+       |    ON a.query_id = ex.query_id
+       |   AND a.neighbor_id = ex.neighbor_id
+       |  GROUP BY 1)""".stripMargin
+
+  /** One leg of a recall oracle: its CTEs (may be empty), the name of its
+    * approximate slate, and its label select items. */
+  private[queries] final case class Leg(label: String, apx: String,
+                                        ctes: String = "")
+
+  /** A recall oracle: the `prefix` CTEs (inputs and the exact slate `ex`),
+    * each leg's CTEs, and the UNION ALL of the legs' recall blocks. */
+  private[queries] def sweepSql(prefix: Seq[String], legs: Seq[Leg]): String =
+    (prefix ++ legs.map(_.ctes).filter(_.nonEmpty)).mkString("WITH ", ",\n",
+      "\n") + legs.map(l => recallSql(l.label, l.apx)).mkString("\nUNION ALL\n")
+
+  /** A BIGINT label select item. */
+  private[queries] def bigint(name: String, v: Int): String =
+    s"CAST($v AS BIGINT) AS $name"
+
+  /** The exact cosine leg: queries `vec_id < maxQueryId` of `src`, scored
+    * against every other row of `src` on its normalized column `nv`, the
+    * top `k` as CTE `ex` (with `xq`, `x`). */
+  private[queries] def exactCosineLegSql(src: String, nv: String,
+                                         maxQueryId: Int, k: Int,
+                                         materialized: Boolean): String =
+    s"""xq AS (SELECT vec_id AS query_id, $nv AS qv FROM $src
+       |       WHERE vec_id < $maxQueryId),
+       |x AS (SELECT xq.query_id, c.vec_id AS neighbor_id,
+       |             list_dot_product(qv, c.$nv) AS score
+       |      FROM $src c, xq WHERE c.vec_id <> xq.query_id),
+       |${rankedSql("ex", "x", "score DESC", k, materialized)}""".stripMargin
+
+  /** The exact L2 leg over `src(vec_id, v)`, the same shape as
+    * [[exactCosineLegSql]] ranked by `dot(c, c) − 2·dot(q, c)`. */
+  private[queries] def exactL2LegSql(src: String, maxQueryId: Int, k: Int,
+                                     materialized: Boolean = true): String =
+    s"""xq AS (SELECT vec_id AS query_id, v AS qv FROM $src
+       |       WHERE vec_id < $maxQueryId),
+       |x AS (SELECT xq.query_id, c.vec_id AS neighbor_id,
+       |        list_dot_product(c.v, c.v)
+       |          - 2.0 * list_dot_product(qv, c.v) AS d
+       |      FROM $src c, xq WHERE c.vec_id <> xq.query_id),
+       |${rankedSql("ex", "x", "d", k, materialized)}""".stripMargin
+
+  /** The len-64 universe of the k-means and residual rows as `e0(vec_id,
+    * v)`. */
+  private[queries] val len64Cte =
+    """e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |       FROM embeddings WHERE len(embedding) = 64)""".stripMargin
+
+  /** Recall@k of each labelled approximate leg against one `exact` slate
+    * ([[Similarity.recallAtK]]), the label columns first, the blocks
+    * unioned by name. */
+  private[queries] def recallLegs(
+      exact: DataFrame, k: Int,
+      legs: Seq[(Seq[Column], DataFrame)]): DataFrame =
+    legs.map { case (labels, approx) =>
+      Similarity.recallAtK(exact, approx, k).select(
+        labels ++ Seq(col("query_id"), col("n_hits"), col("recall")): _*)
+    }.reduce(_ unionByName _)
+
   /** The probes sweep points of `ann_ivft_probes` — the knob the
     * trained quantizer unlocks (axis cells cap at 2); 8 = every cell
     * probed, so the sweep's last point must read recall 1.0 (candidate
@@ -276,11 +375,12 @@ object Shared {
   /** The trained-IVF probe/assignment fragment over [[kmeansCtes]]'
     * unrolled training (k=8, iters=2, dim=64 — the embed_kmeans
     * configuration): `tnv` normalizes the len=64 training universe,
-    * `tcc` is the corpus cell (the a2 assignment verbatim), `tqp` the
-    * query's 2 nearest cells by (quantizer score, index) — the same
-    * (s, j) ordering the engine's sorted score structs use. Shared by
-    * ann_ivft_indexed and ann_ivft_recall so the cell algebra can
-    * never desynchronize. */
+    * `tcc` is the corpus cell (the a2 assignment verbatim), `tqr` the
+    * query's cells ranked by (quantizer score, index) — the same (s, j)
+    * ordering the engine's sorted score structs use — and `tqp` its
+    * first `probes`. Shared by every trained-cell oracle (the ivft,
+    * ivfsq, ivfpqt and residual rows) so the cell algebra can never
+    * desynchronize. */
   private[queries] def ivfTrainedCtes(maxQueryId: Int, probes: Int): String =
     s"""tnv AS (
        |  SELECT vec_id,
@@ -294,6 +394,18 @@ object Shared {
        |                   PARTITION BY vec_id ORDER BY s, j) AS rn
        |        FROM s2 WHERE vec_id < $maxQueryId),
        |tqp AS (SELECT query_id, cell FROM tqr WHERE rn <= $probes)""".stripMargin
+
+  /** CTE `name`: cosine scores of each query against the corpus rows of
+    * its probed trained cells (`probed(query_id, cell)`, by default
+    * [[ivfTrainedCtes]]' `tqp`), both sides read from `vecs(vec_id, nv)`. */
+  private[queries] def trainedCellScoresSql(name: String, vecs: String,
+                                            probed: String = "tqp"): String =
+    s"""$name AS (SELECT qp.query_id, tcc.neighbor_id,
+       |              list_dot_product(q.nv, c.nv) AS score
+       |       FROM tcc JOIN $probed qp USING (cell)
+       |       JOIN $vecs q ON q.vec_id = qp.query_id
+       |       JOIN $vecs c ON c.vec_id = tcc.neighbor_id
+       |       WHERE tcc.neighbor_id <> qp.query_id)""".stripMargin
 
   /** Mirror of [[graft.llm.Pq.encode]]: CTEs `e` (doubled vectors), `cb`
     * (the m×k seeded codebooks + their self-dots as VALUES literals —

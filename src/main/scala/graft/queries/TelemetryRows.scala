@@ -780,10 +780,12 @@ object TelemetryRows {
       Tables.resources(s, d).select(col("resource_id"),
         (ts <= now + 60.0 && ts >= now - 604800.0).as("is_valid"))
     },
+      // customers without a nation are no resources ([[Tables.resources]]
+      // joins nation), so both oracles join it too
       """SELECT c_name AS resource_id,
         |       (c_custkey + 1.5e9 <= 1.5e9 + 500 + 60
         |        AND c_custkey + 1.5e9 >= 1.5e9 + 500 - 604800) AS is_valid
-        |FROM customer""".stripMargin),
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin),
 
     // --- P9: identifier validation ------------------------------------------------
     Row("p9_validation", (s, d) =>
@@ -819,7 +821,7 @@ object TelemetryRows {
         |            ELSE CAST(-1 AS BIGINT) END
         |         AS heartbeat_enrichment_timestamp,
         |       1.7e9 AS metrics_group_creation_timestamp
-        |FROM customer""".stripMargin),
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin),
 
     // --- A6: group-by-site (per-site topic fan-out shape) ---------------------------
     Row("a6_group_by_site", (s, d) =>

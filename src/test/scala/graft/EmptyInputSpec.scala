@@ -2,17 +2,18 @@ package graft
 
 import java.io.File
 
-/** Rows on zero-row copies of the sf0.01 tables (same schema, built at
-  * test time): each must give the result its oracle SQL defines on empty
-  * input — the expected row counts are DuckDB's. */
+/** Rows on zero-row and one-row copies of the sf0.01 tables (same
+  * schema, built at test time): each must give the result its oracle SQL
+  * defines on that input — the expected row counts are DuckDB's. */
 class EmptyInputSpec extends SparkSpec {
-  /** Runs `body` on a dir of zero-row copies of every table. */
-  private def onEmptyTables(body: String => Unit): Unit = {
-    val dir = freshTmpDir("graft_empty_tables")
+  /** Runs `body` on a dir of copies of every table cut to its first `n`
+    * rows. */
+  private def onCutTables(n: Int)(body: String => Unit): Unit = {
+    val dir = freshTmpDir("graft_cut_tables")
     try {
       Graft.tableNames.foreach { t =>
         val tmp = new File(dir, s"$t.tmp")
-        spark.read.parquet(s"$sf01/$t.parquet").limit(0).coalesce(1)
+        spark.read.parquet(s"$sf01/$t.parquet").limit(n).coalesce(1)
           .write.parquet(tmp.getPath)
         tmp.listFiles.filter(_.getName.endsWith(".parquet"))
           .foreach(_.renameTo(new File(dir, s"$t.parquet")))
@@ -28,7 +29,7 @@ class EmptyInputSpec extends SparkSpec {
 
   test("replay clocks: the sentinel-flushed stream rows run on empty " +
        "tables") {
-    onEmptyTables { dir =>
+    onCutTables(0) { dir =>
       val want = Map("stream_window" -> 0, "stream_distinct" -> 0,
         "stream_quantiles" -> 0, "stream_cms" -> 8, "stream_ohlc" -> 0,
         "stream_window_sliding" -> 0, "stream_urldedup" -> 0,
@@ -51,10 +52,31 @@ class EmptyInputSpec extends SparkSpec {
       case _ => 0
     })).toMap
     assert(want.size == 40)
-    onEmptyTables { dir =>
+    onCutTables(0) { dir =>
       assert(counts(dir, rows) == want)
       assert(SparkEntry.queries("embed_neardup_sizing")(spark, dir)
         .filter("recall IS NOT NULL").isEmpty)
+    }
+  }
+
+  test("empty tables: corpus_rollup keeps SQL's grand-total row and the " +
+       "PCA rows emit no components") {
+    onCutTables(0) { dir =>
+      assert(counts(dir, Seq("embed_pca", "embed_pca_k")) ==
+        Map("embed_pca" -> 0, "embed_pca_k" -> 0))
+      val rollup = SparkEntry.queries("corpus_rollup")(spark, dir).collect()
+      assert(rollup.map(_.toSeq) sameElements
+        Array(Seq("ALL", "ALL", 1, 1, 0L, null)))
+    }
+  }
+
+  test("one-row tables: the heartbeat and validity rows read resources, " +
+       "which joins nation") {
+    // the first customer's nation is not the first nation, so the
+    // one-row inventory is empty
+    onCutTables(1) { dir =>
+      assert(counts(dir, Seq("a12_heartbeat", "f14_validity")) ==
+        Map("a12_heartbeat" -> 0, "f14_validity" -> 0))
     }
   }
 }
