@@ -23,8 +23,9 @@ object KafkaShaped {
     * message key = the series key (preserves per-series ordering, ST2),
     * value = canonical JSON of the payload struct.
     *
-    * Scale: pure map-side projection; the explode doubles rows only when a
-    * global topic is configured — no shuffle introduced before the sink.
+    * Scale: pure map-side projection, no shuffle before the sink. Rows
+    * come out of an `explode` only when a global topic is configured (it
+    * doubles them); without one the site topic is a plain column.
     */
   def encodeFanout(
       df: DataFrame,
@@ -34,12 +35,8 @@ object KafkaShaped {
       payload: Column,
       globalTopic: Option[String] = None): DataFrame = {
     val siteTopic = concat(siteCol, lit("-"), lit(topicSuffix))
-    val topics = globalTopic match {
-      case Some(g) => array(siteTopic, lit(g))
-      case None    => array(siteTopic)
-    }
     df.select(
-      explode(topics).as("topic"),
+      globalTopic.fold(siteTopic)(g => explode(array(siteTopic, lit(g)))).as("topic"),
       keyCol.cast("string").as("key"),
       to_json(payload).as("value"))
   }
@@ -56,7 +53,7 @@ object KafkaShaped {
       ColumnBridge.inStringSet(col("key").cast("string"), allowedKeys),
       lit(false)))
 
-  /** The `parsed` struct holds ≥1 schema field. PERMISSIVE from_json
+  /** The `parsed` struct holds ≥1 schema field. A PERMISSIVE parse
     * yields an all-null struct for malformed input (not a null struct) —
     * treat both as invalid. A null struct has no non-null field, so no
     * separate struct test. */
@@ -78,19 +75,28 @@ object KafkaShaped {
       allowedKeys: Seq[String] = Nil): DataFrame =
     validParsed(df, schema, allowedKeys).select(col("key"), col("parsed.*"))
 
+  /** `df`'s `keep` columns plus `parsed`, the JSON `value` parsed against
+    * `schema` once per record, in generated code
+    * ([[ColumnBridge.jsonToStruct]]). `parsed` comes out of a one-element
+    * `explode`, so the optimizer cannot push a predicate on it below the
+    * parse and copy the parse into every `OR` term of [[parsedOk]]; the
+    * `explode` fuses into whole-stage codegen with the parse. Every
+    * decode path reads its records through here. */
+  private def withParsed(df: DataFrame, schema: StructType,
+                         keep: Column*): DataFrame =
+    df.select(keep :+ explode(array(ColumnBridge.jsonToStruct(
+      col("value").cast("string"), schema))).as("parsed"): _*)
+
   /** [[decodeAndValidate]]'s records before the struct is flattened: the
-    * string `key` and the `parsed` struct, in two Dataset operations (a
-    * micro-batch analyzes its whole plan once per operation). Each record
-    * is parsed once: `parsed` comes out of a one-element `explode`, so
-    * the optimizer cannot push [[parsedOk]] below it and copy `from_json`
-    * into every `OR` term; the key test still runs before the parse. */
+    * string `key` and the `parsed` struct ([[withParsed]]), in two Dataset
+    * operations (a micro-batch analyzes its whole plan once per
+    * operation). The key test still runs before the parse: the optimizer
+    * pushes it below the `explode`. */
   private[streaming] def validParsed(
       df: DataFrame,
       schema: StructType,
       allowedKeys: Seq[String]): DataFrame =
-    df.select(col("key").cast("string").as("key"),
-        explode(array(from_json(col("value").cast("string"), schema)))
-          .as("parsed"))
+    withParsed(df, schema, col("key").cast("string").as("key"))
       .filter(keyAllowed(allowedKeys).fold(parsedOk(schema))(_ && parsedOk(schema)))
 
   /** The records [[decodeAndValidate]] would DROP — a dead-letter frame.
@@ -104,7 +110,7 @@ object KafkaShaped {
       schema: StructType,
       allowedKeys: Seq[String] = Nil): DataFrame = {
     val keyOk = keyAllowed(allowedKeys).getOrElse(lit(true))
-    df.withColumn("parsed", from_json(col("value").cast("string"), schema))
+    withParsed(df, schema, col("key"), col("value"))
       .filter(!keyOk || !parsedOk(schema))
       .select(col("key").cast("string").as("key"),
         col("value").cast("string").as("value"),
@@ -157,7 +163,7 @@ object KafkaShaped {
           col("parsed").getField(f).isin(vs: _*)
       }
       .foldLeft(lit(true))(_ && _)
-    df.withColumn("parsed", from_json(col("value").cast("string"), schema))
+    withParsed(df, schema, col("key"))
       .withColumn("__key_ok", keyAllowed(allowedKeys).getOrElse(lit(true)))
       .withColumn("__parse_ok", parsedOk(schema))
       .withColumn("__schema_ok", reqOk && enumOk)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.Schemas
@@ -51,6 +52,12 @@ object RateGuards {
   * processing-time timeout — the exact semantics of the reference's Redis
   * `getset(key, value, ttl)` state store (`key_value_store.py:131-150`).
   *
+  * The grouping is relational (`groupBy` on the `series` and `metric`
+  * columns), not a typed key lambda: no `AppendColumns` deserializes each
+  * sample to compute its key and appends a copy of the key to the shuffle,
+  * and the map stage's task binary does not carry the source's input
+  * partitions. The state store's key columns are `series, metric`.
+  *
   * Scale: state is partitioned by the same series key used for Kafka
   * partitioning (ST2), so a 1000-executor job shards state with zero
   * cross-talk; RocksDB state store handles state > memory. Within a
@@ -74,7 +81,8 @@ object StreamingRate {
     val timeoutMode =
       if (stateTtl) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    ds.groupByKey(s => (s.series, s.metric))
+    ds.toDF().groupBy(col("series"), col("metric"))
+      .as[(String, String), MetricSample](keyEnc, ds.encoder)
       .flatMapGroupsWithState[(Double, Double), RateResult](
         OutputMode.Append, timeoutMode) {
         case (_, samples, state: GroupState[(Double, Double)]) =>

@@ -2,10 +2,12 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkRuntimeException
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, ObjectType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark 4.x moved `Column` onto ColumnNode; building a `Column` from a
@@ -43,6 +45,24 @@ object ColumnBridge {
     * optimizer no rewrite. Null when `c` is null, as `isin` is. */
   def inStringSet(c: Column, values: Iterable[String]): Column =
     column(InSet(expression(c), values.iterator.map(UTF8String.fromString).toSet[Any]))
+
+  /** `from_json(c, schema)` without options, in generated code: Spark's
+    * own parser (`JsonToStructsEvaluator`, what `JsonToStructs` calls)
+    * behind an `Invoke`, the pattern Spark 4.1 uses for `to_json`.
+    * `JsonToStructs` is a `CodegenFallback`, so any operator holding it
+    * leaves whole-stage codegen. Null or unparseable input gives what
+    * `from_json` gives (PERMISSIVE). The session's corrupt-record column
+    * name, time zone and duplicate-key setting are read here, once, as
+    * the analyzer would read them for `from_json`. */
+  def jsonToStruct(c: Column, schema: StructType): Column = {
+    val conf = SQLConf.get
+    val evaluator = JsonToStructsEvaluator(Map.empty, schema.asNullable,
+      conf.columnNameOfCorruptRecord, Some(conf.sessionLocalTimeZone),
+      conf.getConf(SQLConf.VARIANT_ALLOW_DUPLICATE_KEYS))
+    column(Invoke(
+      Literal.create(evaluator, ObjectType(classOf[JsonToStructsEvaluator])),
+      "evaluate", schema.asNullable, Seq(expression(c)), Seq(StringType)))
+  }
 
   /** The error `assert_true`/`raise_error` throw for a user message, for
     * a static kernel that enforces the same condition. */

@@ -496,27 +496,88 @@ class PlanSpec extends SparkSpec {
       !p.contains("CartesianProduct"), p)
   }
 
-  test("influx consumer: the key allow-list is one InSet; a record is " +
-    "not parsed for a struct null test; lines render without regex, sort " +
-    "or lambda expressions") {
+  /** Every JSON parse in a logical plan: `from_json`'s `JsonToStructs`
+    * and `ColumnBridge.jsonToStruct`'s evaluator `Invoke`. */
+  private def jsonParses(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
+    import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+    val es = p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    (es.count(_.isInstanceOf[JsonToStructs]), es.count {
+      case Invoke(t, "evaluate", _, _, _, _, _, _) =>
+        t.dataType == org.apache.spark.sql.types.ObjectType(classOf[JsonToStructsEvaluator])
+      case _ => false
+    })
+  }
+
+  private def kafkaRecords = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val keys = (0 until 1000).map(i => s"dc1|host$i|interface|eth0|bits_in")
-    val kafka = spark.createDataFrame(
+    spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row("k", "{}")), 1),
       StructType(Seq(StructField("key", StringType), StructField("value", StringType))))
-    val qe = graft.streaming.Pipelines.kafkaToInfluxLines(kafka, keys).queryExecution
+  }
+
+  test("influx consumer: the key allow-list is one InSet; each record is " +
+    "parsed once, in generated code; lines render without regex, sort or " +
+    "lambda expressions") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    val keys = (0 until 1000).map(i => s"dc1|host$i|interface|eth0|bits_in")
+    val qe = graft.streaming.Pipelines.kafkaToInfluxLines(kafkaRecords, keys).queryExecution
     def exprs(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     val optimized = exprs(qe.optimizedPlan)
     assert(optimized.count(_.isInstanceOf[InSet]) == 1, qe.optimizedPlan)
-    assert(optimized.count(_.isInstanceOf[JsonToStructs]) == 1, qe.optimizedPlan)
+    // one parse, by the evaluator Invoke; no interpreted JsonToStructs
+    assert(jsonParses(qe.optimizedPlan) == ((0, 1)), qe.optimizedPlan)
     for (e <- exprs(qe.analyzed) ++ optimized) e match {
-      case _: In | IsNotNull(_: JsonToStructs) | _: RegExpReplace |
+      case _: In | _: JsonToStructs | _: RegExpReplace |
            _: ArraySort | _: ArrayTransform | _: ArrayExists =>
         fail(s"$e in\n${qe.optimizedPlan}")
       case _ =>
+    }
+    // the one-element explode that carries the parse is generated code
+    val fused = qe.executedPlan.collect { case w: WholeStageCodegenExec =>
+      w.child.collect { case g: GenerateExec => g } }.flatten
+    assert(fused.size == 1 &&
+      qe.executedPlan.collect { case g: GenerateExec => g }.size == 1,
+      qe.executedPlan)
+  }
+
+  test("kafka decode: the valid, dead-letter and validated frames parse " +
+    "each record once") {
+    import graft.streaming.{KafkaShaped, Pipelines}
+    val schema = Pipelines.processedSchema
+    for (keys <- Seq(Nil, Seq("k"))) {
+      val frames = Seq(
+        "decodeAndValidate" -> KafkaShaped.decodeAndValidate(kafkaRecords, schema, keys),
+        "invalidRecords" -> KafkaShaped.invalidRecords(kafkaRecords, schema, keys),
+        "decodeValidated" -> KafkaShaped.decodeValidated(kafkaRecords, schema,
+          Seq("series", "ts"), keys, Map("metric" -> Seq("m"))))
+      for ((name, df) <- frames)
+        assert(jsonParses(df.queryExecution.optimizedPlan) == ((0, 1)),
+          s"$name, ${keys.size} key(s):\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
+  test("polling producer: the rate groups by columns, with no AppendColumns; " +
+    "the fan-out explodes only for a global topic") {
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, FlatMapGroupsWithState, Generate}
+    import org.apache.spark.sql.execution.AppendColumnsExec
+    import graft.streaming.{MetricSample, Pipelines}
+    import spark.implicits._
+    val samples = Seq(MetricSample("dc1|h|if|eth0", "bits_in", 1.0, 1.0, 60L)).toDS()
+    for ((global, generates) <- Seq(None -> 0, Some("global-processed") -> 1)) {
+      val qe = Pipelines.pollingToKafka(samples, global, stateTtl = false).queryExecution
+      val p = qe.optimizedPlan
+      assert(p.collect { case a: AppendColumns => a }.isEmpty, p)
+      assert(qe.executedPlan.collect { case a: AppendColumnsExec => a }.isEmpty,
+        qe.executedPlan)
+      assert(p.collect { case g: Generate => g }.size == generates, p)
+      // the state key columns are the sample's own
+      assert(p.collect { case f: FlatMapGroupsWithState =>
+        f.groupingAttributes.map(_.name) } == Seq(Seq("series", "metric")), p)
     }
   }
 
