@@ -10,7 +10,9 @@ block that opens at the start of a line. A code line with a trailing
 comment counts.
 
 With --max-file-lines N, every file longer than N physical lines is
-named on stderr and the exit status is 1.
+named on stderr and the exit status is 1. With --help, no path, or a
+path that does not exist, this text goes to stderr and the exit status
+is 2.
 """
 import os
 import sys
@@ -51,12 +53,24 @@ def files(paths):
             yield p
 
 
+def usage(why=None):
+    if why:
+        print(f"nbnc.py: {why}", file=sys.stderr)
+    print(__doc__.strip(), file=sys.stderr)
+    sys.exit(2)
+
+
 def main(argv):
     max_lines = None
     if argv[:1] == ["--max-file-lines"] and len(argv) > 1:
+        if not argv[1].isdigit():
+            usage(f"--max-file-lines needs a number, not {argv[1]!r}")
         max_lines, argv = int(argv[1]), argv[2:]
-    if not argv:
-        sys.exit(__doc__)
+    if not argv or "-h" in argv or "--help" in argv:
+        usage()
+    missing = [p for p in argv if not os.path.exists(p)]
+    if missing:
+        usage(f"no such file or directory: {', '.join(missing)}")
     total = 0
     too_long = []
     for path in files(argv):

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
@@ -27,6 +27,37 @@ import org.apache.spark.sql.types.BinaryType
   */
 object Contamination {
 
+  /** The distinct word `n`-grams of each row of `df`, one row per gram:
+    * the id as `as`, the gram's xxhash64 as `sh`, and with `keepGram`
+    * the gram string itself as `shingle`. */
+  private def shingled(df: DataFrame, textCol: String, idCol: String,
+                       n: Int, as: String,
+                       keepGram: Boolean = false): DataFrame =
+    df.select(col(idCol).as(as), explode(grams(textCol, n)).as("shingle"))
+      .select(Seq(col(as)) ++ (if (keepGram) Seq(col("shingle")) else Nil)
+        :+ xxhash64(col("shingle")).as("sh"): _*)
+
+  /** Each row's distinct `n`-gram count as (`as`, `sizeName`). */
+  private def gramCounts(df: DataFrame, textCol: String, idCol: String,
+                         n: Int, as: String, sizeName: String): DataFrame =
+    df.select(col(idCol).as(as), size(grams(textCol, n)).as(sizeName))
+
+  private def grams(textCol: String, n: Int): Column =
+    graft.functions.Shingles.distinctShingles(
+      TextAnalysis.tokens(col(textCol)), n)
+
+  /** The (test_id, train_id) pairs of a gram-hash join that share ≥
+    * `minShared` grams, with the `extra` aggregates, the test doc's gram
+    * count from `testSizes` and `overlap_frac` = shared / that count. */
+  private def overlapPairs(joined: DataFrame, testSizes: DataFrame,
+                           minShared: Int, extra: Column*): DataFrame =
+    joined.groupBy(col("test_id"), col("train_id"))
+      .agg(count(lit(1)).as("shared_ngrams"), extra: _*)
+      .filter(col("shared_ngrams") >= minShared)
+      .join(broadcast(testSizes), Seq("test_id"))
+      .withColumn("overlap_frac",
+        round(col("shared_ngrams").cast("double") / col("n_test_ngrams"), 6))
+
   /** Pairs (test_id, train_id) sharing ≥ `minShared` distinct word
     * n-grams, with `overlap_frac` = shared / |test doc's n-grams|.
     *
@@ -38,22 +69,11 @@ object Contamination {
   def ngramOverlap(train: DataFrame, test: DataFrame,
                    textCol: String, idCol: String,
                    n: Int = 3, minShared: Int = 2): DataFrame = {
-    def shingled(df: DataFrame, as: String): DataFrame =
-      df.select(col(idCol).as(as),
-        explode(graft.functions.Shingles.distinctShingles(
-          TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
-        .select(col(as), xxhash64(col("shingle")).as("sh"))
-    val testSizes = test.select(col(idCol).as("test_id"),
-      size(graft.functions.Shingles.distinctShingles(
-        TextAnalysis.tokens(col(textCol)), n)).as("n_test_ngrams"))
-    shingled(spread(train), "train_id")
-      .join(broadcast(shingled(test, "test_id")), Seq("sh"))
-      .groupBy(col("test_id"), col("train_id"))
-      .agg(count(lit(1)).as("shared_ngrams"))
-      .filter(col("shared_ngrams") >= minShared)
-      .join(broadcast(testSizes), Seq("test_id"))
-      .withColumn("overlap_frac",
-        round(col("shared_ngrams").cast("double") / col("n_test_ngrams"), 6))
+    val testSizes =
+      gramCounts(test, textCol, idCol, n, "test_id", "n_test_ngrams")
+    overlapPairs(shingled(spread(train), textCol, idCol, n, "train_id")
+      .join(broadcast(shingled(test, textCol, idCol, n, "test_id")),
+        Seq("sh")), testSizes, minShared)
   }
 
   /** [[ngramOverlap]] plus EVIDENCE: the matched n-grams themselves per
@@ -72,28 +92,13 @@ object Contamination {
                          n: Int = 3, minShared: Int = 2,
                          maxGrams: Int = 10): DataFrame = {
     require(maxGrams >= 1, s"maxGrams=$maxGrams")
-    val testSh = test.select(col(idCol).as("test_id"),
-      explode(graft.functions.Shingles.distinctShingles(
-        TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
-      .select(col("test_id"), col("shingle"),
-        xxhash64(col("shingle")).as("sh"))
-    val trainSh = spread(train).select(col(idCol).as("train_id"),
-      explode(graft.functions.Shingles.distinctShingles(
-        TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
-      .select(col("train_id"), xxhash64(col("shingle")).as("sh"))
-    val testSizes = test.select(col(idCol).as("test_id"),
-      size(graft.functions.Shingles.distinctShingles(
-        TextAnalysis.tokens(col(textCol)), n)).as("n_test_ngrams"))
-    trainSh
-      .join(broadcast(testSh), Seq("sh"))
-      .groupBy(col("test_id"), col("train_id"))
-      .agg(count(lit(1)).as("shared_ngrams"),
-        array_join(slice(array_sort(collect_set(col("shingle"))),
-          1, maxGrams), "|").as("evidence"))
-      .filter(col("shared_ngrams") >= minShared)
-      .join(broadcast(testSizes), Seq("test_id"))
-      .withColumn("overlap_frac",
-        round(col("shared_ngrams").cast("double") / col("n_test_ngrams"), 6))
+    val testSizes =
+      gramCounts(test, textCol, idCol, n, "test_id", "n_test_ngrams")
+    overlapPairs(shingled(spread(train), textCol, idCol, n, "train_id")
+      .join(broadcast(shingled(test, textCol, idCol, n, "test_id",
+        keepGram = true)), Seq("sh")), testSizes, minShared,
+      array_join(slice(array_sort(collect_set(col("shingle"))),
+        1, maxGrams), "|").as("evidence"))
   }
 
   /** Coverage of a TARGET (domain sample, eval suite, style exemplar) by
@@ -112,16 +117,11 @@ object Contamination {
   def targetCoverage(corpus: DataFrame, target: DataFrame,
                      textCol: String, idCol: String,
                      n: Int = 3): DataFrame = {
-    def shingled(df: DataFrame, as: String): DataFrame =
-      df.select(col(idCol).as(as),
-        explode(graft.functions.Shingles.distinctShingles(
-          TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
-        .select(col(as), xxhash64(col("shingle")).as("sh"))
-    val targetSizes = target.select(col(idCol).as("target_id"),
-      size(graft.functions.Shingles.distinctShingles(
-        TextAnalysis.tokens(col(textCol)), n)).as("n_target_ngrams"))
-    val matched = shingled(spread(corpus), "corpus_id")
-      .join(broadcast(shingled(target, "target_id")), Seq("sh"))
+    val targetSizes =
+      gramCounts(target, textCol, idCol, n, "target_id", "n_target_ngrams")
+    val matched = shingled(spread(corpus), textCol, idCol, n, "corpus_id")
+      .join(broadcast(shingled(target, textCol, idCol, n, "target_id")),
+        Seq("sh"))
       .select(col("target_id"), col("sh")).distinct()
       .groupBy(col("target_id"))
       .agg(count(lit(1)).as("covered_ngrams"))
@@ -210,12 +210,7 @@ object Contamination {
     require(maxTrainDf >= 1 || maxTrainDf == AutoTrainDf,
       s"maxTrainDf=$maxTrainDf must be >= 1 (or AutoTrainDf)")
     require(autoCapMeanDf >= 1, s"autoCapMeanDf=$autoCapMeanDf must be >= 1")
-    def shingled(df: DataFrame, as: String): DataFrame =
-      df.select(col(idCol).as(as),
-        explode(graft.functions.Shingles.distinctShingles(
-          TextAnalysis.tokens(col(textCol)), n)).as("shingle"))
-        .select(col(as), xxhash64(col("shingle")).as("sh"))
-    val testSh = shingled(test, "test_id")
+    val testSh = shingled(test, textCol, idCol, n, "test_id")
     val expected = math.max(1L, testSh.select("sh").distinct().count())
     // Build the Bloom with Spark's native BloomFilterAggregate (the same
     // expression runtime row-level filtering uses) and probe with the
@@ -232,22 +227,15 @@ object Contamination {
       .head().getAs[Array[Byte]](0)
     val mightContain = ColumnBridge.column(BloomFilterMightContain(
       Literal(bloomBin, BinaryType), ColumnBridge.expression(col("sh"))))
-    val testSizes = test.select(col(idCol).as("test_id"),
-      size(graft.functions.Shingles.distinctShingles(
-        TextAnalysis.tokens(col(textCol)), n)).as("n_test_ngrams"))
-    val survivors = shingled(spread(train), "train_id")
+    val testSizes =
+      gramCounts(test, textCol, idCol, n, "test_id", "n_test_ngrams")
+    val survivors = shingled(spread(train), textCol, idCol, n, "train_id")
       .filter(mightContain) // map-side kill of non-matches
     if (maxTrainDf == Long.MaxValue) {
       // cap off: the round-13 plan verbatim, plus the honest constant —
       // no df pass, no extra shuffle
-      survivors
-        .join(testSh, Seq("sh")) // exact confirm; planner picks the strategy
-        .groupBy(col("test_id"), col("train_id"))
-        .agg(count(lit(1)).as("shared_ngrams"))
-        .filter(col("shared_ngrams") >= minShared)
-        .join(broadcast(testSizes), Seq("test_id"))
-        .withColumn("overlap_frac",
-          round(col("shared_ngrams").cast("double") / col("n_test_ngrams"), 6))
+      // exact confirm; the planner picks the join strategy
+      overlapPairs(survivors.join(testSh, Seq("sh")), testSizes, minShared)
         .withColumn("n_capped_grams", lit(0L))
     } else {
       // df pre-pass on the survivors: a map-side-combined long count per
@@ -280,16 +268,9 @@ object Contamination {
         .groupBy(col("test_id"))
         .agg(count(lit(1)).as("n_capped_grams"))
         .localCheckpoint(eager = false) // tiny: ≤ |eval docs| rows, consumed twice
-      val pairs = survivors
-        .join(broadcast(hot), Seq("sh"), "left_anti")
-        .join(testSh, Seq("sh"))
-        .groupBy(col("test_id"), col("train_id"))
-        .agg(count(lit(1)).as("shared_ngrams"))
-        .filter(col("shared_ngrams") >= minShared)
-        .join(broadcast(testSizes), Seq("test_id"))
-        .withColumn("overlap_frac",
-          round(col("shared_ngrams").cast("double") / col("n_test_ngrams"),
-            6))
+      val pairs = overlapPairs(survivors
+          .join(broadcast(hot), Seq("sh"), "left_anti")
+          .join(testSh, Seq("sh")), testSizes, minShared)
         // lazy checkpoint: consumed by BOTH the count-attach and the
         // sentinel anti-join, whose differently-pruned subtrees would
         // otherwise run the confirm join twice; the frame is cap-bounded

@@ -486,11 +486,7 @@ object Corpus {
     * enumerates group pairs. Per-pair sizes join broadcast. */
   def sourceOverlap(df: DataFrame, textCol: String, sourceCol: String,
                     n: Int = 3): DataFrame = {
-    val sg = spread(df).select(col(sourceCol).as("source"),
-        explode(graft.functions.Shingles.distinctShingles(
-          TextAnalysis.tokens(col(textCol)), n)).as("gram"))
-      .select(col("source"), xxhash64(col("gram")).as("g"))
-      .distinct()
+    val sg = sourceGrams(df, textCol, sourceCol, n)
     val sizes = sg.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     val shared = sg.toDF("source_a", "g")
       .join(sg.toDF("source_b", "g"), Seq("g"))
@@ -504,6 +500,17 @@ object Corpus {
         (col("n_a") + col("n_b") - col("n_shared")).cast("double"), 6))
       .select("source_a", "source_b", "n_shared", "jaccard")
   }
+
+  /** The distinct (source, g) rows of [[sourceOverlap]] and
+    * [[sourceUnique]]: each word `n`-gram's xxhash64 `g` once per
+    * source that holds it. */
+  private def sourceGrams(df: DataFrame, textCol: String,
+                          sourceCol: String, n: Int): DataFrame =
+    spread(df).select(col(sourceCol).as("source"),
+        explode(graft.functions.Shingles.distinctShingles(
+          TextAnalysis.tokens(col(textCol)), n)).as("gram"))
+      .select(col("source"), xxhash64(col("gram")).as("g"))
+      .distinct()
 
   /** Marginal unique contribution per source: the fraction of each
     * source's distinct grams that appear in NO other source — the
@@ -523,11 +530,7 @@ object Corpus {
     * Output: (source, n_grams, n_unique, unique_ppm). */
   def sourceUnique(df: DataFrame, textCol: String, sourceCol: String,
                    n: Int = 3): DataFrame = {
-    val sg = spread(df).select(col(sourceCol).as("source"),
-        explode(graft.functions.Shingles.distinctShingles(
-          TextAnalysis.tokens(col(textCol)), n)).as("gram"))
-      .select(col("source"), xxhash64(col("gram")).as("g"))
-      .distinct()
+    val sg = sourceGrams(df, textCol, sourceCol, n)
     val holders = sg.groupBy(col("g"))
       .agg(count(lit(1)).as("__nsrc"))
     sg.join(holders, Seq("g"))
@@ -576,16 +579,10 @@ object Corpus {
           .as(s"__df_$i")
       }
     val stats = base.agg(statAggs.head, statAggs.tail: _*)
-    val n = col("__n_docs").cast("double")
-    val avgdl = col("__total_len").cast("double") / n
     val contribs = terms.zipWithIndex.map { case (t, i) =>
-      val tf = size(filter(col("__toks"), x => x === lit(t)))
-        .cast("double")
-      val dfT = col(s"__df_$i").cast("double")
-      val idfT = log((n - dfT + 0.5) / (dfT + 0.5) + 1.0)
-      val denom = tf + lit(k1) *
-        (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl)
-      round(idfT * tf * lit(k1 + 1.0) / denom, 9).cast("decimal(28,9)")
+      bm25Term(col(s"__df_$i"),
+        size(filter(col("__toks"), x => x === lit(t))).cast("double"),
+        k1, b)
     }
     base.crossJoin(broadcast(stats))
       .withColumn("__s", contribs.reduce(_ + _))
@@ -594,6 +591,26 @@ object Corpus {
       .orderBy(col("bm25").desc, col(idCol))
       .limit(k)
       .select(col(idCol), col("dl"), col("bm25"))
+  }
+
+  /** The robust BM25 idf ln((N − df + 0.5) / (df + 0.5) + 1) of a term
+    * with document frequency `df` among `__n_docs` documents. */
+  private def bm25Idf(df: Column): Column = {
+    val n = col("__n_docs").cast("double")
+    log((n - df.cast("double") + 0.5) / (df.cast("double") + 0.5) + 1.0)
+  }
+
+  /** One term's BM25 contribution at term frequency `tf` (a double) in a
+    * document of length `dl`, over the `__n_docs`/`__total_len` corpus
+    * stats: a fixed tree of correctly-rounded double ops, fixed at 9 dp.
+    * The twin of `SearchRows.bm25TermSql`. */
+  private def bm25Term(df: Column, tf: Column, k1: Double,
+                       b: Double): Column = {
+    val avgdl = col("__total_len").cast("double") /
+      col("__n_docs").cast("double")
+    val denom = tf + lit(k1) *
+      (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl)
+    round(bm25Idf(df) * tf * lit(k1 + 1.0) / denom, 9).cast("decimal(28,9)")
   }
 
   /** [[bm25TopK]] with the query as a FRAME of weighted terms instead of
@@ -632,17 +649,9 @@ object Corpus {
       .agg(count(lit(1)).as("__tf"))
     val dfT = broadcast(matched.select(col(idCol), col("term")).distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("__df")))
-    val n = col("__n_docs").cast("double")
-    val avgdl = col("__total_len").cast("double") / n
-    val tfD = col("__tf").cast("double")
-    val idfT = log((n - col("__df").cast("double") + 0.5) /
-      (col("__df").cast("double") + 0.5) + 1.0)
-    val denom = tfD + lit(k1) *
-      (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / avgdl)
     tf.join(dfT, Seq("term")).crossJoin(stats)
       .withColumn("__c",
-        round(idfT * tfD * lit(k1 + 1.0) / denom, 9)
-          .cast("decimal(28,9)") * col("w"))
+        bm25Term(col("__df"), col("__tf").cast("double"), k1, b) * col("w"))
       .groupBy(col(idCol), col("dl"))
       .agg(sum(col("__c")).as("__s"))
       .withColumn(scoreName, round(col("__s").cast("double"), 6))
@@ -704,10 +713,8 @@ object Corpus {
       .join(broadcast(fbTf.select("term")), Seq("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__df"))
     val nDocs = broadcast(base.agg(count(lit(1)).as("__n_docs")))
-    val escore = round(
-      log((col("__n_docs").cast("double") - col("__df").cast("double")
-        + 0.5) / (col("__df").cast("double") + 0.5) + 1.0) *
-        col("__fbtf").cast("double"), 9).cast("decimal(28,9)")
+    val escore = round(bm25Idf(col("__df")) * col("__fbtf").cast("double"),
+      9).cast("decimal(28,9)")
     val picked = fbTf.join(broadcast(candDf), Seq("term")).crossJoin(nDocs)
       .withColumn("__es", escore)
       .orderBy(col("__es").desc, col("term")).limit(expandK)
@@ -756,15 +763,27 @@ object Corpus {
       .orderBy(col("cnt").desc, col("term")).limit(topN)
     val ranked = top.withColumn("rank",
       row_number().over(Window.orderBy(col("cnt").desc, col("term"))))
+    logLogFit(ranked, col("rank"), col("cnt"),
+      Seq("n_terms", "zipf_slope", "zipf_intercept", "zipf_r2"))
+  }
+
+  /** The least-squares fit of ln `y` on ln `x` over the rows of `pts`,
+    * shared by [[zipfFit]] and [[heapsFit]] (the DuckDB twin is
+    * `Shared.logLogFitSql`): ln points 9-dp-fixed as decimals, products
+    * re-fixed at 9 dp, exact decimal moment sums cast to double once,
+    * then the guarded closed-form tree. One row, named by `names` =
+    * (count, slope, intercept, r²). */
+  private def logLogFit(pts: DataFrame, x: Column, y: Column,
+                        names: Seq[String]): DataFrame = {
+    val Seq(nName, slope, intercept, r2) = names
     def fix9(c: Column): Column = round(c, 9).cast("decimal(12,9)")
-    val pt = ranked.select(
-      fix9(log(col("rank").cast("double"))).as("x"),
-      fix9(log(col("cnt").cast("double"))).as("y"))
-    val sums = pt.agg(count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(round(col("x") * col("y"), 9).cast("decimal(14,9)")).as("sxy"),
-      sum(round(col("x") * col("x"), 9).cast("decimal(14,9)")).as("sxx"),
-      sum(round(col("y") * col("y"), 9).cast("decimal(14,9)")).as("syy"))
+    val sums = pts.select(fix9(log(x.cast("double"))).as("x"),
+        fix9(log(y.cast("double"))).as("y"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+        sum(round(col("x") * col("y"), 9).cast("decimal(14,9)")).as("sxy"),
+        sum(round(col("x") * col("x"), 9).cast("decimal(14,9)")).as("sxx"),
+        sum(round(col("y") * col("y"), 9).cast("decimal(14,9)")).as("syy"))
     val n = col("n").cast("double")
     val sx = col("sx").cast("double"); val sy = col("sy").cast("double")
     val sxy = col("sxy").cast("double")
@@ -773,12 +792,12 @@ object Corpus {
     val cov = n * sxy - sx * sy
     val varx = n * sxx - sx * sx
     val vary = n * syy - sy * sy
-    sums.select(col("n").as("n_terms"),
-      when(varx =!= 0.0, round(cov / varx, 6)).as("zipf_slope"),
+    sums.select(col("n").as(nName),
+      when(varx =!= 0.0, round(cov / varx, 6)).as(slope),
       when(varx =!= 0.0,
-        round((sy - cov / varx * sx) / n, 6)).as("zipf_intercept"),
+        round((sy - cov / varx * sx) / n, 6)).as(intercept),
       when(varx * vary =!= 0.0,
-        round(cov * cov / (varx * vary), 6)).as("zipf_r2"))
+        round(cov * cov / (varx * vary), 6)).as(r2))
   }
 
   /** Heaps'-law fit of vocabulary growth: least squares of
@@ -800,10 +819,8 @@ object Corpus {
     * each bucket. New-type counts come from the ngram_novelty
     * first-occurrence shape (min doc per token).
     *
-    * Determinism: counts are exact longs; ln points are 9-dp-fixed
-    * decimals, products re-fixed at 9 dp, sums exact decimals cast to
-    * double once, then [[zipfFit]]'s guarded closed-form tree verbatim.
-    * Output: one row (n_points, heaps_beta, heaps_intercept, heaps_r2)
+    * Determinism: counts are exact longs, then [[zipfFit]]'s
+    * [[logLogFit]]. Output: one row (n_points, heaps_beta, heaps_intercept, heaps_r2)
     * — K = e^intercept, left to the caller (no libm exp in the
     * contract). */
   def heapsFit(df: DataFrame, textCol: String, idCol: String,
@@ -832,32 +849,12 @@ object Corpus {
       .select(col("bkt"), col("otc"), col("ont"))
     val wD = Window.partitionBy(col("bkt")).orderBy(col("doc"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    def fix9(c: Column): Column = round(c, 9).cast("decimal(12,9)")
     val pts = docs.join(broadcast(offsets), Seq("bkt"))
       .withColumn("cumT", col("otc") + sum(col("tc")).over(wD))
       .withColumn("cumV", col("ont") + sum(col("nt")).over(wD))
       .filter(col("cumT") > 0 && col("cumV") > 0)
-      .select(fix9(log(col("cumT").cast("double"))).as("x"),
-        fix9(log(col("cumV").cast("double"))).as("y"))
-    val sums = pts.agg(count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(round(col("x") * col("y"), 9).cast("decimal(14,9)")).as("sxy"),
-      sum(round(col("x") * col("x"), 9).cast("decimal(14,9)")).as("sxx"),
-      sum(round(col("y") * col("y"), 9).cast("decimal(14,9)")).as("syy"))
-    val n = col("n").cast("double")
-    val sx = col("sx").cast("double"); val sy = col("sy").cast("double")
-    val sxy = col("sxy").cast("double")
-    val sxx = col("sxx").cast("double")
-    val syy = col("syy").cast("double")
-    val cov = n * sxy - sx * sy
-    val varx = n * sxx - sx * sx
-    val vary = n * syy - sy * sy
-    sums.select(col("n").as("n_points"),
-      when(varx =!= 0.0, round(cov / varx, 6)).as("heaps_beta"),
-      when(varx =!= 0.0,
-        round((sy - cov / varx * sx) / n, 6)).as("heaps_intercept"),
-      when(varx * vary =!= 0.0,
-        round(cov * cov / (varx * vary), 6)).as("heaps_r2"))
+    logLogFit(pts, col("cumT"), col("cumV"),
+      Seq("n_points", "heaps_beta", "heaps_intercept", "heaps_r2"))
   }
 
   /** Sketch-based per-source corpus profile: HyperLogLog vocabulary

@@ -684,41 +684,57 @@ object Dedup {
     * the floor for any global sub-document dedup. */
   def chunkDedup(df: DataFrame, textCol: String, idCol: String,
                  w: Int): DataFrame = {
-    val chunks = chunkStream(df, textCol, idCol, w)
     val firstW = Window.partitionBy(md5(col("chunk")))
       .orderBy(col(idCol), col("chunk_idx"))
-    chunks
+    rebuild(chunkStream(df, textCol, idCol, w)
       .withColumn("__rn", row_number().over(firstW))
-      .filter(col("__rn") === 1)
-      .groupBy(col(idCol))
-      .agg(
-        first(col("n_chunks")).as("n_chunks"),
-        count(lit(1)).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("chunk_idx"), col("chunk")))),
-          s => s.getField("chunk")), " ").as("clean_text"))
+      .filter(col("__rn") === 1), idCol)
   }
 
-  /** Fixed-width word chunking shared by [[chunkDedup]] and
-    * [[chunkDupStats]]: one exploded row per (document, chunk) with the
-    * document's total chunk count. Map-side only — explode + slice on the
-    * token array, no shuffle. */
-  private def chunkStream(df: DataFrame, textCol: String, idCol: String,
+  /** The documents with at least one token as (id, `__toks`, n_chunks):
+    * the prefix of the `w`-token chunk family, map-side only. The twin of
+    * the DuckDB `Shared.chunksSql`. */
+  private def chunkedDocs(df: DataFrame, textCol: String, idCol: String,
                           w: Int): DataFrame = {
     require(w >= 1, s"chunk width $w must be >= 1")
-    val toks = TextAnalysis.tokens(col(textCol))
     spread(df)
-      .select(col(idCol), toks.as("__toks"))
+      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 1) // sequence(0,-1) would run backwards
       .withColumn("n_chunks",
         ceil(size(col("__toks")) / lit(w.toDouble)).cast("long"))
+  }
+
+  /** Fixed-width word chunking shared by the chunk family: one exploded
+    * row per (document, chunk) with the document's total chunk count.
+    * Map-side only — explode + slice on the token array, no shuffle. */
+  private def chunkStream(df: DataFrame, textCol: String, idCol: String,
+                          w: Int): DataFrame =
+    chunkedDocs(df, textCol, idCol, w)
       .withColumn("chunk_idx",
         explode(sequence(lit(0L), col("n_chunks") - 1)))
       .withColumn("chunk", array_join(
         slice(col("__toks"), (col("chunk_idx") * w + 1).cast("int"), lit(w)),
         " "))
       .drop("__toks")
-  }
+
+  /** The chunk family's rebuild: the surviving chunk rows reassembled
+    * per document in chunk order as (id, n_chunks, n_kept, clean_text) —
+    * the twin of the DuckDB `Shared.rebuildSql`. */
+  private def rebuild(kept: DataFrame, idCol: String): DataFrame =
+    kept.groupBy(col(idCol))
+      .agg(
+        first(col("n_chunks")).as("n_chunks"),
+        count(lit(1)).as("n_kept"),
+        array_join(transform(
+          array_sort(collect_list(struct(col("chunk_idx"), col("chunk")))),
+          s => s.getField("chunk")), " ").as("clean_text"))
+
+  /** `rows` with `__mult`, the corpus-wide count of its hash `__h`: a
+    * map-side-combining count per hash, re-attached with a SHUFFLE_HASH
+    * join so a hot hash streams through the probe side unsorted. */
+  private def withMult(rows: DataFrame): DataFrame =
+    rows.join(rows.groupBy(col("__h")).agg(count(lit(1)).as("__mult"))
+      .hint("SHUFFLE_HASH"), "__h")
 
   /** WITHIN-document repetition removal — the map-only member of the
     * chunk family: drop repeats of a chunk inside the SAME document
@@ -735,14 +751,8 @@ object Dedup {
     * ops; a document is never dropped (its first chunk always survives).
     */
   def dedupWithinDoc(df: DataFrame, textCol: String, idCol: String,
-                     w: Int): DataFrame = {
-    require(w >= 1, s"chunk width $w must be >= 1")
-    val toks = TextAnalysis.tokens(col(textCol))
-    spread(df)
-      .select(col(idCol), toks.as("__toks"))
-      .filter(size(col("__toks")) >= 1) // sequence(0,-1) would run backwards
-      .withColumn("n_chunks",
-        ceil(size(col("__toks")) / lit(w.toDouble)).cast("long"))
+                     w: Int): DataFrame =
+    chunkedDocs(df, textCol, idCol, w)
       .withColumn("__chunks", transform(
         sequence(lit(0L), col("n_chunks") - 1),
         i => array_join(
@@ -751,7 +761,6 @@ object Dedup {
       .select(col(idCol), col("n_chunks"),
         size(col("__kept")).cast("long").as("n_kept"),
         array_join(col("__kept"), " ").as("clean_text"))
-  }
 
   /** Boilerplate removal with document rebuild: drop EVERY occurrence of
     * any chunk whose corpus-wide multiplicity reaches `maxMult` (nav
@@ -772,19 +781,9 @@ object Dedup {
                     w: Int, maxMult: Long): DataFrame = {
     require(maxMult >= 2, s"maxMult=$maxMult must be >= 2 " +
       "(1 would drop every chunk)")
-    val chunks = chunkStream(df, textCol, idCol, w)
-      .withColumn("__h", md5(col("chunk")))
-    val mult = chunks.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__mult"))
-    chunks.join(mult.hint("SHUFFLE_HASH"), "__h")
-      .filter(col("__mult") < maxMult)
-      .groupBy(col(idCol))
-      .agg(
-        first(col("n_chunks")).as("n_chunks"),
-        count(lit(1)).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("chunk_idx"), col("chunk")))),
-          s => s.getField("chunk")), " ").as("clean_text"))
+    rebuild(withMult(chunkStream(df, textCol, idCol, w)
+      .withColumn("__h", md5(col("chunk"))))
+      .filter(col("__mult") < maxMult), idCol)
   }
 
   /** Per-document duplicated-content scoring (the RefinedWeb/MassiveText
@@ -820,11 +819,8 @@ object Dedup {
     * for any corpus-wide multiplicity computation. */
   def chunkDupStats(df: DataFrame, textCol: String, idCol: String,
                     w: Int): DataFrame = {
-    val chunks = chunkStream(df, textCol, idCol, w)
-      .select(col(idCol), col("n_chunks"), md5(col("chunk")).as("__h"))
-    val mult = chunks.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__mult"))
-    chunks.join(mult.hint("SHUFFLE_HASH"), "__h")
+    withMult(chunkStream(df, textCol, idCol, w)
+      .select(col(idCol), col("n_chunks"), md5(col("chunk")).as("__h")))
       .groupBy(col(idCol))
       .agg(
         first(col("n_chunks")).as("n_chunks"),
@@ -879,12 +875,9 @@ object Dedup {
         .as("__s"))
       .select(col(idCol), col("__s.pos").as("__pos"),
         md5(col("__s.sh")).as("__h"))
-    val mult = shingled.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__mult"))
-    val dup = shingled.join(mult.hint("SHUFFLE_HASH"), "__h")
+    withMult(shingled)
       .filter(col("__mult") >= 2L)
       .select(col(idCol), col("__pos"))
-    dup
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("__pos"))))
       .withColumn("__grp", col("__pos") - col("__rn"))

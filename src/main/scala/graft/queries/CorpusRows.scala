@@ -20,6 +20,31 @@ object CorpusRows {
     * languages; declaring them skips pivot's value-discovery job). */
   private val PivotLangs = Seq("de", "en", "es", "fr", "zh")
 
+  /** The shared HLL estimate numerator, as a literal both engines parse
+    * to the same double. */
+  private val EstC = java.lang.Double.toString(graft.llm.Sketches.EstNumerator)
+
+  private val One = "CAST(1 AS BIGINT)"
+
+  /** The exact-integer HLL register fold of [[graft.llm.Sketches]] over
+    * `from(source, h)` (h an md5 hex): `reg(source, idx, m, c)` and
+    * `den(source, s_int, n_reg, tokens)` — the integer harmonic
+    * denominator, the filled-register count and the summed occurrences.
+    * The idx/rho derivation is the engine's own SQL string. */
+  private def hllCtes(from: String): String =
+    s"""r0 AS (SELECT source, ${graft.llm.Sketches.IdxSql} AS idx,
+       |              ${graft.llm.Sketches.RhoSql} AS rho
+       |       FROM $from),
+       |reg AS (SELECT source, idx, max(rho) AS m, count(*) AS c
+       |        FROM r0 GROUP BY 1, 2),
+       |den AS (SELECT source,
+       |          SUM(CAST($One << (57 - m) AS HUGEINT))
+       |            + (256 - count(*)) * CAST($One << 57 AS HUGEINT)
+       |            AS s_int,
+       |          count(*) AS n_reg,
+       |          SUM(c) AS tokens
+       |        FROM reg GROUP BY 1)""".stripMargin
+
   val rows: Seq[Row] = Seq(
     // --- vocabulary head with cumulative corpus coverage ------------------
     Row("vocab_topk", (s, d) =>
@@ -87,25 +112,10 @@ object CorpusRows {
       // fold. vocab_est takes the standard linear-counting branch when
       // the raw estimate ≤ 2.5·m (ln on identical integer-derived
       // operands — replayable)
-      {
-      val c = java.lang.Double.toString(graft.llm.Sketches.EstNumerator)
-      val one = "CAST(1 AS BIGINT)"
-      s"""WITH tok AS (
-         |  SELECT source, unnest(string_split_regex(text, '\\s+')) AS term
+      s"""WITH h0 AS (
+         |  SELECT source, md5(unnest(${tokensSql()})) AS h
          |  FROM documents),
-         |h0 AS (SELECT source, md5(term) AS h FROM tok),
-         |r0 AS (SELECT source, ${graft.llm.Sketches.IdxSql} AS idx,
-         |              ${graft.llm.Sketches.RhoSql} AS rho
-         |       FROM h0),
-         |reg AS (SELECT source, idx, max(rho) AS m, count(*) AS c
-         |        FROM r0 GROUP BY 1, 2),
-         |den AS (SELECT source,
-         |          SUM(CAST($one << (57 - m) AS HUGEINT))
-         |            + (256 - count(*)) * CAST($one << 57 AS HUGEINT)
-         |            AS s_int,
-         |          count(*) AS n_reg,
-         |          SUM(c) AS tokens
-         |        FROM reg GROUP BY 1),
+         |${hllCtes("h0")},
          |dc AS (SELECT source, count(*) AS docs FROM documents GROUP BY 1),
          |srcq AS (
          |  SELECT source,
@@ -145,15 +155,14 @@ object CorpusRows {
          |      FROM est GROUP BY 1)
          |SELECT dc.source, CAST(dc.docs AS BIGINT) AS docs,
          |       CAST(den.tokens AS BIGINT) AS tokens,
-         |       CASE WHEN $c / CAST(den.s_int AS DOUBLE) <= 640.0
+         |       CASE WHEN $EstC / CAST(den.s_int AS DOUBLE) <= 640.0
          |                 AND den.n_reg < 256
          |            THEN round(256.0 *
          |                   ln(256.0 / CAST(256 - den.n_reg AS DOUBLE)), 3)
-         |            ELSE round($c / CAST(den.s_int AS DOUBLE), 3)
+         |            ELSE round($EstC / CAST(den.s_int AS DOUBLE), 3)
          |            END AS vocab_est,
          |       q.len_p50, q.len_p90, q.len_p99
-         |FROM dc JOIN den USING (source) JOIN q USING (source)""".stripMargin
-    }),
+         |FROM dc JOIN den USING (source) JOIN q USING (source)""".stripMargin),
 
     // --- corpus stats: top-5 TF-IDF terms per document ---------------------
     // Two hash aggregations + one vocab join; rank filter is
@@ -218,7 +227,7 @@ object CorpusRows {
       // (w1,w2,w3), so plain count(*) per suffix IS the distinct-prefix
       // count); the probability tree mirrors Corpus.knTrigramNll verbatim
       // (left-associative, greatest() discount floors, one ln, 9-dp fix)
-      s"""WITH ws AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w
+      s"""WITH ws AS (SELECT doc_id, ${tokensSql()} AS w
          |            FROM documents),
          |tgx AS (SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3
          |        FROM (SELECT doc_id, w,
@@ -320,47 +329,18 @@ object CorpusRows {
     // ln(cnt) ~ ln(rank) — corpus naturalness diagnostic ----------------
     Row("corpus_zipf", (s, d) =>
       Corpus.zipfFit(Tables.documents(s, d), "text", topN = 100),
-      // mirror Corpus.zipfFit: 9-dp-fixed log points, exact decimal
-      // moment sums, one double conversion, identical least-squares tree
-      """WITH tok AS (SELECT unnest(string_split_regex(text, '\s+')) AS term
-        |             FROM documents),
-        |tc AS (SELECT term, count(*) AS cnt FROM tok GROUP BY 1),
-        |top AS (SELECT term, cnt FROM tc
-        |        ORDER BY cnt DESC, term LIMIT 100),
-        |r AS (SELECT cnt,
-        |             row_number() OVER (ORDER BY cnt DESC, term) AS rank
-        |      FROM top),
-        |p AS (SELECT
-        |        CAST(round(ln(CAST(rank AS DOUBLE)), 9)
-        |             AS DECIMAL(12,9)) AS x,
-        |        CAST(round(ln(CAST(cnt AS DOUBLE)), 9)
-        |             AS DECIMAL(12,9)) AS y
-        |      FROM r),
-        |s AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |             sum(CAST(round(x * y, 9) AS DECIMAL(14,9))) AS sxy,
-        |             sum(CAST(round(x * x, 9) AS DECIMAL(14,9))) AS sxx,
-        |             sum(CAST(round(y * y, 9) AS DECIMAL(14,9))) AS syy
-        |      FROM p),
-        |d AS (SELECT CAST(n AS BIGINT) AS n_terms,
-        |             CAST(n AS DOUBLE) AS nd,
-        |             CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |             CAST(sxy AS DOUBLE) AS sxyd,
-        |             CAST(sxx AS DOUBLE) AS sxxd,
-        |             CAST(syy AS DOUBLE) AS syyd
-        |      FROM s)
-        |SELECT n_terms,
-        |  CASE WHEN nd * sxxd - sxd * sxd <> 0.0 THEN
-        |    round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
-        |  END AS zipf_slope,
-        |  CASE WHEN nd * sxxd - sxd * sxd <> 0.0 THEN
-        |    round((syd - (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)
-        |           * sxd) / nd, 6) END AS zipf_intercept,
-        |  CASE WHEN (nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)
-        |            <> 0.0 THEN
-        |    round((nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)
-        |          / ((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)), 6)
-        |  END AS zipf_r2
-        |FROM d""".stripMargin),
+      // mirror Corpus.zipfFit: the log-log fit over the top-100 ranks
+      s"""WITH tok AS (SELECT unnest(${tokensSql()}) AS term
+         |             FROM documents),
+         |tc AS (SELECT term, count(*) AS cnt FROM tok GROUP BY 1),
+         |top AS (SELECT term, cnt FROM tc
+         |        ORDER BY cnt DESC, term LIMIT 100),
+         |r AS (SELECT cnt,
+         |             row_number() OVER (ORDER BY cnt DESC, term) AS rank
+         |      FROM top),
+         |${logLogFitSql("r", "rank", "cnt",
+              Seq("n_terms", "zipf_slope", "zipf_intercept", "zipf_r2"))}"""
+        .stripMargin),
 
     // --- corpus-wide boilerplate detector: top-50 word-3-gram document
     // frequencies (distinct per doc via the codegen Shingles kernel) ----
@@ -412,8 +392,8 @@ object CorpusRows {
       // ranks/counts — the tokenEntropy/adamic ln discipline), HUGEINT
       // moment sums ≡ Spark's DECIMAL algebra value-for-value, one
       // shared IEEE tree at the end; the 1e9 scale cancels in the slope
-      """WITH tf AS (
-        |  SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
+      s"""WITH tf AS (
+        |  SELECT source, unnest(${tokensSql()}) AS tok
         |  FROM documents),
         |cnt AS (SELECT source, tok, count(*) AS c FROM tf GROUP BY 1, 2),
         |rk AS (SELECT source, tok, c,
@@ -462,8 +442,8 @@ object CorpusRows {
         minCount = 5L, k = 50),
       // mirror Corpus.collocationsPmi's exact double tree:
       // ((c12·N1)/(c1·c2))·(N1/N2), one ln, 6-dp round
-      """WITH ws AS (
-        |  SELECT string_split_regex(text, '\s+') AS w FROM documents),
+      s"""WITH ws AS (
+        |  SELECT ${tokensSql()} AS w FROM documents),
         |uni AS (SELECT unnest(w) AS tok FROM ws),
         |uc AS (SELECT tok, count(*) AS c FROM uni GROUP BY 1),
         |n1t AS (SELECT CAST(sum(c) AS BIGINT) AS n1 FROM uc),
@@ -539,7 +519,7 @@ object CorpusRows {
       // its 64-bit hash on the engine side (the documented collision
       // trade); per-term contributions fixed at 9 dp and summed as
       // exact decimals on both sides
-      """WITH tok AS (SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
+      s"""WITH tok AS (SELECT source, unnest(${tokensSql()}) AS tok
         |             FROM documents),
         |ps AS (SELECT source, tok, count(*) AS c_st FROM tok GROUP BY 1, 2),
         |pt AS (SELECT tok, CAST(sum(c_st) AS BIGINT) AS c_t FROM ps GROUP BY 1),
@@ -611,36 +591,26 @@ object CorpusRows {
       // embedded verbatim; everything is integer until the single
       // estimate division by the shared numerator literal
       {
-      val c = java.lang.Double.toString(graft.llm.Sketches.EstNumerator)
-      val one = "CAST(1 AS BIGINT)"
-      def estOf(s: String) = s"round($c / CAST($s AS DOUBLE), 3)"
+      def estOf(s: String) = s"round($EstC / CAST($s AS DOUBLE), 3)"
       s"""WITH $shinglesCte,
          |sg AS (SELECT DISTINCT d.source, md5(s.shingle) AS h
          |       FROM sh s JOIN documents d USING (doc_id)),
-         |r0 AS (SELECT source, ${graft.llm.Sketches.IdxSql} AS idx,
-         |              ${graft.llm.Sketches.RhoSql} AS rho
-         |       FROM sg),
-         |reg AS (SELECT source, idx, max(rho) AS m FROM r0 GROUP BY 1, 2),
-         |den AS (SELECT source,
-         |          SUM(CAST($one << (57 - m) AS HUGEINT))
-         |            + (256 - count(*)) * CAST($one << 57 AS HUGEINT)
-         |            AS s_int
-         |        FROM reg GROUP BY 1),
+         |${hllCtes("sg")},
          |shared AS (SELECT a.source AS source_a, b.source AS source_b,
-         |             SUM(CAST($one << (57 - greatest(a.m, b.m)) AS HUGEINT)
-         |                 - ($one << (57 - a.m))
-         |                 - ($one << (57 - b.m))
-         |                 + ($one << 57)) AS adj
+         |             SUM(CAST($One << (57 - greatest(a.m, b.m)) AS HUGEINT)
+         |                 - ($One << (57 - a.m))
+         |                 - ($One << (57 - b.m))
+         |                 + ($One << 57)) AS adj
          |           FROM reg a JOIN reg b
          |             ON a.idx = b.idx AND a.source < b.source
          |           GROUP BY 1, 2)
          |SELECT source_a, source_b,
          |       ${estOf("da.s_int")} AS est_a,
          |       ${estOf("db.s_int")} AS est_b,
-         |       ${estOf("da.s_int + db.s_int + adj - 256 * CAST(" + one + " << 57 AS HUGEINT)")}
+         |       ${estOf("da.s_int + db.s_int + adj - 256 * CAST(" + One + " << 57 AS HUGEINT)")}
          |         AS est_union,
          |       round(${estOf("da.s_int")} + ${estOf("db.s_int")}
-         |             - ${estOf("da.s_int + db.s_int + adj - 256 * CAST(" + one + " << 57 AS HUGEINT)")},
+         |             - ${estOf("da.s_int + db.s_int + adj - 256 * CAST(" + One + " << 57 AS HUGEINT)")},
          |             3) AS overlap_est
          |FROM shared
          |JOIN den da ON da.source = source_a
@@ -654,9 +624,9 @@ object CorpusRows {
     // companion: "how much new vocabulary does the next TB buy?" --------
     Row("corpus_heaps", (s, d) =>
       Corpus.heapsFit(Tables.documents(s, d), "text", "doc_id"),
-      // the corpus_zipf fit tree verbatim over Heaps points: cumulative
-      // tokens/types in doc order (one exact window at oracle SF — the
-      // engine's two-phase prefix sum produces the identical sums)
+      // the log-log fit over Heaps points: cumulative tokens/types in
+      // doc order (one exact window at oracle SF — the engine's
+      // two-phase prefix sum produces the identical sums)
       s"""WITH $toksCte,
         |pd AS (SELECT doc_id AS doc, CAST(len(toks) AS BIGINT) AS tc
         |       FROM t),
@@ -671,36 +641,8 @@ object CorpusRows {
         |        FROM c
         |        WINDOW w AS (ORDER BY doc ROWS BETWEEN UNBOUNDED
         |                     PRECEDING AND CURRENT ROW)),
-        |p AS (SELECT
-        |        CAST(round(ln(CAST(cumt AS DOUBLE)), 9)
-        |             AS DECIMAL(12,9)) AS x,
-        |        CAST(round(ln(CAST(cumv AS DOUBLE)), 9)
-        |             AS DECIMAL(12,9)) AS y
-        |      FROM cum WHERE cumt > 0 AND cumv > 0),
-        |s AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |             sum(CAST(round(x * y, 9) AS DECIMAL(14,9))) AS sxy,
-        |             sum(CAST(round(x * x, 9) AS DECIMAL(14,9))) AS sxx,
-        |             sum(CAST(round(y * y, 9) AS DECIMAL(14,9))) AS syy
-        |      FROM p),
-        |d AS (SELECT CAST(n AS BIGINT) AS n_points,
-        |             CAST(n AS DOUBLE) AS nd,
-        |             CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |             CAST(sxy AS DOUBLE) AS sxyd,
-        |             CAST(sxx AS DOUBLE) AS sxxd,
-        |             CAST(syy AS DOUBLE) AS syyd
-        |      FROM s)
-        |SELECT n_points,
-        |  CASE WHEN nd * sxxd - sxd * sxd <> 0.0 THEN
-        |    round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
-        |  END AS heaps_beta,
-        |  CASE WHEN nd * sxxd - sxd * sxd <> 0.0 THEN
-        |    round((syd - (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)
-        |           * sxd) / nd, 6) END AS heaps_intercept,
-        |  CASE WHEN (nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)
-        |            <> 0.0 THEN
-        |    round((nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)
-        |          / ((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)), 6)
-        |  END AS heaps_r2
-        |FROM d""".stripMargin)
+        |${logLogFitSql("cum WHERE cumt > 0 AND cumv > 0", "cumt", "cumv",
+             Seq("n_points", "heaps_beta", "heaps_intercept", "heaps_r2"))}"""
+        .stripMargin)
   )
 }

@@ -14,11 +14,15 @@ object DedupRows {
   import PipelineQueries._
   import Shared._
 
-  /** SQL fragment: SimHash signature + chunk-blocked pairing from a CTE
-    * `toks(doc_id, tok)` — the shared tail of every SimHash-family oracle
-    * (keep in sync with [[graft.functions.SimHashUtil]] and
-    * [[Dedup.simhashPairs]]). Expects to be appended after `WITH …,`. */
-  private val simhashPairsFromToksSql =
+  /** The word tokens `toks(doc_id, tok)` the SimHash oracles sign. */
+  private val wordToksCte =
+    s"""toks AS (
+       |  SELECT doc_id, unnest(${tokensSql()}) AS tok
+       |  FROM documents)""".stripMargin
+
+  /** SQL fragment: the 64-bit SimHash `sig(doc_id, bits)` of a CTE
+    * `toks(doc_id, tok)` — the twin of [[graft.functions.SimHashUtil]]. */
+  private val simhashSigCtes =
     """tf AS (
       |  SELECT doc_id, tok, count(*) AS cnt, md5(tok) AS h
       |  FROM toks GROUP BY 1, 2),
@@ -35,7 +39,12 @@ object DedupRows {
       |  SELECT doc_id,
       |         string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, ''
       |                    ORDER BY pos) AS bits
-      |  FROM bits GROUP BY doc_id),
+      |  FROM bits GROUP BY doc_id)""".stripMargin
+
+  /** [[simhashSigCtes]] then the chunk-blocked pairing at hamming ≤ 3 —
+    * the twin of [[Dedup.simhashPairs]]. Ends the query. */
+  private val simhashPairsSql =
+    simhashSigCtes + """,
       |chunks AS (
       |  SELECT doc_id, bits, i AS chunk,
       |         substr(bits, i * 16 + 1, 16) AS cv
@@ -81,6 +90,162 @@ object DedupRows {
       Dedup.overlapCandidates(Tables.documents(s, d), "text", "doc_id",
         n = 3, maxDocsPerShingle = 50).localCheckpoint())
 
+  /** The MinHash-LSH candidate pairs `pairs(id_a, id_b)` over
+    * [[minhashBandsCte]], the shingle CTEs before them. */
+  private val lshPairsCtes =
+    s"""$shinglesCte,
+       |$minhashBandsCte,
+       |pairs AS (
+       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.band_hash = b.band_hash
+       |   AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** The connected components of [[lshPairsCtes]] as `reach(id, r)`:
+    * each pair endpoint with every id it reaches. Needs `WITH
+    * RECURSIVE`. */
+  private val reachCtes =
+    s"""$lshPairsCtes,
+       |edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM pairs
+       |  UNION SELECT id_b, id_a FROM pairs),
+       |reach(id, r) AS (
+       |  SELECT src, src FROM edges
+       |  UNION
+       |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)""".stripMargin
+
+  /** The exact shingle-overlap candidates of [[Dedup.overlapCandidates]]
+    * as `shared(id_a, id_b, inter)` (shingles in more than 50 docs
+    * dropped), beside each doc's shingle count `sizes(doc_id, n_sh)`. */
+  private val overlapCtes =
+    s"""$shinglesCte,
+       |kept AS (
+       |  SELECT doc_id, shingle FROM sh
+       |  QUALIFY count(*) OVER (PARTITION BY shingle) <= 50),
+       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+       |shared AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+       |  FROM kept a JOIN kept b
+       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The gate over [[overlapCtes]] of [[Dedup.jaccardFrom]] and
+    * [[Dedup.containmentFrom]]: the pairs whose `name` = inter / `denom`
+    * (6 dp) reaches `threshold`. */
+  private def overlapGateSql(name: String, denom: String,
+                             threshold: Double): String =
+    s"""SELECT id_a, id_b, $name FROM (
+       |  SELECT id_a, id_b,
+       |         round(CAST(inter AS DOUBLE) / $denom, 6) AS $name
+       |  FROM shared
+       |  JOIN sizes sa ON sa.doc_id = id_a
+       |  JOIN sizes sb ON sb.doc_id = id_b)
+       |WHERE $name >= $threshold""".stripMargin
+
+  private val jaccardGateSql =
+    overlapGateSql("jaccard", "(sa.n_sh + sb.n_sh - inter)", 0.2)
+
+  /** The winnowing fingerprints of [[Dedup.winnowFingerprints]] at k=4,
+    * w=5 as `fps(doc_id, fp)`: positional 4-gram md5-prefix hashes,
+    * window-5 minima, distinct per doc. The window join (i BETWEEN j AND
+    * j+4) is the O(L·w) oracle formulation of the same selection the
+    * Spark side does with per-row array ops. */
+  private val winnowCtes =
+    s"""ws AS (SELECT doc_id, ${tokensSql()} AS w
+       |            FROM documents),
+       |gi AS (SELECT doc_id, w, unnest(generate_series(0, len(w) - 4)) AS i
+       |       FROM ws WHERE len(w) >= 4),
+       |g AS (SELECT doc_id, i,
+       |        substring(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] ||
+       |                      ' ' || w[i+4]), 1, 16) AS gh
+       |      FROM gi),
+       |ng AS (SELECT doc_id, max(i) + 1 AS n FROM g GROUP BY 1),
+       |wi AS (SELECT doc_id, unnest(generate_series(0, greatest(n - 5, 0))) AS j
+       |       FROM ng),
+       |sel AS (SELECT wi.doc_id, wi.j, min(g.gh) AS fp
+       |        FROM wi JOIN g ON g.doc_id = wi.doc_id
+       |                      AND g.i BETWEEN wi.j AND wi.j + 4
+       |        GROUP BY 1, 2),
+       |fps AS (SELECT DISTINCT doc_id, fp FROM sel)""".stripMargin
+
+  /** `documents` split into the cross-corpus rows' (new, reference)
+    * corpora: sources src10+ are new, src0–src9 the reference. */
+  private def newAndRef(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, d)
+    val srcNum = expr("cast(substring(source, 4) as int)")
+    (docs.filter(srcNum >= 10), docs.filter(srcNum < 10))
+  }
+
+  /** The same split as `src(doc_id, source, src_num)`, [[newAndRef]]'s
+    * twin. */
+  private val srcCte =
+    """src AS (SELECT doc_id, source,
+      |               CAST(substr(source, 4) AS INT) AS src_num
+      |        FROM documents)""".stripMargin
+
+  /** The survivors of the new corpus: docs with no MinHash band
+    * collision against the reference corpus — dedup_cross's oracle and,
+    * since the persisted band set is the same distinct (band,
+    * band_hash) relation, dedup_cross_incr's. */
+  private val crossKeepSql =
+    s"""WITH $shinglesCte,
+       |$minhashBandsCte,
+       |$srcCte,
+       |refb AS (SELECT DISTINCT band, band_hash
+       |         FROM bands JOIN src USING (doc_id)
+       |         WHERE src_num < 10),
+       |hit AS (SELECT DISTINCT bands.doc_id
+       |        FROM bands JOIN src USING (doc_id)
+       |             JOIN refb USING (band, band_hash)
+       |        WHERE src_num >= 10)
+       |SELECT doc_id, source FROM src
+       |WHERE src_num >= 10
+       |  AND doc_id NOT IN (SELECT doc_id FROM hit)""".stripMargin
+
+  /** The corpus-repeated spans of [[Dedup.duplicateSpans]] as CTE
+    * `sp(doc_id, span_start, span_end, n_tokens)`, beside the tokens
+    * `t(doc_id, toks)`: positional `w`-token shingles, their corpus
+    * multiplicity, per-doc gaps-and-islands over the duplicated
+    * positions (pos − row_number), runs of ≥ `minRun` shingles. Token
+    * indices are 0-based inclusive. */
+  private def spansSql(w: Int, minRun: Int): String =
+    s"""t AS (SELECT doc_id, ${tokensSql()} AS toks FROM documents),
+       |s AS (SELECT doc_id, i - 1 AS pos,
+       |             md5(array_to_string(toks[i:i+${w - 1}], ' ')) AS h
+       |      FROM (SELECT doc_id, toks,
+       |                   unnest(generate_series(1, len(toks) - ${w - 1})) AS i
+       |            FROM t WHERE len(toks) >= $w)),
+       |m AS (SELECT h, count(*) AS mult FROM s GROUP BY 1),
+       |r AS (SELECT s.doc_id, s.pos,
+       |             s.pos - row_number() OVER (PARTITION BY s.doc_id
+       |                                        ORDER BY s.pos) AS grp
+       |      FROM s JOIN m USING (h) WHERE m.mult >= 2),
+       |sp AS (SELECT doc_id, min(pos) AS span_start,
+       |              max(pos) + ${w - 1} AS span_end,
+       |              count(*) + ${w - 1} AS n_tokens
+       |       FROM r GROUP BY doc_id, grp HAVING count(*) >= $minRun)""".stripMargin
+
+  /** [[spansSql]]' interval union per document, the twin of
+    * [[Dedup.spanDupRatio]]'s islands: a new island where span_start
+    * exceeds the running max end, then `iv(doc_id, isl, s, e)`. */
+  private def islandsSql(w: Int, minRun: Int): String =
+    s"""${spansSql(w, minRun)},
+       |i0 AS (SELECT doc_id, span_start, span_end,
+       |         CASE WHEN span_start > COALESCE(max(span_end) OVER (
+       |                PARTITION BY doc_id ORDER BY span_start
+       |                ROWS BETWEEN UNBOUNDED PRECEDING
+       |                         AND 1 PRECEDING), -1)
+       |              THEN 1 ELSE 0 END AS newf
+       |       FROM sp),
+       |i1 AS (SELECT *, SUM(newf) OVER (
+       |          PARTITION BY doc_id ORDER BY span_start
+       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |          AS isl
+       |       FROM i0),
+       |iv AS (SELECT doc_id, isl, min(span_start) AS s,
+       |              max(span_end) AS e
+       |       FROM i1 GROUP BY 1, 2)""".stripMargin
+
   /** dedup_lsh_sizing's oracle: ONE exact Jaccard-truth leg (the
     * dedup_ngram_jaccard algebra, MATERIALIZED — referenced per sweep
     * point) plus, per band count b, the k=8 signature banded into b
@@ -89,25 +254,8 @@ object DedupRows {
     * the same [[lshSizingBands]] the Spark sweep uses. */
   private def lshSizingSql(bandCounts: Seq[Int]): String = {
     val truth =
-      s"""WITH $shinglesCte,
-         |kept AS (
-         |  SELECT doc_id, shingle FROM sh
-         |  QUALIFY count(*) OVER (PARTITION BY shingle) <= 50),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |shared AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-         |  FROM kept a JOIN kept b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS MATERIALIZED (
-         |  SELECT id_a, id_b FROM (
-         |    SELECT id_a, id_b,
-         |           round(CAST(inter AS DOUBLE)
-         |                 / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard
-         |    FROM shared
-         |    JOIN sizes sa ON sa.doc_id = id_a
-         |    JOIN sizes sb ON sb.doc_id = id_b)
-         |  WHERE jaccard >= 0.2),
+      s"""WITH $overlapCtes,
+         |truth AS MATERIALIZED (SELECT id_a, id_b FROM ($jaccardGateSql)),
          |sig AS MATERIALIZED (SELECT doc_id,
          |${(0 until 8).map(i =>
             s"  min(md5('$i|' || shingle)) AS sig_$i").mkString(",\n")}
@@ -178,35 +326,13 @@ object DedupRows {
 
     // --- MinHash + LSH candidate pairs ------------------------------------
     Row("dedup_minhash_lsh", (s, d) => sharedLshPairs(s, d),
-      s"""WITH $shinglesCte,
-         |$minhashBandsCte
-         |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |FROM bands a JOIN bands b
-         |  ON a.band = b.band AND a.band_hash = b.band_hash
-         | AND a.doc_id < b.doc_id""".stripMargin),
+      s"WITH $lshPairsCtes\nSELECT id_a, id_b FROM pairs"),
 
     // --- SimHash signatures -------------------------------------------------
     Row("dedup_simhash", (s, d) =>
       Dedup.simhash(Tables.documents(s, d), "text", "doc_id"),
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, tok, count(*) AS cnt, md5(tok) AS h
-        |  FROM toks GROUP BY 1, 2),
-        |bits AS (
-        |  SELECT doc_id, pos,
-        |         sum(CASE WHEN CAST(floor(
-        |               (strpos('0123456789abcdef',
-        |                       substr(h, CAST(pos // 4 AS INT) + 1, 1)) - 1)
-        |               / 2 ** (3 - pos % 4)) AS INT) % 2 = 1
-        |             THEN cnt ELSE -cnt END) AS s
-        |  FROM tf, generate_series(0, 63) t(pos)
-        |  GROUP BY 1, 2)
-        |SELECT doc_id,
-        |       string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, ''
-        |                  ORDER BY pos) AS simhash_bits
-        |FROM bits GROUP BY doc_id""".stripMargin),
+      s"WITH $wordToksCte,\n$simhashSigCtes\n" +
+        "SELECT doc_id, bits AS simhash_bits FROM sig"),
 
     // --- dedup clusters: connected components over MinHash-LSH pairs -------
     // The tiny iterative label rounds run at ambient shuffle width and rely
@@ -216,20 +342,7 @@ object DedupRows {
     Row("dedup_clusters", (s, d) =>
       sharedClusters(s, d)
         .select(col("id").as("doc_id"), col("cluster_root")),
-      s"""WITH RECURSIVE $shinglesCte,
-         |$minhashBandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+      s"""WITH RECURSIVE $reachCtes
          |SELECT id AS doc_id, min(r) AS cluster_root
          |FROM reach GROUP BY 1""".stripMargin),
 
@@ -242,20 +355,7 @@ object DedupRows {
         .join(dupes.select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
         .select("doc_id")
     },
-      s"""WITH RECURSIVE $shinglesCte,
-         |$minhashBandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+      s"""WITH RECURSIVE $reachCtes,
          |dupes AS (
          |  SELECT id FROM reach GROUP BY id HAVING id != min(r))
          |SELECT doc_id FROM documents
@@ -268,10 +368,7 @@ object DedupRows {
         "doc_id", maxHamming = 3)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("long").as("hamming")),
-      ("""WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
-        |  FROM documents),
-        |""".stripMargin + simhashPairsFromToksSql)),
+      s"WITH $wordToksCte,\n$simhashPairsSql"),
 
     // --- fuzzy binary-asset near-dup: byte-shingle SimHash over the
     // base64 payload (codec-free media near-dup; exact copies are
@@ -300,51 +397,20 @@ object DedupRows {
         |          unnest(generate_series(0,
         |            CAST((len(b64) - 8) // 4 AS INT))) AS i
         |        FROM b WHERE len(b64) >= 8)),
-        |""".stripMargin + simhashPairsFromToksSql)),
+        |""".stripMargin + simhashPairsSql)),
 
     // --- n-gram Jaccard near-dup pairs --------------------------------------
     Row("dedup_ngram_jaccard", (s, d) =>
       Dedup.jaccardFrom(sharedOverlapCandidates(s, d), threshold = 0.2),
-      s"""WITH $shinglesCte,
-         |kept AS (
-         |  SELECT doc_id, shingle FROM sh
-         |  QUALIFY count(*) OVER (PARTITION BY shingle) <= 50),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |shared AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-         |  FROM kept a JOIN kept b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, jaccard FROM (
-         |  SELECT id_a, id_b,
-         |         round(CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard
-         |  FROM shared
-         |  JOIN sizes sa ON sa.doc_id = id_a
-         |  JOIN sizes sb ON sb.doc_id = id_b)
-         |WHERE jaccard >= 0.2""".stripMargin),
+      s"WITH $overlapCtes\n$jaccardGateSql"),
 
     // --- n-gram containment pairs: the subset-duplication gate Jaccard
     // misses (short doc quoted whole inside a long one); same memoized
     // candidate frame as the Jaccard gate -----------------------------------
     Row("dedup_containment", (s, d) =>
       Dedup.containmentFrom(sharedOverlapCandidates(s, d), threshold = 0.4),
-      s"""WITH $shinglesCte,
-         |kept AS (
-         |  SELECT doc_id, shingle FROM sh
-         |  QUALIFY count(*) OVER (PARTITION BY shingle) <= 50),
-         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         |shared AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-         |  FROM kept a JOIN kept b
-         |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, containment FROM (
-         |  SELECT id_a, id_b,
-         |         round(CAST(inter AS DOUBLE) / least(sa.n_sh, sb.n_sh), 6) AS containment
-         |  FROM shared
-         |  JOIN sizes sa ON sa.doc_id = id_a
-         |  JOIN sizes sb ON sb.doc_id = id_b)
-         |WHERE containment >= 0.4""".stripMargin),
+      s"WITH $overlapCtes\n" +
+        overlapGateSql("containment", "least(sa.n_sh, sb.n_sh)", 0.4)),
 
     // --- duplication-multiplicity histogram: the corpus-health number
     // that says whether exact dedup must precede the pairwise stages -------
@@ -360,47 +426,13 @@ object DedupRows {
     Row("winnow_fp", (s, d) =>
       Dedup.winnowFingerprints(Tables.documents(s, d), "text", "doc_id",
         k = 4, w = 5),
-      // winnowing: positional 4-gram md5-prefix hashes, window-5 minima,
-      // distinct per doc. The window join (i BETWEEN j AND j+4) is the
-      // O(L·w) oracle formulation of the same selection the Spark side
-      // does with per-row array ops.
-      """WITH ws AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
-        |            FROM documents),
-        |gi AS (SELECT doc_id, w, unnest(generate_series(0, len(w) - 4)) AS i
-        |       FROM ws WHERE len(w) >= 4),
-        |g AS (SELECT doc_id, i,
-        |        substring(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-        |                      || ' ' || w[i+4]), 1, 16) AS gh
-        |      FROM gi),
-        |ng AS (SELECT doc_id, max(i) + 1 AS n FROM g GROUP BY 1),
-        |wi AS (SELECT doc_id, unnest(generate_series(0, greatest(n - 5, 0))) AS j
-        |       FROM ng),
-        |sel AS (SELECT wi.doc_id, wi.j, min(g.gh) AS fp
-        |        FROM wi JOIN g ON g.doc_id = wi.doc_id
-        |                      AND g.i BETWEEN wi.j AND wi.j + 4
-        |        GROUP BY 1, 2)
-        |SELECT DISTINCT doc_id, fp FROM sel""".stripMargin),
+      s"WITH $winnowCtes\nSELECT doc_id, fp FROM fps"),
 
     // --- near-dup pairs by shared winnowing fingerprints ------------------
     Row("dedup_winnow", (s, d) =>
       Dedup.winnowPairs(Tables.documents(s, d), "text", "doc_id",
         k = 4, w = 5, minShared = 2),
-      """WITH ws AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
-        |            FROM documents),
-        |gi AS (SELECT doc_id, w, unnest(generate_series(0, len(w) - 4)) AS i
-        |       FROM ws WHERE len(w) >= 4),
-        |g AS (SELECT doc_id, i,
-        |        substring(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-        |                      || ' ' || w[i+4]), 1, 16) AS gh
-        |      FROM gi),
-        |ng AS (SELECT doc_id, max(i) + 1 AS n FROM g GROUP BY 1),
-        |wi AS (SELECT doc_id, unnest(generate_series(0, greatest(n - 5, 0))) AS j
-        |       FROM ng),
-        |sel AS (SELECT wi.doc_id, wi.j, min(g.gh) AS fp
-        |        FROM wi JOIN g ON g.doc_id = wi.doc_id
-        |                      AND g.i BETWEEN wi.j AND wi.j + 4
-        |        GROUP BY 1, 2),
-        |fps AS (SELECT DISTINCT doc_id, fp FROM sel),
+      s"""WITH $winnowCtes,
         |kept AS (SELECT doc_id, fp FROM fps
         |         QUALIFY count(*) OVER (PARTITION BY fp) <= 1000)
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared_fps
@@ -414,28 +446,12 @@ object DedupRows {
       Dedup.deboilerplate(Tables.documents(s, d), "text", "doc_id",
         w = 3, maxMult = 2)
         .select("doc_id", "n_chunks", "n_kept", "clean_text"),
-      // dedup_chunks' chunker, but EVERY occurrence of a chunk with
-      // corpus multiplicity >= 2 dies (boilerplate posture), then the
-      // same ordered reassembly
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        |           FROM documents WHERE len(string_split_regex(text, '\s+')) >= 1),
-        |c AS (SELECT doc_id,
-        |             CAST(ceil(len(toks) / 3.0) AS BIGINT) AS n_chunks,
-        |             i AS chunk_idx,
-        |             array_to_string(toks[(i*3+1):(i*3+3)], ' ') AS chunk
-        |      FROM (SELECT doc_id, toks,
-        |                   unnest(generate_series(
-        |                     0, CAST(ceil(len(toks) / 3.0) AS BIGINT) - 1)) AS i
-        |            FROM t)),
-        |m AS (SELECT md5(chunk) AS h, count(*) AS mult
-        |      FROM c GROUP BY md5(chunk)),
-        |k AS (SELECT c.* FROM c JOIN m ON md5(c.chunk) = m.h
-        |      WHERE m.mult < 2)
-        |SELECT doc_id, any_value(n_chunks) AS n_chunks,
-        |       count(*) AS n_kept,
-        |       array_to_string(list(chunk ORDER BY chunk_idx), ' ')
-        |         AS clean_text
-        |FROM k GROUP BY doc_id""".stripMargin),
+      // EVERY occurrence of a chunk with corpus multiplicity >= 2 dies
+      // (boilerplate posture)
+      s"""WITH $chunkMultCtes,
+         |k AS (SELECT c.* FROM c JOIN m ON md5(c.chunk) = m.h
+         |      WHERE m.mult < 2)
+         |${rebuildSql("k")}""".stripMargin),
 
     // --- WITHIN-document repetition removal: the map-only chunk op (no
     // cross-document state, nothing shuffles) ------------------------------
@@ -445,25 +461,10 @@ object DedupRows {
       // per-doc first-occurrence keep ordered by chunk_idx — the window
       // formulation, because DuckDB's list_distinct does not document
       // order preservation (Spark's array_distinct does)
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        |           FROM documents WHERE len(string_split_regex(text, '\s+')) >= 1),
-        |c AS (SELECT doc_id,
-        |             CAST(ceil(len(toks) / 3.0) AS BIGINT) AS n_chunks,
-        |             i AS chunk_idx,
-        |             array_to_string(toks[(i*3+1):(i*3+3)], ' ') AS chunk
-        |      FROM (SELECT doc_id, toks,
-        |                   unnest(generate_series(
-        |                     0, CAST(ceil(len(toks) / 3.0) AS BIGINT) - 1)) AS i
-        |            FROM t)),
-        |k AS (SELECT * FROM (
-        |        SELECT *, row_number() OVER (PARTITION BY doc_id, chunk
-        |                    ORDER BY chunk_idx) AS rn
-        |        FROM c) WHERE rn = 1)
-        |SELECT doc_id, any_value(n_chunks) AS n_chunks,
-        |       count(*) AS n_kept,
-        |       array_to_string(list(chunk ORDER BY chunk_idx), ' ')
-        |         AS clean_text
-        |FROM k GROUP BY doc_id""".stripMargin),
+      s"""WITH ${chunksSql(3)},
+         |k AS (SELECT * FROM c QUALIFY row_number() OVER (
+         |        PARTITION BY doc_id, chunk ORDER BY chunk_idx) = 1)
+         |${rebuildSql("k")}""".stripMargin),
 
     // --- blocked fuzzy entity matching over part names: collapse to the
     // distinct-name grain, block on the head noun, length-band gate,
@@ -491,25 +492,10 @@ object DedupRows {
     Row("dedup_chunks", (s, d) =>
       Dedup.chunkDedup(Tables.documents(s, d), "text", "doc_id", w = 3)
         .select("doc_id", "n_chunks", "n_kept", "clean_text"),
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        |           FROM documents WHERE len(string_split_regex(text, '\s+')) >= 1),
-        |c AS (SELECT doc_id,
-        |             CAST(ceil(len(toks) / 3.0) AS BIGINT) AS n_chunks,
-        |             i AS chunk_idx,
-        |             array_to_string(toks[(i*3+1):(i*3+3)], ' ') AS chunk
-        |      FROM (SELECT doc_id, toks,
-        |                   unnest(generate_series(
-        |                     0, CAST(ceil(len(toks) / 3.0) AS BIGINT) - 1)) AS i
-        |            FROM t)),
-        |k AS (SELECT * FROM (
-        |        SELECT *, row_number() OVER (PARTITION BY md5(chunk)
-        |                    ORDER BY doc_id, chunk_idx) AS rn
-        |        FROM c) WHERE rn = 1)
-        |SELECT doc_id, any_value(n_chunks) AS n_chunks,
-        |       count(*) AS n_kept,
-        |       array_to_string(list(chunk ORDER BY chunk_idx), ' ')
-        |         AS clean_text
-        |FROM k GROUP BY doc_id""".stripMargin),
+      s"""WITH ${chunksSql(3)},
+         |k AS (SELECT * FROM c QUALIFY row_number() OVER (
+         |        PARTITION BY md5(chunk) ORDER BY doc_id, chunk_idx) = 1)
+         |${rebuildSql("k")}""".stripMargin),
 
     // --- corpus-repeated substring SPANS at arbitrary offsets (Lee et
     // al. 2022's exact-substring posture, shingle-run approximation):
@@ -518,85 +504,22 @@ object DedupRows {
     Row("dedup_spans", (s, d) =>
       Dedup.duplicateSpans(Tables.documents(s, d), "text", "doc_id",
         w = 4, minRun = 2),
-      // positional sliding shingles → global multiplicity → per-doc
-      // gaps-and-islands (pos − row_number) → runs ≥ 2 windows; token
-      // indices 0-based inclusive, mirroring Dedup.duplicateSpans
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        |           FROM documents),
-        |tf AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 4),
-        |s AS (SELECT doc_id, i - 1 AS pos,
-        |             md5(array_to_string(toks[i:i+3], ' ')) AS h
-        |      FROM (SELECT doc_id, toks,
-        |                   unnest(generate_series(1, len(toks) - 3)) AS i
-        |            FROM tf)),
-        |m AS (SELECT h, count(*) AS mult FROM s GROUP BY 1),
-        |d AS (SELECT s.doc_id, s.pos FROM s JOIN m USING (h)
-        |      WHERE m.mult >= 2),
-        |r AS (SELECT doc_id, pos,
-        |             pos - row_number() OVER (PARTITION BY doc_id
-        |                                      ORDER BY pos) AS grp
-        |      FROM d),
-        |g AS (SELECT doc_id, grp, min(pos) AS span_start,
-        |             max(pos) AS last_sh, count(*) AS run
-        |      FROM r GROUP BY 1, 2)
-        |SELECT doc_id, CAST(span_start AS BIGINT) AS span_start,
-        |       CAST(last_sh + 3 AS BIGINT) AS span_end,
-        |       CAST(run + 3 AS BIGINT) AS n_tokens
-        |FROM g WHERE run >= 2""".stripMargin),
+      s"WITH ${spansSql(4, 2)}\nSELECT * FROM sp"),
 
     // --- the actionable gate over those spans: per-doc duplicated-token
     // coverage by interval union (spans overlap < w at the edges) --------
     Row("dedup_span_ratio", (s, d) =>
       Dedup.spanDupRatio(Tables.documents(s, d), "text", "doc_id",
         w = 4, minRun = 2),
-      // the spans' interval union per doc (second gaps-and-islands:
-      // a new island where span_start exceeds the running max end),
-      // then coverage / token count
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        |           FROM documents),
-        |tf AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 4),
-        |s AS (SELECT doc_id, i - 1 AS pos,
-        |             md5(array_to_string(toks[i:i+3], ' ')) AS h
-        |      FROM (SELECT doc_id, toks,
-        |                   unnest(generate_series(1, len(toks) - 3)) AS i
-        |            FROM tf)),
-        |m AS (SELECT h, count(*) AS mult FROM s GROUP BY 1),
-        |d AS (SELECT s.doc_id, s.pos FROM s JOIN m USING (h)
-        |      WHERE m.mult >= 2),
-        |r AS (SELECT doc_id, pos,
-        |             pos - row_number() OVER (PARTITION BY doc_id
-        |                                      ORDER BY pos) AS grp
-        |      FROM d),
-        |g AS (SELECT doc_id, grp, min(pos) AS span_start,
-        |             max(pos) AS last_sh, count(*) AS run
-        |      FROM r GROUP BY 1, 2),
-        |g2 AS (SELECT doc_id, span_start, last_sh + 3 AS span_end
-        |       FROM g WHERE run >= 2),
-        |i0 AS (SELECT doc_id, span_start, span_end,
-        |         CASE WHEN span_start > COALESCE(max(span_end) OVER (
-        |                PARTITION BY doc_id ORDER BY span_start
-        |                ROWS BETWEEN UNBOUNDED PRECEDING
-        |                         AND 1 PRECEDING), -1)
-        |              THEN 1 ELSE 0 END AS newf
-        |       FROM g2),
-        |i1 AS (SELECT *, SUM(newf) OVER (
-        |          PARTITION BY doc_id ORDER BY span_start
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          AS isl
-        |       FROM i0),
-        |cov AS (SELECT doc_id, isl,
-        |               max(span_end) - min(span_start) + 1 AS covered
-        |        FROM i1 GROUP BY 1, 2),
-        |dt AS (SELECT doc_id, SUM(covered) AS dup_tokens
-        |       FROM cov GROUP BY 1)
-        |SELECT b.doc_id,
-        |       CAST(len(string_split_regex(b.text, '\s+')) AS BIGINT)
-        |         AS n_doc_tokens,
-        |       CAST(COALESCE(dt.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-        |       round(CAST(COALESCE(dt.dup_tokens, 0) AS DOUBLE) /
-        |             len(string_split_regex(b.text, '\s+')), 6)
-        |         AS dup_ratio
-        |FROM documents b LEFT JOIN dt USING (doc_id)""".stripMargin),
+      // the islands' covered tokens / token count
+      s"""WITH ${islandsSql(4, 2)},
+         |dt AS (SELECT doc_id, SUM(e - s + 1) AS dup_tokens
+         |       FROM iv GROUP BY 1)
+         |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_doc_tokens,
+         |       CAST(COALESCE(dt.dup_tokens, 0) AS BIGINT) AS dup_tokens,
+         |       round(CAST(COALESCE(dt.dup_tokens, 0) AS DOUBLE) /
+         |             len(t.toks), 6) AS dup_ratio
+         |FROM t LEFT JOIN dt USING (doc_id)""".stripMargin),
 
     // --- and the removal policy: cut the repeated spans out — per-doc
     // interval arrays ride a doc-grain hash join, the token cut is a
@@ -606,41 +529,7 @@ object DedupRows {
         w = 4, minRun = 2),
       // same islands; the cut replayed at token grain (the engine cuts
       // map-side with an indexed lambda — same result, DuckDB joins)
-      """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-        |           FROM documents),
-        |tf AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 4),
-        |s AS (SELECT doc_id, i - 1 AS pos,
-        |             md5(array_to_string(toks[i:i+3], ' ')) AS h
-        |      FROM (SELECT doc_id, toks,
-        |                   unnest(generate_series(1, len(toks) - 3)) AS i
-        |            FROM tf)),
-        |m AS (SELECT h, count(*) AS mult FROM s GROUP BY 1),
-        |d AS (SELECT s.doc_id, s.pos FROM s JOIN m USING (h)
-        |      WHERE m.mult >= 2),
-        |r AS (SELECT doc_id, pos,
-        |             pos - row_number() OVER (PARTITION BY doc_id
-        |                                      ORDER BY pos) AS grp
-        |      FROM d),
-        |g AS (SELECT doc_id, grp, min(pos) AS span_start,
-        |             max(pos) AS last_sh, count(*) AS run
-        |      FROM r GROUP BY 1, 2),
-        |g2 AS (SELECT doc_id, span_start, last_sh + 3 AS span_end
-        |       FROM g WHERE run >= 2),
-        |i0 AS (SELECT doc_id, span_start, span_end,
-        |         CASE WHEN span_start > COALESCE(max(span_end) OVER (
-        |                PARTITION BY doc_id ORDER BY span_start
-        |                ROWS BETWEEN UNBOUNDED PRECEDING
-        |                         AND 1 PRECEDING), -1)
-        |              THEN 1 ELSE 0 END AS newf
-        |       FROM g2),
-        |i1 AS (SELECT *, SUM(newf) OVER (
-        |          PARTITION BY doc_id ORDER BY span_start
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          AS isl
-        |       FROM i0),
-        |iv AS (SELECT doc_id, isl, min(span_start) AS s,
-        |              max(span_end) AS e
-        |       FROM i1 GROUP BY 1, 2),
+      s"""WITH ${islandsSql(4, 2)},
         |tok AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok
         |        FROM (SELECT doc_id, toks,
         |                     unnest(generate_series(1, len(toks))) AS i
@@ -663,10 +552,9 @@ object DedupRows {
       Dedup.chunkDupStats(Tables.documents(s, d), "text", "doc_id", w = 3)
         .select(col("doc_id"), col("n_chunks"), col("n_dup"),
           col("dup_ratio"), (col("dup_ratio") <= 0.5).as("keep")),
-      // shares dedup_chunks' chunker CTE; multiplicity is corpus-wide
-      // occurrence count of the chunk hash (within-document repeats
-      // included — see Dedup.chunkDupStats)
-      s"""WITH $chunkMultCtes
+      // multiplicity is the corpus-wide occurrence count of the chunk
+      // hash (within-document repeats included — see Dedup.chunkDupStats)
+      s"""WITH $chunkDupCtes
          |SELECT doc_id, n_chunks, n_dup,
          |       round(CAST(n_dup AS DOUBLE) / n_chunks, 6) AS dup_ratio,
          |       round(CAST(n_dup AS DOUBLE) / n_chunks, 6) <= 0.5 AS keep
@@ -676,7 +564,7 @@ object DedupRows {
     Row("softdedup_weights", (s, d) =>
       Dedup.chunkDupStats(Tables.documents(s, d), "text", "doc_id", w = 3)
         .select("doc_id", "sum_mult", "soft_weight"),
-      s"""WITH $chunkMultCtes
+      s"""WITH $chunkDupCtes
          |SELECT doc_id, sum_mult,
          |       round(CAST(n_chunks AS DOUBLE) / sum_mult, 6)
          |         AS soft_weight
@@ -787,13 +675,7 @@ object DedupRows {
         .select(col("id_a"), col("id_b"),
           round(matches.cast("double") / 8.0, 6).as("est_jaccard"))
     },
-      s"""WITH $shinglesCte,
-         |$minhashBandsCte,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id)
+      s"""WITH $lshPairsCtes
          |SELECT p.id_a, p.id_b,
          |       round((${(0 until 8).map(i =>
               s"CASE WHEN sa.sig_$i = sb.sig_$i THEN 1 ELSE 0 END")
@@ -806,70 +688,32 @@ object DedupRows {
     // do not MinHash-collide with the "reference" corpus (src0-src9) —
     // the dedup-new-crawl-against-trained-corpus operator ----------------
     Row("dedup_cross", (s, d) => {
-      val docs = Tables.documents(s, d)
-      val srcNum = expr("cast(substring(source, 4) as int)")
-      Dedup.crossCorpusKeep(
-        docs.filter(srcNum >= 10), docs.filter(srcNum < 10),
-        "text", "doc_id", shingleN = 3, k = 8, bands = 4)
+      val (fresh, ref) = newAndRef(s, d)
+      Dedup.crossCorpusKeep(fresh, ref, "text", "doc_id", shingleN = 3,
+        k = 8, bands = 4)
         .select("doc_id", "source")
     },
-      // survivors of the new corpus (src10+): docs with no MinHash band
-      // collision against the reference corpus (src0-src9)
-      s"""WITH $shinglesCte,
-         |$minhashBandsCte,
-         |src AS (SELECT doc_id, source,
-         |               CAST(substr(source, 4) AS INT) AS src_num
-         |        FROM documents),
-         |refb AS (SELECT DISTINCT band, band_hash
-         |         FROM bands JOIN src USING (doc_id)
-         |         WHERE src_num < 10),
-         |hit AS (SELECT DISTINCT bands.doc_id
-         |        FROM bands JOIN src USING (doc_id)
-         |             JOIN refb USING (band, band_hash)
-         |        WHERE src_num >= 10)
-         |SELECT doc_id, source FROM src
-         |WHERE src_num >= 10
-         |  AND doc_id NOT IN (SELECT doc_id FROM hit)""".stripMargin),
+      crossKeepSql),
 
     // --- same drop rule via the PERSISTED band set: the incremental /
     // steady-state ingest path (reference corpus never recomputed) ----------
     Row("dedup_cross_incr", (s, d) => {
-      val docs = Tables.documents(s, d)
-      val srcNum = expr("cast(substring(source, 4) as int)")
-      val refSet = Dedup.bandSet(docs.filter(srcNum < 10), "text", "doc_id",
+      val (fresh, ref) = newAndRef(s, d)
+      val refSet = Dedup.bandSet(ref, "text", "doc_id", shingleN = 3, k = 8,
+        bands = 4)
+      Dedup.keepAgainstBandSet(fresh, refSet, "text", "doc_id",
         shingleN = 3, k = 8, bands = 4)
-      Dedup.keepAgainstBandSet(docs.filter(srcNum >= 10), refSet,
-        "text", "doc_id", shingleN = 3, k = 8, bands = 4)
         .select("doc_id", "source")
     },
       // the incremental path drops EXACTLY the same rows as dedup_cross
-      // (the band set is the same distinct (band, band_hash) relation
-      // whether computed inline or off storage) — identical oracle
-      s"""WITH $shinglesCte,
-         |$minhashBandsCte,
-         |src AS (SELECT doc_id, source,
-         |               CAST(substr(source, 4) AS INT) AS src_num
-         |        FROM documents),
-         |refb AS (SELECT DISTINCT band, band_hash
-         |         FROM bands JOIN src USING (doc_id)
-         |         WHERE src_num < 10),
-         |hit AS (SELECT DISTINCT bands.doc_id
-         |        FROM bands JOIN src USING (doc_id)
-         |             JOIN refb USING (band, band_hash)
-         |        WHERE src_num >= 10)
-         |SELECT doc_id, source FROM src
-         |WHERE src_num >= 10
-         |  AND doc_id NOT IN (SELECT doc_id FROM hit)""".stripMargin),
+      crossKeepSql),
 
     // --- cross-corpus dedup WITH the exact-Jaccard confirm stage: band
     // collision nominates, exact shingle overlap ≥ 0.5 convicts ----------
     Row("dedup_cross_confirm", (s, d) => {
-      val docs = Tables.documents(s, d)
-      val srcNum = expr("cast(substring(source, 4) as int)")
-      Dedup.crossCorpusKeep(
-        docs.filter(srcNum >= 10), docs.filter(srcNum < 10),
-        "text", "doc_id", shingleN = 3, k = 8, bands = 4,
-        confirmJaccard = Some(0.5))
+      val (fresh, ref) = newAndRef(s, d)
+      Dedup.crossCorpusKeep(fresh, ref, "text", "doc_id", shingleN = 3,
+        k = 8, bands = 4, confirmJaccard = Some(0.5))
         .select("doc_id", "source")
     },
       // confirm stage mirrored exactly: band-collision candidates, exact
@@ -877,9 +721,7 @@ object DedupRows {
       // per doc, matching the xxhash64-keyed Spark intersection)
       s"""WITH $shinglesCte,
          |$minhashBandsCte,
-         |src AS (SELECT doc_id, source,
-         |               CAST(substr(source, 4) AS INT) AS src_num
-         |        FROM documents),
+         |$srcCte,
          |pairs AS (
          |  SELECT DISTINCT n.doc_id AS new_id, r.doc_id AS ref_id
          |  FROM bands n

@@ -47,8 +47,8 @@ object EmbedRows {
          |v$k AS MATERIALIZED (
          |  SELECT i, CASE WHEN (SELECT nrm FROM n$k) > 0
          |                 THEN floor(u / (SELECT nrm FROM n$k) * $q) / $q
-         |            END AS v
-         |  FROM u$k)""".stripMargin
+         |                 ELSE p.v END AS v
+         |  FROM u$k JOIN v${k - 1} p USING (i))""".stripMargin
     }
     (head +: steps).mkString(",\n")
   }
@@ -92,8 +92,8 @@ object EmbedRows {
            |v${c}_$k AS MATERIALIZED (
            |  SELECT i, CASE WHEN (SELECT nrm FROM n${c}_$k) > 0
            |                 THEN floor(u / (SELECT nrm FROM n${c}_$k) * $q) / $q
-           |            END AS v
-           |  FROM u${c}_$k)""".stripMargin
+           |                 ELSE p.v END AS v
+           |  FROM u${c}_$k JOIN v${c}_${k - 1} p USING (i))""".stripMargin
       }
       val deflate = if (c == nComp) Nil else Seq(
         s"""sf$c AS MATERIALIZED (
@@ -354,9 +354,8 @@ object EmbedRows {
       // power iteration unrolled: per-row dots and u-sums are exact
       // dyadics (orderless SUM ≡ the engine's sequential folds); only
       // the normalization divisions and the final sqrt are IEEE ops on
-      // identical operands. The nrm=0 degenerate branch nulls here while
-      // the engine keeps the previous direction — unreachable on any
-      // non-degenerate corpus, documented at the operator.
+      // identical operands. A round with nrm=0 (one row: the centered
+      // matrix is zero) keeps the previous direction, as the engine does.
       (s"WITH ${pcaCtes(iters = 2, dim = 64)}\n" +
         """SELECT CAST(i - 1 AS BIGINT) AS pos, v AS component,
           |       round((SELECT nrm FROM n2), 6) AS eigenvalue

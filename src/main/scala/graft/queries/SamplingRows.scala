@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.llm.{Clustering, Contamination, Corpus, Dedup, QualityModel,
-  Sampling, TextAnalysis}
+import graft.llm.{Clustering, Contamination, Corpus, Dedup, Sampling,
+  TextAnalysis}
 
 /** Sampling, mixing and packing for training sets: weighted,
   * stratified and temperature sampling, mixtures, splits, curricula,
@@ -63,21 +63,74 @@ object SamplingRows {
     * sets this from its own score histogram (quality_hist). */
   private val CurateClsThreshold = 0.3
 
-  // language-id CTE shared by the sampling/packing oracles (keep the
-  // CASE in lock-step with the text_langid oracle in TextRows)
-  private val langCase =
-    """CASE WHEN greatest(hits_en, hits_es, hits_fr, hits_de) = 0 THEN 'und'
-      |     WHEN hits_de >= hits_en AND hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
-      |     WHEN hits_en >= hits_es AND hits_en >= hits_fr THEN 'en'
-      |     WHEN hits_es >= hits_fr THEN 'es'
-      |     ELSE 'fr' END""".stripMargin
-
+  // language-id CTE shared by the sampling/packing oracles
   private val langCte =
     s"""$toksCte,
        |hh AS (SELECT doc_id, toks,
        |       $langHits
        |       FROM t),
        |lang AS (SELECT doc_id, toks, $langCase AS lang_id FROM hh)""".stripMargin
+
+  /** The exact 52-bit md5 uniform in [0, 1) of the id column `id` — the
+    * sampling rows' per-row coin. */
+  private def u52Sql(id: String = "doc_id"): String =
+    s"(('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 13))::BIGINT" +
+      " / 4503599627370496.0)"
+
+  /** The hashed uni+bigram features of [[Corpus.dsirSample]] over the
+    * token lists `w` of `from`, as `(doc_id, b)`: b = the 16-bit md5
+    * prefix mod 4096. */
+  private def dsirFeatsSql(from: String): String =
+    s"""SELECT doc_id, ('0x' || substr(md5(f), 1, 4))::BIGINT % 4096 AS b
+       |FROM (SELECT doc_id, unnest(w) AS f FROM $from
+       |      UNION ALL
+       |      SELECT doc_id, w[i] || ' ' || w[i + 1]
+       |      FROM (SELECT doc_id, w,
+       |              unnest(generate_series(1, len(w) - 1)) AS i
+       |            FROM $from WHERE len(w) >= 2))""".stripMargin
+
+  /** [[Sampling.temperature]]'s rate at T=2 and half the rows for each
+    * `lang` of `from`, as CTE `rates(lang, rate)`: exact long
+    * weight/doc sums, one correctly-rounded double division, a 6-dp
+    * round clamped to ≥ 1e-6 (a present group is never rounded to
+    * annihilation). */
+  private def temperatureRatesSql(from: String): String =
+    s"""tn AS (SELECT lang, COUNT(*) AS n FROM $from GROUP BY 1),
+       |tw AS (SELECT lang, n,
+       |         CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000.0)
+       |           AS BIGINT) AS w
+       |       FROM tn),
+       |tt AS (SELECT lang, n, w,
+       |         CAST(SUM(w) OVER () AS BIGINT) AS tot,
+       |         CAST(floor(0.5 * CAST(CAST(SUM(n) OVER () AS BIGINT)
+       |                               AS DOUBLE)) AS DOUBLE) AS budget
+       |       FROM tw),
+       |rates AS (SELECT lang,
+       |            greatest(round(least(1.0,
+       |              (budget * CAST(w AS DOUBLE))
+       |                / (CAST(tot AS DOUBLE) * CAST(n AS DOUBLE))), 6),
+       |              0.000001) AS rate
+       |          FROM tt)""".stripMargin
+
+  /** [[Sampling.packShards]] at budget 2000 over `from(doc_id, tokens,
+    * cols…)`: each row's shard and offset from the running token sum of
+    * its `part` stratum (the whole input when empty) in md5(doc_id)
+    * order. Ends the query. */
+  private def packSql(from: String, cols: String, part: String): String = {
+    val by = if (part.isEmpty) "" else s"PARTITION BY $part "
+    s"""run AS (
+       |  SELECT doc_id, $cols,
+       |         coalesce(sum(tokens) OVER (
+       |             ${by}ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+       |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |           AS before
+       |  FROM $from)
+       |SELECT doc_id, $cols,
+       |       CAST(floor(before / 2000) AS BIGINT) AS shard_id,
+       |       CAST(before - floor(before / 2000) * 2000 AS BIGINT)
+       |         AS shard_offset
+       |FROM run""".stripMargin
+  }
 
   val rows: Seq[Row] = Seq(
     // --- greedy k-center coreset: lowest-id seed, then 7× the point
@@ -182,29 +235,13 @@ object SamplingRows {
       // 16-bit md5 prefix mod 4096; 9-dp-fixed log-ratios summed as exact
       // decimals per doc; Gumbel priority from the 52-bit md5 uniform,
       // rounded to 6 dp before the (priority DESC, doc_id) top-100
-      """WITH td AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
+      s"""WITH td AS (SELECT doc_id, ${tokensSql()} AS w
         |            FROM documents WHERE source = 'src0'),
-        |rd AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
+        |rd AS (SELECT doc_id, ${tokensSql()} AS w
         |       FROM documents WHERE source != 'src0'),
-        |tfeat AS (SELECT ('0x' || substr(md5(f), 1, 4))::BIGINT % 4096
-        |            AS b
-        |          FROM (SELECT unnest(w) AS f FROM td
-        |                UNION ALL
-        |                SELECT w[i] || ' ' || w[i + 1]
-        |                FROM (SELECT w,
-        |                        unnest(generate_series(1, len(w) - 1))
-        |                          AS i
-        |                      FROM td WHERE len(w) >= 2))),
+        |tfeat AS (${dsirFeatsSql("td")}),
         |tc AS (SELECT b, count(*) AS ct FROM tfeat GROUP BY 1),
-        |rfeat AS (SELECT doc_id,
-        |            ('0x' || substr(md5(f), 1, 4))::BIGINT % 4096 AS b
-        |          FROM (SELECT doc_id, unnest(w) AS f FROM rd
-        |                UNION ALL
-        |                SELECT doc_id, w[i] || ' ' || w[i + 1]
-        |                FROM (SELECT doc_id, w,
-        |                        unnest(generate_series(1, len(w) - 1))
-        |                          AS i
-        |                      FROM rd WHERE len(w) >= 2))),
+        |rfeat AS (${dsirFeatsSql("rd")}),
         |rc AS (SELECT b, count(*) AS cr FROM rfeat GROUP BY 1),
         |nt AS (SELECT sum(ct) AS nt FROM tc),
         |nr AS (SELECT sum(cr) AS nr FROM rc),
@@ -240,14 +277,12 @@ object SamplingRows {
         "doc_id", "soft_weight", k = 100)
         .select(col("doc_id"), col("soft_weight"), col("priority")),
       // sample_weighted's priority construction over the soft weights
-      s"""WITH $chunkMultCtes,
+      s"""WITH $chunkDupCtes,
          |sw AS (SELECT doc_id,
          |         round(CAST(n_chunks AS DOUBLE) / sum_mult, 6)
          |           AS soft_weight
          |       FROM sdp),
-         |p AS (SELECT doc_id, soft_weight,
-         |        (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-         |           ::BIGINT / 4503599627370496.0) / soft_weight AS pri
+         |p AS (SELECT doc_id, soft_weight, ${u52Sql()} / soft_weight AS pri
          |      FROM sw WHERE soft_weight > 0)
          |SELECT doc_id, soft_weight, round(pri, 12) AS priority
          |FROM p ORDER BY pri, doc_id LIMIT 100""".stripMargin),
@@ -272,35 +307,14 @@ object SamplingRows {
       Sampling.temperature(Tables.documents(s, d), "doc_id", "lang",
         temp = 2.0, frac = 0.5)
         .select("doc_id", "lang"),
-      // rate derivation mirrors Sampling.temperature step for step:
-      // exact long weight/doc sums, one correctly-rounded double division,
-      // 6dp round clamped to >= 1e-6 (a present source is never rounded
-      // to annihilation), then the 52-bit md5 uniform gate
+      // the rate derivation, then the 52-bit md5 uniform gate
       // (sample_weighted's construction — fine enough that sub-0.4%
       // rates still sample); null-safe join so NULL-source rows gate at
       // their own group's rate
-      """WITH n AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT lang, n,
-        |        CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000.0) AS BIGINT)
-        |          AS w
-        |      FROM n),
-        |t AS (SELECT lang, n, w,
-        |        CAST(SUM(w) OVER () AS BIGINT) AS tot,
-        |        CAST(floor(0.5 * CAST(CAST(SUM(n) OVER () AS BIGINT)
-        |                              AS DOUBLE)) AS DOUBLE) AS budget
-        |      FROM w),
-        |r AS (SELECT lang,
-        |        greatest(round(least(1.0,
-        |          (budget * CAST(w AS DOUBLE))
-        |            / (CAST(tot AS DOUBLE) * CAST(n AS DOUBLE))), 6),
-        |          0.000001)
-        |          AS rate
-        |      FROM t)
-        |SELECT d.doc_id, d.lang FROM documents d
-        |JOIN r ON d.lang IS NOT DISTINCT FROM r.lang
-        |WHERE rate >= 1.0
-        |   OR (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-        |         ::BIGINT / 4503599627370496.0) < rate""".stripMargin),
+      s"""WITH ${temperatureRatesSql("documents")}
+         |SELECT d.doc_id, d.lang FROM documents d
+         |JOIN rates r ON d.lang IS NOT DISTINCT FROM r.lang
+         |WHERE rate >= 1.0 OR ${u52Sql()} < rate""".stripMargin),
 
     // --- deterministic train/val split (hash of id, engine-portable) --------
     Row("sample_split", (s, d) =>
@@ -396,19 +410,7 @@ object SamplingRows {
       s"""WITH $langCte,
          |tk AS (SELECT doc_id, lang_id,
          |              CAST(len(toks) AS BIGINT) AS tokens FROM lang),
-         |run AS (
-         |  SELECT doc_id, lang_id,
-         |         coalesce(sum(tokens) OVER (
-         |             PARTITION BY lang_id
-         |             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |           AS before
-         |  FROM tk)
-         |SELECT doc_id, lang_id,
-         |       CAST(floor(before / 2000) AS BIGINT) AS shard_id,
-         |       CAST(before - floor(before / 2000) * 2000 AS BIGINT)
-         |         AS shard_offset
-         |FROM run""".stripMargin),
+         |${packSql("tk", "lang_id", "lang_id")}""".stripMargin),
 
     // --- CCNet perplexity buckets (Wenzek et al. 2020): per-language
     // head/middle/tail terciles of the bigram-LM fluency score — the
@@ -453,11 +455,8 @@ object SamplingRows {
           col("priority")),
       // mirror Sampling.weighted exactly: u52/2^52 (exact) then /w (one
       // correctly-rounded IEEE division) — the ranking is bit-identical
-      """WITH p AS (
-        |  SELECT doc_id, n_chars,
-        |         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-        |            ::BIGINT / 4503599627370496.0)
-        |           / CAST(n_chars AS DOUBLE) AS pri
+      s"""WITH p AS (
+        |  SELECT doc_id, n_chars, ${u52Sql()} / CAST(n_chars AS DOUBLE) AS pri
         |  FROM documents
         |  WHERE n_chars > 0)
         |SELECT doc_id, n_chars AS weight, round(pri, 12) AS priority
@@ -470,11 +469,9 @@ object SamplingRows {
         "source", "doc_id", "n_chars", k = 10)
         .select(col("doc_id"), col("source"),
           col("n_chars").as("weight"), col("priority")),
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT doc_id, source, n_chars,
-        |         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-        |            ::BIGINT / 4503599627370496.0)
-        |           / CAST(n_chars AS DOUBLE) AS pri
+        |         ${u52Sql()} / CAST(n_chars AS DOUBLE) AS pri
         |  FROM documents
         |  WHERE n_chars > 0)
         |SELECT doc_id, source, n_chars AS weight,
@@ -605,25 +602,14 @@ object SamplingRows {
          |    SELECT *, row_number() OVER (
          |        PARTITION BY md5(text) ORDER BY doc_id) AS rn
          |    FROM f) WHERE rn = 1),
-         |run AS (
-         |  SELECT doc_id, quality_score,
-         |         coalesce(sum(tokens) OVER (
-         |             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |           AS before
-         |  FROM kept)
-         |SELECT doc_id, quality_score,
-         |       CAST(floor(before / 2000) AS BIGINT) AS shard_id,
-         |       CAST(before - floor(before / 2000) * 2000 AS BIGINT)
-         |         AS shard_offset
-         |FROM run""".stripMargin),
+         |${packSql("kept", "quality_score", "")}""".stripMargin),
 
     // --- the FULL modern curation recipe composed as ONE plan (the
     // pipeline_clean method, extended across the whole operator set):
     // quality_ensemble gate → normalized exact dedup (keep first) →
     // banded MinHash near-dedup (bands=4, the dedup_lsh_sizing pick;
     // drop the higher id of every candidate pair) → decontamination
-    // against the held-out eval slice (doc_id % 17) → temperature
+    // against the held-out eval slice (the eval split) → temperature
     // rebalance (T=2, half the survivors — rates derive from the
     // SURVIVOR counts, not the corpus) → token-budget shard packing per
     // language. Every stage is the verified standalone operator chained
@@ -646,28 +632,8 @@ object SamplingRows {
     Row("pipeline_curate", (s, d) => {
       val docs = Tables.documents(s, d)
       // stage 1: the quality_ensemble stack, same operators + constants
-      val g = TextAnalysis.gopherRules(docs, "text")
-        .select(col("doc_id"), col("pass_gopher"))
-      val c = QualityModel.score(docs, "text", "doc_id", buckets = 256)
-        .select(col("doc_id"), col("quality_prob"))
-      // NO checkpoint on the fluency frame despite its two consumers
-      // (the per-doc join and the corpus-quantile threshold): both
-      // branches end in the SAME canonical exchange subtree, so
-      // physical ReuseExchange computes the bigram LM once per action —
-      // measured at sf10 (500k docs): the in-plan reuse serves both
-      // branches at 16 s steady, while an explicit localCheckpoint
-      // (which splits the plan into a materialize job + readers and
-      // takes the subtree out of AQE's whole-plan view) read 64-134 s.
-      // Cut lineage only where branches DIVERGE before their exchange
-      // (the mm_neardup case); identical branches reuse for free.
-      val b = Corpus.bigramNll(docs, "text", "doc_id")
-        .select(col("doc_id"), col("avg_nll"))
-      val th = b.agg(percentile(col("avg_nll"), lit(0.75)).as("__th"))
-      val k1 = g.join(c, Seq("doc_id")).join(b, Seq("doc_id"), "left")
-        .crossJoin(broadcast(th))
-        .filter(col("pass_gopher") &&
-          col("quality_prob") >= CurateClsThreshold &&
-          col("avg_nll").isNotNull && col("avg_nll") <= col("__th"))
+      val k1 = qualitySignals(docs)
+        .filter(qualityGate(CurateClsThreshold))
         .select("doc_id")
         .localCheckpoint()
       val s1 = docs.join(k1.hint("shuffle_hash"), Seq("doc_id"))
@@ -688,13 +654,12 @@ object SamplingRows {
         .localCheckpoint()
       // stage 4: decontaminate the surviving TRAIN docs against the
       // eval slice (the slice itself never enters the training corpus)
-      val test = docs.filter(col("doc_id") % 17 === 0)
       val trainSide = docs.join(k3.hint("shuffle_hash"), Seq("doc_id"))
-        .filter(col("doc_id") % 17 =!= 0)
-      val cont = Contamination.ngramOverlap(trainSide, test,
-          "text", "doc_id", n = 3, minShared = 2)
+        .filter(!isTest)
+      val cont = Contamination.ngramOverlap(trainSide,
+          docs.filter(isTest), "text", "doc_id", n = 3, minShared = 2)
         .select(col("train_id").as("doc_id")).distinct()
-      val k4 = k3.filter(col("doc_id") % 17 =!= 0)
+      val k4 = k3.filter(!isTest)
         .join(cont.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
         .localCheckpoint()
       val s4 = docs.join(k4.hint("shuffle_hash"), Seq("doc_id"))
@@ -710,25 +675,17 @@ object SamplingRows {
     },
       // the composed curation pipeline: every stage reuses the CTE
       // fragment its standalone query is verified against —
-      // quality_ensemble's signal CTEs, dedup_exact_norm's window,
+      // quality_ensemble's signals, dedup_exact_norm's window,
       // dedup_minhash_lsh's bands (restricted to survivors on BOTH pair
-      // sides), contamination_ngram's ≥2-shared-shingles pairs,
-      // sample_temperature's rate algebra (counts from the SURVIVORS),
-      // pack_shards' per-stratum running window
+      // sides), the eval split and contamination_ngram's ≥2 shared
+      // shingles, sample_temperature's rates (counts from the
+      // SURVIVORS), pack_shards' per-stratum running window
       (s"""WITH $toksCte,
-          |$bigramNllCtes,
+          |$qualitySignalsCtes,
           |$shinglesFromWsCte,
           |$minhashBandsCte,
-          |th AS (SELECT quantile_cont(avg_nll, 0.75) AS th FROM bnll),
-          |cls AS (SELECT doc_id, quality_prob
-          |        FROM ($qualityClassifierSql) x),
-          |g AS (SELECT doc_id, pass_gopher FROM ($gopherRulesSql) y),
-          |k1 AS (SELECT g.doc_id
-          |       FROM g JOIN cls USING (doc_id)
-          |       LEFT JOIN bnll b USING (doc_id), th
-          |       WHERE g.pass_gopher
-          |         AND cls.quality_prob >= $CurateClsThreshold
-          |         AND b.avg_nll IS NOT NULL AND b.avg_nll <= th.th),
+          |k1 AS (SELECT doc_id FROM qs
+          |       WHERE ${qualityGateSql(CurateClsThreshold)}),
           |nrm AS (SELECT d.doc_id,
           |          nfc_normalize(lower(trim(
           |            regexp_replace(d.text, '\\s+', ' ', 'g')))) AS tn
@@ -745,54 +702,24 @@ object SamplingRows {
           |       JOIN k2 kb ON kb.doc_id = b.doc_id),
           |k3 AS (SELECT doc_id FROM k2
           |       WHERE doc_id NOT IN (SELECT doc_id FROM nd)),
-          |tst AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
+          |${splitCtes("sh")},
           |cont AS (SELECT DISTINCT train_id FROM (
-          |          SELECT tst.doc_id AS test_id,
-          |                 tr.doc_id AS train_id, count(*) AS c
-          |          FROM sh tr JOIN tst USING (shingle)
-          |          WHERE tr.doc_id % 17 != 0
+          |          SELECT test.doc_id AS test_id,
+          |                 train.doc_id AS train_id, count(*) AS c
+          |          FROM train JOIN test USING (shingle)
           |          GROUP BY 1, 2) WHERE c >= 2),
           |k4 AS (SELECT doc_id FROM k3
-          |       WHERE doc_id % 17 != 0
+          |       WHERE NOT ($isTestSql)
           |         AND doc_id NOT IN (SELECT train_id FROM cont)),
           |sv AS (SELECT d.doc_id, d.lang
           |       FROM documents d JOIN k4 USING (doc_id)),
-          |tn4 AS (SELECT lang, count(*) AS n FROM sv GROUP BY 1),
-          |tw AS (SELECT lang, n,
-          |         CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000.0)
-          |           AS BIGINT) AS w
-          |       FROM tn4),
-          |tt AS (SELECT lang, n, w,
-          |         CAST(SUM(w) OVER () AS BIGINT) AS tot,
-          |         CAST(floor(0.5 * CAST(CAST(SUM(n) OVER () AS BIGINT)
-          |                               AS DOUBLE)) AS DOUBLE) AS budget
-          |       FROM tw),
-          |tr4 AS (SELECT lang,
-          |          greatest(round(least(1.0,
-          |            (budget * CAST(w AS DOUBLE))
-          |              / (CAST(tot AS DOUBLE) * CAST(n AS DOUBLE))), 6),
-          |            0.000001) AS rate
-          |        FROM tt),
+          |${temperatureRatesSql("sv")},
           |samp AS (SELECT sv.doc_id, sv.lang FROM sv
-          |         JOIN tr4 ON sv.lang IS NOT DISTINCT FROM tr4.lang
-          |         WHERE rate >= 1.0
-          |            OR (('0x' || substr(md5(CAST(sv.doc_id AS VARCHAR)),
-          |                                1, 13))
-          |                  ::BIGINT / 4503599627370496.0) < rate),
+          |         JOIN rates r ON sv.lang IS NOT DISTINCT FROM r.lang
+          |         WHERE rate >= 1.0 OR ${u52Sql("sv.doc_id")} < rate),
           |tk AS (SELECT samp.doc_id, samp.lang,
           |              CAST(len(t.toks) AS BIGINT) AS tokens
           |       FROM samp JOIN t ON t.doc_id = samp.doc_id),
-          |run AS (SELECT doc_id, lang,
-          |          coalesce(sum(tokens) OVER (
-          |              PARTITION BY lang
-          |              ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-          |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-          |            0) AS before
-          |        FROM tk)
-          |SELECT doc_id, lang,
-          |       CAST(floor(before / 2000) AS BIGINT) AS shard_id,
-          |       CAST(before - floor(before / 2000) * 2000 AS BIGINT)
-          |         AS shard_offset
-          |FROM run""".stripMargin))
+          |${packSql("tk", "lang", "lang")}""".stripMargin))
   )
 }

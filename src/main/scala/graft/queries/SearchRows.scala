@@ -118,6 +118,25 @@ object SearchRows {
 
   private val Bm25B = 0.75
 
+  /** The robust BM25 idf of a term with document frequency `df` among
+    * `n` documents — the twin of `Corpus.bm25Idf`. */
+  private def idfSql(n: String, df: String): String =
+    s"""ln((CAST($n AS DOUBLE) - CAST($df AS DOUBLE) + 0.5)
+       |          / (CAST($df AS DOUBLE) + 0.5) + 1.0)""".stripMargin
+
+  /** One term's 9-dp-fixed BM25 contribution at the DOUBLE term
+    * frequency `tf` in a document of length `dl`, over the corpus stats
+    * `n` and `total` — the twin of `Corpus.bm25Term`, with the k1/b/k1+1
+    * literals from the same Scala doubles the engine plans. */
+  private def bm25TermSql(n: String, total: String, df: String, tf: String,
+                          dl: String): String =
+    s"""CAST(round(${idfSql(n, df)}
+       |     * $tf * ${Bm25K1 + 1.0}
+       |     / ($tf + $Bm25K1 * (1.0 - $Bm25B + $Bm25B
+       |          * CAST($dl AS DOUBLE)
+       |          / (CAST($total AS DOUBLE)
+       |             / CAST($n AS DOUBLE)))), 9) AS DECIMAL(28,9))""".stripMargin
+
   /** DuckDB CTE fragment scoring every document against [[Bm25Terms]]
     * (`base`, `st`, `sc`; requires [[toksCte]]) plus the final top-100
     * SELECT — shared by the bm25_topk oracle and hybrid_rrf's sparse leg
@@ -127,16 +146,8 @@ object SearchRows {
       s"sum(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END) AS df_$i"
     }.mkString(",\n              ")
     val contribs = Bm25Terms.zipWithIndex.map { case (t, i) =>
-      s"""CAST(round(ln((CAST(n_docs AS DOUBLE) - CAST(df_$i AS DOUBLE) + 0.5)
-         |          / (CAST(df_$i AS DOUBLE) + 0.5) + 1.0)
-         |     * CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)
-         |     * ${Bm25K1 + 1.0}
-         |     / (CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)
-         |        + $Bm25K1 * (1.0 - $Bm25B + $Bm25B
-         |          * CAST(dl AS DOUBLE)
-         |          / (CAST(total_len AS DOUBLE)
-         |             / CAST(n_docs AS DOUBLE)))), 9) AS DECIMAL(28,9))"""
-        .stripMargin
+      bm25TermSql("n_docs", "total_len", s"df_$i",
+        s"CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)", "dl")
     }.mkString("\n   + ")
     s"""base AS (SELECT doc_id, toks, CAST(len(toks) AS INT) AS dl
        |         FROM t),
@@ -155,6 +166,13 @@ object SearchRows {
       |ORDER BY bm25 DESC, doc_id
       |LIMIT 100""".stripMargin
 
+  /** The distinct (doc, term) postings `p(doc_id, term)` of
+    * [[graft.llm.Index]], empty terms dropped. */
+  private val postingsCte =
+    s"""p AS (SELECT DISTINCT doc_id, term FROM (
+       |       SELECT doc_id, unnest(${tokensSql()}) AS term
+       |       FROM documents) WHERE len(term) > 0)""".stripMargin
+
   /** DuckDB oracle for search_prf: [[Bm25OracleCtes]]' feedback slate,
     * the idf·fbTf expansion pick, and the frame-driven weighted second
     * pass — keep in lock-step with [[Corpus.prfTopK]] /
@@ -167,8 +185,6 @@ object SearchRows {
     val seedRows = Bm25Terms.map(t =>
       s"SELECT '$t' AS term, CAST('1.0' AS DECIMAL(2,1)) AS w")
       .mkString("\n       UNION ALL ")
-    val idf = "ln((CAST(st.n_docs AS DOUBLE) - CAST(d2.df AS DOUBLE) + 0.5)" +
-      "\n              / (CAST(d2.df AS DOUBLE) + 0.5) + 1.0)"
     s"""WITH $toksCte,
        |$Bm25OracleCtes,
        |fb AS MATERIALIZED (
@@ -186,9 +202,7 @@ object SearchRows {
        |          JOIN fbtf f ON f.term = e.term) GROUP BY 1),
        |pick AS (SELECT term FROM (
        |    SELECT f.term, row_number() OVER (ORDER BY
-       |        CAST(round(ln((CAST(st.n_docs AS DOUBLE)
-       |                       - CAST(c.df AS DOUBLE) + 0.5)
-       |                      / (CAST(c.df AS DOUBLE) + 0.5) + 1.0)
+       |        CAST(round(${idfSql("st.n_docs", "c.df")}
        |                   * CAST(f.fbtf AS DOUBLE), 9)
        |          AS DECIMAL(28,9)) DESC, f.term) AS rn
        |    FROM fbtf f JOIN cdf c USING (term) CROSS JOIN st)
@@ -203,13 +217,8 @@ object SearchRows {
        |          SELECT DISTINCT e.doc_id, e.term FROM ex2 e
        |          JOIN qt ON qt.term = e.term) GROUP BY 1),
        |co AS (SELECT t2.doc_id, b.dl,
-       |         CAST(round($idf
-       |              * CAST(t2.tf AS DOUBLE) * ${Bm25K1 + 1.0}
-       |              / (CAST(t2.tf AS DOUBLE) + $Bm25K1 * (1.0 - $Bm25B
-       |                 + $Bm25B * CAST(b.dl AS DOUBLE)
-       |                 / (CAST(st.total_len AS DOUBLE)
-       |                    / CAST(st.n_docs AS DOUBLE)))), 9)
-       |           AS DECIMAL(28,9)) * q.w AS c
+       |         ${bm25TermSql("st.n_docs", "st.total_len", "d2.df",
+                   "CAST(t2.tf AS DOUBLE)", "b.dl")} * q.w AS c
        |       FROM tf2 t2 JOIN df2 d2 USING (term)
        |       JOIN qt q ON q.term = t2.term
        |       JOIN base b ON b.doc_id = t2.doc_id
@@ -255,10 +264,7 @@ object SearchRows {
         maxDf = 400),
       // distinct (doc, term) postings; stop terms (df > 400) keep their
       // df with NULL postings, mirroring the engine's anti-join cap
-      """WITH p AS (SELECT DISTINCT doc_id, term FROM (
-        |       SELECT doc_id,
-        |              unnest(string_split_regex(text, '\s+')) AS term
-        |       FROM documents) WHERE len(term) > 0),
+      s"""WITH $postingsCte,
         |dfc AS (SELECT term, CAST(count(*) AS BIGINT) AS df
         |        FROM p GROUP BY 1),
         |lists AS (SELECT term,
@@ -276,10 +282,7 @@ object SearchRows {
     Row("search_boolean", (s, d) =>
       graft.llm.Index.searchAll(Tables.documents(s, d), "text", "doc_id",
         terms = Bm25Terms),
-      """WITH p AS (SELECT DISTINCT doc_id, term FROM (
-        |       SELECT doc_id,
-        |              unnest(string_split_regex(text, '\s+')) AS term
-        |       FROM documents) WHERE len(term) > 0)
+      s"""WITH $postingsCte
         |SELECT doc_id FROM p
         |WHERE term IN ('vector', 'merge', 'spark')
         |GROUP BY doc_id HAVING count(*) = 3""".stripMargin),
@@ -288,10 +291,7 @@ object SearchRows {
     Row("search_any", (s, d) =>
       graft.llm.Index.searchAny(Tables.documents(s, d), "text", "doc_id",
         terms = Bm25Terms, minMatch = 2),
-      """WITH p AS (SELECT DISTINCT doc_id, term FROM (
-        |       SELECT doc_id,
-        |              unnest(string_split_regex(text, '\s+')) AS term
-        |       FROM documents) WHERE len(term) > 0)
+      s"""WITH $postingsCte
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched FROM p
         |WHERE term IN ('vector', 'merge', 'spark')
         |GROUP BY doc_id HAVING count(*) >= 2""".stripMargin),
@@ -302,8 +302,8 @@ object SearchRows {
     Row("search_phrase", (s, d) =>
       graft.llm.Index.searchPhrase(Tables.documents(s, d), "text",
         "doc_id", Seq("table", "hash")),
-      """WITH t AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS toks,
+      s"""WITH t AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (
+        |  SELECT doc_id, ${tokensSql()} AS toks,
         |         unnest(generate_series(1, len(toks))) AS i
         |  FROM documents))
         |SELECT a.doc_id, CAST(count(*) AS BIGINT) AS n_occurrences

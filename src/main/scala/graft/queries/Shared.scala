@@ -4,40 +4,121 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.llm.{IvfIndex, Similarity, TextAnalysis}
+import graft.llm.{Corpus, IvfIndex, QualityModel, Similarity, TextAnalysis}
 import graft.llm.IvfIndex.{Bits, Prefix}
 
-/** Definitions that more than one row family reads: SQL fragments
-  * several oracles embed, and the index configurations and sweep
-  * points the Spark and SQL sides share. */
+/** Definitions that the row families share: SQL fragments several
+  * oracles embed, each beside the Spark operator it is the twin of, and
+  * the index configurations, splits and sweep points the Spark and SQL
+  * sides share. */
 object Shared {
-  /** SQL fragment: tokenized documents CTE (keep in sync with
-    * [[TextAnalysis.tokens]]). */
-  private[queries] val toksCte =
-    """t AS (SELECT doc_id, text, string_split_regex(text, '\s+') AS toks
-      |      FROM documents)""".stripMargin
+  /** The whitespace token list of the SQL string expression `text` —
+    * the DuckDB twin of [[TextAnalysis.tokens]]. */
+  private[queries] def tokensSql(text: String = "text"): String =
+    s"string_split_regex($text, '\\s+')"
 
-  /** SQL fragment: the w=3 chunker from the dedup_chunks oracle plus
-    * corpus-wide chunk-hash multiplicities folded per document (`sdp`) —
-    * shared by the dedup_dupratio and softdedup_weights oracles (keep in
-    * sync with [[Dedup.chunkDupStats]]). */
+  /** SQL fragment: tokenized documents CTE `t(doc_id, text, toks)`. */
+  private[queries] val toksCte =
+    s"""t AS (SELECT doc_id, text, ${tokensSql()} AS toks
+       |      FROM documents)""".stripMargin
+
+  /** The `w`-token chunker of [[Dedup.chunkDedup]] as CTE `c(doc_id,
+    * n_chunks, chunk_idx, chunk)`: documents with at least one token,
+    * cut into consecutive `w`-token chunks, the last one ragged. */
+  private[queries] def chunksSql(w: Int): String =
+    s"""c AS (SELECT doc_id,
+       |             CAST(ceil(len(toks) / $w.0) AS BIGINT) AS n_chunks,
+       |             i AS chunk_idx,
+       |             array_to_string(toks[(i*$w+1):(i*$w+$w)], ' ') AS chunk
+       |      FROM (SELECT doc_id, toks,
+       |                   unnest(generate_series(
+       |                     0, CAST(ceil(len(toks) / $w.0) AS BIGINT) - 1)) AS i
+       |            FROM (SELECT doc_id, ${tokensSql()} AS toks FROM documents)
+       |            WHERE len(toks) >= 1))""".stripMargin
+
+  /** The chunk family's rebuild: the chunks of `from` (a [[chunksSql]]
+    * shape) that survive, reassembled per document in chunk order as
+    * `(doc_id, n_chunks, n_kept, clean_text)`. */
+  private[queries] def rebuildSql(from: String): String =
+    s"""SELECT doc_id, any_value(n_chunks) AS n_chunks,
+       |       count(*) AS n_kept,
+       |       array_to_string(list(chunk ORDER BY chunk_idx), ' ')
+       |         AS clean_text
+       |FROM $from GROUP BY doc_id""".stripMargin
+
+  /** SQL fragment: the w=3 [[chunksSql]] plus each chunk hash's
+    * corpus-wide multiplicity `m(h, mult)`. */
   private[queries] val chunkMultCtes =
-    """t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
-      |      FROM documents WHERE len(string_split_regex(text, '\s+')) >= 1),
-      |c AS (SELECT doc_id,
-      |             CAST(ceil(len(toks) / 3.0) AS BIGINT) AS n_chunks,
-      |             md5(array_to_string(toks[(i*3+1):(i*3+3)], ' ')) AS h
-      |      FROM (SELECT doc_id, toks,
-      |                   unnest(generate_series(
-      |                     0, CAST(ceil(len(toks) / 3.0) AS BIGINT) - 1)) AS i
-      |            FROM t)),
-      |m AS (SELECT h, count(*) AS mult FROM c GROUP BY h),
-      |sdp AS (SELECT c.doc_id,
-      |               any_value(c.n_chunks) AS n_chunks,
-      |               CAST(sum(CASE WHEN m.mult > 1 THEN 1 ELSE 0 END)
-      |                 AS BIGINT) AS n_dup,
-      |               CAST(sum(m.mult) AS BIGINT) AS sum_mult
-      |        FROM c JOIN m USING (h) GROUP BY c.doc_id)""".stripMargin
+    s"""${chunksSql(3)},
+       |m AS (SELECT md5(chunk) AS h, count(*) AS mult FROM c GROUP BY 1)""".stripMargin
+
+  /** [[chunkMultCtes]] folded per document as `sdp(doc_id, n_chunks,
+    * n_dup, sum_mult)` — the twin of [[Dedup.chunkDupStats]]. */
+  private[queries] val chunkDupCtes =
+    s"""$chunkMultCtes,
+       |sdp AS (SELECT c.doc_id,
+       |               any_value(c.n_chunks) AS n_chunks,
+       |               CAST(sum(CASE WHEN m.mult > 1 THEN 1 ELSE 0 END)
+       |                 AS BIGINT) AS n_dup,
+       |               CAST(sum(m.mult) AS BIGINT) AS sum_mult
+       |        FROM c JOIN m ON m.h = md5(c.chunk) GROUP BY c.doc_id)""".stripMargin
+
+  /** The contamination rows' held-out eval slice, as a SQL predicate. */
+  private[queries] val isTestSql = "doc_id % 17 = 0"
+
+  /** The eval split of `from` (any relation with `doc_id`) as CTEs
+    * `test` and `train` — the twin of [[evalSplit]]. */
+  private[queries] def splitCtes(from: String): String =
+    s"""test AS (SELECT * FROM $from WHERE $isTestSql),
+       |train AS (SELECT * FROM $from WHERE NOT ($isTestSql))""".stripMargin
+
+  /** The held-out eval slice on the Spark side, [[isTestSql]]'s twin. */
+  private[queries] val isTest: Column = col("doc_id") % 17 === 0
+
+  /** `docs` split into its `(train, test)` sides by [[isTest]]. */
+  private[queries] def evalSplit(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.filter(!isTest), docs.filter(isTest))
+
+  /** The log-log least-squares fit of [[graft.llm.Corpus.zipfFit]] and
+    * [[graft.llm.Corpus.heapsFit]]: ln `x` and ln `y` over the rows of
+    * `from`, 9-dp-fixed, exact decimal moment sums, then the guarded
+    * closed-form tree, output as `names` = (count, slope, intercept,
+    * r²). Ends the query (CTEs `p`, `s`, `d`, then the SELECT). */
+  private[queries] def logLogFitSql(from: String, x: String, y: String,
+                                    names: Seq[String]): String = {
+    val Seq(n, slope, intercept, r2) = names
+    s"""p AS (SELECT
+       |        CAST(round(ln(CAST($x AS DOUBLE)), 9)
+       |             AS DECIMAL(12,9)) AS x,
+       |        CAST(round(ln(CAST($y AS DOUBLE)), 9)
+       |             AS DECIMAL(12,9)) AS y
+       |      FROM $from),
+       |s AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
+       |             sum(CAST(round(x * y, 9) AS DECIMAL(14,9))) AS sxy,
+       |             sum(CAST(round(x * x, 9) AS DECIMAL(14,9))) AS sxx,
+       |             sum(CAST(round(y * y, 9) AS DECIMAL(14,9))) AS syy
+       |      FROM p),
+       |d AS (SELECT CAST(n AS BIGINT) AS $n,
+       |             CAST(n AS DOUBLE) AS nd,
+       |             CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
+       |             CAST(sxy AS DOUBLE) AS sxyd,
+       |             CAST(sxx AS DOUBLE) AS sxxd,
+       |             CAST(syy AS DOUBLE) AS syyd
+       |      FROM s)
+       |SELECT $n,
+       |  CASE WHEN nd * sxxd - sxd * sxd <> 0.0 THEN
+       |    round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
+       |  END AS $slope,
+       |  CASE WHEN nd * sxxd - sxd * sxd <> 0.0 THEN
+       |    round((syd - (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)
+       |           * sxd) / nd, 6) END AS $intercept,
+       |  CASE WHEN (nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)
+       |            <> 0.0 THEN
+       |    round((nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)
+       |          / ((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)), 6)
+       |  END AS $r2
+       |FROM d""".stripMargin
+  }
 
   /** Deterministic crawl-record URL synthesized from fixture columns for
     * the url_* queries — mixed case, www/default-port/fragment/tracking
@@ -104,10 +185,11 @@ object Shared {
       |                 '^(utm_[^=]*|ref|fbclid|gclid)='))), '&') AS qnorm
       |             FROM uh))""".stripMargin
 
-  /** SQL fragment: distinct word-3-gram shingles (keep in sync with
-    * [[Dedup.shingles]]). Split so composed oracles that ALREADY carry a
-    * whitespace-split `ws` CTE (bigramNllCtes defines the identical one)
-    * can append just the shingle tail without a name collision. */
+  /** SQL fragment: distinct word-3-gram shingles `sh(doc_id, shingle)`,
+    * the twin of [[Dedup.shingles]]. Split so composed oracles that
+    * ALREADY carry a whitespace-split `ws` CTE (bigramNllCtes defines the
+    * identical one) can append just the shingle tail without a name
+    * collision. */
   private[queries] val shinglesFromWsCte =
     """idx AS (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
       |        FROM ws WHERE len(w) >= 3),
@@ -115,17 +197,17 @@ object Shared {
       |       FROM idx)""".stripMargin
 
   private[queries] val shinglesCte =
-    "ws AS (SELECT doc_id, string_split_regex(text, '\\s+') AS w FROM documents),\n" +
+    s"ws AS (SELECT doc_id, ${tokensSql()} AS w FROM documents),\n" +
       shinglesFromWsCte
 
   private[queries] def sqlStringList(xs: Seq[String]): String =
     xs.map(x => s"'$x'").mkString("[", ", ", "]")
 
   /** SQL fragment: per-document add-one bigram-LM NLL as CTE
-    * `bnll(doc_id, n_bigrams, avg_nll)` (keep in sync with
-    * [[Corpus.bigramNll]]). Expects to follow `WITH `. */
+    * `bnll(doc_id, n_bigrams, avg_nll)`, the twin of
+    * [[Corpus.bigramNll]]. Expects to follow `WITH `. */
   private[queries] val bigramNllCtes =
-    """ws AS (SELECT doc_id, string_split_regex(text, '\s+') AS w
+    s"""ws AS (SELECT doc_id, ${tokensSql()} AS w
       |            FROM documents),
       |bgx AS (SELECT doc_id, w[i] AS w1, w[i + 1] AS w2
       |        FROM (SELECT doc_id, w,
@@ -136,7 +218,7 @@ object Shared {
       |c12 AS (SELECT w1, w2, sum(tfb) AS c12 FROM bg GROUP BY 1, 2),
       |c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY 1),
       |v AS (SELECT count(DISTINCT tok) AS v
-      |      FROM (SELECT unnest(string_split_regex(text, '\s+')) AS tok
+      |      FROM (SELECT unnest(${tokensSql()}) AS tok
       |            FROM documents)),
       |nll AS (
       |  SELECT bg.doc_id, bg.tfb,
@@ -150,9 +232,8 @@ object Shared {
       |               / CAST(sum(tfb) AS DOUBLE), 6) AS avg_nll
       |  FROM nll GROUP BY 1)""".stripMargin
 
-  /** SQL fragment: per-doc quality score `q(doc_id, quality_score)` (keep
-    * in lock-step with [[TextAnalysis.qualityScore]] and the text_quality
-    * oracle). Requires [[toksCte]]. */
+  /** SQL fragment: per-doc quality score `q(doc_id, quality_score)`, the
+    * twin of [[TextAnalysis.qualityScore]]. Requires [[toksCte]]. */
   private[queries] val qualityCte =
     """qst AS (
       |  SELECT doc_id,
@@ -168,8 +249,8 @@ object Shared {
       |  FROM qst)""".stripMargin
 
   /** SQL fragment: MinHash signatures + LSH band rows
-    * `bands(doc_id, band, band_hash)` for k=8 / bands=4 (keep in
-    * lock-step with [[Dedup.minhashSignatures]]/[[Dedup.lshBands]]).
+    * `bands(doc_id, band, band_hash)` for k=8 / bands=4, the twin of
+    * [[Dedup.minhashSignatures]]/[[Dedup.lshBands]].
     * Requires [[shinglesCte]]. */
   private[queries] val minhashBandsCte =
     s"""sig AS (SELECT doc_id,
@@ -355,7 +436,7 @@ object Shared {
     * ingest-time twin `stream_chunks` (map-only, stateless: the
     * streaming plan IS the batch plan). */
   private[queries] val docChunksSql: String =
-    """WITH t AS (SELECT doc_id, string_split_regex(text, '\s+') AS toks
+    s"""WITH t AS (SELECT doc_id, ${tokensSql()} AS toks
       |           FROM documents),
       |n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_tokens
       |      FROM t WHERE len(toks) > 0),
@@ -478,6 +559,15 @@ c$i AS (SELECT p.j, coalesce(n.c, p.c) AS c
     s"len(list_filter(toks, x -> list_contains(${sqlStringList(words)}, x))) AS hits_$lang"
   }.mkString(",\n       ")
 
+  /** The language id over [[langHits]]' counts, the twin of
+    * [[TextAnalysis.langId]]. */
+  private[queries] val langCase =
+    """CASE WHEN greatest(hits_en, hits_es, hits_fr, hits_de) = 0 THEN 'und'
+      |     WHEN hits_de >= hits_en AND hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
+      |     WHEN hits_en >= hits_es AND hits_en >= hits_fr THEN 'en'
+      |     WHEN hits_es >= hits_fr THEN 'es'
+      |     ELSE 'fr' END""".stripMargin
+
   // Gopher rule SQL shared by the batch gate (quality_rules) and
   // the streaming-ingest gate oracle (stream_quality)
   private[queries] val gopherRulesSql =
@@ -546,6 +636,57 @@ c$i AS (SELECT p.j, coalesce(n.c, p.c) AS c
          |SELECT doc_id, token_count, round(lin, 6) AS score_linear,
          |       round(1.0 / (1.0 + exp(lin * -4.0)), 6) AS quality_prob
          |FROM l""".stripMargin
+
+  /** The stacked quality signals of quality_ensemble and
+    * pipeline_curate per doc: the Gopher rule gate, the hashed
+    * classifier's probability, the bigram-LM NLL (NULL when a doc has no
+    * bigram) and its corpus 0.75 quantile `__th`. */
+  private[queries] def qualitySignals(docs: DataFrame): DataFrame = {
+    val g = TextAnalysis.gopherRules(docs, "text")
+      .select(col("doc_id"), col("pass_gopher"))
+    val c = QualityModel.score(docs, "text", "doc_id", buckets = 256)
+      .select(col("doc_id"), col("quality_prob"))
+    // NO checkpoint on the fluency frame despite its two consumers
+    // (the per-doc join and the corpus-quantile threshold): both
+    // branches end in the SAME canonical exchange subtree, so
+    // physical ReuseExchange computes the bigram LM once per action —
+    // measured at sf10 (500k docs): the in-plan reuse serves both
+    // branches at 16 s steady, while an explicit localCheckpoint
+    // (which splits the plan into a materialize job + readers and
+    // takes the subtree out of AQE's whole-plan view) read 64-134 s.
+    // Cut lineage only where branches DIVERGE before their exchange
+    // (the mm_neardup case); identical branches reuse for free.
+    val b = Corpus.bigramNll(docs, "text", "doc_id")
+      .select(col("doc_id"), col("avg_nll"))
+    val th = b.agg(percentile(col("avg_nll"), lit(0.75)).as("__th"))
+    g.join(c, Seq("doc_id")).join(b, Seq("doc_id"), "left")
+      .crossJoin(broadcast(th))
+  }
+
+  /** The gate over [[qualitySignals]] at classifier threshold `cls`:
+    * every rule, the classifier, and a scoreable NLL at or below the
+    * quantile. */
+  private[queries] def qualityGate(cls: Double): Column =
+    col("pass_gopher") && col("quality_prob") >= cls &&
+      col("avg_nll").isNotNull && col("avg_nll") <= col("__th")
+
+  /** The SQL twin of [[qualitySignals]]: CTE `qs(doc_id, pass_gopher,
+    * quality_prob, avg_nll, th)`, after [[bigramNllCtes]]. */
+  private[queries] val qualitySignalsCtes =
+    s"""$bigramNllCtes,
+       |th AS (SELECT quantile_cont(avg_nll, 0.75) AS th FROM bnll),
+       |cls AS (SELECT doc_id, quality_prob
+       |        FROM ($qualityClassifierSql) x),
+       |g AS (SELECT doc_id, pass_gopher FROM ($gopherRulesSql) y),
+       |qs AS (SELECT g.doc_id, g.pass_gopher, cls.quality_prob, b.avg_nll,
+       |              th.th
+       |       FROM g JOIN cls USING (doc_id)
+       |       LEFT JOIN bnll b USING (doc_id), th)""".stripMargin
+
+  /** The SQL twin of [[qualityGate]] over `qs`. */
+  private[queries] def qualityGateSql(cls: Double): String =
+    s"pass_gopher AND quality_prob >= $cls AND avg_nll IS NOT NULL " +
+      "AND avg_nll <= th"
 
   /** The `resources` CTE the inventory oracles start from. */
   private[queries] val R = Tables.resourcesSqlCte

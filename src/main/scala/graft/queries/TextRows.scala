@@ -42,25 +42,21 @@ object TextRows {
     * counts) — serves `bpe_segment` directly and `bpe_fertility` as a
     * nested CTE. */
   private lazy val bpeSegmentSql: String =
-    s"WITH ${bpeCtes(6)},\n" +
-      """doc0 AS MATERIALIZED (
-        |  SELECT doc_id,
-        |         array_to_string(list_transform(
-        |           list_filter(string_split_regex(text, '\s+'),
-        |             w -> w NOT LIKE '%<%' AND w NOT LIKE '%>%'),
-        |           w -> regexp_replace(w, '(.)', '<\1>', 'g')), ' ')
-        |           AS v,
-        |         CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
-        |           AS n_words
-        |  FROM documents),
-        |""".stripMargin +
+    raw"""WITH ${bpeCtes(6)},
+       |doc0 AS MATERIALIZED (
+       |  SELECT doc_id,
+       |         array_to_string(list_transform(
+       |           list_filter(${tokensSql()},
+       |             w -> w NOT LIKE '%<%' AND w NOT LIKE '%>%'),
+       |           w -> regexp_replace(w, '(.)', '<\1>', 'g')), ' ')
+       |           AS v,
+       |         CAST(len(${tokensSql()}) AS BIGINT)
+       |           AS n_words
+       |  FROM documents),
+       |""".stripMargin +
       (1 to 6).map(k =>
         s"""doc$k AS MATERIALIZED (
-           |  SELECT doc_id, replace(v,
-           |    '<' || (SELECT l FROM t$k) || '><' ||
-           |      (SELECT r FROM t$k) || '>',
-           |    '<' || (SELECT l FROM t$k) ||
-           |      (SELECT r FROM t$k) || '>') AS v, n_words
+           |  SELECT doc_id, ${mergeSql(k)} AS v, n_words
            |  FROM doc${k - 1})""".stripMargin).mkString(",\n") +
       """
         |SELECT doc_id,
@@ -69,57 +65,30 @@ object TextRows {
         |       n_words
         |FROM doc6""".stripMargin
 
+  /** Merge `k` (the 1-row CTE `t$k` of [[bpeCtes]]) applied to the cell
+    * string `v`: a plain sequential `replace`, identical left-to-right
+    * non-overlapping semantics in both engines. */
+  private def mergeSql(k: Int): String =
+    s"""replace(v,
+       |    '<' || (SELECT l FROM t$k) || '><' || (SELECT r FROM t$k) || '>',
+       |    '<' || (SELECT l FROM t$k) || (SELECT r FROM t$k) || '>')""".stripMargin
+
   /** The unrolled BPE training rounds mirroring [[graft.llm.Bpe.train]]:
     * each round re-derives corpus-weighted adjacent-pair counts from the
     * previous vocabulary, picks the (count desc, left, right) argmax as
-    * a 1-row CTE, and applies the merge with plain sequential `replace`
-    * — identical left-to-right non-overlapping semantics in both
-    * engines. Produces CTEs v0..v`merges`, t1..t`merges`. */
+    * a 1-row CTE `t_k`, and applies the merge ([[mergeSql]]). Hardened
+    * for DEEP unrolls past corpus exhaustion: once no adjacent pair
+    * remains, t_k is EMPTY, so the vocab step passes v through unchanged
+    * (an unguarded `replace` against the empty t_k's NULL scalar
+    * subqueries would null the whole vocabulary), and the merge rows
+    * accumulate through chained m_k CTEs instead of one wide UNION ALL
+    * (a 120-way union overflows DuckDB's expression-depth limit; the
+    * CTE chain binds flat). Produces v0..v`merges`, t1..t`merges` and
+    * m`merges` = (round, l, r, c). */
   private def bpeCtes(merges: Int): String = {
     val v0 =
-      """w0 AS (SELECT term AS w, CAST(count(*) AS BIGINT) AS wc FROM (
-        |        SELECT unnest(string_split_regex(text, '\s+')) AS term
-        |        FROM documents) t
-        |      WHERE len(term) > 0 AND term NOT LIKE '%<%'
-        |        AND term NOT LIKE '%>%'
-        |      GROUP BY 1),
-        |v0 AS MATERIALIZED (
-        |       SELECT regexp_replace(w, '(.)', '<\1>', 'g') AS v, wc
-        |       FROM w0)""".stripMargin
-    val steps = (1 to merges).map { k =>
-      s"""p$k AS MATERIALIZED (SELECT t[i] AS l, t[i + 1] AS r, SUM(wc) AS c
-         |  FROM (SELECT wc, t, unnest(generate_series(1, len(t) - 1)) AS i
-         |        FROM (SELECT wc, string_split(v[2:-2], '><') AS t
-         |              FROM v${k - 1})
-         |        WHERE len(t) >= 2)
-         |  GROUP BY 1, 2),
-         |t$k AS MATERIALIZED (SELECT l, r, c FROM p$k
-         |        ORDER BY c DESC, l, r LIMIT 1),
-         |v$k AS MATERIALIZED (SELECT replace(v,
-         |          '<' || (SELECT l FROM t$k) || '><' ||
-         |            (SELECT r FROM t$k) || '>',
-         |          '<' || (SELECT l FROM t$k) ||
-         |            (SELECT r FROM t$k) || '>') AS v, wc
-         |        FROM v${k - 1})""".stripMargin
-    }
-    (v0 +: steps).mkString(",\n")
-  }
-
-  /** [[bpeCtes]] hardened for DEEP unrolls past corpus exhaustion: once
-    * no adjacent pair remains, t_k is EMPTY — the vocab step must then
-    * pass v through unchanged (an unguarded `replace` against the empty
-    * t_k's NULL scalar subqueries would null the whole vocabulary), and
-    * the merge rows accumulate through chained m_k CTEs instead of one
-    * wide UNION ALL (a 120-way union overflows DuckDB's expression-depth
-    * limit; the CTE chain binds flat). 120 rounds covers any run of this
-    * corpus: the vocabulary's Σ(len(w)−1) bounds possible merges at 107,
-    * so the engine's 500-merge budget and the oracle's fixed unroll
-    * provably agree — every round past exhaustion is a no-op on both
-    * sides. Produces m`merges` = (round, l, r, c). */
-  private def bpeDeepCtes(merges: Int): String = {
-    val v0 =
-      """w0 AS (SELECT term AS w, CAST(count(*) AS BIGINT) AS wc FROM (
-        |        SELECT unnest(string_split_regex(text, '\s+')) AS term
+      raw"""w0 AS (SELECT term AS w, CAST(count(*) AS BIGINT) AS wc FROM (
+        |        SELECT unnest(${tokensSql()}) AS term
         |        FROM documents) t
         |      WHERE len(term) > 0 AND term NOT LIKE '%<%'
         |        AND term NOT LIKE '%>%'
@@ -140,21 +109,84 @@ object TextRows {
          |        ORDER BY c DESC, l, r LIMIT 1),
          |v$k AS MATERIALIZED (SELECT
          |        CASE WHEN (SELECT count(*) FROM t$k) = 0 THEN v
-         |        ELSE replace(v,
-         |          '<' || (SELECT l FROM t$k) || '><' ||
-         |            (SELECT r FROM t$k) || '>',
-         |          '<' || (SELECT l FROM t$k) ||
-         |            (SELECT r FROM t$k) || '>') END AS v, wc
+         |        ELSE ${mergeSql(k)} END AS v, wc
          |        FROM v${k - 1}),
          |m$k AS MATERIALIZED (SELECT * FROM m${k - 1}
-         |        UNION ALL SELECT $k AS round, l, r, c FROM t$k)"""
-        .stripMargin
+         |        UNION ALL SELECT $k AS round, l, r, c FROM t$k)""".stripMargin
     }
     (v0 +: steps).mkString(",\n")
   }
 
+  /** The merge table of a `merges`-round BPE training, round by round. */
+  private def bpeTrainSql(merges: Int): String =
+    s"""WITH ${bpeCtes(merges)}
+       |SELECT round, l AS "left", r AS "right", l || r AS merged,
+       |       CAST(c AS BIGINT) AS pair_count
+       |FROM m$merges""".stripMargin
+
   private val allStops = sqlStringList(
     TextAnalysis.stopwords.flatMap(_._2).distinct.sorted)
+
+  /** The contamination oracles' head: distinct shingles, their eval
+    * split ([[splitCtes]]) and each test doc's shingle count
+    * `sizes(test_id, n_test_ngrams)`. */
+  private val contamCtes =
+    s"""WITH $shinglesCte,
+       |${splitCtes("sh")},
+       |sizes AS (SELECT doc_id AS test_id, count(*) AS n_test_ngrams
+       |          FROM test GROUP BY 1)""".stripMargin
+
+  /** The exact oracle of [[Contamination.ngramOverlap]]: (test, train)
+    * pairs sharing ≥ 2 shingles with their overlap fraction, plus, with
+    * `evidence`, the five smallest shared grams
+    * ([[Contamination.ngramOverlapReport]]). */
+  private def overlapSql(evidence: Boolean = false): String = {
+    val (agg, ev) = if (!evidence) ("", "") else (",\n" +
+      "         array_to_string((list_sort(list(DISTINCT shingle)))[1:5], '|')" +
+      " AS evidence", ", evidence")
+    s"""$contamCtes,
+       |pairs AS (
+       |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
+       |         count(*) AS shared_ngrams$agg
+       |  FROM test JOIN train USING (shingle) GROUP BY 1, 2)
+       |SELECT test_id, train_id, shared_ngrams$ev,
+       |       round(CAST(shared_ngrams AS DOUBLE) / n_test_ngrams, 6)
+       |         AS overlap_frac
+       |FROM pairs JOIN sizes USING (test_id)
+       |WHERE shared_ngrams >= 2""".stripMargin
+  }
+
+  /** The capped oracle of [[Contamination.ngramOverlapBloom]]: the grams
+    * of `hotCtes`' `hot(shingle)` are excluded from pair counting and
+    * counted per test doc as `n_capped_grams`, and a test doc whose
+    * matches were all capped away keeps one sentinel row. */
+  private def cappedSql(hotCtes: String): String =
+    s"""$contamCtes,
+       |$hotCtes,
+       |capped AS (SELECT test.doc_id AS test_id,
+       |                  count(*) AS n_capped_grams
+       |           FROM test JOIN hot USING (shingle) GROUP BY 1),
+       |pairs AS (
+       |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
+       |         count(*) AS shared_ngrams
+       |  FROM test JOIN train USING (shingle)
+       |  WHERE shingle NOT IN (SELECT shingle FROM hot)
+       |  GROUP BY 1, 2 HAVING count(*) >= 2)
+       |SELECT p.test_id, p.train_id, p.shared_ngrams,
+       |       s.n_test_ngrams,
+       |       round(CAST(p.shared_ngrams AS DOUBLE) / s.n_test_ngrams,
+       |             6) AS overlap_frac,
+       |       CAST(coalesce(c.n_capped_grams, 0) AS BIGINT)
+       |         AS n_capped_grams
+       |FROM pairs p JOIN sizes s USING (test_id)
+       |LEFT JOIN capped c USING (test_id)
+       |UNION ALL
+       |SELECT c.test_id, CAST(NULL AS BIGINT) AS train_id,
+       |       CAST(0 AS BIGINT) AS shared_ngrams, s.n_test_ngrams,
+       |       CAST(NULL AS DOUBLE) AS overlap_frac,
+       |       CAST(c.n_capped_grams AS BIGINT) AS n_capped_grams
+       |FROM capped c JOIN sizes s USING (test_id)
+       |WHERE c.test_id NOT IN (SELECT DISTINCT test_id FROM pairs)""".stripMargin
 
   val rows: Seq[Row] = Seq(
     // --- text statistics -----------------------------------------------------
@@ -166,7 +198,7 @@ object TextRows {
       s"""WITH $toksCte
          |SELECT doc_id,
          |  CAST(len(toks) AS INT) AS token_count,
-         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^\\sA-Za-z0-9]')) AS INT) AS bpeish_count,
+         |  CAST(len(regexp_extract_all(text, '${TextAnalysis.bpeishPattern}')) AS INT) AS bpeish_count,
          |  CAST(length(text) AS INT) AS char_count,
          |  CAST(len(list_distinct(toks)) AS INT) AS distinct_tokens,
          |  round(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks), 6) AS type_token_ratio,
@@ -220,8 +252,8 @@ object TextRows {
       // term 9-dp-fixed before an exact decimal sum (ln on identical
       // integer-derived doubles — the BM25 discipline); the normalized
       // form recomputes the unrounded H before its one division
-      """WITH tf AS (SELECT doc_id, tok, count(*) AS c FROM (
-        |  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
+      s"""WITH tf AS (SELECT doc_id, tok, count(*) AS c FROM (
+        |  SELECT doc_id, unnest(${tokensSql()}) AS tok
         |  FROM documents) GROUP BY 1, 2),
         |a AS (SELECT doc_id, SUM(c) AS n_tokens, count(*) AS n_distinct,
         |        SUM(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)),
@@ -254,9 +286,9 @@ object TextRows {
           col("bpe_tokens").cast("double") / col("ws_tokens").cast("double"),
           6))
     },
-      """WITH t AS (SELECT lang, string_split_regex(text, '\s+') AS toks,
+      s"""WITH t AS (SELECT lang, ${tokensSql()} AS toks,
         |             len(regexp_extract_all(text,
-        |                 '[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]')) AS bpe
+        |                 '${TextAnalysis.bpeishPattern}')) AS bpe
         |           FROM documents)
         |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |       CAST(SUM(len(toks)) AS BIGINT) AS ws_tokens,
@@ -347,8 +379,8 @@ object TextRows {
     Row("text_blocklist", (s, d) =>
       TextAnalysis.blocklist(Tables.documents(s, d), "text", "doc_id",
         terms = Seq("slow", "crash", "stale"), maxHits = 1L),
-      """WITH b AS (SELECT doc_id,
-        |                  string_split_regex(lower(text), '\s+') AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |                  ${tokensSql("lower(text)")} AS toks
         |            FROM documents),
         |h AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
         |             CAST(len(list_filter(toks, t ->
@@ -472,48 +504,17 @@ object TextRows {
     // gate AND model gate AND LM-fluency gate (corpus-quantile
     // threshold), with every signal kept so kill reasons are auditable.
     // Unscoreable docs (no bigram positions) fail the fluency leg -------
-    Row("quality_ensemble", (s, d) => {
-      val docs = Tables.documents(s, d)
-      val g = TextAnalysis.gopherRules(docs, "text")
-        .select(col("doc_id"), col("pass_gopher"))
-      val c = QualityModel.score(docs, "text", "doc_id", buckets = 256)
-        .select(col("doc_id"), col("quality_prob"))
-      // NO checkpoint on the fluency frame despite its two consumers
-      // (the per-doc join and the corpus-quantile threshold): both
-      // branches end in the SAME canonical exchange subtree, so
-      // physical ReuseExchange computes the bigram LM once per action —
-      // measured at sf10 (500k docs): the in-plan reuse serves both
-      // branches at 16 s steady, while an explicit localCheckpoint
-      // (which splits the plan into a materialize job + readers and
-      // takes the subtree out of AQE's whole-plan view) read 64-134 s.
-      // Cut lineage only where branches DIVERGE before their exchange
-      // (the mm_neardup case); identical branches reuse for free.
-      val b = Corpus.bigramNll(docs, "text", "doc_id")
-        .select(col("doc_id"), col("avg_nll"))
-      val th = b.agg(percentile(col("avg_nll"), lit(0.75)).as("__th"))
-      g.join(c, Seq("doc_id"))
-        .join(b, Seq("doc_id"), "left")
-        .crossJoin(broadcast(th))
+    Row("quality_ensemble", (s, d) =>
+      qualitySignals(Tables.documents(s, d))
         .select(col("doc_id"), col("pass_gopher"), col("quality_prob"),
-          col("avg_nll"),
-          (col("pass_gopher") && col("quality_prob") >= 0.5 &&
-            col("avg_nll").isNotNull &&
-            col("avg_nll") <= col("__th")).as("keep"))
-    },
+          col("avg_nll"), qualityGate(0.5).as("keep")),
       // the three verified signal oracles joined on doc_id; the fluency
       // threshold is quantile_cont over the 6-dp avg_nll (matches
       // Spark's exact percentile); unscoreable docs fail the fluency leg
-      (s"WITH $bigramNllCtes,\n" +
-        s"""th AS (SELECT quantile_cont(avg_nll, 0.75) AS th FROM bnll),
-           |cls AS (SELECT doc_id, quality_prob
-           |        FROM ($qualityClassifierSql) x),
-           |g AS (SELECT doc_id, pass_gopher FROM ($gopherRulesSql) y)
-           |SELECT g.doc_id, g.pass_gopher, cls.quality_prob, b.avg_nll,
-           |       (g.pass_gopher AND cls.quality_prob >= 0.5
-           |        AND b.avg_nll IS NOT NULL AND b.avg_nll <= th.th)
-           |         AS keep
-           |FROM g JOIN cls USING (doc_id)
-           |LEFT JOIN bnll b USING (doc_id), th""".stripMargin)),
+      s"""WITH $qualitySignalsCtes
+         |SELECT doc_id, pass_gopher, quality_prob, avg_nll,
+         |       (${qualityGateSql(0.5)}) AS keep
+         |FROM qs""".stripMargin),
 
     // --- Gopher rule-based filter: measured values + per-rule flags +
     // the conjunction (the canonical pre-model web-corpus gate) ----------
@@ -538,12 +539,7 @@ object TextRows {
          |  SELECT doc_id,
          |       $langHits
          |  FROM t)
-         |SELECT doc_id,
-         |  CASE WHEN greatest(hits_en, hits_es, hits_fr, hits_de) = 0 THEN 'und'
-         |       WHEN hits_de >= hits_en AND hits_de >= hits_es AND hits_de >= hits_fr THEN 'de'
-         |       WHEN hits_en >= hits_es AND hits_en >= hits_fr THEN 'en'
-         |       WHEN hits_es >= hits_fr THEN 'es'
-         |       ELSE 'fr' END AS lang_id
+         |SELECT doc_id, $langCase AS lang_id
          |FROM h""".stripMargin),
 
     // --- language MIXTURE: per-language stopword hits + shares — the
@@ -596,10 +592,10 @@ object TextRows {
     Row("text_fingerprint", (s, d) =>
       TextAnalysis.fingerprints(Tables.documents(s, d), "text")
         .select("doc_id", "content_fp", "bow_fp"),
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |       md5(lower(trim(text))) AS content_fp,
         |       md5(array_to_string(list_sort(list_distinct(
-        |           string_split_regex(lower(text), '\s+'))), ' ')) AS bow_fp
+        |           ${tokensSql("lower(text)")})), ' ')) AS bow_fp
         |FROM documents""".stripMargin),
 
     // --- Gopher-style repetition signals (dup/top n-gram fractions) --------
@@ -687,85 +683,44 @@ object TextRows {
          |FROM r2""".stripMargin),
 
     // --- benchmark-contamination check: train docs sharing ≥2 distinct
-    // 3-grams with an eval doc (eval set = doc_id % 17, broadcast side) ----
+    // 3-grams with an eval doc (the eval split, broadcast side) ------------
     Row("contamination_ngram", (s, d) => {
-      val docs = Tables.documents(s, d)
-      Contamination.ngramOverlap(
-        train = docs.filter(col("doc_id") % 17 =!= 0),
-        test = docs.filter(col("doc_id") % 17 === 0),
-        "text", "doc_id", n = 3, minShared = 2)
+      val (train, test) = evalSplit(Tables.documents(s, d))
+      Contamination.ngramOverlap(train, test, "text", "doc_id", n = 3,
+        minShared = 2)
         .select("test_id", "train_id", "shared_ngrams", "overlap_frac")
     },
-      s"""WITH $shinglesCte,
-         |test AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
-         |train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 != 0),
-         |sizes AS (SELECT doc_id AS test_id, count(*) AS n_test_ngrams
-         |          FROM test GROUP BY 1),
-         |pairs AS (
-         |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
-         |         count(*) AS shared_ngrams
-         |  FROM test JOIN train USING (shingle) GROUP BY 1, 2)
-         |SELECT test_id, train_id, shared_ngrams,
-         |       round(CAST(shared_ngrams AS DOUBLE) / n_test_ngrams, 6)
-         |         AS overlap_frac
-         |FROM pairs JOIN sizes USING (test_id)
-         |WHERE shared_ngrams >= 2""".stripMargin),
+      overlapSql()),
 
     // --- decontamination audit report: the pairs PLUS the matched grams
     // themselves (sorted, capped) — gram strings ride only the broadcast
     // eval side -------------------------------------------------------------
     Row("contamination_report", (s, d) => {
-      val docs = Tables.documents(s, d)
-      Contamination.ngramOverlapReport(
-        train = docs.filter(col("doc_id") % 17 =!= 0),
-        test = docs.filter(col("doc_id") % 17 === 0),
-        "text", "doc_id", n = 3, minShared = 2, maxGrams = 5)
+      val (train, test) = evalSplit(Tables.documents(s, d))
+      Contamination.ngramOverlapReport(train, test, "text", "doc_id", n = 3,
+        minShared = 2, maxGrams = 5)
         .select("test_id", "train_id", "shared_ngrams", "evidence",
           "overlap_frac")
     },
-      s"""WITH $shinglesCte,
-         |test AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
-         |train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 != 0),
-         |sizes AS (SELECT doc_id AS test_id, count(*) AS n_test_ngrams
-         |          FROM test GROUP BY 1),
-         |pairs AS (
-         |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
-         |         count(*) AS shared_ngrams,
-         |         array_to_string(
-         |           (list_sort(list(DISTINCT shingle)))[1:5], '|')
-         |           AS evidence
-         |  FROM test JOIN train USING (shingle) GROUP BY 1, 2)
-         |SELECT test_id, train_id, shared_ngrams, evidence,
-         |       round(CAST(shared_ngrams AS DOUBLE) / n_test_ngrams, 6)
-         |         AS overlap_frac
-         |FROM pairs JOIN sizes USING (test_id)
-         |WHERE shared_ngrams >= 2""".stripMargin),
+      overlapSql(evidence = true)),
 
     // --- target-domain coverage: fraction of each target doc's n-grams
     // the corpus covers — the data-acquisition inverse of contamination --
     Row("target_coverage", (s, d) => {
-      val docs = Tables.documents(s, d)
-      Contamination.targetCoverage(
-        corpus = docs.filter(col("doc_id") % 17 =!= 0),
-        target = docs.filter(col("doc_id") % 17 === 0),
-        "text", "doc_id", n = 3)
+      val (corpus, target) = evalSplit(Tables.documents(s, d))
+      Contamination.targetCoverage(corpus, target, "text", "doc_id", n = 3)
         .select("target_id", "n_target_ngrams", "covered_ngrams",
           "coverage")
     },
-      s"""WITH $shinglesCte,
-         |test AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
-         |train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 != 0),
-         |sizes AS (SELECT doc_id AS target_id, count(*) AS n_target_ngrams
-         |          FROM test GROUP BY 1),
-         |m AS (SELECT target_id, count(*) AS covered_ngrams FROM (
-         |        SELECT DISTINCT test.doc_id AS target_id, shingle
-         |        FROM test JOIN train USING (shingle))
-         |      GROUP BY 1)
-         |SELECT target_id, n_target_ngrams,
+      s"""$contamCtes,
+         |m AS (SELECT test.doc_id AS test_id,
+         |             count(DISTINCT shingle) AS covered_ngrams
+         |      FROM test JOIN train USING (shingle) GROUP BY 1)
+         |SELECT test_id AS target_id, n_test_ngrams AS n_target_ngrams,
          |       coalesce(covered_ngrams, 0) AS covered_ngrams,
          |       round(CAST(coalesce(covered_ngrams, 0) AS DOUBLE)
-         |             / n_target_ngrams, 6) AS coverage
-         |FROM sizes LEFT JOIN m USING (target_id)""".stripMargin),
+         |             / n_test_ngrams, 6) AS coverage
+         |FROM sizes LEFT JOIN m USING (test_id)""".stripMargin),
 
     // --- bloom-prefiltered decontamination: same answer, different plan -----
     // Exact despite the Bloom (no false negatives + exact confirm join);
@@ -784,12 +739,9 @@ object TextRows {
     // n_capped_grams rides in the projection so capped output is
     // self-describing at every scale, not just the oracle-gated ones.
     Row("contamination_bloom", (s, d) => {
-      val docs = Tables.documents(s, d)
-      Contamination.ngramOverlapBloom(
-        train = docs.filter(col("doc_id") % 17 =!= 0),
-        test = docs.filter(col("doc_id") % 17 === 0),
-        "text", "doc_id", n = 3, minShared = 2,
-        maxTrainDf = Contamination.AutoTrainDf)
+      val (train, test) = evalSplit(Tables.documents(s, d))
+      Contamination.ngramOverlapBloom(train, test, "text", "doc_id", n = 3,
+        minShared = 2, maxTrainDf = Contamination.AutoTrainDf)
         .select("test_id", "train_id", "shared_ngrams", "overlap_frac",
           "n_capped_grams")
     },
@@ -798,21 +750,7 @@ object TextRows {
       // exact-join answer bit for bit, and the 0s assert the AUTO cap
       // does not bind on the clean fixture — a binding cap would emit
       // nonzero n_capped_grams / sentinel rows and fail here loudly
-      s"""WITH $shinglesCte,
-         |test AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
-         |train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 != 0),
-         |sizes AS (SELECT doc_id AS test_id, count(*) AS n_test_ngrams
-         |          FROM test GROUP BY 1),
-         |pairs AS (
-         |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
-         |         count(*) AS shared_ngrams
-         |  FROM test JOIN train USING (shingle) GROUP BY 1, 2)
-         |SELECT test_id, train_id, shared_ngrams,
-         |       round(CAST(shared_ngrams AS DOUBLE) / n_test_ngrams, 6)
-         |         AS overlap_frac,
-         |       CAST(0 AS BIGINT) AS n_capped_grams
-         |FROM pairs JOIN sizes USING (test_id)
-         |WHERE shared_ngrams >= 2""".stripMargin),
+      s"SELECT *, CAST(0 AS BIGINT) AS n_capped_grams FROM (${overlapSql()})"),
 
     // --- decontamination with the cap BINDING (maxTrainDf = 4 excludes
     // the 121 hottest grams at sf0.01): the oracle replays the full
@@ -820,52 +758,18 @@ object TextRows {
     // per-test n_capped_grams honesty column, and the sentinel row for
     // test docs whose matches were all capped away ------------------------
     Row("contamination_capped", (s, d) => {
-      val docs = Tables.documents(s, d)
-      Contamination.ngramOverlapBloom(
-        train = docs.filter(col("doc_id") % 17 =!= 0),
-        test = docs.filter(col("doc_id") % 17 === 0),
-        "text", "doc_id", n = 3, minShared = 2, maxTrainDf = 4)
+      val (train, test) = evalSplit(Tables.documents(s, d))
+      Contamination.ngramOverlapBloom(train, test, "text", "doc_id", n = 3,
+        minShared = 2, maxTrainDf = 4)
         .select(col("test_id"), col("train_id"), col("shared_ngrams"),
           col("n_test_ngrams").cast("long").as("n_test_ngrams"),
           col("overlap_frac"), col("n_capped_grams"))
     },
       // the BINDING-cap variant: hot grams (train df > 4) excluded from
-      // pair counting, per-test n_capped_grams, and the sentinel row for
-      // all-capped test docs — the engine's Bloom+df-pre-pass plan and
-      // this direct SQL must agree row for row
-      s"""WITH $shinglesCte,
-         |test AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
-         |train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 != 0),
-         |sizes AS (SELECT doc_id AS test_id, count(*) AS n_test_ngrams
-         |          FROM test GROUP BY 1),
-         |hot AS (SELECT shingle FROM (
-         |          SELECT shingle, count(*) AS df FROM train GROUP BY 1)
-         |        WHERE df > 4),
-         |capped AS (SELECT test.doc_id AS test_id,
-         |                  count(*) AS n_capped_grams
-         |           FROM test JOIN hot USING (shingle) GROUP BY 1),
-         |pairs AS (
-         |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
-         |         count(*) AS shared_ngrams
-         |  FROM test JOIN train USING (shingle)
-         |  WHERE shingle NOT IN (SELECT shingle FROM hot)
-         |  GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT p.test_id, p.train_id, p.shared_ngrams,
-         |       s.n_test_ngrams,
-         |       round(CAST(p.shared_ngrams AS DOUBLE) / s.n_test_ngrams,
-         |             6) AS overlap_frac,
-         |       CAST(coalesce(c.n_capped_grams, 0) AS BIGINT)
-         |         AS n_capped_grams
-         |FROM pairs p JOIN sizes s USING (test_id)
-         |LEFT JOIN capped c USING (test_id)
-         |UNION ALL
-         |SELECT c.test_id, CAST(NULL AS BIGINT) AS train_id,
-         |       CAST(0 AS BIGINT) AS shared_ngrams, s.n_test_ngrams,
-         |       CAST(NULL AS DOUBLE) AS overlap_frac,
-         |       CAST(c.n_capped_grams AS BIGINT) AS n_capped_grams
-         |FROM capped c JOIN sizes s USING (test_id)
-         |WHERE c.test_id NOT IN (SELECT DISTINCT test_id FROM pairs)"""
-        .stripMargin),
+      // pair counting — the engine's Bloom+df-pre-pass plan and this
+      // direct SQL must agree row for row
+      cappedSql(
+        "hot AS (SELECT shingle FROM train GROUP BY 1 HAVING count(*) > 4)")),
 
     // --- decontamination with the AUTO cap BINDING: autoCapMeanDf = 1
     // sets the pair-row budget to one row per surviving gram — below the
@@ -878,12 +782,10 @@ object TextRows {
     // Bloom-noised histogram would be a function of the filter's bit
     // layout and no oracle could replay it --------------------------------
     Row("contamination_autocap", (s, d) => {
-      val docs = Tables.documents(s, d)
-      Contamination.ngramOverlapBloom(
-        train = docs.filter(col("doc_id") % 17 =!= 0),
-        test = docs.filter(col("doc_id") % 17 === 0),
-        "text", "doc_id", n = 3, minShared = 2,
-        maxTrainDf = Contamination.AutoTrainDf, autoCapMeanDf = 1)
+      val (train, test) = evalSplit(Tables.documents(s, d))
+      Contamination.ngramOverlapBloom(train, test, "text", "doc_id", n = 3,
+        minShared = 2, maxTrainDf = Contamination.AutoTrainDf,
+        autoCapMeanDf = 1)
         .select(col("test_id"), col("train_id"), col("shared_ngrams"),
           col("n_test_ngrams").cast("long").as("n_test_ngrams"),
           col("overlap_frac"), col("n_capped_grams"))
@@ -893,46 +795,17 @@ object TextRows {
       // cap = max df level whose prefix fits the budget (1 row per
       // surviving gram) -> the contamination_capped semantics at that
       // derived cap
-      s"""WITH $shinglesCte,
-         |test AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 = 0),
-         |train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 17 != 0),
-         |sizes AS (SELECT doc_id AS test_id, count(*) AS n_test_ngrams
-         |          FROM test GROUP BY 1),
-         |surv AS (SELECT shingle, count(*) AS df FROM train
-         |         WHERE shingle IN (SELECT shingle FROM test)
-         |         GROUP BY 1),
-         |hist AS (SELECT df, count(*) AS n FROM surv GROUP BY 1),
-         |cum AS (SELECT df, sum(df * n) OVER (ORDER BY df) AS cum
-         |        FROM hist),
-         |cap AS (SELECT coalesce(max(df), 1) AS cap FROM cum
-         |        WHERE cum <= (SELECT count(*) FROM surv)),
-         |hot AS (SELECT shingle FROM surv
-         |        WHERE df > (SELECT cap FROM cap)),
-         |capped AS (SELECT test.doc_id AS test_id,
-         |                  count(*) AS n_capped_grams
-         |           FROM test JOIN hot USING (shingle) GROUP BY 1),
-         |pairs AS (
-         |  SELECT test.doc_id AS test_id, train.doc_id AS train_id,
-         |         count(*) AS shared_ngrams
-         |  FROM test JOIN train USING (shingle)
-         |  WHERE shingle NOT IN (SELECT shingle FROM hot)
-         |  GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT p.test_id, p.train_id, p.shared_ngrams,
-         |       s.n_test_ngrams,
-         |       round(CAST(p.shared_ngrams AS DOUBLE) / s.n_test_ngrams,
-         |             6) AS overlap_frac,
-         |       CAST(coalesce(c.n_capped_grams, 0) AS BIGINT)
-         |         AS n_capped_grams
-         |FROM pairs p JOIN sizes s USING (test_id)
-         |LEFT JOIN capped c USING (test_id)
-         |UNION ALL
-         |SELECT c.test_id, CAST(NULL AS BIGINT) AS train_id,
-         |       CAST(0 AS BIGINT) AS shared_ngrams, s.n_test_ngrams,
-         |       CAST(NULL AS DOUBLE) AS overlap_frac,
-         |       CAST(c.n_capped_grams AS BIGINT) AS n_capped_grams
-         |FROM capped c JOIN sizes s USING (test_id)
-         |WHERE c.test_id NOT IN (SELECT DISTINCT test_id FROM pairs)"""
-        .stripMargin),
+      cappedSql(
+        """surv AS (SELECT shingle, count(*) AS df FROM train
+          |         WHERE shingle IN (SELECT shingle FROM test)
+          |         GROUP BY 1),
+          |hist AS (SELECT df, count(*) AS n FROM surv GROUP BY 1),
+          |cum AS (SELECT df, sum(df * n) OVER (ORDER BY df) AS cum
+          |        FROM hist),
+          |cap AS (SELECT coalesce(max(df), 1) AS cap FROM cum
+          |        WHERE cum <= (SELECT count(*) FROM surv)),
+          |hot AS (SELECT shingle FROM surv
+          |        WHERE df > (SELECT cap FROM cap))""".stripMargin)),
 
     // --- count-min sketch as a DataFrame: the constant-memory frequency
     // summary — one map-side-combined aggregate reduces the corpus token
@@ -1015,14 +888,8 @@ object TextRows {
     // over the (shrinking) vocab frame and the driver holds only the
     // argmax pair. The merge table IS the tokenizer. ----------------------
     Row("bpe_train", (s, d) => sharedBpeTrain6(s, d),
-      // the merge loop unrolled round-for-round; sequential replace() has
-      // identical left-to-right semantics in both engines
-      (s"WITH ${bpeCtes(6)}\n" +
-        (1 to 6).map(k =>
-          s"""SELECT $k AS round, l AS "left", r AS "right",
-             |  l || r AS merged, CAST(c AS BIGINT) AS pair_count
-             |FROM t$k""".stripMargin)
-          .mkString("\nUNION ALL\n"))),
+      // the merge loop unrolled round-for-round
+      bpeTrainSql(6)),
 
     // --- tokenize the corpus with the trained merges: map-only chained
     // replaces, no shuffle — the serving path of bpe_train --------------
@@ -1085,16 +952,13 @@ object TextRows {
         .agg(coalesce(sum(length(col("w")) - 1), lit(0L))).head.getLong(0)
       require(ceiling <= 120, s"bpe_train_deep: corpus merge ceiling " +
         s"$ceiling exceeds the oracle's 120-round unroll — regenerate " +
-        "the oracle with bpeDeepCtes(>= ceiling)")
+        "the oracle with bpeCtes(>= ceiling)")
       graft.llm.Bpe.train(docs, "text", merges = 500)
     },
       // the deep unroll: 120 guarded rounds (≥ the corpus's provable
       // 107-merge ceiling) accumulated through chained m_k CTEs; rounds
       // past exhaustion contribute nothing on either side
-      (s"WITH ${bpeDeepCtes(120)}\n" +
-        """SELECT round, l AS "left", r AS "right", l || r AS merged,
-          |       CAST(c AS BIGINT) AS pair_count
-          |FROM m120""".stripMargin)),
+      bpeTrainSql(120)),
 
     // --- sliding-window chunking into 64-token segments with 16-token
     // overlap: the context-window segmentation before packing/encoding —
@@ -1192,8 +1056,8 @@ object TextRows {
       // mirror TextAnalysis.slidingChunks: starts every 4, keep a window
       // iff it covers new tokens; DuckDB list slice w[a:b] clips like
       // Spark's slice(w, a, len)
-      """WITH ws AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS w
+      s"""WITH ws AS (
+        |  SELECT doc_id, ${tokensSql()} AS w
         |  FROM documents),
         |st AS (SELECT doc_id, w,
         |              unnest(generate_series(0, len(w) - 1, 4)) AS s

@@ -877,9 +877,10 @@ class PropertySpec extends SparkSpec {
 
   test("chunk rebuilds == brute force: first-occurrence keep vs drop-all") {
     import graft.llm.Dedup
+    // odd token counts too, so the last w=2 chunk is often ragged
     val docGen = Gen.listOfN(10,
-      Gen.chooseNum(1, 6).flatMap(n =>
-        Gen.listOfN(n * 2, Gen.oneOf("a", "b", "c")).map(_.mkString(" "))))
+      Gen.chooseNum(1, 11).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf("a", "b", "c")).map(_.mkString(" "))))
     val w = 2
     (1 to 8).foreach { seed =>
       val texts = sample(docGen, seed)
@@ -899,14 +900,21 @@ class PropertySpec extends SparkSpec {
         val kept = chunksOf(t).filter(c => mult(c) < 2)
         if (kept.isEmpty) None else Some(id -> kept.mkString(" "))
       }.toMap
+      // brute dedupWithinDoc: each doc keeps its own first occurrences
+      val expectWithin = docs.map { case (id, t) =>
+        id -> chunksOf(t).distinct.mkString(" ")
+      }.toMap
       val df = docs.toDF("doc_id", "text")
       val gotDedup = Dedup.chunkDedup(df, "text", "doc_id", w)
         .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
       val gotDeboiler = Dedup.deboilerplate(df, "text", "doc_id", w,
         maxMult = 2)
         .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
+      val gotWithin = Dedup.dedupWithinDoc(df, "text", "doc_id", w)
+        .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
       assert(gotDedup == expectDedup, s"seed=$seed dedup")
       assert(gotDeboiler == expectDeboiler, s"seed=$seed deboiler")
+      assert(gotWithin == expectWithin, s"seed=$seed within")
     }
   }
 
