@@ -3,11 +3,18 @@
 
 Usage: python3 scripts/oracle_diff.py <before.json> <after.json> <sfDir>...
 
-The two files are `oracle_sql.json` as `graft.Verify` writes them. For
-every row whose SQL text differs between them, both texts run in DuckDB
-on each <sfDir>'s tables, and the two results are compared exactly after
-`scripts/check.py`'s canonicalisation (columns sorted, dtypes widened,
-rows sorted). A row found in one file only, or whose text fails to run
+The two files are `oracle_sql.json` as `graft.Verify` writes them. It
+writes that file first, from the row registry alone; a row filter that
+names no row (here `none`) writes only it, running no row and opening
+no Spark session, so the tables directory is not read. One command per
+tree, run in that tree's checkout:
+
+    sbt -batch "runMain graft.Verify - <outDir> none"
+
+For every row whose SQL text differs between them, both texts run in
+DuckDB on each <sfDir>'s tables, and the two results are compared
+exactly after `scripts/check.py`'s canonicalisation (columns sorted,
+dtypes widened, rows sorted). A row found in one file only, or whose text fails to run
 on either side, counts as different.
 
 Prints one line per changed row and per <sfDir>, then the counts: text

@@ -127,7 +127,7 @@ object AnnPqRows {
   /** The SQ8 grid of the `ann_ivfsq_*` rows: `snv(vec_id, nv)`, each
     * len-64 vector snapped to ann_int8_topk's int8 grid and normalized. */
   private val sq8GridCtes =
-    """sq0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+    s"""sq0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
       |          list_max(list_transform(embedding,
       |            x -> abs(CAST(x AS DOUBLE)))) AS amax
       |        FROM embeddings WHERE len(embedding) = 64),
@@ -141,8 +141,7 @@ object AnnPqRows {
       |          END AS v
       |        FROM sq0),
       |snv AS (SELECT vec_id,
-      |          list_transform(v,
-      |            x -> x / sqrt(list_dot_product(v, v))) AS nv
+      |          ${unitSql("v")} AS nv
       |        FROM sdq)""".stripMargin
 
   /** Mirror of [[graft.llm.Pq.trainCodebooks]] (iters = 1) + ADC: the
@@ -395,7 +394,7 @@ object AnnPqRows {
           col("neighbor_id"))
     },
       // ann_brute_topk's ranking verbatim
-      """WITH e0 AS (
+      s"""WITH e0 AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |         list_max(list_transform(embedding,
         |           x -> abs(CAST(x AS DOUBLE)))) AS amax
@@ -411,7 +410,7 @@ object AnnPqRows {
         |         END AS v
         |  FROM e0),
         |e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+        |        ${unitSql("v")} AS v
         |      FROM dq),
         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
         |s AS (

@@ -62,7 +62,7 @@ object AnnRows {
        |  FROM embeddings),
        |nv AS (
        |  SELECT vec_id,
-       |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+       |         ${unitSql("v")}
        |           AS nv
        |  FROM e0),
        |""".stripMargin +
@@ -151,7 +151,7 @@ object AnnRows {
   /** `nv(vec_id, nv)`: the vectors of `e`, normalized. */
   private def nvCte(materialized: Boolean = false): String =
     s"""nv AS ${if (materialized) "MATERIALIZED " else ""}(SELECT vec_id,
-       |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+       |         ${unitSql("v")}
        |           AS nv
        |       FROM e)""".stripMargin
 
@@ -264,10 +264,10 @@ object AnnRows {
     * normalized labelled corpus `e0`/`e`, queries vec_id < 50 and every
     * (query, corpus) cosine `score0` with both labels in `s`. */
   private val hardNegBruteCtes: String =
-    """e0 AS (SELECT vec_id, label,
+    s"""e0 AS (SELECT vec_id, label,
       |              CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |e AS (SELECT vec_id, label,
-      |        list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+      |        ${unitSql("v")}
       |          AS v
       |      FROM e0),
       |q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv
@@ -298,11 +298,11 @@ object AnnRows {
        |       ${rotatedBitsSql("v", 4, 64)}
        |  FROM ec),
        |e AS (SELECT vec_id,
-       |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v,
+       |        ${unitSql("v")} AS v,
        |        ${bucketFromBitsSql(4, -1)} AS bucket
        |      FROM bt),
        |q AS (SELECT vec_id AS query_id,
-       |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS qv,
+       |        ${unitSql("v")} AS qv,
        |        unnest([${(-1 to 3).map(bucketFromBitsSql(4, _)).mkString(",\n                ")}]) AS bucket
        |      FROM bt WHERE vec_id < 50),
        |s AS (
@@ -319,9 +319,9 @@ object AnnRows {
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"))
     },
-      """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+        |        ${unitSql("v")} AS v
         |      FROM e0),
         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
         |s AS (
@@ -710,7 +710,7 @@ object AnnRows {
       s"""WITH e0 AS (SELECT vec_id, label,
          |              CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |e AS (SELECT vec_id, label,
-         |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+         |        ${unitSql("v")} AS v
          |      FROM e0),
          |q AS (SELECT vec_id AS query_id, label, v AS qv
          |      FROM e WHERE vec_id < 50),

@@ -130,7 +130,7 @@ object EmbedRows {
       s"""WITH ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings WHERE len(embedding) >= 64),
          |nv AS (SELECT vec_id, v,
-         |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+         |         ${unitSql("v")}
          |           AS nv
          |       FROM ec),
          |qs AS (SELECT vec_id AS q, nv AS vq FROM nv WHERE vec_id < 200),
@@ -195,14 +195,14 @@ object EmbedRows {
       // two exact rankings (full 64 dims vs the 16-dim prefix), the
       // shared recall join; normalize-after-slice matches the engine
       sweepSql(Seq(
-      """ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      s"""ec AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |            FROM embeddings WHERE len(embedding) >= 64),
         |ef AS (SELECT vec_id,
-        |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+        |         ${unitSql("v")} AS v
         |       FROM ec),
         |et0 AS (SELECT vec_id, v[1:16] AS v FROM ec),
         |et AS (SELECT vec_id,
-        |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+        |         ${unitSql("v")} AS v
         |       FROM et0),
         |qt AS (SELECT vec_id AS query_id, v AS qv FROM et WHERE vec_id < 30),
         |xt AS (SELECT qt.query_id, et.vec_id AS neighbor_id,
@@ -223,8 +223,8 @@ object EmbedRows {
          |  SELECT vec_id, v,
          |         ${rotatedBucketSql("v", 2, 64)} AS bucket
          |  FROM ec),""".stripMargin + "\n" +
-      """e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v,
+      s"""e AS (SELECT vec_id,
+        |        ${unitSql("v")} AS v,
         |        bucket
         |      FROM e0)
         |SELECT id_a, id_b, score FROM (
@@ -248,8 +248,8 @@ object EmbedRows {
          |         ${rotatedBucketSql("v", 4, 64)} AS bk0,
          |         ${rotatedBucketSql("v", 4, 64, Similarity.DefaultSeed + 1)} AS bk1
          |  FROM ec),""".stripMargin + "\n" +
-      """e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v,
+      s"""e AS (SELECT vec_id,
+        |        ${unitSql("v")} AS v,
         |        bk0, bk1
         |      FROM e0)
         |SELECT id_a, id_b, score FROM (
@@ -514,8 +514,8 @@ object EmbedRows {
       // id (the shared hash discipline); pairs score only within a
       // (cluster, sub) — `%` on the non-negative 52-bit uniform ≡ pmod
       (s"WITH ${kmeansCtes(8, 2, 64)},\n" +
-        """nv AS (SELECT e.vec_id, a2.cluster,
-          |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
+        s"""nv AS (SELECT e.vec_id, a2.cluster,
+          |        ${unitSql("v")} AS nv
           |      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           |            FROM embeddings WHERE len(embedding) = 64) e
           |      JOIN a2 ON a2.vec_id = e.vec_id),

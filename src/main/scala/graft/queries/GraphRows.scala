@@ -64,8 +64,8 @@ object GraphRows {
        |         ${rotatedBucketSql("v", 4, 64)} AS bk0,
        |         ${rotatedBucketSql("v", 4, 64, Similarity.DefaultSeed + 1)} AS bk1
        |  FROM ec),""".stripMargin + "\n" +
-      """e AS (SELECT vec_id,
-        |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv,
+      s"""e AS (SELECT vec_id,
+        |        ${unitSql("v")} AS nv,
         |        bk0, bk1
         |      FROM e0),
         |s AS (SELECT a.vec_id AS src, b.vec_id AS dst,

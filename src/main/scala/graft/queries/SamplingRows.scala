@@ -38,7 +38,7 @@ object SamplingRows {
        |            FROM embeddings WHERE len(embedding) >= 64),
        |e AS MATERIALIZED (
        |  SELECT vec_id,
-       |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+       |         ${unitSql("v")}
        |           AS v
        |  FROM e0),
        |s1 AS MATERIALIZED (

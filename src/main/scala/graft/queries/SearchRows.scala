@@ -64,7 +64,7 @@ object SearchRows {
     s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
        |            FROM embeddings),
        |e AS (SELECT vec_id,
-       |        list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+       |        ${unitSql("v")} AS v
        |      FROM e0),
        |$candCtes,
        |cv AS (SELECT c.query_id, c.nid, c.rel, e.v
@@ -335,11 +335,11 @@ object SearchRows {
       (s"WITH $toksCte,\n$Bm25OracleCtes,\n" +
         """sr AS (SELECT doc_id, CAST(row_number() OVER (
           |          ORDER BY bm25 DESC, doc_id) AS BIGINT) AS sparse_rank
-          |       FROM (""".stripMargin + Bm25OracleTop + """)),
+          |       FROM (""".stripMargin + Bm25OracleTop + s""")),
           |e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           |       FROM embeddings),
           |en AS (SELECT vec_id,
-          |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v
+          |         ${unitSql("v")} AS v
           |       FROM e0),
           |qv AS (SELECT v AS q FROM en WHERE vec_id = 0),
           |dr AS (SELECT * FROM (

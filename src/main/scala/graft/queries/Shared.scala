@@ -453,6 +453,11 @@ object Shared {
       |         least(tok_start + 64, n_tokens)), ' ') AS seg_text
       |FROM st""".stripMargin
 
+  /** The DOUBLE[] expression `v` scaled to unit L2 norm — the cosine
+    * normalization, the DuckDB twin of [[Similarity.normalize]]. */
+  private[queries] def unitSql(v: String): String =
+    s"list_transform($v, x -> x / sqrt(list_dot_product($v, $v)))"
+
   /** The trained-IVF probe/assignment fragment over [[kmeansCtes]]'
     * unrolled training (k=8, iters=2, dim=64 — the embed_kmeans
     * configuration): `tnv` normalizes the len=64 training universe,
@@ -465,7 +470,7 @@ object Shared {
   private[queries] def ivfTrainedCtes(maxQueryId: Int, probes: Int): String =
     s"""tnv AS (
        |  SELECT vec_id,
-       |         list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+       |         ${unitSql("v")}
        |           AS nv
        |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
        |        FROM embeddings WHERE len(embedding) = 64)),

@@ -56,18 +56,6 @@ object StreamRows {
     }: _*)
   }
 
-  /** The child session every FileReplay row runs in: it isolates the
-    * scoped-down state-store partition count (see stream_rate) from
-    * concurrent queries on the parent session, and scopes
-    * maxPartitionBytes down so even one rehearsal-scale file splits
-    * across tasks. */
-  private def replaySession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    ss
-  }
-
   /** Replay-clock scalars shared across the streaming rows (r18, guide
     * §1.2): SEVEN stream_* rows each ran the identical
     * `max(ts_us)`-over-events aggregate (and one the max-doc_id
@@ -89,6 +77,33 @@ object StreamRows {
     * the sentinel to flush, so any clock will do. */
   private def maxOrZero(df: DataFrame, c: String): Long =
     df.agg(coalesce(max(col(c)), lit(0L))).head.getLong(0)
+
+  /** Replays `d`'s `table` through [[graft.streaming.FileReplay.replay]]
+    * as the query `name`, in a child session of `s`; `transform` gets that
+    * session and the source. The child (shared SparkContext, isolated
+    * SQLConf) scopes the state-store partition count down without the
+    * parent session ever seeing a mutated spark.sql.shuffle.partitions,
+    * so concurrent queries are unaffected, and scopes maxPartitionBytes
+    * down so even one rehearsal-scale file splits across tasks; conf set
+    * at builder time (nanosAsLong etc.) lives in the context conf and is
+    * inherited. With `flush`, the second batch is one row of the same
+    * table far past its last event — 30 days past the last `ts` for
+    * events (keyed `sentinelUser`), 90 days of crawl clock past the last
+    * `doc_id` for documents — so the watermark passes every real window. */
+  private def replay(s: SparkSession, d: String, table: String, name: String,
+                     flush: Boolean = false, sentinelUser: Long = 0L)(
+      transform: (SparkSession, () => DataFrame) => DataFrame): DataFrame = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    val sentinel = Option.when(flush)(table match {
+      case "events" => eventsSentinel(ss, d,
+        sharedMaxTsUs(s, d) + 30L * 86400000000L, sentinelUser)
+      case "documents" => docsSentinel(ss, d, sharedMaxDocId(s, d) + 90L * 86400L)
+    })
+    graft.streaming.FileReplay.replay(ss, s"$d/$table.parquet", name,
+      sentinel)(source => transform(ss, source))
+  }
 
   /** A streaming row: `build` gets the row's name, which names the
     * row's replay query ([[graft.streaming.FileReplay.replay]]). */
@@ -114,12 +129,7 @@ object StreamRows {
       // tripping every event through the driver (the sf1 rehearsal
       // measured the MemoryStream version at 14–35 s, nearly all driver
       // serialization; this shape holds flat).
-      val ss = replaySession(s)
-      val maxUs = sharedMaxTsUs(s, d)
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+      replay(s, d, "events", name, flush = true) { (_, source) =>
         val stream = source()
         stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("event_type"),
@@ -152,12 +162,8 @@ object StreamRows {
     // (register, rank) derivation is the shared Sketches SQL, every step
     // to the final division exact integer arithmetic. -------------------
     replayRow("stream_distinct")(name => (s, d) => {
-      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
-      val reg = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+      val reg = replay(s, d, "events", name, flush = true) { (_, source) =>
         val stream = source()
         stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"))
@@ -211,12 +217,8 @@ object StreamRows {
     // read — the THIRD at-ingest sketch beside stream_distinct's HLL
     // registers and stream_cms's counters ----------------------------------
     replayRow("stream_quantiles")(name => (s, d) => {
-      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
-      val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+      val sink = replay(s, d, "events", name, flush = true) { (_, source) =>
         val stream = source()
           val (lo, hi) = graft.llm.Sketches.bucketBounds(col("value"), 1000L)
           stream
@@ -282,13 +284,9 @@ object StreamRows {
     // user heavy-hitter estimates. The frequency member of the at-ingest
     // sketch pair (stream_distinct is the distinct member). -------------
     replayRow("stream_cms")(name => (s, d) => {
-      val ss = replaySession(s)
       val maxUs = sharedMaxTsUs(s, d)
       val (depth, width) = (3, 256)
-      val sink = graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+      val sink = replay(s, d, "events", name, flush = true) { (_, source) =>
         val stream = source()
           val keys = (0 until depth).map(i => struct(lit(i).as("row"),
             graft.llm.CountMin.bucket(col("item"), i, width).as("bucket")))
@@ -308,6 +306,7 @@ object StreamRows {
         .filter(col("window_start_us") <= maxUs)
       val merged = sink.groupBy(col("row"), col("bucket"))
         .agg(sum(col("cnt")).as("cnt"))
+      val ss = sink.sparkSession
       val probes = ss.range(0, 8)
         .select(col("id").cast("string").as("item"))
       val trueCounts = Tables.eventsUs(ss, d)
@@ -365,13 +364,8 @@ object StreamRows {
       // predicate runs INSIDE the micro-batch, distributed, and must
       // admit the sentinel (pinned user_id=0, value=0.0, far-future ts)
       // or the flush batch would never reach the watermark operator.
-      val ss = replaySession(s)
-      val maxUs = sharedMaxTsUs(s, d)
       val v = col("value")
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+      replay(s, d, "events", name, flush = true) { (_, source) =>
         val stream = source()
         stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
@@ -431,12 +425,7 @@ object StreamRows {
     // from the tumbling case (overlapping state entries per key). Same
     // pre-loaded replay + sentinel flush as stream_window. -----------------
     replayRow("stream_window_sliding")(name => (s, d) => {
-      val ss = replaySession(s)
-      val maxUs = sharedMaxTsUs(s, d)
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L))) { source =>
+      replay(s, d, "events", name, flush = true) { (_, source) =>
         val stream = source()
         stream
           .select(Tables.tsMicros(stream).as("ts_us"), col("event_type"),
@@ -478,9 +467,7 @@ object StreamRows {
       // arrival, not on watermark); the duplicate injection is a
       // streaming self-union inside the micro-batch — the file source
       // scans twice, both distributed
-      val ss = replaySession(s)
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name) { source =>
+      replay(s, d, "events", name) { (_, source) =>
         val stream = source()
           val base = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("event_id"),
@@ -512,12 +499,8 @@ object StreamRows {
       // chain runs distributed inside the micro-batch. The sentinel is a
       // far-future doc_id (the crawl clock), whose unique URL forms its
       // own window group — filtered by its out-of-range keep_doc.
-      val ss = replaySession(s)
       val maxId = sharedMaxDocId(s, d)
-      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        name,
-        sentinel = Some(
-          docsSentinel(ss, d, maxId + 90L * 86400L))) { source =>
+      replay(s, d, "documents", name, flush = true) { (_, source) =>
         val stream = source()
         stream
           .select(col("doc_id"),
@@ -552,13 +535,9 @@ object StreamRows {
       // fire mid-stream and drop/renumber sessions), the sentinel batch
       // closes every open session. Sentinel keyed user_id = −1 so its
       // own session filters out by sign; real keys are non-negative.
-      val ss = replaySession(s)
-      import ss.implicits._
-      val maxUs = sharedMaxTsUs(s, d)
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name,
-        sentinel = Some(
-          eventsSentinel(ss, d, maxUs + 30L * 86400000000L, userId = -1L))) { source =>
+      replay(s, d, "events", name, flush = true, sentinelUser = -1L) {
+          (ss, source) =>
+        import ss.implicits._
         val stream = source()
           val evs = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
@@ -610,10 +589,8 @@ object StreamRows {
       // ONE-batch file-source replay: every event emits immediately (the
       // detector keys state per series and sorts within the batch, so
       // file-scan arrival order cannot matter)
-      val ss = replaySession(s)
-      import ss.implicits._
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name) { source =>
+      replay(s, d, "events", name) { (ss, source) =>
+        import ss.implicits._
         val stream = source()
           val evs = stream
             .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
@@ -672,14 +649,12 @@ object StreamRows {
       // Two independent file-source streams over the same table, both
       // complete in one micro-batch → every interval match emits, no
       // sentinel (see FileReplay.replay)
-      val ss = replaySession(s)
       def slice(stream: DataFrame, tp: String) = stream
         .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
           col("event_id"), col("event_type"))
         .filter(col("user_id") < 30 && col("event_type") === tp)
         .drop("event_type")
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name) { source =>
+      replay(s, d, "events", name) { (_, source) =>
         val (s1, s2) = (source(), source())
         val v = slice(s1, "view")
           .withColumnRenamed("ts_us", "view_ts_us")
@@ -717,11 +692,9 @@ object StreamRows {
     // per micro-batch). Oracle = the equivalent batch join. --------------
     replayRow("stream_enrich")(name => (s, d) => {
       // stateless stream⋈static broadcast enrich → ONE-batch file replay
-      val ss = replaySession(s)
-      val dim = Tables.events(ss, d).select(col("user_id")).distinct()
-        .withColumn("tier", col("user_id") % 5)
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name) { source =>
+      replay(s, d, "events", name) { (ss, source) =>
+        val dim = Tables.events(ss, d).select(col("user_id")).distinct()
+          .withColumn("tier", col("user_id") % 5)
         val stream = source()
         stream
           .select(col("event_id"), col("user_id"),
@@ -746,9 +719,7 @@ object StreamRows {
     replayRow("stream_quality")(name => (s, d) => {
       // stateless gate → ONE-batch file-source replay: the quality rules
       // run distributed inside the micro-batch, no driver round-trip
-      val ss = replaySession(s)
-      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        name) { source =>
+      replay(s, d, "documents", name) { (_, source) =>
         val stream = source()
         TextAnalysis.gopherRules(
             stream.select(col("doc_id"), col("text"), col("source")), "text")
@@ -767,9 +738,7 @@ object StreamRows {
     // batch-equivalent to embed_pq_codes, same oracle) -------------------
     replayRow("stream_pq")(name => (s, d) => {
       // stateless map-only encode → ONE-batch file-source replay
-      val ss = replaySession(s)
-      graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
-        name) { source =>
+      replay(s, d, "embeddings", name) { (_, source) =>
         val stream = source()
         graft.llm.Pq.encode(
             stream.select(col("vec_id"),
@@ -793,9 +762,7 @@ object StreamRows {
     // sequence explode, stateless — the streaming plan IS the batch
     // plan); same oracle as doc_chunks ------------------------------------
     replayRow("stream_chunks")(name => (s, d) => {
-      val ss = replaySession(s)
-      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        name) { source =>
+      replay(s, d, "documents", name) { (_, source) =>
         val stream = source()
         TextAnalysis.chunkDocs(
           stream.select(col("doc_id"), col("text")), "text", "doc_id",
@@ -813,9 +780,7 @@ object StreamRows {
     // store's own encode row, so arriving words append straight into the
     // prefix-cell store's cell-partitioned layout -------------------------
     replayRow("stream_hamming")(name => (s, d) => {
-      val ss = replaySession(s)
-      graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
-        name) { source =>
+      replay(s, d, "embeddings", name) { (_, source) =>
         HammingPrefix.encode(source().select(col("vec_id"),
             col("embedding").cast("array<float>").as("embedding")),
           "vec_id", "embedding")
@@ -838,9 +803,7 @@ object StreamRows {
     // StreamingSpec, the stream_hamming discipline) ----------------------
     replayRow("stream_ivf")(name => (s, d) => {
       val ivf = sharedIvfTrained(s, d)
-      val ss = replaySession(s)
-      graft.streaming.FileReplay.replay(ss, s"$d/embeddings.parquet",
-        name) { source =>
+      replay(s, d, "embeddings", name) { (_, source) =>
         val stream = source()
         stream
           .filter(size(col("embedding")) === 64)
@@ -862,11 +825,9 @@ object StreamRows {
     replayRow("stream_crossdedup")(name => (s, d) => {
       // stateless broadcast anti-join → ONE-batch file-source replay;
       // the fresh-side gate runs inside the micro-batch
-      val ss = replaySession(s)
       val srcNum = expr("cast(substring(source, 4) as int)")
-      val ref = Tables.documents(ss, d).filter(srcNum < 10)
-      graft.streaming.FileReplay.replay(ss, s"$d/documents.parquet",
-        name) { source =>
+      replay(s, d, "documents", name) { (ss, source) =>
+        val ref = Tables.documents(ss, d).filter(srcNum < 10)
         val stream = source()
         Dedup.crossCorpusKeepBroadcast(
           stream.filter(srcNum >= 10)
@@ -899,19 +860,11 @@ object StreamRows {
     // windowed oracle (ts = event_id, unique per series, interval 1000 →
     // TTL 3000).
     replayRow("stream_rate")(name => (s, d) => {
-      // A CHILD session (shared SparkContext, isolated SQLConf) scopes the
-      // state-store partition override to this replay — the parent session
-      // never sees a mutated spark.sql.shuffle.partitions, so concurrent
-      // queries are unaffected. Conf set at builder time (nanosAsLong etc.)
-      // lives in the context conf and is inherited.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      import ss.implicits._
       // One micro-batch in any arrival order: state advances on every
       // sample (getset semantics), and StreamingRate sorts each group's
       // batch by ts, matching the oracle's lag() window order.
-      graft.streaming.FileReplay.replay(ss, s"$d/events.parquet",
-        name) { source =>
+      replay(s, d, "events", name) { (ss, source) =>
+        import ss.implicits._
         StreamingRate(source().filter(col("user_id") < 30)
           .select(
             concat_ws("|", col("user_id"), col("event_type")).as("series"),

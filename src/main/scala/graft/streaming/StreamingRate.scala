@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 import graft.core.Schemas
 
@@ -47,16 +45,11 @@ object RateGuards {
   }
 }
 
-/** Streaming counter→gauge conversion: `flatMapGroupsWithState` keyed by
-  * series×metric, state = last (value, ts), TTL = 3×interval via
-  * processing-time timeout — the exact semantics of the reference's Redis
-  * `getset(key, value, ttl)` state store (`key_value_store.py:131-150`).
-  *
-  * The grouping is relational (`groupBy` on the `series` and `metric`
-  * columns), not a typed key lambda: no `AppendColumns` deserializes each
-  * sample to compute its key and appends a copy of the key to the shuffle,
-  * and the map stage's task binary does not carry the source's input
-  * partitions. The state store's key columns are `series, metric`.
+/** Streaming counter→gauge conversion: a [[KeyedFold]] keyed by the
+  * `series` and `metric` columns, state = last (value, ts), TTL =
+  * 3×interval via processing-time timeout — the exact semantics of the
+  * reference's Redis `getset(key, value, ttl)` state store
+  * (`key_value_store.py:131-150`).
   *
   * Scale: state is partitioned by the same series key used for Kafka
   * partitioning (ST2), so a 1000-executor job shards state with zero
@@ -65,45 +58,29 @@ object RateGuards {
   */
 object StreamingRate {
   /** @param stateTtl when true, expire idle series state with a
-    *   processing-time timeout of 3×interval (the reference's Redis TTL).
-    *   Note: processing-time timeouts make Spark re-trigger micro-batches
-    *   continuously under the default 0-interval trigger — production jobs
-    *   pair this with `Trigger.ProcessingTime(interval)` (ST6). Tests and
-    *   replays use `stateTtl = false`; the Δt > 3×interval guard already
-    *   enforces staleness semantics on emission either way — the timeout
-    *   only bounds state size.
+    *   processing-time timeout of 3×interval (the reference's Redis TTL);
+    *   the expiry emits nothing. Processing-time timeouts make Spark
+    *   re-trigger micro-batches continuously under the default 0-interval
+    *   trigger — production jobs pair this with
+    *   `Trigger.ProcessingTime(interval)` (ST6). Replays use
+    *   `stateTtl = false`; the Δt > 3×interval guard already enforces
+    *   staleness semantics on emission either way — the timeout only
+    *   bounds state size.
     */
+  def fold(stateTtl: Boolean)
+      : KeyedFold[(String, String), MetricSample, (Double, Double), RateResult] =
+    new KeyedFold[(String, String), MetricSample, (Double, Double), RateResult](
+      Seq("series", "metric"), Ordering.by(_.ts),
+      if (stateTtl)
+        KeyedFold.IdleFor(_.interval * Schemas.KvStoreTtlMultiple * 1000L)
+      else KeyedFold.NoTimeout)({ (prev, s) =>
+      val (rate, conf) = RateGuards.compute(prev, s.value, s.ts, s.interval)
+      // getset semantics: state ALWAYS advances, even on skip
+      ((s.value, s.ts),
+       Some(RateResult(s.series, s.metric, s.value, s.ts, rate, conf)))
+    })
+
   def apply(ds: Dataset[MetricSample],
-            stateTtl: Boolean = true): Dataset[RateResult] = {
-    implicit val outEnc = Encoders.product[RateResult]
-    implicit val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    implicit val stateEnc = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-    val timeoutMode =
-      if (stateTtl) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    ds.toDF().groupBy(col("series"), col("metric"))
-      .as[(String, String), MetricSample](keyEnc, ds.encoder)
-      .flatMapGroupsWithState[(Double, Double), RateResult](
-        OutputMode.Append, timeoutMode) {
-        case (_, samples, state: GroupState[(Double, Double)]) =>
-          if (state.hasTimedOut) {
-            state.remove() // Redis TTL expiry
-            Iterator.empty
-          } else {
-            var prev: Option[(Double, Double)] = state.getOption
-            val out = samples.toSeq.sortBy(_.ts).map { s =>
-              val (rate, conf) =
-                RateGuards.compute(prev, s.value, s.ts, s.interval)
-              // getset semantics: state ALWAYS advances, even on skip
-              prev = Some((s.value, s.ts))
-              state.update((s.value, s.ts))
-              if (stateTtl)
-                state.setTimeoutDuration(
-                  s.interval * Schemas.KvStoreTtlMultiple * 1000L)
-              RateResult(s.series, s.metric, s.value, s.ts, rate, conf)
-            }
-            out.iterator
-          }
-      }
-  }
+            stateTtl: Boolean = true): Dataset[RateResult] =
+    fold(stateTtl)(ds)
 }

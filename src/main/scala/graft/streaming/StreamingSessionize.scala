@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One clickstream event entering the streaming sessionizer. `ts` is the
   * watermarked event-time column (must survive into this Dataset so the
@@ -45,9 +44,9 @@ case class OpenSession(
     cents: Long,
     types: Set[String])
 
-/** Streaming gap-based sessionization: `flatMapGroupsWithState` keyed by
-  * user, state = the one open session, event-time timeout = session end +
-  * gap. A session closes (and emits its aggregates) either when a later
+/** Streaming gap-based sessionization: a [[KeyedFold]] keyed by the
+  * `userId` column, state = the one open session, event-time timeout =
+  * session end + gap. A session closes (and emits its aggregates) either when a later
   * event of the same user arrives past the gap, or when the watermark
   * passes `end + gap` with no such event (the timeout path).
   *
@@ -66,59 +65,34 @@ case class OpenSession(
   */
 object StreamingSessionize {
 
-  def apply(ds: Dataset[SessionEvent], gapMicros: Long): Dataset[SessionOut] = {
-    implicit val outEnc = Encoders.product[SessionOut]
-    implicit val stateEnc = Encoders.product[OpenSession]
-    implicit val keyEnc = Encoders.scalaLong
-
+  def fold(gapMicros: Long)
+      : KeyedFold[Long, SessionEvent, OpenSession, SessionOut] = {
     def close(user: Long, s: OpenSession): SessionOut =
       SessionOut(user, s.seq, s.n, s.startUs, s.endUs, s.endUs - s.startUs,
         s.types.size.toLong, s.cents / 100.0)
-
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState[OpenSession, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (user, events, state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // Watermark passed end + gap with no successor event: the open
-            // session is final. State drops with it (see scaladoc caveat).
-            val closed = close(user, state.get)
-            state.remove()
-            Iterator.single(closed)
-          } else {
-            // Within a batch, a key's events fold in (ts, event_id) order —
-            // the same total order as the batch window operator.
-            val sorted = events.toSeq.sortBy(e => (e.tsUs, e.eventId))
-            val out = scala.collection.mutable.ListBuffer.empty[SessionOut]
-            var open: Option[OpenSession] = state.getOption
-            sorted.foreach { e =>
-              open = open match {
-                case Some(s) if e.tsUs - s.endUs <= gapMicros =>
-                  Some(s.copy(
-                    endUs = math.max(s.endUs, e.tsUs),
-                    n = s.n + 1,
-                    cents = s.cents + e.valueCents,
-                    types = s.types + e.eventType))
-                case Some(s) =>
-                  out += close(user, s)
-                  Some(OpenSession(s.seq + 1, e.tsUs, e.tsUs, 1L,
-                    e.valueCents, Set(e.eventType)))
-                case None =>
-                  Some(OpenSession(1L, e.tsUs, e.tsUs, 1L,
-                    e.valueCents, Set(e.eventType)))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              // Fire once the watermark proves no in-gap successor can
-              // arrive: strictly past end+gap, rounded UP to the timeout's
-              // ms granularity (truncating would close sub-ms-gap sessions
-              // a hair early). endUs >= this batch's event times >=
-              // watermark, so the timestamp is always legally in the future.
-              state.setTimeoutTimestamp((s.endUs + gapMicros) / 1000L + 1L)
-            }
-            out.iterator
-          }
-      }
+    def open(seq: Long, e: SessionEvent): OpenSession =
+      OpenSession(seq, e.tsUs, e.tsUs, 1L, e.valueCents, Set(e.eventType))
+    new KeyedFold[Long, SessionEvent, OpenSession, SessionOut](
+      // a key's events fold in (ts, event_id) order — the same total
+      // order as the batch window operator
+      Seq("userId"), Ordering.by(e => (e.tsUs, e.eventId)),
+      // Fire once the watermark proves no in-gap successor can arrive:
+      // strictly past end+gap, rounded UP to the timeout's ms granularity
+      // (truncating would close sub-ms-gap sessions a hair early). endUs >=
+      // this batch's event times >= watermark, so the timestamp is always
+      // legally in the future.
+      KeyedFold.FireAt(s => (s.endUs + gapMicros) / 1000L + 1L),
+      // Watermark passed end + gap with no successor event: the open
+      // session is final. State drops with it (see scaladoc caveat).
+      (user, s) => Iterator.single(close(user, s)))({
+      case (Some(s), e) if e.tsUs - s.endUs <= gapMicros =>
+        (s.copy(endUs = math.max(s.endUs, e.tsUs), n = s.n + 1,
+          cents = s.cents + e.valueCents, types = s.types + e.eventType), None)
+      case (Some(s), e) => (open(s.seq + 1, e), Some(close(e.userId, s)))
+      case (None, e) => (open(1L, e), None)
+    })
   }
+
+  def apply(ds: Dataset[SessionEvent], gapMicros: Long): Dataset[SessionOut] =
+    fold(gapMicros)(ds)
 }

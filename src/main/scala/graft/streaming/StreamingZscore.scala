@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One scored event entering the online anomaly detector. `valueCents` is
   * the value as decimal(18,2) scaled to integer cents — the running sums
@@ -38,55 +37,40 @@ case class ZscoreOut(
   * state size is. */
 case class RunningMoments(n: Long, sumCents: Long, sumSqCents2: Long)
 
-/** Streaming per-series anomaly detection: `flatMapGroupsWithState` keyed
-  * by series, state = exact running moments, each event emitted with its
-  * z-score against the series' PRIOR distribution. The streaming analog of
-  * `events_zscore`, with the same decimal-exact float discipline, verified
-  * against a DuckDB prefix-window oracle.
+/** Streaming per-series anomaly detection: a [[KeyedFold]] keyed by the
+  * `userId` column, state = exact running moments, each event emitted with
+  * its z-score against the series' PRIOR distribution. The streaming analog
+  * of `events_zscore`, with the same decimal-exact float discipline,
+  * verified against a DuckDB prefix-window oracle.
   *
   * Scale: state is three longs per series — millions of series cost tens
   * of MB, sharded by the group key (one hash shuffle, zero cross-key
   * traffic). Within a micro-batch events process in (ts, event_id) order;
   * cross-batch order is the source's per-key ordering guarantee (ST2 —
-  * Kafka partitions by series key). Production jobs bound idle-series
-  * state with a processing-time timeout exactly as [[StreamingRate]] does;
-  * the replay harness leaves state unexpired.
+  * Kafka partitions by series key). The operator sets no timeout: a
+  * series' moments stay in state for the life of the query.
   */
 object StreamingZscore {
 
-  def apply(ds: Dataset[ZscoreEvent],
-            threshold: Double = 2.0): Dataset[ZscoreOut] = {
-    implicit val outEnc = Encoders.product[ZscoreOut]
-    implicit val stateEnc = Encoders.product[RunningMoments]
-    implicit val keyEnc = Encoders.scalaLong
+  def fold(threshold: Double)
+      : KeyedFold[Long, ZscoreEvent, RunningMoments, ZscoreOut] =
+    new KeyedFold[Long, ZscoreEvent, RunningMoments, ZscoreOut](
+      Seq("userId"), Ordering.by(e => (e.tsUs, e.eventId)))({ (prior, e) =>
+      val s = prior.getOrElse(RunningMoments(0L, 0L, 0L))
+      // score against PRIOR moments, mirroring the oracle's
+      // ROWS UNBOUNDED PRECEDING AND 1 PRECEDING window exactly
+      val nD = s.n.toDouble
+      val sumD = s.sumCents / 100.0
+      val variance = (s.sumSqCents2 / 10000.0 - sumD * sumD / nD) / (nD - 1.0)
+      val z = Option.when(s.n >= 2 && variance > 0)(
+        (e.value - sumD / nD) / math.sqrt(variance))
+      (RunningMoments(s.n + 1, s.sumCents + e.valueCents,
+         s.sumSqCents2 + e.valueCents * e.valueCents),
+       Some(ZscoreOut(e.userId, e.eventId, e.tsUs, e.value, s.n, z,
+         z.exists(v => math.abs(v) > threshold))))
+    })
 
-    ds.groupByKey(_.userId)
-      .flatMapGroupsWithState[RunningMoments, ZscoreOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[ZscoreEvent],
-         state: GroupState[RunningMoments]) =>
-          var s = state.getOption.getOrElse(RunningMoments(0L, 0L, 0L))
-          val out = events.toSeq.sortBy(e => (e.tsUs, e.eventId)).map { e =>
-            // score against PRIOR moments, mirroring the oracle's
-            // ROWS UNBOUNDED PRECEDING AND 1 PRECEDING window exactly
-            val z: Option[Double] =
-              if (s.n >= 2) {
-                val nD = s.n.toDouble
-                val sumD = s.sumCents / 100.0
-                val sumSqD = s.sumSqCents2 / 10000.0
-                val variance = (sumSqD - sumD * sumD / nD) / (nD - 1.0)
-                if (variance > 0)
-                  Some((e.value - sumD / nD) / math.sqrt(variance))
-                else None
-              } else None
-            val row = ZscoreOut(user, e.eventId, e.tsUs, e.value, s.n, z,
-              z.exists(v => math.abs(v) > threshold))
-            s = RunningMoments(s.n + 1, s.sumCents + e.valueCents,
-              s.sumSqCents2 + e.valueCents * e.valueCents)
-            row
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
+  def apply(ds: Dataset[ZscoreEvent],
+            threshold: Double = 2.0): Dataset[ZscoreOut] =
+    fold(threshold)(ds)
 }

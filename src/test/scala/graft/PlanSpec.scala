@@ -581,6 +581,66 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("stateful stream operators key their state by named columns, with " +
+    "no AppendColumns, over a MemoryStream and in their rows' micro-batches") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, FlatMapGroupsWithState, LogicalPlan}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.streaming._
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def stateKeys(p: LogicalPlan) = {
+      assert(p.collect { case a: AppendColumns => a }.isEmpty, p)
+      p.collect { case f: FlatMapGroupsWithState => f.groupingAttributes.map(_.name) }
+    }
+    val series = Seq("series", "metric")
+    val user = Seq("userId")
+    val own = Seq(
+      StreamingRate(MemoryStream[MetricSample].toDS()).queryExecution -> series,
+      StreamingZscore(MemoryStream[ZscoreEvent].toDS()).queryExecution -> user,
+      StreamingSessionize(MemoryStream[SessionEvent].toDS()
+        .withWatermark("ts", "1 hour"), 100L).queryExecution -> user)
+    // a streaming frame is planned only once started: read the analyzed plan
+    for ((qe, keys) <- own)
+      assert(stateKeys(qe.analyzed) == Seq(keys), qe.analyzed)
+
+    // a row's micro-batches run inside its replay: read their executed
+    // plans from the SQL execution events, which carry the stream's name
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s)
+        case _ =>
+      }
+    }
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    spark.sparkContext.addSparkListener(listener)
+    try for ((row, keys) <- Seq("stream_rate" -> series,
+                                "stream_zscore" -> user, "stream_sessionize" -> user)) {
+      SparkEntry.queries(row)(spark, sf001)
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        import scala.jdk.CollectionConverters._
+        val batches = started.asScala.toSeq
+          .filter(_.description.startsWith(s"${row}_"))
+          .map(e => nodes(e.sparkPlanInfo))
+          .filter(_.exists(_.nodeName == "FlatMapGroupsWithState"))
+        assert(batches.nonEmpty, row)
+        for (plan <- batches) {
+          assert(!plan.exists(_.nodeName.startsWith("AppendColumns")), row)
+          // the operator's required child sort is on its state key columns
+          val sort = plan.dropWhile(_.nodeName != "FlatMapGroupsWithState")
+            .find(_.nodeName == "Sort").map(_.simpleString).getOrElse("")
+          assert("""(\w+)#\d+""".r.findAllMatchIn(sort).map(_.group(1)).toSeq == keys,
+            s"$row: $sort")
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("contamination report broadcasts the eval side like the base op") {
     val p = plan("contamination_report")
     assert(p.contains("BroadcastHashJoin"), p)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.{KafkaShaped, MetricSample, RateGuards, SessionEvent,
-  SessionOut, StreamingRate, StreamingSessionize, StreamingZscore,
-  ZscoreEvent, ZscoreOut}
+import graft.streaming.{KafkaShaped, MetricSample, OpenSession, RateGuards,
+  SessionEvent, SessionOut, StreamingRate, StreamingSessionize,
+  StreamingZscore, ZscoreEvent, ZscoreOut}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -97,10 +97,51 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  // NOTE: no test drives stateTtl=true under the default trigger — with
-  // ProcessingTimeTimeout Spark re-triggers micro-batches continuously to
-  // fire timeouts, so a processAllAvailable-based test livelocks; the
-  // production pairing is Trigger.ProcessingTime (see StreamingRate docs).
+  test("keyed fold timeouts and expiry, driven without a live stream") {
+    // A live stateTtl = true query livelocks processAllAvailable (a
+    // ProcessingTimeTimeout re-triggers micro-batches continuously), so
+    // the fold's group function runs here against Spark's TestGroupState.
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.GroupStateTimeout.{EventTimeTimeout, ProcessingTimeTimeout}
+    import org.apache.spark.sql.streaming.TestGroupState
+    val rate = StreamingRate.fold(stateTtl = true)
+    val now = 5000000L
+    val live = TestGroupState.create[(Double, Double)](Optional.empty(),
+      ProcessingTimeTimeout, now, Optional.empty[Long](), false)
+    val rates = rate.group(("s", "m"), Iterator(
+      MetricSample("s", "m", 120.0, 1060.0, 60),
+      MetricSample("s", "m", 0.0, 1000.0, 60)), live).map(_.rate).toList
+    assert(rates == List(None, Some(2L)))
+    // the state is the last sample; the TTL is 3 × interval from now
+    assert(live.get == ((120.0, 1060.0)) && live.isUpdated)
+    assert(live.getTimeoutTimestampMs.get == now + 3L * 60L * 1000L)
+    // the TTL fires: the state goes, nothing is emitted
+    val idle = TestGroupState.create[(Double, Double)](
+      Optional.of((120.0, 1060.0)), ProcessingTimeTimeout, now,
+      Optional.empty[Long](), true)
+    assert(rate.group(("s", "m"), Iterator.empty, idle).isEmpty)
+    assert(idle.isRemoved && !idle.exists)
+
+    def ev(tsUs: Long, id: Long, tp: String, cents: Long) =
+      SessionEvent(7L, new java.sql.Timestamp(tsUs / 1000L), tsUs, id, tp, cents)
+    val gap = 100L
+    val sess = StreamingSessionize.fold(gap)
+    val watermark = 9000L
+    val open = TestGroupState.create[OpenSession](Optional.empty(),
+      EventTimeTimeout, now, Optional.of(watermark), false)
+    assert(sess.group(7L, Iterator(ev(10000050L, 2, "click", 50),
+      ev(10000000L, 1, "view", 100)), open).isEmpty)
+    assert(open.get == OpenSession(1L, 10000000L, 10000050L, 2L, 150L,
+      Set("view", "click")))
+    // fires strictly past end + gap, rounded up to the next ms
+    assert(open.getTimeoutTimestampMs.get == (10000050L + gap) / 1000L + 1L)
+    // the watermark passed it: the open session is emitted, state drops
+    val due = TestGroupState.create[OpenSession](Optional.of(open.get),
+      EventTimeTimeout, now, Optional.of(20000L), true)
+    assert(sess.group(7L, Iterator.empty, due).toList ==
+      List(SessionOut(7L, 1L, 2L, 10000000L, 10000050L, 50L, 2L, 1.5)))
+    assert(due.isRemoved && !due.exists)
+  }
 
   test("guards agree between batch-Column and streaming-Scala forms") {
     // same cases as the golden 8-step spec, via the shared pure function
