@@ -27,7 +27,7 @@ object Cohorts {
     require(stepMicros > 0, s"stepMicros=$stepMicros must be positive")
     val ts = col(tsMicrosCol)
     val act = df.select(col(userCol).as("__user"),
-        (ts - (ts % lit(stepMicros))).cast("long").as("period"))
+        TimeSeries.bucket(ts, stepMicros).as("period"))
       .repartition(col("__user"))
       .dropDuplicates("__user", "period")
     val cohort = min(col("period"))

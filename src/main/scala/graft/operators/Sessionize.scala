@@ -52,8 +52,7 @@ object Sessionize {
         max(col(tsCol)).as("end_us"),
         (max(col(tsCol)) - min(col(tsCol))).as("duration_us"),
         countDistinct(col(typeCol)).as("n_types"),
-        sum(col(valueCol).cast("decimal(18,2)")).cast("double")
-          .as("value_sum"))
+        TimeSeries.exactSum(col(valueCol)).as("value_sum"))
 
   /** Strict-order funnel: how far each key progresses through `steps`, where
     * step i+1 must occur strictly after the (earliest-completion) time of

@@ -18,6 +18,19 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeries {
 
+  /** The exact sum of `c` fixed to `scale` decimals, surfaced as a
+    * double: the decimal sum is order-free, so every engine and every
+    * partitioning gives the same double. */
+  def exactSum(c: Column, scale: Int = 2): Column =
+    sum(c.cast(s"decimal(18,$scale)")).cast("double")
+
+  /** The start of the `stepMicros` grid cell of `ts` (integer µs):
+    * `ts - ts % step`. `%` truncates toward zero in both Spark and DuckDB,
+    * so negative timestamps bucket the same in either engine (pmod's
+    * floor semantics would not). */
+  def bucket(ts: Column, stepMicros: Long): Column =
+    (ts - (ts % lit(stepMicros))).cast("long")
+
   /** Per-series z-score anomaly flags: each row gets its series' mean and
     * sample stddev, its z-score, and a flag when |z| exceeds `threshold`.
     *
@@ -152,11 +165,8 @@ object TimeSeries {
     require(stepMicros > 0, s"stepMicros=$stepMicros must be positive")
     val sc = seriesCols.map(col)
     val ts = col(tsMicrosCol)
-    // exact integer grid-snap (ts - ts % step); `%` truncates toward
-    // zero in both Spark and DuckDB, so negative timestamps bucket the
-    // same in either engine (pmod's floor semantics would not)
     val bucketed = df
-      .withColumn("bucket", (ts - (ts % lit(stepMicros))).cast("long"))
+      .withColumn("bucket", bucket(ts, stepMicros))
       .repartition(sc: _*)
       .groupBy(sc :+ col("bucket"): _*)
       .agg(max(col(valueCol).cast("double")).as("v"))
@@ -241,7 +251,7 @@ object TimeSeries {
     val ord = ohlcOrderKey(ts, col(idCol))
     val v = col(valueCol).cast("double")
     df.filter(col(valueCol).isNotNull)
-      .withColumn("bucket", (ts - (ts % lit(stepMicros))).cast("long"))
+      .withColumn("bucket", bucket(ts, stepMicros))
       .groupBy(sc :+ col("bucket"): _*)
       .agg(
         min_by(v, ord).as("open"),
@@ -294,15 +304,14 @@ object TimeSeries {
     val sc = seriesCols.map(col)
     val ts = col(tsMicrosCol)
     val base = df.filter(col(valueCol).isNotNull)
-      .withColumn("bucket", (ts - (ts % lit(stepMicros))).cast("long"))
+      .withColumn("bucket", bucket(ts, stepMicros))
       .repartition(sc: _*)
       .localCheckpoint()
     val means = base
       .groupBy(sc :+ col("bucket"): _*)
       .agg((sum(ts.cast("decimal(38,0)")).cast("double") /
         count(lit(1)).cast("double")).as("mx"),
-        (sum(col(valueCol).cast("decimal(18,2)")).cast("double") /
-          count(lit(1)).cast("double")).as("my"),
+        (exactSum(col(valueCol)) / count(lit(1)).cast("double")).as("my"),
         count(lit(1)).as("n_in_bucket"))
     val w = Window.partitionBy(sc: _*).orderBy(col("bucket"))
     val anchored = means
@@ -359,7 +368,7 @@ object TimeSeries {
     val sc = seriesCols.map(col)
     val ts = col(tsMicrosCol)
     val bucketed = df
-      .withColumn("bucket", (ts - (ts % lit(stepMicros))).cast("long"))
+      .withColumn("bucket", bucket(ts, stepMicros))
       .repartition(sc: _*)
       .groupBy(sc :+ col("bucket"): _*)
       .agg(sum(col(valueCol).cast("decimal(18,2)")).as("bsum"),
@@ -420,7 +429,7 @@ object TimeSeries {
     val sc = seriesCols.map(col)
     val ts = col(tsMicrosCol)
     val bucketed = df
-      .withColumn("bucket", (ts - (ts % lit(stepMicros))).cast("long"))
+      .withColumn("bucket", bucket(ts, stepMicros))
       .repartition(sc: _*)
       .groupBy(sc :+ col("bucket"): _*)
       .agg(count(lit(1)).as("n"),

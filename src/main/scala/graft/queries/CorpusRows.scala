@@ -117,42 +117,14 @@ object CorpusRows {
          |  FROM documents),
          |${hllCtes("h0")},
          |dc AS (SELECT source, count(*) AS docs FROM documents GROUP BY 1),
-         |srcq AS (
-         |  SELECT source,
-         |         CAST(CAST(floor(n_chars * 1.0) AS BIGINT) AS VARCHAR)
-         |           AS gs
-         |  FROM documents WHERE n_chars >= 0),
-         |b AS (SELECT source,
-         |        CAST(substr(gs, 1, 2) ||
-         |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-         |          AS lo,
-         |        CAST(CAST(CAST(substr(gs, 1, 2) AS BIGINT) + 1
-         |               AS VARCHAR) ||
-         |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-         |          AS hi
-         |      FROM srcq),
-         |cnts AS (SELECT source, lo, hi, count(*) AS cnt
-         |         FROM b GROUP BY 1, 2, 3),
-         |cum AS (SELECT *,
-         |          SUM(cnt) OVER (PARTITION BY source ORDER BY lo) AS cum,
-         |          SUM(cnt) OVER (PARTITION BY source) AS n
-         |        FROM cnts),
-         |wp AS (SELECT *, unnest([0.5, 0.9, 0.99]) AS p FROM cum),
-         |sel AS (SELECT *, p * CAST(n AS DOUBLE) AS t FROM wp),
-         |pick AS (SELECT * FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY source, p
-         |                               ORDER BY lo) AS rn
-         |  FROM sel WHERE CAST(cum AS DOUBLE) >= t) WHERE rn = 1),
-         |est AS (SELECT source, p,
-         |          round((CAST(lo AS DOUBLE) + CAST(hi - lo AS DOUBLE) *
-         |                 (t - CAST(cum - cnt AS DOUBLE)) /
-         |                 CAST(cnt AS DOUBLE)) / 1.0, 6) AS est
-         |        FROM pick),
+         |srcq AS (SELECT source, n_chars AS v FROM documents
+         |         WHERE n_chars >= 0),
+         |${hdrCtes("srcq", Seq("source"), Seq(0.5, 0.9, 0.99), 1L)},
          |q AS (SELECT source,
          |        max(CASE WHEN p = 0.5 THEN est END) AS len_p50,
          |        max(CASE WHEN p = 0.9 THEN est END) AS len_p90,
          |        max(CASE WHEN p = 0.99 THEN est END) AS len_p99
-         |      FROM est GROUP BY 1)
+         |      FROM quant GROUP BY 1)
          |SELECT dc.source, CAST(dc.docs AS BIGINT) AS docs,
          |       CAST(den.tokens AS BIGINT) AS tokens,
          |       CASE WHEN $EstC / CAST(den.s_int AS DOUBLE) <= 640.0

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{AsofJoin, Cohorts, GroupAssembly, RangeJoin,
   Sessionize, Skew, TimeSeries}
+import graft.operators.TimeSeries.exactSum
 import graft.dsl.{MetricsDsl, ResourceFilter}
 import graft.dsl.MetricsDsl.{GroupConfig, TargetSpec}
 
@@ -19,8 +20,6 @@ object MetricsRows {
     * layout audit quantizes hours against. */
   private val Epoch2024Us = 1704067200000000L
 
-  private val DayMicros = 86400000000L
-
   /** DuckDB Morton-interleave of the low `bits` bits of two integer
     * expressions — mirror of [[graft.operators.Layout.zorderKey2]]. */
   private def zorderKeySql(x: String, y: String, bits: Int): String = {
@@ -30,6 +29,49 @@ object MetricsRows {
         s"((((($y) & $mask) >> $i) & 1) << ${2 * i + 1})"
     }.mkString("(", " + ", ")")
   }
+
+  /** An as-of row: `join` matches each view to one of its user's
+    * purchases (one per instant, at its largest value), kept as
+    * `(event_id, user_id, ts_us, purchase_ts, purchase_value)`. */
+  private def asof(join: (DataFrame, DataFrame) => DataFrame)(
+      s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.eventsUs(s, d)
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("ts_us"), col("event_id"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"), col("ts_us").as("purchase_ts"))
+      .agg(max(col("value")).as("purchase_value"))
+    join(views, purchases)
+      .select("event_id", "user_id", "ts_us", "purchase_ts", "purchase_value")
+  }
+
+  /** The SQL twin of [[asof]]'s sides: CTEs `l` (the views) and `r` (each
+    * user's purchase instants at their largest value). */
+  private val asofCtes =
+    """l AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
+      |  WHERE event_type = 'view'),
+      |r AS (
+      |  SELECT user_id, epoch_us(ts) AS purchase_ts,
+      |         max(value) AS purchase_value
+      |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)""".stripMargin
+
+  /** The group over [[sensorTables]]: a reading per named sensor (absent
+    * where its table has no value) and its scale. */
+  private val sensorConfig = GroupConfig("environment", 60,
+    dimensions = Map("sensor" -> TargetSpec("sensor_name.$index")),
+    metrics = Map(
+      "reading" -> TargetSpec("int(sensor_value.$index)", valueType = "int",
+        indicesFrom = Some("sensor_name")),
+      "scale" -> TargetSpec("int(sensor_scale.$index)", valueType = "int")))
+
+  /** The SQL twin of [[sensorTables]]: the named parts `p`, each with its
+    * reading's part `v` where it has one. */
+  private val sensorJoinSql =
+    """FROM part p
+      |LEFT JOIN (SELECT p_partkey, p_size FROM part WHERE p_size > 25) v
+      |  ON v.p_partkey = p.p_partkey
+      |WHERE p.p_name != ''""".stripMargin
 
   private def resourceCols(df: DataFrame): DataFrame =
     df.select("resource_id", "resource_site", "resource_subclass",
@@ -59,22 +101,11 @@ object MetricsRows {
     // microseconds at parquet read, so both engines quantize to exact µs
     // (`ts div 1000` ↔ `epoch_us(ts)`) before comparing gaps.
     Row("sessionize", (s, d) =>
-      Sessionize.assign(
-        Tables.eventsUs(s, d),
-        "user_id", "ts_us", "event_id", gapMicros = 86400L * 1000000L)
+      sessions(Tables.eventsUs(s, d))
         .select("event_id", "user_id", "session_seq"),
-      """WITH x AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS tsn,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |             ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events)
-        |SELECT event_id, user_id,
-        |       CAST(sum(CASE WHEN prev IS NULL
-        |                       OR tsn - prev > 86400000000
-        |                     THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |FROM x""".stripMargin),
+      s"""WITH ${sessionsCtes()}
+         |SELECT event_id, user_id, CAST(session_seq AS BIGINT) AS session_seq
+         |FROM s""".stripMargin),
 
     // --- top session paths: ordered event-type sequences, capped at 5
     // steps, counted corpus-wide ---------------------------------------------
@@ -82,56 +113,24 @@ object MetricsRows {
       Sessionize.pathsTopK(
         Tables.eventsUs(s, d),
         "user_id", "ts_us", "event_id", "event_type",
-        gapMicros = 86400L * 1000000L, maxSteps = 5, topN = 20),
-      """WITH x AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS tsn,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |             ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events),
-        |g AS (
-        |  SELECT *, sum(CASE WHEN prev IS NULL
-        |                       OR tsn - prev > 86400000000
-        |                     THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |                  ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM x),
-        |p AS (
-        |  SELECT user_id, session_seq,
-        |         array_to_string(
-        |           (list(event_type ORDER BY tsn, event_id))[1:5], '>')
-        |           AS path
-        |  FROM g GROUP BY 1, 2)
-        |SELECT path, count(*) AS n_sessions FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
+        gapMicros = SessionGapUs, maxSteps = 5, topN = 20),
+      s"""WITH ${sessionsCtes()},
+         |p AS (
+         |  SELECT user_id, session_seq,
+         |         array_to_string(
+         |           (list(event_type ORDER BY tsn, event_id))[1:5], '>')
+         |           AS path
+         |  FROM s GROUP BY 1, 2)
+         |SELECT path, count(*) AS n_sessions FROM p GROUP BY path
+         |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
 
     // --- per-session aggregates ---------------------------------------------
     Row("session_stats", (s, d) =>
-      Sessionize.stats(
-        Sessionize.assign(
-          Tables.eventsUs(s, d),
-          "user_id", "ts_us", "event_id", gapMicros = 86400L * 1000000L),
+      Sessionize.stats(sessions(Tables.eventsUs(s, d)),
         "user_id", "ts_us", "event_type", "value")
         .select("user_id", "session_seq", "n_events", "start_us", "end_us",
           "duration_us", "n_types", "value_sum"),
-      """WITH x AS (
-        |  SELECT event_id, user_id, event_type, value, epoch_us(ts) AS tsn,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |             ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events),
-        |s AS (
-        |  SELECT *, sum(CASE WHEN prev IS NULL
-        |                       OR tsn - prev > 86400000000
-        |                     THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |                  ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM x)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        |       count(*) AS n_events,
-        |       min(tsn) AS start_us, max(tsn) AS end_us,
-        |       max(tsn) - min(tsn) AS duration_us,
-        |       count(DISTINCT event_type) AS n_types,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM s GROUP BY 1, 2""".stripMargin),
+      sessionStatsSql()),
 
     // --- strict-order funnel: view → click → purchase per user --------------
     Row("session_funnel", (s, d) =>
@@ -168,124 +167,60 @@ object MetricsRows {
     // --- as-of join: latest purchase at or before each view, per user ------
     // Union+window (one shuffle, no range explosion) vs DuckDB's native
     // ASOF JOIN — two independent algorithms, same answer.
-    Row("asof_join", (s, d) => {
-      val ev = Tables.eventsUs(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts_us").as("purchase_ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      AsofJoin.leftAsof(views, purchases, "user_id", "ts_us", "purchase_ts",
-        asofTsName = "purchase_ts")
-        .select("event_id", "user_id", "ts_us", "purchase_ts",
-          "purchase_value")
-    },
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'view'),
-        |r AS (
-        |  SELECT user_id, epoch_us(ts) AS purchase_ts,
-        |         max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.ts_us,
-        |       r.purchase_ts, r.purchase_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts_us >= r.purchase_ts""".stripMargin),
+    Row("asof_join", asof(AsofJoin.leftAsof(_, _, "user_id", "ts_us",
+        "purchase_ts", asofTsName = "purchase_ts")),
+      s"""WITH $asofCtes
+         |SELECT l.event_id, l.user_id, l.ts_us,
+         |       r.purchase_ts, r.purchase_value
+         |FROM l ASOF LEFT JOIN r
+         |  ON l.user_id = r.user_id AND l.ts_us >= r.purchase_ts""".stripMargin),
 
     // --- as-of join with a tolerance: latest purchase at or before each
     // view AND within 7 days — stale matches age out (the reference-data
     // freshness guard every point-in-time lookup wants) ------------------
-    Row("asof_join_tol", (s, d) => {
-      val ev = Tables.eventsUs(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts_us").as("purchase_ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      AsofJoin.leftAsof(views, purchases, "user_id", "ts_us", "purchase_ts",
-        asofTsName = "purchase_ts",
-        tolerance = Some(7L * 86400000000L))
-        .select("event_id", "user_id", "ts_us", "purchase_ts",
-          "purchase_value")
-    },
+    Row("asof_join_tol", asof(AsofJoin.leftAsof(_, _, "user_id", "ts_us",
+        "purchase_ts", asofTsName = "purchase_ts",
+        tolerance = Some(7L * DayUs))),
       // tolerance can't ride DuckDB's ASOF JOIN — the LATERAL top-1 is
       // the equivalent formulation (latest in-window match, else NULLs)
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'view'),
-        |r AS (
-        |  SELECT user_id, epoch_us(ts) AS purchase_ts,
-        |         max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.ts_us,
-        |       pb.purchase_ts, pb.purchase_value
-        |FROM l LEFT JOIN LATERAL (
-        |  SELECT purchase_ts, purchase_value FROM r
-        |  WHERE r.user_id = l.user_id AND r.purchase_ts <= l.ts_us
-        |    AND r.purchase_ts >= l.ts_us - 604800000000
-        |  ORDER BY r.purchase_ts DESC LIMIT 1) pb ON true""".stripMargin),
+      s"""WITH $asofCtes
+         |SELECT l.event_id, l.user_id, l.ts_us,
+         |       pb.purchase_ts, pb.purchase_value
+         |FROM l LEFT JOIN LATERAL (
+         |  SELECT purchase_ts, purchase_value FROM r
+         |  WHERE r.user_id = l.user_id AND r.purchase_ts <= l.ts_us
+         |    AND r.purchase_ts >= l.ts_us - ${7L * DayUs}
+         |  ORDER BY r.purchase_ts DESC LIMIT 1) pb ON true""".stripMargin),
 
     // --- forward as-of: next purchase at-or-after each view (labeling) -----
-    Row("asof_join_fwd", (s, d) => {
-      val ev = Tables.eventsUs(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts_us").as("purchase_ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      AsofJoin.leftAsofForward(views, purchases, "user_id", "ts_us",
-        "purchase_ts", asofTsName = "purchase_ts")
-        .select("event_id", "user_id", "ts_us", "purchase_ts",
-          "purchase_value")
-    },
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'view'),
-        |r AS (
-        |  SELECT user_id, epoch_us(ts) AS purchase_ts,
-        |         max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.ts_us,
-        |       r.purchase_ts, r.purchase_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts_us <= r.purchase_ts""".stripMargin),
+    Row("asof_join_fwd", asof(AsofJoin.leftAsofForward(_, _, "user_id",
+        "ts_us", "purchase_ts", asofTsName = "purchase_ts")),
+      s"""WITH $asofCtes
+         |SELECT l.event_id, l.user_id, l.ts_us,
+         |       r.purchase_ts, r.purchase_value
+         |FROM l ASOF LEFT JOIN r
+         |  ON l.user_id = r.user_id AND l.ts_us <= r.purchase_ts""".stripMargin),
 
     // --- NEAREST as-of: the closest purchase on either side of each
     // view (ties → the earlier one) — both directions in ONE window
     // pass over the union frame; oracle is a per-row lateral min-
     // distance lookup, a genuinely different algorithm -------------------
-    Row("asof_join_near", (s, d) => {
-      val ev = Tables.eventsUs(s, d)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts_us"), col("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts_us").as("purchase_ts"))
-        .agg(max(col("value")).as("purchase_value"))
-      AsofJoin.leftAsofNearest(views, purchases, "user_id", "ts_us",
-        "purchase_ts", asofTsName = "purchase_ts")
-        .select("event_id", "user_id", "ts_us", "purchase_ts",
-          "purchase_value")
-    },
+    Row("asof_join_near", asof(AsofJoin.leftAsofNearest(_, _, "user_id",
+        "ts_us", "purchase_ts", asofTsName = "purchase_ts")),
       // nearest-on-either-side via a correlated lateral min-distance
       // pick (ORDER BY distance, ts LIMIT 1 — tie → earlier), vs the
       // engine's one-pass two-frame window kernel
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'view'),
-        |r AS (
-        |  SELECT user_id, epoch_us(ts) AS purchase_ts,
-        |         max(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT l.event_id, l.user_id, l.ts_us,
-        |       m.purchase_ts, m.purchase_value
-        |FROM l LEFT JOIN LATERAL (
-        |  SELECT r.purchase_ts, r.purchase_value
-        |  FROM r WHERE r.user_id = l.user_id
-        |  ORDER BY CASE WHEN l.ts_us >= r.purchase_ts
-        |                THEN l.ts_us - r.purchase_ts
-        |                ELSE r.purchase_ts - l.ts_us END,
-        |           r.purchase_ts
-        |  LIMIT 1) m ON TRUE""".stripMargin),
+      s"""WITH $asofCtes
+         |SELECT l.event_id, l.user_id, l.ts_us,
+         |       m.purchase_ts, m.purchase_value
+         |FROM l LEFT JOIN LATERAL (
+         |  SELECT r.purchase_ts, r.purchase_value
+         |  FROM r WHERE r.user_id = l.user_id
+         |  ORDER BY CASE WHEN l.ts_us >= r.purchase_ts
+         |                THEN l.ts_us - r.purchase_ts
+         |                ELSE r.purchase_ts - l.ts_us END,
+         |           r.purchase_ts
+         |  LIMIT 1) m ON TRUE""".stripMargin),
 
     // --- range join: views within ±1 h of a (small-cohort) purchase --------
     // Bucketized interval join (equi-join on 1 h buckets + exact filter) vs
@@ -370,54 +305,8 @@ object MetricsRows {
     Row("sketch_quantiles", (s, d) =>
       graft.llm.Sketches.histQuantiles(Tables.events(s, d),
         Seq("event_type"), "value", ps = Seq(0.5, 0.9, 0.99)),
-      // string-math HDR buckets (two leading decimal digits of the
-      // 1e-3-grid integer), cumulative window, first bucket reaching
-      // t = p·n, linear in-bucket interpolation — every operand an exact
-      // integer in a double, mirroring Sketches.histQuantiles
-      """WITH src AS (
-        |  SELECT event_type,
-        |         CAST(CAST(floor(value * 1000.0) AS BIGINT) AS VARCHAR)
-        |           AS gs
-        |  FROM events WHERE value >= 0 AND NOT isnan(value)),
-        |b AS (SELECT event_type,
-        |        CAST(substr(gs, 1, 2) ||
-        |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-        |          AS lo,
-        |        CAST(CAST(CAST(substr(gs, 1, 2) AS BIGINT) + 1
-        |               AS VARCHAR) ||
-        |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-        |          AS hi
-        |      FROM src),
-        |cnts AS (SELECT event_type, lo, hi, count(*) AS cnt
-        |         FROM b GROUP BY 1, 2, 3),
-        |cum AS (SELECT *,
-        |          SUM(cnt) OVER (PARTITION BY event_type ORDER BY lo)
-        |            AS cum,
-        |          SUM(cnt) OVER (PARTITION BY event_type) AS n
-        |        FROM cnts),
-        |wp AS (SELECT *, unnest([0.5, 0.9, 0.99]) AS p FROM cum),
-        |sel AS (SELECT *, p * CAST(n AS DOUBLE) AS t FROM wp),
-        |pick AS (SELECT * FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type, p
-        |                               ORDER BY lo) AS rn
-        |  FROM sel WHERE CAST(cum AS DOUBLE) >= t) WHERE rn = 1),
-        |drp AS (SELECT event_type, count(*) AS n_dropped FROM events
-        |        WHERE value < 0 OR value IS NULL OR isnan(value)
-        |        GROUP BY 1),
-        |ad AS (SELECT d.event_type, u.p, CAST(0 AS BIGINT) AS n,
-        |              CAST(NULL AS DOUBLE) AS est,
-        |              CAST(d.n_dropped AS BIGINT) AS n_dropped
-        |       FROM drp d
-        |       CROSS JOIN (SELECT unnest([0.5, 0.9, 0.99]) AS p) u
-        |       WHERE d.event_type NOT IN
-        |             (SELECT DISTINCT event_type FROM cnts))
-        |SELECT pick.event_type, p, CAST(n AS BIGINT) AS n,
-        |       round((CAST(lo AS DOUBLE) + CAST(hi - lo AS DOUBLE) *
-        |              (t - CAST(cum - cnt AS DOUBLE)) /
-        |              CAST(cnt AS DOUBLE)) / 1000.0, 6) AS est,
-        |       CAST(coalesce(drp.n_dropped, 0) AS BIGINT) AS n_dropped
-        |FROM pick LEFT JOIN drp USING (event_type)
-        |UNION ALL SELECT * FROM ad""".stripMargin),
+      histQuantilesSql("SELECT event_type, value AS v FROM events",
+        Seq("event_type"), Seq(0.5, 0.9, 0.99))),
 
     // --- per-hour p50/p95 from the same mergeable sketch: the
     // observability "latency percentile per time bucket" board — the
@@ -431,60 +320,12 @@ object MetricsRows {
         Seq("event_type", "hour"), "value", ps = Seq(0.5, 0.95)),
       // same sketch, (type, hour) grain — epoch_us // 3600000000 ≡ the
       // engine's ts_us div on non-negative epochs
-      """WITH src AS (
-        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
-        |         CAST(CAST(floor(value * 1000.0) AS BIGINT) AS VARCHAR)
-        |           AS gs
-        |  FROM events WHERE value >= 0 AND NOT isnan(value)),
-        |b AS (SELECT event_type, hour,
-        |        CAST(substr(gs, 1, 2) ||
-        |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-        |          AS lo,
-        |        CAST(CAST(CAST(substr(gs, 1, 2) AS BIGINT) + 1
-        |               AS VARCHAR) ||
-        |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-        |          AS hi
-        |      FROM src),
-        |cnts AS (SELECT event_type, hour, lo, hi, count(*) AS cnt
-        |         FROM b GROUP BY 1, 2, 3, 4),
-        |cum AS (SELECT *,
-        |          SUM(cnt) OVER (PARTITION BY event_type, hour
-        |                         ORDER BY lo) AS cum,
-        |          SUM(cnt) OVER (PARTITION BY event_type, hour) AS n
-        |        FROM cnts),
-        |wp AS (SELECT *, unnest([0.5, 0.95]) AS p FROM cum),
-        |sel AS (SELECT *, p * CAST(n AS DOUBLE) AS t FROM wp),
-        |pick AS (SELECT * FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type, hour, p
-        |                               ORDER BY lo) AS rn
-        |  FROM sel WHERE CAST(cum AS DOUBLE) >= t) WHERE rn = 1),
-        |drp AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
-        |               count(*) AS n_dropped
-        |        FROM events WHERE value < 0 OR value IS NULL
-        |              OR isnan(value)
-        |        GROUP BY 1, 2),
-        |ad AS (SELECT d.event_type, CAST(d.hour AS BIGINT) AS hour,
-        |              u.p, CAST(0 AS BIGINT) AS n,
-        |              CAST(NULL AS DOUBLE) AS est,
-        |              CAST(d.n_dropped AS BIGINT) AS n_dropped
-        |       FROM drp d
-        |       CROSS JOIN (SELECT unnest([0.5, 0.95]) AS p) u
-        |       WHERE NOT EXISTS (SELECT 1 FROM cnts c
-        |                         WHERE c.event_type = d.event_type
-        |                           AND c.hour = d.hour))
-        |SELECT pick.event_type, CAST(pick.hour AS BIGINT) AS hour, p,
-        |       CAST(n AS BIGINT) AS n,
-        |       round((CAST(lo AS DOUBLE) + CAST(hi - lo AS DOUBLE) *
-        |              (t - CAST(cum - cnt AS DOUBLE)) /
-        |              CAST(cnt AS DOUBLE)) / 1000.0, 6) AS est,
-        |       CAST(coalesce(drp.n_dropped, 0) AS BIGINT) AS n_dropped
-        |FROM pick LEFT JOIN drp USING (event_type, hour)
-        |UNION ALL SELECT * FROM ad""".stripMargin),
+      histQuantilesSql(
+        """SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
+          |       value AS v
+          |FROM events""".stripMargin,
+        Seq("event_type", "hour"), Seq(0.5, 0.95))),
 
-    // --- per-series anomaly flags over events: z-score vs the series'
-    // own mean/stddev, |z| > 2 on the unrounded z — the exact-decimal
-    // sum formulation makes mean/std/z bit-identical across engines, so
-    // no round() appears anywhere in either formulation -----------------
     // --- robust (median/MAD) anomaly scores: 50% breakdown point where
     // mean/σ are dragged by the outliers being hunted ------------------------
     Row("events_robustz", (s, d) =>
@@ -525,6 +366,10 @@ object MetricsRows {
         |FROM events e JOIN med m USING (event_type)
         |              JOIN mad d USING (event_type)""".stripMargin),
 
+    // --- per-series anomaly flags over events: z-score vs the series'
+    // own mean/stddev, |z| > 2 on the unrounded z — the exact-decimal
+    // sum formulation makes mean/std/z bit-identical across engines, so
+    // no round() appears anywhere in either formulation -----------------
     Row("events_zscore", (s, d) =>
       TimeSeries.zscore(
         Tables.events(s, d)
@@ -564,33 +409,36 @@ object MetricsRows {
       TimeSeries.gapfill(
         Tables.eventsUs(s, d),
         Seq("user_id", "event_type"), "ts_us", "value",
-        stepMicros = DayMicros),
-      """WITH b AS (
-        |  SELECT user_id, event_type,
-        |         epoch_us(ts) - epoch_us(ts) % 86400000000 AS bucket,
-        |         max(value) AS v
-        |  FROM events GROUP BY 1, 2, 3),
-        |p AS (
-        |  SELECT *, lag(bucket) OVER w AS prev_bucket,
-        |         lag(v) OVER w AS prev_v
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY user_id, event_type ORDER BY bucket)),
-        |g AS (
-        |  SELECT user_id, event_type, prev_bucket, prev_v, v,
-        |         bucket AS next_bucket,
-        |         unnest(CASE WHEN prev_bucket IS NULL THEN [bucket]
-        |                     ELSE generate_series(
-        |                       prev_bucket + 86400000000, bucket,
-        |                       86400000000) END) AS bucket
-        |  FROM p)
-        |SELECT user_id, event_type, bucket,
-        |       CASE WHEN bucket = next_bucket THEN round(v, 6)
-        |            ELSE round(prev_v + (v - prev_v)
-        |                   * CAST(bucket - prev_bucket AS DOUBLE)
-        |                   / CAST(next_bucket - prev_bucket AS DOUBLE),
-        |                 6) END AS value,
-        |       bucket <> next_bucket AS filled
-        |FROM g""".stripMargin),
+        stepMicros = DayUs),
+      // single-pass mirror of TimeSeries.gapfill: each (prev, current)
+      // pair explodes to its interior grid fills plus the current
+      // observation; the series head explodes to itself
+      s"""WITH b AS (
+         |  SELECT user_id, event_type,
+         |         ${bucketSql("epoch_us(ts)", DayUs)} AS bucket,
+         |         max(value) AS v
+         |  FROM events GROUP BY 1, 2, 3),
+         |p AS (
+         |  SELECT *, lag(bucket) OVER w AS prev_bucket,
+         |         lag(v) OVER w AS prev_v
+         |  FROM b
+         |  WINDOW w AS (PARTITION BY user_id, event_type ORDER BY bucket)),
+         |g AS (
+         |  SELECT user_id, event_type, prev_bucket, prev_v, v,
+         |         bucket AS next_bucket,
+         |         unnest(CASE WHEN prev_bucket IS NULL THEN [bucket]
+         |                     ELSE generate_series(
+         |                       prev_bucket + $DayUs, bucket,
+         |                       $DayUs) END) AS bucket
+         |  FROM p)
+         |SELECT user_id, event_type, bucket,
+         |       CASE WHEN bucket = next_bucket THEN round(v, 6)
+         |            ELSE round(prev_v + (v - prev_v)
+         |                   * CAST(bucket - prev_bucket AS DOUBLE)
+         |                   / CAST(next_bucket - prev_bucket AS DOUBLE),
+         |                 6) END AS value,
+         |       bucket <> next_bucket AS filled
+         |FROM g""".stripMargin),
 
     // --- trailing 7-day rolling mean per series (RANGE frame: series with
     // missing days still average over the TIME window, not the last 7
@@ -599,23 +447,23 @@ object MetricsRows {
       TimeSeries.rollingMean(
         Tables.eventsUs(s, d),
         Seq("user_id", "event_type"), "ts_us", "value",
-        stepMicros = DayMicros, windowSteps = 7),
+        stepMicros = DayUs, windowSteps = 7),
       // mirror TimeSeries.rollingMean: exact decimal bucket sums, RANGE
       // frame of 6 days preceding, one correctly-rounded division
-      """WITH b AS (
-        |  SELECT user_id, event_type,
-        |         epoch_us(ts) - epoch_us(ts) % 86400000000 AS bucket,
-        |         sum(CAST(value AS DECIMAL(18,2))) AS bsum,
-        |         count(*) AS bn
-        |  FROM events GROUP BY 1, 2, 3)
-        |SELECT user_id, event_type, bucket,
-        |       CAST(sum(bn) OVER w AS BIGINT) AS window_n,
-        |       round(CAST(sum(bsum) OVER w AS DOUBLE)
-        |             / CAST(sum(bn) OVER w AS DOUBLE), 6) AS moving_avg
-        |FROM b
-        |WINDOW w AS (PARTITION BY user_id, event_type ORDER BY bucket
-        |             RANGE BETWEEN 518400000000 PRECEDING
-        |                       AND CURRENT ROW)""".stripMargin),
+      s"""WITH b AS (
+         |  SELECT user_id, event_type,
+         |         ${bucketSql("epoch_us(ts)", DayUs)} AS bucket,
+         |         sum(CAST(value AS DECIMAL(18,2))) AS bsum,
+         |         count(*) AS bn
+         |  FROM events GROUP BY 1, 2, 3)
+         |SELECT user_id, event_type, bucket,
+         |       CAST(sum(bn) OVER w AS BIGINT) AS window_n,
+         |       round(CAST(sum(bsum) OVER w AS DOUBLE)
+         |             / CAST(sum(bn) OVER w AS DOUBLE), 6) AS moving_avg
+         |FROM b
+         |WINDOW w AS (PARTITION BY user_id, event_type ORDER BY bucket
+         |             RANGE BETWEEN ${6 * DayUs} PRECEDING
+         |                       AND CURRENT ROW)""".stripMargin),
 
     // --- classical seasonal decomposition: hourly per-type series into
     // centered-2×24-MA trend + hour-of-day seasonal + remainder, all on
@@ -630,49 +478,49 @@ object MetricsRows {
       // 2×24 MA numerator as HUGEINT, `//` floor division (≡ the
       // engine's spelled-out (a − pmod) div), nulls where the centered
       // window is incomplete
-      """WITH b AS (
-        |  SELECT event_type,
-        |         epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket,
-        |         count(*) AS n,
-        |         sum(CAST(value AS DECIMAL(18,2))) AS vsum,
-        |         CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |           AS vc
-        |  FROM events WHERE epoch_us(ts) >= 0 GROUP BY 1, 2),
-        |w AS (
-        |  SELECT *, count(*) OVER win AS win_n, sum(vc) OVER win AS win_c
-        |  FROM b
-        |  WINDOW win AS (PARTITION BY event_type ORDER BY bucket
-        |                 RANGE BETWEEN 43200000000 PRECEDING
-        |                           AND 43200000000 FOLLOWING)),
-        |t AS (
-        |  SELECT w.*,
-        |         CASE WHEN w.win_n = 25
-        |              THEN 2 * w.win_c - lo.vc - hi.vc END AS t_fp
-        |  FROM w LEFT JOIN b lo ON lo.event_type = w.event_type
-        |                       AND lo.bucket = w.bucket - 43200000000
-        |         LEFT JOIN b hi ON hi.event_type = w.event_type
-        |                       AND hi.bucket = w.bucket + 43200000000),
-        |d AS (SELECT *,
-        |        CASE WHEN t_fp IS NOT NULL THEN 48 * vc - t_fp END
-        |          AS det_fp,
-        |        (bucket // 3600000000) % 24 AS phase
-        |      FROM t),
-        |pm AS (SELECT event_type, phase,
-        |              SUM(det_fp) // COUNT(*) AS s_raw
-        |       FROM d WHERE det_fp IS NOT NULL GROUP BY 1, 2),
-        |ct AS (SELECT event_type, SUM(s_raw) // COUNT(*) AS m_fp
-        |       FROM pm GROUP BY 1),
-        |se AS (SELECT pm.event_type, pm.phase,
-        |              pm.s_raw - ct.m_fp AS seasonal_fp
-        |       FROM pm JOIN ct USING (event_type))
-        |SELECT d.event_type, d.bucket, CAST(d.n AS BIGINT) AS n,
-        |       CAST(d.vsum AS DOUBLE) AS value_sum,
-        |       round(CAST(d.t_fp AS DOUBLE) / 4800.0, 6) AS trend,
-        |       CAST(d.det_fp AS BIGINT) AS det_fp,
-        |       CAST(se.seasonal_fp AS BIGINT) AS seasonal_fp,
-        |       CAST(d.det_fp - se.seasonal_fp AS BIGINT) AS remainder_fp
-        |FROM d LEFT JOIN se ON se.event_type = d.event_type
-        |                   AND se.phase = d.phase""".stripMargin),
+      s"""WITH b AS (
+         |  SELECT event_type,
+         |         ${bucketSql("epoch_us(ts)", 3600000000L)} AS bucket,
+         |         count(*) AS n,
+         |         sum(CAST(value AS DECIMAL(18,2))) AS vsum,
+         |         CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
+         |           AS vc
+         |  FROM events WHERE epoch_us(ts) >= 0 GROUP BY 1, 2),
+         |w AS (
+         |  SELECT *, count(*) OVER win AS win_n, sum(vc) OVER win AS win_c
+         |  FROM b
+         |  WINDOW win AS (PARTITION BY event_type ORDER BY bucket
+         |                 RANGE BETWEEN 43200000000 PRECEDING
+         |                           AND 43200000000 FOLLOWING)),
+         |t AS (
+         |  SELECT w.*,
+         |         CASE WHEN w.win_n = 25
+         |              THEN 2 * w.win_c - lo.vc - hi.vc END AS t_fp
+         |  FROM w LEFT JOIN b lo ON lo.event_type = w.event_type
+         |                       AND lo.bucket = w.bucket - 43200000000
+         |         LEFT JOIN b hi ON hi.event_type = w.event_type
+         |                       AND hi.bucket = w.bucket + 43200000000),
+         |d AS (SELECT *,
+         |        CASE WHEN t_fp IS NOT NULL THEN 48 * vc - t_fp END
+         |          AS det_fp,
+         |        (bucket // 3600000000) % 24 AS phase
+         |      FROM t),
+         |pm AS (SELECT event_type, phase,
+         |              SUM(det_fp) // COUNT(*) AS s_raw
+         |       FROM d WHERE det_fp IS NOT NULL GROUP BY 1, 2),
+         |ct AS (SELECT event_type, SUM(s_raw) // COUNT(*) AS m_fp
+         |       FROM pm GROUP BY 1),
+         |se AS (SELECT pm.event_type, pm.phase,
+         |              pm.s_raw - ct.m_fp AS seasonal_fp
+         |       FROM pm JOIN ct USING (event_type))
+         |SELECT d.event_type, d.bucket, CAST(d.n AS BIGINT) AS n,
+         |       CAST(d.vsum AS DOUBLE) AS value_sum,
+         |       round(CAST(d.t_fp AS DOUBLE) / 4800.0, 6) AS trend,
+         |       CAST(d.det_fp AS BIGINT) AS det_fp,
+         |       CAST(se.seasonal_fp AS BIGINT) AS seasonal_fp,
+         |       CAST(d.det_fp - se.seasonal_fp AS BIGINT) AS remainder_fp
+         |FROM d LEFT JOIN se ON se.event_type = d.event_type
+         |                   AND se.phase = d.phase""".stripMargin),
 
     // --- OHLC candles: per (user, event_type) × day, first/high/low/last
     // value + count/sum/mean; open/close chosen by a portable total-order
@@ -681,34 +529,8 @@ object MetricsRows {
       TimeSeries.ohlc(
         Tables.eventsUs(s, d),
         Seq("user_id", "event_type"), "ts_us", "event_id", "value",
-        stepMicros = DayMicros),
-      // mirror TimeSeries.ohlc: null values dropped up front; open/close
-      // via min_by/max_by on the same portable total-order key (HUGEINT
-      // bias ↔ Spark's decimal bias — identical digit strings), exact
-      // decimal volume sum, one correctly-rounded division for the mean
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-        |         event_id, value
-        |  FROM events WHERE value IS NOT NULL),
-        |k AS (
-        |  SELECT user_id, event_type, value,
-        |         ts_us - ts_us % 86400000000 AS bucket,
-        |         lpad(CAST(CAST(ts_us AS HUGEINT)
-        |                   + 9223372036854775808 AS VARCHAR), 20, '0')
-        |           || lpad(CAST(length(CAST(event_id AS VARCHAR))
-        |                        AS VARCHAR), 6, '0')
-        |           || CAST(event_id AS VARCHAR) AS ord
-        |  FROM e)
-        |SELECT user_id, event_type, bucket,
-        |       min_by(CAST(value AS DOUBLE), ord) AS open,
-        |       max(CAST(value AS DOUBLE)) AS high,
-        |       min(CAST(value AS DOUBLE)) AS low,
-        |       max_by(CAST(value AS DOUBLE), ord) AS close,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS vsum,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE), 6) AS vavg
-        |FROM k GROUP BY 1, 2, 3""".stripMargin),
+        stepMicros = DayUs),
+      ohlcSql()),
 
     // --- largest-triangle downsample (parallel LTTB): per day, the ONE
     // point subtending the largest triangle vs neighbor-bucket means —
@@ -718,45 +540,44 @@ object MetricsRows {
         Tables.eventsUs(s, d)
           .select("user_id", "event_type", "ts_us", "event_id", "value"),
         Seq("user_id", "event_type"), "ts_us", "event_id", "value",
-        stepMicros = DayMicros)
+        stepMicros = DayUs)
         .select("user_id", "event_type", "bucket", "ts_us", "event_id",
           "value", "n_in_bucket"),
       // mirror TimeSeries.lttb: exact-decimal bucket means, lag/lead
       // anchors, identical IEEE area tree, (area DESC NULLS LAST,
       // dir·ts, dir·id) argmax — edge buckets fall to the tie-break and
       // keep the series endpoints
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-        |         event_id, value
-        |  FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT *, ts_us - ts_us % 86400000000 AS bucket FROM e),
-        |m AS (SELECT user_id, event_type, bucket,
-        |        CAST(sum(CAST(ts_us AS DECIMAL(38,0))) AS DOUBLE)
-        |          / CAST(count(*) AS DOUBLE) AS mx,
-        |        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |          / CAST(count(*) AS DOUBLE) AS my,
-        |        count(*) AS n_in_bucket
-        |      FROM b GROUP BY 1, 2, 3),
-        |a AS (SELECT *, lag(mx) OVER w AS ax, lag(my) OVER w AS ay,
-        |        lead(mx) OVER w AS cx, lead(my) OVER w AS cy
-        |      FROM m
-        |      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY bucket)),
-        |c AS (SELECT b.user_id, b.event_type, b.bucket, b.ts_us,
-        |        b.event_id, CAST(b.value AS DOUBLE) AS value,
-        |        a.n_in_bucket,
-        |        abs((a.ax - a.cx) * (CAST(b.value AS DOUBLE) - a.ay)
-        |            - (a.ax - CAST(b.ts_us AS DOUBLE)) * (a.cy - a.ay))
-        |          AS area,
-        |        CASE WHEN a.cx IS NULL AND a.ax IS NOT NULL
-        |             THEN -1 ELSE 1 END AS dir
-        |      FROM b JOIN a USING (user_id, event_type, bucket))
-        |SELECT user_id, event_type, bucket, ts_us, event_id, value,
-        |       n_in_bucket
-        |FROM (SELECT *, row_number() OVER (
-        |        PARTITION BY user_id, event_type, bucket
-        |        ORDER BY area DESC NULLS LAST, dir * ts_us, dir * event_id)
-        |        AS rn
-        |      FROM c) WHERE rn = 1""".stripMargin),
+      s"""WITH e AS (
+         |  SELECT user_id, event_type, epoch_us(ts) AS ts_us,
+         |         event_id, value
+         |  FROM events WHERE value IS NOT NULL),
+         |b AS (SELECT *, ${bucketSql("ts_us", DayUs)} AS bucket FROM e),
+         |m AS (SELECT user_id, event_type, bucket,
+         |        CAST(sum(CAST(ts_us AS DECIMAL(38,0))) AS DOUBLE)
+         |          / CAST(count(*) AS DOUBLE) AS mx,
+         |        ${exactSumSql("value")} / CAST(count(*) AS DOUBLE) AS my,
+         |        count(*) AS n_in_bucket
+         |      FROM b GROUP BY 1, 2, 3),
+         |a AS (SELECT *, lag(mx) OVER w AS ax, lag(my) OVER w AS ay,
+         |        lead(mx) OVER w AS cx, lead(my) OVER w AS cy
+         |      FROM m
+         |      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY bucket)),
+         |c AS (SELECT b.user_id, b.event_type, b.bucket, b.ts_us,
+         |        b.event_id, CAST(b.value AS DOUBLE) AS value,
+         |        a.n_in_bucket,
+         |        abs((a.ax - a.cx) * (CAST(b.value AS DOUBLE) - a.ay)
+         |            - (a.ax - CAST(b.ts_us AS DOUBLE)) * (a.cy - a.ay))
+         |          AS area,
+         |        CASE WHEN a.cx IS NULL AND a.ax IS NOT NULL
+         |             THEN -1 ELSE 1 END AS dir
+         |      FROM b JOIN a USING (user_id, event_type, bucket))
+         |SELECT user_id, event_type, bucket, ts_us, event_id, value,
+         |       n_in_bucket
+         |FROM (SELECT *, row_number() OVER (
+         |        PARTITION BY user_id, event_type, bucket
+         |        ORDER BY area DESC NULLS LAST, dir * ts_us, dir * event_id)
+         |        AS rn
+         |      FROM c) WHERE rn = 1""".stripMargin),
 
     // --- CUSUM change-point: per event_type, the observation where the
     // cumulative deviation from the series mean peaks — all-integer
@@ -765,9 +586,6 @@ object MetricsRows {
       TimeSeries.cusumChangePoint(
         Tables.eventsUs(s, d),
         Seq("event_type"), "ts_us", "event_id", "value"),
-      // single-pass mirror of TimeSeries.gapfill: each (prev, current)
-      // pair explodes to its interior grid fills plus the current
-      // observation; the series head explodes to itself
       // all-integer CUSUM: n·prefix − k·S in centi-units; the argmax row
       // picked by (|cusum| desc, ts, id) — every op exact in both engines
       // (DuckDB's HUGEINT sums are numerically identical, cast at the end)
@@ -887,17 +705,13 @@ object MetricsRows {
     Row("skew_join_salted", (s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"))
-      val dim = ev.select(col("user_id")).distinct()
-        .withColumn("tier", col("user_id") % 5)
-      Skew.saltedJoin(ev, dim, "user_id", salt = 8, spreadCol = "event_id")
+      Skew.saltedJoin(ev, tierDim(ev), "user_id", salt = 8,
+        spreadCol = "event_id")
         .select("event_id", "user_id", "tier", "value")
     },
       // the salted join must equal the PLAIN join — the oracle is the
       // unsalted formulation
-      """WITH dim AS (
-        |  SELECT DISTINCT user_id, user_id % 5 AS tier FROM events)
-        |SELECT e.event_id, e.user_id, d.tier, e.value
-        |FROM events e JOIN dim d USING (user_id)""".stripMargin),
+      tierJoinSql()),
 
     // --- global leaderboard: top-20 users by exact total spend — the
     // TakeOrderedAndProject shape (per-partition heaps, k-row driver
@@ -907,15 +721,13 @@ object MetricsRows {
         .filter(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_purchases"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as("total_spend"))
+          exactSum(col("value")).as("total_spend"))
         .orderBy(col("total_spend").desc, col("user_id"))
         .limit(20),
-      """SELECT user_id, count(*) AS n_purchases,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS total_spend
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY total_spend DESC, user_id LIMIT 20""".stripMargin),
+      s"""SELECT user_id, count(*) AS n_purchases,
+         |       ${exactSumSql("value")} AS total_spend
+         |FROM events WHERE event_type = 'purchase'
+         |GROUP BY 1 ORDER BY total_spend DESC, user_id LIMIT 20""".stripMargin),
 
     // --- per-type value histogram: fixed 5-unit bins, one hash aggregate
     // with map-side partials; floor() is the identical IEEE op in both
@@ -924,17 +736,13 @@ object MetricsRows {
       Tables.events(s, d)
         .groupBy(col("event_type"),
           floor(col("value") / lit(5.0)).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as("value_sum")),
+        .agg(count(lit(1)).as("n"), exactSum(col("value")).as("value_sum")),
       // mirror the events_histogram aggregate: identical IEEE floor on
       // the same double division, exact decimal per-bin sums
-      """SELECT event_type,
-        |       CAST(floor(value / 5.0) AS BIGINT) AS bucket,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      s"""SELECT event_type,
+         |       CAST(floor(value / 5.0) AS BIGINT) AS bucket,
+         |       count(*) AS n, ${exactSumSql("value")} AS value_sum
+         |FROM events GROUP BY 1, 2""".stripMargin),
 
     // --- cohort retention matrix: users active N days after their first
     // active day, per first-day cohort — all-integer, two user-key
@@ -942,18 +750,18 @@ object MetricsRows {
     Row("cohort_retention", (s, d) =>
       Cohorts.retention(
         Tables.eventsUs(s, d),
-        "user_id", "ts_us", stepMicros = DayMicros)
+        "user_id", "ts_us", stepMicros = DayUs)
         .select("cohort", "period_offset", "n_users"),
-      """WITH act AS (
-        |  SELECT DISTINCT user_id,
-        |         epoch_us(ts) - epoch_us(ts) % 86400000000 AS period
-        |  FROM events),
-        |first AS (
-        |  SELECT user_id, min(period) AS cohort FROM act GROUP BY 1)
-        |SELECT cohort, (period - cohort) // 86400000000 AS period_offset,
-        |       count(*) AS n_users
-        |FROM act JOIN first USING (user_id)
-        |GROUP BY 1, 2""".stripMargin),
+      s"""WITH act AS (
+         |  SELECT DISTINCT user_id,
+         |         ${bucketSql("epoch_us(ts)", DayUs)} AS period
+         |  FROM events),
+         |first AS (
+         |  SELECT user_id, min(period) AS cohort FROM act GROUP BY 1)
+         |SELECT cohort, (period - cohort) // $DayUs AS period_offset,
+         |       count(*) AS n_users
+         |FROM act JOIN first USING (user_id)
+         |GROUP BY 1, 2""".stripMargin),
 
     // --- P1-P5: the resource-filter DSL --------------------------------
     Row("dsl_filter_basic", (s, d) =>
@@ -1024,57 +832,20 @@ object MetricsRows {
     // --- DSL partial-target semantics: a failed target (missing key in its
     // table) skips ONLY that target at that index — the group still emits
     // with the remaining metrics (plugin_polling_generic_snmp.py:494-505).
-    Row("snmp_dsl_partial", (s, d) => {
-      val p = Tables.part(s, d)
-      val tables = Map(
-        "sensor_name" -> p.select(
-          col("p_partkey").cast("string").as("index"), col("p_name").as("value")),
-        "sensor_scale" -> p.select(
-          col("p_partkey").cast("string").as("index"),
-          (lit(1) + col("p_partkey") % 3).cast("string").as("value")),
-        // sparse table: only parts with p_size > 25 have a reading
-        "sensor_value" -> p.filter(col("p_size") > 25).select(
-          col("p_partkey").cast("string").as("index"),
-          col("p_size").cast("string").as("value")))
-      val cfg = GroupConfig("environment", 60,
-        dimensions = Map("sensor" -> TargetSpec("sensor_name.$index")),
-        metrics = Map(
-          "reading" -> TargetSpec("int(sensor_value.$index)", valueType = "int",
-            indicesFrom = Some("sensor_name")),
-          "scale" -> TargetSpec("int(sensor_scale.$index)", valueType = "int")))
-      MetricsDsl.evaluateIndexed(cfg, tables).get
-        .select("index", "sensor", "reading", "scale")
-    },
-      """SELECT CAST(p.p_partkey AS VARCHAR) AS index, p.p_name AS sensor,
-        |       CAST(v.p_size AS BIGINT) AS reading,
-        |       CAST(1 + p.p_partkey % 3 AS BIGINT) AS scale
-        |FROM part p
-        |LEFT JOIN (SELECT p_partkey, p_size FROM part WHERE p_size > 25) v
-        |  ON v.p_partkey = p.p_partkey
-        |WHERE p.p_name != ''""".stripMargin),
+    Row("snmp_dsl_partial", (s, d) =>
+      MetricsDsl.evaluateIndexed(sensorConfig, sensorTables(s, d)).get
+        .select("index", "sensor", "reading", "scale"),
+      s"""SELECT CAST(p.p_partkey AS VARCHAR) AS index, p.p_name AS sensor,
+         |       CAST(v.p_size AS BIGINT) AS reading,
+         |       CAST(1 + p.p_partkey % 3 AS BIGINT) AS scale
+         |$sensorJoinSql""".stripMargin),
 
     // --- Group assembly: DSL output → reference-shaped nested rows with a
     // canonical content hash (metrics.py:388-398); verified through flat
     // canonical renders + the hash itself.
     Row("mg_assemble", (s, d) => {
-      val p = Tables.part(s, d)
-      val tables = Map(
-        "sensor_name" -> p.select(
-          col("p_partkey").cast("string").as("index"), col("p_name").as("value")),
-        "sensor_scale" -> p.select(
-          col("p_partkey").cast("string").as("index"),
-          (lit(1) + col("p_partkey") % 3).cast("string").as("value")),
-        "sensor_value" -> p.filter(col("p_size") > 25).select(
-          col("p_partkey").cast("string").as("index"),
-          col("p_size").cast("string").as("value")))
-      val cfg = GroupConfig("environment", 60,
-        dimensions = Map("sensor" -> TargetSpec("sensor_name.$index")),
-        metrics = Map(
-          "reading" -> TargetSpec("int(sensor_value.$index)", valueType = "int",
-            indicesFrom = Some("sensor_name")),
-          "scale" -> TargetSpec("int(sensor_scale.$index)", valueType = "int")))
-      val idx = MetricsDsl.evaluateIndexed(cfg, tables).get
-      GroupAssembly.assemble(idx, cfg,
+      val idx = MetricsDsl.evaluateIndexed(sensorConfig, sensorTables(s, d)).get
+      GroupAssembly.assemble(idx, sensorConfig,
         resource = struct(lit("device-1").as("resource_id")),
         clockTs = lit(1.7e9))
         .select(col("index"), col("metrics_group_type"),
@@ -1084,25 +855,22 @@ object MetricsRows {
           GroupAssembly.metricsRender(col("metrics")).as("metrics_render"),
           col("content_hash"))
     },
-      """WITH g AS (
-        |  SELECT CAST(p.p_partkey AS VARCHAR) AS index, p.p_name AS sensor,
-        |         CASE WHEN v.p_size IS NOT NULL
-        |              THEN 'reading|' || CAST(CAST(v.p_size AS DOUBLE) AS VARCHAR)
-        |                   || '|gauge,' ELSE '' END
-        |           || 'scale|' || CAST(CAST(1 + p.p_partkey % 3 AS DOUBLE) AS VARCHAR)
-        |           || '|gauge' AS metrics_render,
-        |         'sensor|' || p.p_name AS dims_render
-        |  FROM part p
-        |  LEFT JOIN (SELECT p_partkey, p_size FROM part WHERE p_size > 25) v
-        |    ON v.p_partkey = p.p_partkey
-        |  WHERE p.p_name != '')
-        |SELECT index, 'environment' AS metrics_group_type,
-        |       CAST(60 AS BIGINT) AS metrics_group_interval,
-        |       1.7e9 AS metrics_group_creation_timestamp,
-        |       dims_render, metrics_render,
-        |       sha256('{"resource_id":"device-1"}' || '|' || metrics_render
-        |              || '|' || dims_render) AS content_hash
-        |FROM g""".stripMargin),
+      s"""WITH g AS (
+         |  SELECT CAST(p.p_partkey AS VARCHAR) AS index, p.p_name AS sensor,
+         |         CASE WHEN v.p_size IS NOT NULL
+         |              THEN 'reading|' || CAST(CAST(v.p_size AS DOUBLE) AS VARCHAR)
+         |                   || '|gauge,' ELSE '' END
+         |           || 'scale|' || CAST(CAST(1 + p.p_partkey % 3 AS DOUBLE) AS VARCHAR)
+         |           || '|gauge' AS metrics_render,
+         |         'sensor|' || p.p_name AS dims_render
+         |$sensorJoinSql)
+         |SELECT index, 'environment' AS metrics_group_type,
+         |       CAST(60 AS BIGINT) AS metrics_group_interval,
+         |       1.7e9 AS metrics_group_creation_timestamp,
+         |       dims_render, metrics_render,
+         |       sha256('{"resource_id":"device-1"}' || '|' || metrics_render
+         |              || '|' || dims_render) AS content_hash
+         |FROM g""".stripMargin),
 
     // --- A3: the computed-metrics DSL, top-level count-where path -------------------
     Row("snmp_dsl_toplevel", (s, d) => {

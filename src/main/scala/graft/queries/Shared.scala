@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Schemas, Tables}
 import graft.llm.{Corpus, IvfIndex, QualityModel, Similarity, TextAnalysis}
 import graft.llm.IvfIndex.{Bits, Prefix}
+import graft.operators.Sessionize
 
 /** Definitions that the row families share: SQL fragments several
   * oracles embed, each beside the Spark operator it is the twin of, and
@@ -695,4 +696,207 @@ c$i AS (SELECT p.j, coalesce(n.c, p.c) AS c
 
   /** The `resources` CTE the inventory oracles start from. */
   private[queries] val R = Tables.resourcesSqlCte
+
+  /** One day in µs: the candle, gap-fill and cohort grid. */
+  private[queries] val DayUs = 86400000000L
+
+  /** The idle gap that closes a user's session: 24 h in µs. */
+  private[queries] val SessionGapUs = DayUs
+
+  /** The exact sum of the SQL expression `v` fixed to `scale` decimals,
+    * as a DOUBLE — the twin of [[TimeSeries.exactSum]]. */
+  private[queries] def exactSumSql(v: String, scale: Int = 2): String =
+    s"CAST(sum(CAST($v AS DECIMAL(18,$scale))) AS DOUBLE)"
+
+  /** The start of the `step`-µs grid cell of `ts` (epoch µs), truncating
+    * toward zero — the twin of [[TimeSeries.bucket]]. */
+  private[queries] def bucketSql(ts: String, step: Long): String =
+    s"$ts - $ts % $step"
+
+  /** The start of the epoch-aligned `step`-µs window of `ts` (epoch µs),
+    * flooring — Spark's `window(…).start` on the stream rows. */
+  private[queries] def windowStartSql(ts: String, step: Long): String =
+    s"($ts // $step) * $step"
+
+  /** The events' gap sessions of [[sessions]]: CTE `x` is `events` (kept
+    * where `where` holds) with `tsn = epoch_us(ts)` and each user's
+    * previous `tsn` as `prev`, CTE `s` adds the 1-based `session_seq`. */
+  private[queries] def sessionsCtes(where: String = ""): String =
+    s"""x AS (
+       |  SELECT *, epoch_us(ts) AS tsn,
+       |         lag(epoch_us(ts)) OVER (PARTITION BY user_id
+       |             ORDER BY epoch_us(ts), event_id) AS prev
+       |  FROM events$where),
+       |s AS (
+       |  SELECT *, sum(CASE WHEN prev IS NULL
+       |                       OR tsn - prev > $SessionGapUs
+       |                     THEN 1 ELSE 0 END)
+       |            OVER (PARTITION BY user_id ORDER BY tsn, event_id
+       |                  ROWS UNBOUNDED PRECEDING) AS session_seq
+       |  FROM x)""".stripMargin
+
+  /** [[Sessionize.stats]] of [[sessionsCtes]] — the twin of the stats
+    * of [[sessions]] and of [[graft.streaming.StreamingSessionize]]. */
+  private[queries] def sessionStatsSql(where: String = ""): String =
+    s"""WITH ${sessionsCtes(where)}
+       |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
+       |       count(*) AS n_events,
+       |       min(tsn) AS start_us, max(tsn) AS end_us,
+       |       max(tsn) - min(tsn) AS duration_us,
+       |       count(DISTINCT event_type) AS n_types,
+       |       ${exactSumSql("value")} AS value_sum
+       |FROM s GROUP BY 1, 2""".stripMargin
+
+  /** The events `e` (with `ts_us`) in 24 h gap sessions per user. */
+  private[queries] def sessions(e: DataFrame): DataFrame =
+    Sessionize.assign(e, "user_id", "ts_us", "event_id", SessionGapUs)
+
+  /** The HDR quantile fold of [[Sketches.quantilesOfBuckets]] over the CTE
+    * `from(keys…, v)` at `grid` steps per unit: the bucket bounds of
+    * [[Sketches.bucketBounds]] (string math on the grid integer's two
+    * leading digits), each group's cumulative counts, the first bucket
+    * reaching `t = p·n` and the linear in-bucket estimate, ending in CTE
+    * `quant(keys…, p, n, est)`. */
+  private[queries] def hdrCtes(from: String, keys: Seq[String],
+                               ps: Seq[Double], grid: Long): String = {
+    val k = keys.mkString(", ")
+    s"""g AS (SELECT $k,
+       |        CAST(CAST(floor(v * $grid.0) AS BIGINT) AS VARCHAR) AS gs
+       |      FROM $from),
+       |b AS (SELECT $k,
+       |        CAST(substr(gs, 1, 2) ||
+       |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
+       |          AS lo,
+       |        CAST(CAST(CAST(substr(gs, 1, 2) AS BIGINT) + 1
+       |               AS VARCHAR) ||
+       |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
+       |          AS hi
+       |      FROM g),
+       |cnts AS (SELECT $k, lo, hi, count(*) AS cnt
+       |         FROM b GROUP BY $k, lo, hi),
+       |cum AS (SELECT *,
+       |          SUM(cnt) OVER (PARTITION BY $k ORDER BY lo) AS cum,
+       |          SUM(cnt) OVER (PARTITION BY $k) AS n
+       |        FROM cnts),
+       |wp AS (SELECT *, unnest(${ps.mkString("[", ", ", "]")}) AS p FROM cum),
+       |sel AS (SELECT *, p * CAST(n AS DOUBLE) AS t FROM wp),
+       |pick AS (SELECT * FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY $k, p
+       |                               ORDER BY lo) AS rn
+       |  FROM sel WHERE CAST(cum AS DOUBLE) >= t) WHERE rn = 1),
+       |quant AS (SELECT $k, p, CAST(n AS BIGINT) AS n,
+       |          round((CAST(lo AS DOUBLE) + CAST(hi - lo AS DOUBLE) *
+       |                 (t - CAST(cum - cnt AS DOUBLE)) /
+       |                 CAST(cnt AS DOUBLE)) / $grid.0, 6) AS est
+       |        FROM pick)""".stripMargin
+  }
+
+  /** [[Sketches.histQuantiles]] of `src(keys…, v)` (a SELECT) on the
+    * 1e-3 grid: [[hdrCtes]] over the kept values, and every group's rows
+    * carry `n_dropped`, its null, negative or NaN values — a group with
+    * nothing kept reports n = 0 and a null est per `p`. */
+  private[queries] def histQuantilesSql(src: String, keys: Seq[String],
+                                        ps: Seq[Double]): String = {
+    val k = keys.mkString(", ")
+    s"""WITH src AS ($src),
+       |kept AS (SELECT * FROM src WHERE v >= 0 AND NOT isnan(v)),
+       |${hdrCtes("kept", keys, ps, 1000L)},
+       |drp AS (SELECT $k, count(*) AS n_dropped FROM src
+       |        WHERE v < 0 OR v IS NULL OR isnan(v) GROUP BY $k),
+       |ad AS (SELECT ${keys.map("d." + _).mkString(", ")}, u.p,
+       |              CAST(0 AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS est,
+       |              CAST(d.n_dropped AS BIGINT) AS n_dropped
+       |       FROM drp d
+       |       CROSS JOIN (SELECT unnest(${ps.mkString("[", ", ", "]")}) AS p) u
+       |       WHERE NOT EXISTS (SELECT 1 FROM cnts c WHERE
+       |         ${keys.map(c => s"c.$c = d.$c").mkString(" AND ")}))
+       |SELECT ${keys.map("quant." + _).mkString(", ")}, p, n, est,
+       |       CAST(coalesce(drp.n_dropped, 0) AS BIGINT) AS n_dropped
+       |FROM quant LEFT JOIN drp USING ($k)
+       |UNION ALL SELECT * FROM ad""".stripMargin
+  }
+
+  /** [[TimeSeries.ohlc]]'s day candles per (user, event type) of the
+    * events with a value (and `where`): open and close by `min_by` /
+    * `max_by` on the portable order key of [[TimeSeries.ohlcOrderKey]]
+    * (the HUGEINT bias renders the digits of Spark's decimal one), exact
+    * volume sum, one correctly-rounded division for the mean. */
+  private[queries] def ohlcSql(where: String = ""): String =
+    s"""WITH e AS (
+       |  SELECT user_id, event_type, epoch_us(ts) AS ts_us,
+       |         event_id, value
+       |  FROM events WHERE value IS NOT NULL$where),
+       |k AS (
+       |  SELECT user_id, event_type, value,
+       |         ${bucketSql("ts_us", DayUs)} AS bucket,
+       |         lpad(CAST(CAST(ts_us AS HUGEINT)
+       |                   + 9223372036854775808 AS VARCHAR), 20, '0')
+       |           || lpad(CAST(length(CAST(event_id AS VARCHAR))
+       |                        AS VARCHAR), 6, '0')
+       |           || CAST(event_id AS VARCHAR) AS ord
+       |  FROM e)
+       |SELECT user_id, event_type, bucket,
+       |       min_by(CAST(value AS DOUBLE), ord) AS open,
+       |       max(CAST(value AS DOUBLE)) AS high,
+       |       min(CAST(value AS DOUBLE)) AS low,
+       |       max_by(CAST(value AS DOUBLE), ord) AS close,
+       |       count(*) AS n_events,
+       |       ${exactSumSql("value")} AS vsum,
+       |       round(${exactSumSql("value")}
+       |             / CAST(count(*) AS DOUBLE), 6) AS vavg
+       |FROM k GROUP BY 1, 2, 3""".stripMargin
+
+  /** The counter→gauge rate guards of [[RateTransform.batch]] over the
+    * samples `src` (a SELECT with `value` and the sample time `ts` in
+    * seconds): per `series`, in `order`, against the previous sample — a
+    * rate where the step is positive, within the TTL of
+    * [[Schemas.KvStoreTtlMultiple]] polling intervals and the counter did
+    * not reset, and the confidence `interval / Δt`. The select items
+    * `out` come first. */
+  private[queries] def rateSql(src: String, series: String, order: String,
+                               ts: String, interval: Int,
+                               out: String): String =
+    s"""WITH e AS ($src),
+       |l AS (
+       |  SELECT *, lag(value) OVER w AS pv, lag($ts) OVER w AS pt
+       |  FROM e WINDOW w AS (PARTITION BY $series ORDER BY $order))
+       |SELECT $out,
+       |  CASE WHEN pv IS NOT NULL AND $ts - pt > 0
+       |            AND $ts - pt <= ${Schemas.KvStoreTtlMultiple * interval}
+       |            AND value >= pv
+       |       THEN CAST(floor((value - pv) / ($ts - pt)) AS BIGINT) END AS rate,
+       |  CASE WHEN pv IS NOT NULL AND $ts - pt > 0
+       |       THEN round($interval / CAST($ts - pt AS DOUBLE), 2)
+       |       END AS confidence
+       |FROM l""".stripMargin
+
+  /** The indexed DSL rows' sensor tables `(index, value)`, read from
+    * `part`: every part's name and scale, and a value only for parts over
+    * size 25. */
+  private[queries] def sensorTables(s: SparkSession,
+                                    d: String): Map[String, DataFrame] = {
+    val p = Tables.part(s, d)
+    def table(df: DataFrame, value: Column) =
+      df.select(col("p_partkey").cast("string").as("index"), value.as("value"))
+    Map(
+      "sensor_name" -> table(p, col("p_name")),
+      "sensor_scale" -> table(p, (lit(1) + col("p_partkey") % 3).cast("string")),
+      // sparse table: only parts with p_size > 25 have a reading
+      "sensor_value" -> table(p.filter(col("p_size") > 25),
+        col("p_size").cast("string")))
+  }
+
+  /** The enrichment dimension of the skew and stream joins: each user of
+    * `events` with its `tier`. */
+  private[queries] def tierDim(events: DataFrame): DataFrame =
+    events.select(col("user_id")).distinct()
+      .withColumn("tier", col("user_id") % 5)
+
+  /** The SQL twin of [[tierDim]] joined to `events` (kept where `where`
+    * holds): `(event_id, user_id, tier, value)`. */
+  private[queries] def tierJoinSql(where: String = ""): String =
+    s"""WITH dim AS (
+       |  SELECT DISTINCT user_id, user_id % 5 AS tier FROM events)
+       |SELECT e.event_id, e.user_id, d.tier, e.value
+       |FROM events e JOIN dim d USING (user_id)$where""".stripMargin
 }

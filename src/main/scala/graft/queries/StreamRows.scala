@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.llm.{Dedup, TextAnalysis}
 import graft.operators.TimeSeries
+import graft.operators.TimeSeries.exactSum
 import graft.streaming.{MetricSample, SessionEvent, StreamingRate,
   StreamingSessionize, StreamingZscore, ZscoreEvent}
 
@@ -98,12 +99,26 @@ object StreamRows {
     ss.conf.set("spark.sql.files.maxPartitionBytes", "8m")
     val sentinel = Option.when(flush)(table match {
       case "events" => eventsSentinel(ss, d,
-        sharedMaxTsUs(s, d) + 30L * 86400000000L, sentinelUser)
+        sharedMaxTsUs(s, d) + 30L * DayUs, sentinelUser)
       case "documents" => docsSentinel(ss, d, sharedMaxDocId(s, d) + 90L * 86400L)
     })
     graft.streaming.FileReplay.replay(ss, s"$d/$table.parquet", name,
       sentinel)(source => transform(ss, source))
   }
+
+  /** The replayed events `stream` as `ts_us` (their event time in µs,
+    * [[Tables.tsMicros]]) and `cols`. */
+  private def timed(stream: DataFrame, cols: Column*): DataFrame =
+    stream.select(Tables.tsMicros(stream).as("ts_us") +: cols: _*)
+
+  /** `df` with the event time `ts`, the timestamp of the µs `tsUs`,
+    * under the rows' 1 h watermark. */
+  private def watermarked(df: DataFrame, tsUs: Column = col("ts_us"),
+                          ts: String = "ts"): DataFrame =
+    df.withColumn(ts, timestamp_micros(tsUs)).withWatermark(ts, "1 hour")
+
+  /** The start of a windowed aggregate's `window`, in epoch µs. */
+  private val windowStart = unix_micros(col("window.start")).as("window_start_us")
 
   /** A streaming row: `build` gets the row's name, which names the
     * row's replay query ([[graft.streaming.FileReplay.replay]]). */
@@ -111,6 +126,9 @@ object StreamRows {
       build: String => (SparkSession, String) => DataFrame,
       oracle: String): Row =
     Row(name, build(name), oracle)
+
+  /** The 6 h window of the windowed stream rows, in µs. */
+  private val SixHoursUs = 21600000000L
 
   val rows: Seq[Row] = Seq(
     // --- streaming: watermarked tumbling-window aggregation ----------------
@@ -130,27 +148,21 @@ object StreamRows {
       // measured the MemoryStream version at 14–35 s, nearly all driver
       // serialization; this shape holds flat).
       replay(s, d, "events", name, flush = true) { (_, source) =>
-        val stream = source()
-        stream
-          .select(Tables.tsMicros(stream).as("ts_us"), col("event_type"),
-            col("value").cast("double").as("value"))
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-          .withWatermark("ts", "1 hour")
+        watermarked(timed(source(), col("event_type"),
+            col("value").cast("double").as("value")))
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast("decimal(18,2)")).cast("double")
-              .as("value_sum"))
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("event_type"), col("n_events"), col("value_sum"))
+            exactSum(col("value")).as("value_sum"))
+          .select(windowStart, col("event_type"), col("n_events"),
+            col("value_sum"))
       }
         .filter(col("event_type") =!= "__wm__")
     },
-      """SELECT (epoch_us(ts) // 21600000000) * 21600000000
-        |         AS window_start_us,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      s"""SELECT ${windowStartSql("epoch_us(ts)", SixHoursUs)}
+         |         AS window_start_us,
+         |       event_type, count(*) AS n_events,
+         |       ${exactSumSql("value")} AS value_sum
+         |FROM events GROUP BY 1, 2""".stripMargin),
 
     // --- streaming distinct-cardinality sketch: per-window active-user
     // HLL maintained AT INGEST — state per open window is ≤ 256 integer
@@ -164,19 +176,13 @@ object StreamRows {
     replayRow("stream_distinct")(name => (s, d) => {
       val maxUs = sharedMaxTsUs(s, d)
       val reg = replay(s, d, "events", name, flush = true) { (_, source) =>
-        val stream = source()
-        stream
-          .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"))
-          .filter(col("ts_us") >= 0L)
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-          .withWatermark("ts", "1 hour")
+        watermarked(timed(source(), col("user_id")).filter(col("ts_us") >= 0L))
           .withColumn("h", md5(col("user_id").cast("string")))
           .withColumn("idx", expr(graft.llm.Sketches.IdxSql))
           .withColumn("rho", expr(graft.llm.Sketches.RhoSql))
           .groupBy(window(col("ts"), "6 hours"), col("idx"))
           .agg(max(col("rho")).as("m"))
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("idx"), col("m"))
+          .select(windowStart, col("idx"), col("m"))
       }
         // the sentinel's far-future window flushes the real ones and is
         // dropped here (every real window starts at or before maxUs)
@@ -192,7 +198,7 @@ object StreamRows {
       val c = java.lang.Double.toString(graft.llm.Sketches.EstNumerator)
       val one = "CAST(1 AS BIGINT)"
       s"""WITH e AS (
-         |  SELECT (epoch_us(ts) // 21600000000) * 21600000000
+         |  SELECT ${windowStartSql("epoch_us(ts)", SixHoursUs)}
          |           AS window_start_us,
          |         md5(CAST(user_id AS VARCHAR)) AS h
          |  FROM events WHERE epoch_us(ts) >= 0),
@@ -219,19 +225,13 @@ object StreamRows {
     replayRow("stream_quantiles")(name => (s, d) => {
       val maxUs = sharedMaxTsUs(s, d)
       val sink = replay(s, d, "events", name, flush = true) { (_, source) =>
-        val stream = source()
-          val (lo, hi) = graft.llm.Sketches.bucketBounds(col("value"), 1000L)
-          stream
-            .select(Tables.tsMicros(stream).as("ts_us"), col("value"))
-            .filter(col("ts_us") >= 0L && col("value") >= 0)
-            .withColumn("ts", timestamp_micros(col("ts_us")))
-            .withWatermark("ts", "1 hour")
-            .withColumn("__lo", lo).withColumn("__hi", hi)
-            .groupBy(window(col("ts"), "6 hours"),
-              col("__lo"), col("__hi"))
-            .agg(count(lit(1)).as("__cnt"))
-            .select(unix_micros(col("window.start")).as("window_start_us"),
-              col("__lo"), col("__hi"), col("__cnt"))
+        val (lo, hi) = graft.llm.Sketches.bucketBounds(col("value"), 1000L)
+        watermarked(timed(source(), col("value"))
+            .filter(col("ts_us") >= 0L && col("value") >= 0))
+          .withColumn("__lo", lo).withColumn("__hi", hi)
+          .groupBy(window(col("ts"), "6 hours"), col("__lo"), col("__hi"))
+          .agg(count(lit(1)).as("__cnt"))
+          .select(windowStart, col("__lo"), col("__hi"), col("__cnt"))
       }
         .filter(col("window_start_us") <= maxUs)
       val merged = sink
@@ -243,39 +243,12 @@ object StreamRows {
       // the at-ingest quantile sketch replayed in batch: same HDR
       // buckets at the 6 h epoch-aligned window grain (window.start ≡
       // (epoch // 6h) · 6h on non-negative epochs), same interpolation
-      """WITH src AS (
-        |  SELECT (epoch_us(ts) // 21600000000) * 21600000000
-        |           AS window_start_us,
-        |         CAST(CAST(floor(value * 1000.0) AS BIGINT) AS VARCHAR)
-        |           AS gs
-        |  FROM events WHERE value >= 0 AND epoch_us(ts) >= 0),
-        |b AS (SELECT window_start_us,
-        |        CAST(substr(gs, 1, 2) ||
-        |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-        |          AS lo,
-        |        CAST(CAST(CAST(substr(gs, 1, 2) AS BIGINT) + 1
-        |               AS VARCHAR) ||
-        |             repeat('0', greatest(length(gs) - 2, 0)) AS BIGINT)
-        |          AS hi
-        |      FROM src),
-        |cnts AS (SELECT window_start_us, lo, hi, count(*) AS cnt
-        |         FROM b GROUP BY 1, 2, 3),
-        |cum AS (SELECT *,
-        |          SUM(cnt) OVER (PARTITION BY window_start_us
-        |                         ORDER BY lo) AS cum,
-        |          SUM(cnt) OVER (PARTITION BY window_start_us) AS n
-        |        FROM cnts),
-        |wp AS (SELECT *, unnest([0.5, 0.99]) AS p FROM cum),
-        |sel AS (SELECT *, p * CAST(n AS DOUBLE) AS t FROM wp),
-        |pick AS (SELECT * FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY window_start_us, p
-        |                               ORDER BY lo) AS rn
-        |  FROM sel WHERE CAST(cum AS DOUBLE) >= t) WHERE rn = 1)
-        |SELECT window_start_us, p, CAST(n AS BIGINT) AS n,
-        |       round((CAST(lo AS DOUBLE) + CAST(hi - lo AS DOUBLE) *
-        |              (t - CAST(cum - cnt AS DOUBLE)) /
-        |              CAST(cnt AS DOUBLE)) / 1000.0, 6) AS est
-        |FROM pick""".stripMargin),
+      s"""WITH src AS (
+         |  SELECT ${windowStartSql("epoch_us(ts)", SixHoursUs)}
+         |           AS window_start_us, value AS v
+         |  FROM events WHERE value >= 0 AND epoch_us(ts) >= 0),
+         |${hdrCtes("src", Seq("window_start_us"), Seq(0.5, 0.99), 1000L)}
+         |SELECT * FROM quant""".stripMargin),
 
     // --- streaming frequency sketch: per-window CountMin counters
     // maintained AT INGEST (state per open window: ≤ d·w counter rows
@@ -287,21 +260,15 @@ object StreamRows {
       val maxUs = sharedMaxTsUs(s, d)
       val (depth, width) = (3, 256)
       val sink = replay(s, d, "events", name, flush = true) { (_, source) =>
-        val stream = source()
-          val keys = (0 until depth).map(i => struct(lit(i).as("row"),
-            graft.llm.CountMin.bucket(col("item"), i, width).as("bucket")))
-          stream
-            .select(Tables.tsMicros(stream).as("ts_us"),
-              col("user_id").cast("string").as("item"))
-            .filter(col("ts_us") >= 0L)
-            .withColumn("ts", timestamp_micros(col("ts_us")))
-            .withWatermark("ts", "1 hour")
-            .select(col("ts"), explode(array(keys: _*)).as("rb"))
-            .groupBy(window(col("ts"), "6 hours"),
-              col("rb.row").as("row"), col("rb.bucket").as("bucket"))
-            .agg(count(lit(1)).as("cnt"))
-            .select(unix_micros(col("window.start")).as("window_start_us"),
-              col("row"), col("bucket"), col("cnt"))
+        val keys = (0 until depth).map(i => struct(lit(i).as("row"),
+          graft.llm.CountMin.bucket(col("item"), i, width).as("bucket")))
+        watermarked(timed(source(), col("user_id").cast("string").as("item"))
+            .filter(col("ts_us") >= 0L))
+          .select(col("ts"), explode(array(keys: _*)).as("rb"))
+          .groupBy(window(col("ts"), "6 hours"),
+            col("rb.row").as("row"), col("rb.bucket").as("bucket"))
+          .agg(count(lit(1)).as("cnt"))
+          .select(windowStart, col("row"), col("bucket"), col("cnt"))
       }
         .filter(col("window_start_us") <= maxUs)
       val merged = sink.groupBy(col("row"), col("bucket"))
@@ -366,15 +333,10 @@ object StreamRows {
       // or the flush batch would never reach the watermark operator.
       val v = col("value")
       replay(s, d, "events", name, flush = true) { (_, source) =>
-        val stream = source()
-        stream
-          .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
-            col("event_type"), col("event_id"),
-            col("value").cast("double").as("value"))
+        watermarked(timed(source(), col("user_id"), col("event_type"),
+            col("event_id"), col("value").cast("double").as("value"))
           .filter(col("user_id") < 50 && col("value").isNotNull &&
-            col("ts_us") >= 0)
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-          .withWatermark("ts", "1 hour")
+            col("ts_us") >= 0))
           .withColumn("__ord",
             TimeSeries.ohlcOrderKey(col("ts_us"), col("event_id")))
           .groupBy(window(col("ts"), "1 day"), col("user_id"),
@@ -395,30 +357,7 @@ object StreamRows {
       // streaming OHLC ≡ batch candles on the replayed slice: epoch-
       // aligned 1-day windows make window.start the same bucket key for
       // the NONNEGATIVE event times the streaming contract admits
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-        |         event_id, value
-        |  FROM events
-        |  WHERE value IS NOT NULL AND user_id < 50 AND epoch_us(ts) >= 0),
-        |k AS (
-        |  SELECT user_id, event_type, value,
-        |         ts_us - ts_us % 86400000000 AS bucket,
-        |         lpad(CAST(CAST(ts_us AS HUGEINT)
-        |                   + 9223372036854775808 AS VARCHAR), 20, '0')
-        |           || lpad(CAST(length(CAST(event_id AS VARCHAR))
-        |                        AS VARCHAR), 6, '0')
-        |           || CAST(event_id AS VARCHAR) AS ord
-        |  FROM e)
-        |SELECT user_id, event_type, bucket,
-        |       min_by(CAST(value AS DOUBLE), ord) AS open,
-        |       max(CAST(value AS DOUBLE)) AS high,
-        |       min(CAST(value AS DOUBLE)) AS low,
-        |       max_by(CAST(value AS DOUBLE), ord) AS close,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS vsum,
-        |       round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |             / CAST(count(*) AS DOUBLE), 6) AS vavg
-        |FROM k GROUP BY 1, 2, 3""".stripMargin),
+      ohlcSql(" AND user_id < 50 AND epoch_us(ts) >= 0")),
 
     // --- streaming: SLIDING windows (6 h length, 3 h slide) — every event
     // lands in exactly two windows, so the state/emission shape differs
@@ -426,36 +365,30 @@ object StreamRows {
     // pre-loaded replay + sentinel flush as stream_window. -----------------
     replayRow("stream_window_sliding")(name => (s, d) => {
       replay(s, d, "events", name, flush = true) { (_, source) =>
-        val stream = source()
-        stream
-          .select(Tables.tsMicros(stream).as("ts_us"), col("event_type"),
-            col("value").cast("double").as("value"))
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-          .withWatermark("ts", "1 hour")
+        watermarked(timed(source(), col("event_type"),
+            col("value").cast("double").as("value")))
           .groupBy(window(col("ts"), "6 hours", "3 hours"),
             col("event_type"))
           .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast("decimal(18,2)")).cast("double")
-              .as("value_sum"))
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("event_type"), col("n_events"), col("value_sum"))
+            exactSum(col("value")).as("value_sum"))
+          .select(windowStart, col("event_type"), col("n_events"),
+            col("value_sum"))
       }
         .filter(col("event_type") =!= "__wm__")
     },
       // sliding 6 h / 3 h: every event belongs to exactly the two
       // slide-aligned windows starting at t−(t%3h) and 3 h earlier
-      """WITH e AS (
-        |  SELECT epoch_us(ts) AS ts_us, event_type, value FROM events),
-        |c AS (
-        |  SELECT *, unnest([
-        |      (ts_us // 10800000000) * 10800000000,
-        |      (ts_us // 10800000000) * 10800000000 - 10800000000])
-        |    AS window_start_us
-        |  FROM e)
-        |SELECT window_start_us, event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS value_sum
-        |FROM c GROUP BY 1, 2""".stripMargin),
+      s"""WITH e AS (
+         |  SELECT epoch_us(ts) AS ts_us, event_type, value FROM events),
+         |c AS (
+         |  SELECT *, unnest([
+         |      ${windowStartSql("ts_us", SixHoursUs / 2)},
+         |      ${windowStartSql("ts_us", SixHoursUs / 2)} - ${SixHoursUs / 2}])
+         |    AS window_start_us
+         |  FROM e)
+         |SELECT window_start_us, event_type, count(*) AS n_events,
+         |       ${exactSumSql("value")} AS value_sum
+         |FROM c GROUP BY 1, 2""".stripMargin),
 
     // --- streaming exact dedup (dropDuplicatesWithinWatermark) -------------
     // Replays the event subset with every third event duplicated; the
@@ -468,20 +401,15 @@ object StreamRows {
       // streaming self-union inside the micro-batch — the file source
       // scans twice, both distributed
       replay(s, d, "events", name) { (_, source) =>
-        val stream = source()
-          val base = stream
-            .select(Tables.tsMicros(stream).as("ts_us"), col("event_id"),
-              col("event_type"), col("value").cast("double").as("value"),
-              col("user_id"))
-            .filter(col("user_id") < 20)
-            .drop("user_id")
-          val dups = base.filter(col("event_id") % 3 === 0)
-          base.union(dups)
-            .withColumn("ts", timestamp_micros(col("ts_us")))
-            .withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark("event_id")
-            .select(col("event_id"), col("ts_us"), col("event_type"),
-              col("value"))
+        val base = timed(source(), col("event_id"), col("event_type"),
+            col("value").cast("double").as("value"), col("user_id"))
+          .filter(col("user_id") < 20)
+          .drop("user_id")
+        val dups = base.filter(col("event_id") % 3 === 0)
+        watermarked(base.union(dups))
+          .dropDuplicatesWithinWatermark("event_id")
+          .select(col("event_id"), col("ts_us"), col("event_type"),
+            col("value"))
       }
     },
       // exact duplicates removed = the base subset itself
@@ -501,13 +429,10 @@ object StreamRows {
       // own window group — filtered by its out-of-range keep_doc.
       val maxId = sharedMaxDocId(s, d)
       replay(s, d, "documents", name, flush = true) { (_, source) =>
-        val stream = source()
-        stream
-          .select(col("doc_id"),
-            TextAnalysis.urlNormalize(synthUrl).as("url_norm"))
-          // synthetic event time: one record per second of crawl clock
-          .withColumn("ts", timestamp_micros(col("doc_id") * 1000000L))
-          .withWatermark("ts", "1 hour")
+        // synthetic event time: one record per second of crawl clock
+        watermarked(source().select(col("doc_id"),
+            TextAnalysis.urlNormalize(synthUrl).as("url_norm")),
+            col("doc_id") * 1000000L)
           .groupBy(window(col("ts"), "30 days"), col("url_norm"))
           .agg(min(col("doc_id")).as("keep_doc"),
             count(lit(1)).as("n_records"))
@@ -538,45 +463,23 @@ object StreamRows {
       replay(s, d, "events", name, flush = true, sentinelUser = -1L) {
           (ss, source) =>
         import ss.implicits._
-        val stream = source()
-          val evs = stream
-            .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
-              col("event_id"), col("event_type"),
-              (col("value").cast("decimal(18,2)") * 100).cast("long")
-                .as("value_cents"))
-            .filter(col("user_id") < 50)
-            .withColumn("ts", timestamp_micros(col("ts_us")))
-            .withWatermark("ts", "1 hour")
-            .select(col("user_id").as("userId"), col("ts"),
-              col("ts_us").as("tsUs"), col("event_id").as("eventId"),
-              col("event_type").as("eventType"),
-              col("value_cents").as("valueCents"))
-            .as[SessionEvent]
-          StreamingSessionize(evs, gapMicros = 86400L * 1000000L).toDF()
+        val evs = watermarked(timed(source(), col("user_id"),
+            col("event_id"), col("event_type"),
+            (col("value").cast("decimal(18,2)") * 100).cast("long")
+              .as("value_cents"))
+          .filter(col("user_id") < 50))
+          .select(col("user_id").as("userId"), col("ts"),
+            col("ts_us").as("tsUs"), col("event_id").as("eventId"),
+            col("event_type").as("eventType"),
+            col("value_cents").as("valueCents"))
+          .as[SessionEvent]
+        StreamingSessionize(evs, gapMicros = SessionGapUs).toDF()
       }
         .filter(col("user_id") >= 0)
     },
       // identical session semantics as session_stats, restricted to the
       // replayed subset — the streaming path must reproduce batch exactly
-      """WITH x AS (
-        |  SELECT event_id, user_id, event_type, value, epoch_us(ts) AS tsn,
-        |         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |             ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events WHERE user_id < 50),
-        |s AS (
-        |  SELECT *, sum(CASE WHEN prev IS NULL
-        |                       OR tsn - prev > 86400000000
-        |                     THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY user_id ORDER BY tsn, event_id
-        |                  ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM x)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        |       count(*) AS n_events,
-        |       min(tsn) AS start_us, max(tsn) AS end_us,
-        |       max(tsn) - min(tsn) AS duration_us,
-        |       count(DISTINCT event_type) AS n_types,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-        |FROM s GROUP BY 1, 2""".stripMargin),
+      sessionStatsSql(" WHERE user_id < 50")),
 
     // --- streaming online z-score: per-series running anomaly detection ----
     // Each event scores against its series' PRIOR distribution only (an
@@ -591,18 +494,16 @@ object StreamRows {
       // file-scan arrival order cannot matter)
       replay(s, d, "events", name) { (ss, source) =>
         import ss.implicits._
-        val stream = source()
-          val evs = stream
-            .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
-              col("event_id"), col("value").cast("double").as("value"),
-              (col("value").cast("decimal(18,2)") * 100).cast("long")
-                .as("value_cents"))
-            .filter(col("user_id") < 50)
-            .select(col("user_id").as("userId"), col("ts_us").as("tsUs"),
-              col("event_id").as("eventId"), col("value"),
-              col("value_cents").as("valueCents"))
-            .as[ZscoreEvent]
-          StreamingZscore(evs, threshold = 2.0).toDF()
+        val evs = timed(source(), col("user_id"),
+            col("event_id"), col("value").cast("double").as("value"),
+            (col("value").cast("decimal(18,2)") * 100).cast("long")
+              .as("value_cents"))
+          .filter(col("user_id") < 50)
+          .select(col("user_id").as("userId"), col("ts_us").as("tsUs"),
+            col("event_id").as("eventId"), col("value"),
+            col("value_cents").as("valueCents"))
+          .as[ZscoreEvent]
+        StreamingZscore(evs, threshold = 2.0).toDF()
       }
     },
       // mirror TimeSeries.zscore's exact-decimal-sum formulation: every
@@ -649,24 +550,21 @@ object StreamRows {
       // Two independent file-source streams over the same table, both
       // complete in one micro-batch → every interval match emits, no
       // sentinel (see FileReplay.replay)
-      def slice(stream: DataFrame, tp: String) = stream
-        .select(Tables.tsMicros(stream).as("ts_us"), col("user_id"),
-          col("event_id"), col("event_type"))
-        .filter(col("user_id") < 30 && col("event_type") === tp)
-        .drop("event_type")
+      def slice(stream: DataFrame, tp: String) =
+        timed(stream, col("user_id"), col("event_id"), col("event_type"))
+          .filter(col("user_id") < 30 && col("event_type") === tp)
+          .drop("event_type")
       replay(s, d, "events", name) { (_, source) =>
         val (s1, s2) = (source(), source())
-        val v = slice(s1, "view")
+        val v = watermarked(slice(s1, "view")
           .withColumnRenamed("ts_us", "view_ts_us")
-          .withColumnRenamed("event_id", "view_id")
-          .withColumn("vts", timestamp_micros(col("view_ts_us")))
-          .withWatermark("vts", "1 hour")
-        val p = slice(s2, "purchase")
+          .withColumnRenamed("event_id", "view_id"),
+          col("view_ts_us"), "vts")
+        val p = watermarked(slice(s2, "purchase")
           .withColumnRenamed("ts_us", "purchase_ts_us")
           .withColumnRenamed("event_id", "purchase_id")
-          .withColumnRenamed("user_id", "p_user_id")
-          .withColumn("pts", timestamp_micros(col("purchase_ts_us")))
-          .withWatermark("pts", "1 hour")
+          .withColumnRenamed("user_id", "p_user_id"),
+          col("purchase_ts_us"), "pts")
         v.join(p,
           col("user_id") === col("p_user_id") &&
             col("pts") >= col("vts") &&
@@ -693,23 +591,16 @@ object StreamRows {
     replayRow("stream_enrich")(name => (s, d) => {
       // stateless stream⋈static broadcast enrich → ONE-batch file replay
       replay(s, d, "events", name) { (ss, source) =>
-        val dim = Tables.events(ss, d).select(col("user_id")).distinct()
-          .withColumn("tier", col("user_id") % 5)
-        val stream = source()
-        stream
+        source()
           .select(col("event_id"), col("user_id"),
             col("value").cast("double").as("value"))
           .filter(col("user_id") < 40)
-          .join(broadcast(dim), Seq("user_id"))
+          .join(broadcast(tierDim(Tables.events(ss, d))), Seq("user_id"))
           .select("event_id", "user_id", "tier", "value")
       }
     },
       // batch formulation of the stream-static enrichment join
-      """WITH dim AS (
-        |  SELECT DISTINCT user_id, user_id % 5 AS tier FROM events)
-        |SELECT e.event_id, e.user_id, d.tier, e.value
-        |FROM events e JOIN dim d USING (user_id)
-        |WHERE e.user_id < 40""".stripMargin),
+      tierJoinSql("\nWHERE e.user_id < 40")),
 
     // --- streaming ingest quality gate: the Gopher rule conjunction
     // applied AT INGEST over a document stream — stateless map-only
@@ -727,6 +618,8 @@ object StreamRows {
           .select("doc_id", "source", "n_words", "stop_hits")
       }
     },
+      // the stream gate is map-only and stateless, so its oracle is
+      // simply the batch rule table filtered on the conjunction
       s"""SELECT q.doc_id, d.source, q.n_words, q.stop_hits
          |FROM ($gopherRulesSql) q
          |JOIN documents d ON d.doc_id = q.doc_id
@@ -749,8 +642,6 @@ object StreamRows {
             col("col").cast("long").as("code"))
       }
     },
-      // the stream gate is map-only and stateless, so its oracle is
-      // simply the batch rule table filtered on the conjunction
       // ingest-time PQ encode is the batch encode under a micro-batch
       // trigger — same codes, same oracle as embed_pq_codes
       (s"WITH ${pqEncodeCtes(8, 16, 8)}\n" +
@@ -875,19 +766,12 @@ object StreamRows {
           .as[MetricSample], stateTtl = false).toDF()
       }.select("series", "ts", "rate", "confidence")
     },
-      """WITH e AS (
-        |  SELECT concat_ws('|', CAST(user_id AS VARCHAR), event_type) AS series,
-        |         value, CAST(event_id AS DOUBLE) AS ts
-        |  FROM events WHERE user_id < 30),
-        |l AS (
-        |  SELECT *, lag(value) OVER w AS pv, lag(ts) OVER w AS pt
-        |  FROM e WINDOW w AS (PARTITION BY series ORDER BY ts))
-        |SELECT series, ts,
-        |  CASE WHEN pv IS NOT NULL AND ts - pt > 0 AND ts - pt <= 3000
-        |            AND value >= pv
-        |       THEN CAST(floor((value - pv) / (ts - pt)) AS BIGINT) END AS rate,
-        |  CASE WHEN pv IS NOT NULL AND ts - pt > 0
-        |       THEN round(1000 / (ts - pt), 2) END AS confidence
-        |FROM l""".stripMargin)
+      rateSql(
+        """SELECT concat_ws('|', CAST(user_id AS VARCHAR), event_type)
+          |         AS series,
+          |       value, CAST(event_id AS DOUBLE) AS ts
+          |FROM events WHERE user_id < 30""".stripMargin,
+        series = "series", order = "ts", ts = "ts", interval = 1000,
+        out = "series, ts"))
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
@@ -10,6 +10,7 @@ import graft.core.{Schemas, Tables}
 import graft.dsl.MetricsDsl
 import graft.dsl.MetricsDsl.{GroupConfig, TargetSpec}
 import graft.operators.{Enrichment, RateTransform, Reconcile, StatusRollup}
+import graft.operators.TimeSeries.exactSum
 import graft.functions.Influx
 import graft.sources.Sources
 import graft.streaming.KafkaShaped
@@ -21,6 +22,69 @@ import graft.streaming.KafkaShaped
   * column-name-sorted values). */
 object TelemetryRows {
   import Shared._
+
+  /** A lineitem's discounted price, the revenue of the TPC-H rows. */
+  private val discounted = col("l_extendedprice") * (lit(1) - col("l_discount"))
+
+  /** The SQL twin of [[discounted]]. */
+  private val discountedSql = "l_extendedprice * (1 - l_discount)"
+
+  /** The incoming set's timestamp of the reconciliation rows: the epoch
+    * second of 1997-07-01 UTC. */
+  private val IncomingSetTs = 867715200L
+
+  /** The reconciliation rows' `(stored, incoming)` inventories, each
+    * `(o_orderkey, ts)` in epoch seconds: the orders before 1998 at their
+    * order date, and those of 1997–98 a day older (every third key) or
+    * newer. */
+  private def reconcileSides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val o = Tables.orders(s, d)
+    val ts = unix_timestamp(col("o_orderdate"))
+    (o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
+      .select(col("o_orderkey"), ts.as("ts")),
+      o.filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
+          col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
+        .select(col("o_orderkey"),
+          (ts + when(col("o_orderkey") % 3 === 0, -86400L).otherwise(86400L))
+            .as("ts")))
+  }
+
+  /** The SQL twin of [[reconcileSides]]: CTEs `stored` and `inc`. */
+  private val reconcileCtes =
+    """stored AS (
+      |  SELECT o_orderkey, CAST(epoch(o_orderdate) AS BIGINT) AS ts
+      |  FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01'),
+      |inc AS (
+      |  SELECT o_orderkey,
+      |         CAST(epoch(o_orderdate) AS BIGINT) +
+      |           CASE WHEN o_orderkey % 3 = 0 THEN -86400 ELSE 86400 END AS ts
+      |  FROM orders
+      |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+      |    AND o_orderdate < TIMESTAMP '1999-01-01')""".stripMargin
+
+  /** [[StatusRollup.rollup]] of `src` (a SELECT of `(user_id, status)`):
+    * each user's status is `success` when every check succeeded,
+    * PARTIAL_METRIC_FAILURE when some did, else its most common status
+    * (ties to the greatest). */
+  private def statusRollupSql(src: String, success: String): String =
+    s"""WITH o AS ($src),
+       |c AS (SELECT user_id, status, count(*) AS cnt FROM o GROUP BY 1, 2),
+       |m AS (
+       |  SELECT user_id, status FROM (
+       |    SELECT user_id, status,
+       |           row_number() OVER (PARTITION BY user_id
+       |                              ORDER BY cnt DESC, status DESC) AS rn
+       |    FROM c) WHERE rn = 1),
+       |f AS (
+       |  SELECT user_id,
+       |         max(CASE WHEN status = '$success' THEN 1 ELSE 0 END) AS any_s,
+       |         min(CASE WHEN status = '$success' THEN 1 ELSE 0 END) AS all_s
+       |  FROM o GROUP BY 1)
+       |SELECT f.user_id,
+       |       CASE WHEN all_s = 1 THEN '$success'
+       |            WHEN any_s = 1 THEN 'PARTIAL_METRIC_FAILURE'
+       |            ELSE m.status END AS device_status
+       |FROM f JOIN m ON f.user_id = m.user_id""".stripMargin
 
   /** The flagship row, run as the smoke check ([[graft.SparkEntry.entry]]). */
   val flagship: Row =
@@ -34,19 +98,18 @@ object TelemetryRows {
           // exactly 4 — casting to the matching decimal scale recovers the
           // EXACT value (no .005 rounding ties), so the sums are exact and
           // the final double cast is engine-portable.
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base"),
-          sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .cast("decimal(18,4)")).cast("double").as("sum_disc"),
+          exactSum(col("l_quantity")).as("sum_qty"),
+          exactSum(col("l_extendedprice")).as("sum_base"),
+          exactSum(discounted, 4).as("sum_disc"),
           count(lit(1)).as("count_order")),
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-        |       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY 1, 2""".stripMargin)
+      s"""SELECT l_returnflag, l_linestatus,
+         |       ${exactSumSql("l_quantity")} AS sum_qty,
+         |       ${exactSumSql("l_extendedprice")} AS sum_base,
+         |       ${exactSumSql(discountedSql, 4)} AS sum_disc,
+         |       count(*) AS count_order
+         |FROM lineitem
+         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+         |GROUP BY 1, 2""".stripMargin)
 
   val rows: Seq[Row] = Seq(
     // --- S3: JSON discovery source — write the inventory as JSON lines,
@@ -256,13 +319,13 @@ object TelemetryRows {
         .agg(count(lit(1)).as("cnt"),
           sum(col("qty")).cast("double").as("sum_qty"))
     },
-      """WITH m AS (SELECT s_suppkey AS from_idx, s_nationkey AS to_idx FROM supplier)
-        |SELECT n.n_name, count(*) AS cnt,
-        |       CAST(sum(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem l
-        |JOIN m ON l.l_suppkey = m.from_idx
-        |JOIN nation n ON m.to_idx = n.n_nationkey
-        |GROUP BY 1""".stripMargin),
+      s"""WITH m AS (SELECT s_suppkey AS from_idx, s_nationkey AS to_idx FROM supplier)
+         |SELECT n.n_name, count(*) AS cnt,
+         |       ${exactSumSql("l.l_quantity")} AS sum_qty
+         |FROM lineitem l
+         |JOIN m ON l.l_suppkey = m.from_idx
+         |JOIN nation n ON m.to_idx = n.n_nationkey
+         |GROUP BY 1""".stripMargin),
 
     // --- J9/SO3: reconciliation ------------------------------------------
     // Updates are guarded by the incoming ROW's own creation timestamp
@@ -270,80 +333,41 @@ object TelemetryRows {
     // (:83-87). Incoming rows alternate older/newer than stored so both
     // guard branches fire.
     Row("j9_reconcile", (s, d) => {
-      val o = Tables.orders(s, d)
-      val stored = o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("o_orderkey"),
-          unix_timestamp(col("o_orderdate")).as("ts_s"))
-      val incoming = o.filter(
-        col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-        .select(col("o_orderkey"),
-          (unix_timestamp(col("o_orderdate")) +
-            when(col("o_orderkey") % 3 === 0, -86400L).otherwise(86400L))
-            .as("inc_ts"))
-      Reconcile.changes(stored, incoming, Seq("o_orderkey"), "ts_s",
-        867715200.0, // epoch of 1997-07-01 UTC
-        incomingTsCol = Some("inc_ts"))
+      val (stored, incoming) = reconcileSides(s, d)
+      Reconcile.changes(stored, incoming, Seq("o_orderkey"), "ts",
+        IncomingSetTs.toDouble, incomingTsCol = Some("ts"))
     },
-      """WITH stored AS (
-        |  SELECT o_orderkey, CAST(epoch(o_orderdate) AS BIGINT) AS ts_s
-        |  FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01'),
-        |inc AS (
-        |  SELECT o_orderkey,
-        |         CAST(epoch(o_orderdate) AS BIGINT) +
-        |           CASE WHEN o_orderkey % 3 = 0 THEN -86400 ELSE 86400 END AS inc_ts
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1999-01-01')
-        |SELECT i.o_orderkey, 'add' AS action FROM inc i
-        |WHERE NOT EXISTS (SELECT 1 FROM stored s WHERE s.o_orderkey = i.o_orderkey)
-        |UNION ALL
-        |SELECT s.o_orderkey, 'delete' AS action FROM stored s
-        |WHERE NOT EXISTS (SELECT 1 FROM inc i WHERE i.o_orderkey = s.o_orderkey)
-        |  AND s.ts_s <= 867715200
-        |UNION ALL
-        |SELECT s.o_orderkey, 'update' AS action
-        |FROM stored s JOIN inc i ON i.o_orderkey = s.o_orderkey
-        |WHERE s.ts_s <= i.inc_ts""".stripMargin),
+      s"""WITH $reconcileCtes
+         |SELECT i.o_orderkey, 'add' AS action FROM inc i
+         |WHERE NOT EXISTS (SELECT 1 FROM stored s WHERE s.o_orderkey = i.o_orderkey)
+         |UNION ALL
+         |SELECT s.o_orderkey, 'delete' AS action FROM stored s
+         |WHERE NOT EXISTS (SELECT 1 FROM inc i WHERE i.o_orderkey = s.o_orderkey)
+         |  AND s.ts <= $IncomingSetTs
+         |UNION ALL
+         |SELECT s.o_orderkey, 'update' AS action
+         |FROM stored s JOIN inc i ON i.o_orderkey = s.o_orderkey
+         |WHERE s.ts <= i.ts""".stripMargin),
 
     // --- J9 apply: the post-MERGE inventory after the change feed lands
     // (manager.py:136-142) — same fixture as j9_reconcile, returning the
     // resulting store instead of the feed.
     Row("j9_apply", (s, d) => {
-      val o = Tables.orders(s, d)
-      val stored = o.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("o_orderkey"),
-          unix_timestamp(col("o_orderdate")).as("ts"))
-      val incoming = o.filter(
-        col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-        .select(col("o_orderkey"),
-          (unix_timestamp(col("o_orderdate")) +
-            when(col("o_orderkey") % 3 === 0, -86400L).otherwise(86400L))
-            .as("ts"))
+      val (stored, incoming) = reconcileSides(s, d)
       Reconcile.applied(stored, incoming, Seq("o_orderkey"), "ts",
-        867715200.0, incomingTsCol = Some("ts"))
+        IncomingSetTs.toDouble, incomingTsCol = Some("ts"))
     },
-      """WITH stored AS (
-        |  SELECT o_orderkey, CAST(epoch(o_orderdate) AS BIGINT) AS ts
-        |  FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01'),
-        |inc AS (
-        |  SELECT o_orderkey,
-        |         CAST(epoch(o_orderdate) AS BIGINT) +
-        |           CASE WHEN o_orderkey % 3 = 0 THEN -86400 ELSE 86400 END AS ts
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1999-01-01')
-        |SELECT s.o_orderkey, s.ts FROM stored s
-        |WHERE (EXISTS (SELECT 1 FROM inc i WHERE i.o_orderkey = s.o_orderkey
-        |                 AND s.ts > i.ts))
-        |   OR (NOT EXISTS (SELECT 1 FROM inc i WHERE i.o_orderkey = s.o_orderkey)
-        |       AND s.ts > 867715200)
-        |UNION ALL
-        |SELECT i.o_orderkey, i.ts FROM inc i
-        |WHERE NOT EXISTS (SELECT 1 FROM stored s WHERE s.o_orderkey = i.o_orderkey)
-        |   OR EXISTS (SELECT 1 FROM stored s WHERE s.o_orderkey = i.o_orderkey
-        |                AND s.ts <= i.ts)""".stripMargin),
+      s"""WITH $reconcileCtes
+         |SELECT s.o_orderkey, s.ts FROM stored s
+         |WHERE (EXISTS (SELECT 1 FROM inc i WHERE i.o_orderkey = s.o_orderkey
+         |                 AND s.ts > i.ts))
+         |   OR (NOT EXISTS (SELECT 1 FROM inc i WHERE i.o_orderkey = s.o_orderkey)
+         |       AND s.ts > $IncomingSetTs)
+         |UNION ALL
+         |SELECT i.o_orderkey, i.ts FROM inc i
+         |WHERE NOT EXISTS (SELECT 1 FROM stored s WHERE s.o_orderkey = i.o_orderkey)
+         |   OR EXISTS (SELECT 1 FROM stored s WHERE s.o_orderkey = i.o_orderkey
+         |                AND s.ts <= i.ts)""".stripMargin),
 
     // --- J10: metrics-group × transform-config lookup (broadcast, pass-through) ----
     // polling_plugin_agent.py:269-304 — per group_type, look up the configured
@@ -373,20 +397,12 @@ object TelemetryRows {
         "value", "ts_s", "event_id", lit(3600))
         .select("event_id", "user_id", "event_type", "rate", "confidence")
     },
-      """WITH e AS (
-        |  SELECT event_id, user_id, event_type, value,
-        |         epoch_ns(ts) // 1000000000 AS ts_s
-        |  FROM events),
-        |l AS (
-        |  SELECT *, lag(value) OVER w AS pv, lag(ts_s) OVER w AS pt
-        |  FROM e WINDOW w AS (PARTITION BY user_id, event_type ORDER BY event_id))
-        |SELECT event_id, user_id, event_type,
-        |  CASE WHEN pv IS NOT NULL AND ts_s - pt > 0 AND ts_s - pt <= 10800
-        |            AND value >= pv
-        |       THEN CAST(floor((value - pv) / (ts_s - pt)) AS BIGINT) END AS rate,
-        |  CASE WHEN pv IS NOT NULL AND ts_s - pt > 0
-        |       THEN round(3600 / CAST(ts_s - pt AS DOUBLE), 2) END AS confidence
-        |FROM l""".stripMargin),
+      rateSql(
+        """SELECT event_id, user_id, event_type, value,
+          |       epoch_ns(ts) // 1000000000 AS ts_s
+          |FROM events""".stripMargin,
+        series = "user_id, event_type", order = "event_id", ts = "ts_s",
+        interval = 3600, out = "event_id, user_id, event_type")),
 
     // --- A3: count-where --------------------------------------------------
     Row("a3_count_where", (s, d) =>
@@ -404,24 +420,8 @@ object TelemetryRows {
     Row("a4_status_rollup", (s, d) =>
       StatusRollup.rollup(Tables.events(s, d), "user_id", "event_type",
         successValue = "purchase"),
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS cnt FROM events GROUP BY 1, 2),
-        |m AS (
-        |  SELECT user_id, event_type FROM (
-        |    SELECT user_id, event_type,
-        |           row_number() OVER (PARTITION BY user_id
-        |                              ORDER BY cnt DESC, event_type DESC) AS rn
-        |    FROM c) WHERE rn = 1),
-        |f AS (
-        |  SELECT user_id,
-        |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS any_s,
-        |         min(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS all_s
-        |  FROM events GROUP BY 1)
-        |SELECT f.user_id,
-        |       CASE WHEN all_s = 1 THEN 'purchase'
-        |            WHEN any_s = 1 THEN 'PARTIAL_METRIC_FAILURE'
-        |            ELSE m.event_type END AS device_status
-        |FROM f JOIN m ON f.user_id = m.user_id""".stripMargin),
+      statusRollupSql("SELECT user_id, event_type AS status FROM events",
+        "purchase")),
 
     // --- A5: exception→status mapping + per-device rollup ----------------
     // polling_status.py:42-53 maps exception classes to status codes; the
@@ -436,31 +436,14 @@ object TelemetryRows {
         Tables.events(s, d).select(col("user_id"), outcome.as("status")),
         "user_id", "status", successValue = "SUCCESS")
     },
-      """WITH o AS (
-        |  SELECT user_id,
-        |         CASE WHEN value > 150 THEN 'SUCCESS'
-        |              WHEN event_id % 5 = 0 THEN 'PING_FAILURE'
-        |              WHEN event_id % 7 = 0 THEN 'AUTHENTICATION_FAILURE'
-        |              WHEN event_id % 11 = 0 THEN 'TIMEOUT'
-        |              ELSE 'INTERNAL_FAILURE' END AS status
-        |  FROM events),
-        |c AS (SELECT user_id, status, count(*) AS cnt FROM o GROUP BY 1, 2),
-        |m AS (
-        |  SELECT user_id, status FROM (
-        |    SELECT user_id, status,
-        |           row_number() OVER (PARTITION BY user_id
-        |                              ORDER BY cnt DESC, status DESC) AS rn
-        |    FROM c) WHERE rn = 1),
-        |f AS (
-        |  SELECT user_id,
-        |         max(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) AS any_s,
-        |         min(CASE WHEN status = 'SUCCESS' THEN 1 ELSE 0 END) AS all_s
-        |  FROM o GROUP BY 1)
-        |SELECT f.user_id,
-        |       CASE WHEN all_s = 1 THEN 'SUCCESS'
-        |            WHEN any_s = 1 THEN 'PARTIAL_METRIC_FAILURE'
-        |            ELSE m.status END AS device_status
-        |FROM f JOIN m ON f.user_id = m.user_id""".stripMargin),
+      statusRollupSql(
+        """SELECT user_id,
+          |       CASE WHEN value > 150 THEN 'SUCCESS'
+          |            WHEN event_id % 5 = 0 THEN 'PING_FAILURE'
+          |            WHEN event_id % 7 = 0 THEN 'AUTHENTICATION_FAILURE'
+          |            WHEN event_id % 11 = 0 THEN 'TIMEOUT'
+          |            ELSE 'INTERNAL_FAILURE' END AS status
+          |FROM events""".stripMargin, "SUCCESS")),
 
     // --- A7/SO4: union + dedup --------------------------------------------
     Row("a7_union_dedup", (s, d) => {
@@ -543,23 +526,20 @@ object TelemetryRows {
         .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast("decimal(18,4)")).cast("double").as("revenue"))
+        .agg(exactSum(discounted, 4).as("revenue"))
     },
-      """SELECT n.n_name,
-        |       CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-        |                     AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |               AND c.c_nationkey = s.s_nationkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |WHERE r.r_name = 'ASIA'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1""".stripMargin),
+      s"""SELECT n.n_name, ${exactSumSql(discountedSql, 4)} AS revenue
+         |FROM lineitem l
+         |JOIN orders o ON l.l_orderkey = o.o_orderkey
+         |JOIN supplier s ON l.l_suppkey = s.s_suppkey
+         |JOIN customer c ON o.o_custkey = c.c_custkey
+         |               AND c.c_nationkey = s.s_nationkey
+         |JOIN nation n ON s.s_nationkey = n.n_nationkey
+         |JOIN region r ON n.n_regionkey = r.r_regionkey
+         |WHERE r.r_name = 'ASIA'
+         |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+         |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
+         |GROUP BY 1""".stripMargin),
 
     // TPC-H Q18 shape: the self-referential fact filter — "orders whose
     // own lineitems sum past a threshold" — realized as a map-side-
@@ -579,28 +559,26 @@ object TelemetryRows {
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
           col("o_orderdate"), col("o_totalprice"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-          .as("sum_qty"))
+        .agg(exactSum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(100)
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"),
           col("o_totalprice"), col("sum_qty"))
     },
-      """WITH big AS (
-        |  SELECT l_orderkey FROM lineitem
-        |  GROUP BY 1
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       o_totalprice,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM big)
-        |GROUP BY 1, 2, 3, 4, 5
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 100""".stripMargin),
+      s"""WITH big AS (
+         |  SELECT l_orderkey FROM lineitem
+         |  GROUP BY 1
+         |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250)
+         |SELECT c_name, c_custkey, o_orderkey,
+         |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
+         |       o_totalprice, ${exactSumSql("l_quantity")} AS sum_qty
+         |FROM customer
+         |JOIN orders ON c_custkey = o_custkey
+         |JOIN lineitem ON o_orderkey = l_orderkey
+         |WHERE o_orderkey IN (SELECT l_orderkey FROM big)
+         |GROUP BY 1, 2, 3, 4, 5
+         |ORDER BY o_totalprice DESC, o_orderkey
+         |LIMIT 100""".stripMargin),
 
     Row("q3_shipping", (s, d) => {
       val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
@@ -612,8 +590,7 @@ object TelemetryRows {
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderpriority"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast("decimal(18,4)")).cast("double").as("revenue"))
+        .agg(exactSum(discounted, 4).as("revenue"))
       import org.apache.spark.sql.expressions.Window
       // Top-k via orderBy+limit -> TakeOrderedAndProject (per-partition heaps,
       // no global shuffle); the rank window then runs over only the 10 survivors.
@@ -623,19 +600,19 @@ object TelemetryRows {
         .select(col("l_orderkey"), col("o_orderpriority"), col("revenue"),
           col("rk").cast("long").as("rk"))
     },
-      """WITH agg AS (
-        |  SELECT l.l_orderkey, o.o_orderpriority,
-        |         CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_mktsegment = 'BUILDING'
-        |    AND o.o_orderdate < TIMESTAMP '1998-03-15'
-        |    AND l.l_shipdate > TIMESTAMP '1998-03-15'
-        |  GROUP BY 1, 2)
-        |SELECT l_orderkey, o_orderpriority, revenue, rk FROM (
-        |  SELECT *, CAST(row_number() OVER (ORDER BY revenue DESC, l_orderkey) AS BIGINT) AS rk
-        |  FROM agg) WHERE rk <= 10""".stripMargin),
+      s"""WITH agg AS (
+         |  SELECT l.l_orderkey, o.o_orderpriority,
+         |         ${exactSumSql(discountedSql, 4)} AS revenue
+         |  FROM lineitem l
+         |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+         |  JOIN customer c ON o.o_custkey = c.c_custkey
+         |  WHERE c.c_mktsegment = 'BUILDING'
+         |    AND o.o_orderdate < TIMESTAMP '1998-03-15'
+         |    AND l.l_shipdate > TIMESTAMP '1998-03-15'
+         |  GROUP BY 1, 2)
+         |SELECT l_orderkey, o_orderpriority, revenue, rk FROM (
+         |  SELECT *, CAST(row_number() OVER (ORDER BY revenue DESC, l_orderkey) AS BIGINT) AS rk
+         |  FROM agg) WHERE rk <= 10""".stripMargin),
 
     // --- W1: running window -------------------------------------------------------
     Row("w1_running", (s, d) => {
@@ -910,20 +887,13 @@ object TelemetryRows {
 
     // --- J5: explicit indices allow-list restricts evaluation ------------
     Row("j5_indices_static", (s, d) => {
-      val p = Tables.part(s, d)
-      val tables = Map(
-        "sensor_name" -> p.select(
-          col("p_partkey").cast("string").as("index"), col("p_name").as("value")),
-        "sensor_scale" -> p.select(
-          col("p_partkey").cast("string").as("index"),
-          (lit(1) + col("p_partkey") % 3).cast("string").as("value")))
       val allow = Some(Seq("1", "2", "3", "5", "8"))
       val cfg = GroupConfig("environment", 60,
         dimensions = Map("sensor" -> TargetSpec("sensor_name.$index",
           indices = allow)),
         metrics = Map("scale" -> TargetSpec("int(sensor_scale.$index)",
           valueType = "int", indices = allow)))
-      MetricsDsl.evaluateIndexed(cfg, tables).get
+      MetricsDsl.evaluateIndexed(cfg, sensorTables(s, d)).get
         .select("index", "sensor", "scale")
     },
       """SELECT CAST(p_partkey AS VARCHAR) AS index, p_name AS sensor,

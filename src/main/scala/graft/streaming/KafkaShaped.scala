@@ -117,13 +117,6 @@ object KafkaShaped {
         (!keyOk).as("dropped_by_key_filter"))
   }
 
-  /** Required-field schema enforcement on top of [[decodeAndValidate]]:
-    * rows missing any of `requiredFields` (null after parse) are dropped,
-    * mirroring the reference's JSON-Schema `required` lists
-    * (`consumer.py:48-134`). */
-  def enforceRequired(df: DataFrame, requiredFields: Seq[String]): DataFrame =
-    requiredFields.foldLeft(df)((d, f) => d.filter(col(f).isNotNull))
-
   /** Full decode + JSON-Schema-style enforcement with OBSERVABLE drop
     * counts — the one-call form of the reference's validate-and-count loop
     * (`consumer.py:136-184,400-405`).

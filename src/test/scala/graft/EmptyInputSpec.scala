@@ -38,6 +38,30 @@ class EmptyInputSpec extends SparkSpec {
     }
   }
 
+  test("the rows over the shared session, sketch, candle, rate, rollup " +
+       "and fixture twins on zero- and one-row tables") {
+    // one-row counts; on empty tables each of these rows is empty
+    val one = Map(
+      "q1_pricing" -> 0, "j6_index_remap" -> 0, "j9_reconcile" -> 1,
+      "j9_apply" -> 1, "a1_rate" -> 1, "a4_status_rollup" -> 1,
+      "a5_exception_map" -> 1, "q5_region_revenue" -> 0,
+      "q18_large_orders" -> 0, "q3_shipping" -> 0, "sessionize" -> 1,
+      "session_paths" -> 1, "session_stats" -> 1, "asof_join" -> 0,
+      "asof_join_tol" -> 0, "asof_join_fwd" -> 0, "asof_join_near" -> 0,
+      "sketch_quantiles" -> 3, "ts_quantile_buckets" -> 2,
+      "ts_gapfill" -> 1, "ts_moving" -> 1, "ts_seasonal" -> 1,
+      "ts_ohlc" -> 1, "ts_lttb" -> 1, "cohort_retention" -> 1,
+      "skew_join_salted" -> 1, "events_leaderboard" -> 0,
+      "events_histogram" -> 1, "snmp_dsl_partial" -> 1, "mg_assemble" -> 1,
+      "sketch_profile" -> 1, "j5_indices_static" -> 0, "stream_dedup" -> 1,
+      "stream_zscore" -> 1, "stream_join" -> 0, "stream_enrich" -> 1,
+      "stream_rate" -> 1)
+    onCutTables(0) { dir =>
+      assert(counts(dir, one.keys) == one.map { case (q, _) => q -> 0 })
+    }
+    onCutTables(1) { dir => assert(counts(dir, one.keys) == one) }
+  }
+
   test("near-dup blocking and binary/sign-LSH index rows run on empty " +
        "tables") {
     val rows = SparkEntry.queries.keys.filter(_.matches(

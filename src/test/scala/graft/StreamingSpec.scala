@@ -995,8 +995,7 @@ class StreamingSpec extends SparkSpec {
       StructField("a", LongType), StructField("b", StringType)))
     val df = Seq(("k", """{"a": 1}"""), ("k", """{"a": 2, "b": "ok"}"""))
       .toDF("key", "value")
-    val out = KafkaShaped.enforceRequired(
-      KafkaShaped.decodeAndValidate(df, schema), Seq("b"))
+    val out = KafkaShaped.decodeValidated(df, schema, requiredFields = Seq("b"))
     assert(out.as[(String, Long, String)].collect().toSeq ==
       Seq(("k", 2L, "ok")))
   }
